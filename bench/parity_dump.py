@@ -49,6 +49,7 @@ FIXTURES = [
     "< notag>", "<<p>>", "a < b > c", "&amp; &lt; &#65; &#x41; &unknown;",
     "plain text only", "", " ", "\n\n", "x", "<",  "<a b=c d='e' f=\"g\" h>",
     "<a b='x' c>text</a>", "﻿bom text", "<div\U00010000attr=1>",
+    '<a b="x"c="y">', "<a b='x'c='y'>",
 ]
 
 

@@ -29,7 +29,7 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame, functions as F
 
 from .dom import N_ATTR_NAMES, N_ATTR_VALUES
-from .kernel import decode_parse
+from .kernel import decode_parse, gc_paused
 
 __all__ = ["extract_outlinks", "resolve_href", "link_degrees", "pagerank",
            "trustrank", "hits", "salsa", "anchor_text_index", "host_graph",
@@ -38,6 +38,7 @@ __all__ = ["extract_outlinks", "resolve_href", "link_degrees", "pagerank",
            "harmonic_centrality", "hyperball_harmonic", "hyperball_alpha"]
 
 
+@gc_paused
 def _outlinks_kernel(batches: Iterable[pd.DataFrame]) -> Iterator[pd.DataFrame]:
     for pdf in batches:
         if len(pdf) == 0:

@@ -593,12 +593,15 @@ def parse(source: str, *, empty_end_tag: bool = True, eol="\n", tab_size: int = 
                         # treats it as post-'=' whitespace
                         om = None
                     elif q0 == '"' or q0 == "'":
-                        if len(val) >= 2 and val[-1] == q0:
+                        if (len(val) >= 2 and val[-1] == q0
+                                and q0 not in val[1:-1]):
                             value = val[1:-1]
                             quote = q0
                             equals = g4 + "=" + g5
                         else:
-                            om = None  # quote closes later/never: general
+                            # quote closes later/never, or the unquoted
+                            # class re-matched '"x"c="y"' past the close
+                            om = None
                     elif val[-1] == "/":
                         if not w7 and not slash:
                             # '<a b=1/>': trim one slash, self-close

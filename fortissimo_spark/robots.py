@@ -30,6 +30,8 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, Window, functions as F
 
+from .kernel import gc_paused
+
 __all__ = ["parse_robots_txt", "robots_rules_for_agent", "apply_robots",
            "robots_crawl_delays", "robots_sitemaps", "robots_pattern_regex",
            "parse_sitemaps"]
@@ -212,6 +214,7 @@ def robots_sitemaps(robots: DataFrame, host_col: str = "host",
             .distinct())
 
 
+@gc_paused
 def _sitemap_kernel(batches):
     """pandas batches (sitemap_url, xml) -> one row per <url>/<sitemap>
     entry, parsed with the engine's own (xml-mode-capable) parser."""
@@ -325,6 +328,7 @@ def plan_frontier(cands: DataFrame, rules: DataFrame, delays: DataFrame,
             .withColumnRenamed("_host", "host"))
 
 
+@gc_paused
 def _feed_kernel(batches):
     """pandas batches (feed_url, xml) -> one row per RSS <item> /
     Atom <entry>, dates normalized to epoch seconds in the kernel
@@ -448,6 +452,7 @@ def parse_feeds(feeds: DataFrame) -> DataFrame:
             .mapInPandas(_feed_kernel, schema))
 
 
+@gc_paused
 def _discover_feeds_kernel(batches):
     """pandas batches (url, html) -> one row per declared feed:
     ``<link rel="alternate">`` whose type is a feed mime — the way

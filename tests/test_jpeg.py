@@ -350,20 +350,28 @@ def _emit_ac_refine_block(bw, zz, ss, se, al):
     """AC refinement (Ah=al+1 -> Al=al): corrections for old-nonzero
     coefficients, ±1<<al insertions for newly-nonzero, per T.81 G.1.2.3."""
     hi = 1 << (al + 1)
+    # last newly-nonzero position: ZRLs past it are folded into the EOB
+    last_new = max((k for k in range(ss, se + 1)
+                    if 0 < abs(int(zz[k])) < hi), default=-1)
     pending = []
     r = 0
     for k in range(ss, se + 1):
         v = int(zz[k])
+        if v == 0:
+            r += 1
+            continue
+        # a ZRL carries only the correction bits of the 16 zero-history
+        # coefficients it skips, so flush it before buffering this one
+        while r > 15 and k <= last_new:
+            code, ln = _AC_ENC[0xF0]
+            bw.write(code, ln)
+            for b in pending:
+                bw.write(b, 1)
+            pending = []
+            r -= 16
         if abs(v) >= hi:          # old-nonzero: correction bit
             pending.append((abs(v) >> al) & 1)
-        elif v != 0:              # newly nonzero: must be ±(1<<al)
-            while r > 15:
-                code, ln = _AC_ENC[0xF0]
-                bw.write(code, ln)
-                for b in pending:
-                    bw.write(b, 1)
-                pending = []
-                r -= 16
+        else:                     # newly nonzero: must be ±(1<<al)
             code, ln = _AC_ENC[(r << 4) | 1]
             bw.write(code, ln)
             bw.write(1 if v > 0 else 0, 1)  # sign bit
@@ -371,8 +379,6 @@ def _emit_ac_refine_block(bw, zz, ss, se, al):
                 bw.write(b, 1)
             pending = []
             r = 0
-        else:
-            r += 1
     if r or pending:
         code, ln = _AC_ENC[0x00]  # EOB (run of 1)
         bw.write(code, ln)
@@ -495,6 +501,17 @@ def test_jpeg_progressive_roundtrip(size, sub, successive):
     assert (pj, ph_) == (bj, bh_) == (w, h)
     assert np.array_equal(plane_p, plane_b), \
         f"max diff {np.abs(plane_p.astype(int) - plane_b.astype(int)).max()}"
+
+
+def test_jpeg_progressive_refine_zrl_correction_bits():
+    """A 2x1 image pads to a near-flat block whose AC refinement has
+    old-nonzero coefficients after a run of 16+ zeros and a newly-nonzero
+    one later: the ZRL must carry only the correction bits of the
+    coefficients it skips (T.81 G.1.2.3), the rest ride the next symbol."""
+    rgb = np.array([[[86, 51, 229], [133, 69, 43]]], dtype=np.uint8)
+    prog = decode_jpeg_luma(encode_jpeg_progressive(rgb, successive=True))
+    assert prog[:2] == (2, 1)
+    assert np.array_equal(prog[2], decode_jpeg_luma(encode_jpeg(rgb))[2])
 
 
 def test_jpeg_progressive_grayscale():

@@ -82,6 +82,23 @@ def test_stray_slash_attribute():
     assert r.to_string() == "<a b / c>"
 
 
+def test_quote_adjacent_attributes_match_general_machine():
+    # '<a b="x"c="y">': the single-attribute regex's unquoted class can
+    # match '"x"c="y"' whole; the fast path must bail to the general
+    # machine, which a leading 'z=1' forces for the same attributes
+    for q in ('"', "'"):
+        tag = f"<a b={q}x{q}c={q}y{q}>"
+        r = parse(tag)
+        g = parse(f"<a z=1 b={q}x{q}c={q}y{q}>")
+        (el,) = _els(r)
+        (gel,) = _els(g)
+        assert r.dom.nodes[el][14] == ["b", "c"]
+        assert r.dom.nodes[el][15] == ["x", "y"]
+        assert _attrs(r.dom, el) == _attrs(g.dom, gel)[1:]
+        assert r.errors == 0
+        assert r.to_string() == tag
+
+
 def test_equals_then_gt_is_valueless_with_inner_ws():
     r = parse("<a b= >")
     (el,) = _els(r)

@@ -3648,7 +3648,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     # (anchor cap), kn_perplexity (interpolated back-off fix),
     # wet_roundtrip + warc_write_roundtrip (null-row guard + shard-count
     # fix), the host-graph block (host_reciprocity/kcore/assortativity/
-    # communities — _outlinks_kernel now shares kernel.decode_parse's
+    # communities — the outlinks kernel now shares kernel.decode_parse's
     # declared-charset retry), audio_fingerprint (decode_audio gained the
     # real mp3 Layer III branch), image_dhash (new lossy-WebP lane pinning
     # the RFC 6386 VP8 decoder), video_frames (NEW: WebM EBML walk +

@@ -23,13 +23,13 @@ dangling term per iteration.
 
 from __future__ import annotations
 
-from typing import Iterable, Iterator
-
-import pandas as pd
 from pyspark.sql import Column, DataFrame, functions as F
+from pyspark.sql.types import (
+    BooleanType, StringType, StructField, StructType, TimestampType,
+)
 
 from .dom import N_ATTR_NAMES, N_ATTR_VALUES
-from .kernel import decode_parse, gc_paused
+from .kernel import _page_kernel
 
 __all__ = ["extract_outlinks", "resolve_href", "link_degrees", "pagerank",
            "trustrank", "hits", "salsa", "anchor_text_index", "host_graph",
@@ -38,43 +38,22 @@ __all__ = ["extract_outlinks", "resolve_href", "link_degrees", "pagerank",
            "harmonic_centrality", "hyperball_harmonic", "hyperball_alpha"]
 
 
-@gc_paused
-def _outlinks_kernel(batches: Iterable[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    for pdf in batches:
-        if len(pdf) == 0:
+def _outlink_rows(raw, parsed):
+    """(href, anchor, nofollow) per ``<a href>`` of one page."""
+    b = parsed[0].dom
+    for a in b.query_selector_all(0, "a"):
+        nd = b.nodes[a]
+        href = rel = None
+        for an, av in zip(nd[N_ATTR_NAMES], nd[N_ATTR_VALUES]):
+            al = an.lower()
+            if al == "href" and href is None:
+                href = av or ""
+            elif al == "rel" and rel is None:
+                rel = av or ""
+        if href is None:
             continue
-        rows = {k: [] for k in ("url", "href", "anchor", "nofollow")}
-        has_ts = "warc_ts" in pdf.columns
-        if has_ts:
-            rows["warc_ts"] = []
-            ts_list = pdf["warc_ts"].tolist()
-        for ri, (url, raw) in enumerate(
-                zip(pdf["url"].tolist(), pdf["html"].tolist())):
-            # the SAME decode -> parse -> declared-charset-retry front
-            # end as page_analysis/structured_data (kernel.decode_parse)
-            # so every DOM-deriving kernel sees identical hrefs/anchors
-            # for a page whose meta charset disagrees with the sniff
-            result, _, _, _ = decode_parse(bytes(raw or b""))
-            b = result.dom
-            for a in b.query_selector_all(0, "a"):
-                nd = b.nodes[a]
-                href = rel = None
-                for an, av in zip(nd[N_ATTR_NAMES], nd[N_ATTR_VALUES]):
-                    al = an.lower()
-                    if al == "href" and href is None:
-                        href = av or ""
-                    elif al == "rel" and rel is None:
-                        rel = av or ""
-                if href is None:
-                    continue
-                rows["url"].append(url)
-                rows["href"].append(href)
-                rows["anchor"].append(b.text_content(a))
-                rows["nofollow"].append(
-                    "nofollow" in (rel or "").lower().split())
-                if has_ts:
-                    rows["warc_ts"].append(ts_list[ri])
-        yield pd.DataFrame(rows)
+        yield (href, b.text_content(a),
+               "nofollow" in (rel or "").lower().split())
 
 
 def extract_outlinks(pages: DataFrame) -> DataFrame:
@@ -82,9 +61,6 @@ def extract_outlinks(pages: DataFrame) -> DataFrame:
     the input carries ``warc_ts`` it rides along per link row — the
     streaming frontier needs the event time to survive the kernel so
     the candidate dedup can watermark on it."""
-    from pyspark.sql.types import (
-        BooleanType, StringType, StructField, StructType, TimestampType,
-    )
     fields = [StructField("url", StringType()),
               StructField("href", StringType()),
               StructField("anchor", StringType()),
@@ -93,8 +69,9 @@ def extract_outlinks(pages: DataFrame) -> DataFrame:
     if "warc_ts" in pages.columns:
         fields.append(StructField("warc_ts", TimestampType()))
         cols.append("warc_ts")
+    schema = StructType(fields)
     return (pages.select(*cols)
-            .mapInPandas(_outlinks_kernel, StructType(fields)))
+            .mapInPandas(_page_kernel(schema, _outlink_rows), schema))
 
 
 def resolve_href(src_url: Column, href: Column) -> Column:

@@ -6,6 +6,16 @@ all run in C (codecs, ``str.find``, ``re``), and the Python-level state
 machine steps only over markup boundaries (O(#tags), ~3-5% of bytes). No
 per-character Python anywhere.
 
+Page-kernel contract: every kernel that parses pages (the 15 here, graph's
+outlinks, robots' sitemap/feed/feed-discovery kernels) is built by
+``_page_kernel`` from an output schema and a per-page row function.  That
+one loop owns everything the kernels share: the batch iteration and the
+empty-batch skip, ``None`` payloads read as ``b""``, one decode front end
+(``decode_parse``, below), one GC pause (``gc_paused``, below), the key
+column and any ``warc_ts``/``lang`` copied from the input page onto each of
+its output rows, and one frame per input batch whose columns are the
+schema's, in schema order.  A kernel is its row function plus its schema.
+
 Encoding policy (mirrors the reference CLI's retry loop, cli.ts:32-56, done
 in-kernel in a single pass):
 
@@ -16,32 +26,40 @@ in-kernel in a single pass):
 3. after parsing, if the document *declares* a different charset that we can
    decode, re-decode + re-parse once (max 2 tries, like the CLI).
 
-Garbage collection: every kernel that parses pages runs under
-``gc_paused``, which disables Python's cyclic collector while the kernel
-builds one output batch and restores the caller's GC state before the
-batch is yielded (or an exception propagates).  A DOM is a flat list of
-per-node lists whose parent/child links are integer indices, so it holds
-no reference cycles and refcounting frees it as soon as the document is
-done.  Its 7 tracked containers per node would otherwise set off ~3,000
-generation-0 and 24 full collections per 600 malformed ~12 KB pages, all
-finding nothing.  The collector is paused for at most one Arrow batch, so
-a cycle made elsewhere waits at most one batch longer to be collected.
+Every page kernel sees the same decoded text for a page, so signals from
+different kernels over one page agree.
+
+Garbage collection: every page kernel runs under ``gc_paused``, which
+disables Python's cyclic collector while the kernel builds one output
+batch and restores the caller's GC state before the batch is yielded (or
+an exception propagates).  A DOM is a flat list of per-node lists whose
+parent/child links are integer indices, so it holds no reference cycles
+and refcounting frees it as soon as the document is done.  Its 7 tracked
+containers per node would otherwise set off ~3,000 generation-0 and 24
+full collections per 600 malformed ~12 KB pages, all finding nothing.  The
+collector is paused for at most one Arrow batch, so a cycle made elsewhere
+waits at most one batch longer to be collected.
 """
 
 from __future__ import annotations
 
 import codecs
 import gc
+import json
 import re
 from functools import lru_cache, wraps
-from typing import Iterable, Iterator
 
 import pandas as pd
+from pyspark.sql.types import (
+    BooleanType, IntegerType, LongType, StringType, StructField, StructType,
+    TimestampType,
+)
 
 from .dom import ELEMENT, N_ATTR_NAMES, N_ATTR_VALUES, N_KIND, N_PARENT, \
     N_TAG_LC
 from .extract import extract
 from .parser import parse
+from .schema import EXTRACT_SCHEMA, NODES_SCHEMA
 
 __all__ = ["decode_page_bytes", "process_document", "make_extract_kernel",
            "make_nodes_kernel", "gc_paused"]
@@ -158,134 +176,109 @@ def decode_parse(raw: bytes):
     return result, used, declared, retried
 
 
+# input columns a page kernel copies onto every output row of the page
+_CARRIED = ("warc_ts", "lang")
+
+
+def _page_kernel(schema: StructType, rows, key: str = "url",
+                 payload: str = "html"):
+    """The page-kernel loop (see the module docstring).  ``rows(raw,
+    parsed)`` gets one page's bytes and its ``decode_parse`` result and
+    returns an iterable of row tuples: the schema's fields in schema
+    order, without ``key`` and the carried columns.  The kernel copies
+    those from each row's input page (NULL for a carried column the
+    input lacks)."""
+    names = schema.fieldNames()
+    passed = [n for n in names if n == key or n in _CARRIED]
+
+    def kernel(batches):
+        for pdf in batches:
+            if len(pdf) == 0:
+                continue
+            out, src = [], []
+            for i, raw in enumerate(pdf[payload].tolist()):
+                raw = bytes(raw) if raw is not None else b""
+                for row in rows(raw, decode_parse(raw)):
+                    out.append(row)
+                    src.append(i)
+            values = zip(*out)
+            cols = {}
+            for n in names:
+                if n not in passed:
+                    cols[n] = list(next(values, ()))
+                elif n in pdf.columns:
+                    cols[n] = pdf[n].values[src]
+                else:
+                    cols[n] = [None] * len(src)
+            yield pd.DataFrame(cols)
+
+    return gc_paused(kernel)
+
+
+def _struct(**fields) -> StructType:
+    return StructType([StructField(n, t) for n, t in fields.items()])
+
+
+_S, _I, _L, _B = StringType(), IntegerType(), LongType(), BooleanType()
+
+# the per-document fields of process_document and the extract kernel
+_DOC_FIELDS = tuple(n for n in EXTRACT_SCHEMA.fieldNames()
+                    if n != "url" and n not in _CARRIED)
+
+
+def _document_fields(raw: bytes, parsed, strip: str,
+                     verify_roundtrip: bool) -> tuple:
+    """The _DOC_FIELDS values of one page, in EXTRACT_SCHEMA order."""
+    result, used, declared, retried = parsed
+    ext = extract(result.dom, strip)
+    text = ext.text
+    return (text, [s for s, _ in ext.spans], [e for _, e in ext.spans],
+            used, declared, retried, result.errors, result.unclosed_tags,
+            result.implicitly_closed_tags, ext.node_count,
+            ext.text_node_count, result.characters, result.lines,
+            len(text), len(text.split()), len(raw),
+            result.to_string() == result.text if verify_roundtrip else None)
+
+
 def process_document(raw: bytes, strip: str = "density", *,
                      verify_roundtrip: bool = False) -> dict:
     """Full per-document pipeline: decode -> parse -> (maybe re-decode) -> extract."""
-    result, used, declared, retried = decode_parse(raw)
-
-    ext = extract(result.dom, strip)
-    roundtrip_ok = None
-    if verify_roundtrip:
-        roundtrip_ok = result.to_string() == result.text
-
-    return {
-        "text": ext.text,
-        "span_starts": [s for s, _ in ext.spans],
-        "span_ends": [e for _, e in ext.spans],
-        "used_encoding": used,
-        "declared_charset": declared,
-        "encoding_retried": retried,
-        "errors": result.errors,
-        "unclosed": result.unclosed_tags,
-        "implicitly_closed": result.implicitly_closed_tags,
-        "node_count": ext.node_count,
-        "text_node_count": ext.text_node_count,
-        "characters": result.characters,
-        "lines": result.lines,
-        "text_len": len(ext.text),
-        "token_count": len(ext.text.split()),
-        "html_bytes": len(raw),
-        "roundtrip_ok": roundtrip_ok,
-        "_result": result,
-    }
+    parsed = decode_parse(raw)
+    doc = dict(zip(_DOC_FIELDS,
+                   _document_fields(raw, parsed, strip, verify_roundtrip)))
+    doc["_result"] = parsed[0]
+    return doc
 
 
 def make_extract_kernel(strip: str = "density", verify_roundtrip: bool = False):
     """Build a mapInPandas kernel: pages batches -> EXTRACT_SCHEMA batches."""
-
-    @gc_paused
-    def kernel(batches: Iterable[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            n = len(pdf)
-            if n == 0:
-                continue
-            # per-column lists appended in one pass (same fields, same order
-            # as process_document, minus the per-doc dict round-trip)
-            texts = []; sp_starts = []; sp_ends = []; useds = []; decls = []
-            retrs = []; errs = []; uncls = []; impls = []; ncnts = []
-            tcnts = []; chars = []; lines = []; tlens = []; toks = []
-            hbytes = []; rts = []
-            for raw in pdf["html"].tolist():
-                raw = bytes(raw) if raw is not None else b""
-                result, used, declared, retried = decode_parse(raw)
-                ext = extract(result.dom, strip)
-                text = ext.text
-                texts.append(text)
-                sp_starts.append([s for s, _ in ext.spans])
-                sp_ends.append([e for _, e in ext.spans])
-                useds.append(used)
-                decls.append(declared)
-                retrs.append(retried)
-                errs.append(result.errors)
-                uncls.append(result.unclosed_tags)
-                impls.append(result.implicitly_closed_tags)
-                ncnts.append(ext.node_count)
-                tcnts.append(ext.text_node_count)
-                chars.append(result.characters)
-                lines.append(result.lines)
-                tlens.append(len(text))
-                toks.append(len(text.split()))
-                hbytes.append(len(raw))
-                rts.append(result.to_string() == result.text
-                           if verify_roundtrip else None)
-            yield pd.DataFrame({
-                "url": pdf["url"].values,
-                "warc_ts": pdf["warc_ts"].values,
-                "lang": pdf["lang"].values,
-                "text": texts, "span_starts": sp_starts, "span_ends": sp_ends,
-                "used_encoding": useds, "declared_charset": decls,
-                "encoding_retried": retrs, "errors": errs, "unclosed": uncls,
-                "implicitly_closed": impls, "node_count": ncnts,
-                "text_node_count": tcnts, "characters": chars, "lines": lines,
-                "text_len": tlens, "token_count": toks, "html_bytes": hbytes,
-                "roundtrip_ok": rts,
-            })
-
-    return kernel
+    return _page_kernel(EXTRACT_SCHEMA, lambda raw, parsed: (
+        _document_fields(raw, parsed, strip, verify_roundtrip),))
 
 
 def make_format_kernel(format_options: dict | None = None):
     """mapInPandas kernel: pages batches -> (url, formatted_html) — the
     document-parallel pretty-printer (formatter.ts's role at corpus scale)."""
+    from .formatter import FormatOptions, format_html
 
-    @gc_paused
-    def kernel(batches: Iterable[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from .formatter import FormatOptions, format_html
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            urls, outs = [], []
-            for url, raw in zip(pdf["url"].tolist(), pdf["html"].tolist()):
-                text_src, _, _ = decode_page_bytes(bytes(raw or b""))
-                result = parse(text_src, positions=False)
-                format_html(result.dom, FormatOptions(**(format_options or {})))
-                urls.append(url)
-                outs.append(result.dom.serialize(0))
-            yield pd.DataFrame({"url": urls, "formatted_html": outs})
+    def rows(raw, parsed):
+        b = parsed[0].dom
+        format_html(b, FormatOptions(**(format_options or {})))
+        return ((b.serialize(0),),)
 
-    return kernel
+    return _page_kernel(_struct(url=_S, formatted_html=_S), rows)
 
 
 def make_stylize_kernel(style_options: dict | None = None):
     """mapInPandas kernel: pages batches -> (url, stylized_html) — the
     syntax-highlighting serializer, document-parallel."""
+    from .stylizer import StyleOptions, stylize_html
 
-    @gc_paused
-    def kernel(batches: Iterable[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from .stylizer import StyleOptions, stylize_html
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            urls, outs = [], []
-            for url, raw in zip(pdf["url"].tolist(), pdf["html"].tolist()):
-                text_src, _, _ = decode_page_bytes(bytes(raw or b""))
-                result = parse(text_src, positions=False)
-                urls.append(url)
-                outs.append(stylize_html(result.dom, 0,
-                                         StyleOptions(**(style_options or {}))))
-            yield pd.DataFrame({"url": urls, "stylized_html": outs})
+    def rows(raw, parsed):
+        options = StyleOptions(**(style_options or {}))
+        return ((stylize_html(parsed[0].dom, 0, options),),)
 
-    return kernel
+    return _page_kernel(_struct(url=_S, stylized_html=_S), rows)
 
 
 def make_events_kernel():
@@ -293,35 +286,24 @@ def make_events_kernel():
     (url, n_events, n_text_events, n_tag_events, reconstituted_ok) — the
     document-parallel form of the reference's callback API (events.py);
     ``reconstituted_ok`` asserts the byte-identity contract per page."""
+    from .events import parse_events
 
-    @gc_paused
-    def kernel(batches: Iterable[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from .events import parse_events
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            rows = {k: [] for k in ("url", "n_events", "n_text_events",
-                                    "n_tag_events", "reconstituted_ok")}
-            for url, raw in zip(pdf["url"].tolist(), pdf["html"].tolist()):
-                text_src, _, _ = decode_page_bytes(bytes(raw or b""))
-                result = parse(text_src, positions=False)
-                n = n_text = n_tag = 0
-                parts = []
-                for ev in parse_events(result):
-                    n += 1
-                    if ev.kind == "text":
-                        n_text += 1
-                    elif ev.kind == "start-tag-start":
-                        n_tag += 1
-                    parts.append(ev.src)
-                rows["url"].append(url)
-                rows["n_events"].append(n)
-                rows["n_text_events"].append(n_text)
-                rows["n_tag_events"].append(n_tag)
-                rows["reconstituted_ok"].append("".join(parts) == result.text)
-            yield pd.DataFrame(rows)
+    def rows(raw, parsed):
+        result = parsed[0]
+        n = n_text = n_tag = 0
+        parts = []
+        for ev in parse_events(result):
+            n += 1
+            if ev.kind == "text":
+                n_text += 1
+            elif ev.kind == "start-tag-start":
+                n_tag += 1
+            parts.append(ev.src)
+        return ((n, n_text, n_tag, "".join(parts) == result.text),)
 
-    return kernel
+    return _page_kernel(
+        _struct(url=_S, n_events=_L, n_text_events=_L, n_tag_events=_L,
+                reconstituted_ok=_B), rows)
 
 
 def make_selector_kernel():
@@ -329,28 +311,18 @@ def make_selector_kernel():
     (url, title_text, n_links, n_main_paragraphs) — the distributed form of
     the querySelector/textContent surface (dom.ts:436-499 parity ops)."""
 
-    @gc_paused
-    def kernel(batches: Iterable[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            rows = {k: [] for k in ("url", "title_text", "n_links",
-                                    "n_main_paragraphs")}
-            for url, raw in zip(pdf["url"].tolist(), pdf["html"].tolist()):
-                text_src, _, _ = decode_page_bytes(bytes(raw or b""))
-                b = parse(text_src, positions=False).dom
-                title = b.query_selector(0, "title")
-                main = b.query_selector(0, "main")
-                rows["url"].append(url)
-                rows["title_text"].append(
-                    b.text_content(title) if title is not None else None)
-                rows["n_links"].append(len(b.query_selector_all(0, "a")))
-                rows["n_main_paragraphs"].append(
-                    len(b.query_selector_all(main, "p"))
-                    if main is not None else 0)
-            yield pd.DataFrame(rows)
+    def rows(raw, parsed):
+        b = parsed[0].dom
+        title = b.query_selector(0, "title")
+        main = b.query_selector(0, "main")
+        return ((b.text_content(title) if title is not None else None,
+                 len(b.query_selector_all(0, "a")),
+                 len(b.query_selector_all(main, "p"))
+                 if main is not None else 0),)
 
-    return kernel
+    return _page_kernel(
+        _struct(url=_S, title_text=_S, n_links=_I, n_main_paragraphs=_I),
+        rows)
 
 
 def _attrs_ci(builder, node: int) -> dict[str, str]:
@@ -381,8 +353,9 @@ def _robots_from_dom(b) -> tuple[bool, bool, int]:
             "nofollow" in tokens or "none" in tokens, n_meta)
 
 
-def _meta_from_dom(b) -> dict:
-    """title/first_h1/canonical/description/og_title from one DOM."""
+def _meta_from_dom(b) -> tuple:
+    """(title_text, first_h1, canonical, description, og_title) from one
+    DOM."""
     title = b.query_selector(0, "title")
     h1 = b.query_selector(0, "h1")
     canonical = description = og_title = None
@@ -399,12 +372,17 @@ def _meta_from_dom(b) -> dict:
             description = at.get("content", "")
         elif prop == "og:title" and og_title is None:
             og_title = at.get("content", "")
-    return {
-        "title_text": b.text_content(title) if title is not None else None,
-        "first_h1": b.text_content(h1) if h1 is not None else None,
-        "canonical": canonical, "description": description,
-        "og_title": og_title,
-    }
+    return (b.text_content(title) if title is not None else None,
+            b.text_content(h1) if h1 is not None else None,
+            canonical, description, og_title)
+
+
+_META_SCHEMA = _struct(url=_S, title_text=_S, first_h1=_S, canonical=_S,
+                       description=_S, og_title=_S)
+_ANALYSIS_SCHEMA = _struct(
+    url=_S, warc_ts=TimestampType(), text=_S, text_len=_L, token_count=_L,
+    errors=_L, noindex=_B, nofollow=_B, title_text=_S, first_h1=_S,
+    canonical=_S, description=_S, og_title=_S, n_links=_I)
 
 
 def make_analysis_kernel(strip: str = "density"):
@@ -416,66 +394,25 @@ def make_analysis_kernel(strip: str = "density"):
     dominant cost, so a pipeline consuming several signals should take
     this kernel and project."""
 
-    @gc_paused
-    def kernel(batches: Iterable[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            rows = {k: [] for k in (
-                "url", "warc_ts", "text", "text_len", "token_count",
-                "errors", "noindex", "nofollow", "title_text", "first_h1",
-                "canonical", "description", "og_title", "n_links")}
-            rows["warc_ts"] = pdf["warc_ts"].tolist() \
-                if "warc_ts" in pdf.columns else [None] * len(pdf)
-            for url, raw in zip(pdf["url"].tolist(), pdf["html"].tolist()):
-                result, _, _, _ = decode_parse(bytes(raw or b""))
-                b = result.dom
-                ext = extract(b, strip)
-                noindex, nofollow, _ = _robots_from_dom(b)
-                meta = _meta_from_dom(b)
-                rows["url"].append(url)
-                rows["text"].append(ext.text)
-                rows["text_len"].append(len(ext.text))
-                rows["token_count"].append(len(ext.text.split()))
-                rows["errors"].append(result.errors)
-                rows["noindex"].append(noindex)
-                rows["nofollow"].append(nofollow)
-                for k, v in meta.items():
-                    rows[k].append(v)
-                rows["n_links"].append(len(b.query_selector_all(0, "a")))
-            yield pd.DataFrame(rows)
+    def rows(raw, parsed):
+        result = parsed[0]
+        b = result.dom
+        text = extract(b, strip).text
+        noindex, nofollow, _ = _robots_from_dom(b)
+        return ((text, len(text), len(text.split()), result.errors,
+                 noindex, nofollow, *_meta_from_dom(b),
+                 len(b.query_selector_all(0, "a"))),)
 
-    return kernel
+    return _page_kernel(_ANALYSIS_SCHEMA, rows)
 
 
 def page_analysis(pages, strip: str = "density") -> "DataFrame":
     """One decode+parse per page -> every per-page signal (see
     make_analysis_kernel)."""
-    from pyspark.sql.types import (
-        BooleanType, IntegerType, LongType, StringType, StructField,
-        StructType,
-    )
-    from pyspark.sql.types import TimestampType
-    schema = StructType([
-        StructField("url", StringType()),
-        StructField("warc_ts", TimestampType()),
-        StructField("text", StringType()),
-        StructField("text_len", LongType()),
-        StructField("token_count", LongType()),
-        StructField("errors", LongType()),
-        StructField("noindex", BooleanType()),
-        StructField("nofollow", BooleanType()),
-        StructField("title_text", StringType()),
-        StructField("first_h1", StringType()),
-        StructField("canonical", StringType()),
-        StructField("description", StringType()),
-        StructField("og_title", StringType()),
-        StructField("n_links", IntegerType()),
-    ])
     cols = ["url", "html"] + (["warc_ts"] if "warc_ts" in pages.columns
                               else [])
     return (pages.select(*cols)
-            .mapInPandas(make_analysis_kernel(strip), schema))
+            .mapInPandas(make_analysis_kernel(strip), _ANALYSIS_SCHEMA))
 
 
 def make_page_meta_kernel():
@@ -483,34 +420,15 @@ def make_page_meta_kernel():
     (title, first h1, rel=canonical href, meta description, og:title) —
     the per-page metadata record a crawl index stores next to the
     extracted text. Missing fields are NULL."""
-
-    @gc_paused
-    def kernel(batches: Iterable[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            rows = {k: [] for k in ("url", "title_text", "first_h1",
-                                    "canonical", "description", "og_title")}
-            for url, raw in zip(pdf["url"].tolist(), pdf["html"].tolist()):
-                text_src, _, _ = decode_page_bytes(bytes(raw or b""))
-                b = parse(text_src, positions=False).dom
-                rows["url"].append(url)
-                for k, v in _meta_from_dom(b).items():
-                    rows[k].append(v)
-            yield pd.DataFrame(rows)
-
-    return kernel
+    return _page_kernel(_META_SCHEMA,
+                        lambda raw, parsed: (_meta_from_dom(parsed[0].dom),))
 
 
 def page_metadata(pages) -> "DataFrame":
     """(url, title_text, first_h1, canonical, description, og_title) for
     every page — the crawl-index metadata record."""
-    from pyspark.sql.types import StringType, StructField, StructType
-    schema = StructType([StructField(c, StringType()) for c in
-                         ("url", "title_text", "first_h1", "canonical",
-                          "description", "og_title")])
     return (pages.select("url", "html")
-            .mapInPandas(make_page_meta_kernel(), schema))
+            .mapInPandas(make_page_meta_kernel(), _META_SCHEMA))
 
 
 def _tables_from_dom(b) -> list[tuple]:
@@ -564,29 +482,17 @@ def _tables_from_dom(b) -> list[tuple]:
     return out
 
 
+_TABLES_SCHEMA = _struct(url=_S, table_idx=_I, caption=_S, row_idx=_I,
+                         col_idx=_I, is_header=_B, rowspan=_I, colspan=_I,
+                         cell=_S)
+
+
 def make_tables_kernel():
     """mapInPandas kernel: pages batches -> one row per table CELL
     (structured-table extraction — the training-data path that turns
     web tables into relational records)."""
-
-    @gc_paused
-    def kernel(batches: Iterable[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = ("url", "table_idx", "caption", "row_idx", "col_idx",
-                "is_header", "rowspan", "colspan", "cell")
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            rows = {k: [] for k in cols}
-            for url, raw in zip(pdf["url"].tolist(), pdf["html"].tolist()):
-                text_src, _, _ = decode_page_bytes(bytes(raw or b""))
-                b = parse(text_src, positions=False).dom
-                for rec in _tables_from_dom(b):
-                    rows["url"].append(url)
-                    for k, v in zip(cols[1:], rec):
-                        rows[k].append(v)
-            yield pd.DataFrame(rows)
-
-    return kernel
+    return _page_kernel(_TABLES_SCHEMA,
+                        lambda raw, parsed: _tables_from_dom(parsed[0].dom))
 
 
 def extract_tables(pages) -> "DataFrame":
@@ -595,21 +501,8 @@ def extract_tables(pages) -> "DataFrame":
     relational records, through the same forgiving parse (+ table
     repair) as the text extraction. Pure map over pages: no shuffle;
     output fan-out is bounded by page size."""
-    from pyspark.sql.types import (BooleanType, IntegerType, StringType,
-                                   StructField, StructType)
-    schema = StructType([
-        StructField("url", StringType()),
-        StructField("table_idx", IntegerType()),
-        StructField("caption", StringType()),
-        StructField("row_idx", IntegerType()),
-        StructField("col_idx", IntegerType()),
-        StructField("is_header", BooleanType()),
-        StructField("rowspan", IntegerType()),
-        StructField("colspan", IntegerType()),
-        StructField("cell", StringType()),
-    ])
     return (pages.select("url", "html")
-            .mapInPandas(make_tables_kernel(), schema))
+            .mapInPandas(make_tables_kernel(), _TABLES_SCHEMA))
 
 
 _HEADING_TAGS = frozenset(["h1", "h2", "h3", "h4", "h5", "h6"])
@@ -675,45 +568,24 @@ def _sections_from_dom(b) -> list[tuple]:
     return out
 
 
+_SECTIONS_SCHEMA = _struct(url=_S, section_idx=_I, level=_I, heading=_S,
+                           sec_text=_S)
+
+
 def make_sections_kernel():
     """mapInPandas kernel: pages batches -> one row per heading
     SECTION (semantic chunking for training data: split at the
     document's own outline instead of fixed token windows)."""
-
-    @gc_paused
-    def kernel(batches: Iterable[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = ("url", "section_idx", "level", "heading", "sec_text")
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            rows = {k: [] for k in cols}
-            for url, raw in zip(pdf["url"].tolist(), pdf["html"].tolist()):
-                text_src, _, _ = decode_page_bytes(bytes(raw or b""))
-                b = parse(text_src, positions=False).dom
-                for rec in _sections_from_dom(b):
-                    rows["url"].append(url)
-                    for k, v in zip(cols[1:], rec):
-                        rows[k].append(v)
-            yield pd.DataFrame(rows)
-
-    return kernel
+    return _page_kernel(_SECTIONS_SCHEMA,
+                        lambda raw, parsed: _sections_from_dom(parsed[0].dom))
 
 
 def extract_sections(pages) -> "DataFrame":
     """(url, section_idx, level, heading, sec_text) — the page's
     heading outline with per-section running text, through the same
     forgiving parse as extraction. Pure map over pages: no shuffle."""
-    from pyspark.sql.types import (IntegerType, StringType, StructField,
-                                   StructType)
-    schema = StructType([
-        StructField("url", StringType()),
-        StructField("section_idx", IntegerType()),
-        StructField("level", IntegerType()),
-        StructField("heading", StringType()),
-        StructField("sec_text", StringType()),
-    ])
     return (pages.select("url", "html")
-            .mapInPandas(make_sections_kernel(), schema))
+            .mapInPandas(make_sections_kernel(), _SECTIONS_SCHEMA))
 
 
 def _template_signature(b) -> tuple[str, int]:
@@ -737,31 +609,17 @@ def _template_signature(b) -> tuple[str, int]:
     return hashlib.md5(seq.encode()).hexdigest(), len(tags)
 
 
+_TEMPLATE_SCHEMA = _struct(url=_S, template_hash=_S, n_elements=_I)
+
+
 def make_template_kernel():
     """mapInPandas kernel: pages batches -> (url, template_hash,
     n_elements) — the per-page half of template detection (group by
     (host, template_hash) downstream to find a site's templates and
     their page counts)."""
-
-    @gc_paused
-    def kernel(batches: Iterable[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = ("url", "template_hash", "n_elements")
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            rows: dict[str, list] = {k: [] for k in cols}
-            for url, raw in zip(pdf["url"].tolist(), pdf["html"].tolist()):
-                text_src, _, _ = decode_page_bytes(bytes(raw or b""))
-                b = parse(text_src, positions=False).dom
-                th, n = _template_signature(b)
-                rows["url"].append(url)
-                rows["template_hash"].append(th)
-                rows["n_elements"].append(n)
-            out = pd.DataFrame(rows, columns=cols)
-            out["n_elements"] = out["n_elements"].astype("Int32")
-            yield out
-
-    return kernel
+    return _page_kernel(
+        _TEMPLATE_SCHEMA,
+        lambda raw, parsed: (_template_signature(parsed[0].dom),))
 
 
 def template_fingerprints(pages) -> "DataFrame":
@@ -770,15 +628,8 @@ def template_fingerprints(pages) -> "DataFrame":
     groupBy on (host, template_hash): a host's dominant hash IS its
     page template, and pages outside it are the candidates for special
     extraction handling. Pure map, no shuffle here."""
-    from pyspark.sql.types import (IntegerType, StringType, StructField,
-                                   StructType)
-    schema = StructType([
-        StructField("url", StringType()),
-        StructField("template_hash", StringType()),
-        StructField("n_elements", IntegerType()),
-    ])
     return (pages.select("url", "html")
-            .mapInPandas(make_template_kernel(), schema))
+            .mapInPandas(make_template_kernel(), _TEMPLATE_SCHEMA))
 
 
 _MICRODATA_URL_TAGS = {"a": "href", "link": "href", "area": "href",
@@ -935,38 +786,11 @@ def extract_rdfa(pages) -> "DataFrame":
     """(url, res_idx, res_type, prop, value, is_res_ref) for every
     RDFa-lite property on every page — same contract shape as
     extract_microdata. Pure map over pages, no shuffle."""
-    from pyspark.sql.types import (BooleanType, IntegerType, StringType,
-                                   StructField, StructType)
-    schema = StructType([
-        StructField("url", StringType()),
-        StructField("res_idx", IntegerType()),
-        StructField("res_type", StringType()),
-        StructField("prop", StringType()),
-        StructField("value", StringType()),
-        StructField("is_res_ref", BooleanType()),
-    ])
-
-    @gc_paused
-    def kernel(batches: Iterable[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = ("url", "res_idx", "res_type", "prop", "value",
-                "is_res_ref")
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            rows = {k: [] for k in cols}
-            for url, raw in zip(pdf["url"].tolist(), pdf["html"].tolist()):
-                text_src, _, _ = decode_page_bytes(bytes(raw or b""))
-                bb = parse(text_src, positions=False).dom
-                for rec in _rdfa_from_dom(bb):
-                    rows["url"].append(url)
-                    for k, v in zip(cols[1:], rec):
-                        rows[k].append(v)
-            out = pd.DataFrame(rows, columns=cols)
-            out["res_idx"] = out["res_idx"].astype("Int32")
-            yield out
-
-    return (pages.select("url", "html")
-            .mapInPandas(kernel, schema))
+    schema = _struct(url=_S, res_idx=_I, res_type=_S, prop=_S, value=_S,
+                     is_res_ref=_B)
+    kernel = _page_kernel(schema,
+                          lambda raw, parsed: _rdfa_from_dom(parsed[0].dom))
+    return pages.select("url", "html").mapInPandas(kernel, schema)
 
 
 def extract_microdata(pages) -> "DataFrame":
@@ -974,38 +798,14 @@ def extract_microdata(pages) -> "DataFrame":
     microdata property on every page — the itemscope/itemprop channel
     of structured-data extraction, through the same forgiving parse.
     Pure map over pages, no shuffle."""
-    from pyspark.sql.types import (BooleanType, IntegerType, StringType,
-                                   StructField, StructType)
-    schema = StructType([
-        StructField("url", StringType()),
-        StructField("item_idx", IntegerType()),
-        StructField("item_type", StringType()),
-        StructField("prop", StringType()),
-        StructField("value", StringType()),
-        StructField("is_item_ref", BooleanType()),
-    ])
+    schema = _struct(url=_S, item_idx=_I, item_type=_S, prop=_S, value=_S,
+                     is_item_ref=_B)
+    kernel = _page_kernel(
+        schema, lambda raw, parsed: _microdata_from_dom(parsed[0].dom))
+    return pages.select("url", "html").mapInPandas(kernel, schema)
 
-    @gc_paused
-    def kernel(batches: Iterable[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = ("url", "item_idx", "item_type", "prop", "value",
-                "is_item_ref")
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            rows = {k: [] for k in cols}
-            for url, raw in zip(pdf["url"].tolist(), pdf["html"].tolist()):
-                text_src, _, _ = decode_page_bytes(bytes(raw or b""))
-                bb = parse(text_src, positions=False).dom
-                for rec in _microdata_from_dom(bb):
-                    rows["url"].append(url)
-                    for k, v in zip(cols[1:], rec):
-                        rows[k].append(v)
-            out = pd.DataFrame(rows, columns=cols)
-            out["item_idx"] = out["item_idx"].astype("Int32")
-            yield out
 
-    return (pages.select("url", "html")
-            .mapInPandas(kernel, schema))
+_ROBOTS_SCHEMA = _struct(url=_S, noindex=_B, nofollow=_B, n_robots_meta=_I)
 
 
 def make_robots_kernel():
@@ -1015,79 +815,77 @@ def make_robots_kernel():
     comma-separated token split, ``none`` = ``noindex,nofollow``). A
     corpus pipeline must honor these before publication; pages without
     directives report False/False with n_robots_meta = 0."""
-
-    @gc_paused
-    def kernel(batches: Iterable[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            rows = {k: [] for k in ("url", "noindex", "nofollow",
-                                    "n_robots_meta")}
-            for url, raw in zip(pdf["url"].tolist(), pdf["html"].tolist()):
-                text_src, _, _ = decode_page_bytes(bytes(raw or b""))
-                b = parse(text_src, positions=False).dom
-                noindex, nofollow, n_meta = _robots_from_dom(b)
-                rows["url"].append(url)
-                rows["noindex"].append(noindex)
-                rows["nofollow"].append(nofollow)
-                rows["n_robots_meta"].append(n_meta)
-            yield pd.DataFrame(rows)
-
-    return kernel
+    return _page_kernel(_ROBOTS_SCHEMA,
+                        lambda raw, parsed: (_robots_from_dom(parsed[0].dom),))
 
 
 def robots_flags(pages) -> "DataFrame":
     """(url, noindex, nofollow, n_robots_meta) for every page — the
     meta-robots census; filter ``~noindex`` before corpus publication."""
-    from pyspark.sql.types import (
-        BooleanType, IntegerType, StringType, StructField, StructType,
-    )
-    schema = StructType([StructField("url", StringType()),
-                         StructField("noindex", BooleanType()),
-                         StructField("nofollow", BooleanType()),
-                         StructField("n_robots_meta", IntegerType())])
     return (pages.select("url", "html")
-            .mapInPandas(make_robots_kernel(), schema))
+            .mapInPandas(make_robots_kernel(), _ROBOTS_SCHEMA))
 
 
 def make_nodes_kernel():
     """Build a mapInPandas kernel: pages batches -> NODES_SCHEMA batches
     (flat per-node export for node-level corpus analytics)."""
 
-    @gc_paused
-    def kernel(batches: Iterable[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            rows = {k: [] for k in ("url", "node_idx", "kind", "tag", "parent",
-                                    "closure", "synthetic", "depth", "n_attrs",
-                                    "text_len", "src_start", "src_end")}
-            for url, raw in zip(pdf["url"].tolist(), pdf["html"].tolist()):
-                text_src, _, _ = decode_page_bytes(bytes(raw or b""))
-                b = parse(text_src, positions=False).dom
-                order = b.doc_order()
-                depth_of = {0: -1}
-                for node in order:
-                    p = b.parent[node]
-                    d = depth_of.get(p, 0) + 1
-                    depth_of[node] = d
-                    rows["url"].append(url)
-                    rows["node_idx"].append(node)
-                    rows["kind"].append(b.kind[node])
-                    rows["tag"].append(b.tag_lc[node])
-                    rows["parent"].append(p if p != 0 else -1)
-                    rows["closure"].append(b.closure[node])
-                    rows["synthetic"].append(b.synthetic[node])
-                    rows["depth"].append(d)
-                    names = b.attr_names[node]
-                    rows["n_attrs"].append(len(names) if names else 0)
-                    c = b.content[node]
-                    rows["text_len"].append(len(c) if c else 0)
-                    rows["src_start"].append(b.src_start[node])
-                    rows["src_end"].append(b.src_end[node])
-            yield pd.DataFrame(rows)
+    def rows(raw, parsed):
+        b = parsed[0].dom
+        depth_of = {0: -1}
+        for node in b.doc_order():
+            p = b.parent[node]
+            d = depth_of.get(p, 0) + 1
+            depth_of[node] = d
+            names = b.attr_names[node]
+            c = b.content[node]
+            yield (node, b.kind[node], b.tag_lc[node], p if p != 0 else -1,
+                   b.closure[node], b.synthetic[node], d,
+                   len(names) if names else 0, len(c) if c else 0,
+                   b.src_start[node], b.src_end[node])
 
-    return kernel
+    return _page_kernel(NODES_SCHEMA, rows)
+
+
+def _json_ld_rows(raw, parsed):
+    """(block_idx, ld_type, ld_name, parse_ok) per JSON-LD entity of one
+    page (see make_structured_data_kernel)."""
+    b = parsed[0].dom
+    idx = 0
+    for s in b.query_selector_all(0, "script"):
+        stype = _attrs_ci(b, s).get("type", "")
+        if stype.strip().lower() != "application/ld+json":
+            continue
+        try:
+            data = json.loads(b.text_content(s))
+        except (ValueError, RecursionError):
+            yield (idx, None, None, False)
+            idx += 1
+            continue
+        if isinstance(data, dict) and isinstance(data.get("@graph"), list):
+            objs = data["@graph"]
+        elif isinstance(data, list):
+            objs = data
+        else:
+            objs = [data]
+        emitted = False
+        for obj in objs:
+            if not isinstance(obj, dict):
+                continue
+            t = obj.get("@type")
+            if isinstance(t, list):
+                t = t[0] if t else None
+            name = obj.get("name")
+            yield (idx, t if isinstance(t, str) else None,
+                   name if isinstance(name, str) else None, True)
+            emitted = True
+        if not emitted:  # block parsed but held no entity
+            yield (idx, None, None, True)
+        idx += 1
+
+
+_STRUCTURED_DATA_SCHEMA = _struct(url=_S, block_idx=_I, ld_type=_S,
+                                  ld_name=_S, parse_ok=_B)
 
 
 def make_structured_data_kernel():
@@ -1097,78 +895,12 @@ def make_structured_data_kernel():
     containers, top-level arrays, list-valued @type (first wins);
     malformed JSON yields one parse_ok=false row so the census still
     counts the block."""
-    import json
-
-    @gc_paused
-    def kernel(batches: Iterable[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            rows = {k: [] for k in ("url", "block_idx", "ld_type",
-                                    "ld_name", "parse_ok")}
-
-            def emit(url, idx, t, name, ok):
-                rows["url"].append(url)
-                rows["block_idx"].append(idx)
-                rows["ld_type"].append(t)
-                rows["ld_name"].append(name)
-                rows["parse_ok"].append(ok)
-
-            for url, raw in zip(pdf["url"].tolist(), pdf["html"].tolist()):
-                result, _, _, _ = decode_parse(bytes(raw or b""))
-                b = result.dom
-                idx = 0
-                for s in b.query_selector_all(0, "script"):
-                    stype = _attrs_ci(b, s).get("type", "")
-                    if stype.strip().lower() != "application/ld+json":
-                        continue
-                    payload = b.text_content(s)
-                    try:
-                        data = json.loads(payload)
-                    except (ValueError, RecursionError):
-                        emit(url, idx, None, None, False)
-                        idx += 1
-                        continue
-                    if isinstance(data, dict) and isinstance(
-                            data.get("@graph"), list):
-                        objs = data["@graph"]
-                    elif isinstance(data, list):
-                        objs = data
-                    else:
-                        objs = [data]
-                    emitted = False
-                    for obj in objs:
-                        if not isinstance(obj, dict):
-                            continue
-                        t = obj.get("@type")
-                        if isinstance(t, list):
-                            t = t[0] if t else None
-                        name = obj.get("name")
-                        emit(url, idx,
-                             t if isinstance(t, str) else None,
-                             name if isinstance(name, str) else None,
-                             True)
-                        emitted = True
-                    if not emitted:  # block parsed but held no entity
-                        emit(url, idx, None, None, True)
-                    idx += 1
-            yield pd.DataFrame(rows)
-
-    return kernel
+    return _page_kernel(_STRUCTURED_DATA_SCHEMA, _json_ld_rows)
 
 
 def structured_data(pages) -> "DataFrame":
     """One row per JSON-LD entity per page (see
     make_structured_data_kernel). Map-side only."""
-    from pyspark.sql.types import (
-        BooleanType, IntegerType, StringType, StructField, StructType,
-    )
-    schema = StructType([
-        StructField("url", StringType()),
-        StructField("block_idx", IntegerType()),
-        StructField("ld_type", StringType()),
-        StructField("ld_name", StringType()),
-        StructField("parse_ok", BooleanType()),
-    ])
     return (pages.select("url", "html")
-            .mapInPandas(make_structured_data_kernel(), schema))
+            .mapInPandas(make_structured_data_kernel(),
+                         _STRUCTURED_DATA_SCHEMA))

@@ -28,9 +28,14 @@ whole plan stays in codegen.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window, functions as F
+import datetime as _dt
+from email.utils import parsedate_to_datetime
 
-from .kernel import gc_paused
+from pyspark.sql import Column, DataFrame, Window, functions as F
+from pyspark.sql.types import LongType, StringType, StructField, StructType
+
+from .dom import ELEMENT, N_CHILDREN, N_CONTENT, N_KIND, N_TAG_LC, TEXT
+from .kernel import _attrs_ci, _page_kernel
 
 __all__ = ["parse_robots_txt", "robots_rules_for_agent", "apply_robots",
            "robots_crawl_delays", "robots_sitemaps", "robots_pattern_regex",
@@ -214,55 +219,44 @@ def robots_sitemaps(robots: DataFrame, host_col: str = "host",
             .distinct())
 
 
-@gc_paused
-def _sitemap_kernel(batches):
-    """pandas batches (sitemap_url, xml) -> one row per <url>/<sitemap>
-    entry, parsed with the engine's own (xml-mode-capable) parser."""
-    import pandas as pd
+def _child(b, node, tag):
+    """First element child of ``node`` whose tag, namespace prefix
+    stripped (sitemap and feed files often use ``<sm:url>``), is
+    ``tag``."""
+    for c in b.nodes[node][N_CHILDREN] or []:
+        if isinstance(c, int):
+            nd = b.nodes[c]
+            if (nd[N_KIND] == ELEMENT
+                    and (nd[N_TAG_LC] or "").split(":")[-1] == tag):
+                return c
+    return None
 
-    from .kernel import decode_page_bytes
-    from .parser import parse
 
-    from .dom import ELEMENT, N_CHILDREN, N_KIND, N_TAG_LC
+def _child_text(b, node, tag):
+    c = _child(b, node, tag)
+    return b.text_content(c).strip() if c is not None else None
 
-    def child_text(b, node, tag):
-        for c in b.nodes[node][N_CHILDREN] or []:
-            if isinstance(c, int):
-                nd = b.nodes[c]
-                if (nd[N_KIND] == ELEMENT
-                        and (nd[N_TAG_LC] or "").split(":")[-1] == tag):
-                    return b.text_content(c).strip()
-        return None
 
-    for pdf in batches:
-        if len(pdf) == 0:
-            continue
-        rows = {k: [] for k in ("sitemap_url", "kind", "loc", "lastmod",
-                                "changefreq", "priority")}
-        for su, raw in zip(pdf["sitemap_url"].tolist(),
-                           pdf["xml"].tolist()):
-            text_src, _, _ = decode_page_bytes(bytes(raw or b""))
-            b = parse(text_src, positions=False).dom
-            # flat-array walk with namespace-prefix strip (selector
-            # matching is exact-tag; sitemap files are often <sm:url>)
-            by_tag = {"url": [], "sitemap": []}
-            for i, nd in enumerate(b.nodes):
-                if nd[N_KIND] == ELEMENT:
-                    t = (nd[N_TAG_LC] or "").split(":")[-1]
-                    if t in by_tag:
-                        by_tag[t].append(i)
-            for kind, entry_tag in (("url", "url"), ("sitemap", "sitemap")):
-                for e in by_tag[entry_tag]:
-                    loc = child_text(b, e, "loc")
-                    if not loc:
-                        continue
-                    rows["sitemap_url"].append(su)
-                    rows["kind"].append(kind)
-                    rows["loc"].append(loc)
-                    rows["lastmod"].append(child_text(b, e, "lastmod"))
-                    rows["changefreq"].append(child_text(b, e, "changefreq"))
-                    rows["priority"].append(child_text(b, e, "priority"))
-        yield pd.DataFrame(rows)
+def _sitemap_rows(raw, parsed):
+    """(kind, loc, lastmod, changefreq, priority) per <url>/<sitemap>
+    entry of one sitemap, parsed with the engine's own
+    (xml-mode-capable) parser."""
+    b = parsed[0].dom
+    # flat-array walk with namespace-prefix strip (selector matching is
+    # exact-tag)
+    by_tag = {"url": [], "sitemap": []}
+    for i, nd in enumerate(b.nodes):
+        if nd[N_KIND] == ELEMENT:
+            t = (nd[N_TAG_LC] or "").split(":")[-1]
+            if t in by_tag:
+                by_tag[t].append(i)
+    for kind in ("url", "sitemap"):
+        for e in by_tag[kind]:
+            loc = _child_text(b, e, "loc")
+            if loc:
+                yield (kind, loc, _child_text(b, e, "lastmod"),
+                       _child_text(b, e, "changefreq"),
+                       _child_text(b, e, "priority"))
 
 
 def parse_sitemaps(sitemaps: DataFrame) -> DataFrame:
@@ -274,12 +268,11 @@ def parse_sitemaps(sitemaps: DataFrame) -> DataFrame:
     NULL; the date/priority casts are JVM-side ``try`` casts so one
     malformed entry never kills the scan. Map-side only (mapInPandas),
     no shuffle."""
-    from pyspark.sql.types import StringType, StructField, StructType
     schema = StructType([StructField(c, StringType()) for c in
                          ("sitemap_url", "kind", "loc", "lastmod",
                           "changefreq", "priority")])
-    out = (sitemaps.select("sitemap_url", "xml")
-           .mapInPandas(_sitemap_kernel, schema))
+    kernel = _page_kernel(schema, _sitemap_rows, "sitemap_url", "xml")
+    out = sitemaps.select("sitemap_url", "xml").mapInPandas(kernel, schema)
     return out.select(
         "sitemap_url", "kind", "loc",
         F.try_to_timestamp(F.substring("lastmod", 1, 10),
@@ -328,109 +321,71 @@ def plan_frontier(cands: DataFrame, rules: DataFrame, delays: DataFrame,
             .withColumnRenamed("_host", "host"))
 
 
-@gc_paused
-def _feed_kernel(batches):
-    """pandas batches (feed_url, xml) -> one row per RSS <item> /
-    Atom <entry>, dates normalized to epoch seconds in the kernel
-    (RFC 822 via email.utils for RSS, ISO-8601 for Atom — both C-level
-    stdlib parsers; malformed dates yield NULL)."""
-    import datetime as _dt
-    from email.utils import parsedate_to_datetime
-
-    import pandas as pd
-
-    from .dom import ELEMENT, N_CHILDREN, N_CONTENT, N_KIND, N_TAG_LC, TEXT
-    from .kernel import decode_page_bytes
-    from .parser import parse
-
-    def child(b, node, tag):
-        for c in b.nodes[node][N_CHILDREN] or []:
-            if isinstance(c, int):
-                nd = b.nodes[c]
-                if (nd[N_KIND] == ELEMENT
-                        and (nd[N_TAG_LC] or "").split(":")[-1] == tag):
-                    return c
+def _rss_epoch(s):
+    try:
+        return int(parsedate_to_datetime(s).timestamp())
+    except (TypeError, ValueError):
         return None
 
-    def text_of(b, node, tag):
-        c = child(b, node, tag)
-        return b.text_content(c).strip() if c is not None else None
 
-    def rss_epoch(s):
-        try:
-            return int(parsedate_to_datetime(s).timestamp())
-        except (TypeError, ValueError):
-            return None
+def _atom_epoch(s):
+    try:
+        return int(_dt.datetime.fromisoformat(
+            s.replace("Z", "+00:00")).timestamp())
+    except (TypeError, ValueError, AttributeError):
+        return None
 
-    def atom_epoch(s):
-        try:
-            return int(_dt.datetime.fromisoformat(
-                s.replace("Z", "+00:00")).timestamp())
-        except (TypeError, ValueError, AttributeError):
-            return None
 
-    for pdf in batches:
-        if len(pdf) == 0:
+def _feed_rows(raw, parsed):
+    """(feed_kind, title, link, pub_epoch) per RSS <item> / Atom <entry>
+    of one feed, dates normalized to epoch seconds (RFC 822 via
+    email.utils for RSS, ISO-8601 for Atom — both C-level stdlib
+    parsers; malformed dates yield NULL)."""
+    b = parsed[0].dom
+    kind = None
+    for i, nd in enumerate(b.nodes):
+        if nd[N_KIND] == ELEMENT:
+            t = (nd[N_TAG_LC] or "").split(":")[-1]
+            if t == "rss":
+                kind = "rss"
+                break
+            if t == "feed":
+                kind = "atom"
+                break
+    if kind is None:
+        return
+    entry_tag = "item" if kind == "rss" else "entry"
+    for i, nd in enumerate(b.nodes):
+        if nd[N_KIND] != ELEMENT:
             continue
-        rows = {k: [] for k in ("feed_url", "feed_kind", "title", "link",
-                                "pub_epoch")}
-        for fu, raw in zip(pdf["feed_url"].tolist(), pdf["xml"].tolist()):
-            text_src, _, _ = decode_page_bytes(bytes(raw or b""))
-            b = parse(text_src, positions=False).dom
-            kind = None
-            for i, nd in enumerate(b.nodes):
-                if nd[N_KIND] == ELEMENT:
-                    t = (nd[N_TAG_LC] or "").split(":")[-1]
-                    if t == "rss":
-                        kind = "rss"
-                        break
-                    if t == "feed":
-                        kind = "atom"
-                        break
-            if kind is None:
-                continue
-            entry_tag = "item" if kind == "rss" else "entry"
-            for i, nd in enumerate(b.nodes):
-                if nd[N_KIND] != ELEMENT:
-                    continue
-                if (nd[N_TAG_LC] or "").split(":")[-1] != entry_tag:
-                    continue
-                if kind == "rss":
-                    # in the forgiving HTML grammar <link> is VOID, so
-                    # the url ends up in the NEXT sibling text node
-                    link = text_of(b, i, "link") or None
-                    if link is None:
-                        kids = b.nodes[i][N_CHILDREN] or []
-                        for ki, c in enumerate(kids):
-                            nd2 = b.nodes[c] if isinstance(c, int) else None
-                            if (nd2 is not None and nd2[N_KIND] == ELEMENT
-                                    and (nd2[N_TAG_LC] or "")
-                                    .split(":")[-1] == "link"):
-                                for c2 in kids[ki + 1:]:
-                                    if isinstance(c2, int) and \
-                                            b.nodes[c2][N_KIND] == TEXT:
-                                        link = (b.nodes[c2][N_CONTENT]
-                                                or "").strip() or None
-                                        break
+        if (nd[N_TAG_LC] or "").split(":")[-1] != entry_tag:
+            continue
+        if kind == "rss":
+            # in the forgiving HTML grammar <link> is VOID, so
+            # the url ends up in the NEXT sibling text node
+            link = _child_text(b, i, "link") or None
+            if link is None:
+                kids = b.nodes[i][N_CHILDREN] or []
+                for ki, c in enumerate(kids):
+                    nd2 = b.nodes[c] if isinstance(c, int) else None
+                    if (nd2 is not None and nd2[N_KIND] == ELEMENT
+                            and (nd2[N_TAG_LC] or "")
+                            .split(":")[-1] == "link"):
+                        for c2 in kids[ki + 1:]:
+                            if isinstance(c2, int) and \
+                                    b.nodes[c2][N_KIND] == TEXT:
+                                link = (b.nodes[c2][N_CONTENT]
+                                        or "").strip() or None
                                 break
-                    epoch = rss_epoch(text_of(b, i, "pubDate")
-                                      or text_of(b, i, "pubdate"))
-                else:
-                    lc = child(b, i, "link")
-                    link = (_attrs_ci_mod(b, lc).get("href")
-                            if lc is not None else None)
-                    epoch = atom_epoch(text_of(b, i, "updated"))
-                rows["feed_url"].append(fu)
-                rows["feed_kind"].append(kind)
-                rows["title"].append(text_of(b, i, "title"))
-                rows["link"].append(link)
-                rows["pub_epoch"].append(epoch)
-        yield pd.DataFrame(rows)
-
-
-def _attrs_ci_mod(b, node):
-    from .kernel import _attrs_ci
-    return _attrs_ci(b, node)
+                        break
+            epoch = _rss_epoch(_child_text(b, i, "pubDate")
+                               or _child_text(b, i, "pubdate"))
+        else:
+            lc = _child(b, i, "link")
+            link = (_attrs_ci(b, lc).get("href")
+                    if lc is not None else None)
+            epoch = _atom_epoch(_child_text(b, i, "updated"))
+        yield (kind, _child_text(b, i, "title"), link, epoch)
 
 
 def parse_feeds(feeds: DataFrame) -> DataFrame:
@@ -438,9 +393,6 @@ def parse_feeds(feeds: DataFrame) -> DataFrame:
     discovery channel next to sitemaps — into one typed row per item:
     (feed_url, feed_kind, title, link, pub_epoch). Namespace-prefix
     tolerant; malformed dates are NULL; map-side only."""
-    from pyspark.sql.types import (
-        LongType, StringType, StructField, StructType,
-    )
     schema = StructType([
         StructField("feed_url", StringType()),
         StructField("feed_kind", StringType()),
@@ -448,45 +400,28 @@ def parse_feeds(feeds: DataFrame) -> DataFrame:
         StructField("link", StringType()),
         StructField("pub_epoch", LongType()),
     ])
-    return (feeds.select("feed_url", "xml")
-            .mapInPandas(_feed_kernel, schema))
+    kernel = _page_kernel(schema, _feed_rows, "feed_url", "xml")
+    return feeds.select("feed_url", "xml").mapInPandas(kernel, schema)
 
 
-@gc_paused
-def _discover_feeds_kernel(batches):
-    """pandas batches (url, html) -> one row per declared feed:
+_FEED_MIMES = {"application/rss+xml": "rss", "application/atom+xml": "atom"}
+
+
+def _feed_link_rows(raw, parsed):
+    """(feed_href, feed_kind, feed_title) per declared feed of one page:
     ``<link rel="alternate">`` whose type is a feed mime — the way
     browsers and crawlers find a site's RSS/Atom feeds. rel matching
     is token-based case-insensitive; href-less links drop."""
-    import pandas as pd
-
-    from .dom import ELEMENT, N_KIND, N_TAG_LC
-    from .kernel import _attrs_ci, decode_page_bytes
-    from .parser import parse
-
-    mimes = {"application/rss+xml": "rss", "application/atom+xml": "atom"}
-    for pdf in batches:
-        if len(pdf) == 0:
+    b = parsed[0].dom
+    for i, nd in enumerate(b.nodes):
+        if nd[N_KIND] != ELEMENT or nd[N_TAG_LC] != "link":
             continue
-        rows = {k: [] for k in ("url", "feed_href", "feed_kind",
-                                "feed_title")}
-        for url, raw in zip(pdf["url"].tolist(), pdf["html"].tolist()):
-            text_src, _, _ = decode_page_bytes(bytes(raw or b""))
-            b = parse(text_src, positions=False).dom
-            for i, nd in enumerate(b.nodes):
-                if nd[N_KIND] != ELEMENT or nd[N_TAG_LC] != "link":
-                    continue
-                attrs = _attrs_ci(b, i)
-                rel = (attrs.get("rel") or "").lower().split()
-                kind = mimes.get((attrs.get("type") or "").strip().lower())
-                href = attrs.get("href")
-                if "alternate" not in rel or kind is None or not href:
-                    continue
-                rows["url"].append(url)
-                rows["feed_href"].append(href)
-                rows["feed_kind"].append(kind)
-                rows["feed_title"].append(attrs.get("title"))
-        yield pd.DataFrame(rows)
+        attrs = _attrs_ci(b, i)
+        rel = (attrs.get("rel") or "").lower().split()
+        kind = _FEED_MIMES.get((attrs.get("type") or "").strip().lower())
+        href = attrs.get("href")
+        if "alternate" in rel and kind is not None and href:
+            yield (href, kind, attrs.get("title"))
 
 
 def discover_feeds(pages: DataFrame) -> DataFrame:
@@ -494,12 +429,11 @@ def discover_feeds(pages: DataFrame) -> DataFrame:
     RSS/Atom ``<link rel="alternate">`` — (url, feed_href, feed_kind,
     feed_title). Map-side only; resolve feed_href against url with
     graph.resolve_href downstream."""
-    from pyspark.sql.types import StringType, StructField, StructType
     schema = StructType([
         StructField("url", StringType()),
         StructField("feed_href", StringType()),
         StructField("feed_kind", StringType()),
         StructField("feed_title", StringType()),
     ])
-    return (pages.select("url", "html")
-            .mapInPandas(_discover_feeds_kernel, schema))
+    kernel = _page_kernel(schema, _feed_link_rows)
+    return pages.select("url", "html").mapInPandas(kernel, schema)

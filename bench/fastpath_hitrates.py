@@ -1,17 +1,33 @@
 #!/usr/bin/env python3
-"""Count parser fast-path hit rates over corpus docs (round-8 evidence:
-~64% of start tags are attribute-less, ~97% of the rest single-attribute,
-end tags ~100% simple).  Usage: python bench/fastpath_hitrates.py [ndocs]
+"""Count parser fast-path hit rates.
+
+Every fused regex in ``fortissimo_spark.parser`` is wrapped in a counter
+(``parse()`` binds them from the module globals on each call), then the
+pages go through ``decode_parse`` exactly as the page kernels call it.
+
+Usage: python bench/fastpath_hitrates.py [ndocs] [--workload NAME]
+
+Without ``--workload`` the pages are the first ndocs bench-corpus docs
+(``.bench_scratch/pages_sf0.1_x20/``); with it, a perfbench workload's
+generated pages (``crawl_agg``, ``tag_soup``, seed 1).
 """
+import argparse
 import glob
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 import pyarrow.parquet as pq  # noqa: E402
 
 import fortissimo_spark.parser as P  # noqa: E402
+from fortissimo_spark.kernel import decode_parse  # noqa: E402
 
-NDOCS = int(sys.argv[1]) if len(sys.argv) > 1 else 10000
+ap = argparse.ArgumentParser()
+ap.add_argument("ndocs", nargs="?", type=int, default=10000)
+ap.add_argument("--workload", choices=("crawl_agg", "tag_soup"))
+opts = ap.parse_args()
+NDOCS, WORKLOAD = opts.ndocs, opts.workload
 
 
 class Counter:
@@ -30,24 +46,29 @@ class Counter:
 
 
 counters = {}
-for name in ("_RE_STAG_SIMPLE", "_RE_STAG_ONEATTR", "_RE_ATTR_FAST",
-             "_RE_TAG_CLOSE", "_RE_END_FAST"):
+for name in ("_RE_STAG_FAST", "_RE_ATTR_FAST", "_RE_TAG_CLOSE",
+             "_RE_END_FAST"):
     c = Counter(getattr(P, name).match)
     counters[name] = c
     setattr(P, name, type("X", (), {"match": staticmethod(c)}))
 
-from fortissimo_spark.kernel import decode_parse  # noqa: E402
-
-raws = []
-for f in sorted(glob.glob("/root/repo/.bench_scratch/pages_sf0.1_x20/*.parquet")):
-    t = pq.read_table(f, columns=["html"])
-    raws.extend(t.column("html").to_pylist())
-    if len(raws) >= NDOCS:
-        break
-for raw in raws[:NDOCS]:
+if WORKLOAD:
+    from perfbench.inputs import generate  # noqa: E402
+    raws = generate(WORKLOAD, 1).rows["html"]
+else:
+    raws = []
+    for f in sorted(glob.glob(os.path.join(
+            ROOT, ".bench_scratch/pages_sf0.1_x20/*.parquet"))):
+        raws.extend(pq.read_table(f, columns=["html"]).column("html")
+                    .to_pylist())
+        if len(raws) >= NDOCS:
+            break
+raws = raws[:NDOCS]
+for raw in raws:
     decode_parse(bytes(raw or b""))
 
+print(f"{len(raws)} pages ({WORKLOAD or 'bench corpus'})")
 for name, c in counters.items():
     tot = c.hit + c.miss
-    print(f"{name:16s} hit {c.hit:8d}  miss {c.miss:8d}"
+    print(f"{name:14s} hit {c.hit:8d}  miss {c.miss:8d}"
           f"  ({100 * c.hit / max(tot, 1):.1f}% hit)")

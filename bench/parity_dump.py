@@ -16,10 +16,11 @@ after the Arrow conversion Spark applies (``to_arrow_schema`` of the
 kernel's output schema).  A check prints the label of every mismatching
 snapshot.
 
-The script imports ``fortissimo_spark`` from the checkout it sits in, so a
-parent-code reference is made by copying this file into a parent checkout
-(with ``.bench_scratch`` linked in for the corpus half) and running dump
-there.
+The adversarial fixtures live in ``tests/parser_fixtures.py`` (shared with
+the fast-path differential test).  The script imports ``fortissimo_spark``
+from the checkout it sits in, so a parent-code reference is made by copying
+this file and ``tests/parser_fixtures.py`` into a parent checkout (with
+``.bench_scratch`` linked in for the corpus half) and running dump there.
 """
 import glob
 import os
@@ -41,39 +42,11 @@ from fortissimo_spark import graph, kernel, robots  # noqa: E402
 from fortissimo_spark.kernel import process_document, decode_page_bytes  # noqa: E402
 from fortissimo_spark.parser import parse  # noqa: E402
 from fortissimo_spark.schema import EXTRACT_SCHEMA, NODES_SCHEMA  # noqa: E402
+from tests.parser_fixtures import FIXTURES  # noqa: E402
 
 MODE = sys.argv[1]
 PATH = sys.argv[2]
 NDOCS = int(sys.argv[3]) if len(sys.argv) > 3 else 20000
-
-# adversarial fixtures: every parser edge the fast paths touch
-FIXTURES = [
-    "<div>", "<div >", "<div/>", "<div />", "<br>", "<input disabled>",
-    "<a b>", "<a b >", "<a b=1>", "<a b = 1 >", "<a b='x'>", '<a b="x">',
-    '<a b="x y > z">', "<a b='x\ny'>", "<a b=>", "<a b= >", "<a b==c>",
-    "<a b=1/>", "<a b=1/ >", "<a b=//>", "<a =x>", "<a = >", "<a / b>",
-    "<a //>", "<a b/c>", "<a b=c=d>", '<a "b">', "<a 'b'=c>",
-    "<a b=\"unterminated", "<a b='unterminated", "<a b=\"x", "<a b='",
-    "<a b", "<a b ", "<a b=", "<a b= ", "<a b=c", "<a b=c ", "<a ", "<a",
-    "<a\U00010000>", "<a \U00010000 b=1>", "<a b\U00010001c=1>",
-    "<a b=\U00010000x>", "<a b = \U00010000 >", "text<a b=1>more</a>end",
-    "</div>", "</div >", "</ div>", "</div x>", "</>", "</", "</ ", "</x",
-    "</x ", "<//x>", "</x/y>", "</-x>", "</x\U00010000>", "</x \t\n>",
-    "<!-- comment -->", "<!-- x --->", "<!-- x ---->", "<!--->", "<!-- x",
-    "<!doctype html>", "<!DOCTYPE html PUBLIC 'x'>", "<!decl>", "<!>",
-    "<?pi?>", "<?xml version='1.0'?><root/>", "<? >",
-    "<script>if (a<b) x();</script>", "<script>var s='</scr'+'ipt>';</script>",
-    "<style>a>b{}</style>", "<textarea>&amp;<</textarea>",
-    "<script>unterminated", "<svg><![CDATA[x]]></svg>", "<svg><![CDATA[x",
-    "<table><td>x</td></table>", "<p>a<p>b", "<b><i>x</b></i>",
-    "<ul><li>a<li>b</ul>", "<b><td></b>", "<meta charset='latin-1'>x",
-    "<meta http-equiv='content-type' content='text/html; charset=utf-8'>",
-    "<html lang=en><body><h1>T</h1><p>para one with enough text here</p>",
-    "< notag>", "<<p>>", "a < b > c", "&amp; &lt; &#65; &#x41; &unknown;",
-    "plain text only", "", " ", "\n\n", "x", "<",  "<a b=c d='e' f=\"g\" h>",
-    "<a b='x' c>text</a>", "﻿bom text", "<div\U00010000attr=1>",
-    '<a b="x"c="y">', "<a b='x'c='y'>",
-]
 
 # UTF-8 bytes declaring windows-1252: decode_parse re-decodes them as
 # cp1252, so every kernel on that front end sees the same (mojibake) text

@@ -247,34 +247,6 @@ class DocBuilder:
         ])
         return idx
 
-    # --- fused hot-path constructors (parser-only; semantics identical to
-    # new_element+pre_push+add_child+push / new_leaf+add_child) -------------
-
-    def open_element(self, tag: str, line: int, col: int,
-                     case_sensitive: bool = False, src_start: int = -1) -> int:
-        nodes = self.nodes
-        idx = len(nodes)
-        tag_lc = tag if case_sensitive else tag.lower()
-        nodes.append([
-            ELEMENT, tag, tag_lc, -1, [],
-            UNCLOSED, None, True, False, line, col, "", 0, 0,
-            [], [], [], [], [], "", None, False, src_start, -1,
-        ])
-        stack = self.open_stack
-        if not self.xml_mode:
-            closers = OPEN_IMPLIES_CLOSE.get(tag_lc)
-            if closers:
-                while nodes[stack[-1]][N_TAG_LC] in closers:
-                    nodes[stack[-1]][N_CLOSURE] = IMPLICITLY_CLOSED
-                    stack.pop()
-        cur = stack[-1]
-        nodes[idx][N_PARENT] = cur
-        nodes[cur][N_CHILDREN].append(idx)
-        stack.append(idx)
-        if tag_lc == "math" or tag_lc == "svg":
-            self.in_math_or_svg += 1
-        return idx
-
     def add_leaf(self, kind: int, content: str, line: int, col: int,
                  terminated: bool = True, poss_ent: bool = False,
                  src_start: int = -1, src_end: int = -1) -> int:
@@ -321,9 +293,6 @@ class DocBuilder:
         nd[N_ATTR_EQUALS].append(equals)
         nd[N_ATTR_QUOTES].append(quote)
 
-    def add_inner_whitespace(self, ws: str) -> None:
-        self.nodes[self.open_stack[-1]][N_INNER_WS] = ws or ""
-
     def can_do_xml_mode(self) -> bool:
         root_children = self.nodes[0][N_CHILDREN]
         return (len(self.open_stack) == 1 and len(root_children) == 0) or (
@@ -334,21 +303,6 @@ class DocBuilder:
         cur = self.open_stack[-1]
         self.nodes[child][N_PARENT] = cur
         self.nodes[cur][N_CHILDREN].append(child)
-
-    def pre_push(self, node: int) -> None:
-        nodes = self.nodes
-        tag_lc = nodes[node][N_TAG_LC]
-        if not self.xml_mode and tag_lc in OPEN_IMPLIES_CLOSE:
-            closers = OPEN_IMPLIES_CLOSE[tag_lc]
-            stack = self.open_stack
-            while nodes[stack[-1]][N_TAG_LC] in closers:
-                nodes[stack[-1]][N_CLOSURE] = IMPLICITLY_CLOSED
-                stack.pop()
-
-    def push(self, node: int) -> None:
-        self.open_stack.append(node)
-        if self.nodes[node][N_TAG_LC] in ("math", "svg"):
-            self.in_math_or_svg += 1
 
     def pop(self, tag_lc, end_tag_text: str | None = None,
             line: int = 0, col: int = 0, end_pos: int = -1) -> bool:

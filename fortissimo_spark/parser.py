@@ -29,6 +29,18 @@ Replicated reference quirks (cites into the reference source):
   does, html-parser.ts:801).
 * html-parser.ts:1140-1147 — CDATA is recognized only when ``[CDATA[`` is
   complete *and* at least one more char follows before EOF.
+
+Fast-path contract.  In HTML mode four fused regexes read the common tag
+shapes in one match each: ``_RE_STAG_FAST`` (a whole start tag with zero or
+one attribute), ``_RE_ATTR_FAST`` (one attribute), ``_RE_TAG_CLOSE`` (the
+end of a start tag) and ``_RE_END_FAST`` (a simple end tag).  Every group
+of every one of them has exactly one reading.  A shape they cannot read
+that way does not match, and goes to the general state machine, which is
+the reference: for any input, a fast path must build exactly what the
+general machine would.  There is no switch for this.  ``parse()`` binds the
+four regexes from the module globals on every call, so
+``tests/test_parser_fastpaths.py`` replaces any of them with a regex that
+never matches and checks that the parse does not change.
 """
 
 from __future__ import annotations
@@ -75,8 +87,8 @@ _RE_CHARSET_IN_CONTENT = re.compile(r"\bcharset[ \n\r\t\f]*=[ \n\r\t\f]*([\w-]+)
 
 _RAW_TEXT_TAGS = ("script", "style", "textarea")
 
-# --- fused fast-path regexes (HTML mode only; any non-match falls back to
-# the general state machine, so these can only ever agree with it) ---------
+# --- fused fast-path regexes (HTML mode only; see the module docstring for
+# the contract they keep with the general state machine) --------------------
 # tag whitespace incl. the astral-chars-as-whitespace quirk
 _TAG_WS = r"[ \t\n\f\r\U00010000-\U0010ffff]"
 # end of a start tag: optional PLAIN whitespace then '>' or '/>' (astral ws
@@ -89,32 +101,32 @@ _RE_END_FAST = re.compile(
 # one whole attribute in a single match:
 #   1 leading ws, 2 name, 3 ws-before-'=', 4 ws-after-'=', 5 raw value
 # (groups 3-5 are None for a valueless attribute).  The quoted alternatives
-# span '>' and newlines exactly like the find(quote) scan; an unterminated
-# quote falls through to the unquoted class and is detected by its first
-# char.  Name: first char can't be astral (same gatherer argument), the rest
-# mirrors _RE_ATTR_LOOSE.
+# span '>' and newlines exactly like the find(quote) scan.  An unterminated
+# quote falls through to the unquoted class and an empty value matches only
+# before '>' or EOF; the use site hands both to the general machine.  Name:
+# first char can't be astral (same gatherer argument), the rest mirrors
+# _RE_ATTR_LOOSE.
 _RE_ATTR_FAST = re.compile(
     "(" + _TAG_WS + "*)"
     r"([^ \t\n\f\r>/=\U00010000-\U0010ffff][^ \t\n\f\r>/=]*)"
     "(?:(" + _TAG_WS + "*)=(" + _TAG_WS + "*)"
     "(\"[^\"]*\"|'[^']*'|[^ \t\n\f\r>]*))?")
-# whole attribute-less start tag '<name [plain-ws] [/] >' in one match,
-# applied at k+1 (the first char is already known to be in
-# _MARKUP_START_SET and not '/', '!' or '?')
-_RE_STAG_SIMPLE = re.compile(r"([^ \n\r\t\f/>]+)([ \t\n\f\r]*)(/?)>")
-# whole SINGLE-attribute start tag in one match (97% of attribute-bearing
-# tags in a web corpus have exactly one).  Groups: 1 tag name, 2 leading
-# ws, 3 attr name, 4/5 ws around '=', 6 raw value, 7 close ws, 8 slash.
-# Whitespace classes are PLAIN here — any astral-ws shape fails the match
-# and takes the general machine.  Values starting with an unmatched quote
-# and 'value ends with /' + more-tag shapes bail to the general machine
-# (see the ok checks at the use site).
-_RE_STAG_ONEATTR = re.compile(
+# a whole start tag with zero or one attribute, applied at k+1 (the first
+# char is already known to be in _MARKUP_START_SET and not '/', '!' or '?').
+# Groups: 1 tag name; 2 leading ws, 3 attribute name, 4/5 ws around '=',
+# 6 double-quoted, 7 single-quoted, 8 unquoted value; 9 close ws, 10 slash.
+# A quoted value must be followed by the tag close.  An unquoted value never
+# starts with a quote or an astral char and never ends in '/' (the general
+# machine strips that slash), so '<a b=1/>' reads value '1' and self-closes
+# while '<a b=1/ >' and '<a b=//>' miss.  Whitespace is plain: astral
+# whitespace misses.
+_RE_STAG_FAST = re.compile(
     r"([^ \n\r\t\f/>]+)"
-    r"([ \t\n\f\r]+)"
+    r"(?:([ \t\n\f\r]+)"
     r"([^ \t\n\f\r>/=\U00010000-\U0010ffff][^ \t\n\f\r>/=]*)"
     r"(?:([ \t\n\f\r]*)=([ \t\n\f\r]*)"
-    r"(\"[^\"]*\"|'[^']*'|[^ \t\n\f\r>]*))?"
+    r"(?:\"([^\"]*)\"|'([^']*)'"
+    r"|([^ \t\n\f\r>\"'\U00010000-\U0010ffff][^ \t\n\f\r>]*(?<!/))))?)?"
     r"([ \t\n\f\r]*)(/?)>")
 # a char that is neither HTML whitespace nor astral (the wrap-up
 # trailing-text check: C-level search instead of a per-char Python loop)
@@ -272,14 +284,13 @@ def parse(source: str, *, empty_end_tag: bool = True, eol="\n", tab_size: int = 
     nodes = b.nodes
     stack = b.open_stack  # never rebound by DocBuilder (in-place ops only)
     add_leaf = b.add_leaf
-    open_element = b.open_element
     pop = b.pop
     add_attribute = b.add_attribute
+    # bound from the module globals on every call (see module docstring)
+    stag_fast = _RE_STAG_FAST.match
     attr_fast = _RE_ATTR_FAST.match
     tag_close = _RE_TAG_CLOSE.match
     end_fast = _RE_END_FAST.match
-    stag_simple = _RE_STAG_SIMPLE.match
-    stag_oneattr = _RE_STAG_ONEATTR.match
     errors = 0
     charset: str | None = None
     checking_charset = False
@@ -406,7 +417,6 @@ def parse(source: str, *, empty_end_tag: bool = True, eol="\n", tab_size: int = 
             tag_lc = tag if xml else tag.lower()
 
             i2 = ws_end(tag_end)
-            ws2 = t[tag_end:i2]
             if i2 >= n:
                 errors += 1
                 ln, col = lc(n - 1) if lc else _NO_POS
@@ -572,274 +582,105 @@ def parse(source: str, *, empty_end_tag: bool = True, eol="\n", tab_size: int = 
                 b.xml_mode = True
             continue
 
-        # ---- start tag ----
-        om = None
-        sm = stag_simple(t, k + 1) if not xml else None
-        if sm is None and not xml:
-            om = stag_oneattr(t, k + 1)
-            if om is not None:
-                (tag, w1, aname, g4, g5, val, w7,
-                 slash) = om.group(1, 2, 3, 4, 5, 6, 7, 8)
-                equals = ""
-                quote = ""
-                inner_ws = w7
-                value = val
-                if g4 is None:
-                    value = ""  # valueless attribute
-                elif val:
-                    q0 = val[0]
-                    if q0 > "￿":
-                        # astral char at value start: the general machine
-                        # treats it as post-'=' whitespace
-                        om = None
-                    elif q0 == '"' or q0 == "'":
-                        if (len(val) >= 2 and val[-1] == q0
-                                and q0 not in val[1:-1]):
-                            value = val[1:-1]
-                            quote = q0
-                            equals = g4 + "=" + g5
-                        else:
-                            # quote closes later/never, or the unquoted
-                            # class re-matched '"x"c="y"' past the close
-                            om = None
-                    elif val[-1] == "/":
-                        if not w7 and not slash:
-                            # '<a b=1/>': trim one slash, self-close
-                            value = val[:-1]
-                            slash = "/"
-                            equals = g4 + "=" + g5
-                        else:
-                            om = None  # '<a b=1/ >': stray-slash semantics
-                    else:
-                        equals = g4 + "=" + g5
-                else:
-                    # '=' then '>': valueless-with-equals, '='-ws is inner
-                    equals = g4 + "="
-                    inner_ws = g5
+        # ---- start tag: one node-construction block for every shape ----
+        sm = stag_fast(t, k + 1) if not xml else None
         if sm is not None:
-            # fused fast path: attribute-less tag, name + inner ws + close
-            # in one match (the general path below is byte-for-byte
-            # equivalent for these shapes).  The charset-sniff state resets
-            # MUST still happen: an intervening attr-less tag clears a
-            # pending charset exactly like any other start tag.
-            content_type = False
-            pending_charset = None
-            tag, inner_ws, slash = sm.group(1, 2, 3)
-            tag_lc = tag.lower()
-            tag_end_kind = "/>" if slash else ">"
+            (tag, w, name, pre_eq, w3, dq, sq, uq, inner_ws,
+             slash) = sm.groups()
             i = sm.end()
-            node = len(nodes)
-            nd = [ELEMENT, tag, tag_lc, -1, [], UNCLOSED, None, True, False,
-                  mk_ln, mk_col, "", 0, 0, [], [], [], [], [], inner_ws,
-                  None, False, k, -1]
-            nodes.append(nd)
-            closers = OPEN_IMPLIES_CLOSE.get(tag_lc)
-            if closers:
-                while nodes[stack[-1]][N_TAG_LC] in closers:
-                    nodes[stack[-1]][N_CLOSURE] = IMPLICITLY_CLOSED
-                    stack.pop()
-            cur = stack[-1]
-            nd[N_PARENT] = cur
-            nodes[cur][N_CHILDREN].append(node)
-            stack.append(node)
-            if tag_lc == "math" or tag_lc == "svg":
-                b.in_math_or_svg += 1
-        elif om is not None:
-            # fused single-attribute start tag (attr lists built in place)
-            content_type = False
-            pending_charset = None
-            tag_lc = tag.lower()
-            tag_end_kind = "/>" if slash else ">"
-            i = om.end()
-            node = len(nodes)
-            nd = [ELEMENT, tag, tag_lc, -1, [], UNCLOSED, None, True, False,
-                  mk_ln, mk_col, "", 0, 0, [aname], [value], [w1], [equals],
-                  [quote], inner_ws, None, False, k, -1]
-            nodes.append(nd)
-            closers = OPEN_IMPLIES_CLOSE.get(tag_lc)
-            if closers:
-                while nodes[stack[-1]][N_TAG_LC] in closers:
-                    nodes[stack[-1]][N_CLOSURE] = IMPLICITLY_CLOSED
-                    stack.pop()
-            cur = stack[-1]
-            nd[N_PARENT] = cur
-            nodes[cur][N_CHILDREN].append(node)
-            stack.append(node)
-            if tag_lc == "math" or tag_lc == "svg":
-                b.in_math_or_svg += 1
-            if g4 is not None and val and not charset and tag_lc == "meta":
-                # stepTwo runs only for VALUED attributes
-                check_charset(aname, value)
         else:
             m = (_RE_TAG_STRICT if xml else _RE_TAG_LOOSE).match(t, k + 2)
             tag = c2 + m.group(0)
-            tag_end = m.end()
-            tag_lc = tag if xml else tag.lower()
+            i = m.end()
+        tag_lc = tag if xml else tag.lower()
+        node = len(nodes)
+        nd = [ELEMENT, tag, tag_lc, -1, [], UNCLOSED, None, True, False,
+              mk_ln, mk_col, "", 0, 0, [], [], [], [], [], "", None,
+              False, k, -1]
+        nodes.append(nd)
+        if not xml:
+            closers = OPEN_IMPLIES_CLOSE.get(tag_lc)
+            if closers:
+                while nodes[stack[-1]][N_TAG_LC] in closers:
+                    nodes[stack[-1]][N_CLOSURE] = IMPLICITLY_CLOSED
+                    stack.pop()
+        cur = stack[-1]
+        nd[N_PARENT] = cur
+        nodes[cur][N_CHILDREN].append(node)
+        stack.append(node)
+        if tag_lc == "math" or tag_lc == "svg":
+            b.in_math_or_svg += 1
 
-            # inline of DocBuilder.open_element
-            node = len(nodes)
-            nd = [ELEMENT, tag, tag_lc, -1, [], UNCLOSED, None, True, False,
-                  mk_ln, mk_col, "", 0, 0, [], [], [], [], [], "", None,
-                  False, k, -1]
-            nodes.append(nd)
-            if not xml:
-                closers = OPEN_IMPLIES_CLOSE.get(tag_lc)
-                if closers:
-                    while nodes[stack[-1]][N_TAG_LC] in closers:
-                        nodes[stack[-1]][N_CLOSURE] = IMPLICITLY_CLOSED
-                        stack.pop()
-            cur = stack[-1]
-            nd[N_PARENT] = cur
-            nodes[cur][N_CHILDREN].append(node)
-            stack.append(node)
-            if tag_lc == "math" or tag_lc == "svg":
-                b.in_math_or_svg += 1
+        # every start tag resets the meta-charset two-step, attr-less too
+        checking_charset = (not charset) and tag_lc == "meta"
+        content_type = False
+        pending_charset = None
+        tag_end_kind = None  # '>', '/>', 'eof', 'bad'
 
-            checking_charset = (not charset) and tag_lc == "meta"
-            content_type = False
-            pending_charset: str | None = None
-
-            i = tag_end
-            tag_end_kind = None  # '>', '/>', 'eof', 'bad'
-
-            html_fast = not xml
-        if sm is None and om is None and html_fast:
+        if sm is not None:
+            # the fused tag's one attribute, if any
+            if name is not None:
+                if pre_eq is None:
+                    value = equals = quote = ""
+                else:
+                    equals = pre_eq + "=" + w3
+                    if dq is not None:
+                        value, quote = dq, '"'
+                    elif sq is not None:
+                        value, quote = sq, "'"
+                    else:
+                        value, quote = uq, ""
+                    if checking_charset:
+                        check_charset(name, value)
+                nd[14].append(name); nd[15].append(value)
+                nd[16].append(w); nd[17].append(equals); nd[18].append(quote)
+            nd[N_INNER_WS] = inner_ws
+            tag_end_kind = "/>" if slash else ">"
+        elif not xml:
             # ---- fused HTML attribute loop: one regex match per attribute,
-            # one per tag close; every non-matching shape falls through to
-            # the inline fallback, which replicates the general machine ----
+            # one per tag close.  Whatever neither reads ('/', '>', '=',
+            # astral whitespace, EOF, an unterminated quote, '=' before '>'
+            # or EOF) breaks into the general machine at i ----
             while True:
                 am = attr_fast(t, i)
-                if am is not None:
-                    w, name, pre_eq, w3, val = am.group(1, 2, 3, 4, 5)
-                    # inline of DocBuilder.add_attribute (nd is the open
-                    # element): append to the five parallel attr lists
-                    if pre_eq is None:
-                        # valueless attribute (no '=' after the name); the
-                        # following ws run is re-scanned as the next
-                        # attribute's leading space (identical maximal run)
-                        iw2 = ws_end(am.end())
-                        if iw2 >= n:
-                            errors += 1
-                            nd[14].append(name); nd[15].append("")
-                            nd[16].append(w); nd[17].append("")
-                            nd[18].append("")
-                            nd[N_BAD_TERM] = ""
-                            w2 = t[am.end():n]
-                            if w2:
-                                ln, col = lc(n - len(w2)) if lc else _NO_POS
-                                add_leaf(D.TEXT, w2, ln, col, True, True,
-                                         n - len(w2), n)
-                            tag_end_kind = "eof"
-                            break
-                        nd[14].append(name); nd[15].append("")
-                        nd[16].append(w); nd[17].append("")
-                        nd[18].append("")
+                if am is None:
+                    em = tag_close(t, i)
+                    if em is not None:
+                        nd[N_INNER_WS], slash = em.group(1, 2)
+                        i = em.end()
+                        tag_end_kind = "/>" if slash else ">"
+                    break
+                w, name, pre_eq, w3, value = am.group(1, 2, 3, 4, 5)
+                if pre_eq is None:
+                    # valueless: the ws after the name is re-scanned as the
+                    # next attribute's leading space (identical maximal run)
+                    value = equals = quote = ""
+                    i = am.end()
+                else:
+                    q0 = value[:1]
+                    if q0 == '"' or q0 == "'":
+                        if len(value) < 2 or value[-1] != q0:
+                            break  # unterminated quote
+                        value = value[1:-1]
+                        quote = q0
                         i = am.end()
-                        continue
-                    if val:
-                        q0 = val[0]
-                        if q0 == '"' or q0 == "'":
-                            if val[-1] == q0 and len(val) >= 2:
-                                value = val[1:-1]
-                                nd[14].append(name); nd[15].append(value)
-                                nd[16].append(w)
-                                nd[17].append(pre_eq + "=" + w3)
-                                nd[18].append(q0)
-                                if checking_charset:
-                                    check_charset(name, value)
-                                i = am.end()
-                                continue
-                            # unterminated quote: value runs to EOF
-                            # (stepTwo still runs, html-parser.ts:419,721-758)
-                            value = t[am.start(5) + 1:n]
-                            nd[14].append(name); nd[15].append(value)
-                            nd[16].append(w)
-                            nd[17].append(pre_eq + "=" + w3)
-                            nd[18].append("_" + q0)
-                            if checking_charset:
-                                check_charset(name, value)
-                            errors += 1
-                            nd[N_BAD_TERM] = ""
-                            tag_end_kind = "eof"
-                            break
+                    elif q0:
+                        quote = ""
                         i = am.end()
-                        if val[-1] == "/":
-                            val = val[:-1]
+                        if value[-1] == "/":
+                            value = value[:-1]
                             i -= 1
-                        nd[14].append(name); nd[15].append(val)
-                        nd[16].append(w)
-                        nd[17].append(pre_eq + "=" + w3)
-                        nd[18].append("")
-                        if checking_charset:
-                            check_charset(name, val)
-                        continue
-                    # empty value: next char is '>' (the value class matches
-                    # empty only there) or EOF
-                    if am.end() >= n:
-                        errors += 1
-                        nd[14].append(name); nd[15].append("")
-                        nd[16].append(w); nd[17].append(pre_eq + "=")
-                        nd[18].append("")
-                        nd[N_BAD_TERM] = ""
-                        if w3:
-                            ln, col = lc(n - len(w3)) if lc else _NO_POS
-                            add_leaf(D.TEXT, w3, ln, col, True, True,
-                                     n - len(w3), n)
-                        tag_end_kind = "eof"
-                        break
-                    nd[14].append(name); nd[15].append("")
-                    nd[16].append(w); nd[17].append(pre_eq + "=")
-                    nd[18].append("")
-                    nd[N_INNER_WS] = w3
-                    i = am.end() + 1
-                    tag_end_kind = ">"
-                    break
-                em = tag_close(t, i)
-                if em is not None:
-                    w, slash = em.group(1, 2)
-                    nd[N_INNER_WS] = w
-                    i = em.end()
-                    tag_end_kind = "/>" if slash else ">"
-                    break
-                # fallback: '/', '>', '=', astral whitespace, or EOF
-                iw = ws_end(i)
-                w = t[i:iw]
-                if iw >= n:
-                    # EOF in AT_ATTRIBUTE_START; pending collectedSpace
-                    # becomes a trailing text child (html-parser.ts:498-501)
-                    errors += 1
-                    nd[N_BAD_TERM] = ""
-                    if w:
-                        ln, col = lc(n - len(w)) if lc else _NO_POS
-                        add_leaf(D.TEXT, w, ln, col, True, True,
-                                 n - len(w), n)
-                    tag_end_kind = "eof"
-                    break
-                c = t[iw]
-                if c == "/":
-                    if iw + 1 < n and t[iw + 1] == ">":
-                        nd[N_INNER_WS] = w
-                        i = iw + 2
-                        tag_end_kind = "/>"
-                        break
-                    # stray slash becomes a valueless '/' attribute
-                    add_attribute("/", "", w, "", "")
-                    i = iw + 1
-                    continue
-                if c == ">":
-                    nd[N_INNER_WS] = w
-                    i = iw + 1
-                    tag_end_kind = ">"
-                    break
-                # '=' with no name: bad terminator, back to text
-                nd[N_INNER_WS] = w
-                nd[N_BAD_TERM] = c
-                errors += 1
-                i = iw + 1
-                tag_end_kind = "bad"
-                break
+                    else:
+                        break  # '=' then '>' or EOF
+                    equals = pre_eq + "=" + w3
+                    if checking_charset:
+                        check_charset(name, value)
+                nd[14].append(name); nd[15].append(value)
+                nd[16].append(w); nd[17].append(equals); nd[18].append(quote)
 
-        attr_re = _RE_ATTR_STRICT
+        # ---- general machine: xml mode, and the rest of any HTML tag the
+        # fast paths above did not read ----
+        attr_re = _RE_ATTR_STRICT if xml else _RE_ATTR_LOOSE
         pend_ws: str | None = None
 
         while tag_end_kind is None:
@@ -857,7 +698,7 @@ def parse(source: str, *, empty_end_tag: bool = True, eol="\n", tab_size: int = 
                 # EOF in AT_ATTRIBUTE_START; pending collectedSpace becomes a
                 # trailing text child at wrap-up (html-parser.ts:498-501)
                 errors += 1
-                b.bad_term[node] = ""
+                nd[N_BAD_TERM] = ""
                 if w:
                     ln, col = lc(n - len(w)) if lc else _NO_POS
                     add_leaf(D.TEXT, w, ln, col, poss_ent=True,
@@ -867,7 +708,7 @@ def parse(source: str, *, empty_end_tag: bool = True, eol="\n", tab_size: int = 
             c = t[i]
             if c == "/":
                 if i + 1 < n and t[i + 1] == ">":
-                    b.add_inner_whitespace(w)
+                    nd[N_INNER_WS] = w
                     i += 2
                     tag_end_kind = "/>"
                     break
@@ -876,14 +717,14 @@ def parse(source: str, *, empty_end_tag: bool = True, eol="\n", tab_size: int = 
                     add_attribute("/", "", w, "", "")
                     i += 1
                     continue
-                b.add_inner_whitespace(w)
-                b.bad_term[node] = "/"
+                nd[N_INNER_WS] = w
+                nd[N_BAD_TERM] = "/"
                 errors += 1
                 i += 1
                 tag_end_kind = "bad"
                 break
             if c == ">":
-                b.add_inner_whitespace(w)
+                nd[N_INNER_WS] = w
                 i += 1
                 tag_end_kind = ">"
                 break
@@ -901,7 +742,7 @@ def parse(source: str, *, empty_end_tag: bool = True, eol="\n", tab_size: int = 
                 if i >= n:
                     errors += 1
                     add_attribute(name, "", w, "", "")
-                    b.bad_term[node] = ""
+                    nd[N_BAD_TERM] = ""
                     if w2:
                         ln, col = lc(n - len(w2)) if lc else _NO_POS
                         add_leaf(D.TEXT, w2, ln, col, poss_ent=True,
@@ -924,7 +765,7 @@ def parse(source: str, *, empty_end_tag: bool = True, eol="\n", tab_size: int = 
                 if i >= n:
                     errors += 1
                     add_attribute(name, "", w, pre_eq + "=", "")
-                    b.bad_term[node] = ""
+                    nd[N_BAD_TERM] = ""
                     if w3:
                         ln, col = lc(n - len(w3)) if lc else _NO_POS
                         add_leaf(D.TEXT, w3, ln, col, poss_ent=True,
@@ -947,7 +788,7 @@ def parse(source: str, *, empty_end_tag: bool = True, eol="\n", tab_size: int = 
                             check_charset(name, value)
                         i = n
                         errors += 1
-                        b.bad_term[node] = ""
+                        nd[N_BAD_TERM] = ""
                         tag_end_kind = "eof"
                         break
                     value = t[i + 1:e]
@@ -967,8 +808,8 @@ def parse(source: str, *, empty_end_tag: bool = True, eol="\n", tab_size: int = 
                 continue
             # not an attribute-name char: only '=' (HTML) or strict-mode
             # specials reach here -> bad terminator, back to text
-            b.add_inner_whitespace(w)
-            b.bad_term[node] = c
+            nd[N_INNER_WS] = w
+            nd[N_BAD_TERM] = c
             errors += 1
             i += 1
             tag_end_kind = "bad"

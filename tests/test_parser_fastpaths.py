@@ -1,18 +1,23 @@
-"""Focused pins for the round-8 fused fast paths (parser.py).
+"""The parser's fused fast paths, checked against its general machine.
 
-Each case exercises a boundary between a fast-path regex and the general
-state machine; expected values were captured from the pre-optimization
-parser and byte-verified by bench/parity_dump.py over 20k corpus docs +
-101 fixtures before being pinned here.
+Focused pins for each boundary between a fast-path regex and the general
+state machine, then the differential test: every fast-path regex (alone,
+then all four together) is replaced with a never-matching one, which sends
+the shapes it covers through the general machine, and the parse must not
+change.  Inputs: every parity fixture, every prefix of a few of them (EOF at
+every offset) and 10^5 seeded generated tag soups, in both position modes.
 """
-import sys
+import random
+import re
 
-sys.path.insert(0, "/root/repo")
+import pytest
 
-from fortissimo_spark.dom import (  # noqa: E402
+import fortissimo_spark.parser as P
+from fortissimo_spark.dom import (
     EXPLICITLY_CLOSED, SELF_CLOSED, UNCLOSED, VOID_CLOSED,
 )
-from fortissimo_spark.parser import parse  # noqa: E402
+from fortissimo_spark.parser import parse
+from tests.parser_fixtures import FIXTURES
 
 
 def _attrs(b, node):
@@ -83,9 +88,9 @@ def test_stray_slash_attribute():
 
 
 def test_quote_adjacent_attributes_match_general_machine():
-    # '<a b="x"c="y">': the single-attribute regex's unquoted class can
-    # match '"x"c="y"' whole; the fast path must bail to the general
-    # machine, which a leading 'z=1' forces for the same attributes
+    # '<a b="x"c="y">': a quoted value in the fused start-tag regex must be
+    # followed by the tag close, so this tag misses it and its attributes
+    # are read one by one, exactly as after a leading 'z=1'
     for q in ('"', "'"):
         tag = f"<a b={q}x{q}c={q}y{q}>"
         r = parse(tag)
@@ -130,3 +135,171 @@ def test_token_count_contract():
     assert d["token_count"] == 4
     d = process_document(b"<p> </p>")
     assert d["token_count"] == 0
+
+
+# --- differential test: fast paths vs the general machine -------------------
+
+FAST_PATHS = ("_RE_STAG_FAST", "_RE_ATTR_FAST", "_RE_TAG_CLOSE", "_RE_END_FAST")
+DISABLED_SETS = [(name,) for name in FAST_PATHS] + [FAST_PATHS]
+NEVER = re.compile(r"(?!)")
+GENERATED_DOCS = 100_000
+SEED = 20_251_017
+
+# generator alphabet: quotes, '=', '/', plain and astral whitespace, meta
+# charset sniffing, raw-text tags, <svg> + CDATA, comments, implied closes.
+# Well-formed shapes are weighted up so that every fast path matches often.
+_WS = ("",) * 6 + (" ",) * 4 + ("  ", "\t", "\n", "\r\n", "\f", "\U00010000",
+                              " \U0001f600 ")
+_SEP = (" ",) * 8 + ("  ", "\t", "\n", "", "\U00010000", " \U0001f600 ")
+_TAGS = ("a", "p", "P", "td", "tr", "th", "table", "tbody", "li", "ul", "dt",
+         "meta", "br", "img", "svg", "math", "script", "style", "textarea",
+         "x:y", "a\U00010001", "b")
+_ANAMES = ("b", "c", "charset", "http-equiv", "content", "x\U00010002", "/",
+           "=", '"', "'", "d'e")
+_VALUES = ('"x"', '"x"', "'y'", "'y'", "1", "1", "", '"', "'", '""',
+           "utf-8", "'latin-1'", "content-type",
+           '"text/html; charset=iso-8859-1"', "text/html;charset=koi8-r",
+           '"a b > c"', "'q\nr'", "1/", "//", "/", "x/y", '"x"c="y"', "'x'c",
+           "=c", "x\U00010003", "\U00010000x", '"unterminated', "'open")
+_CLOSES = (">",) * 8 + ("/>",) * 2 + ("/ >", "", "/", "=>", "\U00010000>")
+_TEXT = ("x", " ", "a b", "<", "<<", "&amp;", "\U00010000", "\n", "<3",
+         "< p>", "\r")
+_OTHER = ("<!-- c -->", "<!-- x --->", "<!--", "<![CDATA[d]]>", "<![CDATA[",
+          "]]>", "<!doctype html>", "<?pi?>", "<!x>", "</", "</ >", "</>",
+          "<svg><![CDATA[e>f]]></svg>", "<script>a<b</script>",
+          "<textarea></textare></textarea>",
+          "<!DOCTYPE html PUBLIC '-//W3C//DTD XHTML 1.0 Strict//EN'>")
+
+
+def _start_tag(rng: random.Random) -> str:
+    parts = ["<", rng.choice(_TAGS)]
+    for _ in range(rng.choice((0, 0, 1, 1, 1, 2, 3))):
+        parts.append(rng.choice(_SEP))
+        parts.append(rng.choice(_ANAMES))
+        if rng.random() < 0.7:
+            parts += [rng.choice(_WS), "=", rng.choice(_WS),
+                      rng.choice(_VALUES)]
+    parts.append(rng.choice(_WS))
+    parts.append(rng.choice(_CLOSES))
+    return "".join(parts)
+
+
+def _end_tag(rng: random.Random) -> str:
+    lead = rng.choice(_SEP) if rng.random() < 0.1 else ""
+    return ("</" + lead + rng.choice(_TAGS) + rng.choice(_WS)
+            + rng.choice((">",) * 6 + ("x>", "", "/>")))
+
+
+def generated_docs(n: int, seed: int = SEED):
+    """``n`` seeded tag soups of one to seven pieces; every fifth is cut at a
+    random offset so EOF lands inside markup."""
+    rng = random.Random(seed)
+    for _ in range(n):
+        pieces = []
+        for _ in range(rng.randint(1, 7)):
+            r = rng.random()
+            if r < 0.45:
+                pieces.append(_start_tag(rng))
+            elif r < 0.7:
+                pieces.append(_end_tag(rng))
+            elif r < 0.9:
+                pieces.append(rng.choice(_TEXT))
+            else:
+                pieces.append(rng.choice(_OTHER))
+        doc = "".join(pieces)
+        if rng.random() < 0.2:
+            doc = doc[:rng.randrange(len(doc) + 1)]
+        yield doc
+
+
+def _prefix_docs():
+    """Every prefix of a few multi-shape fixtures (EOF at every offset)."""
+    rich = [fx for fx in FIXTURES if len(fx) > 25] + ["".join(FIXTURES[:60])]
+    return [doc[:j] for doc in rich for j in range(len(doc) + 1)]
+
+
+def _snapshot(text: str, positions: bool):
+    r = parse(text, positions=positions)
+    return (r.dom.nodes, r.errors, r.charset, r.unclosed_tags,
+            r.implicitly_closed_tags)
+
+
+class _Spy:
+    """A fast-path regex that records, in ``seen``, that it matched."""
+
+    def __init__(self, name, rx, seen):
+        self.name, self.rx, self.seen = name, rx, seen
+
+    def match(self, t, pos):
+        m = self.rx.match(t, pos)
+        if m is not None:
+            self.seen.add(self.name)
+        return m
+
+
+def _divergences(monkeypatch, docs, positions):
+    """Compare each doc's default parse with its parse under every disabled
+    set.  Returns (divergent (set, doc) pairs, per-set count of docs that
+    exercised it).  A set none of whose regexes matched in the default
+    parse cannot change it, so that pair is not re-parsed."""
+    bad = []
+    exercised = dict.fromkeys(DISABLED_SETS, 0)
+    docs = iter(docs)
+    while True:
+        chunk = [d for _, d in zip(range(5000), docs)]
+        if not chunk:
+            return bad, exercised
+        ref = []
+        seen = set()
+        with monkeypatch.context() as m:
+            for name in FAST_PATHS:
+                m.setattr(P, name, _Spy(name, getattr(P, name), seen))
+            for d in chunk:
+                seen.clear()
+                ref.append((_snapshot(d, positions), frozenset(seen)))
+        for disabled in DISABLED_SETS:
+            with monkeypatch.context() as m:
+                for name in disabled:
+                    m.setattr(P, name, NEVER)
+                for d, (want, used) in zip(chunk, ref):
+                    if used.isdisjoint(disabled):
+                        continue
+                    exercised[disabled] += 1
+                    if _snapshot(d, positions) != want:
+                        bad.append((disabled, d))
+
+
+@pytest.mark.parametrize("positions", [False, True])
+def test_fast_paths_match_general_machine_on_fixtures(monkeypatch, positions):
+    bad, exercised = _divergences(monkeypatch, FIXTURES + _prefix_docs(),
+                                  positions)
+    assert not bad, f"{len(bad)} divergences, first: {bad[:5]!r}"
+    assert all(exercised.values()), exercised
+
+
+@pytest.mark.parametrize("positions,ndocs", [(False, GENERATED_DOCS),
+                                             (True, GENERATED_DOCS // 5)])
+def test_fast_paths_match_general_machine_on_generated(monkeypatch, positions,
+                                                       ndocs):
+    bad, exercised = _divergences(monkeypatch, generated_docs(ndocs),
+                                  positions)
+    assert not bad, f"{len(bad)} divergences, first: {bad[:5]!r}"
+    # every fast path must actually carry a good share of the documents
+    assert min(exercised.values()) >= ndocs // 10, exercised
+
+
+def test_parse_binds_fast_paths_per_call(monkeypatch):
+    # the differential test relies on parse() reading the module globals on
+    # every call: a never-matching regex must change the path, not the result
+    doc = '<p class="x">a<br/>b</p>'
+    assert parse(doc).to_string() == doc
+    calls = []
+
+    class Spy:
+        def match(self, t, pos):
+            calls.append(pos)
+            return None
+
+    monkeypatch.setattr(P, "_RE_STAG_FAST", Spy())
+    assert parse(doc).to_string() == doc
+    assert len(calls) == 2

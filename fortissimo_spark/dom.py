@@ -427,44 +427,71 @@ class DocBuilder:
         if not sections:
             return
 
+        kept: list[int] = []
+        between: list[int] = []  # non-elements since the open section's last row
         section = None
-        for i, elem in enumerate(children):
+        for elem in children:
             nd = nodes[elem]
             if nd[N_KIND] != ELEMENT:
+                (kept if section is None else between).append(elem)
                 continue
             tag_lc = nd[N_TAG_LC]
-            if tag_lc in ("thead", "tbody", "tfoot"):
-                section = None if nd[N_CLOSURE] == EXPLICITLY_CLOSED else elem
-            elif tag_lc == "tr":
+            if tag_lc == "tr":
                 has_th = self.query_selector(elem, "th") is not None
                 if section is None or (has_th and nodes[section][N_TAG_LC] != "thead"):
+                    kept += between
+                    between.clear()
                     section = self.new_element("thead" if has_th else "tbody",
                                                0, 0, synthetic=True)
                     nodes[section][N_PARENT] = table
-                    children[i] = section
-                nd[N_PARENT] = section
-                nodes[section][N_CHILDREN].append(elem)
+                    kept.append(section)
+                self._adopt(section, between, elem)
+                continue
+            kept += between
+            between.clear()
+            kept.append(elem)
+            section = (elem if tag_lc in ("thead", "tbody", "tfoot")
+                       and nd[N_CLOSURE] != EXPLICITLY_CLOSED else None)
+        children[:] = kept + between
 
     def _insert_rows_where_needed(self, node: int) -> None:
         nodes = self.nodes
         children = nodes[node][N_CHILDREN]
         if not children:
             return
+        kept: list[int] = []
+        between: list[int] = []  # non-elements since the open row's last cell
         row = None
-        for i, elem in enumerate(children):
+        for elem in children:
             nd = nodes[elem]
             if nd[N_KIND] != ELEMENT:
+                (kept if row is None else between).append(elem)
                 continue
             tag_lc = nd[N_TAG_LC]
             if tag_lc in ("th", "td"):
                 if row is None:
                     row = self.new_element("tr", 0, 0, synthetic=True)
                     nodes[row][N_PARENT] = node
-                    children[i] = row
-                nd[N_PARENT] = row
-                nodes[row][N_CHILDREN].append(elem)
-            elif tag_lc == "tr":
-                row = None if nd[N_CLOSURE] == EXPLICITLY_CLOSED else elem
+                    kept.append(row)
+                self._adopt(row, between, elem)
+                continue
+            kept += between
+            between.clear()
+            kept.append(elem)
+            row = (elem if tag_lc == "tr" and nd[N_CLOSURE] != EXPLICITLY_CLOSED
+                   else None)
+        # rebuilt in place: _examine_table holds a reference to this list
+        children[:] = kept + between
+
+    def _adopt(self, box: int, between: list[int], elem: int) -> None:
+        """Move ``between`` and then ``elem`` to the end of ``box``'s
+        children, keeping document order; empties ``between``."""
+        nodes = self.nodes
+        between.append(elem)
+        for child in between:
+            nodes[child][N_PARENT] = box
+        nodes[box][N_CHILDREN] += between
+        between.clear()
 
     # --- queries (dom.ts:383-417) -------------------------------------------
 

@@ -33,4 +33,10 @@ FIXTURES = [
     "plain text only", "", " ", "\n\n", "x", "<",  "<a b=c d='e' f=\"g\" h>",
     "<a b='x' c>text</a>", "﻿bom text", "<div\U00010000attr=1>",
     '<a b="x"c="y">', "<a b='x'c='y'>",
+    # table repair: bare cells and rows wrapped in synthetic tr / tbody
+    "<table><td>a<td>b</table>", "<table><td>a</td><td>b</td></table>",
+    "<table><tbody><td>a<td>b</tbody></table>",
+    "<table><thead><tr><th>h</th></tr></thead><tr><td>a</td></tr>"
+    "<tr><td>b</td></tr></table>",
+    "<table>\n<td>a</td>\n<td>b</td>\n</table>",
 ]

@@ -93,3 +93,51 @@ def test_quoted_gt_does_not_close_tag():
     d = b.query_selector(0, "div")
     assert b.get_attr(d, "title") == "a>b"
     assert b.text_content(d) == "x"
+
+
+TABLE_SHAPES = [
+    ("<table><td>a<td>b</table>", "ab"),
+    ("<table><td>a</td><td>b</td></table>", "ab"),
+    ("<table><tbody><td>a<td>b</tbody></table>", "ab"),
+    ("<table><thead><tr><th>h</th></tr></thead>"
+     "<tr><td>a</td></tr><tr><td>b</td></tr></table>", "hab"),
+    ("<table>\n<td>a</td>\n<td>b</td>\n</table>", "\na\nb\n"),
+    ("<table><td>a</td><p>x</p><td>b</td></table>", "axb"),
+]
+
+
+def _reachable(b):
+    seen, stack = [], [0]
+    while stack:
+        node = stack.pop()
+        seen.append(node)
+        stack += b.children[node] or []
+    return seen
+
+
+def test_table_repair_moves_cells_and_rows_once():
+    # cells and rows wrapped in a synthetic tr / tbody leave the parent's
+    # child list, so the page round-trips and its text is not repeated
+    from fortissimo_spark.kernel import process_document
+    for html, text in TABLE_SHAPES:
+        r = parse(html)
+        assert r.to_string() == html
+        seen = _reachable(r.dom)
+        assert len(seen) == len(set(seen)) == len(r.dom.nodes)
+        assert process_document(html.encode(), "none")["text"] == text
+
+
+def test_table_repair_round_trips_table_soup():
+    import random
+    rng = random.Random(5)
+    parts = ["<td>a", "<td>b</td>", "<th>h</th>", "<tr>", "</tr>", "<tbody>",
+             "</tbody>", "<thead>", "</thead>", "<tfoot>", "\n", " ",
+             "<caption>c</caption>", "<p>x</p>", "<!--c-->"]
+    for _ in range(20_000):
+        html = ("<table>" + "".join(rng.choice(parts)
+                                    for _ in range(rng.randint(1, 10)))
+                + "</table>")
+        r = parse(html)
+        assert r.to_string() == html
+        seen = _reachable(r.dom)
+        assert len(seen) == len(set(seen)), html

@@ -286,20 +286,3 @@ def test_fast_paths_match_general_machine_on_generated(monkeypatch, positions,
     assert not bad, f"{len(bad)} divergences, first: {bad[:5]!r}"
     # every fast path must actually carry a good share of the documents
     assert min(exercised.values()) >= ndocs // 10, exercised
-
-
-def test_parse_binds_fast_paths_per_call(monkeypatch):
-    # the differential test relies on parse() reading the module globals on
-    # every call: a never-matching regex must change the path, not the result
-    doc = '<p class="x">a<br/>b</p>'
-    assert parse(doc).to_string() == doc
-    calls = []
-
-    class Spy:
-        def match(self, t, pos):
-            calls.append(pos)
-            return None
-
-    monkeypatch.setattr(P, "_RE_STAG_FAST", Spy())
-    assert parse(doc).to_string() == doc
-    assert len(calls) == 2

@@ -102,7 +102,8 @@ def ensure_corpus(spark: SparkSession) -> str:
     corpus size that costs more than the exchange it saves (16.6k vs 22.7k
     docs/s). Splittable parquet + the window's uniform hash(url) exchange is
     the faster local plan; the bucketed layout is the 10^12-doc design point
-    (bench/ab_run.py measures it per cluster size). Both are single-scan."""
+    (`bench/scaling.py --layout bucketed` measures it per cluster size).
+    Both are single-scan."""
     path = corpus_path()
     if not os.path.exists(os.path.join(path, "_SUCCESS")):
         pages = build_pages(spark, SF_DIR, amplify=AMPLIFY, num_partitions=128)

@@ -41,28 +41,15 @@ __all__ = ["dedup_latest_crawl", "dedup_latest_crawl_canonical",
 DEFAULT_SALT_FACTOR = 8
 
 
-def dedup_latest_crawl(pages: DataFrame, strategy: str = "window") -> DataFrame:
-    """Latest crawl wins per url (SURVEY.md §2.7 window dedup).
-
-    * ``window`` (default — the scale-safe path): ``row_number()`` over
-      ``partition by url order by warc_ts desc``. One exchange on hash(url)
-      (uniformly distributed, so no skew by construction); reads the source
-      exactly once. Over a url-bucketed+sorted table
-      (:func:`fortissimo_spark.io_tables.write_bucketed_pages`, the 10^12-doc
-      production layout) Catalyst drops both the Exchange and the Sort, so
-      this path is exchange-free there too.
-    * ``broadcast`` (opt-in, small corpora ONLY): aggregate ``max(warc_ts)``
-      per url and broadcast the winner set back so the html payload never
-      shuffles. The winner set is the ENTIRE url universe — it must fit in
-      executor memory, and the source is executed twice (once for the winners
-      aggregate, once for the main branch). Never the default: at web scale
-      this is a guaranteed OOM.
+def dedup_latest_crawl(pages: DataFrame) -> DataFrame:
+    """Latest crawl wins per url (SURVEY.md §2.7 window dedup):
+    ``row_number()`` over ``partition by url order by warc_ts desc``. One
+    exchange on hash(url) (uniformly distributed, so no skew by
+    construction); reads the source exactly once. Over a url-bucketed+sorted
+    table (:func:`fortissimo_spark.io_tables.write_bucketed_pages`, the
+    10^12-doc production layout) Catalyst drops both the Exchange and the
+    Sort, so the plan is exchange-free there too.
     """
-    if strategy == "broadcast":
-        winners = pages.groupBy("url").agg(F.max("warc_ts").alias("warc_ts"))
-        return pages.join(F.broadcast(winners), ["url", "warc_ts"], "left_semi")
-    if strategy != "window":
-        raise ValueError(f"unknown dedup strategy: {strategy!r}")
     return _window_dedup(pages, F.col("url"))
 
 
@@ -80,7 +67,7 @@ def dedup_latest_crawl_canonical(pages: DataFrame) -> DataFrame:
     """Latest crawl wins per CANONICAL url: tracking-parameter / case /
     default-port / fragment variants of the same page (urls.normalize_url)
     collapse into one dedup key, so per-url dedup means per-PAGE dedup.
-    Same single-scan window plan as the default strategy; the original
+    Same single-scan window plan as :func:`dedup_latest_crawl`; the original
     ``url`` column is preserved on the winner row. Urls the parser cannot
     canonicalize (normalize_url yields NULL) fall back to their RAW url as
     the key — malformed urls must never collapse into one NULL group."""

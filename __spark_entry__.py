@@ -2718,7 +2718,8 @@ _ZIPF_ORACLE = r"""
                            t -> t <> '') AS ws
         FROM documents), unnest(ws) AS u(x)),
     counts AS (SELECT w, count(*) AS c FROM toks GROUP BY w),
-    totals AS (SELECT count(*) AS vocab_size, sum(c) AS total_tokens
+    totals AS (SELECT count(*) AS vocab_size,
+                      CAST(sum(c) AS BIGINT) AS total_tokens
                FROM counts),
     top AS (SELECT CAST(round(ln(CAST(rn AS DOUBLE)) * 1000000, 0)
                         AS BIGINT) AS x,
@@ -3757,8 +3758,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "dust_rules": _q_dust_rules,
         "importance_resample": _q_importance_resample,
         "extract_sections": _q_extract_sections,
-        "image_dhash": _q_image_dhash,
-        "video_frames": _q_video_frames,
         "fuzzy_para_dedup": _q_fuzzy_para_dedup,
         "template_census": _q_template_census,
         "crawl_budget": _q_crawl_budget,
@@ -3790,7 +3789,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "incremental_curate": _q_incremental_curate,
         "extract_pdf": _q_extract_pdf,
         "warc_extract": _q_warc_extract,
-        "media_metadata": _q_media_metadata,
         "normalize_text": _q_normalize_text,
     }
 

@@ -1,9 +1,10 @@
 #!/usr/bin/env python3
-"""Count parser fast-path hit rates.
+"""Report how much of the parse the native core owns.
 
-Every fused regex in ``fortissimo_spark.parser`` is wrapped in a counter
-(``parse()`` binds them from the module globals on each call), then the
-pages go through ``decode_parse`` exactly as the page kernels call it.
+The pages go through ``decode_parse`` exactly as the page kernels call it,
+with the core's per-branch token counters (``_native.stats()``) read
+around each page.  Prints every branch's count, then the share of tokens
+and of documents that the core hands to the Python general machine.
 
 Usage: python bench/fastpath_hitrates.py [ndocs] [--workload NAME]
 
@@ -12,6 +13,7 @@ Without ``--workload`` the pages are the first ndocs bench-corpus docs
 generated pages (``crawl_agg``, ``tag_soup``, seed 1).
 """
 import argparse
+import collections
 import glob
 import os
 import sys
@@ -23,52 +25,49 @@ import pyarrow.parquet as pq  # noqa: E402
 import fortissimo_spark.parser as P  # noqa: E402
 from fortissimo_spark.kernel import decode_parse  # noqa: E402
 
+# the token-level branches: every token the core reads is counted in
+# exactly one of them (meta_sniff, raw_text and raw_text_eof refine start
+# and void)
+OWNED = ("text", "comment", "declaration", "end_top", "end_pop", "start",
+         "void", "bad_term")
+
 ap = argparse.ArgumentParser()
 ap.add_argument("ndocs", nargs="?", type=int, default=10000)
 ap.add_argument("--workload", choices=("crawl_agg", "tag_soup"))
 opts = ap.parse_args()
-NDOCS, WORKLOAD = opts.ndocs, opts.workload
+if not P.NATIVE:
+    sys.exit("the native core is not built: every token goes to the "
+             "Python general machine")
 
-
-class Counter:
-    def __init__(self, m):
-        self.m = m
-        self.hit = 0
-        self.miss = 0
-
-    def __call__(self, t, pos):
-        r = self.m(t, pos)
-        if r is None:
-            self.miss += 1
-        else:
-            self.hit += 1
-        return r
-
-
-counters = {}
-for name in ("_RE_STAG_FAST", "_RE_ATTR_FAST", "_RE_TAG_CLOSE",
-             "_RE_END_FAST"):
-    c = Counter(getattr(P, name).match)
-    counters[name] = c
-    setattr(P, name, type("X", (), {"match": staticmethod(c)}))
-
-if WORKLOAD:
+if opts.workload:
     from perfbench.inputs import generate  # noqa: E402
-    raws = generate(WORKLOAD, 1).rows["html"]
+    raws = generate(opts.workload, 1).rows["html"]
 else:
     raws = []
     for f in sorted(glob.glob(os.path.join(
             ROOT, ".bench_scratch/pages_sf0.1_x20/*.parquet"))):
         raws.extend(pq.read_table(f, columns=["html"]).column("html")
                     .to_pylist())
-        if len(raws) >= NDOCS:
+        if len(raws) >= opts.ndocs:
             break
-raws = raws[:NDOCS]
-for raw in raws:
-    decode_parse(bytes(raw or b""))
+raws = raws[:opts.ndocs]
 
-print(f"{len(raws)} pages ({WORKLOAD or 'bench corpus'})")
-for name, c in counters.items():
-    tot = c.hit + c.miss
-    print(f"{name:14s} hit {c.hit:8d}  miss {c.miss:8d}"
-          f"  ({100 * c.hit / max(tot, 1):.1f}% hit)")
+total = collections.Counter()
+docs_handed_off = 0
+for raw in raws:
+    P._native.reset_stats()
+    decode_parse(bytes(raw or b""))
+    counts = P._native.stats()
+    total.update(counts)
+    docs_handed_off += any(v for k, v in counts.items()
+                           if k.startswith("handoff_"))
+
+owned = sum(total[k] for k in OWNED)
+handed = sum(v for k, v in total.items() if k.startswith("handoff_"))
+print(f"{len(raws)} pages ({opts.workload or 'bench corpus'})")
+for name, v in sorted(total.items()):
+    print(f"  {name:18s} {v:10d}")
+print(f"tokens handed to the general machine: {handed} of {owned + handed}"
+      f" ({100 * handed / max(owned + handed, 1):.2f}%)")
+print(f"docs with a hand-off: {docs_handed_off} of {len(raws)}"
+      f" ({100 * docs_handed_off / max(len(raws), 1):.1f}%)")

@@ -1,0 +1,1030 @@
+/* Native parse core for fortissimo_spark.parser (HTML mode, positions off).
+ *
+ * scan() reads the document from a token boundary, consumes every token it
+ * owns and appends the same 24-slot node records to DocBuilder.nodes (and
+ * the same indices to open_stack) that the Python general machine would.
+ * It returns at the first token it does not own; parse() reads that one
+ * token with the general machine and calls back in.  Tree repair stays in
+ * Python: an end tag that is not on top of the stack goes to
+ * DocBuilder.pop, and a closing table to DocBuilder._examine_table.
+ *
+ * Owned: text runs (the literal-'<' pairwise quirk, empty_end_tag, the
+ * trailing-text EOF error), '<!--' comments (the m % 3 == 2 dash rule),
+ * end tags closed by '>', start tags closed by '>', '/>' or a stray '='
+ * with any number of attributes, void elements, OPEN_IMPLIES_CLOSE, the
+ * math/svg counter and the script/style/textarea raw-text scan.
+ * Handed off: other '<!' markup, '<?', end tags cut by EOF or a syntax
+ * error, start tags cut by EOF, and meta tags while no charset is known
+ * (the charset sniff is Python's).
+ *
+ * The Python general machine is the reference; tests/test_parser_fastpaths.py
+ * checks that a parse through this core equals it, field for field.
+ */
+#define PY_SSIZE_T_CLEAN
+#include <Python.h>
+#include <string.h>
+
+/* node record slots and values: must match fortissimo_spark.dom */
+enum {
+    N_KIND, N_TAG, N_TAG_LC, N_PARENT, N_CHILDREN, N_CLOSURE, N_CONTENT,
+    N_TERMINATED, N_POSS_ENT, N_LINE, N_COL, N_END_TAG, N_END_LINE,
+    N_END_COL, N_ATTR_NAMES, N_ATTR_VALUES, N_ATTR_SPACING, N_ATTR_EQUALS,
+    N_ATTR_QUOTES, N_INNER_WS, N_BAD_TERM, N_SYNTHETIC, N_SRC_START,
+    N_SRC_END, N_SLOTS
+};
+enum { ELEMENT = 0, TEXT = 1, COMMENT = 2, DECLARATION = 3, DOCTYPE_NODE = 4 };
+enum { UNCLOSED = 0, SELF_CLOSED = 1, VOID_CLOSED = 2, EXPLICITLY_CLOSED = 3,
+       IMPLICITLY_CLOSED = 4 };
+
+/* per-branch token counters, read by stats() */
+enum {
+    ST_TEXT, ST_COMMENT, ST_DECL, ST_END_TOP, ST_END_POP, ST_START,
+    ST_VOID, ST_BAD_TERM, ST_META, ST_RAW_TEXT, ST_RAW_TEXT_EOF,
+    ST_OFF_DECL, ST_OFF_PI, ST_OFF_END, ST_OFF_START_EOF,
+    ST_COUNT
+};
+static const char *const STAT_NAMES[ST_COUNT] = {
+    "text", "comment", "declaration", "end_top", "end_pop", "start",
+    "void", "bad_term", "meta_sniff", "raw_text", "raw_text_eof",
+    "handoff_decl", "handoff_pi", "handoff_end", "handoff_start_eof",
+};
+static unsigned long long counts[ST_COUNT];
+
+static PyObject *OPEN_IMPLIES_CLOSE, *VOID_ELEMENTS, *RAW_TEXT_TAGS;
+static PyObject *INT[5], *INT_M1, *S_EMPTY, *S_DQ, *S_SQ, *S_EQ, *S_LT_SLASH;
+static PyObject *S_POP, *S_EXAMINE_TABLE, *S_IN_MATH_OR_SVG, *S_LOWER;
+
+typedef struct {
+    PyObject *t, *nodes, *stack, *b;
+    int kind;
+    const void *data;
+    Py_ssize_t n;
+    PyObject *sniff;  /* parse()'s meta charset sniff; NULL once known */
+    long errors;
+} Scan;
+
+#define CH(s, p) PyUnicode_READ((s)->kind, (s)->data, (p))
+
+static inline int is_ws(Py_UCS4 c)
+{
+    return c == ' ' || c == '\t' || c == '\n' || c == '\f' || c == '\r';
+}
+
+/* tag whitespace: HTML whitespace plus astral chars (reference quirk) */
+static inline int is_tag_ws(Py_UCS4 c) { return is_ws(c) || c > 0xFFFF; }
+
+static inline int is_markup_start(Py_UCS4 c)
+{
+    return (c >= 'a' && c <= 'z') || (c >= 'A' && c <= 'Z') || c == ':'
+        || c == '/' || c == '!' || c == '?';
+}
+
+static Py_ssize_t ws_end(const Scan *s, Py_ssize_t p)
+{
+    while (p < s->n && is_tag_ws(CH(s, p)))
+        p++;
+    return p;
+}
+
+static Py_ssize_t find_char(const Scan *s, Py_UCS4 ch, Py_ssize_t from)
+{
+    if (from >= s->n)
+        return -1;
+    return PyUnicode_FindChar(s->t, ch, from, s->n, 1);
+}
+
+static inline PyObject *node_at(const Scan *s, Py_ssize_t idx)
+{
+    return PyList_GET_ITEM(s->nodes, idx);
+}
+
+static inline PyObject *top(const Scan *s)
+{
+    return PyList_GET_ITEM(s->stack, PyList_GET_SIZE(s->stack) - 1);
+}
+
+static inline int set_slot(PyObject *nd, int slot, PyObject *v)
+{
+    Py_INCREF(v);
+    return PyList_SetItem(nd, slot, v);
+}
+
+static int pop_stack(const Scan *s)
+{
+    Py_ssize_t len = PyList_GET_SIZE(s->stack);
+    return PyList_SetSlice(s->stack, len - 1, len, NULL);
+}
+
+static int bump_math_or_svg(const Scan *s, long delta)
+{
+    PyObject *v = PyObject_GetAttr(s->b, S_IN_MATH_OR_SVG);
+    if (v == NULL)
+        return -1;
+    long x = PyLong_AsLong(v);
+    Py_DECREF(v);
+    if (x == -1 && PyErr_Occurred())
+        return -1;
+    v = PyLong_FromLong(x + delta);
+    if (v == NULL)
+        return -1;
+    int r = PyObject_SetAttr(s->b, S_IN_MATH_OR_SVG, v);
+    Py_DECREF(v);
+    return r;
+}
+
+/* t[a:b] */
+static PyObject *span(const Scan *s, Py_ssize_t a, Py_ssize_t b)
+{
+    return PyUnicode_Substring(s->t, a, b);
+}
+
+/* t[a:b].lower(); the ASCII case without a Python call */
+static PyObject *lower_span(const Scan *s, Py_ssize_t a, Py_ssize_t b)
+{
+    int upper = 0;
+    for (Py_ssize_t p = a; p < b; p++) {
+        Py_UCS4 c = CH(s, p);
+        if (c >= 128) {
+            PyObject *raw = PyUnicode_Substring(s->t, a, b);
+            if (raw == NULL)
+                return NULL;
+            PyObject *lc = PyObject_CallMethodNoArgs(raw, S_LOWER);
+            Py_DECREF(raw);
+            return lc;
+        }
+        upper |= c >= 'A' && c <= 'Z';
+    }
+    if (!upper)
+        return span(s, a, b);
+    PyObject *lc = PyUnicode_New(b - a, 127);
+    if (lc == NULL)
+        return NULL;
+    Py_UCS1 *d = PyUnicode_1BYTE_DATA(lc);
+    for (Py_ssize_t p = a; p < b; p++) {
+        Py_UCS4 c = CH(s, p);
+        d[p - a] = (Py_UCS1)(c >= 'A' && c <= 'Z' ? c + 32 : c);
+    }
+    return lc;
+}
+
+/* tag_lc equals the ASCII name */
+static int is_tag(PyObject *tag_lc, const char *name)
+{
+    return PyUnicode_CompareWithASCIIString(tag_lc, name) == 0;
+}
+
+/* A new record holding a leaf's defaults under ``parent``; the caller
+ * sets N_KIND, N_CONTENT, N_TERMINATED, N_POSS_ENT, N_SRC_* and, for an
+ * element, its tag, list and whitespace slots. */
+static PyObject *new_record(PyObject *parent)
+{
+    PyObject *nd = PyList_New(N_SLOTS);
+    if (nd == NULL)
+        return NULL;
+    for (int f = 0; f < N_SLOTS; f++) {
+        PyObject *v;
+        switch (f) {
+        case N_TAG: case N_TAG_LC: case N_END_TAG: case N_INNER_WS:
+            v = S_EMPTY; break;
+        case N_CLOSURE: case N_LINE: case N_COL: case N_END_LINE:
+        case N_END_COL:
+            v = INT[0]; break;
+        case N_PARENT:
+            v = parent; break;
+        case N_SYNTHETIC:
+            v = Py_False; break;
+        default:
+            v = Py_None;
+        }
+        Py_INCREF(v);
+        PyList_SET_ITEM(nd, f, v);
+    }
+    return nd;
+}
+
+/* nodes.append(nd); nodes[parent].children.append(index) (steals nd) */
+static int append_node(const Scan *s, PyObject *nd, PyObject *parent,
+                       PyObject **index_out)
+{
+    PyObject *idx = PyLong_FromSsize_t(PyList_GET_SIZE(s->nodes));
+    if (idx == NULL || PyList_Append(s->nodes, nd) < 0)
+        goto fail;
+    Py_ssize_t p = PyLong_AsSsize_t(parent);
+    if (p == -1 && PyErr_Occurred())
+        goto fail;
+    if (PyList_Append(PyList_GET_ITEM(node_at(s, p), N_CHILDREN), idx) < 0)
+        goto fail;
+    Py_DECREF(nd);
+    if (index_out != NULL)
+        *index_out = idx;
+    else
+        Py_DECREF(idx);
+    return 0;
+fail:
+    Py_XDECREF(idx);
+    Py_DECREF(nd);
+    return -1;
+}
+
+/* DocBuilder.add_leaf(kind, t[a:b], 0, 0, terminated, poss_ent,
+ * src_start, src_end) */
+static int add_leaf(const Scan *s, int kind, Py_ssize_t a, Py_ssize_t b,
+                    int terminated, int poss_ent, Py_ssize_t src_start,
+                    Py_ssize_t src_end)
+{
+    PyObject *parent = top(s);
+    PyObject *nd = new_record(parent);
+    if (nd == NULL)
+        return -1;
+    PyObject *content = span(s, a, b);
+    PyObject *ss = PyLong_FromSsize_t(src_start);
+    PyObject *se = PyLong_FromSsize_t(src_end);
+    if (content == NULL || ss == NULL || se == NULL) {
+        Py_XDECREF(content); Py_XDECREF(ss); Py_XDECREF(se);
+        Py_DECREF(nd);
+        return -1;
+    }
+    PyList_SetItem(nd, N_CONTENT, content);
+    PyList_SetItem(nd, N_SRC_START, ss);
+    PyList_SetItem(nd, N_SRC_END, se);
+    set_slot(nd, N_KIND, INT[kind]);
+    set_slot(nd, N_TERMINATED, terminated ? Py_True : Py_False);
+    set_slot(nd, N_POSS_ENT, poss_ent ? Py_True : Py_False);
+    return append_node(s, nd, parent, NULL);
+}
+
+/* The general machine's end-tag step when the stack top closes: the
+ * inline part of DocBuilder.pop for a matching top. */
+static int close_top(const Scan *s, PyObject *tag_lc, PyObject *end_text,
+                     Py_ssize_t end_pos)
+{
+    PyObject *cur = top(s);
+    Py_INCREF(cur);
+    PyObject *nd = node_at(s, PyLong_AsSsize_t(cur));
+    PyObject *se = PyLong_FromSsize_t(end_pos);
+    int r = -1;
+    if (se == NULL || pop_stack(s) < 0)
+        goto done;
+    set_slot(nd, N_CLOSURE, INT[EXPLICITLY_CLOSED]);
+    set_slot(nd, N_END_TAG, end_text);
+    set_slot(nd, N_END_LINE, INT[0]);
+    set_slot(nd, N_END_COL, INT[0]);
+    PyList_SetItem(nd, N_SRC_END, se);
+    se = NULL;
+    if (is_tag(tag_lc, "table")) {
+        PyObject *v = PyObject_CallMethodOneArg(s->b, S_EXAMINE_TABLE, cur);
+        if (v == NULL)
+            goto done;
+        Py_DECREF(v);
+    }
+    if ((is_tag(tag_lc, "math") || is_tag(tag_lc, "svg"))
+            && bump_math_or_svg(s, -1) < 0)
+        goto done;
+    r = 0;
+done:
+    Py_XDECREF(se);
+    Py_DECREF(cur);
+    return r;
+}
+
+/* '</' at k.  Returns the offset after the tag, 0 to hand off, -1 on
+ * error. */
+static Py_ssize_t end_tag(Scan *s, Py_ssize_t k)
+{
+    Py_ssize_t n = s->n;
+    Py_ssize_t iw = ws_end(s, k + 2);
+    if (iw >= n || CH(s, iw) == '>')
+        return 0;
+    Py_ssize_t tag_end = iw + 1;
+    while (tag_end < n) {
+        Py_UCS4 c = CH(s, tag_end);
+        if (is_ws(c) || c == '/' || c == '>')
+            break;
+        tag_end++;
+    }
+    Py_ssize_t i2 = ws_end(s, tag_end);
+    if (i2 >= n || CH(s, i2) != '>')
+        return 0;
+
+    PyObject *tag_lc = lower_span(s, iw, tag_end);
+    if (tag_lc == NULL)
+        return -1;
+    /* endTagText excludes whitespace after '</' */
+    PyObject *text;
+    if (iw == k + 2) {
+        text = span(s, k, i2 + 1);
+    } else {
+        PyObject *rest = span(s, iw, i2 + 1);
+        text = rest ? PyUnicode_Concat(S_LT_SLASH, rest) : NULL;
+        Py_XDECREF(rest);
+    }
+    Py_ssize_t r = -1;
+    if (text == NULL)
+        goto done;
+    int match = PyList_GET_SIZE(s->stack) > 1;
+    if (match) {
+        PyObject *nd = node_at(s, PyLong_AsSsize_t(top(s)));
+        match = PyObject_RichCompareBool(PyList_GET_ITEM(nd, N_TAG_LC),
+                                         tag_lc, Py_EQ);
+        if (match < 0)
+            goto done;
+    }
+    if (match) {
+        if (close_top(s, tag_lc, text, i2 + 1) < 0)
+            goto done;
+        counts[ST_END_TOP]++;
+    } else {
+        PyObject *se = PyLong_FromSsize_t(i2 + 1);
+        if (se == NULL)
+            goto done;
+        PyObject *v = PyObject_CallMethodObjArgs(s->b, S_POP, tag_lc, text,
+                                                 INT[0], INT[0], se, NULL);
+        Py_DECREF(se);
+        if (v == NULL)
+            goto done;
+        if (v == Py_False)
+            s->errors++;
+        Py_DECREF(v);
+        counts[ST_END_POP]++;
+    }
+    r = i2 + 1;
+done:
+    Py_DECREF(tag_lc);
+    Py_XDECREF(text);
+    return r;
+}
+
+/* one attribute as spans of t: leading whitespace, name, the equals
+ * string (whitespace, '=', whitespace), value; quote is 0, '"' or '\'' */
+typedef struct {
+    Py_ssize_t w0, w1, n0, n1, e0, e1, v0, v1;
+    Py_UCS4 quote;
+    int valued;  /* a value was read after '=' (the charset sniff's input) */
+} Attr;
+
+typedef struct {
+    Attr *a;
+    Py_ssize_t len, cap;
+    Attr local[16];
+} Attrs;
+
+static int push_attr(Attrs *as, Py_ssize_t w0, Py_ssize_t w1, Py_ssize_t n0,
+                     Py_ssize_t n1, Py_ssize_t e0, Py_ssize_t e1,
+                     Py_ssize_t v0, Py_ssize_t v1, Py_UCS4 quote, int valued)
+{
+    if (as->len == as->cap) {
+        Py_ssize_t cap = as->cap * 2;
+        Attr *a = PyMem_Malloc(cap * sizeof(Attr));
+        if (a == NULL) {
+            PyErr_NoMemory();
+            return -1;
+        }
+        memcpy(a, as->a, as->len * sizeof(Attr));
+        if (as->a != as->local)
+            PyMem_Free(as->a);
+        as->a = a;
+        as->cap = cap;
+    }
+    Attr *x = &as->a[as->len++];
+    x->w0 = w0; x->w1 = w1; x->n0 = n0; x->n1 = n1;
+    x->e0 = e0; x->e1 = e1; x->v0 = v0; x->v1 = v1; x->quote = quote;
+    x->valued = valued;
+    return 0;
+}
+
+/* the five attribute lists of an element record */
+static int fill_attrs(const Scan *s, PyObject *nd, const Attrs *as)
+{
+    for (int f = 0; f < 5; f++) {
+        PyObject *lst = PyList_New(as->len);
+        if (lst == NULL)
+            return -1;
+        PyList_SetItem(nd, N_ATTR_NAMES + f, lst);
+        for (Py_ssize_t j = 0; j < as->len; j++) {
+            const Attr *x = &as->a[j];
+            PyObject *v;
+            switch (f) {
+            case 0: v = span(s, x->n0, x->n1); break;
+            case 1: v = span(s, x->v0, x->v1); break;
+            case 2: v = span(s, x->w0, x->w1); break;
+            case 3: v = span(s, x->e0, x->e1); break;
+            default:
+                v = x->quote == '"' ? S_DQ
+                    : x->quote == '\'' ? S_SQ : S_EMPTY;
+                Py_INCREF(v);
+            }
+            if (v == NULL)
+                return -1;
+            PyList_SET_ITEM(lst, j, v);
+        }
+    }
+    return 0;
+}
+
+/* the raw-text scan after an open script/style/textarea at stack top:
+ * the first '</tag' [ws]* '>' with a naive stage matcher (a partial match
+ * resumes after the mismatching char) */
+static Py_ssize_t raw_text(Scan *s, Py_ssize_t i, PyObject *tag_lc)
+{
+    Py_ssize_t n = s->n;
+    Py_ssize_t tlen = PyUnicode_GET_LENGTH(tag_lc);
+    Py_ssize_t elen = tlen + 2;
+    Py_ssize_t scan = i, match_start = -1, gt = -1;
+    int poss_ent = is_tag(tag_lc, "textarea");
+    for (;;) {
+        Py_ssize_t kk = find_char(s, '<', scan);
+        if (kk < 0)
+            break;
+        Py_ssize_t m = 0;
+        while (m < elen && kk + m < n) {
+            Py_UCS4 want = m == 0 ? '<' : m == 1 ? '/'
+                : PyUnicode_READ_CHAR(tag_lc, m - 2);
+            Py_UCS4 c = CH(s, kk + m);
+            /* c.lower() == want: ASCII folding, plus KELVIN SIGN -> 'k' */
+            if (c >= 'A' && c <= 'Z')
+                c += 32;
+            else if (c == 0x212A)
+                c = 'k';
+            if (c != want)
+                break;
+            m++;
+        }
+        if (m < elen) {
+            if (kk + m >= n)
+                break;
+            scan = kk + m + 1;
+            continue;
+        }
+        Py_ssize_t p = kk + elen;
+        while (p < n && is_ws(CH(s, p)))
+            p++;
+        if (p < n && CH(s, p) == '>') {
+            match_start = kk;
+            gt = p;
+            break;
+        }
+        if (p >= n)
+            break;
+        scan = p + 1;
+    }
+    if (match_start < 0) {
+        s->errors++;
+        if (i < n && add_leaf(s, TEXT, i, n, 1, poss_ent, i, n) < 0)
+            return -1;
+        counts[ST_RAW_TEXT_EOF]++;
+        return n;
+    }
+    if (match_start > i
+            && add_leaf(s, TEXT, i, match_start, 1, poss_ent, i,
+                        match_start) < 0)
+        return -1;
+    PyObject *text = span(s, match_start, gt + 1);
+    if (text == NULL)
+        return -1;
+    int r = close_top(s, tag_lc, text, gt + 1);
+    Py_DECREF(text);
+    if (r < 0)
+        return -1;
+    counts[ST_RAW_TEXT]++;
+    return gt + 1;
+}
+
+/* hand a meta tag's valued attributes to parse()'s charset sniff, which
+ * says whether a later meta tag still needs it */
+static int sniff(Scan *s, const Attrs *as)
+{
+    PyObject *names = PyList_New(0), *values = PyList_New(0), *more = NULL;
+    int r = -1;
+    if (names == NULL || values == NULL)
+        goto done;
+    for (Py_ssize_t j = 0; j < as->len; j++) {
+        const Attr *x = &as->a[j];
+        if (!x->valued)
+            continue;
+        PyObject *name = span(s, x->n0, x->n1);
+        PyObject *value = span(s, x->v0, x->v1);
+        int bad = name == NULL || value == NULL
+            || PyList_Append(names, name) < 0
+            || PyList_Append(values, value) < 0;
+        Py_XDECREF(name);
+        Py_XDECREF(value);
+        if (bad)
+            goto done;
+    }
+    more = PyObject_CallFunctionObjArgs(s->sniff, names, values, NULL);
+    if (more == NULL)
+        goto done;
+    r = PyObject_IsTrue(more);
+    if (r > 0)
+        r = 0;
+    else if (r == 0)
+        s->sniff = NULL;
+    counts[ST_META]++;
+done:
+    Py_XDECREF(names);
+    Py_XDECREF(values);
+    Py_XDECREF(more);
+    return r;
+}
+
+/* '<!' markup other than a comment at k: a declaration or a doctype.  An
+ * xhtml doctype (it switches to xml mode) and '<![' (CDATA inside
+ * math/svg) are handed off. */
+static Py_ssize_t declaration(Scan *s, Py_ssize_t k)
+{
+    Py_ssize_t n = s->n, a = k + 2, b, i;
+    int terminated = 1;
+    if (a < n && CH(s, a) == '[')
+        return 0;
+    Py_ssize_t iw = ws_end(s, a);
+    if (iw == a && iw < n && CH(s, iw) == '>') {
+        b = a;
+        i = iw + 1;
+    } else {
+        Py_ssize_t e = iw < n ? find_char(s, '>', iw + 1) : -1;
+        if (e == -2)
+            return -1;
+        if (e < 0) {
+            b = i = n;
+            terminated = 0;
+        } else {
+            b = e;
+            i = e + 1;
+        }
+    }
+    /* ^doctype\b, ASCII case-insensitive */
+    static const char DOCTYPE[] = "doctype", XHTML[] = "xhtml";
+    int doctype = b - a >= 7;
+    for (int j = 0; doctype && j < 7; j++)
+        doctype = (CH(s, a + j) | 0x20) == (Py_UCS4)DOCTYPE[j];
+    if (doctype && b - a > 7) {
+        Py_UCS4 c = CH(s, a + 7);
+        doctype = !((c >= 'a' && c <= 'z') || (c >= 'A' && c <= 'Z')
+                    || (c >= '0' && c <= '9') || c == '_');
+    }
+    if (doctype) {
+        for (Py_ssize_t p = a; p + 5 <= b; p++) {
+            int j = 0;
+            while (j < 5 && (CH(s, p + j) | 0x20) == (Py_UCS4)XHTML[j])
+                j++;
+            if (j == 5)
+                return 0;
+        }
+    }
+    if (!terminated)
+        s->errors++;
+    counts[ST_DECL]++;
+    return add_leaf(s, doctype ? DOCTYPE_NODE : DECLARATION, a, b, terminated,
+                    0, k, i) < 0 ? -1 : i;
+}
+
+enum { END_GT, END_SELF, END_BAD };
+
+/* a start tag at k ('<' + letter or ':').  Returns the offset after the
+ * tag (after its raw text for script/style/textarea), 0 to hand off, -1 on
+ * error. */
+static Py_ssize_t start_tag(Scan *s, Py_ssize_t k)
+{
+    Py_ssize_t n = s->n;
+    Py_ssize_t i = k + 2;
+    while (i < n) {
+        Py_UCS4 c = CH(s, i);
+        if (is_ws(c) || c == '/' || c == '>')
+            break;
+        i++;
+    }
+    Py_ssize_t tag_end = i;
+    PyObject *tag_lc = lower_span(s, k + 1, tag_end);
+    if (tag_lc == NULL)
+        return -1;
+    Py_ssize_t r = 0;
+    PyObject *tag = NULL, *nd = NULL, *idx = NULL;
+    Attrs as;
+    as.a = as.local;
+    as.len = 0;
+    as.cap = 16;
+
+    /* read the attributes into spans; nothing is built before the tag is
+     * known to be owned */
+    int end_kind;
+    Py_ssize_t w0, w1, pend0 = -1, pend1 = -1;
+    for (;;) {
+        if (pend0 < 0) {
+            w0 = i;
+            i = ws_end(s, i);
+            w1 = i;
+        } else {
+            w0 = pend0;
+            w1 = pend1;
+            pend0 = -1;
+        }
+        if (i >= n)
+            goto eof;
+        Py_UCS4 c = CH(s, i);
+        if (c == '/') {
+            if (i + 1 < n && CH(s, i + 1) == '>') {
+                i += 2;
+                end_kind = END_SELF;
+                break;
+            }
+            /* stray slash: a valueless '/' attribute */
+            if (push_attr(&as, w0, w1, i, i + 1, i, i, i, i, 0, 0) < 0)
+                goto error;
+            i++;
+            continue;
+        }
+        if (c == '>') {
+            i++;
+            end_kind = END_GT;
+            break;
+        }
+        Py_ssize_t n0 = i;
+        while (i < n) {
+            c = CH(s, i);
+            if (is_ws(c) || c == '>' || c == '/' || c == '=')
+                break;
+            i++;
+        }
+        if (i == n0) {
+            /* '=' where a name should start: bad terminator */
+            i++;
+            end_kind = END_BAD;
+            break;
+        }
+        Py_ssize_t n1 = i;
+        i = ws_end(s, i);
+        if (i >= n)
+            goto eof;
+        if (CH(s, i) != '=') {
+            if (push_attr(&as, w0, w1, n0, n1, n1, n1, n1, n1, 0, 0) < 0)
+                goto error;
+            pend0 = n1;
+            pend1 = i;
+            continue;
+        }
+        Py_ssize_t e0 = n1, eq_end = i + 1;
+        i = ws_end(s, eq_end);
+        if (i >= n)
+            goto eof;
+        Py_UCS4 c3 = CH(s, i);
+        if (c3 == '>') {
+            if (push_attr(&as, w0, w1, n0, n1, e0, eq_end, i, i, 0, 0) < 0)
+                goto error;
+            pend0 = eq_end;
+            pend1 = i;
+            continue;
+        }
+        if (c3 == '"' || c3 == '\'') {
+            Py_ssize_t e = find_char(s, c3, i + 1);
+            if (e == -2)
+                goto error;
+            if (e < 0)
+                goto eof;  /* unterminated quote runs to EOF */
+            if (push_attr(&as, w0, w1, n0, n1, e0, i, i + 1, e, c3, 1) < 0)
+                goto error;
+            i = e + 1;
+        } else {
+            Py_ssize_t v0 = i;
+            while (i < n) {
+                c = CH(s, i);
+                if (is_ws(c) || c == '>')
+                    break;
+                i++;
+            }
+            /* a trailing '/' is not part of the value */
+            if (CH(s, i - 1) == '/')
+                i--;
+            if (push_attr(&as, w0, w1, n0, n1, e0, v0, v0, i, 0, 1) < 0)
+                goto error;
+        }
+    }
+
+    /* build the element */
+    tag = span(s, k + 1, tag_end);
+    if (tag == NULL)
+        goto error;
+    PyObject *closers = PyDict_GetItemWithError(OPEN_IMPLIES_CLOSE, tag_lc);
+    if (closers == NULL && PyErr_Occurred())
+        goto error;
+    while (closers != NULL) {
+        PyObject *cur = node_at(s, PyLong_AsSsize_t(top(s)));
+        int hit = PySet_Contains(closers, PyList_GET_ITEM(cur, N_TAG_LC));
+        if (hit < 0)
+            goto error;
+        if (!hit)
+            break;
+        set_slot(cur, N_CLOSURE, INT[IMPLICITLY_CLOSED]);
+        if (pop_stack(s) < 0)
+            goto error;
+    }
+    PyObject *parent = top(s);
+    nd = new_record(parent);
+    if (nd == NULL || fill_attrs(s, nd, &as) < 0)
+        goto error;
+    PyObject *children = PyList_New(0);
+    PyObject *ss = PyLong_FromSsize_t(k);
+    if (children == NULL || ss == NULL) {
+        Py_XDECREF(children);
+        Py_XDECREF(ss);
+        goto error;
+    }
+    PyList_SetItem(nd, N_CHILDREN, children);
+    PyList_SetItem(nd, N_SRC_START, ss);
+    set_slot(nd, N_KIND, INT[ELEMENT]);
+    set_slot(nd, N_TAG, tag);
+    set_slot(nd, N_TAG_LC, tag_lc);
+    set_slot(nd, N_TERMINATED, Py_True);
+    set_slot(nd, N_POSS_ENT, Py_False);
+    PyObject *inner = span(s, w0, w1);
+    if (inner == NULL)
+        goto error;
+    PyList_SetItem(nd, N_INNER_WS, inner);
+    if (end_kind == END_BAD)
+        set_slot(nd, N_BAD_TERM, S_EQ);
+    int is_void = end_kind == END_SELF;
+    if (end_kind == END_GT) {
+        is_void = PySet_Contains(VOID_ELEMENTS, tag_lc);
+        if (is_void < 0)
+            goto error;
+    }
+    if (is_void) {
+        /* pushed and popped at once: the stack and the math/svg counter
+         * end where they began, and an empty table has nothing to repair */
+        PyObject *se = PyLong_FromSsize_t(i);
+        if (se == NULL)
+            goto error;
+        PyList_SetItem(nd, N_SRC_END, se);
+        set_slot(nd, N_CLOSURE,
+                 INT[end_kind == END_SELF ? SELF_CLOSED : VOID_CLOSED]);
+    } else {
+        set_slot(nd, N_SRC_END, INT_M1);
+    }
+    PyObject *nd_ref = nd;
+    nd = NULL;
+    if (append_node(s, nd_ref, parent, &idx) < 0)
+        goto error;
+    if (s->sniff != NULL && is_tag(tag_lc, "meta") && sniff(s, &as) < 0)
+        goto error;
+    if (is_void) {
+        counts[ST_VOID]++;
+        r = i;
+        goto done;
+    }
+    if (PyList_Append(s->stack, idx) < 0)
+        goto error;
+    if ((is_tag(tag_lc, "math") || is_tag(tag_lc, "svg"))
+            && bump_math_or_svg(s, 1) < 0)
+        goto error;
+    if (end_kind == END_BAD) {
+        s->errors++;
+        counts[ST_BAD_TERM]++;
+        r = i;
+        goto done;
+    }
+    counts[ST_START]++;
+    int raw = PySequence_Contains(RAW_TEXT_TAGS, tag_lc);
+    if (raw < 0)
+        goto error;
+    r = raw ? raw_text(s, i, tag_lc) : i;
+    goto done;
+eof:
+    counts[ST_OFF_START_EOF]++;
+    r = 0;
+    goto done;
+error:
+    r = -1;
+done:
+    if (as.a != as.local)
+        PyMem_Free(as.a);
+    Py_XDECREF(tag);
+    Py_XDECREF(nd);
+    Py_XDECREF(idx);
+    Py_DECREF(tag_lc);
+    return r;
+}
+
+/* '<!--' at k: the comment closes at the first '>' after a dash run of
+ * length m with m % 3 == 2 */
+static Py_ssize_t comment(Scan *s, Py_ssize_t k)
+{
+    Py_ssize_t start = k + 4, scan = start, e = -1;
+    for (;;) {
+        Py_ssize_t g = find_char(s, '>', scan);
+        if (g == -2)
+            return -1;
+        if (g < 0)
+            break;
+        Py_ssize_t d = g - 1;
+        while (d >= start && CH(s, d) == '-')
+            d--;
+        Py_ssize_t m = g - 1 - d;
+        if (m >= 2 && m % 3 == 2) {
+            e = g;
+            break;
+        }
+        scan = g + 1;
+    }
+    counts[ST_COMMENT]++;
+    if (e < 0) {
+        s->errors++;
+        return add_leaf(s, COMMENT, start, s->n, 0, 0, k, s->n) < 0
+            ? -1 : s->n;
+    }
+    return add_leaf(s, COMMENT, start, e - 2, 1, 0, k, e + 1) < 0
+        ? -1 : e + 1;
+}
+
+/* the text run from i to the next markup start (or EOF); returns that
+ * offset and sets *c2 to the char after its '<' (0 at EOF) */
+static Py_ssize_t text_run(Scan *s, Py_ssize_t i, int empty_end_tag,
+                           Py_UCS4 *c2_out)
+{
+    Py_ssize_t n = s->n, j = i, k;
+    Py_UCS4 c2 = 0;
+    for (;;) {
+        k = find_char(s, '<', j);
+        if (k == -2)
+            return -1;
+        if (k < 0) {
+            k = n;
+            break;
+        }
+        int has2 = k + 1 < n;
+        c2 = has2 ? CH(s, k + 1) : 0;
+        if (has2 && is_markup_start(c2)) {
+            if (c2 == '/' && !empty_end_tag) {
+                int has3 = k + 2 < n;
+                Py_UCS4 c3 = has3 ? CH(s, k + 2) : 0;
+                if (has3 && c3 != '/' && is_markup_start(c3))
+                    break;
+                j = has3 ? k + 3 : k + 2;
+                continue;
+            }
+            break;
+        }
+        /* literal '<': it and the following char are text */
+        j = has2 ? k + 2 : k + 1;
+    }
+    if (k > i) {
+        if (add_leaf(s, TEXT, i, k, 1, 1, i, k) < 0)
+            return -1;
+        counts[ST_TEXT]++;
+    }
+    if (k == n) {
+        /* text that is not all whitespace leaves the reference in
+         * AT_MARKUP_START at EOF: one wrap-up error */
+        for (Py_ssize_t p = i; p < n; p++) {
+            Py_UCS4 c = CH(s, p);
+            if (!is_ws(c) && c <= 0xFFFF) {
+                s->errors++;
+                break;
+            }
+        }
+    }
+    *c2_out = c2;
+    return k;
+}
+
+static PyObject *scan(PyObject *self, PyObject *const *args, Py_ssize_t nargs)
+{
+    if (nargs != 7) {
+        PyErr_SetString(PyExc_TypeError, "scan() takes 7 arguments");
+        return NULL;
+    }
+    Scan s;
+    s.t = args[0];
+    Py_ssize_t i = PyLong_AsSsize_t(args[1]);
+    s.nodes = args[2];
+    s.stack = args[3];
+    s.b = args[4];
+    int empty_end_tag = PyObject_IsTrue(args[5]);
+    s.sniff = args[6] == Py_None ? NULL : args[6];
+    if ((i == -1 || empty_end_tag < 0) && PyErr_Occurred())
+        return NULL;
+    if (!PyUnicode_Check(s.t) || !PyList_Check(s.nodes)
+            || !PyList_Check(s.stack)) {
+        PyErr_SetString(PyExc_TypeError, "scan(str, int, list, list, ...)");
+        return NULL;
+    }
+    if (PyUnicode_READY(s.t) < 0)
+        return NULL;
+    s.kind = PyUnicode_KIND(s.t);
+    s.data = PyUnicode_DATA(s.t);
+    s.n = PyUnicode_GET_LENGTH(s.t);
+    s.errors = 0;
+
+    while (i < s.n) {
+        Py_UCS4 c2;
+        Py_ssize_t k = text_run(&s, i, empty_end_tag, &c2);
+        if (k < 0)
+            return NULL;
+        if (k >= s.n) {
+            i = s.n;
+            break;
+        }
+        Py_ssize_t next;
+        if (c2 == '/') {
+            next = end_tag(&s, k);
+            if (next == 0)
+                counts[ST_OFF_END]++;
+        } else if (c2 == '!') {
+            if (k + 3 < s.n && CH(&s, k + 2) == '-' && CH(&s, k + 3) == '-') {
+                next = comment(&s, k);
+            } else {
+                next = declaration(&s, k);
+                if (next == 0)
+                    counts[ST_OFF_DECL]++;
+            }
+        } else if (c2 == '?') {
+            counts[ST_OFF_PI]++;
+            next = 0;
+        } else {
+            next = start_tag(&s, k);
+        }
+        if (next < 0)
+            return NULL;
+        if (next == 0) {
+            i = k;
+            break;
+        }
+        i = next;
+    }
+    return Py_BuildValue("nl", i, s.errors);
+}
+
+static PyObject *setup(PyObject *self, PyObject *args)
+{
+    PyObject *oic, *voids, *raw;
+    if (!PyArg_ParseTuple(args, "O!O!O!", &PyDict_Type, &oic,
+                          &PyFrozenSet_Type, &voids, &PyTuple_Type, &raw))
+        return NULL;
+    Py_INCREF(oic);
+    Py_XSETREF(OPEN_IMPLIES_CLOSE, oic);
+    Py_INCREF(voids);
+    Py_XSETREF(VOID_ELEMENTS, voids);
+    Py_INCREF(raw);
+    Py_XSETREF(RAW_TEXT_TAGS, raw);
+    Py_RETURN_NONE;
+}
+
+static PyObject *stats(PyObject *self, PyObject *unused)
+{
+    PyObject *d = PyDict_New();
+    if (d == NULL)
+        return NULL;
+    for (int j = 0; j < ST_COUNT; j++) {
+        PyObject *v = PyLong_FromUnsignedLongLong(counts[j]);
+        if (v == NULL || PyDict_SetItemString(d, STAT_NAMES[j], v) < 0) {
+            Py_XDECREF(v);
+            Py_DECREF(d);
+            return NULL;
+        }
+        Py_DECREF(v);
+    }
+    return d;
+}
+
+static PyObject *reset_stats(PyObject *self, PyObject *unused)
+{
+    memset(counts, 0, sizeof counts);
+    Py_RETURN_NONE;
+}
+
+static PyMethodDef methods[] = {
+    {"scan", (PyCFunction)(void (*)(void))scan, METH_FASTCALL,
+     "scan(t, i, nodes, open_stack, builder, empty_end_tag, sniff)"
+     " -> (offset of the first token not owned, errors counted)"},
+    {"setup", setup, METH_VARARGS,
+     "setup(OPEN_IMPLIES_CLOSE, VOID_ELEMENTS, RAW_TEXT_TAGS)"},
+    {"stats", stats, METH_NOARGS, "per-branch token counts since reset"},
+    {"reset_stats", reset_stats, METH_NOARGS, "zero the token counts"},
+    {NULL, NULL, 0, NULL}
+};
+
+static struct PyModuleDef module = {
+    PyModuleDef_HEAD_INIT, "_native", "Native parse core.", -1, methods
+};
+
+static PyObject *intern(const char *s)
+{
+    return PyUnicode_InternFromString(s);
+}
+
+PyMODINIT_FUNC PyInit__native(void)
+{
+    for (int j = 0; j < 5; j++)
+        INT[j] = PyLong_FromLong(j);
+    INT_M1 = PyLong_FromLong(-1);
+    S_EMPTY = PyUnicode_New(0, 0);
+    S_DQ = intern("\"");
+    S_SQ = intern("'");
+    S_EQ = intern("=");
+    S_LT_SLASH = intern("</");
+    S_POP = intern("pop");
+    S_EXAMINE_TABLE = intern("_examine_table");
+    S_IN_MATH_OR_SVG = intern("in_math_or_svg");
+    S_LOWER = intern("lower");
+    if (PyErr_Occurred())
+        return NULL;
+    return PyModule_Create(&module);
+}

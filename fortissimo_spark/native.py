@@ -1,0 +1,80 @@
+"""Build and load the native parse core (``_native.c``) on first import.
+
+The C source ships inside the package, so a ``--py-files`` zip carries it
+too: it is read through ``importlib.resources`` and compiled with the
+interpreter's own ``sysconfig`` compiler and include path into a per-user
+cache keyed by the source hash and the extension suffix.  One host builds
+it once: the build runs under a file lock and lands by atomic rename, so
+concurrent workers wait for it instead of compiling again.
+
+Without a working compiler (or Python headers) or a writable home
+directory ``load()`` returns None and the parser keeps to its Python
+general machine.
+"""
+
+from __future__ import annotations
+
+import fcntl
+import hashlib
+import importlib.resources
+import os
+import shlex
+import subprocess
+import sysconfig
+import tempfile
+import warnings
+from importlib.machinery import ExtensionFileLoader
+from importlib.util import module_from_spec, spec_from_loader
+
+__all__ = ["load"]
+
+
+def _cache_dir() -> str:
+    """The per-user build cache, outside any checkout.  Only the home
+    directory qualifies: a shared directory such as /tmp would let another
+    user plant the library first."""
+    home = os.path.expanduser("~")
+    if not os.access(home, os.W_OK):
+        raise OSError(f"home directory {home!r} is not writable")
+    return os.path.join(home, ".cache", "fortissimo_spark")
+
+
+def _build(src: bytes, out: str) -> None:
+    cc = shlex.split(sysconfig.get_config_var("CC") or "cc")
+    include = sysconfig.get_paths()["include"]
+    with tempfile.TemporaryDirectory(dir=os.path.dirname(out)) as tmp:
+        c_path = os.path.join(tmp, "_native.c")
+        so_path = os.path.join(tmp, os.path.basename(out))
+        with open(c_path, "wb") as f:
+            f.write(src)
+        subprocess.run(cc + ["-O2", "-shared", "-fPIC", "-I", include,
+                             c_path, "-o", so_path],
+                       check=True, capture_output=True)
+        os.replace(so_path, out)
+
+
+def load():
+    """The compiled ``_native`` module, building it if the cache lacks it;
+    None when it cannot be built."""
+    try:
+        src = importlib.resources.files(__package__).joinpath(
+            "_native.c").read_bytes()
+        suffix = sysconfig.get_config_var("EXT_SUFFIX") or ".so"
+        key = hashlib.sha256(src + suffix.encode()).hexdigest()[:16]
+        directory = _cache_dir()
+        path = os.path.join(directory, f"_native_{key}{suffix}")
+        if not os.path.exists(path):
+            os.makedirs(directory, mode=0o700, exist_ok=True)
+            with open(path + ".lock", "w") as lock:
+                fcntl.flock(lock, fcntl.LOCK_EX)
+                if not os.path.exists(path):
+                    _build(src, path)
+        loader = ExtensionFileLoader(f"{__package__}._native", path)
+        module = module_from_spec(spec_from_loader(loader.name, loader))
+        loader.exec_module(module)
+        return module
+    except (OSError, ImportError, subprocess.CalledProcessError) as e:
+        detail = getattr(e, "stderr", b"") or b""
+        warnings.warn(f"native parse core unavailable, using the Python "
+                      f"parser: {e} {detail.decode(errors='replace')[-500:]}")
+        return None

@@ -30,17 +30,26 @@ Replicated reference quirks (cites into the reference source):
 * html-parser.ts:1140-1147 — CDATA is recognized only when ``[CDATA[`` is
   complete *and* at least one more char follows before EOF.
 
-Fast-path contract.  In HTML mode four fused regexes read the common tag
-shapes in one match each: ``_RE_STAG_FAST`` (a whole start tag with zero or
-one attribute), ``_RE_ATTR_FAST`` (one attribute), ``_RE_TAG_CLOSE`` (the
-end of a start tag) and ``_RE_END_FAST`` (a simple end tag).  Every group
-of every one of them has exactly one reading.  A shape they cannot read
-that way does not match, and goes to the general state machine, which is
-the reference: for any input, a fast path must build exactly what the
-general machine would.  There is no switch for this.  ``parse()`` binds the
-four regexes from the module globals on every call, so
-``tests/test_parser_fastpaths.py`` replaces any of them with a regex that
-never matches and checks that the parse does not change.
+Native hand-off contract.  In HTML mode with ``positions=False`` (the
+only mode ``kernel.decode_parse`` uses) ``parse()`` hands the document to
+the native core, ``_native.c``.  It reads every token it owns (text runs,
+``<!--`` comments, end tags closed by ``>``, start tags with any number of
+attributes, void elements, implied closes and the raw-text scan), appends
+the same 24-slot node records to ``DocBuilder.nodes`` and returns the
+offset of the first token it does not own.  The general state machine
+below reads that one token and calls back in.  Tree repair is Python's
+alone: the core calls ``DocBuilder.pop`` for an end tag that is not on top
+of the stack and ``DocBuilder._examine_table`` when a table closes, and
+while no charset is known it hands each ``meta`` tag's attributes to the
+Python charset sniff.  Everything else (``<?``, CDATA, an xhtml doctype,
+EOF inside a tag or an end tag) goes to the general machine.
+``positions=True`` and xml mode never enter the core.  The general machine is
+the reference: for any input the native parse must build exactly what it
+builds.  ``parse()`` reads ``_NATIVE_SCAN`` from the module globals on
+every call, so ``tests/test_parser_fastpaths.py`` sets it to None and
+checks that the parse does not change.  ``NATIVE`` says whether the core
+loaded (see ``native.py``); without a compiler the general machine reads
+everything.
 """
 
 from __future__ import annotations
@@ -49,15 +58,17 @@ import re
 from bisect import bisect_right
 
 from . import dom as D
+from . import native as _native_build
 from .dom import (
-    ELEMENT, EXPLICITLY_CLOSED, IMPLICITLY_CLOSED, OPEN_IMPLIES_CLOSE,
+    ELEMENT, IMPLICITLY_CLOSED, OPEN_IMPLIES_CLOSE,
     SELF_CLOSED, TEXT, UNCLOSED, VOID_CLOSED,
-    DocBuilder, N_BAD_TERM, N_CHILDREN, N_CLOSURE, N_END_COL, N_END_LINE,
-    N_END_TAG, N_INNER_WS, N_PARENT, N_SRC_END, N_TAG_LC,
+    DocBuilder, N_BAD_TERM, N_CHILDREN, N_CLOSURE,
+    N_INNER_WS, N_PARENT, N_SRC_END, N_TAG_LC,
     POP_SELF, POP_VOID, VOID_ELEMENTS,
 )
 
-__all__ = ["ParseResult", "parse", "check_encoding", "normalize_encoding_name"]
+__all__ = ["ParseResult", "parse", "check_encoding", "normalize_encoding_name",
+           "NATIVE"]
 
 _WS = " \t\n\f\r"
 _WS_SET = frozenset(_WS)
@@ -87,47 +98,13 @@ _RE_CHARSET_IN_CONTENT = re.compile(r"\bcharset[ \n\r\t\f]*=[ \n\r\t\f]*([\w-]+)
 
 _RAW_TEXT_TAGS = ("script", "style", "textarea")
 
-# --- fused fast-path regexes (HTML mode only; see the module docstring for
-# the contract they keep with the general state machine) --------------------
-# tag whitespace incl. the astral-chars-as-whitespace quirk
-_TAG_WS = r"[ \t\n\f\r\U00010000-\U0010ffff]"
-# end of a start tag: optional PLAIN whitespace then '>' or '/>' (astral ws
-# fails the match and takes the slow path, which applies the quirk)
-_RE_TAG_CLOSE = re.compile(r"([ \t\n\f\r]*)(/?)>")
-# simple end tag: '</' name [plain-ws]* '>' with no leading whitespace
-# (first char can't be astral: the gatherer would treat it as whitespace)
-_RE_END_FAST = re.compile(
-    r"([^ \t\n\f\r>\U00010000-\U0010ffff][^ \n\r\t\f/>]*)([ \t\n\f\r]*)>")
-# one whole attribute in a single match:
-#   1 leading ws, 2 name, 3 ws-before-'=', 4 ws-after-'=', 5 raw value
-# (groups 3-5 are None for a valueless attribute).  The quoted alternatives
-# span '>' and newlines exactly like the find(quote) scan.  An unterminated
-# quote falls through to the unquoted class and an empty value matches only
-# before '>' or EOF; the use site hands both to the general machine.  Name:
-# first char can't be astral (same gatherer argument), the rest mirrors
-# _RE_ATTR_LOOSE.
-_RE_ATTR_FAST = re.compile(
-    "(" + _TAG_WS + "*)"
-    r"([^ \t\n\f\r>/=\U00010000-\U0010ffff][^ \t\n\f\r>/=]*)"
-    "(?:(" + _TAG_WS + "*)=(" + _TAG_WS + "*)"
-    "(\"[^\"]*\"|'[^']*'|[^ \t\n\f\r>]*))?")
-# a whole start tag with zero or one attribute, applied at k+1 (the first
-# char is already known to be in _MARKUP_START_SET and not '/', '!' or '?').
-# Groups: 1 tag name; 2 leading ws, 3 attribute name, 4/5 ws around '=',
-# 6 double-quoted, 7 single-quoted, 8 unquoted value; 9 close ws, 10 slash.
-# A quoted value must be followed by the tag close.  An unquoted value never
-# starts with a quote or an astral char and never ends in '/' (the general
-# machine strips that slash), so '<a b=1/>' reads value '1' and self-closes
-# while '<a b=1/ >' and '<a b=//>' miss.  Whitespace is plain: astral
-# whitespace misses.
-_RE_STAG_FAST = re.compile(
-    r"([^ \n\r\t\f/>]+)"
-    r"(?:([ \t\n\f\r]+)"
-    r"([^ \t\n\f\r>/=\U00010000-\U0010ffff][^ \t\n\f\r>/=]*)"
-    r"(?:([ \t\n\f\r]*)=([ \t\n\f\r]*)"
-    r"(?:\"([^\"]*)\"|'([^']*)'"
-    r"|([^ \t\n\f\r>\"'\U00010000-\U0010ffff][^ \t\n\f\r>]*(?<!/))))?)?"
-    r"([ \t\n\f\r]*)(/?)>")
+_native = _native_build.load()
+if _native is not None:
+    _native.setup(OPEN_IMPLIES_CLOSE, VOID_ELEMENTS, _RAW_TEXT_TAGS)
+# the native core's entry point (None: the general machine reads all)
+_NATIVE_SCAN = _native.scan if _native is not None else None
+NATIVE = _NATIVE_SCAN is not None
+
 # a char that is neither HTML whitespace nor astral (the wrap-up
 # trailing-text check: C-level search instead of a per-char Python loop)
 _RE_NON_WS_BMP = re.compile(r"[^ \t\n\f\r\U00010000-\U0010ffff]")
@@ -286,11 +263,8 @@ def parse(source: str, *, empty_end_tag: bool = True, eol="\n", tab_size: int = 
     add_leaf = b.add_leaf
     pop = b.pop
     add_attribute = b.add_attribute
-    # bound from the module globals on every call (see module docstring)
-    stag_fast = _RE_STAG_FAST.match
-    attr_fast = _RE_ATTR_FAST.match
-    tag_close = _RE_TAG_CLOSE.match
-    end_fast = _RE_END_FAST.match
+    # read from the module globals on every call (see module docstring)
+    native = None if positions else _NATIVE_SCAN
     errors = 0
     charset: str | None = None
     checking_charset = False
@@ -315,8 +289,27 @@ def parse(source: str, *, empty_end_tag: bool = True, eol="\n", tab_size: int = 
             else:
                 pending_charset = cs
 
+    def meta_sniff(names, values):
+        # the native core's call for a meta tag's valued attributes: the
+        # two-step restarts at the tag, as at every start tag below
+        nonlocal content_type, pending_charset
+        content_type = False
+        pending_charset = None
+        for name, value in zip(names, values):
+            check_charset(name, value)
+        return not charset
+
     i = 0
     while i < n:
+        if native is not None and not xml:
+            # the native core reads every token it owns and stops at the
+            # first one it does not; the general machine below reads that
+            # one token
+            i, e = native(t, i, nodes, stack, b, empty_end_tag,
+                          None if charset else meta_sniff)
+            errors += e
+            if i >= n:
+                break
         # ---------------- OUTSIDE_MARKUP: gather text ----------------
         run_start = i
         j = i
@@ -367,33 +360,7 @@ def parse(source: str, *, empty_end_tag: bool = True, eol="\n", tab_size: int = 
 
         # ---------------- markup dispatch at k; c2 = t[k+1] ----------------
         if c2 == "/":
-            # ---- end tag: fused fast path for the common '</name>' shape --
-            if not xml:
-                em = end_fast(t, k + 2)
-                if em is not None:
-                    tag, ws2 = em.group(1, 2)
-                    g = em.end()
-                    tag_lc = tag.lower()
-                    cur = stack[-1]
-                    nd2 = nodes[cur]
-                    if nd2[N_TAG_LC] == tag_lc and len(stack) > 1:
-                        # inline of DocBuilder.pop's matching-top case
-                        stack.pop()
-                        nd2[N_CLOSURE] = EXPLICITLY_CLOSED
-                        nd2[N_END_TAG] = "</" + tag + ws2 + ">"
-                        nd2[N_END_LINE] = mk_ln
-                        nd2[N_END_COL] = mk_col
-                        nd2[N_SRC_END] = g
-                        if tag_lc == "table":
-                            b._examine_table(cur)
-                        if tag_lc == "math" or tag_lc == "svg":
-                            b.in_math_or_svg -= 1
-                    elif not pop(tag_lc, "</" + tag + ws2 + ">",
-                                 mk_ln, mk_col, g):
-                        errors += 1
-                    i = g
-                    continue
-            # ---- end tag (general: xml mode, syntax errors, EOF) ----
+            # ---- end tag ----
             i = k + 2
             iw = ws_end(i)
             if iw >= n:
@@ -582,16 +549,10 @@ def parse(source: str, *, empty_end_tag: bool = True, eol="\n", tab_size: int = 
                 b.xml_mode = True
             continue
 
-        # ---- start tag: one node-construction block for every shape ----
-        sm = stag_fast(t, k + 1) if not xml else None
-        if sm is not None:
-            (tag, w, name, pre_eq, w3, dq, sq, uq, inner_ws,
-             slash) = sm.groups()
-            i = sm.end()
-        else:
-            m = (_RE_TAG_STRICT if xml else _RE_TAG_LOOSE).match(t, k + 2)
-            tag = c2 + m.group(0)
-            i = m.end()
+        # ---- start tag ----
+        m = (_RE_TAG_STRICT if xml else _RE_TAG_LOOSE).match(t, k + 2)
+        tag = c2 + m.group(0)
+        i = m.end()
         tag_lc = tag if xml else tag.lower()
         node = len(nodes)
         nd = [ELEMENT, tag, tag_lc, -1, [], UNCLOSED, None, True, False,
@@ -617,69 +578,6 @@ def parse(source: str, *, empty_end_tag: bool = True, eol="\n", tab_size: int = 
         pending_charset = None
         tag_end_kind = None  # '>', '/>', 'eof', 'bad'
 
-        if sm is not None:
-            # the fused tag's one attribute, if any
-            if name is not None:
-                if pre_eq is None:
-                    value = equals = quote = ""
-                else:
-                    equals = pre_eq + "=" + w3
-                    if dq is not None:
-                        value, quote = dq, '"'
-                    elif sq is not None:
-                        value, quote = sq, "'"
-                    else:
-                        value, quote = uq, ""
-                    if checking_charset:
-                        check_charset(name, value)
-                nd[14].append(name); nd[15].append(value)
-                nd[16].append(w); nd[17].append(equals); nd[18].append(quote)
-            nd[N_INNER_WS] = inner_ws
-            tag_end_kind = "/>" if slash else ">"
-        elif not xml:
-            # ---- fused HTML attribute loop: one regex match per attribute,
-            # one per tag close.  Whatever neither reads ('/', '>', '=',
-            # astral whitespace, EOF, an unterminated quote, '=' before '>'
-            # or EOF) breaks into the general machine at i ----
-            while True:
-                am = attr_fast(t, i)
-                if am is None:
-                    em = tag_close(t, i)
-                    if em is not None:
-                        nd[N_INNER_WS], slash = em.group(1, 2)
-                        i = em.end()
-                        tag_end_kind = "/>" if slash else ">"
-                    break
-                w, name, pre_eq, w3, value = am.group(1, 2, 3, 4, 5)
-                if pre_eq is None:
-                    # valueless: the ws after the name is re-scanned as the
-                    # next attribute's leading space (identical maximal run)
-                    value = equals = quote = ""
-                    i = am.end()
-                else:
-                    q0 = value[:1]
-                    if q0 == '"' or q0 == "'":
-                        if len(value) < 2 or value[-1] != q0:
-                            break  # unterminated quote
-                        value = value[1:-1]
-                        quote = q0
-                        i = am.end()
-                    elif q0:
-                        quote = ""
-                        i = am.end()
-                        if value[-1] == "/":
-                            value = value[:-1]
-                            i -= 1
-                    else:
-                        break  # '=' then '>' or EOF
-                    equals = pre_eq + "=" + w3
-                    if checking_charset:
-                        check_charset(name, value)
-                nd[14].append(name); nd[15].append(value)
-                nd[16].append(w); nd[17].append(equals); nd[18].append(quote)
-
-        # ---- general machine: xml mode, and the rest of any HTML tag the
-        # fast paths above did not read ----
         attr_re = _RE_ATTR_STRICT if xml else _RE_ATTR_LOOSE
         pend_ws: str | None = None
 

@@ -1,9 +1,16 @@
 """Packaging helpers for ``spark-submit --py-files`` deployment.
 
-The engine is pure Python + stdlib + numpy/pandas (worker side), so a single
-zip of the package is the whole deployable artifact:
+The engine is Python + stdlib + numpy/pandas (worker side) plus one C
+source, the native parse core ``_native.c``, so a single zip of the package
+is the whole deployable artifact:
 
     spark-submit --py-files fortissimo_spark.zip job.py
+
+Each executor host builds the core from the zipped source on first import,
+once per host, into a per-user cache (``native.py``).  An executor without
+gcc and the Python headers cannot build it and parses with the Python
+general machine instead: same output, but parsing is about 4x slower on
+crawl_agg pages and 1.7x slower on tag_soup pages than with the core.
 
 For programmatic use (and the local-cluster scaling evidence) the same zip
 is attached via ``SparkContext.addPyFile``.
@@ -27,7 +34,7 @@ def build_pyfiles_zip(out_path: str | None = None) -> str:
     os.makedirs(os.path.dirname(out_path), exist_ok=True)
     with zipfile.ZipFile(out_path, "w", zipfile.ZIP_DEFLATED) as zf:
         for name in sorted(os.listdir(_PKG_DIR)):
-            if name.endswith(".py"):
+            if name.endswith(".py") or name == "_native.c":
                 zf.write(os.path.join(_PKG_DIR, name),
                          arcname=f"fortissimo_spark/{name}")
     return out_path

@@ -1,11 +1,12 @@
 """Adversarial parser fixtures: every tag, attribute and markup edge the
-fused fast paths in ``fortissimo_spark.parser`` touch.
+native core of ``fortissimo_spark.parser`` touches or hands off.
 
 Shared by ``bench/parity_dump.py`` (byte-level snapshots against a parent
-checkout) and ``tests/test_parser_fastpaths.py`` (fast paths against the
-general state machine).  Add a fixture here before adding a new tokenizer
-shape.
+checkout) and ``tests/test_parser_fastpaths.py`` (the native core against
+the general state machine).  Add a fixture here before adding a new
+tokenizer shape.
 """
+import random
 
 FIXTURES = [
     "<div>", "<div >", "<div/>", "<div />", "<br>", "<input disabled>",
@@ -39,4 +40,34 @@ FIXTURES = [
     "<table><thead><tr><th>h</th></tr></thead><tr><td>a</td></tr>"
     "<tr><td>b</td></tr></table>",
     "<table>\n<td>a</td>\n<td>b</td>\n</table>",
+    # string kinds, non-ASCII lowercasing, names longer than the core's
+    # string cache, KELVIN SIGN (lowercases to 'k')
+    "\u263a<p title='\u263a'>\u263a</P>", "<\u00e9>x</\u00c9>",
+    "<D\u0130V>x</d\u0130v>", "<\u212aBD>x</kbd>", "<textarea>\u212a</textarea>",
+    "<" + "x" * 30 + " " + "a" * 30 + "=" + "v" * 30 + ">y</" + "X" * 30 + ">",
+    "<SCRIPT>a</ScRiPt >b", "<Table><TD>a</td></TABLE>",
+    # declarations and doctypes (an xhtml doctype switches to xml mode)
+    "<!DOCTYPE html>x", "<!doctypehtml>", "<!doctype>", "<!doctype_x>",
+    "<! doctype html>", "<!doctype html", "<![if IE]>x<![endif]>",
+    "<!DOCTYPE html PUBLIC '-//W3C//DTD XHTML 1.0 Strict//EN'><p a=b>x",
+    # the meta charset two-step across tags
+    "<meta charset>x", "<meta charset=''><meta charset=utf-8>",
+    "<meta charset=utf-8><meta charset=latin-1>",
+    "<meta http-equiv=content-type content='text/html; charset=koi8-r'>",
+    "<meta content='charset=x'><meta http-equiv=Content-Type>",
+    "<meta content='charset=x' http-equiv=content-type =>",
+    "<META CHARSET=\"Shift_JIS\"/><p>",
 ]
+
+
+def table_soups(n: int, seed: int = 5):
+    """``n`` seeded tables of bare, nested and closed cells, rows and
+    sections (the shapes table repair rewrites)."""
+    rng = random.Random(seed)
+    parts = ["<td>a", "<td>b</td>", "<th>h</th>", "<tr>", "</tr>", "<tbody>",
+             "</tbody>", "<thead>", "</thead>", "<tfoot>", "\n", " ",
+             "<caption>c</caption>", "<p>x</p>", "<!--c-->"]
+    for _ in range(n):
+        yield ("<table>" + "".join(rng.choice(parts)
+                                   for _ in range(rng.randint(1, 10)))
+               + "</table>")

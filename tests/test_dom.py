@@ -128,15 +128,8 @@ def test_table_repair_moves_cells_and_rows_once():
 
 
 def test_table_repair_round_trips_table_soup():
-    import random
-    rng = random.Random(5)
-    parts = ["<td>a", "<td>b</td>", "<th>h</th>", "<tr>", "</tr>", "<tbody>",
-             "</tbody>", "<thead>", "</thead>", "<tfoot>", "\n", " ",
-             "<caption>c</caption>", "<p>x</p>", "<!--c-->"]
-    for _ in range(20_000):
-        html = ("<table>" + "".join(rng.choice(parts)
-                                    for _ in range(rng.randint(1, 10)))
-                + "</table>")
+    from tests.parser_fixtures import table_soups
+    for html in table_soups(20_000):
         r = parse(html)
         assert r.to_string() == html
         seen = _reachable(r.dom)

@@ -1,14 +1,24 @@
-"""The parser's fused fast paths, checked against its general machine.
+"""The parser's native core, checked against its general machine.
 
-Focused pins for each boundary between a fast-path regex and the general
-state machine, then the differential test: every fast-path regex (alone,
-then all four together) is replaced with a never-matching one, which sends
-the shapes it covers through the general machine, and the parse must not
-change.  Inputs: every parity fixture, every prefix of a few of them (EOF at
-every offset) and 10^5 seeded generated tag soups, in both position modes.
+Focused pins for each boundary between the native core and the general
+state machine, then the differential test: every document is parsed
+through the native core and again with it disabled (``_NATIVE_SCAN`` set
+to None, so the general machine reads every token), and the two parses
+must agree on every node field, the error count, the charset and the
+element counts.  Inputs: every parity fixture, every prefix of a few of
+them (EOF at every offset), 10^5 seeded generated tag soups and 2*10^4
+table soups.  Then the build: the core must load wherever a compiler and
+the Python headers exist, ship in the ``--py-files`` zip, and its absence
+must leave ``parse()`` working.
 """
+import json
+import os
 import random
-import re
+import shlex
+import shutil
+import subprocess
+import sys
+import sysconfig
 
 import pytest
 
@@ -17,7 +27,9 @@ from fortissimo_spark.dom import (
     EXPLICITLY_CLOSED, SELF_CLOSED, UNCLOSED, VOID_CLOSED,
 )
 from fortissimo_spark.parser import parse
-from tests.parser_fixtures import FIXTURES
+from tests.parser_fixtures import FIXTURES, table_soups
+
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def _attrs(b, node):
@@ -137,23 +149,23 @@ def test_token_count_contract():
     assert d["token_count"] == 0
 
 
-# --- differential test: fast paths vs the general machine -------------------
+# --- differential test: the native core vs the general machine -------------
 
-FAST_PATHS = ("_RE_STAG_FAST", "_RE_ATTR_FAST", "_RE_TAG_CLOSE", "_RE_END_FAST")
-DISABLED_SETS = [(name,) for name in FAST_PATHS] + [FAST_PATHS]
-NEVER = re.compile(r"(?!)")
 GENERATED_DOCS = 100_000
+TABLE_SOUPS = 20_000
 SEED = 20_251_017
 
 # generator alphabet: quotes, '=', '/', plain and astral whitespace, meta
 # charset sniffing, raw-text tags, <svg> + CDATA, comments, implied closes.
-# Well-formed shapes are weighted up so that every fast path matches often.
+# Well-formed shapes are weighted up so that every branch of the native
+# core is taken often.
 _WS = ("",) * 6 + (" ",) * 4 + ("  ", "\t", "\n", "\r\n", "\f", "\U00010000",
                               " \U0001f600 ")
 _SEP = (" ",) * 8 + ("  ", "\t", "\n", "", "\U00010000", " \U0001f600 ")
 _TAGS = ("a", "p", "P", "td", "tr", "th", "table", "tbody", "li", "ul", "dt",
          "meta", "br", "img", "svg", "math", "script", "style", "textarea",
-         "x:y", "a\U00010001", "b")
+         "x:y", "a\U00010001", "b", "DIV", "Table", "\u00e9", "D\u0130V",
+         "\u212abd", "ScRiPt", "x" * 30)
 _ANAMES = ("b", "c", "charset", "http-equiv", "content", "x\U00010002", "/",
            "=", '"', "'", "d'e")
 _VALUES = ('"x"', '"x"', "'y'", "'y'", "1", "1", "", '"', "'", '""',
@@ -163,12 +175,13 @@ _VALUES = ('"x"', '"x"', "'y'", "'y'", "1", "1", "", '"', "'", '""',
            "=c", "x\U00010003", "\U00010000x", '"unterminated', "'open")
 _CLOSES = (">",) * 8 + ("/>",) * 2 + ("/ >", "", "/", "=>", "\U00010000>")
 _TEXT = ("x", " ", "a b", "<", "<<", "&amp;", "\U00010000", "\n", "<3",
-         "< p>", "\r")
+         "< p>", "\r", "\u263a", "\u00e9", "\u212a")
 _OTHER = ("<!-- c -->", "<!-- x --->", "<!--", "<![CDATA[d]]>", "<![CDATA[",
           "]]>", "<!doctype html>", "<?pi?>", "<!x>", "</", "</ >", "</>",
           "<svg><![CDATA[e>f]]></svg>", "<script>a<b</script>",
           "<textarea></textare></textarea>",
-          "<!DOCTYPE html PUBLIC '-//W3C//DTD XHTML 1.0 Strict//EN'>")
+          "<!DOCTYPE html PUBLIC '-//W3C//DTD XHTML 1.0 Strict//EN'>",
+          "<!DOCTYPE HTML>", "<!doctype>", "<![if x]>")
 
 
 def _start_tag(rng: random.Random) -> str:
@@ -218,71 +231,137 @@ def _prefix_docs():
     return [doc[:j] for doc in rich for j in range(len(doc) + 1)]
 
 
-def _snapshot(text: str, positions: bool):
-    r = parse(text, positions=positions)
-    return (r.dom.nodes, r.errors, r.charset, r.unclosed_tags,
-            r.implicitly_closed_tags)
+def _snapshot(text: str, empty_end_tag: bool):
+    r = parse(text, positions=False, empty_end_tag=empty_end_tag)
+    return (r.dom.nodes, r.dom.open_stack, r.errors, r.charset,
+            r.unclosed_tags, r.implicitly_closed_tags, r.lines, r.xml_mode)
 
 
-class _Spy:
-    """A fast-path regex that records, in ``seen``, that it matched."""
-
-    def __init__(self, name, rx, seen):
-        self.name, self.rx, self.seen = name, rx, seen
-
-    def match(self, t, pos):
-        m = self.rx.match(t, pos)
-        if m is not None:
-            self.seen.add(self.name)
-        return m
+def _require_native():
+    # without a compiler there is nothing to compare; with one, the core
+    # must have built (test_native_core_loads_where_a_compiler_exists)
+    if not P.NATIVE and not _have_compiler():
+        pytest.skip("no C compiler and Python headers: no native core")
+    assert P.NATIVE
 
 
-def _divergences(monkeypatch, docs, positions):
-    """Compare each doc's default parse with its parse under every disabled
-    set.  Returns (divergent (set, doc) pairs, per-set count of docs that
-    exercised it).  A set none of whose regexes matched in the default
-    parse cannot change it, so that pair is not re-parsed."""
+def _divergences(monkeypatch, docs, empty_end_tag):
+    """Parse each doc through the native core, then with it disabled.
+    Returns (divergent docs, the core's per-branch token counts: tokens it
+    owned and tokens it handed to the general machine)."""
     bad = []
-    exercised = dict.fromkeys(DISABLED_SETS, 0)
+    P._native.reset_stats()
     docs = iter(docs)
     while True:
         chunk = [d for _, d in zip(range(5000), docs)]
         if not chunk:
-            return bad, exercised
-        ref = []
-        seen = set()
+            return bad, P._native.stats()
+        want = [_snapshot(d, empty_end_tag) for d in chunk]
+        counts = P._native.stats()
         with monkeypatch.context() as m:
-            for name in FAST_PATHS:
-                m.setattr(P, name, _Spy(name, getattr(P, name), seen))
-            for d in chunk:
-                seen.clear()
-                ref.append((_snapshot(d, positions), frozenset(seen)))
-        for disabled in DISABLED_SETS:
-            with monkeypatch.context() as m:
-                for name in disabled:
-                    m.setattr(P, name, NEVER)
-                for d, (want, used) in zip(chunk, ref):
-                    if used.isdisjoint(disabled):
-                        continue
-                    exercised[disabled] += 1
-                    if _snapshot(d, positions) != want:
-                        bad.append((disabled, d))
+            m.setattr(P, "_NATIVE_SCAN", None)
+            for d, w in zip(chunk, want):
+                if _snapshot(d, empty_end_tag) != w:
+                    bad.append(d)
+        # the reference pass really ran without the core
+        assert P._native.stats() == counts
 
 
-@pytest.mark.parametrize("positions", [False, True])
-def test_fast_paths_match_general_machine_on_fixtures(monkeypatch, positions):
-    bad, exercised = _divergences(monkeypatch, FIXTURES + _prefix_docs(),
-                                  positions)
+@pytest.mark.parametrize("empty_end_tag", [False, True])
+def test_fast_paths_match_general_machine_on_fixtures(monkeypatch,
+                                                      empty_end_tag):
+    _require_native()
+    bad, counts = _divergences(monkeypatch, FIXTURES + _prefix_docs(),
+                               empty_end_tag)
     assert not bad, f"{len(bad)} divergences, first: {bad[:5]!r}"
-    assert all(exercised.values()), exercised
+    # every branch of the core, owned and handed off, is exercised
+    assert all(counts.values()), counts
 
 
-@pytest.mark.parametrize("positions,ndocs", [(False, GENERATED_DOCS),
-                                             (True, GENERATED_DOCS // 5)])
-def test_fast_paths_match_general_machine_on_generated(monkeypatch, positions,
+@pytest.mark.parametrize("tables,ndocs", [(False, GENERATED_DOCS),
+                                          (True, TABLE_SOUPS)])
+def test_fast_paths_match_general_machine_on_generated(monkeypatch, tables,
                                                        ndocs):
-    bad, exercised = _divergences(monkeypatch, generated_docs(ndocs),
-                                  positions)
+    _require_native()
+    docs = table_soups(ndocs) if tables else generated_docs(ndocs)
+    bad, counts = _divergences(monkeypatch, docs, True)
     assert not bad, f"{len(bad)} divergences, first: {bad[:5]!r}"
-    # every fast path must actually carry a good share of the documents
-    assert min(exercised.values()) >= ndocs // 10, exercised
+    if tables:
+        # unwinds and table repair go through DocBuilder.pop
+        assert counts["end_pop"] >= ndocs // 2, counts
+    else:
+        # every branch counts at least one token per hundred documents
+        assert min(counts.values()) >= ndocs // 100, counts
+
+
+# --- the build --------------------------------------------------------------
+
+def _have_compiler() -> bool:
+    cc = shlex.split(sysconfig.get_config_var("CC") or "cc")[0]
+    include = sysconfig.get_paths()["include"]
+    return (shutil.which(cc) is not None
+            and os.path.exists(os.path.join(include, "Python.h")))
+
+
+def test_native_core_loads_where_a_compiler_exists():
+    # fails rather than skips: a broken build must not pass on the Python
+    # machine
+    assert P.NATIVE or not _have_compiler()
+
+
+_PROBE_DOC = ("<!doctype html><html lang=en><meta charset=utf-8><body>"
+              "<h1>T</h1><p>one<p>two <b>three</i></table>")
+_PROBE = """
+import json, sys
+import fortissimo_spark, fortissimo_spark.parser as P
+r = P.parse(sys.argv[1], positions=False)
+print(json.dumps([fortissimo_spark.__file__, P.NATIVE, r.errors,
+                  len(r.dom.nodes), r.to_string()]))
+"""
+
+
+def _probe(doc, cwd, env, path=()):
+    code = "import sys; sys.path[:0] = %r\n" % list(path) + _PROBE
+    out = subprocess.run([sys.executable, "-c", code, doc], cwd=cwd, env=env,
+                         capture_output=True, text=True, check=True)
+    return json.loads(out.stdout.splitlines()[-1])
+
+
+def test_no_compiler_falls_back_to_the_general_machine(tmp_path,
+                                                       monkeypatch):
+    # an empty cache and no compiler on PATH: the build fails at import
+    doc = _PROBE_DOC
+    env = dict(os.environ, HOME=str(tmp_path), PATH=str(tmp_path))
+    _, native, errors, n_nodes, text = _probe(doc, ROOT, env)
+    monkeypatch.setattr(P, "_NATIVE_SCAN", None)
+    r = parse(doc, positions=False)
+    assert native is False
+    assert (errors, n_nodes, text) == (r.errors, len(r.dom.nodes), doc)
+
+
+def test_unwritable_home_builds_nowhere_else(tmp_path):
+    # no usable home: no core, and nothing built in the shared temp dir
+    shared_tmp = tmp_path / "tmp"
+    shared_tmp.mkdir()
+    env = dict(os.environ, HOME=str(tmp_path / "missing"),
+               TMPDIR=str(shared_tmp))
+    doc = _PROBE_DOC
+    _, native, errors, _, text = _probe(doc, ROOT, env)
+    assert native is False
+    assert list(shared_tmp.iterdir()) == []
+    assert text == doc and errors == parse(doc).errors
+
+
+def test_pyfiles_zip_carries_the_native_core(tmp_path):
+    from fortissimo_spark.submit import build_pyfiles_zip
+    zip_path = build_pyfiles_zip(str(tmp_path / "fortissimo_spark.zip"))
+    run_dir = tmp_path / "elsewhere"
+    run_dir.mkdir()
+    # a fresh cache: the core is built from the source inside the zip
+    env = dict(os.environ, HOME=str(tmp_path))
+    doc = _PROBE_DOC
+    where, native, errors, _, text = _probe(doc, str(run_dir), env,
+                                            [zip_path])
+    assert where.startswith(zip_path)
+    assert native is True or not _have_compiler()
+    assert text == doc and errors == parse(doc).errors

@@ -15,8 +15,15 @@ Replicated reference quirks (file:line cites are into the reference):
 * dom.ts:692 — unwinding pop requires the matching stack index ``> 0``
   ("No, I really don't want >= 0"): a tag matching only the root sentinel is
   treated as unmatched.
-* dom.ts:733-738 — after every pop the open stack is re-parented
-  (``node.parent = stack[i-1]``) and the math/svg depth counter is recomputed.
+* dom.ts:733-738 — after every pop the reference re-parents the whole open
+  stack (``node.parent = stack[i-1]``) and recounts math/svg. Here that pass
+  is a no-op by invariant and is not run: every push sets a node's parent to
+  the node below it on the stack, every pop removes the top, and table
+  repair only moves children of a closing table, none of which is still on
+  the stack — so each stack entry's parent is always the entry below it, and
+  ``in_math_or_svg`` is kept equal to the number of math/svg entries by
+  counting them on and off (``tests/test_tree_building.py`` checks both after
+  every ``pop``).
 * dom.ts:617/655 — table repair treats EXPLICITLY_CLOSED sections/rows as
   ended and wraps stray ``tr``/``td``/``th`` in *synthetic* nodes that
   serialize to zero bytes (dom.ts:504).
@@ -50,10 +57,6 @@ IMPLICITLY_CLOSED = 4
 
 CLOSURE_NAMES = ["unclosed", "self_closed", "void_closed",
                  "explicitly_closed", "implicitly_closed"]
-
-# pop() sentinels mirroring the reference's undefined/null convention
-POP_VOID = object()    # reference: pop(undefined) -> VOID_CLOSED
-POP_SELF = object()    # reference: pop(null)      -> SELF_CLOSED
 
 # --- node record slots --------------------------------------------------------
 N_KIND = 0
@@ -224,12 +227,11 @@ class DocBuilder:
     # --- node construction ----------------------------------------------
 
     def new_element(self, tag: str, line: int, col: int, *,
-                    case_sensitive: bool = False, synthetic: bool = False,
-                    src_start: int = -1) -> int:
+                    synthetic: bool = False, src_start: int = -1) -> int:
         nodes = self.nodes
         idx = len(nodes)
         nodes.append([
-            ELEMENT, tag, tag if case_sensitive else tag.lower(), -1, [],
+            ELEMENT, tag, tag.lower(), -1, [],
             UNCLOSED, None, True, False, line, col, "", 0, 0,
             [], [], [], [], [], "", None, synthetic, src_start, -1,
         ])
@@ -262,9 +264,9 @@ class DocBuilder:
         return idx
 
     def count_unclosed_flat(self):
-        """Parse-end census over the flat node list (equivalent to
-        count_unclosed(0) when no node has been removed — true at the end
-        of a parse; the tree walk remains for post-mutation callers)."""
+        """Parse-end census over the flat node list: (unclosed,
+        implicitly closed) non-synthetic elements. Every node is in the
+        tree at the end of a parse, so this equals a walk from the root."""
         unclosed = implicitly = 0
         for nd in self.nodes:
             if nd[N_KIND] == ELEMENT and not nd[N_SYNTHETIC]:
@@ -277,13 +279,6 @@ class DocBuilder:
 
     # --- DomModel equivalents ---------------------------------------------
 
-    @property
-    def current(self) -> int:
-        return self.open_stack[-1] if self.open_stack else 0
-
-    def get_depth(self) -> int:
-        return len(self.open_stack) - 2
-
     def add_attribute(self, name: str, value: str = "", leading_space: str = "",
                       equals: str = "=", quote: str = '"') -> None:
         nd = self.nodes[self.open_stack[-1]]
@@ -293,52 +288,35 @@ class DocBuilder:
         nd[N_ATTR_EQUALS].append(equals)
         nd[N_ATTR_QUOTES].append(quote)
 
-    def can_do_xml_mode(self) -> bool:
-        root_children = self.nodes[0][N_CHILDREN]
-        return (len(self.open_stack) == 1 and len(root_children) == 0) or (
-            len(root_children) == 1
-            and self.serialize(root_children[0]).strip() == "")
-
-    def add_child(self, child: int) -> None:
-        cur = self.open_stack[-1]
-        self.nodes[child][N_PARENT] = cur
-        self.nodes[cur][N_CHILDREN].append(child)
-
-    def pop(self, tag_lc, end_tag_text: str | None = None,
+    def pop(self, tag_lc: str, end_tag_text: str,
             line: int = 0, col: int = 0, end_pos: int = -1) -> bool:
-        """Mirror of dom.ts:668-741. ``tag_lc`` may be POP_VOID / POP_SELF.
+        """Mirror of dom.ts:668-741 for an end tag (the parser and the
+        native core close void and self-closing tags themselves).
 
         Returns False when the closing tag was unmatched (parse error).
         """
         nodes = self.nodes
+        stack = self.open_stack
         popped = False
-        parse_error = False
-        is_sentinel = tag_lc is POP_VOID or tag_lc is POP_SELF
-        if end_tag_text is None:
-            end_tag_text = "</%s>" % ("" if is_sentinel else tag_lc)
-
-        unwound = False
-        cur = self.open_stack[-1]
+        cur = stack[-1]
         nd = nodes[cur]
-        if is_sentinel or not tag_lc or nd[N_TAG_LC] == tag_lc:
+        if nd[N_TAG_LC] == tag_lc:
             popped = True
-            self.open_stack.pop()
-            if tag_lc is POP_SELF:
-                nd[N_CLOSURE] = SELF_CLOSED
-            elif tag_lc is POP_VOID:
-                nd[N_CLOSURE] = VOID_CLOSED
-            else:
-                nd[N_CLOSURE] = EXPLICITLY_CLOSED
-                nd[N_END_TAG] = end_tag_text
-                nd[N_END_LINE] = line
-                nd[N_END_COL] = col
+            stack.pop()
+            nd[N_CLOSURE] = EXPLICITLY_CLOSED
+            nd[N_END_TAG] = end_tag_text
+            nd[N_END_LINE] = line
+            nd[N_END_COL] = col
             if end_pos >= 0:
                 nd[N_SRC_END] = end_pos
-            if nd[N_TAG_LC] == "table":
+            if tag_lc == "table":
                 self._examine_table(cur)
+            elif tag_lc == "math" or tag_lc == "svg":
+                self.in_math_or_svg -= 1
+            elif not stack:  # '<//>' closed the root: it stays open
+                stack.append(0)
 
         if not popped and not self.xml_mode:
-            stack = self.open_stack
             node_index = -1
             for i in range(len(stack) - 1, -1, -1):
                 if nodes[stack[i]][N_TAG_LC] == tag_lc:
@@ -359,7 +337,6 @@ class DocBuilder:
             # The intended semantics — a formatting end tag blocked by a
             # marker element is unmatched — is what the guard below applies.
             if node_index > 0:
-                unwound = True
                 while len(stack) > node_index:
                     cur = stack[-1]
                     nd = nodes[cur]
@@ -376,33 +353,15 @@ class DocBuilder:
                             nd[N_CLOSURE] = IMPLICITLY_CLOSED
                         if nd[N_TAG_LC] == "table":
                             self._examine_table(cur)
+                    if nd[N_TAG_LC] == "math" or nd[N_TAG_LC] == "svg":
+                        self.in_math_or_svg -= 1
                     stack.pop()
 
         if not popped:
-            child = self.new_leaf(UNMATCHED_CLOSE, end_tag_text, line, col)
-            self.add_child(child)
-            parse_error = True
-
-        # The reference recomputes math/svg depth and re-parents the whole
-        # stack after EVERY pop (dom.ts:733-738), which is quadratic in
-        # document depth. For a simple top-pop the re-parent is a no-op
-        # (parents already equal their stack predecessors), so we only run
-        # the full pass after an unwind or when the stack emptied; otherwise
-        # an O(1) counter update is behavior-identical.
-        if unwound or not self.open_stack:
-            if not self.open_stack:
-                self.open_stack.append(0)
-            self.in_math_or_svg = 0
-            stack = self.open_stack
-            for index, node in enumerate(stack):
-                if nodes[node][N_TAG_LC] in ("math", "svg"):
-                    self.in_math_or_svg += 1
-                if index > 0:
-                    nodes[node][N_PARENT] = stack[index - 1]
-        elif popped and nd[N_TAG_LC] in ("math", "svg"):
-            self.in_math_or_svg -= 1
-
-        return not parse_error
+            self.add_leaf(UNMATCHED_CLOSE, end_tag_text, line, col)
+        # no re-parent pass after the pop (dom.ts:733-738): see the module
+        # docstring for the stack invariant that makes it a no-op
+        return popped
 
     def should_parse_cdata(self) -> bool:
         return self.xml_mode or self.in_math_or_svg > 0
@@ -610,23 +569,6 @@ class DocBuilder:
                 kids = nd[N_CHILDREN]
                 if kids:
                     stack.extend(reversed(kids))
-
-    def count_unclosed(self, node: int = 0):
-        nodes = self.nodes
-        unclosed = implicitly = 0
-        stack = [node]
-        while stack:
-            nd = nodes[stack.pop()]
-            if nd[N_KIND] == ELEMENT:
-                if not nd[N_SYNTHETIC]:
-                    if nd[N_CLOSURE] == UNCLOSED:
-                        unclosed += 1
-                    elif nd[N_CLOSURE] == IMPLICITLY_CLOSED:
-                        implicitly += 1
-                children = nd[N_CHILDREN]
-                if children:
-                    stack.extend(children)
-        return unclosed, implicitly
 
     # --- serialization (dom.ts:501-532) ---------------------------------------
 

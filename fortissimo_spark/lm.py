@@ -1,33 +1,40 @@
 """N-gram language-model perplexity filter — CCNet's other half.
 
 CCNet (Wenzek et al. 2020, arXiv:1911.00359) gates crawl text on the
-perplexity of a KenLM n-gram model; this is the same public idea with a
-bigram stupid-backoff model (Brants et al. 2007, arXiv via ACL D07-1090:
+perplexity of a KenLM n-gram model; this is the same public idea with an
+order-n stupid-backoff model (Brants et al. 2007, arXiv via ACL D07-1090:
 "Large Language Models in Machine Translation" — stupid backoff is the
 web-scale simplification of Katz/Kneser-Ney that needs no discounting
-pass):
+pass). For the n-gram w_1..w_n, with suffix_k = its last k words:
 
-    S(w | prev) = count(prev, w) / count(prev)        if the bigram is kept
-                = alpha * count(w) / N                 else, if w is kept
-                = alpha * 1 / N                        else (OOV floor)
+    S_k = c_k(suffix_k) / c_{k-1}(context of suffix_k)   if both are kept
+        = alpha * S_{k-1}                                 else
+    S_1 = coalesce(c_1(w_n), 1) / N                       (OOV floor 1/N)
 
-    ppl(doc)    = 10 ** ( - mean_i log10 S(w_i | w_{i-1}) )
+    ppl(doc) = 10 ** ( - mean over the doc's n-grams of log10 S_n )
 
-Scale shape: training is two ``groupBy().count()`` passes (map-side
-partial aggregation) truncated to a BOUNDED top-V table each with a
+There is one backoff model, :class:`NgramLM`, and ``order`` is its only
+knob: the bigram and trigram gates (``train_bigram_lm`` /
+``with_perplexity`` and ``train_trigram_lm`` / ``with_perplexity_trigram``)
+are orders 2 and 3 of it under their historical output column names;
+n=5 is the CCNet KenLM shape. Kneser-Ney (the smoothing KenLM itself
+uses) keeps its own bigram scorer below.
+
+Scale shape: training is one ``groupBy().count()`` pass per order
+(map-side partial aggregation) truncated to a BOUNDED top-V table with a
 deterministic (count desc, gram asc) order — the broadcast-size budget a
-1000-executor scorer actually has. Scoring explodes each doc's bigrams
-map-side (``zip_with`` over two array slices, no Python), joins the two
-**broadcast** count tables, and regroups once on doc_id. The only wide
-exchange in scoring is that final per-doc regroup.
+1000-executor scorer actually has. Scoring explodes each doc's n-grams
+map-side (no Python), joins 2n-1 **broadcast** count tables (suffix and
+context per order, one shared base) and regroups once on doc_id; that
+per-doc regroup is the only wide exchange.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
-__all__ = ["train_bigram_lm", "with_perplexity", "BigramLM",
-           "TrigramLM", "train_trigram_lm", "with_perplexity_trigram",
+__all__ = ["train_bigram_lm", "with_perplexity",
+           "train_trigram_lm", "with_perplexity_trigram",
            "NgramLM", "train_ngram_lm", "with_perplexity_ngram",
            "KneserNeyLM", "train_kn_lm", "with_perplexity_kn",
            "with_ppl_buckets"]
@@ -38,199 +45,6 @@ _ALPHA = 0.4  # stupid-backoff weight (Brants et al. 2007)
 def _clean_tokens(text_col: str):
     return F.filter(F.split(F.trim(F.col(text_col)), r"\s+"),
                     lambda x: x != "")
-
-
-def _bigram_structs(toks):
-    n1 = F.greatest(F.size(toks) - 1, F.lit(0))
-    return F.zip_with(F.slice(toks, 1, n1), F.slice(toks, 2, n1),
-                      lambda a, b: F.struct(a.alias("w1"), b.alias("w2")))
-
-
-class BigramLM:
-    """Trained model handle: two bounded count DataFrames + the corpus
-    token total. Both tables are small by construction (top_v rows) and
-    are broadcast at scoring time."""
-
-    def __init__(self, unigrams: DataFrame, bigrams: DataFrame,
-                 total_tokens: int, alpha: float = _ALPHA):
-        self.unigrams = unigrams
-        self.bigrams = bigrams
-        self.total_tokens = total_tokens
-        self.alpha = alpha
-
-
-def train_bigram_lm(docs: DataFrame, text_col: str = "text", *,
-                    top_v: int = 100_000,
-                    alpha: float = _ALPHA) -> BigramLM:
-    """Count unigrams and bigrams corpus-wide, keep the top ``top_v`` of
-    each under the deterministic (count desc, gram asc) order, and record
-    the total token count N (one 1-row action)."""
-    toks = _clean_tokens(text_col)
-    uni_all = (docs.select(F.explode(toks).alias("w"))
-               .groupBy("w").agg(F.count("*").alias("c")))
-    uni = (uni_all.orderBy(F.desc("c"), F.asc("w")).limit(top_v))
-    bi = (docs.select(F.explode(_bigram_structs(toks)).alias("p"))
-          .select("p.w1", "p.w2")
-          .groupBy("w1", "w2").agg(F.count("*").alias("c"))
-          .orderBy(F.desc("c"), F.asc("w1"), F.asc("w2")).limit(top_v))
-    total = uni_all.agg(F.sum("c").alias("n")).collect()[0]["n"] or 0
-    return BigramLM(uni, bi, int(total), alpha)
-
-
-def with_perplexity(docs: DataFrame, lm: BigramLM,
-                    id_col: str = "doc_id",
-                    text_col: str = "text") -> DataFrame:
-    """(id_col, n_bigrams, ppl) — stupid-backoff bigram perplexity per
-    document, rounded to 6dp; docs with fewer than two tokens score NULL
-    with n_bigrams 0. Both count joins are broadcast."""
-    toks = _clean_tokens(text_col)
-    pairs = (docs.select(F.col(id_col).alias("doc_id"),
-                         F.explode(_bigram_structs(toks)).alias("p"))
-             .select("doc_id", "p.w1", "p.w2"))
-    bi = F.broadcast(lm.bigrams.select(
-        "w1", "w2", F.col("c").alias("c_bi")))
-    uni1 = F.broadcast(lm.unigrams.select(
-        F.col("w").alias("w1"), F.col("c").alias("c_w1")))
-    uni2 = F.broadcast(lm.unigrams.select(
-        F.col("w").alias("w2"), F.col("c").alias("c_w2")))
-    n = float(lm.total_tokens)
-    score = F.when(
-        F.col("c_bi").isNotNull() & F.col("c_w1").isNotNull(),
-        F.col("c_bi").cast("double") / F.col("c_w1")
-    ).otherwise(
-        F.lit(lm.alpha) * F.coalesce(F.col("c_w2"), F.lit(1))
-        .cast("double") / F.lit(n))
-    scored = (pairs
-              .join(bi, ["w1", "w2"], "left")
-              .join(uni1, ["w1"], "left")
-              .join(uni2, ["w2"], "left")
-              .groupBy("doc_id")
-              .agg(F.count("*").cast("int").alias("n_bigrams"),
-                   F.round(F.pow(F.lit(10.0),
-                                 -F.avg(F.log10(score))), 6).alias("ppl")))
-    base = docs.select(F.col(id_col).alias("doc_id"))
-    return (base.join(scored, "doc_id", "left")
-            .select(F.col("doc_id").alias(id_col),
-                    F.coalesce("n_bigrams", F.lit(0)).alias("n_bigrams"),
-                    "ppl"))
-
-
-# --- trigram upgrade -----------------------------------------------------
-# CCNet's KenLM is a 5-gram; bigram perplexity is a weak gibberish gate
-# for near-English spam ("the the the of of"). The trigram chain is the
-# same bounded-broadcast shape with ONE more top-V table:
-#
-#   S(w3 | w1 w2) = c(w1 w2 w3) / c(w1 w2)   if trigram AND context kept
-#                 = alpha * S(w2->w3)         else (back off to bigram)
-#   S(w2 -> w3)   = c(w2 w3) / c(w2)          if bigram AND w2 kept
-#                 = alpha * c(w3) / N          else (coalesce OOV -> 1)
-#
-# Scoring stays one wide exchange (the per-doc regroup); the five count
-# joins are all broadcast.
-
-
-def _trigram_structs(toks):
-    n2 = F.greatest(F.size(toks) - 2, F.lit(0))
-    return F.zip_with(
-        F.zip_with(F.slice(toks, 1, n2), F.slice(toks, 2, n2),
-                   lambda a, b: F.struct(a.alias("w1"), b.alias("w2"))),
-        F.slice(toks, 3, n2),
-        lambda p, c: F.struct(p["w1"].alias("w1"), p["w2"].alias("w2"),
-                              c.alias("w3")))
-
-
-class TrigramLM(BigramLM):
-    """Bounded trigram stupid-backoff model: the bigram tables plus one
-    top-V trigram count table, all broadcast at scoring time."""
-
-    def __init__(self, unigrams: DataFrame, bigrams: DataFrame,
-                 trigrams: DataFrame, total_tokens: int,
-                 alpha: float = _ALPHA):
-        super().__init__(unigrams, bigrams, total_tokens, alpha)
-        self.trigrams = trigrams
-
-
-def train_trigram_lm(docs: DataFrame, text_col: str = "text", *,
-                     top_v: int = 100_000,
-                     alpha: float = _ALPHA) -> TrigramLM:
-    """Count unigrams, bigrams and trigrams corpus-wide (three
-    partial-aggregated passes), keep the deterministic top ``top_v`` of
-    each ((count desc, gram asc) order), and record N."""
-    base = train_bigram_lm(docs, text_col, top_v=top_v, alpha=alpha)
-    toks = _clean_tokens(text_col)
-    tri = (docs.select(F.explode(_trigram_structs(toks)).alias("t"))
-           .select("t.w1", "t.w2", "t.w3")
-           .groupBy("w1", "w2", "w3").agg(F.count("*").alias("c"))
-           .orderBy(F.desc("c"), F.asc("w1"), F.asc("w2"), F.asc("w3"))
-           .limit(top_v))
-    return TrigramLM(base.unigrams, base.bigrams, tri,
-                     base.total_tokens, alpha)
-
-
-def with_perplexity_trigram(docs: DataFrame, lm: TrigramLM,
-                            id_col: str = "doc_id",
-                            text_col: str = "text") -> DataFrame:
-    """(id_col, n_trigrams, ppl3) — trigram stupid-backoff perplexity per
-    document, rounded to 6dp; docs with fewer than three tokens score
-    NULL with n_trigrams 0. All five count joins are broadcast; the only
-    wide exchange is the per-doc regroup."""
-    toks = _clean_tokens(text_col)
-    trips = (docs.select(F.col(id_col).alias("doc_id"),
-                         F.explode(_trigram_structs(toks)).alias("t"))
-             .select("doc_id", "t.w1", "t.w2", "t.w3"))
-    tri = F.broadcast(lm.trigrams.select(
-        "w1", "w2", "w3", F.col("c").alias("c_tri")))
-    bi12 = F.broadcast(lm.bigrams.select(
-        "w1", "w2", F.col("c").alias("c_b12")))
-    bi23 = F.broadcast(lm.bigrams.select(
-        F.col("w1").alias("w2"), F.col("w2").alias("w3"),
-        F.col("c").alias("c_b23")))
-    uni2 = F.broadcast(lm.unigrams.select(
-        F.col("w").alias("w2"), F.col("c").alias("c_w2")))
-    uni3 = F.broadcast(lm.unigrams.select(
-        F.col("w").alias("w3"), F.col("c").alias("c_w3")))
-    n = float(lm.total_tokens)
-    a = F.lit(lm.alpha)
-    backoff = F.when(
-        F.col("c_b23").isNotNull() & F.col("c_w2").isNotNull(),
-        F.col("c_b23").cast("double") / F.col("c_w2")
-    ).otherwise(
-        a * F.coalesce(F.col("c_w3"), F.lit(1)).cast("double") / F.lit(n))
-    score = F.when(
-        F.col("c_tri").isNotNull() & F.col("c_b12").isNotNull(),
-        F.col("c_tri").cast("double") / F.col("c_b12")
-    ).otherwise(a * backoff)
-    scored = (trips
-              .join(tri, ["w1", "w2", "w3"], "left")
-              .join(bi12, ["w1", "w2"], "left")
-              .join(bi23, ["w2", "w3"], "left")
-              .join(uni2, ["w2"], "left")
-              .join(uni3, ["w3"], "left")
-              .groupBy("doc_id")
-              .agg(F.count("*").cast("int").alias("n_trigrams"),
-                   F.round(F.pow(F.lit(10.0),
-                                 -F.avg(F.log10(score))), 6).alias("ppl3")))
-    base = docs.select(F.col(id_col).alias("doc_id"))
-    return (base.join(scored, "doc_id", "left")
-            .select(F.col("doc_id").alias(id_col),
-                    F.coalesce("n_trigrams", F.lit(0)).alias("n_trigrams"),
-                    "ppl3"))
-
-
-# --- general order-n upgrade ---------------------------------------------
-# CCNet's production gate is a 5-gram KenLM. The generalization keeps the
-# exact bounded-broadcast shape: one top-V count table per order k = 1..n
-# (each a partial-aggregated groupBy + deterministic truncation), scoring
-# via the recursive stupid-backoff chain
-#
-#   S_k(gram) = c_k(suffix_k) / c_{k-1}(context of suffix_k)   if both kept
-#             = alpha * S_{k-1}(gram)                           else
-#   S_1(w)    = coalesce(c_1(w), 1) / N
-#
-# which reduces to the bigram/trigram models above at n=2/3. Scoring joins
-# 2n-1 broadcast tables (suffix + context per order, one shared base) and
-# regroups once per doc — the n=5 CCNet shape is five small broadcasts and
-# ONE wide exchange.
 
 
 def _gram_structs_n(toks, k: int):
@@ -329,6 +143,44 @@ def with_perplexity_ngram(docs: DataFrame, lm: NgramLM,
                     "ppl"))
 
 
+# --- the bigram and trigram gates: orders 2 and 3 of the chain -----------
+
+def train_bigram_lm(docs: DataFrame, text_col: str = "text", *,
+                    top_v: int = 100_000,
+                    alpha: float = _ALPHA) -> NgramLM:
+    """The order-2 model: ``tables`` = [unigrams, bigrams], and N."""
+    return train_ngram_lm(docs, text_col, order=2, top_v=top_v, alpha=alpha)
+
+
+def with_perplexity(docs: DataFrame, lm: NgramLM,
+                    id_col: str = "doc_id",
+                    text_col: str = "text") -> DataFrame:
+    """(id_col, n_bigrams, ppl) — :func:`with_perplexity_ngram` of an
+    order-2 model; docs with fewer than two tokens score NULL with
+    n_bigrams 0."""
+    return (with_perplexity_ngram(docs, lm, id_col, text_col)
+            .withColumnRenamed("n_ngrams", "n_bigrams"))
+
+
+def train_trigram_lm(docs: DataFrame, text_col: str = "text", *,
+                     top_v: int = 100_000,
+                     alpha: float = _ALPHA) -> NgramLM:
+    """The order-3 model: ``tables`` = [unigrams, bigrams, trigrams], and
+    N."""
+    return train_ngram_lm(docs, text_col, order=3, top_v=top_v, alpha=alpha)
+
+
+def with_perplexity_trigram(docs: DataFrame, lm: NgramLM,
+                            id_col: str = "doc_id",
+                            text_col: str = "text") -> DataFrame:
+    """(id_col, n_trigrams, ppl3) — :func:`with_perplexity_ngram` of an
+    order-3 model; docs with fewer than three tokens score NULL with
+    n_trigrams 0."""
+    return (with_perplexity_ngram(docs, lm, id_col, text_col)
+            .withColumnRenamed("n_ngrams", "n_trigrams")
+            .withColumnRenamed("ppl", "ppl3"))
+
+
 def with_ppl_buckets(scored: DataFrame, strata_col: str = "lang",
                      ppl_col: str = "ppl",
                      cuts: tuple[float, float] = (1.0 / 3, 2.0 / 3),
@@ -398,7 +250,7 @@ def train_kn_lm(docs: DataFrame, text_col: str = "text", *,
 
     with the Ney count-of-counts discount D = n1/(n1 + 2 n2). Unseen
     contexts score Pcont(w2) directly; unseen continuations floor at
-    one type (the same bounded-OOV convention as the backoff models).
+    one type (the same bounded-OOV convention as the backoff model).
 
     Scale shape: ONE corpus-wide bigram groupBy feeds everything — the
     discount scalars (one 1-row agg), the context table (groupBy w1:
@@ -409,7 +261,7 @@ def train_kn_lm(docs: DataFrame, text_col: str = "text", *,
     truncation only widens the backoff path, never skews a kept
     estimate."""
     toks = _clean_tokens(text_col)
-    bi_all = (docs.select(F.explode(_bigram_structs(toks)).alias("p"))
+    bi_all = (docs.select(F.explode(_gram_structs_n(toks, 2)).alias("p"))
               .select("p.w1", "p.w2")
               .groupBy("w1", "w2").agg(F.count("*").alias("c")))
     cc = bi_all.agg(
@@ -435,11 +287,11 @@ def with_perplexity_kn(docs: DataFrame, lm: KneserNeyLM,
                        text_col: str = "text") -> DataFrame:
     """(id_col, n_bigrams, ppl) — interpolated Kneser-Ney bigram
     perplexity, 6dp; <2-token docs score NULL with n_bigrams 0. Same
-    scoring shape as the backoff models: map-side bigram explode,
+    scoring shape as the backoff model: map-side bigram explode,
     three BROADCAST joins, one per-doc regroup."""
     toks = _clean_tokens(text_col)
     pairs = (docs.select(F.col(id_col).alias("doc_id"),
-                         F.explode(_bigram_structs(toks)).alias("p"))
+                         F.explode(_gram_structs_n(toks, 2)).alias("p"))
              .select("doc_id", "p.w1", "p.w2"))
     bi = F.broadcast(lm.bigrams.select(
         "w1", "w2", F.col("c").alias("c_bi")))

@@ -26,7 +26,7 @@ Replicated reference quirks (cites into the reference source):
 * html-parser.ts:827 + dom.ts:560-564 — ``canDoXmlMode`` is evaluated after
   the ``<?xml`` node is already a child of the root, so it can never be
   true: processing instructions never flip xmlMode (only an xhtml doctype
-  does, html-parser.ts:801).
+  does, html-parser.ts:801). The check is therefore not made at all.
 * html-parser.ts:1140-1147 — CDATA is recognized only when ``[CDATA[`` is
   complete *and* at least one more char follows before EOF.
 
@@ -63,8 +63,7 @@ from .dom import (
     ELEMENT, IMPLICITLY_CLOSED, OPEN_IMPLIES_CLOSE,
     SELF_CLOSED, TEXT, UNCLOSED, VOID_CLOSED,
     DocBuilder, N_BAD_TERM, N_CHILDREN, N_CLOSURE,
-    N_INNER_WS, N_PARENT, N_SRC_END, N_TAG_LC,
-    POP_SELF, POP_VOID, VOID_ELEMENTS,
+    N_INNER_WS, N_PARENT, N_SRC_END, N_TAG_LC, VOID_ELEMENTS,
 )
 
 __all__ = ["ParseResult", "parse", "check_encoding", "normalize_encoding_name",
@@ -542,11 +541,7 @@ def parse(source: str, *, empty_end_tag: bool = True, eol="\n", tab_size: int = 
                               terminated=terminated, src_start=k, src_end=i)
             if not terminated:
                 errors += 1
-            # dead by design in the reference: canDoXmlMode() is checked after
-            # the PI is already a child (see module docstring)
-            if content.startswith("xml ") and b.can_do_xml_mode():
-                xml = True
-                b.xml_mode = True
+            # no canDoXmlMode() check: it can never pass (module docstring)
             continue
 
         # ---- start tag ----

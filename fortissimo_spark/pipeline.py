@@ -210,9 +210,9 @@ def curate_corpus(docs: DataFrame, lm=None, *,
        the hash);
     2. **LM quality gate**: stupid-backoff perplexity (``lm.py``) must be
        non-NULL and <= ``ppl_cutoff`` (drops OOV-gibberish and <2-token
-       stubs); pass a :class:`fortissimo_spark.lm.NgramLM` for the
-       order-n chain (n=5 = the CCNet KenLM shape) — same broadcast
-       plan, one extra table per order;
+       stubs); ``lm`` is any :class:`fortissimo_spark.lm.NgramLM`
+       (``train_bigram_lm`` is order 2; n=5 is the CCNet KenLM shape) —
+       same broadcast plan, one extra table per order;
     3. **mixture quotas** (optional): deterministic per-stratum caps
        (``corpus.stratified_sample``).
 
@@ -221,7 +221,7 @@ def curate_corpus(docs: DataFrame, lm=None, *,
     no new shuffle beyond each stage's own.
     """
     from .corpus import stratified_sample
-    from .lm import NgramLM, with_perplexity, with_perplexity_ngram
+    from .lm import with_perplexity_ngram
 
     h = F.sha2(F.col(text_col), 256)
     hashed = docs.withColumn("_th", h)
@@ -231,10 +231,7 @@ def curate_corpus(docs: DataFrame, lm=None, *,
                  .filter(F.col(id_col) == F.col("_win"))
                  .drop("_th", "_win"))
     if lm is not None:
-        if isinstance(lm, NgramLM):  # order-n gate (n=5 = CCNet shape)
-            ppl = with_perplexity_ngram(survivors, lm, id_col, text_col)
-        else:
-            ppl = with_perplexity(survivors, lm, id_col, text_col)
+        ppl = with_perplexity_ngram(survivors, lm, id_col, text_col)
         survivors = (survivors.join(ppl, id_col)
                      .filter(F.col("ppl").isNotNull()
                              & (F.col("ppl") <= ppl_cutoff)))
@@ -278,8 +275,7 @@ def incremental_curate(current: DataFrame, previous: DataFrame,
        rows.
     4. **delta dedup + gate**: delta rows and orphans pick per-hash
        min-id winners together, drop hashes a kept prior row already
-       covers, then pass the same LM gate as ``curate_corpus`` (NgramLM
-       dispatches to the order-n scorer).
+       covers, then pass the same LM gate as ``curate_corpus``.
 
     Parity contract (documented, not assumed silently): ids are
     crawl-ordered (prior ids < new ids — the same first-seen == min-id
@@ -289,7 +285,7 @@ def incremental_curate(current: DataFrame, previous: DataFrame,
 
     Returns ``(id, strata[, ppl], url, text_hash)`` — feed it back as the
     next increment's ``previous_out``."""
-    from .lm import NgramLM, with_perplexity, with_perplexity_ngram
+    from .lm import with_perplexity_ngram
     from .corpus import incremental_new_pages
 
     h = F.sha2(F.col(text_col), 256)
@@ -325,10 +321,7 @@ def incremental_curate(current: DataFrame, previous: DataFrame,
             .filter(F.col(id_col) == F.col("_win")).drop("_win")
             .join(kept.select("text_hash"), "text_hash", "left_anti"))
     if lm is not None:
-        if isinstance(lm, NgramLM):
-            ppl = with_perplexity_ngram(cand, lm, id_col, text_col)
-        else:
-            ppl = with_perplexity(cand, lm, id_col, text_col)
+        ppl = with_perplexity_ngram(cand, lm, id_col, text_col)
         cand = (cand.join(ppl, id_col)
                 .filter(F.col("ppl").isNotNull()
                         & (F.col("ppl") <= ppl_cutoff)))

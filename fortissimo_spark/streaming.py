@@ -238,7 +238,7 @@ def streaming_curate(spark: SparkSession, input_path: str, output_path: str,
     with :func:`curation_metrics`.
 
     Returns the StreamingQuery handle."""
-    from .lm import NgramLM, with_perplexity, with_perplexity_ngram
+    from .lm import with_perplexity_ngram
 
     stream = (spark.readStream.schema(DOCS_STREAM_SCHEMA)
               .option("maxFilesPerTrigger", max_files_per_trigger)
@@ -254,12 +254,7 @@ def streaming_curate(spark: SparkSession, input_path: str, output_path: str,
         obs_in, obs_out = Observation(), Observation()
         out = batch_df.observe(obs_in, F.count(F.lit(1)).alias("n"))
         if lm is not None:
-            # same dispatch as pipeline.curate_corpus: an NgramLM (the
-            # CCNet 5-gram gate) scores via the order-n path
-            if isinstance(lm, NgramLM):
-                ppl = with_perplexity_ngram(out, lm, "doc_id", "text")
-            else:
-                ppl = with_perplexity(out, lm, "doc_id", "text")
+            ppl = with_perplexity_ngram(out, lm, "doc_id", "text")
             out = (out.join(ppl, "doc_id")
                    .filter(F.col("ppl").isNotNull()
                            & (F.col("ppl") <= ppl_cutoff)))

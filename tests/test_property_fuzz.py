@@ -119,7 +119,7 @@ def test_deep_nesting_no_recursion_limit():
     for mode in ("none", "basic", "density"):
         assert "deep text" in extract(r.dom, mode).text
     assert r.dom.query_selector(0, "div") is not None
-    assert r.dom.count_unclosed(0) == (0, 0)
+    assert r.dom.count_unclosed_flat() == (0, 0)
 
 
 # xmlMode fuzz: quote chars inside attribute names are a documented

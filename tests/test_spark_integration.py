@@ -1996,7 +1996,7 @@ def test_bigram_perplexity_ground_truth(spark):
     assert "BroadcastHashJoin" in plan and "Python" not in plan
     # truncation is deterministic: top-2 bigrams keep (a,b) then (b,a)
     lm2 = train_bigram_lm(train, top_v=2)
-    kept = {(r.w1, r.w2) for r in lm2.bigrams.collect()}
+    kept = {(r.w1, r.w2) for r in lm2.tables[1].collect()}
     assert kept == {("a", "b"), ("b", "a")}
 
 
@@ -2712,9 +2712,10 @@ def test_png_adam7_interlaced(spark):
 
 
 def test_ngram_lm_generalizes_bigram_and_trigram(spark):
-    """The order-n chain reduces EXACTLY to the dedicated bigram and
-    trigram models at n=2/3 (same tables, same backoff, same rounding),
-    and the n=5 CCNet shape scores hand-derived values."""
+    """The bigram and trigram gates are orders 2 and 3 of the order-n
+    chain (the same code under their historical column names), so they
+    agree with it exactly; the n=5 CCNet shape scores hand-derived
+    values."""
     from fortissimo_spark.lm import (
         train_bigram_lm, train_ngram_lm, train_trigram_lm, with_perplexity,
         with_perplexity_ngram, with_perplexity_trigram,

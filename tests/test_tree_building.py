@@ -1,0 +1,122 @@
+"""Tree building: the open-stack invariant and linear worst cases.
+
+``DocBuilder.pop`` runs no re-parent pass after it pops (the reference's
+dom.ts:733-738 re-parents the whole stack and recounts math/svg after
+every pop).  That is sound only while every stack entry's parent is the
+entry below it and ``in_math_or_svg`` equals the number of math/svg
+entries on the stack; the first test checks both after every ``pop`` call,
+through the native core and through the general machine.  The second pins
+the two page shapes that took quadratic time while the parser still made
+that pass and the never-true ``<?xml`` check: 4x the input must cost at
+most 6x the time.
+"""
+import gc
+import math
+import signal
+import time
+
+import pytest
+
+import fortissimo_spark.parser as P
+from fortissimo_spark.dom import N_PARENT, N_TAG_LC, DocBuilder
+from fortissimo_spark.parser import parse
+from tests.parser_fixtures import FIXTURES, table_soups
+from tests.test_parser_fastpaths import generated_docs
+
+
+def _check_stack(b):
+    nodes = b.nodes
+    stack = b.open_stack
+    assert stack[0] == 0
+    for below, node in zip(stack, stack[1:]):
+        assert nodes[node][N_PARENT] == below, (stack, node)
+    assert b.in_math_or_svg == sum(
+        nodes[node][N_TAG_LC] in ("math", "svg") for node in stack)
+
+
+@pytest.mark.parametrize("machine", ["native", "general"])
+def test_open_stack_invariant_after_every_pop(monkeypatch, machine):
+    if machine == "native" and not P.NATIVE:
+        pytest.skip("no native core on this host")
+    if machine == "general":
+        monkeypatch.setattr(P, "_NATIVE_SCAN", None)
+    pop = DocBuilder.pop
+    calls = [0]
+
+    def checked_pop(self, *args, **kwargs):
+        ok = pop(self, *args, **kwargs)
+        calls[0] += 1
+        _check_stack(self)
+        return ok
+
+    monkeypatch.setattr(DocBuilder, "pop", checked_pop)
+    docs = (list(FIXTURES) + list(generated_docs(10_000))
+            + list(table_soups(1_000)))
+    for doc in docs:
+        _check_stack(parse(doc, positions=False).dom)
+    # the native core calls pop only for a close that is not on top
+    assert calls[0] >= 5_000, calls
+
+
+# Each shape at (n, 4n).  The small case takes >= 20 ms on a 4-vCPU host;
+# while pop re-parented the whole stack and every <?xml PI serialized the
+# document, both shapes grew about 18x per 4x.
+_SHAPES = {
+    # every </div> unwinds an open <b> (ROADMAP §2 shape 3)
+    "unwind": (lambda n: "<div>" * n + "<b>x</div>" * n, 6_000),
+    # <?xml PIs inside an element
+    "xml_pi": (lambda n: "<html>" + "<?xml x>" * n, 16_000),
+}
+# one parse is cut off after this long (the quadratic builds ran for
+# minutes at these sizes; a cut parse counts as infinitely slow)
+_BUDGET_S = 10.0
+
+
+class _OverBudget(Exception):
+    pass
+
+
+def _over_budget(signum, frame):
+    raise _OverBudget
+
+
+def _parse_seconds(doc):
+    # timed with the cyclic GC paused, as the extract kernel parses: a
+    # collection landing in one run and not the other is noise here
+    old = signal.signal(signal.SIGALRM, _over_budget)
+    gc.collect()
+    gc.disable()
+    try:
+        signal.setitimer(signal.ITIMER_REAL, _BUDGET_S)
+        t0 = time.perf_counter()
+        parse(doc, positions=False)
+        return time.perf_counter() - t0
+    except _OverBudget:
+        return math.inf
+    finally:
+        signal.setitimer(signal.ITIMER_REAL, 0)
+        signal.signal(signal.SIGALRM, old)
+        gc.enable()
+
+
+@pytest.mark.parametrize("machine", ["native", "general"])
+@pytest.mark.parametrize("shape", sorted(_SHAPES))
+def test_tree_building_scales_linearly(monkeypatch, shape, machine):
+    """4x the input costs at most 6x the time (min of 3 runs each).  A
+    shared host can stall one side of a pair, so a failing pair is
+    measured once more before the test fails; a quadratic build fails
+    both (its ratio is about 18)."""
+    if machine == "native" and not P.NATIVE:
+        pytest.skip("no native core on this host")
+    if machine == "general":
+        monkeypatch.setattr(P, "_NATIVE_SCAN", None)
+    make, n = _SHAPES[shape]
+    small, big = make(n), make(4 * n)
+    for _ in range(2):
+        t_small = min(_parse_seconds(small) for _ in range(3))
+        assert t_small < math.inf, f"{shape}/{machine}: over {_BUDGET_S} s"
+        t_big = min(_parse_seconds(big) for _ in range(3))
+        if t_big <= 6 * t_small:
+            return
+    pytest.fail(f"{shape}/{machine}: 4x input took {t_big / t_small:.1f}x "
+                f"the time ({t_small * 1e3:.1f} ms -> {t_big * 1e3:.1f} ms)")

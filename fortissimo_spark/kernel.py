@@ -11,7 +11,8 @@ outlinks, robots' sitemap/feed/feed-discovery kernels) is built by
 ``_page_kernel`` from an output schema and a per-page row function.  That
 one loop owns everything the kernels share: the batch iteration and the
 empty-batch skip, ``None`` payloads read as ``b""``, one decode front end
-(``decode_parse``, below), one GC pause (``gc_paused``, below), the key
+(``decode_parse``, below), one GC pause (``gc_paused``, below), the
+zip-finder drop at the end of a task (``_drop_zip_finders``, below), the key
 column and any ``warc_ts``/``lang`` copied from the input page onto each of
 its output rows, and one frame per input batch whose columns are the
 schema's, in schema order.  A kernel is its row function plus its schema.
@@ -39,6 +40,26 @@ containers per node would otherwise set off ~3,000 generation-0 and 24
 full collections per 600 malformed ~12 KB pages, all finding nothing.  The
 collector is paused for at most one Arrow batch, so a cycle made elsewhere
 waits at most one batch longer to be collected.
+
+Zip finders: when a page kernel's batch iterator is exhausted or closed,
+``_drop_zip_finders`` deletes every ``zipimport.zipimporter`` from
+``sys.path_importer_cache``.  PySpark's worker calls
+``importlib.invalidate_caches()`` at the start of every task
+(``worker_util.setup_spark_files``), and on CPython 3.11 and 3.12 each
+cached zipimporter then re-reads its archive's whole central directory
+(3.13 only drops its cache).  PySpark's own imports leave 16 of them
+behind on a worker: 2 for the spark-core jar (5,359 entries, 21-34 ms per
+re-read), 12 for ``pyspark.zip`` (1,328 entries, 5-8 ms) and 2 for the
+py4j zip (9 entries).  That is 0.10-0.12 s per task on an idle 4-vCPU host
+and 0.17-0.28 s while other work runs on it, before the kernel sees a row.
+With the finders gone the next task's ``invalidate_caches()`` takes
+~0.1 ms.  Deleting a cache entry is the
+documented way to force a fresh path-entry search, and a later import from
+one of those paths re-creates its finder from zipimport's directory cache
+without reading the archive.  That cache is not refreshed: an archive on a
+worker's path does not change while the worker lives.  Spark's own jars and
+zips are fixed for the application, and ``--py-files`` copies get fixed
+names.
 """
 
 from __future__ import annotations
@@ -47,6 +68,8 @@ import codecs
 import gc
 import json
 import re
+import sys
+import zipimport
 from functools import lru_cache, wraps
 
 import pandas as pd
@@ -93,6 +116,16 @@ def gc_paused(kernel):
             yield pdf
 
     return paused
+
+
+def _drop_zip_finders() -> None:
+    """Delete every zip finder from ``sys.path_importer_cache``, so the
+    next task's ``importlib.invalidate_caches()`` re-reads no archive (see
+    the module docstring)."""
+    cache = sys.path_importer_cache
+    for path in [p for p, f in cache.items()
+                 if isinstance(f, zipimport.zipimporter)]:
+        del cache[path]
 
 
 @lru_cache(maxsize=512)
@@ -192,25 +225,28 @@ def _page_kernel(schema: StructType, rows, key: str = "url",
     passed = [n for n in names if n == key or n in _CARRIED]
 
     def kernel(batches):
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            out, src = [], []
-            for i, raw in enumerate(pdf[payload].tolist()):
-                raw = bytes(raw) if raw is not None else b""
-                for row in rows(raw, decode_parse(raw)):
-                    out.append(row)
-                    src.append(i)
-            values = zip(*out)
-            cols = {}
-            for n in names:
-                if n not in passed:
-                    cols[n] = list(next(values, ()))
-                elif n in pdf.columns:
-                    cols[n] = pdf[n].values[src]
-                else:
-                    cols[n] = [None] * len(src)
-            yield pd.DataFrame(cols)
+        try:
+            for pdf in batches:
+                if len(pdf) == 0:
+                    continue
+                out, src = [], []
+                for i, raw in enumerate(pdf[payload].tolist()):
+                    raw = bytes(raw) if raw is not None else b""
+                    for row in rows(raw, decode_parse(raw)):
+                        out.append(row)
+                        src.append(i)
+                values = zip(*out)
+                cols = {}
+                for n in names:
+                    if n not in passed:
+                        cols[n] = list(next(values, ()))
+                    elif n in pdf.columns:
+                        cols[n] = pdf[n].values[src]
+                    else:
+                        cols[n] = [None] * len(src)
+                yield pd.DataFrame(cols)
+        finally:
+            _drop_zip_finders()
 
     return gc_paused(kernel)
 

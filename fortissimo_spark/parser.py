@@ -179,9 +179,16 @@ class ParseResult:
 
 
 class _Pos:
-    """Lazy 1-based line / tab-aware column lookup over the parsed text."""
+    """Lazy 1-based line / tab-aware column lookup over the parsed text.
 
-    __slots__ = ("t", "tab_size", "starts")
+    The column of ``pos`` is 1 plus the widths of the characters before it
+    on its line; a tab reaches the next tab stop (columns 1, 1 + tab_size,
+    1 + 2 * tab_size, ...), every other character is 1 wide.  The
+    parser asks in text order, so ``line_col`` continues from its previous
+    answer when ``pos`` is on the same line at or after it: a long line
+    costs linear time, not a rescan from the line's start per call."""
+
+    __slots__ = ("t", "tab_size", "starts", "last")
 
     def __init__(self, t: str, tab_size: int):
         self.t = t
@@ -190,22 +197,34 @@ class _Pos:
         for m in _RE_ANY_EOL.finditer(t):
             starts.append(m.end())
         self.starts = starts
+        # (line, end, col, inc): the answer for pos = end - 1, and the
+        # width of the character there
+        self.last = (-1, 0, 0, 1)
 
     def line(self, pos: int) -> int:
         return bisect_right(self.starts, pos)
 
     def line_col(self, pos: int) -> tuple[int, int]:
         ln = bisect_right(self.starts, pos)
-        ls = self.starts[ln - 1]
-        seg = self.t[ls:pos + 1]
-        if "\t" not in seg:
-            return ln, len(seg)
-        col = 0
-        inc = 1
+        t = self.t
+        end = min(pos + 1, len(t))
+        last_ln, i, col, inc = self.last
+        if last_ln != ln or i > end:
+            i, col, inc = self.starts[ln - 1], 0, 1
         tab = self.tab_size
-        for c in seg:
+        while i < end:
+            j = t.find("\t", i, end)
+            if j < 0:
+                j = end
+            if j > i:  # a run of non-tab characters, each of width 1
+                col += inc + (j - i - 1)
+                inc = 1
+            if j == end:
+                break
             col += inc
-            inc = tab - (col - 1) % tab if c == "\t" else 1
+            inc = tab - (col - 1) % tab
+            i = j + 1
+        self.last = (ln, end, col, inc)
         return ln, col
 
 

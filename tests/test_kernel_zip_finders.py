@@ -1,0 +1,109 @@
+"""The page-kernel loop drops every zip finder from
+``sys.path_importer_cache`` when a task's batches run out, so PySpark's
+per-task ``importlib.invalidate_caches()`` re-reads no archive (see the
+kernel module docstring), and imports from those archives still work."""
+
+import json
+import os
+import subprocess
+import sys
+import zipfile
+import zipimport
+
+import pandas as pd
+import pytest
+
+from fortissimo_spark.kernel import make_extract_kernel
+
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+
+def _zip_finders():
+    return [p for p, f in sys.path_importer_cache.items()
+            if isinstance(f, zipimport.zipimporter)]
+
+
+def _one_page():
+    return pd.DataFrame({"url": ["http://example.com/"],
+                         "warc_ts": pd.to_datetime(["2024-01-01"]),
+                         "html": [b"<p>one page</p>"], "lang": ["en"]})
+
+
+def test_kernel_drops_zip_finders_and_zip_imports_still_work(tmp_path,
+                                                              monkeypatch):
+    zip_path = str(tmp_path / "zipped.zip")
+    with zipfile.ZipFile(zip_path, "w") as z:
+        z.writestr("zipped_pkg/__init__.py", "")
+        z.writestr("zipped_pkg/first.py", "VALUE = 1\n")
+        z.writestr("zipped_pkg/second.py", "VALUE = 2\n")
+    monkeypatch.syspath_prepend(zip_path)
+    try:
+        import zipped_pkg.first
+        assert zipped_pkg.first.__file__.startswith(zip_path)
+        assert zip_path in _zip_finders()
+
+        (out,) = make_extract_kernel()(iter([_one_page()]))
+        assert out["text"].tolist() == ["one page"]
+        assert _zip_finders() == []
+
+        import zipped_pkg.second
+        assert zipped_pkg.second.__file__.startswith(zip_path)
+        assert zipped_pkg.second.VALUE == 2
+    finally:
+        for name in ("zipped_pkg", "zipped_pkg.first", "zipped_pkg.second"):
+            sys.modules.pop(name, None)
+
+
+def test_kernel_drops_zip_finders_when_closed_early(tmp_path):
+    zip_path = str(tmp_path / "empty.zip")
+    zipfile.ZipFile(zip_path, "w").close()
+    sys.path_importer_cache[zip_path] = zipimport.zipimporter(zip_path)
+    kernel = make_extract_kernel()(iter([_one_page(), _one_page()]))
+    next(kernel)
+    kernel.close()
+    assert _zip_finders() == []
+
+
+_SPARK_PROBE = """
+import json, os, sys, zipimport
+import pandas as pd
+from pyspark.sql import SparkSession
+from fortissimo_spark.pipeline import extract_df
+
+def zip_finders(batches):
+    n = sum(isinstance(f, zipimport.zipimporter)
+            for f in sys.path_importer_cache.values())
+    for _ in batches:
+        pass
+    yield pd.DataFrame({"pid": [os.getpid()], "finders": [n]})
+
+spark = (SparkSession.builder.master("local[1]")
+         .config("spark.ui.enabled", "false")
+         .config("spark.python.worker.reuse", "true").getOrCreate())
+spark.sparkContext.setLogLevel("ERROR")
+probe = spark.range(1).mapInPandas(zip_finders, "pid long, finders long")
+before = probe.collect()[0]
+pages = spark.createDataFrame(
+    [("http://example.com/%d" % i, None, b"<p>page %d</p>" % i, "en")
+     for i in range(12)],
+    "url string, warc_ts timestamp, html binary, lang string").repartition(3)
+texts = sorted(r.text for r in extract_df(pages).collect())
+after = probe.collect()[0]
+spark.stop()
+print(json.dumps([before.pid, before.finders, after.pid, after.finders,
+                  texts]))
+"""
+
+
+def test_next_task_starts_without_zip_finders():
+    out = subprocess.run([sys.executable, "-c", _SPARK_PROBE], cwd=ROOT,
+                         capture_output=True, text=True, timeout=600)
+    assert out.returncode == 0, out.stderr[-4000:]
+    pid0, before, pid1, after, texts = json.loads(
+        out.stdout.splitlines()[-1])
+    if before == 0:
+        pytest.skip("no zip archive on the Python worker's path")
+    # local[1] with worker reuse: every task ran in one worker process
+    assert pid0 == pid1
+    assert texts == sorted("page %d" % i for i in range(12))
+    assert after == 0

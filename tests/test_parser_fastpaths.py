@@ -26,6 +26,7 @@ import fortissimo_spark.parser as P
 from fortissimo_spark.dom import (
     EXPLICITLY_CLOSED, SELF_CLOSED, UNCLOSED, VOID_CLOSED,
 )
+from fortissimo_spark.kernel import process_document
 from fortissimo_spark.parser import parse
 from tests.parser_fixtures import FIXTURES, table_soups
 
@@ -315,13 +316,29 @@ _PROBE = """
 import json, sys
 import fortissimo_spark, fortissimo_spark.parser as P
 r = P.parse(sys.argv[1], positions=False)
-print(json.dumps([fortissimo_spark.__file__, P.NATIVE, r.errors,
-                  len(r.dom.nodes), r.to_string()]))
+res = [fortissimo_spark.__file__, P.NATIVE, r.errors, len(r.dom.nodes),
+       r.to_string()]
+"""
+# a page kernel drops the zip finders when its batches run out; a submodule
+# first imported after that must still load from the zip
+_PAGE_KERNEL_PROBE = """
+import zipimport
+import pandas as pd
+from fortissimo_spark.kernel import make_extract_kernel, make_format_kernel
+page = pd.DataFrame({"url": ["u"], "html": [sys.argv[1].encode()]})
+(out,) = make_extract_kernel()(iter([page]))
+res += [sum(isinstance(f, zipimport.zipimporter)
+            for f in sys.path_importer_cache.values()),
+        "fortissimo_spark.formatter" in sys.modules]
+(formatted,) = make_format_kernel()(iter([page]))
+res += [sys.modules["fortissimo_spark.formatter"].__file__,
+        out["text"].tolist(), len(formatted)]
 """
 
 
-def _probe(doc, cwd, env, path=()):
-    code = "import sys; sys.path[:0] = %r\n" % list(path) + _PROBE
+def _probe(doc, cwd, env, path=(), tail=""):
+    code = ("import sys; sys.path[:0] = %r\n" % list(path) + _PROBE + tail
+            + "print(json.dumps(res))\n")
     out = subprocess.run([sys.executable, "-c", code, doc], cwd=cwd, env=env,
                          capture_output=True, text=True, check=True)
     return json.loads(out.stdout.splitlines()[-1])
@@ -360,8 +377,12 @@ def test_pyfiles_zip_carries_the_native_core(tmp_path):
     # a fresh cache: the core is built from the source inside the zip
     env = dict(os.environ, HOME=str(tmp_path))
     doc = _PROBE_DOC
-    where, native, errors, _, text = _probe(doc, str(run_dir), env,
-                                            [zip_path])
+    (where, native, errors, _, text, finders, formatter_loaded,
+     formatter_file, kernel_text, n_formatted) = _probe(
+        doc, str(run_dir), env, [zip_path], _PAGE_KERNEL_PROBE)
     assert where.startswith(zip_path)
     assert native is True or not _have_compiler()
     assert text == doc and errors == parse(doc).errors
+    assert kernel_text == [process_document(doc.encode())["text"]]
+    assert finders == 0 and formatter_loaded is False
+    assert formatter_file.startswith(zip_path) and n_formatted == 1

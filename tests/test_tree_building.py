@@ -7,8 +7,9 @@ entry below it and ``in_math_or_svg`` equals the number of math/svg
 entries on the stack; the first test checks both after every ``pop`` call,
 through the native core and through the general machine.  The second pins
 the two page shapes that took quadratic time while the parser still made
-that pass and the never-true ``<?xml`` check: 4x the input must cost at
-most 6x the time.
+that pass and the never-true ``<?xml`` check, and two long lines parsed
+with positions, whose line/col lookup rescanned the line from its start on
+every call: 4x the input must cost at most 6x the time.
 """
 import gc
 import math
@@ -58,14 +59,21 @@ def test_open_stack_invariant_after_every_pop(monkeypatch, machine):
     assert calls[0] >= 5_000, calls
 
 
-# Each shape at (n, 4n).  The small case takes >= 20 ms on a 4-vCPU host;
-# while pop re-parented the whole stack and every <?xml PI serialized the
-# document, both shapes grew about 18x per 4x.
+# Each shape at (n, 4n), parsed with or without positions.  The small case
+# takes >= 20 ms on a 4-vCPU host; while pop re-parented the whole stack and
+# every <?xml PI serialized the document, those two shapes grew about 18x
+# per 4x.  While line_col sliced the line from its start on every call, the
+# one-line shape grew about 12x per 4x, and the tab-heavy one stepped over
+# the whole line in Python per call (over 20 s at n = 5,000).
 _SHAPES = {
     # every </div> unwinds an open <b> (ROADMAP §2 shape 3)
-    "unwind": (lambda n: "<div>" * n + "<b>x</div>" * n, 6_000),
+    "unwind": (lambda n: "<div>" * n + "<b>x</div>" * n, 6_000, False),
     # <?xml PIs inside an element
-    "xml_pi": (lambda n: "<html>" + "<?xml x>" * n, 16_000),
+    "xml_pi": (lambda n: "<html>" + "<?xml x>" * n, 16_000, False),
+    # one line of elements, line/col computed for every node
+    "line_positions": (lambda n: "<p>x</p>" * n, 20_000, True),
+    # the same with tabs, whose column depends on everything before them
+    "tab_line_positions": (lambda n: "<p>\tx\t</p>" * n, 5_000, True),
 }
 # one parse is cut off after this long (the quadratic builds ran for
 # minutes at these sizes; a cut parse counts as infinitely slow)
@@ -80,7 +88,7 @@ def _over_budget(signum, frame):
     raise _OverBudget
 
 
-def _parse_seconds(doc):
+def _parse_seconds(doc, positions):
     # timed with the cyclic GC paused, as the extract kernel parses: a
     # collection landing in one run and not the other is noise here
     old = signal.signal(signal.SIGALRM, _over_budget)
@@ -89,7 +97,7 @@ def _parse_seconds(doc):
     try:
         signal.setitimer(signal.ITIMER_REAL, _BUDGET_S)
         t0 = time.perf_counter()
-        parse(doc, positions=False)
+        parse(doc, positions=positions)
         return time.perf_counter() - t0
     except _OverBudget:
         return math.inf
@@ -99,23 +107,26 @@ def _parse_seconds(doc):
         gc.enable()
 
 
-@pytest.mark.parametrize("machine", ["native", "general"])
-@pytest.mark.parametrize("shape", sorted(_SHAPES))
+# with positions the parser never enters the native core
+@pytest.mark.parametrize("shape,machine", [
+    (shape, machine) for shape in sorted(_SHAPES)
+    for machine in (("general",) if _SHAPES[shape][2]
+                    else ("native", "general"))])
 def test_tree_building_scales_linearly(monkeypatch, shape, machine):
     """4x the input costs at most 6x the time (min of 3 runs each).  A
     shared host can stall one side of a pair, so a failing pair is
     measured once more before the test fails; a quadratic build fails
-    both (its ratio is about 18)."""
+    both (its ratio is about 18 for the tree-building shapes)."""
     if machine == "native" and not P.NATIVE:
         pytest.skip("no native core on this host")
     if machine == "general":
         monkeypatch.setattr(P, "_NATIVE_SCAN", None)
-    make, n = _SHAPES[shape]
+    make, n, positions = _SHAPES[shape]
     small, big = make(n), make(4 * n)
     for _ in range(2):
-        t_small = min(_parse_seconds(small) for _ in range(3))
+        t_small = min(_parse_seconds(small, positions) for _ in range(3))
         assert t_small < math.inf, f"{shape}/{machine}: over {_BUDGET_S} s"
-        t_big = min(_parse_seconds(big) for _ in range(3))
+        t_big = min(_parse_seconds(big, positions) for _ in range(3))
         if t_big <= 6 * t_small:
             return
     pytest.fail(f"{shape}/{machine}: 4x input took {t_big / t_small:.1f}x "

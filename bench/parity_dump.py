@@ -13,35 +13,38 @@ robots' sitemap/feed/feed-discovery) runs in-process, without Spark, over
 the fixtures, CHARSET_PAGES, XML_FIXTURES and the first KERNEL_DOCS corpus
 docs; each output frame is snapshotted as its column list plus its rows
 after the Arrow conversion Spark applies (``to_arrow_schema`` of the
-kernel's output schema).  A check prints the label of every mismatching
+kernel's output schema).  The other ten kernels on the row-kernel loop
+(media, PDF, WARC/WET, page generation) run over their fixtures, once as
+one batch and once as one batch per payload; a snapshot is the rows of
+all frames after the Arrow conversion, concatenated, so a zero-row frame
+is no difference.  A check prints the label of every mismatching
 snapshot.
 
 The adversarial fixtures live in ``tests/parser_fixtures.py`` (shared with
-the fast-path differential test).  The script imports ``fortissimo_spark``
-from the checkout it sits in, so a parent-code reference is made by copying
-this file and ``tests/parser_fixtures.py`` into a parent checkout (with
-``.bench_scratch`` linked in for the corpus half) and running dump there.
+the fast-path differential test), the kernels and their fixtures in
+``tests/kernel_fixtures.py`` (shared with the kernel tests).  The script
+imports ``fortissimo_spark`` from the checkout it sits in, so a
+parent-code reference is made by copying this file and those two into a
+parent checkout (with ``.bench_scratch`` linked in for the corpus half)
+and running dump there.
 """
 import glob
 import os
 import pickle
 import sys
 
-import pandas as pd
 import pyarrow as pa
 import pyarrow.parquet as pq
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, ROOT)
 from pyspark.sql.pandas.types import to_arrow_schema  # noqa: E402
-from pyspark.sql.types import (  # noqa: E402
-    BooleanType, LongType, IntegerType, StringType, StructField, StructType,
-)
 
-from fortissimo_spark import graph, kernel, robots  # noqa: E402
 from fortissimo_spark.kernel import process_document, decode_page_bytes  # noqa: E402
 from fortissimo_spark.parser import parse  # noqa: E402
-from fortissimo_spark.schema import EXTRACT_SCHEMA, NODES_SCHEMA  # noqa: E402
+from tests.kernel_fixtures import (  # noqa: E402
+    batch, folded_kernels, page_kernels, run,
+)
 from tests.parser_fixtures import FIXTURES  # noqa: E402
 
 MODE = sys.argv[1]
@@ -93,124 +96,49 @@ KERNEL_DOCS = 1000
 BATCH = 100
 
 
-def _struct(*names_types):
-    return StructType([StructField(n, t) for n, t in names_types])
-
-
-class _Captured(Exception):
-    """Raised by _Frame.mapInPandas: carries the kernel, its output schema
-    and the input columns the wrapper selected."""
-
-
-class _Frame:
-    """Just enough of a Spark DataFrame for a kernel wrapper to build its
-    mapInPandas call, which is captured instead of run."""
-
-    def __init__(self, columns):
-        self.columns = list(columns)
-        self.selected = self.columns
-
-    def select(self, *cols):
-        self.selected = list(cols)
-        return self
-
-    def mapInPandas(self, fn, schema):
-        raise _Captured(fn, schema, self.selected)
-
-
-def _captured(wrapper, columns):
-    try:
-        wrapper(_Frame(columns))
-    except _Captured as c:
-        return c.args
-    raise AssertionError(f"{wrapper.__name__} made no mapInPandas call")
-
-
-PAGE_COLS = ["url", "warc_ts", "html", "lang"]
-S, L, I, B = StringType(), LongType(), IntegerType(), BooleanType()
-
-
-def page_kernels():
-    """(name, kernel, output schema, input columns, key, payload) for all
-    19 page kernels, built through their public constructors."""
-    direct = [
-        ("extract", kernel.make_extract_kernel("density", True),
-         EXTRACT_SCHEMA),
-        ("format", kernel.make_format_kernel({"indent": 2}),
-         _struct(("url", S), ("formatted_html", S))),
-        ("stylize", kernel.make_stylize_kernel(),
-         _struct(("url", S), ("stylized_html", S))),
-        ("events", kernel.make_events_kernel(),
-         _struct(("url", S), ("n_events", L), ("n_text_events", L),
-                 ("n_tag_events", L), ("reconstituted_ok", B))),
-        ("selector", kernel.make_selector_kernel(),
-         _struct(("url", S), ("title_text", S), ("n_links", I),
-                 ("n_main_paragraphs", I))),
-        ("nodes", kernel.make_nodes_kernel(), NODES_SCHEMA),
-    ]
-    out = [(n, k, s, PAGE_COLS, "url", "html") for n, k, s in direct]
-    for wrapper in (kernel.page_analysis, kernel.page_metadata,
-                    kernel.extract_tables, kernel.extract_sections,
-                    kernel.template_fingerprints, kernel.extract_rdfa,
-                    kernel.extract_microdata, kernel.robots_flags,
-                    kernel.structured_data, graph.extract_outlinks,
-                    robots.discover_feeds):
-        fn, schema, cols = _captured(wrapper, PAGE_COLS)
-        out.append((wrapper.__name__, fn, schema, cols, "url", "html"))
-    for wrapper, key in ((robots.parse_sitemaps, "sitemap_url"),
-                         (robots.parse_feeds, "feed_url")):
-        fn, schema, cols = _captured(wrapper, [key, "xml"])
-        out.append((wrapper.__name__, fn, schema, cols, key, "xml"))
-    return out
-
-
-def frame_snapshot(df, schema) -> tuple:
+def arrow_rows(df, schema):
+    """The rows of ``df`` after the Arrow conversion Spark applies, or
+    the failure of a frame Spark could not ship either."""
     try:
         table = pa.Table.from_pandas(df, schema=to_arrow_schema(schema),
                                      preserve_index=False, safe=True)
     except (pa.ArrowException, ValueError, TypeError) as e:
-        # a frame Spark could not ship either: snapshot the failure
-        return (tuple(df.columns), ("arrow conversion failed",
-                                    type(e).__name__))
-    return (tuple(df.columns), tuple(tuple(r.values())
-                                     for r in table.to_pylist()))
+        return ("arrow conversion failed", type(e).__name__)
+    return tuple(tuple(r.values()) for r in table.to_pylist())
 
 
 def kernel_inputs(n):
-    """(label, frame) input groups: url/warc_ts/html/lang pages."""
-    def frame(label, raws, urls=None):
-        m = len(raws)
-        return (label, pd.DataFrame({
-            "url": urls or [f"http://fixture.test/{label}/{i}"
-                            for i in range(m)],
-            "warc_ts": pd.to_datetime(["2024-01-01"] * m),
-            "html": raws,
-            "lang": ["en"] * m,
-        }))
-
-    groups = [frame("fixtures", [fx.encode("utf-8") for fx in FIXTURES]
-                    + [None]),
-              frame("charset", [p.encode("utf-8") for p in CHARSET_PAGES]),
-              frame("xml", [p.encode("utf-8") for p in XML_FIXTURES])]
+    """(label, payloads, urls) page input groups."""
+    groups = [(label, raws, [f"http://fixture.test/{label}/{i}"
+                             for i in range(len(raws))])
+              for label, raws in (
+                  ("fixtures",
+                   [fx.encode("utf-8") for fx in FIXTURES] + [None]),
+                  ("charset", [p.encode("utf-8") for p in CHARSET_PAGES]),
+                  ("xml", [p.encode("utf-8") for p in XML_FIXTURES]))]
     docs = corpus_pages(n)
     for i in range(0, len(docs), BATCH):
         part = docs[i:i + BATCH]
-        groups.append(frame(f"corpus[{i}:{i + len(part)}]",
-                            [d["html"] for d in part],
-                            [d["url"] for d in part]))
+        groups.append((f"corpus[{i}:{i + len(part)}]",
+                       [d["html"] for d in part], [d["url"] for d in part]))
     return groups
 
 
 def kernel_snapshots(n):
     snaps = []
     groups = kernel_inputs(n)
-    for name, fn, schema, cols, key, payload in page_kernels():
-        for label, pages in groups:
-            batch = pages.rename(columns={"url": key, "html": payload})
-            batch = batch[[c for c in cols if c in batch.columns]]
-            frames = list(fn(iter([batch])))
-            snaps.append((f"kernel {name} / {label}",
-                          tuple(frame_snapshot(df, schema) for df in frames)))
+    for name, k in page_kernels().items():
+        for label, raws, urls in groups:
+            snaps.append((f"kernel {name} / {label}", tuple(
+                (tuple(df.columns), arrow_rows(df, k.schema))
+                for df in run(k, raws, urls))))
+    for name, k in folded_kernels().items():
+        for label, batches in (
+                ("one batch", [batch(k, k.fixtures)]),
+                ("a batch per payload", [batch(k, [p]) for p in k.fixtures])):
+            snaps.append((f"kernel {name} / {label}", tuple(
+                row for df in k.fn(iter(batches))
+                for row in arrow_rows(df, k.schema))))
     return snaps
 
 

@@ -74,21 +74,6 @@ def _decoded(b: DocBuilder, node: int) -> str:
     return c
 
 
-def _collect_spans(b: DocBuilder, node: int, spans: list) -> None:
-    from .dom import N_CHILDREN, N_KIND, N_SRC_END, N_SRC_START
-    nodes = b.nodes
-    stack = list(reversed(nodes[node][N_CHILDREN] or []))
-    while stack:
-        child = stack.pop()
-        nd = nodes[child]
-        k = nd[N_KIND]
-        if k == TEXT or k == CDATA:
-            if nd[N_SRC_START] >= 0:
-                spans.append((nd[N_SRC_START], nd[N_SRC_END]))
-        elif k == ELEMENT and nd[N_CHILDREN]:
-            stack.extend(reversed(nd[N_CHILDREN]))
-
-
 def validate_spans(b: DocBuilder, source: str) -> tuple[int, bool]:
     """Span-integrity check for the extraction contract: every TEXT span
     must slice ``source`` to exactly the bytes whose entity-decode is the
@@ -127,7 +112,10 @@ def validate_spans(b: DocBuilder, source: str) -> tuple[int, bool]:
     return count, True
 
 
-def _text_content_skipping(b: DocBuilder, node: int, out: list, spans: list) -> None:
+def _text_content_skipping(b: DocBuilder, node: int, out: list, spans: list,
+                           drop: frozenset) -> None:
+    """textContent of ``node`` without the subtrees of ``drop`` elements,
+    plus the source span of every emitted text/CDATA node."""
     from .dom import N_CHILDREN, N_KIND, N_SRC_END, N_SRC_START, N_TAG_LC
     nodes = b.nodes
     stack = list(reversed(nodes[node][N_CHILDREN] or []))
@@ -139,7 +127,7 @@ def _text_content_skipping(b: DocBuilder, node: int, out: list, spans: list) -> 
             out.append(_decoded(b, child))
             if nd[N_SRC_START] >= 0:
                 spans.append((nd[N_SRC_START], nd[N_SRC_END]))
-        elif k == ELEMENT and nd[N_TAG_LC] not in DROP_TAGS and nd[N_CHILDREN]:
+        elif k == ELEMENT and nd[N_TAG_LC] not in drop and nd[N_CHILDREN]:
             stack.extend(reversed(nd[N_CHILDREN]))
 
 
@@ -152,16 +140,11 @@ def extract(b: DocBuilder, strip: str = "density",
     kinds = [nd[0] for nd in b.nodes]
     text_node_count = kinds.count(TEXT) + kinds.count(CDATA)
 
-    if strip == "none":
-        spans: list = []
-        text = b.text_content(0)
-        _collect_spans(b, 0, spans)
-        return ExtractResult(text, spans, 0, 0, node_count, text_node_count)
-
-    if strip == "basic":
+    if strip == "none" or strip == "basic":
         out: list = []
-        spans = []
-        _text_content_skipping(b, 0, out, spans)
+        spans: list = []
+        _text_content_skipping(b, 0, out, spans,
+                               DROP_TAGS if strip == "basic" else frozenset())
         return ExtractResult("".join(out), spans, 0, 0, node_count, text_node_count)
 
     if strip != "density":

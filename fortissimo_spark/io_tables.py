@@ -10,11 +10,10 @@ writer API is Iceberg-shaped (overwrite-by-partition) so swapping in
 from __future__ import annotations
 
 import os
-from typing import Iterable, Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from .batches import row_kernel
 from .pages import has_second_crawl, page_for_doc
 from .schema import PAGES_SCHEMA
 
@@ -28,23 +27,12 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
 
 
-def _pages_kernel(batches: Iterable[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    for pdf in batches:
-        if len(pdf) == 0:
-            continue
-        cols = {k: [] for k in ("url", "warc_ts", "html", "text", "lang")}
-        for doc_id, text, lang in zip(pdf["doc_id"].tolist(),
-                                      pdf["text"].tolist(),
-                                      pdf["lang"].tolist()):
-            crawls = (0, 1) if has_second_crawl(doc_id) else (0,)
-            for crawl in crawls:
-                pg = page_for_doc(int(doc_id), text, lang, crawl)
-                cols["url"].append(pg["url"])
-                cols["warc_ts"].append(pg["warc_ts"])
-                cols["html"].append(pg["html"])
-                cols["text"].append(None)
-                cols["lang"].append(pg["lang"])
-        yield pd.DataFrame(cols)
+def _doc_pages(doc_id, text, lang):
+    """PAGES_SCHEMA rows of one document: its first crawl, and a second
+    crawl for the ~10% of urls that have one.  A NULL text reads as ""."""
+    for crawl in ((0, 1) if has_second_crawl(doc_id) else (0,)):
+        pg = page_for_doc(int(doc_id), text or "", lang, crawl)
+        yield pg["url"], pg["warc_ts"], pg["html"], None, pg["lang"]
 
 
 def build_pages(spark: SparkSession, sf_dir: str, *,
@@ -66,7 +54,9 @@ def build_pages(spark: SparkSession, sf_dir: str, *,
     # documents arrive as a single small parquet split; spread generation +
     # parsing across all cores (tiny shuffle, CPU-bound downstream)
     docs = docs.repartition(num_partitions, "doc_id")
-    return docs.mapInPandas(_pages_kernel, PAGES_SCHEMA)
+    return docs.mapInPandas(
+        row_kernel(PAGES_SCHEMA, _doc_pages, ("doc_id", "text", "lang")),
+        PAGES_SCHEMA)
 
 
 def with_layout_columns(pages: DataFrame) -> DataFrame:

@@ -8,14 +8,14 @@ per-character Python anywhere.
 
 Page-kernel contract: every kernel that parses pages (the 15 here, graph's
 outlinks, robots' sitemap/feed/feed-discovery kernels) is built by
-``_page_kernel`` from an output schema and a per-page row function.  That
-one loop owns everything the kernels share: the batch iteration and the
-empty-batch skip, ``None`` payloads read as ``b""``, one decode front end
-(``decode_parse``, below), one GC pause (``gc_paused``, below), the
-zip-finder drop at the end of a task (``_drop_zip_finders``, below), the key
-column and any ``warc_ts``/``lang`` copied from the input page onto each of
-its output rows, and one frame per input batch whose columns are the
-schema's, in schema order.  A kernel is its row function plus its schema.
+``_page_kernel`` from an output schema and a per-page row function.
+``_page_kernel`` is a thin adapter on the row-kernel loop
+(``batches.row_kernel``, whose module docstring holds the batch contract,
+the GC pause, the zip-finder drop and the integer-column rule): it reads a
+``None`` payload as ``b""``, runs one decode front end (``decode_parse``,
+below), and carries the key column and any ``warc_ts``/``lang`` from the
+input page onto each of its output rows.  A kernel is its row function
+plus its schema.
 
 Encoding policy (mirrors the reference CLI's retry loop, cli.ts:32-56, done
 in-kernel in a single pass):
@@ -29,55 +29,21 @@ in-kernel in a single pass):
 
 Every page kernel sees the same decoded text for a page, so signals from
 different kernels over one page agree.
-
-Garbage collection: every page kernel runs under ``gc_paused``, which
-disables Python's cyclic collector while the kernel builds one output
-batch and restores the caller's GC state before the batch is yielded (or
-an exception propagates).  A DOM is a flat list of per-node lists whose
-parent/child links are integer indices, so it holds no reference cycles
-and refcounting frees it as soon as the document is done.  Its 7 tracked
-containers per node would otherwise set off ~3,000 generation-0 and 24
-full collections per 600 malformed ~12 KB pages, all finding nothing.  The
-collector is paused for at most one Arrow batch, so a cycle made elsewhere
-waits at most one batch longer to be collected.
-
-Zip finders: when a page kernel's batch iterator is exhausted or closed,
-``_drop_zip_finders`` deletes every ``zipimport.zipimporter`` from
-``sys.path_importer_cache``.  PySpark's worker calls
-``importlib.invalidate_caches()`` at the start of every task
-(``worker_util.setup_spark_files``), and on CPython 3.11 and 3.12 each
-cached zipimporter then re-reads its archive's whole central directory
-(3.13 only drops its cache).  PySpark's own imports leave 16 of them
-behind on a worker: 2 for the spark-core jar (5,359 entries, 21-34 ms per
-re-read), 12 for ``pyspark.zip`` (1,328 entries, 5-8 ms) and 2 for the
-py4j zip (9 entries).  That is 0.10-0.12 s per task on an idle 4-vCPU host
-and 0.17-0.28 s while other work runs on it, before the kernel sees a row.
-With the finders gone the next task's ``invalidate_caches()`` takes
-~0.1 ms.  Deleting a cache entry is the
-documented way to force a fresh path-entry search, and a later import from
-one of those paths re-creates its finder from zipimport's directory cache
-without reading the archive.  That cache is not refreshed: an archive on a
-worker's path does not change while the worker lives.  Spark's own jars and
-zips are fixed for the application, and ``--py-files`` copies get fixed
-names.
 """
 
 from __future__ import annotations
 
 import codecs
-import gc
 import json
 import re
-import sys
-import zipimport
-from functools import lru_cache, wraps
+from functools import lru_cache
 
-import pandas as pd
 from pyspark.sql.types import (
     BooleanType, IntegerType, LongType, StringType, StructField, StructType,
     TimestampType,
 )
 
+from .batches import row_kernel
 from .dom import ELEMENT, N_ATTR_NAMES, N_ATTR_VALUES, N_KIND, N_PARENT, \
     N_TAG_LC
 from .extract import extract
@@ -85,7 +51,7 @@ from .parser import parse
 from .schema import EXTRACT_SCHEMA, NODES_SCHEMA
 
 __all__ = ["decode_page_bytes", "process_document", "make_extract_kernel",
-           "make_nodes_kernel", "gc_paused"]
+           "make_nodes_kernel"]
 
 _RE_META_CHARSET = re.compile(
     rb"""<meta[^>]+charset[ \t\n\f\r]*=[ \t\n\f\r]*["']?([\w-]+)""", re.I)
@@ -93,39 +59,6 @@ _RE_META_CHARSET = re.compile(
 # token_count contract: the number of \S+ runs.  str.split() splits on
 # exactly the same whitespace class (verified: re's \s and str.isspace
 # agree on every codepoint), and is ~4x faster than findall.
-
-
-def gc_paused(kernel):
-    """Wrap a mapInPandas kernel so the cyclic collector is off while it
-    builds each output batch (see the module docstring).  The caller's GC
-    state is restored before every yield and on any exception."""
-
-    @wraps(kernel)
-    def paused(batches):
-        out = kernel(batches)
-        while True:
-            enabled = gc.isenabled()
-            gc.disable()
-            try:
-                pdf = next(out, None)
-            finally:
-                if enabled:
-                    gc.enable()
-            if pdf is None:
-                return
-            yield pdf
-
-    return paused
-
-
-def _drop_zip_finders() -> None:
-    """Delete every zip finder from ``sys.path_importer_cache``, so the
-    next task's ``importlib.invalidate_caches()`` re-reads no archive (see
-    the module docstring)."""
-    cache = sys.path_importer_cache
-    for path in [p for p, f in cache.items()
-                 if isinstance(f, zipimport.zipimporter)]:
-        del cache[path]
 
 
 @lru_cache(maxsize=512)
@@ -215,40 +148,17 @@ _CARRIED = ("warc_ts", "lang")
 
 def _page_kernel(schema: StructType, rows, key: str = "url",
                  payload: str = "html"):
-    """The page-kernel loop (see the module docstring).  ``rows(raw,
+    """The page-kernel adapter (see the module docstring).  ``rows(raw,
     parsed)`` gets one page's bytes and its ``decode_parse`` result and
     returns an iterable of row tuples: the schema's fields in schema
-    order, without ``key`` and the carried columns.  The kernel copies
-    those from each row's input page (NULL for a carried column the
-    input lacks)."""
-    names = schema.fieldNames()
-    passed = [n for n in names if n == key or n in _CARRIED]
+    order, without ``key`` and the carried columns."""
+    def page(raw):
+        raw = bytes(raw) if raw is not None else b""
+        return rows(raw, decode_parse(raw))
 
-    def kernel(batches):
-        try:
-            for pdf in batches:
-                if len(pdf) == 0:
-                    continue
-                out, src = [], []
-                for i, raw in enumerate(pdf[payload].tolist()):
-                    raw = bytes(raw) if raw is not None else b""
-                    for row in rows(raw, decode_parse(raw)):
-                        out.append(row)
-                        src.append(i)
-                values = zip(*out)
-                cols = {}
-                for n in names:
-                    if n not in passed:
-                        cols[n] = list(next(values, ()))
-                    elif n in pdf.columns:
-                        cols[n] = pdf[n].values[src]
-                    else:
-                        cols[n] = [None] * len(src)
-                yield pd.DataFrame(cols)
-        finally:
-            _drop_zip_finders()
-
-    return gc_paused(kernel)
+    return row_kernel(schema, page, (payload,),
+                      [n for n in schema.fieldNames()
+                       if n == key or n in _CARRIED])
 
 
 def _struct(**fields) -> StructType:

@@ -26,7 +26,6 @@ from __future__ import annotations
 
 import hashlib
 import zlib
-from typing import Iterable, Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame, functions as F
@@ -34,6 +33,8 @@ from pyspark.sql.types import (
     ArrayType, BinaryType, FloatType, IntegerType, LongType, StringType,
     StructField, StructType,
 )
+
+from .batches import row_kernel
 
 __all__ = ["MEDIA_SCHEMA", "IMAGE_FEATURES_SCHEMA", "AUDIO_FEATURES_SCHEMA",
            "decode_image", "decode_bmp", "decode_ppm", "decode_png", "decode_gif",
@@ -1068,25 +1069,29 @@ def sniff_mp4(raw: bytes):
         return None  # image: sniff_avif's job
 
     dur_ms = width = height = None
-
-    def walk(start: int, end: int, depth: int) -> None:
-        nonlocal dur_ms, width, height
-        i = start
+    # boxes in file order, moov/trak entered depth-first; a stack of
+    # (next box, end, depth) cursors, not a recursive closure, whose
+    # self-reference would keep the payload alive until a collection
+    stack = [(0, len(raw), 0)]
+    while stack:
+        i, end, depth = stack.pop()
         while i + 8 <= end and depth < 8:
             size = int.from_bytes(raw[i:i + 4], "big")
             btype = raw[i + 4:i + 8]
             body = i + 8
             if size == 1:  # 64-bit largesize
                 if i + 16 > end:
-                    return
+                    break
                 size = int.from_bytes(raw[i + 8:i + 16], "big")
                 body = i + 16
             if size < 8:
-                return
+                break
             stop = min(i + size, end)
             if btype in (b"moov", b"trak"):
-                walk(body, stop, depth + 1)
-            elif btype == b"mvhd" and stop - body >= 20:
+                stack.append((i + size, end, depth))
+                i, end, depth = body, stop, depth + 1
+                continue
+            if btype == b"mvhd" and stop - body >= 20:
                 ver = raw[body]
                 if ver == 1 and stop - body >= 28:
                     ts = int.from_bytes(raw[body + 20:body + 24], "big")
@@ -1105,8 +1110,6 @@ def sniff_mp4(raw: bytes):
                     if w and h and width is None:
                         width, height = w, h
             i += size
-
-    walk(0, len(raw), 0)
     if dur_ms is None and width is None:
         raise ValueError("ISO-BMFF without a readable moov header")
     return width, height, dur_ms
@@ -1719,26 +1722,14 @@ def decode_audio(payload: bytes, *, n_windows: int = 16,
 def make_audio_feature_kernel(deterministic_fake: bool = True):
     """mapInPandas kernel: MEDIA_SCHEMA batches -> AUDIO_FEATURES_SCHEMA."""
 
-    def kernel(batches: Iterable[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            out = {k: [] for k in ("media_id", "sample_rate", "n_channels",
-                                   "duration_ms", "n_bytes", "rms")}
-            for mid, payload in zip(pdf["media_id"].tolist(),
-                                    pdf["payload"].tolist()):
-                raw = bytes(payload or b"")
-                rate, nch, dur, rms = decode_audio(
-                    raw, deterministic_fake=deterministic_fake)
-                out["media_id"].append(mid)
-                out["sample_rate"].append(rate)
-                out["n_channels"].append(nch)
-                out["duration_ms"].append(dur)
-                out["n_bytes"].append(len(raw))
-                out["rms"].append(rms)
-            yield pd.DataFrame(out)
+    def audio_feature_rows(payload):
+        raw = bytes(payload or b"")
+        rate, nch, dur, rms = decode_audio(
+            raw, deterministic_fake=deterministic_fake)
+        return [(rate, nch, dur, len(raw), rms)]
 
-    return kernel
+    return row_kernel(AUDIO_FEATURES_SCHEMA, audio_feature_rows, ("payload",),
+                      ("media_id",))
 
 
 def audio_features(media: DataFrame) -> DataFrame:
@@ -1754,24 +1745,15 @@ def make_image_feature_kernel(target: tuple[int, int] = (32, 32),
     ``target`` models the resize step; the fake keeps output dims = min of
     source and target (as a real thumbnailer would for downscale-only)."""
 
-    def kernel(batches: Iterable[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            out = {"media_id": [], "out_width": [], "out_height": [],
-                   "n_bytes": [], "feature": []}
-            for mid, payload in zip(pdf["media_id"].tolist(),
-                                    pdf["payload"].tolist()):
-                raw = bytes(payload or b"")
-                w, h, summary = decode_image(raw, deterministic_fake=deterministic_fake)
-                out["media_id"].append(mid)
-                out["out_width"].append(min(w, target[0]))
-                out["out_height"].append(min(h, target[1]))
-                out["n_bytes"].append(len(raw))
-                out["feature"].append(_feature_from_summary(summary))
-            yield pd.DataFrame(out)
+    def image_feature_rows(payload):
+        raw = bytes(payload or b"")
+        w, h, summary = decode_image(raw,
+                                     deterministic_fake=deterministic_fake)
+        return [(min(w, target[0]), min(h, target[1]), len(raw),
+                 _feature_from_summary(summary))]
 
-    return kernel
+    return row_kernel(IMAGE_FEATURES_SCHEMA, image_feature_rows, ("payload",),
+                      ("media_id",))
 
 
 def image_features(media: DataFrame, target: tuple[int, int] = (32, 32)) -> DataFrame:
@@ -2572,51 +2554,26 @@ def sample_frames(media: DataFrame, every_ms: int = 1000) -> DataFrame:
     for every row, the bitstream decode still needs a codec library.
     mapInPandas, no shuffle."""
 
-    def kernel(batches: Iterable[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = ("media_id", "frame_ms", "frame_token", "width",
-                "height", "frame_luma")
-        for pdf in batches:
-            rows: dict[str, list] = {k: [] for k in cols}
-            for mid, payload, dur in zip(pdf["media_id"].tolist(),
-                                         pdf["payload"].tolist(),
-                                         pdf["duration_ms"].tolist()):
-                raw = bytes(payload or b"")
-                dur_i = None if pd.isna(dur) else int(dur)
-                frames = None
-                try:
-                    frames = decode_video_frames(raw, every_ms, dur_i)
-                except Exception:  # noqa: BLE001 - corrupt sample table
-                    frames = None
-                if frames is not None:
-                    for t, w, h, grid in frames:
-                        rows["media_id"].append(mid)
-                        rows["frame_ms"].append(t)
-                        rows["frame_token"].append(
-                            _frame_token(raw, t))
-                        rows["width"].append(w)
-                        rows["height"].append(h)
-                        rows["frame_luma"].append(grid)
-                    continue
-                if dur_i is None:
-                    continue  # no duration, no sample table: nothing
-                for t in range(0, max(dur_i - 1, 0) + 1, every_ms):
-                    rows["media_id"].append(mid)
-                    rows["frame_ms"].append(t)
-                    rows["frame_token"].append(_frame_token(raw, t))
-                    rows["width"].append(None)
-                    rows["height"].append(None)
-                    rows["frame_luma"].append(None)
-            if rows["media_id"]:
-                out = pd.DataFrame(rows, columns=cols)
-                out["frame_token"] = pd.array(rows["frame_token"],
-                                              dtype="Int64")
-                for k in ("frame_ms", "width", "height"):
-                    out[k] = pd.array(rows[k], dtype="Int32")
-                yield out
+    def frames(payload, dur):
+        raw = bytes(payload or b"")
+        dur_i = None if pd.isna(dur) else int(dur)
+        try:
+            decoded = decode_video_frames(raw, every_ms, dur_i)
+        except Exception:  # noqa: BLE001 - corrupt sample table
+            decoded = None
+        if decoded is not None:
+            return [(t, _frame_token(raw, t), w, h, grid)
+                    for t, w, h, grid in decoded]
+        if dur_i is None:
+            return []  # no duration, no sample table: nothing
+        return [(t, _frame_token(raw, t), None, None, None)
+                for t in range(0, max(dur_i - 1, 0) + 1, every_ms)]
 
     vids = media.filter(F.col("kind") == "video") \
         .select("media_id", "payload", "duration_ms")
-    return vids.mapInPandas(kernel, FRAME_SCHEMA)
+    return vids.mapInPandas(
+        row_kernel(FRAME_SCHEMA, frames, ("payload", "duration_ms"),
+                   ("media_id",)), FRAME_SCHEMA)
 
 
 def _frame_token(raw: bytes, frame_ms: int) -> int:
@@ -2647,28 +2604,18 @@ def media_metadata(media: DataFrame) -> DataFrame:
     pixel decode. Unrecognized or corrupt payloads yield ``format``
     NULL with all fields NULL — observable, never dropped, never a task
     failure. mapInPandas, no shuffle; composes with any layout."""
-    cols = ("media_id", "format", "width", "height", "sample_rate",
-            "n_channels", "bitrate_kbps", "duration_ms")
+    cols = MEDIA_METADATA_SCHEMA.fieldNames()[1:]
 
-    def kernel(batches: Iterable[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows: dict[str, list] = {k: [] for k in cols}
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                try:
-                    meta = sniff_media(bytes(payload or b""))
-                except Exception:  # noqa: BLE001 - malformed header
-                    meta = None
-                rows["media_id"].append(mid)
-                for k in cols[1:]:
-                    rows[k].append(meta[k] if meta else None)
-            if rows["media_id"]:
-                out = pd.DataFrame(rows, columns=cols)
-                for k in cols[2:]:
-                    out[k] = out[k].astype("Int32")
-                yield out
+    def metadata(payload):
+        try:
+            meta = sniff_media(bytes(payload or b""))
+        except Exception:  # noqa: BLE001 - malformed header
+            meta = None
+        return [tuple(meta[k] if meta else None for k in cols)]
 
-    return media.select("media_id", "payload") \
-        .mapInPandas(kernel, MEDIA_METADATA_SCHEMA)
+    return media.select("media_id", "payload").mapInPandas(
+        row_kernel(MEDIA_METADATA_SCHEMA, metadata, ("payload",),
+                   ("media_id",)), MEDIA_METADATA_SCHEMA)
 
 
 # --- perceptual image hashing (near-duplicate images) --------------------
@@ -2718,34 +2665,15 @@ def with_image_dhash(media: DataFrame) -> DataFrame:
     failure); codec formats without a pixel decoder yield real header
     dimensions with NULL dhash. mapInPandas, no shuffle."""
 
-    def kernel(batches: Iterable[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = ("media_id", "width", "height", "dhash")
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            rows: dict[str, list] = {k: [] for k in cols}
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                try:
-                    w, h, dh = _dhash_decode(bytes(payload or b""))
-                except Exception:  # noqa: BLE001 - corrupt payloads degrade
-                    w = h = dh = None
-                rows["media_id"].append(mid)
-                rows["width"].append(w)
-                rows["height"].append(h)
-                rows["dhash"].append(dh)
-            # dhash MUST build via pd.array on the python ints: an
-            # object-column astype("Int64") detours through float64 when
-            # Nones are present and silently rounds 64-bit hashes to 53
-            # bits of mantissa
-            yield pd.DataFrame({
-                "media_id": rows["media_id"],
-                "width": pd.array(rows["width"], dtype="Int32"),
-                "height": pd.array(rows["height"], dtype="Int32"),
-                "dhash": pd.array(rows["dhash"], dtype="Int64"),
-            }, columns=cols)
+    def dhash(payload):
+        try:
+            return [_dhash_decode(bytes(payload or b""))]
+        except Exception:  # noqa: BLE001 - corrupt payloads degrade
+            return [(None, None, None)]
 
-    return media.select("media_id", "payload") \
-        .mapInPandas(kernel, IMAGE_DHASH_SCHEMA)
+    return media.select("media_id", "payload").mapInPandas(
+        row_kernel(IMAGE_DHASH_SCHEMA, dhash, ("payload",), ("media_id",)),
+        IMAGE_DHASH_SCHEMA)
 
 
 def image_near_dups(hashed: DataFrame, max_hamming: int = 3,
@@ -2831,32 +2759,15 @@ def with_audio_fingerprint(media: DataFrame) -> DataFrame:
     decode for real; codec formats and corrupt payloads yield NULL
     fingerprints, never task failures). mapInPandas, no shuffle."""
 
-    def kernel(batches: Iterable[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = ("media_id", "sample_rate", "duration_ms", "afp")
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            rows: dict[str, list] = {k: [] for k in cols}
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                try:
-                    rate, dur, fp = _afp_decode(bytes(payload or b""))
-                except Exception:  # noqa: BLE001 - undecodable degrades
-                    rate = dur = fp = None
-                rows["media_id"].append(mid)
-                rows["sample_rate"].append(rate)
-                rows["duration_ms"].append(dur)
-                rows["afp"].append(fp)
-            # pd.array, NOT astype: an object column with Nones detours
-            # through float64 and rounds 64-bit ints (see with_image_dhash)
-            yield pd.DataFrame({
-                "media_id": rows["media_id"],
-                "sample_rate": pd.array(rows["sample_rate"], dtype="Int32"),
-                "duration_ms": pd.array(rows["duration_ms"], dtype="Int32"),
-                "afp": pd.array(rows["afp"], dtype="Int64"),
-            }, columns=cols)
+    def fingerprint(payload):
+        try:
+            return [_afp_decode(bytes(payload or b""))]
+        except Exception:  # noqa: BLE001 - undecodable degrades
+            return [(None, None, None)]
 
-    return media.select("media_id", "payload") \
-        .mapInPandas(kernel, AUDIO_FP_SCHEMA)
+    return media.select("media_id", "payload").mapInPandas(
+        row_kernel(AUDIO_FP_SCHEMA, fingerprint, ("payload",), ("media_id",)),
+        AUDIO_FP_SCHEMA)
 
 
 def audio_near_dups(fingerprinted: DataFrame, max_hamming: int = 3,

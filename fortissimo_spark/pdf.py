@@ -37,7 +37,7 @@ from __future__ import annotations
 
 import re
 import zlib
-from typing import Iterable, Iterator
+from typing import Iterator
 
 __all__ = ["build_pdf", "extract_pdf_text", "make_pdf_extract_kernel"]
 
@@ -998,26 +998,26 @@ def _collect_pages(doc: _PdfDoc) -> list[tuple[dict, dict | None]]:
         return []
     pages: list[tuple[dict, dict | None]] = []
     seen: set[int] = set()
-
-    def walk(node, inherited_res, depth: int) -> None:
+    # depth-first, kids in order; a stack, not a recursive closure, whose
+    # self-reference would keep the whole document alive until a collection
+    stack = [(root.get("Pages"), root.get("Resources"), 0)]
+    while stack:
+        node, inherited_res, depth = stack.pop()
         if depth > 64 or len(pages) > 10_000:
-            return
+            continue
         if isinstance(node, _Ref):
             if node[0] in seen:
-                return
+                continue
             seen.add(node[0])
         node = doc.resolve(node)
         if not isinstance(node, dict):
-            return
+            continue
         res = node.get("Resources", inherited_res)
         kids = doc.resolve(node.get("Kids"))
         if isinstance(kids, list):
-            for kid in kids:
-                walk(kid, res, depth + 1)
+            stack.extend((kid, res, depth + 1) for kid in reversed(kids))
         elif str(node.get("Type")) == "Page" or "Contents" in node:
             pages.append((node, res))
-
-    walk(root.get("Pages"), root.get("Resources"), 0)
     return pages
 
 
@@ -1125,30 +1125,28 @@ def extract_pdf_text(payload: bytes) -> str:
 # Spark surface
 # --------------------------------------------------------------------------
 
+def _pdf_row(raw) -> list[tuple]:
+    """(text, n_bytes, error) of one document: an undecodable document
+    (encrypted, corrupt) degrades to a NULL text with the error recorded,
+    never a failed task (crawled corpora always contain hostile ones)."""
+    raw = bytes(raw or b"")
+    try:
+        text, err = extract_pdf_text(raw), None
+    except Exception as e:  # noqa: BLE001 - per-row degradation
+        text, err = None, f"{type(e).__name__}: {e}"
+    return [(text, len(raw), err)]
+
+
 def make_pdf_extract_kernel():
     """mapInPandas kernel: (doc_id, pdf binary) batches ->
     (doc_id, text, n_bytes, error) — the PDF leg of the extraction
-    pipeline. One undecodable document (encrypted, corrupt) degrades to a
-    null-text row with the error recorded; it must never fail the Spark
-    task (crawled corpora always contain hostile documents)."""
-    import pandas as pd
+    pipeline, one row per document (see ``_pdf_row``)."""
+    from pyspark.sql.types import (IntegerType, LongType, StringType,
+                                   StructField, StructType)
 
-    def kernel(batches: Iterable["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        for pdf_batch in batches:
-            if len(pdf_batch) == 0:
-                continue
-            out = {"doc_id": [], "text": [], "n_bytes": [], "error": []}
-            for doc_id, raw in zip(pdf_batch["doc_id"].tolist(),
-                                   pdf_batch["pdf"].tolist()):
-                raw = bytes(raw or b"")
-                try:
-                    text, err = extract_pdf_text(raw), None
-                except Exception as e:  # noqa: BLE001 - per-row degradation
-                    text, err = None, f"{type(e).__name__}: {e}"
-                out["doc_id"].append(doc_id)
-                out["text"].append(text)
-                out["n_bytes"].append(len(raw))
-                out["error"].append(err)
-            yield pd.DataFrame(out)
-
-    return kernel
+    from .batches import row_kernel
+    schema = StructType([StructField("doc_id", LongType()),
+                         StructField("text", StringType()),
+                         StructField("n_bytes", IntegerType()),
+                         StructField("error", StringType())])
+    return row_kernel(schema, _pdf_row, ("pdf",), ("doc_id",))

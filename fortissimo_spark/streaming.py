@@ -42,6 +42,17 @@ def read_pages_stream(spark: SparkSession, input_path: str,
             .parquet(input_path))
 
 
+def _start_batches(stream: DataFrame, write_batch, checkpoint_path: str,
+                   trigger_seconds: int):
+    """Start ``stream`` with ``write_batch`` run on every micro-batch;
+    returns the StreamingQuery handle."""
+    return (stream.writeStream
+            .foreachBatch(write_batch)
+            .option("checkpointLocation", checkpoint_path)
+            .trigger(processingTime=f"{trigger_seconds} seconds")
+            .start())
+
+
 def streaming_extract(pages_stream: DataFrame, *, strip: str = "density",
                       watermark: str = "1 hour") -> DataFrame:
     """Watermarked, url-deduped streaming extraction.
@@ -125,11 +136,8 @@ def start_streaming_job(spark: SparkSession, input_path: str, output_path: str,
          .partitionBy("crawl_date", "host_bucket")
          .parquet(os.path.join(output_path, f"batch_id={batch_id}")))
 
-    return (extracted.writeStream
-            .foreachBatch(write_batch)
-            .option("checkpointLocation", checkpoint_path)
-            .trigger(processingTime=f"{trigger_seconds} seconds")
-            .start())
+    return _start_batches(extracted, write_batch, checkpoint_path,
+                          trigger_seconds)
 
 
 DOCS_STREAM_SCHEMA = ("doc_id long, lang string, text string, "
@@ -284,11 +292,8 @@ def streaming_curate(spark: SparkSession, input_path: str, output_path: str,
             os.path.join(metrics_path, "source_counts.jsonl"))
         spark.streams.addListener(listener)
 
-    q = (deduped.writeStream
-         .foreachBatch(write_batch)
-         .option("checkpointLocation", checkpoint_path)
-         .trigger(processingTime=f"{trigger_seconds} seconds")
-         .start())
+    q = _start_batches(deduped, write_batch, checkpoint_path,
+                       trigger_seconds)
     if listener is not None:
         # scope the listener to this query (progress events carry the
         # query id; the listener DROPS everything until this assignment,
@@ -330,11 +335,8 @@ def streaming_index(spark: SparkSession, input_path: str,
          .write.mode("overwrite")
          .parquet(os.path.join(segments_path, f"batch_id={batch_id}")))
 
-    return (stream.writeStream
-            .foreachBatch(write_batch)
-            .option("checkpointLocation", checkpoint_path)
-            .trigger(processingTime=f"{trigger_seconds} seconds")
-            .start())
+    return _start_batches(stream, write_batch, checkpoint_path,
+                          trigger_seconds)
 
 
 def streaming_frontier(spark: SparkSession, input_path: str,
@@ -366,9 +368,7 @@ def streaming_frontier(spark: SparkSession, input_path: str,
     keep them. Returns the StreamingQuery handle."""
     from .graph import extract_outlinks, resolve_href
 
-    stream = (spark.readStream.schema(PAGES_SCHEMA)
-              .option("maxFilesPerTrigger", max_files_per_trigger)
-              .parquet(input_path))
+    stream = read_pages_stream(spark, input_path, max_files_per_trigger)
     links = extract_outlinks(stream.select("url", "warc_ts", "html"))
     if not include_nofollow:
         links = links.filter(~F.col("nofollow"))
@@ -390,11 +390,8 @@ def streaming_frontier(spark: SparkSession, input_path: str,
          .write.mode("overwrite")
          .parquet(os.path.join(output_path, f"batch_id={batch_id}")))
 
-    return (cands.writeStream
-            .foreachBatch(write_batch)
-            .option("checkpointLocation", checkpoint_path)
-            .trigger(processingTime=f"{trigger_seconds} seconds")
-            .start())
+    return _start_batches(cands, write_batch, checkpoint_path,
+                          trigger_seconds)
 
 
 def streaming_wet_sink(spark: SparkSession, input_path: str,
@@ -428,8 +425,5 @@ def streaming_wet_sink(spark: SparkSession, input_path: str,
             "text")
         write_wet(wet_in, out)
 
-    return (extracted.writeStream
-            .foreachBatch(write_batch)
-            .option("checkpointLocation", checkpoint_path)
-            .trigger(processingTime=f"{trigger_seconds} seconds")
-            .start())
+    return _start_batches(extracted, write_batch, checkpoint_path,
+                          trigger_seconds)

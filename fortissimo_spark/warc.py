@@ -29,6 +29,7 @@ from typing import Iterable, Iterator
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 
+from .batches import row_kernel
 from .schema import PAGES_SCHEMA
 
 __all__ = ["build_warc", "iter_warc_records", "parse_warc_pages",
@@ -212,24 +213,15 @@ def _parse_warc_date(date: str) -> datetime:
     raise ValueError(f"unparseable WARC-Date: {date!r}")
 
 
-def _warc_kernel(batches: Iterable[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    cols = ("url", "warc_ts", "html", "text", "lang")
-    for pdf in batches:
-        if len(pdf) == 0:
-            continue
-        rows: dict[str, list] = {k: [] for k in cols}
-        for content in pdf["content"].tolist():
-            # one corrupt archive (truncated gzip member, mangled headers)
-            # must not kill the task — skip the file, keep the fleet moving
-            try:
-                pages = parse_warc_pages(bytes(content))
-            except Exception:  # noqa: BLE001 - malformed crawl shard
-                continue
-            for page in pages:
-                for k in cols:
-                    rows[k].append(page[k])
-        if rows["url"]:  # an all-empty frame defaults to uncastable dtypes
-            yield pd.DataFrame(rows, columns=cols)
+def _warc_pages(content) -> list[tuple]:
+    """PAGES_SCHEMA rows of one archive.  A corrupt archive (truncated
+    gzip member, mangled headers) yields none: skip the file, keep the
+    task and the fleet moving."""
+    try:
+        pages = parse_warc_pages(bytes(content))
+    except Exception:  # noqa: BLE001 - malformed crawl shard
+        return []
+    return [tuple(p[k] for k in PAGES_SCHEMA.fieldNames()) for p in pages]
 
 
 def read_warcs(spark: SparkSession, path_glob: str) -> DataFrame:
@@ -239,7 +231,8 @@ def read_warcs(spark: SparkSession, path_glob: str) -> DataFrame:
     writer) composes unchanged."""
     files = (spark.read.format("binaryFile").load(path_glob)
              .select("content"))
-    return files.mapInPandas(_warc_kernel, PAGES_SCHEMA)
+    return files.mapInPandas(
+        row_kernel(PAGES_SCHEMA, _warc_pages, ("content",)), PAGES_SCHEMA)
 
 
 # --- split ingest for oversized archives --------------------------------
@@ -893,29 +886,24 @@ def _wet_schema():
     return WET_SCHEMA
 
 
+def _wet_pages(content) -> list[tuple]:
+    """(url, warc_ts, text) rows of one WET file; a malformed shard
+    yields none."""
+    try:
+        pages = parse_wet_pages(bytes(content))
+    except Exception:  # noqa: BLE001 - malformed shard
+        return []
+    return [(p["url"], p["warc_ts"], p["text"]) for p in pages]
+
+
 def read_wets(spark: SparkSession, path_glob: str) -> DataFrame:
     """(url, warc_ts, text) rows from a directory/glob of .warc.wet /
     .warc.wet.gz files — one task per file, same sharding unit as
     read_warcs."""
-
-    def kernel(batches: Iterable[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = ("url", "warc_ts", "text")
-        for pdf in batches:
-            rows: dict[str, list] = {k: [] for k in cols}
-            for content in pdf["content"].tolist():
-                try:
-                    pages = parse_wet_pages(bytes(content))
-                except Exception:  # noqa: BLE001 - malformed shard
-                    continue
-                for p in pages:
-                    for k in cols:
-                        rows[k].append(p[k])
-            if rows["url"]:
-                yield pd.DataFrame(rows, columns=cols)
-
     files = (spark.read.format("binaryFile").load(path_glob)
              .select("content"))
-    return files.mapInPandas(kernel, _wet_schema())
+    return files.mapInPandas(
+        row_kernel(_wet_schema(), _wet_pages, ("content",)), _wet_schema())
 
 
 def _clean_stale_shards(out_dir: str) -> None:

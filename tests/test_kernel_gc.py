@@ -1,5 +1,6 @@
 """The extract kernel against process_document, and the cyclic-GC pause
-the page kernels run under (kernel.gc_paused; no Spark needed)."""
+every kernel on the row-kernel loop runs under (batches.gc_paused; no
+Spark needed)."""
 
 import contextlib
 import gc
@@ -9,6 +10,7 @@ import pytest
 
 from fortissimo_spark.kernel import make_extract_kernel, process_document
 from fortissimo_spark.schema import EXTRACT_SCHEMA
+from tests.kernel_fixtures import batch, folded_kernels
 
 FIELDS = [f.name for f in EXTRACT_SCHEMA.fields
           if f.name not in ("url", "warc_ts", "lang")]
@@ -93,6 +95,24 @@ def test_extract_kernel_batch_is_acyclic():
     with _gc(False):
         out = list(kernel(iter([batch])))
         assert len(out) == 1 and len(out[0]) == len(ADVERSARIAL)
+        del out
+        assert gc.collect() == 0
+
+
+FOLDED = folded_kernels()
+
+
+@pytest.mark.parametrize("name", sorted(FOLDED))
+def test_folded_kernel_batch_is_acyclic(name):
+    # media, PDF, WARC/WET and page-generation rows, over payloads that
+    # decode, degrade and fail, leave nothing for the paused collector
+    k = FOLDED[name]
+    inputs = batch(k, k.fixtures)
+    list(k.fn(iter([inputs])))  # first use: lazy imports and caches
+    gc.collect()
+    with _gc(False):
+        out = list(k.fn(iter([inputs])))
+        assert len(out) == 1
         del out
         assert gc.collect() == 0
 

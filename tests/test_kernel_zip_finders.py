@@ -1,7 +1,7 @@
-"""The page-kernel loop drops every zip finder from
+"""The row-kernel loop drops every zip finder from
 ``sys.path_importer_cache`` when a task's batches run out, so PySpark's
 per-task ``importlib.invalidate_caches()`` re-reads no archive (see the
-kernel module docstring), and imports from those archives still work."""
+batches module docstring), and imports from those archives still work."""
 
 import json
 import os
@@ -14,6 +14,7 @@ import pandas as pd
 import pytest
 
 from fortissimo_spark.kernel import make_extract_kernel
+from tests.kernel_fixtures import MEDIA, folded_kernels, run
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
@@ -61,6 +62,15 @@ def test_kernel_drops_zip_finders_when_closed_early(tmp_path):
     kernel = make_extract_kernel()(iter([_one_page(), _one_page()]))
     next(kernel)
     kernel.close()
+    assert _zip_finders() == []
+
+
+def test_folded_kernel_drops_zip_finders(tmp_path):
+    zip_path = str(tmp_path / "empty.zip")
+    zipfile.ZipFile(zip_path, "w").close()
+    sys.path_importer_cache[zip_path] = zipimport.zipimporter(zip_path)
+    (out,) = run(folded_kernels()["media_metadata"], MEDIA)
+    assert len(out) == len(MEDIA)
     assert _zip_finders() == []
 
 

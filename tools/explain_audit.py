@@ -45,7 +45,7 @@ def main():
     p = plan_of(ext)
     sections.append(("extraction (dedup=window default + kernel + agg)", p, [
         ("single source execution (one pages kernel)",
-         p.count("_pages_kernel") == 1),
+         p.count("_doc_pages") == 1),
         ("exactly one dedup-key exchange (the window's)",
          p.count("hashpartitioning(_dk") == 1),
         ("no full-universe BroadcastExchange", "BroadcastExchange" not in p),
@@ -60,7 +60,7 @@ def main():
         .agg(F.count("*"))
     p = plan_of(ext_c)
     sections.append(("extraction (canonical-url dedup)", p, [
-        ("single source execution", p.count("_pages_kernel") == 1),
+        ("single source execution", p.count("_doc_pages") == 1),
         ("single dedup-key exchange", p.count("hashpartitioning(_dk") == 1),
         ("no BroadcastExchange", "BroadcastExchange" not in p),
     ]))
@@ -424,7 +424,7 @@ def main():
     sections.append(("dedup_canonical (one-pass kernel + window)", p, [
         ("one analysis parse beyond the page builder",
          len(re.findall(r"\(\d+\) MapInPandas", p)) == 2
-         and p.count("_pages_kernel") == 1),
+         and p.count("_doc_pages") == 1),
         ("one shuffle beyond the builder repartition",
          len(re.findall(r"ENSURE_REQUIREMENTS", p)) == 1),
         ("window top-1 pushed down (WindowGroupLimit)",

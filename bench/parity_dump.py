@@ -20,21 +20,20 @@ all frames after the Arrow conversion, concatenated, so a zero-row frame
 is no difference.  A check prints the label of every mismatching
 snapshot.
 
-The adversarial fixtures live in ``tests/parser_fixtures.py`` (shared with
-the fast-path differential test), the kernels and their fixtures in
+The adversarial fixtures, CHARSET_PAGES and XML_FIXTURES live in
+``tests/parser_fixtures.py`` (shared with the native parse and density
+differential tests), the kernels and their fixtures in
 ``tests/kernel_fixtures.py`` (shared with the kernel tests).  The script
 imports ``fortissimo_spark`` from the checkout it sits in, so a
 parent-code reference is made by copying this file and those two into a
 parent checkout (with ``.bench_scratch`` linked in for the corpus half)
 and running dump there.
 """
-import glob
 import os
 import pickle
 import sys
 
 import pyarrow as pa
-import pyarrow.parquet as pq
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, ROOT)
@@ -45,52 +44,13 @@ from fortissimo_spark.parser import parse  # noqa: E402
 from tests.kernel_fixtures import (  # noqa: E402
     batch, folded_kernels, page_kernels, run,
 )
-from tests.parser_fixtures import FIXTURES  # noqa: E402
+from tests.parser_fixtures import (  # noqa: E402
+    CHARSET_PAGES, FIXTURES, XML_FIXTURES, corpus_pages,
+)
 
 MODE = sys.argv[1]
 PATH = sys.argv[2]
 NDOCS = int(sys.argv[3]) if len(sys.argv) > 3 else 20000
-
-# UTF-8 bytes declaring windows-1252: decode_parse re-decodes them as
-# cp1252, so every kernel on that front end sees the same (mojibake) text
-CHARSET_PAGES = [
-    "<meta charset=windows-1252><title>café</title>"
-    "<table><tr><td>naïve</td></table>",
-    "<html><head><meta charset='windows-1252'><title>Crème</title>"
-    "<meta name=robots content='noindex, nofollow'>"
-    "<meta name=description content='déjà vu'>"
-    "<link rel=canonical href='/é'>"
-    "<link rel=alternate type='application/rss+xml' href='/flüx' title='Flüx'>"
-    "<script type='application/ld+json'>{\"@type\": \"Café\", "
-    "\"name\": \"Bäckerei\"}</script></head>"
-    "<body><h1>Über</h1><p>prélude</p><h2>Zwei</h2>"
-    "<a href='/naïve' rel=nofollow>lién</a>"
-    "<div itemscope itemtype='https://schema.org/Thing'>"
-    "<span itemprop=name>Ärger</span></div>"
-    "<div vocab='https://schema.org/' typeof=Person>"
-    "<span property=name>Zoë</span></div></body></html>",
-    "<meta charset=windows-1252><rss><channel><item><title>Thé</title>"
-    "<link>http://x/é</link><pubDate>Mon, 01 Jan 2024 00:00:00 GMT</pubDate>"
-    "</item></channel></rss>",
-    "<meta charset=windows-1252><urlset><url><loc>http://x/é</loc>"
-    "<lastmod>2024-01-01</lastmod><priority>0.5</priority></url></urlset>",
-]
-
-# sitemap / feed payloads for the XML kernels
-XML_FIXTURES = [
-    "<?xml version='1.0'?><urlset><url><loc>http://a/1</loc>"
-    "<lastmod>2024-01-02</lastmod><changefreq>daily</changefreq>"
-    "<priority>0.8</priority></url><url><loc></loc></url>"
-    "<url><loc>http://a/2</loc></url></urlset>",
-    "<sm:sitemapindex><sm:sitemap><sm:loc>http://a/s1.xml</sm:loc>"
-    "</sm:sitemap></sm:sitemapindex>",
-    "<rss><channel><item><title>T</title><link>http://a/i</link>"
-    "<pubDate>Tue, 02 Jan 2024 10:00:00 GMT</pubDate></item>"
-    "<item><title>U</title><pubDate>garbage</pubDate></item></channel></rss>",
-    "<feed><entry><title>E</title><link href='http://a/e'/>"
-    "<updated>2024-01-03T00:00:00Z</updated></entry></feed>",
-    "<not-a-feed/>",
-]
 
 KERNEL_DOCS = 1000
 BATCH = 100
@@ -116,7 +76,7 @@ def kernel_inputs(n):
                    [fx.encode("utf-8") for fx in FIXTURES] + [None]),
                   ("charset", [p.encode("utf-8") for p in CHARSET_PAGES]),
                   ("xml", [p.encode("utf-8") for p in XML_FIXTURES]))]
-    docs = corpus_pages(n)
+    docs = corpus_pages(ROOT, n)
     for i in range(0, len(docs), BATCH):
         part = docs[i:i + BATCH]
         groups.append((f"corpus[{i}:{i + len(part)}]",
@@ -163,18 +123,8 @@ def pos_snapshot(text: str) -> tuple:
             tuple((nd[9], nd[10], nd[12], nd[13]) for nd in b.nodes))
 
 
-def corpus_pages(n):
-    rows = []
-    for f in sorted(glob.glob(os.path.join(
-            ROOT, ".bench_scratch/pages_sf0.1_x20/*.parquet"))):
-        rows.extend(pq.read_table(f, columns=["url", "html"]).to_pylist())
-        if len(rows) >= n:
-            break
-    return rows[:n]
-
-
 def corpus_raws(n):
-    return [d["html"] for d in corpus_pages(n)]
+    return [d["html"] for d in corpus_pages(ROOT, n)]
 
 
 def build(n):

@@ -1,12 +1,14 @@
-/* Native parse core for fortissimo_spark.parser (HTML mode, positions off).
+/* Native core for fortissimo_spark: the parse scan and density extraction.
  *
- * scan() reads the document from a token boundary, consumes every token it
- * owns and appends the same 24-slot node records to DocBuilder.nodes (and
- * the same indices to open_stack) that the Python general machine would.
- * It returns at the first token it does not own; parse() reads that one
- * token with the general machine and calls back in.  Tree repair stays in
- * Python: an end tag that is not on top of the stack goes to
- * DocBuilder.pop, and a closing table to DocBuilder._examine_table.
+ * scan() is the parse core for fortissimo_spark.parser (HTML mode,
+ * positions off).  It reads the document from a token boundary, consumes
+ * every token it owns and appends the same 24-slot node records to
+ * DocBuilder.nodes (and the same indices to open_stack) that the Python
+ * general machine would.  It returns at the first token it does not own;
+ * parse() reads that one token with the general machine and calls back
+ * in.  Tree repair stays in Python: an end tag that is not on top of the
+ * stack goes to DocBuilder.pop, and a closing table to
+ * DocBuilder._examine_table.
  *
  * Owned: text runs (the literal-'<' pairwise quirk, empty_end_tag, the
  * trailing-text EOF error), '<!--' comments (the m % 3 == 2 dash rule),
@@ -19,6 +21,10 @@
  *
  * The Python general machine is the reference; tests/test_parser_fastpaths.py
  * checks that a parse through this core equals it, field for field.
+ *
+ * density() is extract(strip="density") over the finished node records
+ * (see the section at the end).  Python's extract() loop is its reference;
+ * tests/test_extract_native.py checks the two agree, field for field.
  */
 #define PY_SSIZE_T_CLEAN
 #include <Python.h>
@@ -32,7 +38,8 @@ enum {
     N_ATTR_QUOTES, N_INNER_WS, N_BAD_TERM, N_SYNTHETIC, N_SRC_START,
     N_SRC_END, N_SLOTS
 };
-enum { ELEMENT = 0, TEXT = 1, COMMENT = 2, DECLARATION = 3, DOCTYPE_NODE = 4 };
+enum { ELEMENT = 0, TEXT = 1, COMMENT = 2, DECLARATION = 3, DOCTYPE_NODE = 4,
+       CDATA = 6 };
 enum { UNCLOSED = 0, SELF_CLOSED = 1, VOID_CLOSED = 2, EXPLICITLY_CLOSED = 3,
        IMPLICITLY_CLOSED = 4 };
 
@@ -53,6 +60,7 @@ static unsigned long long counts[ST_COUNT];
 static PyObject *OPEN_IMPLIES_CLOSE, *VOID_ELEMENTS, *RAW_TEXT_TAGS;
 static PyObject *INT[5], *INT_M1, *S_EMPTY, *S_DQ, *S_SQ, *S_EQ, *S_LT_SLASH;
 static PyObject *S_POP, *S_EXAMINE_TABLE, *S_IN_MATH_OR_SVG, *S_LOWER;
+static PyObject *S_BLOCK_SEP;
 
 typedef struct {
     PyObject *t, *nodes, *stack, *b;
@@ -952,6 +960,434 @@ static PyObject *scan(PyObject *self, PyObject *const *args, Py_ssize_t nargs)
     return Py_BuildValue("nl", i, s.errors);
 }
 
+/* --- density extraction ---------------------------------------------------
+ *
+ * density() is extract(strip="density") over DocBuilder.nodes: the same
+ * walk, blocks and scores as the Python loop in extract.py, which stays the
+ * reference (tests/test_extract_native.py compares the two field for
+ * field).  The walk is iterative over a heap stack; a text node's block is
+ * found through an array indexed by its owner.  Entity decoding calls back
+ * into chars.unescape_entities, so there is one decoder.
+ */
+
+typedef struct {
+    Py_ssize_t node, owner;  /* owner: the nearest block ancestor, -1 none */
+    int link;                /* inside an <a> */
+} Frame;
+
+typedef struct {
+    PyObject *text;          /* the decoded piece (owned) */
+    PyObject *start, *end;   /* its source span (owned); NULL without one */
+    Py_ssize_t block;
+} Piece;
+
+typedef struct {
+    PyObject *owner_tag;     /* owned */
+    Py_ssize_t link_chars, first, count;
+} Block;
+
+typedef struct {
+    Frame *stack;
+    Piece *pieces;
+    Block *blocks;
+    Py_ssize_t n_stack, cap_stack, n_pieces, cap_pieces, n_blocks, cap_blocks;
+    Py_ssize_t n_nodes;      /* len(nodes) on entry, what block_of covers */
+    Py_ssize_t *block_of;    /* owner + 1 -> open block index, -1 none */
+    Py_ssize_t *order;       /* piece indices grouped by block */
+} Density;
+
+/* room for ``need`` items of ``size`` bytes in ``*buf`` */
+static int reserve(void **buf, Py_ssize_t *cap, Py_ssize_t need, size_t size)
+{
+    if (need <= *cap)
+        return 0;
+    Py_ssize_t cap2 = *cap ? *cap : 64;
+    while (cap2 < need)
+        cap2 *= 2;
+    void *p = PyMem_Realloc(*buf, (size_t)cap2 * size);
+    if (p == NULL) {
+        PyErr_NoMemory();
+        return -1;
+    }
+    *buf = p;
+    *cap = cap2;
+    return 0;
+}
+
+/* nodes[idx], checked to be a node record */
+static PyObject *record(PyObject *nodes, Py_ssize_t idx)
+{
+    if (idx < 0 || idx >= PyList_GET_SIZE(nodes)) {
+        PyErr_Format(PyExc_IndexError, "node %zd out of range", idx);
+        return NULL;
+    }
+    PyObject *nd = PyList_GET_ITEM(nodes, idx);
+    if (!PyList_Check(nd) || PyList_GET_SIZE(nd) < N_SLOTS
+            || !PyLong_Check(PyList_GET_ITEM(nd, N_KIND))) {
+        PyErr_Format(PyExc_ValueError, "node %zd is not a node record", idx);
+        return NULL;
+    }
+    return nd;
+}
+
+static long kind_of(PyObject *nd)
+{
+    return PyLong_AsLong(PyList_GET_ITEM(nd, N_KIND));
+}
+
+/* chars.trim's whitespace: the end of the leading run and the start of the
+ * trailing run of s[from:] */
+static Py_ssize_t trim_start(PyObject *s, Py_ssize_t from)
+{
+    int kind = PyUnicode_KIND(s);
+    const void *data = PyUnicode_DATA(s);
+    Py_ssize_t n = PyUnicode_GET_LENGTH(s);
+    while (from < n && is_ws(PyUnicode_READ(kind, data, from)))
+        from++;
+    return from;
+}
+
+static Py_ssize_t trim_end(PyObject *s, Py_ssize_t from)
+{
+    int kind = PyUnicode_KIND(s);
+    const void *data = PyUnicode_DATA(s);
+    Py_ssize_t e = PyUnicode_GET_LENGTH(s);
+    while (e > from && is_ws(PyUnicode_READ(kind, data, e - 1)))
+        e--;
+    return e;
+}
+
+/* a threshold as a double: exact for any float and for ints below 2**53,
+ * and on the same side of every block's length or link share beyond */
+static int threshold(PyObject *v, double *out)
+{
+    if (PyFloat_Check(v)) {
+        *out = PyFloat_AS_DOUBLE(v);
+        return 0;
+    }
+    if (!PyLong_Check(v)) {
+        PyErr_SetString(PyExc_TypeError,
+                        "density thresholds must be int or float");
+        return -1;
+    }
+    *out = PyLong_AsDouble(v);
+    if (*out == -1.0 && PyErr_Occurred()) {
+        if (!PyErr_ExceptionMatches(PyExc_OverflowError))
+            return -1;
+        PyErr_Clear();
+        int neg = PyObject_RichCompareBool(v, INT[0], Py_LT);
+        if (neg < 0)
+            return -1;
+        *out = neg ? -Py_HUGE_VAL : Py_HUGE_VAL;
+    }
+    return 0;
+}
+
+/* the text or CDATA node ``nd``, reached as ``f``, joins its owner's open
+ * block or opens a new one */
+static int add_piece(Density *d, PyObject *nodes, PyObject *nd, long kind,
+                     Frame f, PyObject *unescape)
+{
+    PyObject *text = PyList_GET_ITEM(nd, N_CONTENT);
+    PyObject *start = PyList_GET_ITEM(nd, N_SRC_START);
+    PyObject *end = PyList_GET_ITEM(nd, N_SRC_END);
+    if (!PyUnicode_Check(text) || !PyLong_Check(start)) {
+        PyErr_Format(PyExc_TypeError, "node %zd: malformed text record",
+                     f.node);
+        return -1;
+    }
+    if (PyUnicode_READY(text) < 0)
+        return -1;
+    Py_ssize_t s0 = PyLong_AsSsize_t(start);
+    if (s0 == -1 && PyErr_Occurred())
+        return -1;
+    if (s0 >= 0) {
+        Py_INCREF(start);
+        Py_INCREF(end);
+    } else {
+        start = end = NULL;
+    }
+    Py_INCREF(text);
+    if (kind == TEXT) {
+        int poss_ent = PyObject_IsTrue(PyList_GET_ITEM(nd, N_POSS_ENT));
+        Py_ssize_t amp = poss_ent > 0 ? PyUnicode_FindChar(
+            text, '&', 0, PyUnicode_GET_LENGTH(text), 1) : -1;
+        if (poss_ent < 0 || amp == -2)
+            goto fail;
+        if (amp >= 0) {
+            /* the call may run any Python code: nd is not read past it */
+            Py_SETREF(text, PyObject_CallOneArg(unescape, text));
+            if (text == NULL || !PyUnicode_Check(text)
+                    || PyUnicode_READY(text) < 0) {
+                if (text != NULL && !PyErr_Occurred())
+                    PyErr_SetString(PyExc_TypeError,
+                                    "unescape_entities returned a non-str");
+                goto fail;
+            }
+        }
+    }
+
+    Py_ssize_t *open = &d->block_of[f.owner + 1];
+    if (*open < 0) {
+        PyObject *owner_tag = S_EMPTY;
+        if (f.owner >= 0) {
+            PyObject *owner = record(nodes, f.owner);
+            if (owner == NULL)
+                goto fail;
+            owner_tag = PyList_GET_ITEM(owner, N_TAG_LC);
+        }
+        if (reserve((void **)&d->blocks, &d->cap_blocks, d->n_blocks + 1,
+                    sizeof(Block)) < 0)
+            goto fail;
+        Block *b = &d->blocks[d->n_blocks];
+        Py_INCREF(owner_tag);
+        b->owner_tag = owner_tag;
+        b->link_chars = b->count = 0;
+        *open = d->n_blocks++;
+    }
+    if (reserve((void **)&d->pieces, &d->cap_pieces, d->n_pieces + 1,
+                sizeof(Piece)) < 0)
+        goto fail;
+    Block *b = &d->blocks[*open];
+    b->count++;
+    if (f.link) {
+        Py_ssize_t a = trim_start(text, 0);
+        b->link_chars += trim_end(text, a) - a;
+    }
+    d->pieces[d->n_pieces++] = (Piece){text, start, end, *open};
+    return 0;
+
+fail:
+    Py_XDECREF(start);
+    Py_XDECREF(end);
+    Py_XDECREF(text);
+    return -1;
+}
+
+/* walk the tree from the root, filling d's pieces and blocks */
+static int walk(Density *d, PyObject *nodes, PyObject *drop, PyObject *inl,
+                PyObject *unescape)
+{
+    if (reserve((void **)&d->stack, &d->cap_stack, 1, sizeof(Frame)) < 0)
+        return -1;
+    d->stack[d->n_stack++] = (Frame){0, -1, 0};
+    while (d->n_stack) {
+        Frame f = d->stack[--d->n_stack];
+        PyObject *nd = record(nodes, f.node);
+        if (nd == NULL)
+            return -1;
+        long kind = kind_of(nd);
+        if (kind == -1 && PyErr_Occurred())
+            return -1;
+        if (kind == TEXT || kind == CDATA) {
+            if (add_piece(d, nodes, nd, kind, f, unescape) < 0)
+                return -1;
+            continue;
+        }
+        if (kind != ELEMENT)
+            continue;
+        PyObject *tag = PyList_GET_ITEM(nd, N_TAG_LC);
+        PyObject *children = PyList_GET_ITEM(nd, N_CHILDREN);
+        if (!PyUnicode_Check(tag)
+                || (children != Py_None && !PyList_Check(children))) {
+            PyErr_Format(PyExc_TypeError, "node %zd: malformed element record",
+                         f.node);
+            return -1;
+        }
+        Frame child = {0, f.node, f.link};
+        if (f.node != 0) {
+            int dropped = PySet_Contains(drop, tag);
+            int inline_ = dropped ? 0 : PySet_Contains(inl, tag);
+            if (dropped < 0 || inline_ < 0)
+                return -1;
+            if (dropped)
+                continue;
+            if (inline_) {
+                child.owner = f.owner;
+                child.link = f.link || (PyUnicode_GET_LENGTH(tag) == 1
+                                        && PyUnicode_READ_CHAR(tag, 0) == 'a');
+            }
+        }
+        /* a block element ends the enclosing block's open text run */
+        if (child.owner == f.node)
+            d->block_of[f.owner + 1] = -1;
+        if (children == Py_None)
+            continue;
+        Py_ssize_t m = PyList_GET_SIZE(children);
+        if (reserve((void **)&d->stack, &d->cap_stack, d->n_stack + m,
+                    sizeof(Frame)) < 0)
+            return -1;
+        for (Py_ssize_t j = m - 1; j >= 0; j--) {
+            PyObject *c = PyList_GET_ITEM(children, j);
+            child.node = PyLong_Check(c) ? PyLong_AsSsize_t(c) : -1;
+            if (child.node < 0 || child.node >= d->n_nodes) {
+                if (!PyErr_Occurred())
+                    PyErr_Format(PyExc_IndexError,
+                                 "node %zd: child %zd is not a node", f.node,
+                                 j);
+                return -1;
+            }
+            d->stack[d->n_stack++] = child;
+        }
+    }
+    return 0;
+}
+
+/* score each block in creation order; append the kept blocks' trimmed text
+ * (separators included) to ``parts`` and their spans to ``spans`` */
+static int score(Density *d, PyObject *boost, double min_chars,
+                 double max_link, PyObject *parts, PyObject *spans,
+                 long *kept, long *total)
+{
+    Py_ssize_t first = 0;
+    for (Py_ssize_t k = 0; k < d->n_blocks; k++) {
+        d->blocks[k].first = first;
+        first += d->blocks[k].count;
+        d->blocks[k].count = 0;
+    }
+    d->order = PyMem_New(Py_ssize_t, d->n_pieces ? d->n_pieces : 1);
+    if (d->order == NULL) {
+        PyErr_NoMemory();
+        return -1;
+    }
+    for (Py_ssize_t p = 0; p < d->n_pieces; p++) {
+        Block *b = &d->blocks[d->pieces[p].block];
+        d->order[b->first + b->count++] = p;
+    }
+
+    for (Py_ssize_t k = 0; k < d->n_blocks; k++) {
+        Block *b = &d->blocks[k];
+        const Py_ssize_t *idx = d->order + b->first;
+        /* the trimmed block runs from piece lp at lo to piece tp at to */
+        Py_ssize_t lp = -1, lo = 0, tp = 0, to = 0;
+        for (Py_ssize_t j = 0; j < b->count; j++) {
+            PyObject *t = d->pieces[idx[j]].text;
+            lo = trim_start(t, 0);
+            if (lo < PyUnicode_GET_LENGTH(t)) {
+                lp = j;
+                break;
+            }
+        }
+        if (lp < 0)
+            continue;
+        for (tp = b->count - 1; tp >= lp; tp--) {
+            Py_ssize_t from = tp == lp ? lo : 0;
+            to = trim_end(d->pieces[idx[tp]].text, from);
+            if (to > from)
+                break;
+        }
+        Py_ssize_t chars = to - lo;
+        for (Py_ssize_t j = lp; j < tp; j++)
+            chars += PyUnicode_GET_LENGTH(d->pieces[idx[j]].text);
+        ++*total;
+        if ((double)b->link_chars / (double)chars > max_link)
+            continue;
+        if (!((double)chars >= min_chars)) {
+            int boosted = PySet_Contains(boost, b->owner_tag);
+            if (boosted < 0)
+                return -1;
+            if (!boosted)
+                continue;
+        }
+        if (++*kept > 1 && PyList_Append(parts, S_BLOCK_SEP) < 0)
+            return -1;
+        for (Py_ssize_t j = lp; j <= tp; j++) {
+            PyObject *t = d->pieces[idx[j]].text;
+            PyObject *piece = PyUnicode_Substring(
+                t, j == lp ? lo : 0, j == tp ? to : PyUnicode_GET_LENGTH(t));
+            if (piece == NULL || PyList_Append(parts, piece) < 0) {
+                Py_XDECREF(piece);
+                return -1;
+            }
+            Py_DECREF(piece);
+        }
+        for (Py_ssize_t j = 0; j < b->count; j++) {
+            Piece *p = &d->pieces[idx[j]];
+            if (p->start == NULL)
+                continue;
+            PyObject *sp = PyTuple_Pack(2, p->start, p->end);
+            if (sp == NULL || PyList_Append(spans, sp) < 0) {
+                Py_XDECREF(sp);
+                return -1;
+            }
+            Py_DECREF(sp);
+        }
+    }
+    return 0;
+}
+
+static PyObject *density(PyObject *self, PyObject *const *args,
+                         Py_ssize_t nargs)
+{
+    if (nargs != 7) {
+        PyErr_SetString(PyExc_TypeError, "density() takes 7 arguments");
+        return NULL;
+    }
+    PyObject *nodes = args[0], *unescape = args[6];
+    double min_chars, max_link;
+    if (!PyList_Check(nodes) || !PyAnySet_Check(args[1])
+            || !PyAnySet_Check(args[2]) || !PyAnySet_Check(args[3])) {
+        PyErr_SetString(PyExc_TypeError,
+                        "density(list, set, set, set, min_block_chars, "
+                        "max_link_density, unescape)");
+        return NULL;
+    }
+    if (threshold(args[4], &min_chars) < 0
+            || threshold(args[5], &max_link) < 0)
+        return NULL;
+
+    Py_ssize_t n = PyList_GET_SIZE(nodes);
+    long text_nodes = 0;
+    for (Py_ssize_t i = 0; i < n; i++) {
+        PyObject *nd = record(nodes, i);
+        long kind = nd == NULL ? -1 : kind_of(nd);
+        if (kind == -1 && PyErr_Occurred())
+            return NULL;
+        text_nodes += kind == TEXT || kind == CDATA;
+    }
+
+    Density d = {0};
+    PyObject *parts = NULL, *spans = NULL, *result = NULL;
+    long kept = 0, total = 0;
+    d.n_nodes = n;
+    d.block_of = PyMem_New(Py_ssize_t, n + 1);
+    if (d.block_of == NULL) {
+        PyErr_NoMemory();
+        goto done;
+    }
+    for (Py_ssize_t i = 0; i <= n; i++)
+        d.block_of[i] = -1;
+    if (walk(&d, nodes, args[1], args[2], unescape) < 0)
+        goto done;
+    parts = PyList_New(0);
+    spans = PyList_New(0);
+    if (parts == NULL || spans == NULL
+            || score(&d, args[3], min_chars, max_link, parts, spans, &kept,
+                     &total) < 0)
+        goto done;
+    PyObject *text = PyUnicode_Join(S_EMPTY, parts);
+    if (text != NULL)
+        result = Py_BuildValue("(NOllnl)", text, spans, kept, total, n - 1,
+                               text_nodes);
+
+done:
+    for (Py_ssize_t p = 0; p < d.n_pieces; p++) {
+        Py_DECREF(d.pieces[p].text);
+        Py_XDECREF(d.pieces[p].start);
+        Py_XDECREF(d.pieces[p].end);
+    }
+    for (Py_ssize_t k = 0; k < d.n_blocks; k++)
+        Py_DECREF(d.blocks[k].owner_tag);
+    PyMem_Free(d.stack);
+    PyMem_Free(d.pieces);
+    PyMem_Free(d.blocks);
+    PyMem_Free(d.block_of);
+    PyMem_Free(d.order);
+    Py_XDECREF(parts);
+    Py_XDECREF(spans);
+    return result;
+}
+
 static PyObject *setup(PyObject *self, PyObject *args)
 {
     PyObject *oic, *voids, *raw;
@@ -994,6 +1430,10 @@ static PyMethodDef methods[] = {
     {"scan", (PyCFunction)(void (*)(void))scan, METH_FASTCALL,
      "scan(t, i, nodes, open_stack, builder, empty_end_tag, sniff)"
      " -> (offset of the first token not owned, errors counted)"},
+    {"density", (PyCFunction)(void (*)(void))density, METH_FASTCALL,
+     "density(nodes, DROP_TAGS, INLINE_TAGS, BOOST_TAGS, min_block_chars,"
+     " max_link_density, unescape_entities) -> (text, spans, kept_blocks,"
+     " total_blocks, node_count, text_node_count)"},
     {"setup", setup, METH_VARARGS,
      "setup(OPEN_IMPLIES_CLOSE, VOID_ELEMENTS, RAW_TEXT_TAGS)"},
     {"stats", stats, METH_NOARGS, "per-branch token counts since reset"},
@@ -1002,7 +1442,8 @@ static PyMethodDef methods[] = {
 };
 
 static struct PyModuleDef module = {
-    PyModuleDef_HEAD_INIT, "_native", "Native parse core.", -1, methods
+    PyModuleDef_HEAD_INIT, "_native",
+    "Native parse core and density extraction.", -1, methods
 };
 
 static PyObject *intern(const char *s)
@@ -1024,6 +1465,7 @@ PyMODINIT_FUNC PyInit__native(void)
     S_EXAMINE_TABLE = intern("_examine_table");
     S_IN_MATH_OR_SVG = intern("in_math_or_svg");
     S_LOWER = intern("lower");
+    S_BLOCK_SEP = intern("\n\n");
     if (PyErr_Occurred())
         return NULL;
     return PyModule_Create(&module);

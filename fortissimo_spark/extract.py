@@ -16,12 +16,22 @@ boilerplate-strip heuristics"):
 Every mode also returns source spans: (start, end) char offsets into the
 parsed text for each emitted text/CDATA node, so downstream consumers can
 trace extracted content back into the raw page bytes.
+
+``density`` runs in the native core (``density()`` in ``_native.c``) when
+it built: the same walk, blocks and scores over the same node records,
+with entity decoding called back into ``chars.unescape_entities``.  The
+Python loop below is the reference and the path on hosts without a
+compiler; ``extract()`` reads ``_NATIVE_DENSITY`` from the module globals
+on every call, so ``tests/test_extract_native.py`` sets it to None and
+checks that every ``ExtractResult`` field stays the same.  ``none`` and
+``basic`` are Python only.
 """
 
 from __future__ import annotations
 
 from .chars import trim, unescape_entities
 from .dom import CDATA, ELEMENT, TEXT, DocBuilder
+from .parser import _native
 
 __all__ = ["DROP_TAGS", "INLINE_TAGS", "BOOST_TAGS", "ExtractResult",
            "extract", "validate_spans"]
@@ -51,6 +61,9 @@ BOOST_TAGS = frozenset([
 
 _MIN_BLOCK_CHARS = 25
 _MAX_LINK_DENSITY = 1.0 / 3.0
+
+# the native density walker (None: the Python loop below extracts)
+_NATIVE_DENSITY = _native.density if _native is not None else None
 
 
 class ExtractResult:
@@ -134,6 +147,11 @@ def _text_content_skipping(b: DocBuilder, node: int, out: list, spans: list,
 def extract(b: DocBuilder, strip: str = "density",
             min_block_chars: int = _MIN_BLOCK_CHARS,
             max_link_density: float = _MAX_LINK_DENSITY) -> ExtractResult:
+    native = _NATIVE_DENSITY
+    if strip == "density" and native is not None:
+        return ExtractResult(*native(
+            b.nodes, DROP_TAGS, INLINE_TAGS, BOOST_TAGS, min_block_chars,
+            max_link_density, unescape_entities))
     node_count = len(b.nodes) - 1
     # C-level count: one list comp + two list.count passes beats a Python
     # genexpr over the node lists (N_KIND == 0)

@@ -1,4 +1,8 @@
-"""Build and load the native parse core (``_native.c``) on first import.
+"""Build and load the native core (``_native.c``) on first import.
+
+The core holds two entry points: ``scan``, the parse core behind
+``parser.parse``, and ``density``, the walk behind
+``extract(strip="density")``.  Python keeps the reference for both.
 
 The C source ships inside the package, so a ``--py-files`` zip carries it
 too: it is read through ``importlib.resources`` and compiled with the
@@ -8,8 +12,8 @@ it once: the build runs under a file lock and lands by atomic rename, so
 concurrent workers wait for it instead of compiling again.
 
 Without a working compiler (or Python headers) or a writable home
-directory ``load()`` returns None and the parser keeps to its Python
-general machine.
+directory ``load()`` returns None: the parser keeps to its Python general
+machine and ``extract()`` to its Python density loop.
 """
 
 from __future__ import annotations
@@ -75,6 +79,7 @@ def load():
         return module
     except (OSError, ImportError, subprocess.CalledProcessError) as e:
         detail = getattr(e, "stderr", b"") or b""
-        warnings.warn(f"native parse core unavailable, using the Python "
-                      f"parser: {e} {detail.decode(errors='replace')[-500:]}")
+        warnings.warn(f"native core unavailable, using the Python parser "
+                      f"and extract loop: {e} "
+                      f"{detail.decode(errors='replace')[-500:]}")
         return None

@@ -36,8 +36,17 @@ __all__ = ["read_pages_stream", "streaming_extract", "start_streaming_job",
 def read_pages_stream(spark: SparkSession, input_path: str,
                       max_files_per_trigger: int = 8) -> DataFrame:
     """File-source stream over a directory of pages parquet drops."""
+    return _parquet_stream(spark, PAGES_SCHEMA, input_path,
+                           max_files_per_trigger)
+
+
+def _parquet_stream(spark: SparkSession, schema, input_path: str,
+                    max_files_per_trigger: int) -> DataFrame:
+    """File-source stream of ``schema`` rows over a directory of parquet
+    drops: pages for :func:`read_pages_stream`, ``DOCS_STREAM_SCHEMA``
+    documents for the curation and index jobs."""
     return (spark.readStream
-            .schema(PAGES_SCHEMA)
+            .schema(schema)
             .option("maxFilesPerTrigger", max_files_per_trigger)
             .parquet(input_path))
 
@@ -248,9 +257,8 @@ def streaming_curate(spark: SparkSession, input_path: str, output_path: str,
     Returns the StreamingQuery handle."""
     from .lm import with_perplexity_ngram
 
-    stream = (spark.readStream.schema(DOCS_STREAM_SCHEMA)
-              .option("maxFilesPerTrigger", max_files_per_trigger)
-              .parquet(input_path))
+    stream = _parquet_stream(spark, DOCS_STREAM_SCHEMA, input_path,
+                             max_files_per_trigger)
     deduped = (stream
                .withColumn("_th", F.sha2(F.col("text"), 256))
                .withWatermark("crawl_ts", watermark)
@@ -326,9 +334,8 @@ def streaming_index(spark: SparkSession, input_path: str,
     Returns the StreamingQuery handle."""
     from .textstats import index_segment
 
-    stream = (spark.readStream.schema(DOCS_STREAM_SCHEMA)
-              .option("maxFilesPerTrigger", max_files_per_trigger)
-              .parquet(input_path))
+    stream = _parquet_stream(spark, DOCS_STREAM_SCHEMA, input_path,
+                             max_files_per_trigger)
 
     def write_batch(batch_df: DataFrame, batch_id: int) -> None:
         (index_segment(batch_df, ngram=ngram)

@@ -28,6 +28,9 @@ from typing import Iterable, Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import (
+    StringType, StructField, StructType, TimestampType,
+)
 
 from .batches import row_kernel
 from .schema import PAGES_SCHEMA
@@ -870,20 +873,11 @@ def parse_wet_pages(payload: bytes) -> list[dict]:
     return out
 
 
-WET_SCHEMA = None  # built lazily to keep pyspark types out of import time
-
-
-def _wet_schema():
-    global WET_SCHEMA
-    if WET_SCHEMA is None:
-        from pyspark.sql.types import (StringType, StructField, StructType,
-                                       TimestampType)
-        WET_SCHEMA = StructType([
-            StructField("url", StringType()),
-            StructField("warc_ts", TimestampType()),
-            StructField("text", StringType()),
-        ])
-    return WET_SCHEMA
+WET_SCHEMA = StructType([
+    StructField("url", StringType()),
+    StructField("warc_ts", TimestampType()),
+    StructField("text", StringType()),
+])
 
 
 def _wet_pages(content) -> list[tuple]:
@@ -903,7 +897,7 @@ def read_wets(spark: SparkSession, path_glob: str) -> DataFrame:
     files = (spark.read.format("binaryFile").load(path_glob)
              .select("content"))
     return files.mapInPandas(
-        row_kernel(_wet_schema(), _wet_pages, ("content",)), _wet_schema())
+        row_kernel(WET_SCHEMA, _wet_pages, ("content",)), WET_SCHEMA)
 
 
 def _clean_stale_shards(out_dir: str) -> None:

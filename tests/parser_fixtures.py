@@ -2,11 +2,17 @@
 native core of ``fortissimo_spark.parser`` touches or hands off.
 
 Shared by ``bench/parity_dump.py`` (byte-level snapshots against a parent
-checkout) and ``tests/test_parser_fastpaths.py`` (the native core against
-the general state machine).  Add a fixture here before adding a new
-tokenizer shape.
+checkout), ``tests/test_parser_fastpaths.py`` (the native core against
+the general state machine) and ``tests/test_extract_native.py`` (native
+density extraction against the Python loop), with the pages the kernel
+snapshots use and the reader of the parity corpus.  Add a fixture here
+before adding a new tokenizer shape.
 """
+import glob
+import os
 import random
+
+import pyarrow.parquet as pq
 
 FIXTURES = [
     "<div>", "<div >", "<div/>", "<div />", "<br>", "<input disabled>",
@@ -60,6 +66,48 @@ FIXTURES = [
 ]
 
 
+# UTF-8 bytes declaring windows-1252: decode_parse re-decodes them as
+# cp1252, so every kernel on that front end sees the same (mojibake) text
+CHARSET_PAGES = [
+    "<meta charset=windows-1252><title>café</title>"
+    "<table><tr><td>naïve</td></table>",
+    "<html><head><meta charset='windows-1252'><title>Crème</title>"
+    "<meta name=robots content='noindex, nofollow'>"
+    "<meta name=description content='déjà vu'>"
+    "<link rel=canonical href='/é'>"
+    "<link rel=alternate type='application/rss+xml' href='/flüx' title='Flüx'>"
+    "<script type='application/ld+json'>{\"@type\": \"Café\", "
+    "\"name\": \"Bäckerei\"}</script></head>"
+    "<body><h1>Über</h1><p>prélude</p><h2>Zwei</h2>"
+    "<a href='/naïve' rel=nofollow>lién</a>"
+    "<div itemscope itemtype='https://schema.org/Thing'>"
+    "<span itemprop=name>Ärger</span></div>"
+    "<div vocab='https://schema.org/' typeof=Person>"
+    "<span property=name>Zoë</span></div></body></html>",
+    "<meta charset=windows-1252><rss><channel><item><title>Thé</title>"
+    "<link>http://x/é</link><pubDate>Mon, 01 Jan 2024 00:00:00 GMT</pubDate>"
+    "</item></channel></rss>",
+    "<meta charset=windows-1252><urlset><url><loc>http://x/é</loc>"
+    "<lastmod>2024-01-01</lastmod><priority>0.5</priority></url></urlset>",
+]
+
+# sitemap / feed payloads for the XML kernels
+XML_FIXTURES = [
+    "<?xml version='1.0'?><urlset><url><loc>http://a/1</loc>"
+    "<lastmod>2024-01-02</lastmod><changefreq>daily</changefreq>"
+    "<priority>0.8</priority></url><url><loc></loc></url>"
+    "<url><loc>http://a/2</loc></url></urlset>",
+    "<sm:sitemapindex><sm:sitemap><sm:loc>http://a/s1.xml</sm:loc>"
+    "</sm:sitemap></sm:sitemapindex>",
+    "<rss><channel><item><title>T</title><link>http://a/i</link>"
+    "<pubDate>Tue, 02 Jan 2024 10:00:00 GMT</pubDate></item>"
+    "<item><title>U</title><pubDate>garbage</pubDate></item></channel></rss>",
+    "<feed><entry><title>E</title><link href='http://a/e'/>"
+    "<updated>2024-01-03T00:00:00Z</updated></entry></feed>",
+    "<not-a-feed/>",
+]
+
+
 def table_soups(n: int, seed: int = 5):
     """``n`` seeded tables of bare, nested and closed cells, rows and
     sections (the shapes table repair rewrites)."""
@@ -71,3 +119,16 @@ def table_soups(n: int, seed: int = 5):
         yield ("<table>" + "".join(rng.choice(parts)
                                    for _ in range(rng.randint(1, 10)))
                + "</table>")
+
+
+def corpus_pages(root: str, n: int) -> list:
+    """The first ``n`` ``{url, html}`` rows of the parity corpus under the
+    checkout ``root`` (built by ``bench.ensure_corpus``); none when it was
+    not built."""
+    rows = []
+    for f in sorted(glob.glob(os.path.join(
+            root, ".bench_scratch/pages_sf0.1_x20/*.parquet"))):
+        rows.extend(pq.read_table(f, columns=["url", "html"]).to_pylist())
+        if len(rows) >= n:
+            break
+    return rows[:n]

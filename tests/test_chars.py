@@ -1,5 +1,7 @@
 """Entity codec + char class parity vectors (reference: src/characters.spec.ts)."""
 
+import random
+
 from fortissimo_spark import chars as C
 from fortissimo_spark.chars import (
     EntityStyle as ES, EscapeOptions, ReencodeOptions as RO, TargetEncoding as TE,
@@ -164,3 +166,32 @@ def test_resolve_entity():
     assert resolve_entity("&zzqx;") == "�"
     assert resolve_entity("&#x110000;") == "�"
     assert resolve_entity("&#x10FFFF;") == "\U0010ffff"
+
+
+def _unescape_by_parts(s, for_attribute_value=False):
+    # the split-and-join formulation: resolve every odd part of
+    # separate_entities, leaving an attribute value's unterminated ones
+    if not s or "&" not in s:
+        return s
+    out = []
+    for index, value in enumerate(separate_entities(s)):
+        if index % 2 == 0 or (for_attribute_value
+                              and not value.endswith(";")):
+            out.append(value)
+        else:
+            out.append(resolve_entity(value))
+    return "".join(out)
+
+
+def test_unescape_entities_fuzz():
+    rng = random.Random(20_261_019)
+    pieces = ["&", "&amp", "&amp;", "&AMP;", "&lt", "&#", "&#x", "&#X",
+              "&#32;", "&#x20", "&#xd800;", "&#1114112;", "&#0;", "&nbsp",
+              "&eacute;", "&zzqx", "&zzqx;", "&0", ";", "#", "x", "41",
+              "fg", " ", "\n", "a", "\xe9", "\U0001f600", "&\U0001f600",
+              "&notin;", "&notit;", "&copy", "&#128512;"]
+    for _ in range(20_000):
+        s = "".join(rng.choice(pieces) for _ in range(rng.randint(0, 8)))
+        for attr in (False, True):
+            assert unescape_entities(s, attr) == _unescape_by_parts(s, attr), \
+                (s, attr)

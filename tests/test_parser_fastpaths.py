@@ -9,7 +9,7 @@ element counts.  Inputs: every parity fixture, every prefix of a few of
 them (EOF at every offset), 10^5 seeded generated tag soups and 2*10^4
 table soups.  Then the build: the core must load wherever a compiler and
 the Python headers exist, ship in the ``--py-files`` zip, and its absence
-must leave ``parse()`` working.
+must leave ``parse()`` and density ``extract()`` working.
 """
 import json
 import os
@@ -26,6 +26,7 @@ import fortissimo_spark.parser as P
 from fortissimo_spark.dom import (
     EXPLICITLY_CLOSED, SELF_CLOSED, UNCLOSED, VOID_CLOSED,
 )
+from fortissimo_spark.extract import extract
 from fortissimo_spark.kernel import process_document
 from fortissimo_spark.parser import parse
 from tests.parser_fixtures import FIXTURES, table_soups
@@ -344,16 +345,36 @@ def _probe(doc, cwd, env, path=(), tail=""):
     return json.loads(out.stdout.splitlines()[-1])
 
 
+# density extraction without the core: the Python loop's ExtractResult
+_EXTRACT_PROBE = """
+import fortissimo_spark.extract as E
+ext = E.extract(r.dom, "density")
+res += [E._NATIVE_DENSITY is None,
+        [ext.text, ext.spans, ext.kept_blocks, ext.total_blocks,
+         ext.node_count, ext.text_node_count]]
+"""
+
+
 def test_no_compiler_falls_back_to_the_general_machine(tmp_path,
                                                        monkeypatch):
     # an empty cache and no compiler on PATH: the build fails at import
-    doc = _PROBE_DOC
+    doc = (_PROBE_DOC + "<p>caf&eacute; &#32;&#x1F600; <a href=x>a link</a>"
+           " and enough words to keep</p>")
     env = dict(os.environ, HOME=str(tmp_path), PATH=str(tmp_path))
-    _, native, errors, n_nodes, text = _probe(doc, ROOT, env)
+    (_, native, errors, n_nodes, text, no_native_density,
+     ext) = _probe(doc, ROOT, env, tail=_EXTRACT_PROBE)
     monkeypatch.setattr(P, "_NATIVE_SCAN", None)
     r = parse(doc, positions=False)
     assert native is False
     assert (errors, n_nodes, text) == (r.errors, len(r.dom.nodes), doc)
+    # extract(strip="density") runs the Python loop and gives the same
+    # result as the core in this process
+    want = extract(r.dom, "density")
+    assert no_native_density is True
+    assert ext == [want.text, [list(s) for s in want.spans],
+                   want.kept_blocks, want.total_blocks, want.node_count,
+                   want.text_node_count]
+    assert want.kept_blocks >= 2
 
 
 def test_unwritable_home_builds_nowhere_else(tmp_path):

@@ -7,9 +7,10 @@ entry below it and ``in_math_or_svg`` equals the number of math/svg
 entries on the stack; the first test checks both after every ``pop`` call,
 through the native core and through the general machine.  The second pins
 the two page shapes that took quadratic time while the parser still made
-that pass and the never-true ``<?xml`` check, and two long lines parsed
-with positions, whose line/col lookup rescanned the line from its start on
-every call: 4x the input must cost at most 6x the time.
+that pass and the never-true ``<?xml`` check, the nested-list and
+implied-``</p>`` shapes, and two long lines parsed with positions, whose
+line/col lookup rescanned the line from its start on every call: 4x the
+input must cost at most 6x the time.
 """
 import gc
 import math
@@ -70,6 +71,11 @@ _SHAPES = {
     "unwind": (lambda n: "<div>" * n + "<b>x</div>" * n, 6_000, False),
     # <?xml PIs inside an element
     "xml_pi": (lambda n: "<html>" + "<?xml x>" * n, 16_000, False),
+    # an <li> implies no close under an open <div>, so the items nest
+    # (ROADMAP §2)
+    "li_div": (lambda n: "<ul>" + "<li><div>x" * n, 4_000, False),
+    # every <div> implicitly closes the open <p> (ROADMAP §2)
+    "div_p": (lambda n: "<div><p>x" * n, 6_000, False),
     # one line of elements, line/col computed for every node
     "line_positions": (lambda n: "<p>x</p>" * n, 20_000, True),
     # the same with tabs, whose column depends on everything before them

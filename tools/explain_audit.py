@@ -1,7 +1,8 @@
 #!/usr/bin/env python3
 """Physical-plan audit: verify predicate pushdown, column pruning, broadcast
 joins, and shuffle placement on the engine's key plans. Writes
-bench/explain_audit.txt. Run: python tools/explain_audit.py [sf_dir]"""
+bench/explain_audit.txt, the same file on every run of the same code (see
+``stable``). Run: python tools/explain_audit.py [sf_dir]"""
 
 import contextlib
 import io
@@ -26,6 +27,24 @@ def plan_of(df) -> str:
     with contextlib.redirect_stdout(buf):
         df.explain("formatted")
     return buf.getvalue()
+
+
+# run-to-run counters in plan text: expression ids, exchange plan ids and
+# lambda variable suffixes
+_COUNTERS = (r"(#)(\d+)", r"(plan_id=)(\d+)", r"(lambda [a-z]+_)(\d+)")
+
+
+def stable(plan: str) -> str:
+    """``plan`` as the record keeps it: each run-to-run counter renumbered
+    from 1 in order of first use, the IVF temp directory as <ivf_cells>.
+    Two runs then write the same file, and a plan change shows up as a
+    diff of the lines it changed."""
+    plan = re.sub(r"file:\S*?ivf_cells_\w+", "file:<ivf_cells>", plan)
+    for pattern in _COUNTERS:
+        seen = {}
+        plan = re.sub(pattern, lambda m: m[1] + str(
+            seen.setdefault(m[2], len(seen) + 1)), plan)
+    return plan
 
 
 def main():
@@ -143,10 +162,10 @@ def main():
             return walk(df._jdf.queryExecution().executedPlan())
 
         n_parts = _scan_metric(pruned_q, "numPartitions")
+        print(f"IVF probed scan {t_pruned:.3f}s vs full-corpus "
+              f"assign+scan {t_full:.3f}s")
         sections.append((
-            "IVF ANN over cell-partitioned layout "
-            f"(probed scan {t_pruned:.3f}s vs full-corpus assign+scan {t_full:.3f}s)",
-            p, [
+            "IVF ANN over cell-partitioned layout", p, [
                 ("probe predicate is a PartitionFilter (pruned at scan)",
                  "PartitionFilters" in p and "cell" in p.split("PartitionFilters", 1)[1][:200]),
                 ("scan read n_probe=2 of 8 cell partitions (scan metric)",
@@ -616,7 +635,7 @@ def main():
     checks_failed = 0
     with open(OUT, "w") as f:
         for title, plan, checks in sections:
-            f.write(f"==== {title} ====\n{plan}\n")
+            f.write(f"==== {title} ====\n{stable(plan)}\n")
             for desc, ok in checks:
                 line = f"[{'PASS' if ok else 'FAIL'}] {desc}"
                 print(line)

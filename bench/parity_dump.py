@@ -6,9 +6,12 @@ dump mode:  python bench/parity_dump.py dump /tmp/parity_ref.pkl [ndocs]
 check mode: python bench/parity_dump.py check /tmp/parity_ref.pkl [ndocs]
 
 Covers: every EXTRACT field, the serialized round-trip, and a per-node
-structural snapshot (all 24 fields minus line/col in positions=False mode),
-plus a positions=True line/col sample — over corpus docs AND adversarial
-fixtures.  Then every page kernel (the 15 in kernel.py, graph's outlinks,
+structural snapshot (every record field but the children list, read
+through the ``N_*`` slot names, in positions=False mode), plus a
+positions=True sample of every node's line, column, end line and end
+column — over corpus docs AND adversarial fixtures.  The snapshots name
+fields, not slot numbers, so the same script checks code with a different
+record layout.  Then every page kernel (the 15 in kernel.py, graph's outlinks,
 robots' sitemap/feed/feed-discovery) runs in-process, without Spark, over
 the fixtures, CHARSET_PAGES, XML_FIXTURES and the first KERNEL_DOCS corpus
 docs; each output frame is snapshotted as its column list plus its rows
@@ -39,6 +42,7 @@ ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, ROOT)
 from pyspark.sql.pandas.types import to_arrow_schema  # noqa: E402
 
+from fortissimo_spark import dom as D  # noqa: E402
 from fortissimo_spark.kernel import process_document, decode_page_bytes  # noqa: E402
 from fortissimo_spark.parser import parse  # noqa: E402
 from tests.kernel_fixtures import (  # noqa: E402
@@ -102,16 +106,22 @@ def kernel_snapshots(n):
     return snaps
 
 
+# the record fields a doc snapshot holds, by name
+_SCALARS = (D.N_KIND, D.N_TAG, D.N_TAG_LC, D.N_PARENT, D.N_CLOSURE,
+            D.N_CONTENT, D.N_TERMINATED, D.N_POSS_ENT, D.N_END_TAG,
+            D.N_INNER_WS, D.N_BAD_TERM, D.N_SYNTHETIC, D.N_SRC_START,
+            D.N_SRC_END)
+_ATTRS = (D.N_ATTR_NAMES, D.N_ATTR_VALUES, D.N_ATTR_SPACING,
+          D.N_ATTR_EQUALS, D.N_ATTR_QUOTES)
+
+
 def doc_snapshot(raw: bytes) -> tuple:
     d = process_document(raw, "density")
     res = d.pop("_result")
     b = res.dom
-    nodes = tuple(
-        (nd[0], nd[1], nd[2], nd[3], nd[5], nd[6], nd[7], nd[8], nd[11],
-         tuple(nd[14] or ()), tuple(nd[15] or ()), tuple(nd[16] or ()),
-         tuple(nd[17] or ()), tuple(nd[18] or ()), nd[19], nd[20], nd[21],
-         nd[22], nd[23])
-        for nd in b.nodes)
+    nodes = tuple(tuple(nd[f] for f in _SCALARS)
+                  + tuple(tuple(nd[f] or ()) for f in _ATTRS)
+                  for nd in b.nodes)
     ser = res.to_string()
     return (tuple(sorted(d.items(), key=lambda kv: kv[0])), ser, nodes)
 
@@ -120,7 +130,8 @@ def pos_snapshot(text: str) -> tuple:
     r = parse(text, positions=True)
     b = r.dom
     return (r.errors, r.lines, r.unclosed_tags, r.implicitly_closed_tags,
-            tuple((nd[9], nd[10], nd[12], nd[13]) for nd in b.nodes))
+            tuple((b.line[i], b.col[i], b.end_line[i], b.end_col[i])
+                  for i in range(len(b.nodes))))
 
 
 def corpus_raws(n):

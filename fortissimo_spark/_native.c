@@ -1,14 +1,15 @@
 /* Native core for fortissimo_spark: the parse scan and density extraction.
  *
- * scan() is the parse core for fortissimo_spark.parser (HTML mode,
- * positions off).  It reads the document from a token boundary, consumes
- * every token it owns and appends the same 24-slot node records to
- * DocBuilder.nodes (and the same indices to open_stack) that the Python
- * general machine would.  It returns at the first token it does not own;
- * parse() reads that one token with the general machine and calls back
- * in.  Tree repair stays in Python: an end tag that is not on top of the
- * stack goes to DocBuilder.pop, and a closing table to
- * DocBuilder._examine_table.
+ * scan() is the parse core for fortissimo_spark.parser (HTML mode, with
+ * or without positions: records hold source offsets, and line and column
+ * are worked out from them in Python when read).  It reads the document
+ * from a token boundary, consumes every token it owns and appends the
+ * same 21-slot node records to DocBuilder.nodes (and the same indices to
+ * open_stack) that the Python general machine would.  It returns at the
+ * first token it does not own; parse() reads that one token with the
+ * general machine and calls back in.  Tree repair stays in Python: an end
+ * tag that is not on top of the stack goes to DocBuilder.pop, and a
+ * closing table to DocBuilder._examine_table.
  *
  * Owned: text runs (the literal-'<' pairwise quirk, empty_end_tag, the
  * trailing-text EOF error), '<!--' comments (the m % 3 == 2 dash rule),
@@ -33,10 +34,9 @@
 /* node record slots and values: must match fortissimo_spark.dom */
 enum {
     N_KIND, N_TAG, N_TAG_LC, N_PARENT, N_CHILDREN, N_CLOSURE, N_CONTENT,
-    N_TERMINATED, N_POSS_ENT, N_LINE, N_COL, N_END_TAG, N_END_LINE,
-    N_END_COL, N_ATTR_NAMES, N_ATTR_VALUES, N_ATTR_SPACING, N_ATTR_EQUALS,
-    N_ATTR_QUOTES, N_INNER_WS, N_BAD_TERM, N_SYNTHETIC, N_SRC_START,
-    N_SRC_END, N_SLOTS
+    N_TERMINATED, N_POSS_ENT, N_END_TAG, N_ATTR_NAMES, N_ATTR_VALUES,
+    N_ATTR_SPACING, N_ATTR_EQUALS, N_ATTR_QUOTES, N_INNER_WS, N_BAD_TERM,
+    N_SYNTHETIC, N_SRC_START, N_SRC_END, N_END_AT, N_SLOTS
 };
 enum { ELEMENT = 0, TEXT = 1, COMMENT = 2, DECLARATION = 3, DOCTYPE_NODE = 4,
        CDATA = 6 };
@@ -59,7 +59,7 @@ static unsigned long long counts[ST_COUNT];
 
 static PyObject *OPEN_IMPLIES_CLOSE, *VOID_ELEMENTS, *RAW_TEXT_TAGS;
 static PyObject *INT[5], *INT_M1, *S_EMPTY, *S_DQ, *S_SQ, *S_EQ, *S_LT_SLASH;
-static PyObject *S_POP, *S_EXAMINE_TABLE, *S_IN_MATH_OR_SVG, *S_LOWER;
+static PyObject *S_EXAMINE_TABLE, *S_IN_MATH_OR_SVG, *S_LOWER;
 static PyObject *S_BLOCK_SEP;
 
 typedef struct {
@@ -115,6 +115,13 @@ static inline int set_slot(PyObject *nd, int slot, PyObject *v)
 {
     Py_INCREF(v);
     return PyList_SetItem(nd, slot, v);
+}
+
+/* nd[slot] = int(v) */
+static int set_int(PyObject *nd, int slot, Py_ssize_t v)
+{
+    PyObject *o = PyLong_FromSsize_t(v);
+    return o == NULL ? -1 : PyList_SetItem(nd, slot, o);
 }
 
 static int pop_stack(const Scan *s)
@@ -194,9 +201,10 @@ static PyObject *new_record(PyObject *parent)
         switch (f) {
         case N_TAG: case N_TAG_LC: case N_END_TAG: case N_INNER_WS:
             v = S_EMPTY; break;
-        case N_CLOSURE: case N_LINE: case N_COL: case N_END_LINE:
-        case N_END_COL:
+        case N_CLOSURE:
             v = INT[0]; break;
+        case N_END_AT:
+            v = INT_M1; break;
         case N_PARENT:
             v = parent; break;
         case N_SYNTHETIC:
@@ -234,8 +242,8 @@ fail:
     return -1;
 }
 
-/* DocBuilder.add_leaf(kind, t[a:b], 0, 0, terminated, poss_ent,
- * src_start, src_end) */
+/* DocBuilder.add_leaf(kind, t[a:b], terminated, poss_ent, src_start,
+ * src_end) */
 static int add_leaf(const Scan *s, int kind, Py_ssize_t a, Py_ssize_t b,
                     int terminated, int poss_ent, Py_ssize_t src_start,
                     Py_ssize_t src_end)
@@ -245,16 +253,12 @@ static int add_leaf(const Scan *s, int kind, Py_ssize_t a, Py_ssize_t b,
     if (nd == NULL)
         return -1;
     PyObject *content = span(s, a, b);
-    PyObject *ss = PyLong_FromSsize_t(src_start);
-    PyObject *se = PyLong_FromSsize_t(src_end);
-    if (content == NULL || ss == NULL || se == NULL) {
-        Py_XDECREF(content); Py_XDECREF(ss); Py_XDECREF(se);
+    if (content == NULL || PyList_SetItem(nd, N_CONTENT, content) < 0
+            || set_int(nd, N_SRC_START, src_start) < 0
+            || set_int(nd, N_SRC_END, src_end) < 0) {
         Py_DECREF(nd);
         return -1;
     }
-    PyList_SetItem(nd, N_CONTENT, content);
-    PyList_SetItem(nd, N_SRC_START, ss);
-    PyList_SetItem(nd, N_SRC_END, se);
     set_slot(nd, N_KIND, INT[kind]);
     set_slot(nd, N_TERMINATED, terminated ? Py_True : Py_False);
     set_slot(nd, N_POSS_ENT, poss_ent ? Py_True : Py_False);
@@ -262,23 +266,20 @@ static int add_leaf(const Scan *s, int kind, Py_ssize_t a, Py_ssize_t b,
 }
 
 /* The general machine's end-tag step when the stack top closes: the
- * inline part of DocBuilder.pop for a matching top. */
+ * inline part of DocBuilder.pop for a matching top, the end tag at ``at``
+ * ending at ``end_pos``. */
 static int close_top(const Scan *s, PyObject *tag_lc, PyObject *end_text,
-                     Py_ssize_t end_pos)
+                     Py_ssize_t at, Py_ssize_t end_pos)
 {
     PyObject *cur = top(s);
     Py_INCREF(cur);
     PyObject *nd = node_at(s, PyLong_AsSsize_t(cur));
-    PyObject *se = PyLong_FromSsize_t(end_pos);
     int r = -1;
-    if (se == NULL || pop_stack(s) < 0)
+    if (pop_stack(s) < 0 || set_int(nd, N_END_AT, at) < 0
+            || set_int(nd, N_SRC_END, end_pos) < 0)
         goto done;
     set_slot(nd, N_CLOSURE, INT[EXPLICITLY_CLOSED]);
     set_slot(nd, N_END_TAG, end_text);
-    set_slot(nd, N_END_LINE, INT[0]);
-    set_slot(nd, N_END_COL, INT[0]);
-    PyList_SetItem(nd, N_SRC_END, se);
-    se = NULL;
     if (is_tag(tag_lc, "table")) {
         PyObject *v = PyObject_CallMethodOneArg(s->b, S_EXAMINE_TABLE, cur);
         if (v == NULL)
@@ -290,7 +291,6 @@ static int close_top(const Scan *s, PyObject *tag_lc, PyObject *end_text,
         goto done;
     r = 0;
 done:
-    Py_XDECREF(se);
     Py_DECREF(cur);
     return r;
 }
@@ -338,16 +338,12 @@ static Py_ssize_t end_tag(Scan *s, Py_ssize_t k)
             goto done;
     }
     if (match) {
-        if (close_top(s, tag_lc, text, i2 + 1) < 0)
+        if (close_top(s, tag_lc, text, k, i2 + 1) < 0)
             goto done;
         counts[ST_END_TOP]++;
     } else {
-        PyObject *se = PyLong_FromSsize_t(i2 + 1);
-        if (se == NULL)
-            goto done;
-        PyObject *v = PyObject_CallMethodObjArgs(s->b, S_POP, tag_lc, text,
-                                                 INT[0], INT[0], se, NULL);
-        Py_DECREF(se);
+        PyObject *v = PyObject_CallMethod(s->b, "pop", "OOnn", tag_lc, text,
+                                          k, i2 + 1);
         if (v == NULL)
             goto done;
         if (v == Py_False)
@@ -489,7 +485,7 @@ static Py_ssize_t raw_text(Scan *s, Py_ssize_t i, PyObject *tag_lc)
     PyObject *text = span(s, match_start, gt + 1);
     if (text == NULL)
         return -1;
-    int r = close_top(s, tag_lc, text, gt + 1);
+    int r = close_top(s, tag_lc, text, match_start, gt + 1);
     Py_DECREF(text);
     if (r < 0)
         return -1;
@@ -730,14 +726,9 @@ static Py_ssize_t start_tag(Scan *s, Py_ssize_t k)
     if (nd == NULL || fill_attrs(s, nd, &as) < 0)
         goto error;
     PyObject *children = PyList_New(0);
-    PyObject *ss = PyLong_FromSsize_t(k);
-    if (children == NULL || ss == NULL) {
-        Py_XDECREF(children);
-        Py_XDECREF(ss);
+    if (children == NULL || PyList_SetItem(nd, N_CHILDREN, children) < 0
+            || set_int(nd, N_SRC_START, k) < 0)
         goto error;
-    }
-    PyList_SetItem(nd, N_CHILDREN, children);
-    PyList_SetItem(nd, N_SRC_START, ss);
     set_slot(nd, N_KIND, INT[ELEMENT]);
     set_slot(nd, N_TAG, tag);
     set_slot(nd, N_TAG_LC, tag_lc);
@@ -758,10 +749,8 @@ static Py_ssize_t start_tag(Scan *s, Py_ssize_t k)
     if (is_void) {
         /* pushed and popped at once: the stack and the math/svg counter
          * end where they began, and an empty table has nothing to repair */
-        PyObject *se = PyLong_FromSsize_t(i);
-        if (se == NULL)
+        if (set_int(nd, N_SRC_END, i) < 0)
             goto error;
-        PyList_SetItem(nd, N_SRC_END, se);
         set_slot(nd, N_CLOSURE,
                  INT[end_kind == END_SELF ? SELF_CLOSED : VOID_CLOSED]);
     } else {
@@ -1461,7 +1450,6 @@ PyMODINIT_FUNC PyInit__native(void)
     S_SQ = intern("'");
     S_EQ = intern("=");
     S_LT_SLASH = intern("</");
-    S_POP = intern("pop");
     S_EXAMINE_TABLE = intern("_examine_table");
     S_IN_MATH_OR_SVG = intern("in_math_or_svg");
     S_LOWER = intern("lower");

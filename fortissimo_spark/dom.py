@@ -3,10 +3,15 @@
 Behavioral parity target: ``/root/reference/projects/fortissimo-html/src/dom.ts``
 and ``src/elements.ts`` — re-expressed as index arrays (no object tree).
 
-Storage: one Python list per node (24 fixed slots, ``N_*`` indices), one
+Storage: one Python list per node (21 fixed slots, ``N_*`` indices), one
 append per node — the hot path allocates a single record instead of fanning
 out across parallel lists. Field-view properties (``b.kind[i]`` etc.) keep a
 columnar API for tests/format/stylize consumers.
+
+Positions: a record holds source offsets, not lines and columns.
+``DocBuilder.line_col`` works them out when read, through the ``_Pos`` that
+``parse(positions=True)`` leaves in ``DocBuilder.pos``; without one, or
+without an offset, they read 0.
 
 Replicated reference quirks (file:line cites are into the reference):
 
@@ -32,6 +37,7 @@ Replicated reference quirks (file:line cites are into the reference):
 from __future__ import annotations
 
 import re
+from bisect import bisect_left, bisect_right
 
 from .chars import unescape_entities
 
@@ -68,21 +74,20 @@ N_CLOSURE = 5
 N_CONTENT = 6
 N_TERMINATED = 7
 N_POSS_ENT = 8
-N_LINE = 9
-N_COL = 10
-N_END_TAG = 11
-N_END_LINE = 12
-N_END_COL = 13
-N_ATTR_NAMES = 14
-N_ATTR_VALUES = 15
-N_ATTR_SPACING = 16
-N_ATTR_EQUALS = 17
-N_ATTR_QUOTES = 18
-N_INNER_WS = 19
-N_BAD_TERM = 20
-N_SYNTHETIC = 21
-N_SRC_START = 22
-N_SRC_END = 23
+N_END_TAG = 9
+N_ATTR_NAMES = 10
+N_ATTR_VALUES = 11
+N_ATTR_SPACING = 12
+N_ATTR_EQUALS = 13
+N_ATTR_QUOTES = 14
+N_INNER_WS = 15
+N_BAD_TERM = 16
+N_SYNTHETIC = 17
+N_SRC_START = 18
+N_SRC_END = 19
+# an element's end-tag offset; the offset an unmatched end tag's position
+# is read at; -1 for none
+N_END_AT = 20
 
 # --- element sets (elements.ts) ----------------------------------------------
 # 'u]' typo kept on purpose: 'u' is NOT treated as a formatting element.
@@ -134,7 +139,53 @@ _RE_XHTML = re.compile(r"\bxhtml\b", re.I | re.A)
 _RE_VARIETY = re.compile(r"\b(frameset|strict|transitional)\b")
 _RE_VERSION = re.compile(r"\bx?html[ \n\r\t\f]*([.\d]+)\b", re.I | re.A)
 _RE_HTML5 = re.compile(r"^doctype[ \n\r\t\f]+html[ \n\r\t\f]*$", re.I | re.A)
-_RE_EOL_COUNT = re.compile(r"\r\n|\n|\r")
+_RE_EOL = re.compile(r"\r\n|\r|\n")
+_RE_TAB = re.compile("\t")
+
+
+def count_eols(s: str) -> int:
+    """The number of ``_RE_EOL`` matches in ``s``: every \\n or \\r counts
+    once, a \\r\\n pair once."""
+    return s.count("\n") + s.count("\r") - s.count("\r\n")
+
+
+class _Pos:
+    """1-based line and tab-aware column of an offset in a parsed text.
+
+    The column is 1 plus the widths of the characters before the offset on
+    its line; a tab reaches the next tab stop (1, 1 + tab_size, ...), every
+    other character is 1 wide.  Line starts and the column after each tab
+    are indexed on the first lookup, so a parse that reads no position pays
+    nothing and a lookup in any order is two bisections."""
+
+    __slots__ = ("t", "tab_size", "starts", "tabs", "tab_cols")
+
+    def __init__(self, t: str, tab_size: int):
+        self.t = t
+        self.tab_size = tab_size
+        self.starts = None
+
+    def line_col(self, pos: int) -> tuple[int, int]:
+        if self.starts is None:
+            self._index()
+        ln = bisect_right(self.starts, pos)
+        start = self.starts[ln - 1]
+        j = bisect_left(self.tabs, pos) - 1
+        if j >= 0 and self.tabs[j] >= start:
+            return ln, self.tab_cols[j] + pos - self.tabs[j] - 1
+        return ln, pos - start + 1
+
+    def _index(self) -> None:
+        starts = self.starts = [0]
+        starts += [m.end() for m in _RE_EOL.finditer(self.t)]
+        self.tabs = [m.start() for m in _RE_TAB.finditer(self.t)]
+        self.tab_cols = cols = []  # the column after each tab
+        prev = -1
+        for p in self.tabs:
+            start = starts[bisect_right(starts, p) - 1]
+            c = cols[-1] + p - prev - 1 if prev >= start else p - start + 1
+            cols.append(c + self.tab_size - (c - 1) % self.tab_size)
+            prev = p
 
 
 def oq(quote: str) -> str:
@@ -171,6 +222,21 @@ class _FieldView:
             yield node[f]
 
 
+class _PosView:
+    """Columnar view over a resolved position: ``b.line_col(i, end)[part]``."""
+
+    __slots__ = ("b", "end", "part")
+
+    def __init__(self, b: "DocBuilder", end: bool, part: int):
+        self.b, self.end, self.part = b, end, part
+
+    def __getitem__(self, i: int) -> int:
+        return self.b.line_col(i, self.end)[self.part]
+
+    def __len__(self) -> int:
+        return len(self.b.nodes)
+
+
 class DocBuilder:
     """Per-document DOM; node ids index ``self.nodes``.
 
@@ -179,16 +245,17 @@ class DocBuilder:
     """
 
     __slots__ = ("nodes", "open_stack", "in_math_or_svg", "xml_mode",
-                 "_views")
+                 "pos", "_views")
 
     def __init__(self) -> None:
         self.nodes: list[list] = []
         self.open_stack: list[int] = []
         self.in_math_or_svg = 0
         self.xml_mode = False
+        self.pos: _Pos | None = None  # set by parse(positions=True)
         self._views: dict[int, _FieldView] = {}
 
-        root = self.new_element("/", 0, 0, synthetic=True)
+        root = self.new_element("/", synthetic=True)
         self.open_stack.append(root)
 
     # --- columnar views (API compatibility for tests/format/stylize) -------
@@ -208,11 +275,11 @@ class DocBuilder:
     content = property(lambda self: self._view(N_CONTENT))
     terminated = property(lambda self: self._view(N_TERMINATED))
     poss_ent = property(lambda self: self._view(N_POSS_ENT))
-    line = property(lambda self: self._view(N_LINE))
-    col = property(lambda self: self._view(N_COL))
+    line = property(lambda self: _PosView(self, False, 0))
+    col = property(lambda self: _PosView(self, False, 1))
     end_tag = property(lambda self: self._view(N_END_TAG))
-    end_line = property(lambda self: self._view(N_END_LINE))
-    end_col = property(lambda self: self._view(N_END_COL))
+    end_line = property(lambda self: _PosView(self, True, 0))
+    end_col = property(lambda self: _PosView(self, True, 1))
     attr_names = property(lambda self: self._view(N_ATTR_NAMES))
     attr_values = property(lambda self: self._view(N_ATTR_VALUES))
     attr_spacing = property(lambda self: self._view(N_ATTR_SPACING))
@@ -224,41 +291,52 @@ class DocBuilder:
     src_start = property(lambda self: self._view(N_SRC_START))
     src_end = property(lambda self: self._view(N_SRC_END))
 
+    def line_col(self, node: int, end: bool = False) -> tuple[int, int]:
+        """(line, column) of ``node`` (an unmatched end tag's at its
+        ``N_END_AT``), or with ``end`` of its end tag; (0, 0) if unknown."""
+        nd = self.nodes[node]
+        if end:
+            at = nd[N_END_AT] if nd[N_KIND] == ELEMENT else -1
+        elif nd[N_KIND] == UNMATCHED_CLOSE:
+            at = nd[N_END_AT]
+        else:
+            at = nd[N_SRC_START]
+        return (0, 0) if at < 0 or self.pos is None else self.pos.line_col(at)
+
     # --- node construction ----------------------------------------------
 
-    def new_element(self, tag: str, line: int, col: int, *,
-                    synthetic: bool = False, src_start: int = -1) -> int:
+    def new_element(self, tag: str, *, synthetic: bool = False,
+                    src_start: int = -1) -> int:
         nodes = self.nodes
         idx = len(nodes)
         nodes.append([
-            ELEMENT, tag, tag.lower(), -1, [],
-            UNCLOSED, None, True, False, line, col, "", 0, 0,
-            [], [], [], [], [], "", None, synthetic, src_start, -1,
+            ELEMENT, tag, tag.lower(), -1, [], UNCLOSED, None, True, False,
+            "", [], [], [], [], [], "", None, synthetic, src_start, -1, -1,
         ])
         return idx
 
-    def new_leaf(self, kind: int, content: str, line: int, col: int, *,
-                 terminated: bool = True, poss_ent: bool = False,
-                 src_start: int = -1, src_end: int = -1) -> int:
+    def new_leaf(self, kind: int, content: str, *, terminated: bool = True,
+                 poss_ent: bool = False, src_start: int = -1,
+                 src_end: int = -1) -> int:
         nodes = self.nodes
         idx = len(nodes)
         nodes.append([
-            kind, "", "", -1, None,
-            UNCLOSED, content, terminated, poss_ent, line, col, "", 0, 0,
-            None, None, None, None, None, "", None, False, src_start, src_end,
+            kind, "", "", -1, None, UNCLOSED, content, terminated, poss_ent,
+            "", None, None, None, None, None, "", None, False, src_start,
+            src_end, -1,
         ])
         return idx
 
-    def add_leaf(self, kind: int, content: str, line: int, col: int,
-                 terminated: bool = True, poss_ent: bool = False,
-                 src_start: int = -1, src_end: int = -1) -> int:
+    def add_leaf(self, kind: int, content: str, terminated: bool = True,
+                 poss_ent: bool = False, src_start: int = -1,
+                 src_end: int = -1, end_at: int = -1) -> int:
         nodes = self.nodes
         idx = len(nodes)
         cur = self.open_stack[-1]
         nodes.append([
-            kind, "", "", cur, None,
-            UNCLOSED, content, terminated, poss_ent, line, col, "", 0, 0,
-            None, None, None, None, None, "", None, False, src_start, src_end,
+            kind, "", "", cur, None, UNCLOSED, content, terminated, poss_ent,
+            "", None, None, None, None, None, "", None, False, src_start,
+            src_end, end_at,
         ])
         nodes[cur][N_CHILDREN].append(idx)
         return idx
@@ -288,10 +366,11 @@ class DocBuilder:
         nd[N_ATTR_EQUALS].append(equals)
         nd[N_ATTR_QUOTES].append(quote)
 
-    def pop(self, tag_lc: str, end_tag_text: str,
-            line: int = 0, col: int = 0, end_pos: int = -1) -> bool:
-        """Mirror of dom.ts:668-741 for an end tag (the parser and the
-        native core close void and self-closing tags themselves).
+    def pop(self, tag_lc: str, end_tag_text: str, at: int = -1,
+            end_pos: int = -1) -> bool:
+        """Mirror of dom.ts:668-741 for an end tag at offset ``at`` that
+        ends at ``end_pos`` (the parser and the native core close void and
+        self-closing tags themselves).
 
         Returns False when the closing tag was unmatched (parse error).
         """
@@ -305,8 +384,7 @@ class DocBuilder:
             stack.pop()
             nd[N_CLOSURE] = EXPLICITLY_CLOSED
             nd[N_END_TAG] = end_tag_text
-            nd[N_END_LINE] = line
-            nd[N_END_COL] = col
+            nd[N_END_AT] = at
             if end_pos >= 0:
                 nd[N_SRC_END] = end_pos
             if tag_lc == "table":
@@ -345,8 +423,7 @@ class DocBuilder:
                             popped = True
                             nd[N_CLOSURE] = EXPLICITLY_CLOSED
                             nd[N_END_TAG] = end_tag_text
-                            nd[N_END_LINE] = line
-                            nd[N_END_COL] = col
+                            nd[N_END_AT] = at
                             if end_pos >= 0:
                                 nd[N_SRC_END] = end_pos
                         else:
@@ -358,7 +435,7 @@ class DocBuilder:
                     stack.pop()
 
         if not popped:
-            self.add_leaf(UNMATCHED_CLOSE, end_tag_text, line, col)
+            self.add_leaf(UNMATCHED_CLOSE, end_tag_text, end_at=at)
         # no re-parent pass after the pop (dom.ts:733-738): see the module
         # docstring for the stack invariant that makes it a no-op
         return popped
@@ -401,7 +478,7 @@ class DocBuilder:
                     kept += between
                     between.clear()
                     section = self.new_element("thead" if has_th else "tbody",
-                                               0, 0, synthetic=True)
+                                               synthetic=True)
                     nodes[section][N_PARENT] = table
                     kept.append(section)
                 self._adopt(section, between, elem)
@@ -429,7 +506,7 @@ class DocBuilder:
             tag_lc = nd[N_TAG_LC]
             if tag_lc in ("th", "td"):
                 if row is None:
-                    row = self.new_element("tr", 0, 0, synthetic=True)
+                    row = self.new_element("tr", synthetic=True)
                     nodes[row][N_PARENT] = node
                     kept.append(row)
                 self._adopt(row, between, elem)
@@ -727,7 +804,7 @@ class DocBuilder:
 
     def create_closed_element(self, tag: str) -> int:
         """dom.ts:228-235 createNode: a detached, explicitly-closed element."""
-        node = self.new_element(tag, 0, 0)
+        node = self.new_element(tag)
         nd = self.nodes[node]
         nd[N_END_TAG] = f"</{tag}>"
         nd[N_CLOSURE] = EXPLICITLY_CLOSED
@@ -738,17 +815,18 @@ class DocBuilder:
     def to_json(self, node: int = 0):
         """Debug-oriented nested dict mirroring the reference's toJSON."""
         nd = self.nodes[node]
+        line, col = self.line_col(node)
         if nd[N_KIND] != ELEMENT:
             return (self._leaf_str(node)
                     + " (" + str(self.depth(node))
-                    + (f"; {nd[N_LINE]}, {nd[N_COL]}" if nd[N_LINE] else "")
+                    + (f"; {line}, {col}" if line else "")
                     + (f"; {self.nodes[nd[N_PARENT]][N_TAG]}" if nd[N_PARENT] >= 0 else "")
                     + ")" + ("" if nd[N_TERMINATED] else "!"))
         json: dict = {"tag": nd[N_TAG]}
-        if nd[N_LINE]:
-            json["line"] = nd[N_LINE]
-        if nd[N_COL]:
-            json["column"] = nd[N_COL]
+        if line:
+            json["line"] = line
+        if col:
+            json["column"] = col
         if nd[N_SYNTHETIC]:
             json["synthetic"] = True
         if nd[N_BAD_TERM] is not None:
@@ -766,8 +844,8 @@ class DocBuilder:
         if nd[N_CHILDREN]:
             json["children"] = [self.to_json(c) for c in nd[N_CHILDREN]]
         if nd[N_CLOSURE] == EXPLICITLY_CLOSED and nd[N_END_TAG]:
-            json["endTagText"] = (f"{nd[N_END_TAG]} "
-                                  f"({nd[N_END_LINE]}, {nd[N_END_COL]})")
+            end_line, end_col = self.line_col(node, end=True)
+            json["endTagText"] = f"{nd[N_END_TAG]} ({end_line}, {end_col})"
         return json
 
     # --- line map (dom.ts:116-126, 251-268) --------------------------------------
@@ -775,7 +853,7 @@ class DocBuilder:
     def line_map(self, node: int = 0) -> list[tuple[int, int, int]]:
         """(display_line, node_id, source_line) tuples for a (re)formatted
         document: maps display lines of the serialized output back to the
-        source lines recorded at parse time."""
+        source lines of the parsed text."""
         out: list[tuple[int, int, int]] = []
         current = [1]
         self._line_map(node, out, current)
@@ -788,15 +866,15 @@ class DocBuilder:
         for item in groups:
             if isinstance(item, (list, tuple)):
                 for s in item:
-                    count += len(_RE_EOL_COUNT.findall(s or ""))
+                    count += count_eols(s or "")
             else:
-                count += len(_RE_EOL_COUNT.findall(item or ""))
+                count += count_eols(item or "")
         return count
 
     def _line_map(self, node: int, out: list, current: list[int]) -> None:
         nd = self.nodes[node]
         if nd[N_PARENT] >= 0:
-            out.append((current[0], node, nd[N_LINE]))
+            out.append((current[0], node, self.line_col(node)[0]))
         if nd[N_KIND] != ELEMENT:
             current[0] += self._count_lines(nd[N_CONTENT])
             return

@@ -166,7 +166,7 @@ def format_html(b: DocBuilder, options: FormatOptions | None = None) -> None:
     if opts.indent > 1 and opts.end_document_with_newline:
         children = b.children[0]
         if not children or b.kind[children[-1]] != D.TEXT:
-            txt = b.new_leaf(D.TEXT, opts.eol, 0, 0, poss_ent=False)
+            txt = b.new_leaf(D.TEXT, opts.eol, poss_ent=False)
             b.parent[txt] = 0
             children.append(txt)
         else:
@@ -318,7 +318,7 @@ def _format_node_gen(b: DocBuilder, node: int, opts: FormatOptions, indent: int)
                 elif ((b.tag_lc[elem] in opts.new_line_before
                        or opts.block_ctx.get(elem)) and pre_indented != i - 1):
                     if not has_last:
-                        txt = b.new_leaf(D.TEXT, "", 0, 0, poss_ent=False)
+                        txt = b.new_leaf(D.TEXT, "", poss_ent=False)
                         b.parent[txt] = node
                         children.insert(i, txt)
                         opts.last_text = txt
@@ -362,7 +362,7 @@ def _format_node_gen(b: DocBuilder, node: int, opts: FormatOptions, indent: int)
     if opts.indent > 1 and (special_text
                             or (not keep_ws and not _only_contains_inline(b, node, opts))):
         if opts.last_text in (NULL_TEXT, CLEAR_TEXT):
-            txt = b.new_leaf(D.TEXT, "", 0, 0, poss_ent=False)
+            txt = b.new_leaf(D.TEXT, "", poss_ent=False)
             b.parent[txt] = node
             children.append(txt)
             opts.last_text = txt

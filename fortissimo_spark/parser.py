@@ -30,32 +30,31 @@ Replicated reference quirks (cites into the reference source):
 * html-parser.ts:1140-1147 — CDATA is recognized only when ``[CDATA[`` is
   complete *and* at least one more char follows before EOF.
 
-Native hand-off contract.  In HTML mode with ``positions=False`` (the
-only mode ``kernel.decode_parse`` uses) ``parse()`` hands the document to
-the native core, ``_native.c``.  It reads every token it owns (text runs,
+Native hand-off contract.  In HTML mode ``parse()`` hands the document to
+the native core, ``_native.c``, with or without positions: a record holds
+source offsets only, and line and column are worked out from them when
+read (``dom._Pos``).  The core reads every token it owns (text runs,
 ``<!--`` comments, end tags closed by ``>``, start tags with any number of
 attributes, void elements, implied closes and the raw-text scan), appends
-the same 24-slot node records to ``DocBuilder.nodes`` and returns the
+the same 21-slot node records to ``DocBuilder.nodes`` and returns the
 offset of the first token it does not own.  The general state machine
 below reads that one token and calls back in.  Tree repair is Python's
 alone: the core calls ``DocBuilder.pop`` for an end tag that is not on top
 of the stack and ``DocBuilder._examine_table`` when a table closes, and
 while no charset is known it hands each ``meta`` tag's attributes to the
 Python charset sniff.  Everything else (``<?``, CDATA, an xhtml doctype,
-EOF inside a tag or an end tag) goes to the general machine.
-``positions=True`` and xml mode never enter the core.  The general machine is
-the reference: for any input the native parse must build exactly what it
-builds.  ``parse()`` reads ``_NATIVE_SCAN`` from the module globals on
-every call, so ``tests/test_parser_fastpaths.py`` sets it to None and
-checks that the parse does not change.  ``NATIVE`` says whether the core
-loaded (see ``native.py``); without a compiler the general machine reads
-everything.
+EOF inside a tag or an end tag) goes to the general machine.  Xml mode
+never enters the core.  The general machine is the reference: for any
+input the native parse must build exactly what it builds.  ``parse()``
+reads ``_NATIVE_SCAN`` from the module globals on every call, so
+``tests/test_parser_fastpaths.py`` sets it to None and checks that the
+parse does not change.  ``NATIVE`` says whether the core loaded (see
+``native.py``); without a compiler the general machine reads everything.
 """
 
 from __future__ import annotations
 
 import re
-from bisect import bisect_right
 
 from . import dom as D
 from . import native as _native_build
@@ -63,7 +62,8 @@ from .dom import (
     ELEMENT, IMPLICITLY_CLOSED, OPEN_IMPLIES_CLOSE,
     SELF_CLOSED, TEXT, UNCLOSED, VOID_CLOSED,
     DocBuilder, N_BAD_TERM, N_CHILDREN, N_CLOSURE,
-    N_INNER_WS, N_PARENT, N_SRC_END, N_TAG_LC, VOID_ELEMENTS,
+    N_INNER_WS, N_PARENT, N_SRC_END, N_TAG_LC, VOID_ELEMENTS, _Pos,
+    count_eols,
 )
 
 __all__ = ["ParseResult", "parse", "check_encoding", "normalize_encoding_name",
@@ -78,7 +78,6 @@ _WS_SET = frozenset(_WS)
 # keeps the astral-chars-as-whitespace quirk — see module docstring)
 _MARKUP_START_SET = frozenset(
     "abcdefghijklmnopqrstuvwxyzABCDEFGHIJKLMNOPQRSTUVWXYZ:/!?")
-_RE_ANY_EOL = re.compile(r"\r\n|\r|\n")
 
 # tag name runs: loose (HTML) / strict PCEN (xmlMode)
 _RE_TAG_LOOSE = re.compile(r"[^ \n\r\t\f/>]*")
@@ -178,88 +177,35 @@ class ParseResult:
         return self.dom.serialize(0)
 
 
-class _Pos:
-    """Lazy 1-based line / tab-aware column lookup over the parsed text.
-
-    The column of ``pos`` is 1 plus the widths of the characters before it
-    on its line; a tab reaches the next tab stop (columns 1, 1 + tab_size,
-    1 + 2 * tab_size, ...), every other character is 1 wide.  The
-    parser asks in text order, so ``line_col`` continues from its previous
-    answer when ``pos`` is on the same line at or after it: a long line
-    costs linear time, not a rescan from the line's start per call."""
-
-    __slots__ = ("t", "tab_size", "starts", "last")
-
-    def __init__(self, t: str, tab_size: int):
-        self.t = t
-        self.tab_size = tab_size
-        starts = [0]
-        for m in _RE_ANY_EOL.finditer(t):
-            starts.append(m.end())
-        self.starts = starts
-        # (line, end, col, inc): the answer for pos = end - 1, and the
-        # width of the character there
-        self.last = (-1, 0, 0, 1)
-
-    def line(self, pos: int) -> int:
-        return bisect_right(self.starts, pos)
-
-    def line_col(self, pos: int) -> tuple[int, int]:
-        ln = bisect_right(self.starts, pos)
-        t = self.t
-        end = min(pos + 1, len(t))
-        last_ln, i, col, inc = self.last
-        if last_ln != ln or i > end:
-            i, col, inc = self.starts[ln - 1], 0, 1
-        tab = self.tab_size
-        while i < end:
-            j = t.find("\t", i, end)
-            if j < 0:
-                j = end
-            if j > i:  # a run of non-tab characters, each of width 1
-                col += inc + (j - i - 1)
-                inc = 1
-            if j == end:
-                break
-            col += inc
-            inc = tab - (col - 1) % tab
-            i = j + 1
-        self.last = (ln, end, col, inc)
-        return ln, col
-
-
-_NO_POS = (0, 0)
-
-
 def parse(source: str, *, empty_end_tag: bool = True, eol="\n", tab_size: int = 8,
           xml_mode: bool = False, positions: bool = True) -> ParseResult:
     """Parse ``source`` with the reference's std-mode semantics.
 
-    ``positions=False`` skips line/column computation (hot path); node
-    line/col are then 0.
+    Both ``positions`` modes build the same records.  With
+    ``positions=True`` the builder keeps a ``dom._Pos`` over the parsed
+    text, which works out a node's line and column (tab stops every
+    ``tab_size`` columns) when they are read; with ``positions=False``
+    they read 0.
     """
     characters = len(source)
     pattern_encoding = check_encoding(source[:8])
 
     eol_n = _normalize_eol_option(eol)
     if eol_n and (eol_n != "\n" or "\r" in source):
-        t = _RE_ANY_EOL.sub(eol_n, source)
+        t = D._RE_EOL.sub(eol_n, source)
     else:
         t = source
     n = len(t)
 
     b = DocBuilder()
     b.xml_mode = xml_mode
+    if positions:
+        b.pos = _Pos(t, tab_size)
     xml = xml_mode
 
     result = ParseResult(b, t)
     result.characters = characters
     result.pattern_encoding = pattern_encoding
-
-    pos = _Pos(t, tab_size) if positions else None
-    # lc is None on the hot path (positions=False): call sites branch on it
-    # instead of paying a no-op function call per markup token
-    lc = pos.line_col if positions else None
 
     ws_set = _WS_SET
 
@@ -282,7 +228,7 @@ def parse(source: str, *, empty_end_tag: bool = True, eol="\n", tab_size: int = 
     pop = b.pop
     add_attribute = b.add_attribute
     # read from the module globals on every call (see module docstring)
-    native = None if positions else _NATIVE_SCAN
+    native = _NATIVE_SCAN
     errors = 0
     charset: str | None = None
     checking_charset = False
@@ -354,11 +300,10 @@ def parse(source: str, *, empty_end_tag: bool = True, eol="\n", tab_size: int = 
             text = t[run_start:n]
             if text:
                 is_all_ws = _RE_NON_WS_BMP.search(text) is None
-                ln, col = lc(run_start) if lc else _NO_POS
                 cur = stack[-1]
                 nodes.append([TEXT, "", "", cur, None, UNCLOSED, text, True,
-                              True, ln, col, "", 0, 0, None, None, None, None,
-                              None, "", None, False, run_start, n])
+                              True, "", None, None, None, None, None, "",
+                              None, False, run_start, n, -1])
                 nodes[cur][N_CHILDREN].append(len(nodes) - 1)
                 if not is_all_ws:
                     # handleText left the parser in AT_MARKUP_START at EOF
@@ -367,14 +312,11 @@ def parse(source: str, *, empty_end_tag: bool = True, eol="\n", tab_size: int = 
             break
 
         if k > run_start:
-            ln, col = lc(run_start) if lc else _NO_POS
             cur = stack[-1]
             nodes.append([TEXT, "", "", cur, None, UNCLOSED, t[run_start:k],
-                          True, True, ln, col, "", 0, 0, None, None, None,
-                          None, None, "", None, False, run_start, k])
+                          True, True, "", None, None, None, None, None, "",
+                          None, False, run_start, k, -1])
             nodes[cur][N_CHILDREN].append(len(nodes) - 1)
-
-        mk_ln, mk_col = lc(k) if lc else _NO_POS
 
         # ---------------- markup dispatch at k; c2 = t[k+1] ----------------
         if c2 == "/":
@@ -383,17 +325,15 @@ def parse(source: str, *, empty_end_tag: bool = True, eol="\n", tab_size: int = 
             iw = ws_end(i)
             if iw >= n:
                 errors += 1
-                ln, col = lc(n - 1) if lc else _NO_POS
-                add_leaf(D.UNMATCHED_CLOSE, t[k:n], ln, col,
-                                       src_start=k, src_end=n)
+                add_leaf(D.UNMATCHED_CLOSE, t[k:n], src_start=k, src_end=n,
+                         end_at=n - 1)
                 i = n
                 break
             c = t[iw]
             if c == ">":
                 errors += 1
-                ln, col = lc(iw) if lc else _NO_POS
-                add_leaf(D.UNMATCHED_CLOSE, t[k:iw + 1], ln, col,
-                                       src_start=k, src_end=iw + 1)
+                add_leaf(D.UNMATCHED_CLOSE, t[k:iw + 1], src_start=k,
+                         src_end=iw + 1, end_at=iw)
                 i = iw + 1
                 continue
             m = (_RE_TAG_STRICT if xml else _RE_TAG_LOOSE).match(t, iw + 1)
@@ -404,29 +344,27 @@ def parse(source: str, *, empty_end_tag: bool = True, eol="\n", tab_size: int = 
             i2 = ws_end(tag_end)
             if i2 >= n:
                 errors += 1
-                ln, col = lc(n - 1) if lc else _NO_POS
-                add_leaf(D.UNMATCHED_CLOSE, t[k:n], ln, col,
-                                       src_start=k, src_end=n)
+                add_leaf(D.UNMATCHED_CLOSE, t[k:n], src_start=k, src_end=n,
+                         end_at=n - 1)
                 i = n
                 break
             ws2 = t[tag_end:i2]
             c3 = t[i2]
             if c3 == ">":
                 # endTagText excludes whitespace after '</' (html-parser.ts:633)
-                if not pop(tag_lc, "</" + tag + ws2 + ">", mk_ln, mk_col, end_pos=i2 + 1):
+                if not pop(tag_lc, "</" + tag + ws2 + ">", k, i2 + 1):
                     errors += 1
                 i = i2 + 1
             elif xml:
                 errors += 1
-                if not pop(tag_lc, t[k:i2], mk_ln, mk_col):
+                if not pop(tag_lc, t[k:i2], k):
                     errors += 1
                 i = i2  # offending char re-parsed as text
             elif i2 == n - 1:
                 # EOF right after the offending char (html-parser.ts:615-616)
                 errors += 1
-                ln, col = lc(n - 1) if lc else _NO_POS
-                add_leaf(D.UNMATCHED_CLOSE, t[k:n], ln, col,
-                                       src_start=k, src_end=n)
+                add_leaf(D.UNMATCHED_CLOSE, t[k:n], src_start=k, src_end=n,
+                         end_at=n - 1)
                 i = n
                 break
             else:
@@ -438,7 +376,7 @@ def parse(source: str, *, empty_end_tag: bool = True, eol="\n", tab_size: int = 
                 else:
                     end_tag_text = "</" + tag + t[tag_end:g + 1]
                     i = g + 1
-                if not pop(tag_lc, end_tag_text, mk_ln, mk_col, end_pos=i):
+                if not pop(tag_lc, end_tag_text, k, i):
                     errors += 1
             continue
 
@@ -466,12 +404,12 @@ def parse(source: str, *, empty_end_tag: bool = True, eol="\n", tab_size: int = 
                     scan = g + 1
                 if e < 0:
                     errors += 1
-                    node = add_leaf(D.COMMENT, t[start:n], mk_ln, mk_col,
-                                      terminated=False, src_start=k, src_end=n)
+                    add_leaf(D.COMMENT, t[start:n], False, src_start=k,
+                             src_end=n)
                     i = n
                 else:
-                    node = add_leaf(D.COMMENT, t[start:e - 2], mk_ln, mk_col,
-                                      src_start=k, src_end=e + 1)
+                    add_leaf(D.COMMENT, t[start:e - 2], src_start=k,
+                             src_end=e + 1)
                     i = e + 1
                 continue
 
@@ -490,12 +428,12 @@ def parse(source: str, *, empty_end_tag: bool = True, eol="\n", tab_size: int = 
                     scan = g + 1
                 if e < 0:
                     errors += 1
-                    node = add_leaf(D.CDATA, t[k + 9:n], mk_ln, mk_col,
-                                      terminated=False, src_start=k, src_end=n)
+                    add_leaf(D.CDATA, t[k + 9:n], False, src_start=k,
+                             src_end=n)
                     i = n
                 else:
-                    node = add_leaf(D.CDATA, t[k + 9:e - 2], mk_ln, mk_col,
-                                      src_start=k, src_end=e + 1)
+                    add_leaf(D.CDATA, t[k + 9:e - 2], src_start=k,
+                             src_end=e + 1)
                     i = e + 1
                 continue
 
@@ -519,16 +457,16 @@ def parse(source: str, *, empty_end_tag: bool = True, eol="\n", tab_size: int = 
                     i = e + 1
 
             if D._RE_DOCTYPE.match(content):
-                node = add_leaf(D.DOCTYPE, content, mk_ln, mk_col,
-                                  terminated=terminated, src_start=k, src_end=i)
+                add_leaf(D.DOCTYPE, content, terminated, src_start=k,
+                         src_end=i)
                 if not terminated:
                     errors += 1
                 dt_type, _, _ = DocBuilder.doctype_info(content)
                 xml = dt_type == "xhtml"
                 b.xml_mode = xml
             else:
-                node = add_leaf(D.DECLARATION, content, mk_ln, mk_col,
-                                  terminated=terminated, src_start=k, src_end=i)
+                add_leaf(D.DECLARATION, content, terminated, src_start=k,
+                         src_end=i)
                 if not terminated:
                     errors += 1
             continue
@@ -556,8 +494,8 @@ def parse(source: str, *, empty_end_tag: bool = True, eol="\n", tab_size: int = 
                     content = t[k + 2:e]
                     terminated = True
                     i = e + 1
-            node = add_leaf(D.PROCESSING, content, mk_ln, mk_col,
-                              terminated=terminated, src_start=k, src_end=i)
+            add_leaf(D.PROCESSING, content, terminated, src_start=k,
+                     src_end=i)
             if not terminated:
                 errors += 1
             # no canDoXmlMode() check: it can never pass (module docstring)
@@ -569,9 +507,8 @@ def parse(source: str, *, empty_end_tag: bool = True, eol="\n", tab_size: int = 
         i = m.end()
         tag_lc = tag if xml else tag.lower()
         node = len(nodes)
-        nd = [ELEMENT, tag, tag_lc, -1, [], UNCLOSED, None, True, False,
-              mk_ln, mk_col, "", 0, 0, [], [], [], [], [], "", None,
-              False, k, -1]
+        nd = [ELEMENT, tag, tag_lc, -1, [], UNCLOSED, None, True, False, "",
+              [], [], [], [], [], "", None, False, k, -1, -1]
         nodes.append(nd)
         if not xml:
             closers = OPEN_IMPLIES_CLOSE.get(tag_lc)
@@ -612,9 +549,7 @@ def parse(source: str, *, empty_end_tag: bool = True, eol="\n", tab_size: int = 
                 errors += 1
                 nd[N_BAD_TERM] = ""
                 if w:
-                    ln, col = lc(n - len(w)) if lc else _NO_POS
-                    add_leaf(D.TEXT, w, ln, col, poss_ent=True,
-                                           src_start=n - len(w), src_end=n)
+                    add_leaf(D.TEXT, w, True, True, n - len(w), n)
                 tag_end_kind = "eof"
                 break
             c = t[i]
@@ -656,9 +591,7 @@ def parse(source: str, *, empty_end_tag: bool = True, eol="\n", tab_size: int = 
                     add_attribute(name, "", w, "", "")
                     nd[N_BAD_TERM] = ""
                     if w2:
-                        ln, col = lc(n - len(w2)) if lc else _NO_POS
-                        add_leaf(D.TEXT, w2, ln, col, poss_ent=True,
-                                               src_start=n - len(w2), src_end=n)
+                        add_leaf(D.TEXT, w2, True, True, n - len(w2), n)
                     tag_end_kind = "eof"
                     break
                 if t[i] != "=":
@@ -679,9 +612,7 @@ def parse(source: str, *, empty_end_tag: bool = True, eol="\n", tab_size: int = 
                     add_attribute(name, "", w, pre_eq + "=", "")
                     nd[N_BAD_TERM] = ""
                     if w3:
-                        ln, col = lc(n - len(w3)) if lc else _NO_POS
-                        add_leaf(D.TEXT, w3, ln, col, poss_ent=True,
-                                               src_start=n - len(w3), src_end=n)
+                        add_leaf(D.TEXT, w3, True, True, n - len(w3), n)
                     tag_end_kind = "eof"
                     break
                 c3 = t[i]
@@ -781,19 +712,16 @@ def parse(source: str, *, empty_end_tag: bool = True, eol="\n", tab_size: int = 
                 nd[N_CLOSURE] = D.UNCLOSED
                 content = t[i:n]
                 if content:
-                    ln, col = lc(i) if lc else _NO_POS
-                    add_leaf(D.TEXT, content, ln, col, True,
-                             tag_lc == "textarea", i, n)
+                    add_leaf(D.TEXT, content, True, tag_lc == "textarea", i,
+                             n)
                 i = n
                 # state OUTSIDE at EOF: no extra wrap-up error
                 break
             content = t[i:match_start]
             if content:
-                ln, col = lc(i) if lc else _NO_POS
-                add_leaf(D.TEXT, content, ln, col, True,
-                         tag_lc == "textarea", i, match_start)
-            e_ln, e_col = lc(match_start) if lc else _NO_POS
-            if not pop(tag_lc, t[match_start:gt + 1], e_ln, e_col, gt + 1):
+                add_leaf(D.TEXT, content, True, tag_lc == "textarea", i,
+                         match_start)
+            if not pop(tag_lc, t[match_start:gt + 1], match_start, gt + 1):
                 errors += 1
             i = gt + 1
         # else: plain OUTSIDE_MARKUP continues
@@ -805,8 +733,5 @@ def parse(source: str, *, empty_end_tag: bool = True, eol="\n", tab_size: int = 
     result.charset = charset
     result.xml_mode = xml
     result.unclosed_tags, result.implicitly_closed_tags = b.count_unclosed_flat()
-    # positions=False: count EOLs with C-level str.count (== the number of
-    # \r\n|\r|\n matches: every \n or \r counts once, \r\n pairs de-duped)
-    result.lines = (len(pos.starts) if positions
-                    else 1 + t.count("\n") + t.count("\r") - t.count("\r\n"))
+    result.lines = 1 + count_eols(t)
     return result

@@ -195,6 +195,26 @@ def run_extraction(spark: SparkSession, pages: DataFrame, output_path: str,
     return ExtractionJob(spark, output_path, **kwargs).run(pages)
 
 
+def _min_id_dedup(docs: DataFrame, id_col: str, text_col: str,
+                  hash_col: str) -> DataFrame:
+    """The min-id copy of each byte-identical text, its sha256 in
+    ``hash_col`` (the dedup stage of ``curate_corpus``)."""
+    hashed = docs.withColumn(hash_col, F.sha2(F.col(text_col), 256))
+    winners = hashed.groupBy(hash_col).agg(F.min(id_col).alias("_win"))
+    return (hashed.join(winners, hash_col)
+            .filter(F.col(id_col) == F.col("_win")).drop("_win"))
+
+
+def _lm_gate(docs: DataFrame, lm, ppl_cutoff: float, id_col: str,
+             text_col: str) -> DataFrame:
+    """``docs`` with a non-NULL ``ppl`` <= ``ppl_cutoff`` (the LM gate)."""
+    from .lm import with_perplexity_ngram
+
+    ppl = with_perplexity_ngram(docs, lm, id_col, text_col)
+    return (docs.join(ppl, id_col)
+            .filter(F.col("ppl").isNotNull() & (F.col("ppl") <= ppl_cutoff)))
+
+
 def curate_corpus(docs: DataFrame, lm=None, *,
                   ppl_cutoff: float = 100.0,
                   quotas: dict | None = None,
@@ -221,20 +241,10 @@ def curate_corpus(docs: DataFrame, lm=None, *,
     no new shuffle beyond each stage's own.
     """
     from .corpus import stratified_sample
-    from .lm import with_perplexity_ngram
 
-    h = F.sha2(F.col(text_col), 256)
-    hashed = docs.withColumn("_th", h)
-    winners = (hashed.groupBy("_th")
-               .agg(F.min(id_col).alias("_win")))
-    survivors = (hashed.join(winners, "_th")
-                 .filter(F.col(id_col) == F.col("_win"))
-                 .drop("_th", "_win"))
+    survivors = _min_id_dedup(docs, id_col, text_col, "_th").drop("_th")
     if lm is not None:
-        ppl = with_perplexity_ngram(survivors, lm, id_col, text_col)
-        survivors = (survivors.join(ppl, id_col)
-                     .filter(F.col("ppl").isNotNull()
-                             & (F.col("ppl") <= ppl_cutoff)))
+        survivors = _lm_gate(survivors, lm, ppl_cutoff, id_col, text_col)
     if quotas:
         survivors = stratified_sample(survivors, quotas, strata_col,
                                       id_col=id_col)
@@ -285,7 +295,6 @@ def incremental_curate(current: DataFrame, previous: DataFrame,
 
     Returns ``(id, strata[, ppl], url, text_hash)`` — feed it back as the
     next increment's ``previous_out``."""
-    from .lm import with_perplexity_ngram
     from .corpus import incremental_new_pages
 
     h = F.sha2(F.col(text_col), 256)
@@ -314,17 +323,11 @@ def incremental_curate(current: DataFrame, previous: DataFrame,
     orphans = (current.join(orphan_ids, id_col, "left_semi")
                .select(*slim, text_col))
 
-    cand = (delta.select(*slim, text_col).unionByName(orphans)
-            .withColumn("text_hash", h))
-    winners = cand.groupBy("text_hash").agg(F.min(id_col).alias("_win"))
-    cand = (cand.join(winners, "text_hash")
-            .filter(F.col(id_col) == F.col("_win")).drop("_win")
+    cand = (_min_id_dedup(delta.select(*slim, text_col).unionByName(orphans),
+                          id_col, text_col, "text_hash")
             .join(kept.select("text_hash"), "text_hash", "left_anti"))
     if lm is not None:
-        ppl = with_perplexity_ngram(cand, lm, id_col, text_col)
-        cand = (cand.join(ppl, id_col)
-                .filter(F.col("ppl").isNotNull()
-                        & (F.col("ppl") <= ppl_cutoff)))
+        cand = _lm_gate(cand, lm, ppl_cutoff, id_col, text_col)
     cols = ([id_col, strata_col]
             + (["ppl"] if lm is not None else [])
             + [url_col, "text_hash"])

@@ -24,7 +24,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.streaming import StreamingQueryListener
 
 from .io_tables import with_layout_columns
-from .pipeline import extract_df
+from .pipeline import _lm_gate, extract_df
 from .schema import PAGES_SCHEMA
 
 __all__ = ["read_pages_stream", "streaming_extract", "start_streaming_job",
@@ -255,8 +255,6 @@ def streaming_curate(spark: SparkSession, input_path: str, output_path: str,
     with :func:`curation_metrics`.
 
     Returns the StreamingQuery handle."""
-    from .lm import with_perplexity_ngram
-
     stream = _parquet_stream(spark, DOCS_STREAM_SCHEMA, input_path,
                              max_files_per_trigger)
     deduped = (stream
@@ -270,10 +268,7 @@ def streaming_curate(spark: SparkSession, input_path: str, output_path: str,
         obs_in, obs_out = Observation(), Observation()
         out = batch_df.observe(obs_in, F.count(F.lit(1)).alias("n"))
         if lm is not None:
-            ppl = with_perplexity_ngram(out, lm, "doc_id", "text")
-            out = (out.join(ppl, "doc_id")
-                   .filter(F.col("ppl").isNotNull()
-                           & (F.col("ppl") <= ppl_cutoff)))
+            out = _lm_gate(out, lm, ppl_cutoff, "doc_id", "text")
         cols = ["doc_id", "lang"] + (["ppl"] if lm is not None else [])
         out = out.select(*cols).observe(obs_out,
                                         F.count(F.lit(1)).alias("n"))

@@ -20,7 +20,10 @@ import pytest
 
 import fortissimo_spark.extract as E
 import fortissimo_spark.parser as P
-from fortissimo_spark.dom import CDATA, TEXT
+from fortissimo_spark.dom import (
+    CDATA, ELEMENT, N_CHILDREN, N_CONTENT, N_KIND, N_PARENT, N_SRC_START,
+    N_TAG_LC, TEXT,
+)
 from fortissimo_spark.kernel import decode_parse
 from fortissimo_spark.pages import page_for_doc
 from fortissimo_spark.parser import parse
@@ -182,25 +185,25 @@ def _edited(doc: str, rng: random.Random):
             b.remove_child_at(node, rng.randrange(3))
         elif r < 0.75:
             parent = rng.choice([i for i, nd in enumerate(b.nodes)
-                                 if nd[0] == 0])
+                                 if nd[N_KIND] == ELEMENT])
             if rng.random() < 0.5:
                 child = b.create_closed_element(
                     rng.choice(_BLOCKS + _INLINE + _DROPPED))
                 leaf_parent = child
-                b.nodes[parent][4].insert(0, child)
-                b.nodes[child][3] = parent
+                b.nodes[parent][N_CHILDREN].insert(0, child)
+                b.nodes[child][N_PARENT] = parent
             else:
                 leaf_parent = parent
             kind = rng.choice((TEXT, TEXT, CDATA))
             content = "".join(rng.choice(_TEXT) for _ in range(3))
-            leaf = b.new_leaf(kind, content, 0, 0, poss_ent=rng.random() < 0.7,
+            leaf = b.new_leaf(kind, content, poss_ent=rng.random() < 0.7,
                               src_start=rng.choice((-1, 7)),
                               src_end=rng.choice((-1, 9)))
-            b.nodes[leaf][3] = leaf_parent
-            children = b.nodes[leaf_parent][4]
+            b.nodes[leaf][N_PARENT] = leaf_parent
+            children = b.nodes[leaf_parent][N_CHILDREN]
             children.insert(rng.randrange(len(children) + 1), leaf)
-        elif b.nodes[node][0] == 0:
-            b.nodes[node][2] = rng.choice(_BLOCKS + _INLINE + _DROPPED)
+        elif b.nodes[node][N_KIND] == ELEMENT:
+            b.nodes[node][N_TAG_LC] = rng.choice(_BLOCKS + _INLINE + _DROPPED)
     return b
 
 
@@ -256,24 +259,22 @@ def _native_density(nodes):
 def test_malformed_records_raise():
     _require_native()
 
-    def nodes(**edit):
+    def nodes(node=0, slot=N_KIND, value=0):
         b = parse("<div><p>x</p>tail</div>", positions=False).dom
-        for path, value in edit.items():
-            node, slot = map(int, path[1:].split("_"))
-            b.nodes[node][slot] = value
+        b.nodes[node][slot] = value
         return b.nodes
 
     assert _native_density(nodes())[:4] == ("x", [(8, 9)], 1, 2)
-    for bad, exc in [({"n1_4": [99]}, IndexError),
-                     ({"n1_4": [-1]}, IndexError),
-                     ({"n1_4": ["2"]}, IndexError),
-                     ({"n1_4": (2,)}, TypeError),
-                     ({"n1_2": None}, TypeError),
-                     ({"n3_6": None}, TypeError),
-                     ({"n3_22": "0"}, TypeError),
-                     ({"n2_0": "0"}, ValueError)]:
+    for bad, exc in [((1, N_CHILDREN, [99]), IndexError),
+                     ((1, N_CHILDREN, [-1]), IndexError),
+                     ((1, N_CHILDREN, ["2"]), IndexError),
+                     ((1, N_CHILDREN, (2,)), TypeError),
+                     ((1, N_TAG_LC, None), TypeError),
+                     ((3, N_CONTENT, None), TypeError),
+                     ((3, N_SRC_START, "0"), TypeError),
+                     ((2, N_KIND, "0"), ValueError)]:
         with pytest.raises(exc):
-            _native_density(nodes(**bad))
+            _native_density(nodes(*bad))
     with pytest.raises(IndexError):
         _native_density([])
     short = nodes()

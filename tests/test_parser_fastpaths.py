@@ -5,11 +5,12 @@ state machine, then the differential test: every document is parsed
 through the native core and again with it disabled (``_NATIVE_SCAN`` set
 to None, so the general machine reads every token), and the two parses
 must agree on every node field, the error count, the charset and the
-element counts.  Inputs: every parity fixture, every prefix of a few of
-them (EOF at every offset), 10^5 seeded generated tag soups and 2*10^4
-table soups.  Then the build: the core must load wherever a compiler and
-the Python headers exist, ship in the ``--py-files`` zip, and its absence
-must leave ``parse()`` and density ``extract()`` working.
+element counts, and with ``positions=True`` on every node's line, column,
+end line and end column.  Inputs: every parity fixture, every prefix of a
+few of them (EOF at every offset), 10^5 seeded generated tag soups and
+2*10^4 table soups.  Then the build: the core must load wherever a
+compiler and the Python headers exist, ship in the ``--py-files`` zip, and
+its absence must leave ``parse()`` and density ``extract()`` working.
 """
 import json
 import os
@@ -24,7 +25,9 @@ import pytest
 
 import fortissimo_spark.parser as P
 from fortissimo_spark.dom import (
-    EXPLICITLY_CLOSED, SELF_CLOSED, UNCLOSED, VOID_CLOSED,
+    ELEMENT, EXPLICITLY_CLOSED, N_ATTR_EQUALS, N_ATTR_NAMES, N_ATTR_QUOTES,
+    N_ATTR_SPACING, N_ATTR_VALUES, N_CLOSURE, N_END_TAG, N_INNER_WS, N_KIND,
+    N_TAG_LC, SELF_CLOSED, UNCLOSED, VOID_CLOSED,
 )
 from fortissimo_spark.extract import extract
 from fortissimo_spark.kernel import process_document
@@ -36,12 +39,14 @@ ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 def _attrs(b, node):
     nd = b.nodes[node]
-    return list(zip(nd[14], nd[15], nd[16], nd[17], nd[18]))
+    return list(zip(nd[N_ATTR_NAMES], nd[N_ATTR_VALUES], nd[N_ATTR_SPACING],
+                    nd[N_ATTR_EQUALS], nd[N_ATTR_QUOTES]))
 
 
 def _els(result):
     b = result.dom
-    return [i for i, nd in enumerate(b.nodes) if nd[0] == 0 and i != 0]
+    return [i for i, nd in enumerate(b.nodes)
+            if nd[N_KIND] == ELEMENT and i != 0]
 
 
 def test_literal_lt_pairwise_consumption():
@@ -52,14 +57,14 @@ def test_literal_lt_pairwise_consumption():
     assert r.to_string() == "<<p>>"
     # but '<<<p>' re-synchronizes: the third '<' starts a real tag
     r = parse("<<<p>")
-    assert [r.dom.nodes[e][2] for e in _els(r)] == ["p"]
+    assert [r.dom.nodes[e][N_TAG_LC] for e in _els(r)] == ["p"]
 
 
 def test_unquoted_value_trailing_slash_selfclose():
     r = parse("<a b=1/>")
     (el,) = _els(r)
     assert _attrs(r.dom, el) == [("b", "1", " ", "=", "")]
-    assert r.dom.nodes[el][5] == SELF_CLOSED
+    assert r.dom.nodes[el][N_CLOSURE] == SELF_CLOSED
     assert r.to_string() == "<a b=1/>"
 
 
@@ -67,7 +72,7 @@ def test_unterminated_quote_runs_to_eof():
     r = parse('<a b="unterminated')
     (el,) = _els(r)
     assert _attrs(r.dom, el) == [("b", "unterminated", " ", "=", '_"')]
-    assert r.errors == 1 and r.dom.nodes[el][5] == UNCLOSED
+    assert r.errors == 1 and r.dom.nodes[el][N_CLOSURE] == UNCLOSED
     assert r.to_string() == '<a b="unterminated'
 
 
@@ -111,8 +116,8 @@ def test_quote_adjacent_attributes_match_general_machine():
         g = parse(f"<a z=1 b={q}x{q}c={q}y{q}>")
         (el,) = _els(r)
         (gel,) = _els(g)
-        assert r.dom.nodes[el][14] == ["b", "c"]
-        assert r.dom.nodes[el][15] == ["x", "y"]
+        assert r.dom.nodes[el][N_ATTR_NAMES] == ["b", "c"]
+        assert r.dom.nodes[el][N_ATTR_VALUES] == ["x", "y"]
         assert _attrs(r.dom, el) == _attrs(g.dom, gel)[1:]
         assert r.errors == 0
         assert r.to_string() == tag
@@ -122,24 +127,24 @@ def test_equals_then_gt_is_valueless_with_inner_ws():
     r = parse("<a b= >")
     (el,) = _els(r)
     assert _attrs(r.dom, el) == [("b", "", " ", "=", "")]
-    assert r.dom.nodes[el][19] == " "  # inner whitespace
+    assert r.dom.nodes[el][N_INNER_WS] == " "  # inner whitespace
     assert r.to_string() == "<a b= >"
 
 
 def test_end_tag_with_ws_before_gt():
     r = parse("<x></x \t>")
     (el,) = _els(r)
-    assert r.dom.nodes[el][5] == EXPLICITLY_CLOSED
-    assert r.dom.nodes[el][11] == "</x \t>"
+    assert r.dom.nodes[el][N_CLOSURE] == EXPLICITLY_CLOSED
+    assert r.dom.nodes[el][N_END_TAG] == "</x \t>"
     assert r.errors == 0
 
 
 def test_void_and_raw_text_paths():
     r = parse("<br><script>if (a<b) x();</script>")
     els = _els(r)
-    tags = [r.dom.nodes[e][2] for e in els]
+    tags = [r.dom.nodes[e][N_TAG_LC] for e in els]
     assert tags == ["br", "script"]
-    assert r.dom.nodes[els[0]][5] == VOID_CLOSED
+    assert r.dom.nodes[els[0]][N_CLOSURE] == VOID_CLOSED
     assert r.to_string() == "<br><script>if (a<b) x();</script>"
 
 
@@ -233,10 +238,14 @@ def _prefix_docs():
     return [doc[:j] for doc in rich for j in range(len(doc) + 1)]
 
 
-def _snapshot(text: str, empty_end_tag: bool):
-    r = parse(text, positions=False, empty_end_tag=empty_end_tag)
-    return (r.dom.nodes, r.dom.open_stack, r.errors, r.charset,
-            r.unclosed_tags, r.implicitly_closed_tags, r.lines, r.xml_mode)
+def _snapshot(text: str, empty_end_tag: bool, positions: bool):
+    r = parse(text, positions=positions, empty_end_tag=empty_end_tag)
+    b = r.dom
+    snap = (b.nodes, b.open_stack, r.errors, r.charset, r.unclosed_tags,
+            r.implicitly_closed_tags, r.lines, r.xml_mode)
+    if positions:
+        snap += (list(zip(b.line, b.col, b.end_line, b.end_col)),)
+    return snap
 
 
 def _require_native():
@@ -247,7 +256,7 @@ def _require_native():
     assert P.NATIVE
 
 
-def _divergences(monkeypatch, docs, empty_end_tag):
+def _divergences(monkeypatch, docs, empty_end_tag, positions):
     """Parse each doc through the native core, then with it disabled.
     Returns (divergent docs, the core's per-branch token counts: tokens it
     owned and tokens it handed to the general machine)."""
@@ -258,35 +267,45 @@ def _divergences(monkeypatch, docs, empty_end_tag):
         chunk = [d for _, d in zip(range(5000), docs)]
         if not chunk:
             return bad, P._native.stats()
-        want = [_snapshot(d, empty_end_tag) for d in chunk]
+        want = [_snapshot(d, empty_end_tag, positions) for d in chunk]
         counts = P._native.stats()
         with monkeypatch.context() as m:
             m.setattr(P, "_NATIVE_SCAN", None)
             for d, w in zip(chunk, want):
-                if _snapshot(d, empty_end_tag) != w:
+                if _snapshot(d, empty_end_tag, positions) != w:
                     bad.append(d)
         # the reference pass really ran without the core
         assert P._native.stats() == counts
 
 
-@pytest.mark.parametrize("empty_end_tag", [False, True])
+def _arms(*cases):
+    """Each case without and then with positions; a positions arm's id
+    ends in '-positions'."""
+    return [pytest.param(*case, positions,
+                         id="-".join(map(str, case))
+                         + ("-positions" if positions else ""))
+            for positions in (False, True) for case in cases]
+
+
+@pytest.mark.parametrize("empty_end_tag,positions", _arms((False,), (True,)))
 def test_fast_paths_match_general_machine_on_fixtures(monkeypatch,
-                                                      empty_end_tag):
+                                                      empty_end_tag,
+                                                      positions):
     _require_native()
     bad, counts = _divergences(monkeypatch, FIXTURES + _prefix_docs(),
-                               empty_end_tag)
+                               empty_end_tag, positions)
     assert not bad, f"{len(bad)} divergences, first: {bad[:5]!r}"
     # every branch of the core, owned and handed off, is exercised
     assert all(counts.values()), counts
 
 
-@pytest.mark.parametrize("tables,ndocs", [(False, GENERATED_DOCS),
-                                          (True, TABLE_SOUPS)])
+@pytest.mark.parametrize("tables,ndocs,positions",
+                         _arms((False, GENERATED_DOCS), (True, TABLE_SOUPS)))
 def test_fast_paths_match_general_machine_on_generated(monkeypatch, tables,
-                                                       ndocs):
+                                                       ndocs, positions):
     _require_native()
     docs = table_soups(ndocs) if tables else generated_docs(ndocs)
-    bad, counts = _divergences(monkeypatch, docs, True)
+    bad, counts = _divergences(monkeypatch, docs, True, positions)
     assert not bad, f"{len(bad)} divergences, first: {bad[:5]!r}"
     if tables:
         # unwinds and table repair go through DocBuilder.pop
@@ -294,6 +313,26 @@ def test_fast_paths_match_general_machine_on_generated(monkeypatch, tables,
     else:
         # every branch counts at least one token per hundred documents
         assert min(counts.values()) >= ndocs // 100, counts
+
+
+def test_both_position_modes_build_equal_records():
+    # a record holds offsets only: positions decide what line and col
+    # read, never what is stored
+    for doc in FIXTURES + list(generated_docs(2000)) + list(table_soups(500)):
+        with_pos, without = parse(doc), parse(doc, positions=False)
+        assert with_pos.dom.nodes == without.dom.nodes, doc
+        assert with_pos.lines == without.lines, doc
+        assert not any(without.dom.line) and not any(without.dom.end_col)
+
+
+def test_positions_parse_goes_through_the_native_core():
+    _require_native()
+    P._native.reset_stats()
+    b = parse("<p class=x>one\n\t<b>two</b></p><!-- c -->").dom
+    counts = P._native.stats()
+    assert counts["start"] == 2 and counts["end_top"] == 2, counts
+    assert counts["text"] == 2 and counts["comment"] == 1, counts
+    assert (b.line[3], b.col[3], b.end_line[3], b.end_col[3]) == (2, 9, 2, 15)
 
 
 # --- the build --------------------------------------------------------------

@@ -8,9 +8,10 @@ entries on the stack; the first test checks both after every ``pop`` call,
 through the native core and through the general machine.  The second pins
 the two page shapes that took quadratic time while the parser still made
 that pass and the never-true ``<?xml`` check, the nested-list and
-implied-``</p>`` shapes, and two long lines parsed with positions, whose
-line/col lookup rescanned the line from its start on every call: 4x the
-input must cost at most 6x the time.
+implied-``</p>`` shapes, and two long lines parsed with positions and
+every node's line, column, end line and end column read (the lookup once
+rescanned the line from its start on every call): 4x the input must cost
+at most 6x the time, through the native core and the general machine.
 """
 import gc
 import math
@@ -60,7 +61,8 @@ def test_open_stack_invariant_after_every_pop(monkeypatch, machine):
     assert calls[0] >= 5_000, calls
 
 
-# Each shape at (n, 4n), parsed with or without positions.  The small case
+# Each shape at (n, 4n), parsed with or without positions (and then every
+# position read).  The small case
 # takes >= 20 ms on a 4-vCPU host; while pop re-parented the whole stack and
 # every <?xml PI serialized the document, those two shapes grew about 18x
 # per 4x.  While line_col sliced the line from its start on every call, the
@@ -76,7 +78,7 @@ _SHAPES = {
     "li_div": (lambda n: "<ul>" + "<li><div>x" * n, 4_000, False),
     # every <div> implicitly closes the open <p> (ROADMAP §2)
     "div_p": (lambda n: "<div><p>x" * n, 6_000, False),
-    # one line of elements, line/col computed for every node
+    # one line of elements, every node's positions read
     "line_positions": (lambda n: "<p>x</p>" * n, 20_000, True),
     # the same with tabs, whose column depends on everything before them
     "tab_line_positions": (lambda n: "<p>\tx\t</p>" * n, 5_000, True),
@@ -96,14 +98,18 @@ def _over_budget(signum, frame):
 
 def _parse_seconds(doc, positions):
     # timed with the cyclic GC paused, as the extract kernel parses: a
-    # collection landing in one run and not the other is noise here
+    # collection landing in one run and not the other is noise here; with
+    # positions, reading every node's positions is timed too
     old = signal.signal(signal.SIGALRM, _over_budget)
     gc.collect()
     gc.disable()
     try:
         signal.setitimer(signal.ITIMER_REAL, _BUDGET_S)
         t0 = time.perf_counter()
-        parse(doc, positions=positions)
+        b = parse(doc, positions=positions).dom
+        if positions:
+            for _ in zip(b.line, b.col, b.end_line, b.end_col):
+                pass
         return time.perf_counter() - t0
     except _OverBudget:
         return math.inf
@@ -113,11 +119,9 @@ def _parse_seconds(doc, positions):
         gc.enable()
 
 
-# with positions the parser never enters the native core
 @pytest.mark.parametrize("shape,machine", [
     (shape, machine) for shape in sorted(_SHAPES)
-    for machine in (("general",) if _SHAPES[shape][2]
-                    else ("native", "general"))])
+    for machine in ("native", "general")])
 def test_tree_building_scales_linearly(monkeypatch, shape, machine):
     """4x the input costs at most 6x the time (min of 3 runs each).  A
     shared host can stall one side of a pair, so a failing pair is

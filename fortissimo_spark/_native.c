@@ -23,9 +23,19 @@
  * The Python general machine is the reference; tests/test_parser_fastpaths.py
  * checks that a parse through this core equals it, field for field.
  *
- * density() is extract(strip="density") over the finished node records
- * (see the section at the end).  Python's extract() loop is its reference;
- * tests/test_extract_native.py checks the two agree, field for field.
+ * What a record holds is kept lean, as in the general machine: an element
+ * without attributes holds the one empty tuple in its five N_ATTR_* slots
+ * (DocBuilder's attribute mutators make them lists on the first write),
+ * and tag names, end-tag texts and attribute names come from a small
+ * per-process intern cache (interned_span), so a repeated name costs no new
+ * string.
+ *
+ * density() is extract(strip="density") over the finished node records,
+ * and census() counts the unclosed and implicitly closed elements at the
+ * end of a parse (see the sections at the end).  Python's extract() loop
+ * and DocBuilder.count_unclosed_flat are their references;
+ * tests/test_extract_native.py and tests/test_parser_fastpaths.py check
+ * that each pair agrees.
  */
 #define PY_SSIZE_T_CLEAN
 #include <Python.h>
@@ -59,6 +69,7 @@ static unsigned long long counts[ST_COUNT];
 
 static PyObject *OPEN_IMPLIES_CLOSE, *VOID_ELEMENTS, *RAW_TEXT_TAGS;
 static PyObject *INT[5], *INT_M1, *S_EMPTY, *S_DQ, *S_SQ, *S_EQ, *S_LT_SLASH;
+static PyObject *T_EMPTY;  /* () */
 static PyObject *S_EXAMINE_TABLE, *S_IN_MATH_OR_SVG, *S_LOWER;
 static PyObject *S_BLOCK_SEP;
 
@@ -153,24 +164,21 @@ static PyObject *span(const Scan *s, Py_ssize_t a, Py_ssize_t b)
     return PyUnicode_Substring(s->t, a, b);
 }
 
-/* t[a:b].lower(); the ASCII case without a Python call */
-static PyObject *lower_span(const Scan *s, Py_ssize_t a, Py_ssize_t b)
+/* raw.lower() for raw == t[a:b]; the ASCII case without a Python call */
+static PyObject *lower_span(const Scan *s, Py_ssize_t a, Py_ssize_t b,
+                            PyObject *raw)
 {
     int upper = 0;
     for (Py_ssize_t p = a; p < b; p++) {
         Py_UCS4 c = CH(s, p);
-        if (c >= 128) {
-            PyObject *raw = PyUnicode_Substring(s->t, a, b);
-            if (raw == NULL)
-                return NULL;
-            PyObject *lc = PyObject_CallMethodNoArgs(raw, S_LOWER);
-            Py_DECREF(raw);
-            return lc;
-        }
+        if (c >= 128)
+            return PyObject_CallMethodNoArgs(raw, S_LOWER);
         upper |= c >= 'A' && c <= 'Z';
     }
-    if (!upper)
-        return span(s, a, b);
+    if (!upper) {
+        Py_INCREF(raw);
+        return raw;
+    }
     PyObject *lc = PyUnicode_New(b - a, 127);
     if (lc == NULL)
         return NULL;
@@ -180,6 +188,66 @@ static PyObject *lower_span(const Scan *s, Py_ssize_t a, Py_ssize_t b)
         d[p - a] = (Py_UCS1)(c >= 'A' && c <= 'Z' ? c + 32 : c);
     }
     return lc;
+}
+
+/* Interned spans: a per-process, direct-mapped cache of the short spans
+ * the scan turns into tag names, end-tag texts and attribute names.  A
+ * page repeats a few dozen names, so most spans are hits: the string and
+ * its lowercase come from the cache, with their hashes already computed.
+ * Only spans of 1-byte-kind text up to INTERN_MAX_LEN chars are cached, by
+ * their characters; a miss replaces the entry in its slot.  The strings
+ * are immutable and equal to fresh ones, so a parse builds the same
+ * records with or without the cache. */
+#define INTERN_SLOTS 1024  /* a power of two */
+#define INTERN_MAX_LEN 32
+
+typedef struct {
+    PyObject *raw, *lower;  /* lower: NULL until first asked for */
+} Interned;
+static Interned interned[INTERN_SLOTS];
+
+/* t[a:b] and, unless lower_out is NULL, *lower_out = t[a:b].lower() (new
+ * references); NULL on error */
+static PyObject *interned_span(const Scan *s, Py_ssize_t a, Py_ssize_t b,
+                               PyObject **lower_out)
+{
+    Py_ssize_t len = b - a;
+    PyObject *raw, *lower = NULL;
+    if (s->kind != PyUnicode_1BYTE_KIND || len > INTERN_MAX_LEN) {
+        raw = span(s, a, b);
+        if (raw == NULL)
+            return NULL;
+        if (lower_out != NULL && (lower = lower_span(s, a, b, raw)) == NULL) {
+            Py_DECREF(raw);
+            return NULL;
+        }
+    } else {
+        const Py_UCS1 *p = (const Py_UCS1 *)s->data + a;
+        uint32_t h = 2166136261u;  /* FNV-1a */
+        for (Py_ssize_t j = 0; j < len; j++)
+            h = (h ^ p[j]) * 16777619u;
+        Interned *e = &interned[h & (INTERN_SLOTS - 1)];
+        if (e->raw == NULL || PyUnicode_GET_LENGTH(e->raw) != len
+                || memcmp(PyUnicode_1BYTE_DATA(e->raw), p, len) != 0) {
+            raw = span(s, a, b);
+            if (raw == NULL)
+                return NULL;
+            Py_XSETREF(e->raw, raw);
+            Py_CLEAR(e->lower);
+        }
+        if (lower_out != NULL) {
+            if (e->lower == NULL
+                    && (e->lower = lower_span(s, a, b, e->raw)) == NULL)
+                return NULL;
+            lower = e->lower;
+            Py_INCREF(lower);
+        }
+        raw = e->raw;
+        Py_INCREF(raw);
+    }
+    if (lower_out != NULL)
+        *lower_out = lower;
+    return raw;
 }
 
 /* tag_lc equals the ASCII name */
@@ -314,13 +382,14 @@ static Py_ssize_t end_tag(Scan *s, Py_ssize_t k)
     if (i2 >= n || CH(s, i2) != '>')
         return 0;
 
-    PyObject *tag_lc = lower_span(s, iw, tag_end);
-    if (tag_lc == NULL)
+    PyObject *tag_lc, *tag = interned_span(s, iw, tag_end, &tag_lc);
+    if (tag == NULL)
         return -1;
+    Py_DECREF(tag);
     /* endTagText excludes whitespace after '</' */
     PyObject *text;
     if (iw == k + 2) {
-        text = span(s, k, i2 + 1);
+        text = interned_span(s, k, i2 + 1, NULL);
     } else {
         PyObject *rest = span(s, iw, i2 + 1);
         text = rest ? PyUnicode_Concat(S_LT_SLASH, rest) : NULL;
@@ -396,9 +465,15 @@ static int push_attr(Attrs *as, Py_ssize_t w0, Py_ssize_t w1, Py_ssize_t n0,
     return 0;
 }
 
-/* the five attribute lists of an element record */
+/* the five attribute lists of an element record; an element without
+ * attributes shares the empty tuple in all five */
 static int fill_attrs(const Scan *s, PyObject *nd, const Attrs *as)
 {
+    if (as->len == 0) {
+        for (int f = 0; f < 5; f++)
+            set_slot(nd, N_ATTR_NAMES + f, T_EMPTY);
+        return 0;
+    }
     for (int f = 0; f < 5; f++) {
         PyObject *lst = PyList_New(as->len);
         if (lst == NULL)
@@ -408,7 +483,7 @@ static int fill_attrs(const Scan *s, PyObject *nd, const Attrs *as)
             const Attr *x = &as->a[j];
             PyObject *v;
             switch (f) {
-            case 0: v = span(s, x->n0, x->n1); break;
+            case 0: v = interned_span(s, x->n0, x->n1, NULL); break;
             case 1: v = span(s, x->v0, x->v1); break;
             case 2: v = span(s, x->w0, x->w1); break;
             case 3: v = span(s, x->e0, x->e1); break;
@@ -482,7 +557,7 @@ static Py_ssize_t raw_text(Scan *s, Py_ssize_t i, PyObject *tag_lc)
             && add_leaf(s, TEXT, i, match_start, 1, poss_ent, i,
                         match_start) < 0)
         return -1;
-    PyObject *text = span(s, match_start, gt + 1);
+    PyObject *text = interned_span(s, match_start, gt + 1, NULL);
     if (text == NULL)
         return -1;
     int r = close_top(s, tag_lc, text, match_start, gt + 1);
@@ -597,19 +672,19 @@ static Py_ssize_t start_tag(Scan *s, Py_ssize_t k)
             break;
         i++;
     }
-    Py_ssize_t tag_end = i;
-    PyObject *tag_lc = lower_span(s, k + 1, tag_end);
-    if (tag_lc == NULL)
+    PyObject *tag_lc, *tag = interned_span(s, k + 1, i, &tag_lc);
+    if (tag == NULL)
         return -1;
     Py_ssize_t r = 0;
-    PyObject *tag = NULL, *nd = NULL, *idx = NULL;
+    PyObject *nd = NULL, *idx = NULL;
     Attrs as;
     as.a = as.local;
     as.len = 0;
     as.cap = 16;
 
-    /* read the attributes into spans; nothing is built before the tag is
-     * known to be owned */
+    /* read the attributes into spans; nothing but the tag name (most
+     * often from the intern cache) is built before the tag is known to be
+     * owned */
     int end_kind;
     Py_ssize_t w0, w1, pend0 = -1, pend1 = -1;
     for (;;) {
@@ -704,9 +779,6 @@ static Py_ssize_t start_tag(Scan *s, Py_ssize_t k)
     }
 
     /* build the element */
-    tag = span(s, k + 1, tag_end);
-    if (tag == NULL)
-        goto error;
     PyObject *closers = PyDict_GetItemWithError(OPEN_IMPLIES_CLOSE, tag_lc);
     if (closers == NULL && PyErr_Occurred())
         goto error;
@@ -793,7 +865,7 @@ error:
 done:
     if (as.a != as.local)
         PyMem_Free(as.a);
-    Py_XDECREF(tag);
+    Py_DECREF(tag);
     Py_XDECREF(nd);
     Py_XDECREF(idx);
     Py_DECREF(tag_lc);
@@ -1377,6 +1449,43 @@ done:
     return result;
 }
 
+/* --- the parse-end census ---------------------------------------------------
+ *
+ * census() is DocBuilder.count_unclosed_flat in one loop over the records:
+ * (unclosed, implicitly closed) non-synthetic elements.  The Python method
+ * stays the reference (tests/test_parser_fastpaths.py compares the two).
+ */
+
+static PyObject *census(PyObject *self, PyObject *nodes)
+{
+    if (!PyList_Check(nodes)) {
+        PyErr_SetString(PyExc_TypeError, "census(list)");
+        return NULL;
+    }
+    Py_ssize_t unclosed = 0, implicitly = 0;
+    for (Py_ssize_t i = 0; i < PyList_GET_SIZE(nodes); i++) {
+        PyObject *nd = record(nodes, i);
+        if (nd == NULL)
+            return NULL;
+        long kind = kind_of(nd);
+        if (kind == -1 && PyErr_Occurred())
+            return NULL;
+        if (kind != ELEMENT)
+            continue;
+        int synthetic = PyObject_IsTrue(PyList_GET_ITEM(nd, N_SYNTHETIC));
+        if (synthetic < 0)
+            return NULL;
+        if (synthetic)
+            continue;
+        long closure = PyLong_AsLong(PyList_GET_ITEM(nd, N_CLOSURE));
+        if (closure == -1 && PyErr_Occurred())
+            return NULL;
+        unclosed += closure == UNCLOSED;
+        implicitly += closure == IMPLICITLY_CLOSED;
+    }
+    return Py_BuildValue("nn", unclosed, implicitly);
+}
+
 static PyObject *setup(PyObject *self, PyObject *args)
 {
     PyObject *oic, *voids, *raw;
@@ -1423,6 +1532,8 @@ static PyMethodDef methods[] = {
      "density(nodes, DROP_TAGS, INLINE_TAGS, BOOST_TAGS, min_block_chars,"
      " max_link_density, unescape_entities) -> (text, spans, kept_blocks,"
      " total_blocks, node_count, text_node_count)"},
+    {"census", census, METH_O,
+     "census(nodes) -> (unclosed, implicitly closed) non-synthetic elements"},
     {"setup", setup, METH_VARARGS,
      "setup(OPEN_IMPLIES_CLOSE, VOID_ELEMENTS, RAW_TEXT_TAGS)"},
     {"stats", stats, METH_NOARGS, "per-branch token counts since reset"},
@@ -1432,7 +1543,9 @@ static PyMethodDef methods[] = {
 
 static struct PyModuleDef module = {
     PyModuleDef_HEAD_INIT, "_native",
-    "Native parse core and density extraction.", -1, methods
+    "Native parse core, density extraction and the parse-end census.", -1,
+    methods,
+    NULL, NULL, NULL, NULL
 };
 
 static PyObject *intern(const char *s)
@@ -1454,7 +1567,14 @@ PyMODINIT_FUNC PyInit__native(void)
     S_IN_MATH_OR_SVG = intern("in_math_or_svg");
     S_LOWER = intern("lower");
     S_BLOCK_SEP = intern("\n\n");
+    T_EMPTY = PyTuple_New(0);
     if (PyErr_Occurred())
         return NULL;
-    return PyModule_Create(&module);
+    PyObject *m = PyModule_Create(&module);
+    if (m == NULL || PyModule_AddIntMacro(m, INTERN_SLOTS) < 0
+            || PyModule_AddIntMacro(m, INTERN_MAX_LEN) < 0) {
+        Py_XDECREF(m);
+        return NULL;
+    }
+    return m;
 }

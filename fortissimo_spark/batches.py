@@ -27,9 +27,11 @@ yielded (or an exception propagates).  A parsed page's DOM is a flat list
 of per-node lists whose parent/child links are integer indices, and the
 media, PDF and WARC decoders build flat lists and bytes, so a row holds
 no reference cycles and refcounting frees it as soon as the row is done
-(pinned in ``tests/test_kernel_gc.py``).  A DOM's 7 tracked containers
-per node would otherwise set off ~3,000 generation-0 and 24 full
-collections per 600 malformed ~12 KB pages, all finding nothing.  The
+(pinned in ``tests/test_kernel_gc.py``).  A DOM's tracked containers
+(every record, and an element's children list and any attribute lists;
+about 1.7 per node on malformed ~12 KB pages) would otherwise set off
+~1,000 generation-0 and 7 full collections per 600 such pages, all
+finding nothing.  The
 collector is paused for at most one Arrow batch, so a cycle made
 elsewhere waits at most one batch longer to be collected.
 

@@ -89,6 +89,12 @@ N_SRC_END = 19
 # is read at; -1 for none
 N_END_AT = 20
 
+# an element's five parallel attribute slots; an element without
+# attributes holds the one empty tuple in each, and the mutators below make
+# them lists on the first write (``_attr_lists``)
+_ATTR_SLOTS = (N_ATTR_NAMES, N_ATTR_VALUES, N_ATTR_SPACING, N_ATTR_EQUALS,
+               N_ATTR_QUOTES)
+
 # --- element sets (elements.ts) ----------------------------------------------
 # 'u]' typo kept on purpose: 'u' is NOT treated as a formatting element.
 FORMATTING_ELEMENTS = frozenset([
@@ -186,6 +192,15 @@ class _Pos:
             c = cols[-1] + p - prev - 1 if prev >= start else p - start + 1
             cols.append(c + self.tab_size - (c - 1) % self.tab_size)
             prev = p
+
+
+def _attr_lists(nd: list) -> list:
+    """``nd`` with its attribute slots made lists, ready to be written: an
+    element without attributes shares the empty tuple until then."""
+    if nd[N_ATTR_NAMES].__class__ is tuple:
+        for f in _ATTR_SLOTS:
+            nd[f] = list(nd[f])
+    return nd
 
 
 def oq(quote: str) -> str:
@@ -311,7 +326,7 @@ class DocBuilder:
         idx = len(nodes)
         nodes.append([
             ELEMENT, tag, tag.lower(), -1, [], UNCLOSED, None, True, False,
-            "", [], [], [], [], [], "", None, synthetic, src_start, -1, -1,
+            "", (), (), (), (), (), "", None, synthetic, src_start, -1, -1,
         ])
         return idx
 
@@ -359,7 +374,7 @@ class DocBuilder:
 
     def add_attribute(self, name: str, value: str = "", leading_space: str = "",
                       equals: str = "=", quote: str = '"') -> None:
-        nd = self.nodes[self.open_stack[-1]]
+        nd = _attr_lists(self.nodes[self.open_stack[-1]])
         nd[N_ATTR_NAMES].append(name)
         nd[N_ATTR_VALUES].append(value)
         nd[N_ATTR_SPACING].append(leading_space)
@@ -435,7 +450,8 @@ class DocBuilder:
                     stack.pop()
 
         if not popped:
-            self.add_leaf(UNMATCHED_CLOSE, end_tag_text, end_at=at)
+            self.add_leaf(UNMATCHED_CLOSE, end_tag_text, src_start=at,
+                          src_end=end_pos, end_at=at)
         # no re-parent pass after the pop (dom.ts:733-738): see the module
         # docstring for the stack invariant that makes it a no-op
         return popped
@@ -760,7 +776,7 @@ class DocBuilder:
         else:
             equals = equals if equals is not None else "="
             quote = quote if quote is not None else '"'
-        nd = self.nodes[node]
+        nd = _attr_lists(self.nodes[node])
         nd[N_ATTR_NAMES].append(name)
         nd[N_ATTR_VALUES].append(value)
         nd[N_ATTR_SPACING].append(leading_space)
@@ -777,16 +793,14 @@ class DocBuilder:
                 return False
         if not (0 <= name_or_index < len(names)):
             return False
-        for f in (N_ATTR_NAMES, N_ATTR_VALUES, N_ATTR_EQUALS,
-                  N_ATTR_QUOTES, N_ATTR_SPACING):
+        for f in _ATTR_SLOTS:
             del nd[f][name_or_index]
         return True
 
     def clear_attributes(self, node: int) -> None:
         nd = self.nodes[node]
-        for f in (N_ATTR_NAMES, N_ATTR_VALUES, N_ATTR_EQUALS,
-                  N_ATTR_QUOTES, N_ATTR_SPACING):
-            nd[f].clear()
+        for f in _ATTR_SLOTS:
+            nd[f] = ()
 
     def remove_child_at(self, node: int, index: int) -> None:
         """dom.ts:360-362: splice the index-th child out of ``node``."""

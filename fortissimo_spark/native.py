@@ -1,8 +1,9 @@
 """Build and load the native core (``_native.c``) on first import.
 
-The core holds two entry points: ``scan``, the parse core behind
-``parser.parse``, and ``density``, the walk behind
-``extract(strip="density")``.  Python keeps the reference for both.
+The core holds three entry points: ``scan``, the parse core behind
+``parser.parse``, ``census``, the element counts at the end of a parse,
+and ``density``, the walk behind ``extract(strip="density")``.  Python
+keeps the reference for each.
 
 The C source ships inside the package, so a ``--py-files`` zip carries it
 too: it is read through ``importlib.resources`` and compiled with the
@@ -30,7 +31,7 @@ import warnings
 from importlib.machinery import ExtensionFileLoader
 from importlib.util import module_from_spec, spec_from_loader
 
-__all__ = ["load"]
+__all__ = ["load", "compile_command"]
 
 
 def _cache_dir() -> str:
@@ -43,17 +44,23 @@ def _cache_dir() -> str:
     return os.path.join(home, ".cache", "fortissimo_spark")
 
 
-def _build(src: bytes, out: str) -> None:
+def compile_command(c_path: str, so_path: str, *flags: str) -> list:
+    """The command that builds ``c_path`` into the extension ``so_path``
+    with the interpreter's own compiler and include path, plus ``flags``."""
     cc = shlex.split(sysconfig.get_config_var("CC") or "cc")
     include = sysconfig.get_paths()["include"]
+    return cc + ["-O2", "-shared", "-fPIC", "-I", include, *flags, c_path,
+                 "-o", so_path]
+
+
+def _build(src: bytes, out: str) -> None:
     with tempfile.TemporaryDirectory(dir=os.path.dirname(out)) as tmp:
         c_path = os.path.join(tmp, "_native.c")
         so_path = os.path.join(tmp, os.path.basename(out))
         with open(c_path, "wb") as f:
             f.write(src)
-        subprocess.run(cc + ["-O2", "-shared", "-fPIC", "-I", include,
-                             c_path, "-o", so_path],
-                       check=True, capture_output=True)
+        subprocess.run(compile_command(c_path, so_path), check=True,
+                       capture_output=True)
         os.replace(so_path, out)
 
 

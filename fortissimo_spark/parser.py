@@ -38,18 +38,25 @@ read (``dom._Pos``).  The core reads every token it owns (text runs,
 attributes, void elements, implied closes and the raw-text scan), appends
 the same 21-slot node records to ``DocBuilder.nodes`` and returns the
 offset of the first token it does not own.  The general state machine
-below reads that one token and calls back in.  Tree repair is Python's
-alone: the core calls ``DocBuilder.pop`` for an end tag that is not on top
-of the stack and ``DocBuilder._examine_table`` when a table closes, and
-while no charset is known it hands each ``meta`` tag's attributes to the
-Python charset sniff.  Everything else (``<?``, CDATA, an xhtml doctype,
+below reads that one token and calls back in.  Both build the same lean
+records: an element without attributes holds the one empty tuple ``()``
+in its five ``N_ATTR_*`` slots (``DocBuilder``'s attribute mutators make
+them lists on the first write), and the core takes repeated tag and
+attribute names from a small intern cache.  At the end, ``census`` in the
+core counts the unclosed and implicitly closed elements
+(``DocBuilder.count_unclosed_flat`` is its reference).  Tree repair is
+Python's alone: the core calls ``DocBuilder.pop`` for an end tag that is
+not on top of the stack and ``DocBuilder._examine_table`` when a table
+closes, and while no charset is known it hands each ``meta`` tag's
+attributes to the Python charset sniff.  Everything else (``<?``, CDATA, an xhtml doctype,
 EOF inside a tag or an end tag) goes to the general machine.  Xml mode
 never enters the core.  The general machine is the reference: for any
 input the native parse must build exactly what it builds.  ``parse()``
-reads ``_NATIVE_SCAN`` from the module globals on every call, so
-``tests/test_parser_fastpaths.py`` sets it to None and checks that the
-parse does not change.  ``NATIVE`` says whether the core loaded (see
-``native.py``); without a compiler the general machine reads everything.
+reads ``_NATIVE_SCAN`` and ``_NATIVE_CENSUS`` from the module globals on
+every call, so ``tests/test_parser_fastpaths.py`` sets them to None and
+checks that the parse does not change.  ``NATIVE`` says whether the core
+loaded (see ``native.py``); without a compiler the general machine reads
+everything.
 """
 
 from __future__ import annotations
@@ -99,8 +106,10 @@ _RAW_TEXT_TAGS = ("script", "style", "textarea")
 _native = _native_build.load()
 if _native is not None:
     _native.setup(OPEN_IMPLIES_CLOSE, VOID_ELEMENTS, _RAW_TEXT_TAGS)
-# the native core's entry point (None: the general machine reads all)
+# the native core's entry points (None: the general machine reads all,
+# and DocBuilder.count_unclosed_flat counts)
 _NATIVE_SCAN = _native.scan if _native is not None else None
+_NATIVE_CENSUS = _native.census if _native is not None else None
 NATIVE = _NATIVE_SCAN is not None
 
 # a char that is neither HTML whitespace nor astral (the wrap-up
@@ -357,7 +366,7 @@ def parse(source: str, *, empty_end_tag: bool = True, eol="\n", tab_size: int = 
                 i = i2 + 1
             elif xml:
                 errors += 1
-                if not pop(tag_lc, t[k:i2], k):
+                if not pop(tag_lc, t[k:i2], k, i2):
                     errors += 1
                 i = i2  # offending char re-parsed as text
             elif i2 == n - 1:
@@ -508,7 +517,7 @@ def parse(source: str, *, empty_end_tag: bool = True, eol="\n", tab_size: int = 
         tag_lc = tag if xml else tag.lower()
         node = len(nodes)
         nd = [ELEMENT, tag, tag_lc, -1, [], UNCLOSED, None, True, False, "",
-              [], [], [], [], [], "", None, False, k, -1, -1]
+              (), (), (), (), (), "", None, False, k, -1, -1]
         nodes.append(nd)
         if not xml:
             closers = OPEN_IMPLIES_CLOSE.get(tag_lc)
@@ -732,6 +741,8 @@ def parse(source: str, *, empty_end_tag: bool = True, eol="\n", tab_size: int = 
     result.errors = errors
     result.charset = charset
     result.xml_mode = xml
-    result.unclosed_tags, result.implicitly_closed_tags = b.count_unclosed_flat()
+    census = _NATIVE_CENSUS
+    result.unclosed_tags, result.implicitly_closed_tags = (
+        b.count_unclosed_flat() if census is None else census(nodes))
     result.lines = 1 + count_eols(t)
     return result

@@ -2,6 +2,7 @@
 
 import json
 
+from fortissimo_spark.dom import _ATTR_SLOTS, N_ATTR_NAMES
 from fortissimo_spark.parser import parse
 
 from .conftest import SMALL_SAMPLE
@@ -22,6 +23,29 @@ def test_attribute_manipulation():
     assert b.serialize(node) == '<a href="#bar"></a>'
     b.clear_attributes(node)
     assert b.serialize(node) == "<a></a>"
+
+
+def test_attribute_mutators_on_shared_empty_slots():
+    # an attribute-less element holds the one shared empty tuple in its
+    # five attribute slots: a write to one element must not reach another
+    r = parse("<p>x</p><p>y</p>")
+    b = r.dom
+    first, second = b.query_selector_all(0, "p")
+    assert b.nodes[first][N_ATTR_NAMES] is b.nodes[second][N_ATTR_NAMES]
+    b.set_attribute(first, "class", "a")
+    assert b.serialize(first) == '<p class="a">x</p>'
+    assert b.serialize(second) == "<p>y</p>"
+    assert [b.nodes[second][f] for f in _ATTR_SLOTS] == [()] * 5
+    assert r.to_string() == '<p class="a">x</p><p>y</p>'
+    b.add_attribute_to(second, "id", "b")
+    assert r.to_string() == '<p class="a">x</p><p id="b">y</p>'
+    b.clear_attributes(first)
+    assert [b.nodes[first][f] for f in _ATTR_SLOTS] == [()] * 5
+    assert r.to_string() == '<p>x</p><p id="b">y</p>'
+    assert not b.delete_attribute(first, 0)
+    assert not b.delete_attribute(first, "class")
+    b.set_attribute(first, "title", "t")
+    assert r.to_string() == '<p title="t">x</p><p id="b">y</p>'
 
 
 def test_remove_nodes():

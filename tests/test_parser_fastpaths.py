@@ -2,13 +2,15 @@
 
 Focused pins for each boundary between the native core and the general
 state machine, then the differential test: every document is parsed
-through the native core and again with it disabled (``_NATIVE_SCAN`` set
-to None, so the general machine reads every token), and the two parses
-must agree on every node field, the error count, the charset and the
-element counts, and with ``positions=True`` on every node's line, column,
-end line and end column.  Inputs: every parity fixture, every prefix of a
-few of them (EOF at every offset), 10^5 seeded generated tag soups and
-2*10^4 table soups.  Then the build: the core must load wherever a
+through the native core and again with it disabled (``_NATIVE_SCAN`` and
+``_NATIVE_CENSUS`` set to None, so the general machine reads every token
+and ``DocBuilder.count_unclosed_flat`` counts), and the two parses must
+agree on every node field, the error count, the charset and the element
+counts, and with ``positions=True`` on every node's line, column, end line
+and end column.  Inputs: every parity fixture, every prefix of a few of
+them (EOF at every offset), 10^5 seeded generated tag soups, 2*10^4 table
+soups and pages for the core's intern cache (collisions, its length
+bound, Latin-1 and 2-byte names).  Then the build: the core must load wherever a
 compiler and the Python headers exist, ship in the ``--py-files`` zip, and
 its absence must leave ``parse()`` and density ``extract()`` working.
 """
@@ -25,9 +27,10 @@ import pytest
 
 import fortissimo_spark.parser as P
 from fortissimo_spark.dom import (
-    ELEMENT, EXPLICITLY_CLOSED, N_ATTR_EQUALS, N_ATTR_NAMES, N_ATTR_QUOTES,
-    N_ATTR_SPACING, N_ATTR_VALUES, N_CLOSURE, N_END_TAG, N_INNER_WS, N_KIND,
-    N_TAG_LC, SELF_CLOSED, UNCLOSED, VOID_CLOSED,
+    _ATTR_SLOTS, ELEMENT, EXPLICITLY_CLOSED, N_ATTR_EQUALS, N_ATTR_NAMES,
+    N_ATTR_QUOTES, N_ATTR_SPACING, N_ATTR_VALUES, N_CLOSURE, N_CONTENT,
+    N_END_AT, N_END_TAG, N_INNER_WS, N_KIND, N_SRC_END, N_SRC_START, N_TAG,
+    N_TAG_LC, SELF_CLOSED, UNCLOSED, UNMATCHED_CLOSE, VOID_CLOSED,
 )
 from fortissimo_spark.extract import extract
 from fortissimo_spark.kernel import process_document
@@ -271,6 +274,7 @@ def _divergences(monkeypatch, docs, empty_end_tag, positions):
         counts = P._native.stats()
         with monkeypatch.context() as m:
             m.setattr(P, "_NATIVE_SCAN", None)
+            m.setattr(P, "_NATIVE_CENSUS", None)
             for d, w in zip(chunk, want):
                 if _snapshot(d, empty_end_tag, positions) != w:
                     bad.append(d)
@@ -315,6 +319,102 @@ def test_fast_paths_match_general_machine_on_generated(monkeypatch, tables,
         assert min(counts.values()) >= ndocs // 100, counts
 
 
+def _record_docs():
+    """Documents for the core's record paths: more distinct tag names than
+    the intern cache has slots (so entries collide and are replaced), names
+    at the cache's length bound and one past it, Latin-1 uppercase tag and
+    attribute names, mixed-case end tags, and text with a char above
+    U+00FF (2-byte kind: the cache is bypassed)."""
+    slots, bound = P._native.INTERN_SLOTS, P._native.INTERN_MAX_LEN
+    many = "".join(f"<t{j} a{j}=1>x</t{j}>" for j in range(3 * slots))
+    docs = [many, many.upper(), many + many]
+    for m in (bound - 3, bound - 2, bound - 1, bound, bound + 1):
+        for name in ("x" * m, "X" * m, "\u00c4" * m):
+            docs.append(f"<{name} {name}=1>y</{name}><{name}></{name} >")
+    docs += ["<\u00c4B c=1></\u00e4b>", "<\u00c4B \u00c4C=1></\u00c4B>",
+             "<\u00e4b \u00e4c=1></\u00c4B>", "<div></DiV>", "<DiV></dIv>",
+             "<Table><tr><TD>x</td></TABLE>", "<SCRIPT>x</ScRiPt>",
+             "<DIV \u010c=1>\u015d</div>", "<\u010cb c=1></\u010cB>",
+             "<p>\u20ac</P><P class=x>y</p>"]
+    return docs
+
+
+@pytest.mark.parametrize("positions", [False, True],
+                         ids=["no-positions", "positions"])
+def test_record_paths_match_general_machine(monkeypatch, positions):
+    # the intern cache's collisions, evictions and bypasses, and the shared
+    # empty attribute tuple, build what the general machine builds
+    _require_native()
+    docs = _record_docs()
+    docs += [d[:j] for d in docs[-10:] for j in range(len(d) + 1)]
+    for empty_end_tag in (False, True):
+        bad, _ = _divergences(monkeypatch, docs, empty_end_tag, positions)
+        assert not bad, f"{len(bad)} divergences, first: {bad[:5]!r}"
+    b = parse(docs[0]).dom
+    assert [b.nodes[e][N_TAG] for e in range(1, len(b.nodes), 2)] == [
+        f"t{j}" for j in range(3 * P._native.INTERN_SLOTS)]
+    b = parse(docs[1]).dom
+    assert b.nodes[1][N_TAG] == "T0" and b.nodes[1][N_TAG_LC] == "t0"
+    assert b.nodes[1][N_ATTR_NAMES] == ["A0"]
+
+
+def test_attribute_less_elements_hold_the_empty_tuple(monkeypatch):
+    # both machines; the root comes from DocBuilder.new_element
+    for native in (P._NATIVE_SCAN, None):
+        monkeypatch.setattr(P, "_NATIVE_SCAN", native)
+        r = parse("<p>x</p><br><a href=y>z</a>")
+        b = r.dom
+        p, br, a = _els(r)
+        for el in (0, p, br):
+            assert [b.nodes[el][f] for f in _ATTR_SLOTS] == [()] * 5
+        assert b.nodes[a][N_ATTR_NAMES] == ["href"]
+
+
+def test_native_census_matches_count_unclosed_flat():
+    _require_native()
+    docs = (FIXTURES + _prefix_docs() + list(generated_docs(20_000))
+            + list(table_soups(2_000)))
+    for doc in docs:
+        b = parse(doc).dom
+        assert P._native.census(b.nodes) == b.count_unclosed_flat(), doc
+    with pytest.raises(TypeError):
+        P._native.census(())
+    with pytest.raises(ValueError):
+        P._native.census([[0]])
+
+
+@pytest.mark.parametrize("machine", ["native", "general"])
+def test_unmatched_end_tags_carry_their_source_span(monkeypatch, machine):
+    # every unmatched end tag reads back from the source: its span starts
+    # at '</' and runs to its '>' or to EOF, and its position (N_END_AT)
+    # lies inside it; the ones DocBuilder.pop records sit at their '</'
+    if machine == "native":
+        _require_native()
+    else:
+        monkeypatch.setattr(P, "_NATIVE_SCAN", None)
+    popped = 0
+    docs = FIXTURES + list(generated_docs(20_000)) + list(table_soups(2_000))
+    for doc in docs:
+        r = parse(doc)
+        if r.xml_mode:
+            continue
+        t = r.text
+        for nd in r.dom.nodes:
+            if nd[N_KIND] != UNMATCHED_CLOSE:
+                continue
+            s, e, at = nd[N_SRC_START], nd[N_SRC_END], nd[N_END_AT]
+            assert 0 <= s <= at < e <= len(t), (doc, nd)
+            assert t[s:e].startswith("</"), (doc, nd)
+            assert t[s:e].endswith(">") or e == len(t), (doc, nd)
+            popped += s == at
+    assert popped >= 10_000, popped
+    # xml mode: an end tag cut by a stray char ends where the char starts
+    r = parse("<!DOCTYPE html PUBLIC '-//W3C//DTD XHTML 1.0 Strict//EN'>"
+              "<a></b c>")
+    (nd,) = [nd for nd in r.dom.nodes if nd[N_KIND] == UNMATCHED_CLOSE]
+    assert r.text[nd[N_SRC_START]:nd[N_SRC_END]] == nd[N_CONTENT] == "</b "
+
+
 def test_both_position_modes_build_equal_records():
     # a record holds offsets only: positions decide what line and col
     # read, never what is stored
@@ -342,6 +442,19 @@ def _have_compiler() -> bool:
     include = sysconfig.get_paths()["include"]
     return (shutil.which(cc) is not None
             and os.path.exists(os.path.join(include, "Python.h")))
+
+
+def test_native_core_compiles_without_warnings(tmp_path):
+    # the build's own compiler and include path, warnings as errors
+    if not _have_compiler():
+        pytest.skip("no C compiler and Python headers")
+    from fortissimo_spark.native import compile_command
+    src = os.path.join(ROOT, "fortissimo_spark", "_native.c")
+    out = subprocess.run(
+        compile_command(src, str(tmp_path / "_native.so"), "-Wall",
+                        "-Wextra", "-Wno-unused-parameter", "-Werror"),
+        capture_output=True, text=True)
+    assert out.returncode == 0, out.stderr
 
 
 def test_native_core_loads_where_a_compiler_exists():

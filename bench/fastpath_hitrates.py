@@ -28,8 +28,8 @@ from fortissimo_spark.kernel import decode_parse  # noqa: E402
 # the token-level branches: every token the core reads is counted in
 # exactly one of them (meta_sniff, raw_text and raw_text_eof refine start
 # and void)
-OWNED = ("text", "comment", "declaration", "end_top", "end_pop", "start",
-         "void", "bad_term")
+OWNED = ("text", "comment", "declaration", "end_top", "end_unwind",
+         "end_unmatched", "start", "void", "bad_term")
 
 ap = argparse.ArgumentParser()
 ap.add_argument("ndocs", nargs="?", type=int, default=10000)

@@ -7,9 +7,11 @@
  * same 21-slot node records to DocBuilder.nodes (and the same indices to
  * open_stack) that the Python general machine would.  It returns at the
  * first token it does not own; parse() reads that one token with the
- * general machine and calls back in.  Tree repair stays in Python: an end
- * tag that is not on top of the stack goes to DocBuilder.pop, and a
- * closing table to DocBuilder._examine_table.
+ * general machine and calls back in.  Tree repair runs here too: an end
+ * tag that is not on top of the stack takes DocBuilder.pop's path in
+ * repair() (the stack scan, the formatting/marker block, the unwind and
+ * the unmatched-close leaf), and only a closing table calls back into
+ * Python, to DocBuilder._examine_table.
  *
  * Owned: text runs (the literal-'<' pairwise quirk, empty_end_tag, the
  * trailing-text EOF error), '<!--' comments (the m % 3 == 2 dash rule),
@@ -17,8 +19,9 @@
  * with any number of attributes, void elements, OPEN_IMPLIES_CLOSE, the
  * math/svg counter and the script/style/textarea raw-text scan.
  * Handed off: other '<!' markup, '<?', end tags cut by EOF or a syntax
- * error, start tags cut by EOF, and meta tags while no charset is known
- * (the charset sniff is Python's).
+ * error, start tags cut by EOF.  While no charset is known, each meta
+ * tag's attributes go to parse()'s charset sniff, which may stop the scan
+ * at the end of that tag (the early stop of a charset retry).
  *
  * The Python general machine is the reference; tests/test_parser_fastpaths.py
  * checks that a parse through this core equals it, field for field.
@@ -31,11 +34,11 @@
  * string.
  *
  * density() is extract(strip="density") over the finished node records,
- * and census() counts the unclosed and implicitly closed elements at the
- * end of a parse (see the sections at the end).  Python's extract() loop
- * and DocBuilder.count_unclosed_flat are their references;
- * tests/test_extract_native.py and tests/test_parser_fastpaths.py check
- * that each pair agrees.
+ * census() counts the unclosed and implicitly closed elements at the end
+ * of a parse, and token_count() is len(text.split()) (see the sections at
+ * the end).  Python's extract() loop, DocBuilder.count_unclosed_flat and
+ * str.split are their references; tests/test_extract_native.py and
+ * tests/test_parser_fastpaths.py check that each pair agrees.
  */
 #define PY_SSIZE_T_CLEAN
 #include <Python.h>
@@ -49,26 +52,29 @@ enum {
     N_SYNTHETIC, N_SRC_START, N_SRC_END, N_END_AT, N_SLOTS
 };
 enum { ELEMENT = 0, TEXT = 1, COMMENT = 2, DECLARATION = 3, DOCTYPE_NODE = 4,
-       CDATA = 6 };
+       CDATA = 6, UNMATCHED_CLOSE = 7 };
 enum { UNCLOSED = 0, SELF_CLOSED = 1, VOID_CLOSED = 2, EXPLICITLY_CLOSED = 3,
        IMPLICITLY_CLOSED = 4 };
 
 /* per-branch token counters, read by stats() */
 enum {
-    ST_TEXT, ST_COMMENT, ST_DECL, ST_END_TOP, ST_END_POP, ST_START,
+    ST_TEXT, ST_COMMENT, ST_DECL, ST_END_TOP, ST_END_UNWIND,
+    ST_END_UNMATCHED, ST_START,
     ST_VOID, ST_BAD_TERM, ST_META, ST_RAW_TEXT, ST_RAW_TEXT_EOF,
     ST_OFF_DECL, ST_OFF_PI, ST_OFF_END, ST_OFF_START_EOF,
     ST_COUNT
 };
 static const char *const STAT_NAMES[ST_COUNT] = {
-    "text", "comment", "declaration", "end_top", "end_pop", "start",
+    "text", "comment", "declaration", "end_top", "end_unwind",
+    "end_unmatched", "start",
     "void", "bad_term", "meta_sniff", "raw_text", "raw_text_eof",
     "handoff_decl", "handoff_pi", "handoff_end", "handoff_start_eof",
 };
 static unsigned long long counts[ST_COUNT];
 
 static PyObject *OPEN_IMPLIES_CLOSE, *VOID_ELEMENTS, *RAW_TEXT_TAGS;
-static PyObject *INT[5], *INT_M1, *S_EMPTY, *S_DQ, *S_SQ, *S_EQ, *S_LT_SLASH;
+static PyObject *FORMATTING_ELEMENTS, *MARKER_ELEMENTS;
+static PyObject *INT[8], *INT_M1, *S_EMPTY, *S_DQ, *S_SQ, *S_EQ, *S_LT_SLASH;
 static PyObject *T_EMPTY;  /* () */
 static PyObject *S_EXAMINE_TABLE, *S_IN_MATH_OR_SVG, *S_LOWER;
 static PyObject *S_BLOCK_SEP;
@@ -80,6 +86,7 @@ typedef struct {
     Py_ssize_t n;
     PyObject *sniff;  /* parse()'s meta charset sniff; NULL once known */
     long errors;
+    int stop;         /* the sniff asked to stop after the current tag */
 } Scan;
 
 #define CH(s, p) PyUnicode_READ((s)->kind, (s)->data, (p))
@@ -310,20 +317,24 @@ fail:
     return -1;
 }
 
-/* DocBuilder.add_leaf(kind, t[a:b], terminated, poss_ent, src_start,
- * src_end) */
-static int add_leaf(const Scan *s, int kind, Py_ssize_t a, Py_ssize_t b,
-                    int terminated, int poss_ent, Py_ssize_t src_start,
-                    Py_ssize_t src_end)
+/* DocBuilder.add_leaf(kind, content, terminated, poss_ent, src_start,
+ * src_end, end_at); steals ``content``, which may be NULL on error */
+static int add_leaf_obj(const Scan *s, int kind, PyObject *content,
+                        int terminated, int poss_ent, Py_ssize_t src_start,
+                        Py_ssize_t src_end, Py_ssize_t end_at)
 {
+    if (content == NULL)
+        return -1;
     PyObject *parent = top(s);
     PyObject *nd = new_record(parent);
-    if (nd == NULL)
+    if (nd == NULL) {
+        Py_DECREF(content);
         return -1;
-    PyObject *content = span(s, a, b);
-    if (content == NULL || PyList_SetItem(nd, N_CONTENT, content) < 0
+    }
+    if (PyList_SetItem(nd, N_CONTENT, content) < 0
             || set_int(nd, N_SRC_START, src_start) < 0
-            || set_int(nd, N_SRC_END, src_end) < 0) {
+            || set_int(nd, N_SRC_END, src_end) < 0
+            || (end_at >= 0 && set_int(nd, N_END_AT, end_at) < 0)) {
         Py_DECREF(nd);
         return -1;
     }
@@ -331,6 +342,50 @@ static int add_leaf(const Scan *s, int kind, Py_ssize_t a, Py_ssize_t b,
     set_slot(nd, N_TERMINATED, terminated ? Py_True : Py_False);
     set_slot(nd, N_POSS_ENT, poss_ent ? Py_True : Py_False);
     return append_node(s, nd, parent, NULL);
+}
+
+/* DocBuilder.add_leaf(kind, t[a:b], terminated, poss_ent, src_start,
+ * src_end) */
+static int add_leaf(const Scan *s, int kind, Py_ssize_t a, Py_ssize_t b,
+                    int terminated, int poss_ent, Py_ssize_t src_start,
+                    Py_ssize_t src_end)
+{
+    return add_leaf_obj(s, kind, span(s, a, b), terminated, poss_ent,
+                        src_start, src_end, -1);
+}
+
+/* a == b for two tag names; most come from the intern cache, so the
+ * identity test settles them */
+static int same_name(PyObject *a, PyObject *b)
+{
+    if (a == b)
+        return 1;
+    if (PyUnicode_CheckExact(a) && PyUnicode_CheckExact(b)) {
+        Py_ssize_t n = PyUnicode_GET_LENGTH(a);
+        int kind = PyUnicode_KIND(a);
+        return n == PyUnicode_GET_LENGTH(b) && kind == PyUnicode_KIND(b)
+            && memcmp(PyUnicode_DATA(a), PyUnicode_DATA(b),
+                      (size_t)n * kind) == 0;
+    }
+    return PyObject_RichCompareBool(a, b, Py_EQ);
+}
+
+/* the tag name of the element at stack[j] */
+static inline PyObject *stack_tag(const Scan *s, Py_ssize_t j)
+{
+    PyObject *nd = node_at(s, PyLong_AsSsize_t(PyList_GET_ITEM(s->stack, j)));
+    return PyList_GET_ITEM(nd, N_TAG_LC);
+}
+
+/* the end-tag slots of an element it closes */
+static int close_element(PyObject *nd, PyObject *end_text, Py_ssize_t at,
+                         Py_ssize_t end_pos)
+{
+    if (set_int(nd, N_END_AT, at) < 0 || set_int(nd, N_SRC_END, end_pos) < 0)
+        return -1;
+    set_slot(nd, N_CLOSURE, INT[EXPLICITLY_CLOSED]);
+    set_slot(nd, N_END_TAG, end_text);
+    return 0;
 }
 
 /* The general machine's end-tag step when the stack top closes: the
@@ -343,11 +398,8 @@ static int close_top(const Scan *s, PyObject *tag_lc, PyObject *end_text,
     Py_INCREF(cur);
     PyObject *nd = node_at(s, PyLong_AsSsize_t(cur));
     int r = -1;
-    if (pop_stack(s) < 0 || set_int(nd, N_END_AT, at) < 0
-            || set_int(nd, N_SRC_END, end_pos) < 0)
+    if (pop_stack(s) < 0 || close_element(nd, end_text, at, end_pos) < 0)
         goto done;
-    set_slot(nd, N_CLOSURE, INT[EXPLICITLY_CLOSED]);
-    set_slot(nd, N_END_TAG, end_text);
     if (is_tag(tag_lc, "table")) {
         PyObject *v = PyObject_CallMethodOneArg(s->b, S_EXAMINE_TABLE, cur);
         if (v == NULL)
@@ -361,6 +413,102 @@ static int close_top(const Scan *s, PyObject *tag_lc, PyObject *end_text,
 done:
     Py_DECREF(cur);
     return r;
+}
+
+/* DocBuilder.pop for an end tag whose element is not the stack top, the
+ * end tag at ``at`` ending at ``end_pos``: the stack scan from the top, the
+ * block by a marker element above a formatting element, the unwind
+ * (explicit closure for the match, implicit for what lies above it) and,
+ * for an end tag that closed nothing, an UNMATCHED_CLOSE leaf.  '<//>' with
+ * only the root open closes the root, which stays open.  Returns 1 if the
+ * end tag closed an element, 0 if it was unmatched, -1 on error. */
+static int repair(const Scan *s, PyObject *tag_lc, PyObject *end_text,
+                  Py_ssize_t at, Py_ssize_t end_pos)
+{
+    Py_ssize_t len = PyList_GET_SIZE(s->stack), match = -1;
+    if (len == 1) {
+        PyObject *nd = node_at(s, PyLong_AsSsize_t(top(s)));
+        int eq = same_name(PyList_GET_ITEM(nd, N_TAG_LC), tag_lc);
+        if (eq < 0)
+            return -1;
+        if (eq) {
+            /* popped and pushed back: the stack is the root alone */
+            if (close_element(nd, end_text, at, end_pos) < 0)
+                return -1;
+            set_slot(s->stack, 0, INT[0]);
+            return 1;
+        }
+    }
+    /* the top is known not to match, and a match on the root alone (index
+     * 0) counts as unmatched */
+    for (Py_ssize_t j = len - 2; j > 0; j--) {
+        int eq = same_name(stack_tag(s, j), tag_lc);
+        if (eq < 0)
+            return -1;
+        if (eq) {
+            match = j;
+            break;
+        }
+    }
+    if (match > 0) {
+        int fmt = PySet_Contains(FORMATTING_ELEMENTS, tag_lc);
+        if (fmt < 0)
+            return -1;
+        for (Py_ssize_t j = match + 1; fmt && j < len; j++) {
+            int marker = PySet_Contains(MARKER_ELEMENTS, stack_tag(s, j));
+            if (marker < 0)
+                return -1;
+            if (marker) {
+                match = -1;
+                break;
+            }
+        }
+    }
+    int popped = 0;
+    long math_or_svg = 0;
+    while (match > 0 && PyList_GET_SIZE(s->stack) > match) {
+        PyObject *cur = top(s);
+        Py_INCREF(cur);
+        PyObject *nd = node_at(s, PyLong_AsSsize_t(cur));
+        Py_INCREF(nd);
+        PyObject *nd_tag = PyList_GET_ITEM(nd, N_TAG_LC);
+        int r = -1, closed = PyObject_IsTrue(PyList_GET_ITEM(nd, N_CLOSURE));
+        if (closed < 0)
+            goto step_done;
+        if (!closed) {
+            if (PyList_GET_SIZE(s->stack) - 1 == match) {
+                popped = 1;
+                if (close_element(nd, end_text, at, end_pos) < 0)
+                    goto step_done;
+            } else {
+                set_slot(nd, N_CLOSURE, INT[IMPLICITLY_CLOSED]);
+            }
+            if (is_tag(nd_tag, "table")) {
+                PyObject *v = PyObject_CallMethodOneArg(s->b, S_EXAMINE_TABLE,
+                                                        cur);
+                if (v == NULL)
+                    goto step_done;
+                Py_DECREF(v);
+            }
+        }
+        nd_tag = PyList_GET_ITEM(nd, N_TAG_LC);
+        math_or_svg += is_tag(nd_tag, "math") || is_tag(nd_tag, "svg");
+        r = pop_stack(s);
+step_done:
+        Py_DECREF(nd);
+        Py_DECREF(cur);
+        if (r < 0)
+            return -1;
+    }
+    if (math_or_svg && bump_math_or_svg(s, -math_or_svg) < 0)
+        return -1;
+    if (!popped) {
+        Py_INCREF(end_text);
+        if (add_leaf_obj(s, UNMATCHED_CLOSE, end_text, 1, 0, at, end_pos,
+                         at) < 0)
+            return -1;
+    }
+    return popped;
 }
 
 /* '</' at k.  Returns the offset after the tag, 0 to hand off, -1 on
@@ -400,9 +548,8 @@ static Py_ssize_t end_tag(Scan *s, Py_ssize_t k)
         goto done;
     int match = PyList_GET_SIZE(s->stack) > 1;
     if (match) {
-        PyObject *nd = node_at(s, PyLong_AsSsize_t(top(s)));
-        match = PyObject_RichCompareBool(PyList_GET_ITEM(nd, N_TAG_LC),
-                                         tag_lc, Py_EQ);
+        match = same_name(stack_tag(s, PyList_GET_SIZE(s->stack) - 1),
+                          tag_lc);
         if (match < 0)
             goto done;
     }
@@ -411,14 +558,15 @@ static Py_ssize_t end_tag(Scan *s, Py_ssize_t k)
             goto done;
         counts[ST_END_TOP]++;
     } else {
-        PyObject *v = PyObject_CallMethod(s->b, "pop", "OOnn", tag_lc, text,
-                                          k, i2 + 1);
-        if (v == NULL)
+        int popped = repair(s, tag_lc, text, k, i2 + 1);
+        if (popped < 0)
             goto done;
-        if (v == Py_False)
+        if (popped) {
+            counts[ST_END_UNWIND]++;
+        } else {
             s->errors++;
-        Py_DECREF(v);
-        counts[ST_END_POP]++;
+            counts[ST_END_UNMATCHED]++;
+        }
     }
     r = i2 + 1;
 done:
@@ -568,8 +716,12 @@ static Py_ssize_t raw_text(Scan *s, Py_ssize_t i, PyObject *tag_lc)
     return gt + 1;
 }
 
-/* hand a meta tag's valued attributes to parse()'s charset sniff, which
- * says whether a later meta tag still needs it */
+/* what parse()'s charset sniff answers: a charset is known, none is yet
+ * (a later meta tag still needs the sniff), or one is and the scan stops
+ * after this tag */
+enum { SNIFF_DONE, SNIFF_MORE, SNIFF_STOP };
+
+/* hand a meta tag's valued attributes to parse()'s charset sniff */
 static int sniff(Scan *s, const Attrs *as)
 {
     PyObject *names = PyList_New(0), *values = PyList_New(0), *more = NULL;
@@ -593,11 +745,13 @@ static int sniff(Scan *s, const Attrs *as)
     more = PyObject_CallFunctionObjArgs(s->sniff, names, values, NULL);
     if (more == NULL)
         goto done;
-    r = PyObject_IsTrue(more);
-    if (r > 0)
-        r = 0;
-    else if (r == 0)
+    long v = PyLong_AsLong(more);
+    if (v == -1 && PyErr_Occurred())
+        goto done;
+    if (v != SNIFF_MORE)
         s->sniff = NULL;
+    s->stop = v == SNIFF_STOP;
+    r = 0;
     counts[ST_META]++;
 done:
     Py_XDECREF(names);
@@ -981,8 +1135,9 @@ static PyObject *scan(PyObject *self, PyObject *const *args, Py_ssize_t nargs)
     s.data = PyUnicode_DATA(s.t);
     s.n = PyUnicode_GET_LENGTH(s.t);
     s.errors = 0;
+    s.stop = 0;
 
-    while (i < s.n) {
+    while (i < s.n && !s.stop) {
         Py_UCS4 c2;
         Py_ssize_t k = text_run(&s, i, empty_end_tag, &c2);
         if (k < 0)
@@ -1486,12 +1641,53 @@ static PyObject *census(PyObject *self, PyObject *nodes)
     return Py_BuildValue("nn", unclosed, implicitly);
 }
 
+/* --- the token count --------------------------------------------------------
+ *
+ * token_count(t) is len(t.split()): the number of runs of characters that
+ * are not Py_UNICODE_ISSPACE, the whitespace str.split() splits on.
+ */
+
+#define COUNT_RUNS(TYPE)                                                \
+    do {                                                                \
+        const TYPE *d = (const TYPE *)data;                             \
+        for (Py_ssize_t p = 0; p < n; p++) {                            \
+            int word = !Py_UNICODE_ISSPACE(d[p]);                       \
+            runs += word & !in_word;                                    \
+            in_word = word;                                             \
+        }                                                               \
+    } while (0)
+
+static PyObject *token_count(PyObject *self, PyObject *t)
+{
+    if (!PyUnicode_Check(t)) {
+        PyErr_SetString(PyExc_TypeError, "token_count(str)");
+        return NULL;
+    }
+    if (PyUnicode_READY(t) < 0)
+        return NULL;
+    const void *data = PyUnicode_DATA(t);
+    Py_ssize_t n = PyUnicode_GET_LENGTH(t), runs = 0;
+    int in_word = 0;
+    switch (PyUnicode_KIND(t)) {
+    case PyUnicode_1BYTE_KIND: COUNT_RUNS(Py_UCS1); break;
+    case PyUnicode_2BYTE_KIND: COUNT_RUNS(Py_UCS2); break;
+    default: COUNT_RUNS(Py_UCS4);
+    }
+    return PyLong_FromSsize_t(runs);
+}
+
 static PyObject *setup(PyObject *self, PyObject *args)
 {
-    PyObject *oic, *voids, *raw;
-    if (!PyArg_ParseTuple(args, "O!O!O!", &PyDict_Type, &oic,
-                          &PyFrozenSet_Type, &voids, &PyTuple_Type, &raw))
+    PyObject *oic, *voids, *raw, *fmt, *markers;
+    if (!PyArg_ParseTuple(args, "O!O!O!O!O!", &PyDict_Type, &oic,
+                          &PyFrozenSet_Type, &voids, &PyTuple_Type, &raw,
+                          &PyFrozenSet_Type, &fmt, &PyFrozenSet_Type,
+                          &markers))
         return NULL;
+    Py_INCREF(fmt);
+    Py_XSETREF(FORMATTING_ELEMENTS, fmt);
+    Py_INCREF(markers);
+    Py_XSETREF(MARKER_ELEMENTS, markers);
     Py_INCREF(oic);
     Py_XSETREF(OPEN_IMPLIES_CLOSE, oic);
     Py_INCREF(voids);
@@ -1534,8 +1730,11 @@ static PyMethodDef methods[] = {
      " total_blocks, node_count, text_node_count)"},
     {"census", census, METH_O,
      "census(nodes) -> (unclosed, implicitly closed) non-synthetic elements"},
+    {"token_count", token_count, METH_O,
+     "token_count(t) -> len(t.split())"},
     {"setup", setup, METH_VARARGS,
-     "setup(OPEN_IMPLIES_CLOSE, VOID_ELEMENTS, RAW_TEXT_TAGS)"},
+     "setup(OPEN_IMPLIES_CLOSE, VOID_ELEMENTS, RAW_TEXT_TAGS,"
+     " FORMATTING_ELEMENTS, MARKER_ELEMENTS)"},
     {"stats", stats, METH_NOARGS, "per-branch token counts since reset"},
     {"reset_stats", reset_stats, METH_NOARGS, "zero the token counts"},
     {NULL, NULL, 0, NULL}
@@ -1543,7 +1742,8 @@ static PyMethodDef methods[] = {
 
 static struct PyModuleDef module = {
     PyModuleDef_HEAD_INIT, "_native",
-    "Native parse core, density extraction and the parse-end census.", -1,
+    "Native parse core, density extraction, the parse-end census and the"
+    " token count.", -1,
     methods,
     NULL, NULL, NULL, NULL
 };
@@ -1555,7 +1755,7 @@ static PyObject *intern(const char *s)
 
 PyMODINIT_FUNC PyInit__native(void)
 {
-    for (int j = 0; j < 5; j++)
+    for (int j = 0; j < 8; j++)  /* node kinds and closure states */
         INT[j] = PyLong_FromLong(j);
     INT_M1 = PyLong_FromLong(-1);
     S_EMPTY = PyUnicode_New(0, 0);

@@ -385,7 +385,10 @@ class DocBuilder:
             end_pos: int = -1) -> bool:
         """Mirror of dom.ts:668-741 for an end tag at offset ``at`` that
         ends at ``end_pos`` (the parser and the native core close void and
-        self-closing tags themselves).
+        self-closing tags themselves).  This is the general machine's tree
+        repair and the reference for the native core's, which runs the
+        same steps in C (``repair`` in ``_native.c``) and calls back only
+        into ``_examine_table``.
 
         Returns False when the closing tag was unmatched (parse error).
         """
@@ -738,10 +741,19 @@ class DocBuilder:
 
     # --- attribute mutation API (dom.ts:274-352; formatter-facing) -------------
 
+    def _element(self, node: int) -> list:
+        """``node``'s record; a TypeError if it is not an element (only an
+        element has attribute slots)."""
+        nd = self.nodes[node]
+        if nd[N_KIND] != ELEMENT:
+            raise TypeError(f"node {node} is a {KIND_NAMES[nd[N_KIND]]} "
+                            "node, not an element: it has no attributes")
+        return nd
+
     def set_attribute(self, node: int, name: str, value: str = "",
                       leading_space: str | None = None, equals: str | None = None,
                       quote: str | None = None) -> None:
-        nd = self.nodes[node]
+        nd = self._element(node)
         names = nd[N_ATTR_NAMES]
         try:
             index = names.index(name)
@@ -768,6 +780,7 @@ class DocBuilder:
     def add_attribute_to(self, node: int, name: str, value: str = "",
                          leading_space: str = " ", equals: str | None = None,
                          quote: str | None = None) -> None:
+        nd = self._element(node)
         if value is None:
             return
         if value == "":
@@ -776,7 +789,7 @@ class DocBuilder:
         else:
             equals = equals if equals is not None else "="
             quote = quote if quote is not None else '"'
-        nd = _attr_lists(self.nodes[node])
+        _attr_lists(nd)
         nd[N_ATTR_NAMES].append(name)
         nd[N_ATTR_VALUES].append(value)
         nd[N_ATTR_SPACING].append(leading_space)
@@ -784,7 +797,7 @@ class DocBuilder:
         nd[N_ATTR_QUOTES].append(quote)
 
     def delete_attribute(self, node: int, name_or_index) -> bool:
-        nd = self.nodes[node]
+        nd = self._element(node)
         names = nd[N_ATTR_NAMES]
         if isinstance(name_or_index, str):
             try:
@@ -798,7 +811,7 @@ class DocBuilder:
         return True
 
     def clear_attributes(self, node: int) -> None:
-        nd = self.nodes[node]
+        nd = self._element(node)
         for f in _ATTR_SLOTS:
             nd[f] = ()
 

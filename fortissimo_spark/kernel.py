@@ -24,8 +24,13 @@ in-kernel in a single pass):
    but on raw bytes — strictly better than sniffing a mis-decoded string);
 2. UTF-8 strict attempt, falling back to a ``<meta charset>`` prefix scan,
    then UTF-8 with replacement;
-3. after parsing, if the document *declares* a different charset that we can
-   decode, re-decode + re-parse once (max 2 tries, like the CLI).
+3. while parsing, if the document *declares* a different charset that we
+   can decode, and the re-decoded text differs, the parse stops at the end
+   of the declaring ``<meta>`` (parse's ``on_charset`` hook, the reference's
+   ``encoding`` callback, leaves ``ParseResult.stopped`` set) and the
+   re-decoded text is parsed once (max 2 tries, like the CLI).  A page
+   whose encoding came from its bytes (a BOM or null-byte pattern) is
+   parsed once, and its meta charset is only reported.
 
 Every page kernel sees the same decoded text for a page, so signals from
 different kernels over one page agree.
@@ -47,7 +52,7 @@ from .batches import row_kernel
 from .dom import ELEMENT, N_ATTR_NAMES, N_ATTR_VALUES, N_KIND, N_PARENT, \
     N_TAG_LC
 from .extract import extract
-from .parser import parse
+from .parser import _native, parse
 from .schema import EXTRACT_SCHEMA, NODES_SCHEMA
 
 __all__ = ["decode_page_bytes", "process_document", "make_extract_kernel",
@@ -58,7 +63,10 @@ _RE_META_CHARSET = re.compile(
 
 # token_count contract: the number of \S+ runs.  str.split() splits on
 # exactly the same whitespace class (verified: re's \s and str.isspace
-# agree on every codepoint), and is ~4x faster than findall.
+# agree on every codepoint), and is ~4x faster than findall; the native
+# core's token_count counts the same runs without building the list.
+_token_count = (_native.token_count if _native is not None
+                else lambda text: len(text.split()))
 
 
 @lru_cache(maxsize=512)
@@ -118,28 +126,43 @@ def decode_page_bytes(raw: bytes) -> tuple[str, str, bool]:
         return raw.decode("utf-8", errors="replace"), "utf-8", False
 
 
+def _redecoded(raw: bytes, declared: str, used: str, text: str) -> str | None:
+    """``raw`` decoded with the ``declared`` charset if that is a codec
+    other than ``used`` and gives a text other than ``text``; else None."""
+    declared_codec = _codec_name(declared)
+    if not declared_codec or declared_codec == _codec_name(used):
+        return None
+    try:
+        retext = raw.decode(declared_codec, errors="replace")
+    except LookupError:  # pragma: no cover
+        return None
+    return retext if retext != text else None
+
+
 def decode_parse(raw: bytes):
     """Shared decode -> parse -> (maybe re-decode retry) front end:
-    returns (result, used_encoding, declared_charset, retried)."""
-    text_src, used, pattern_detected = decode_page_bytes(raw)
-    result = parse(text_src, positions=False)
-    retried = False
+    returns (result, used_encoding, declared_charset, retried).
 
-    declared = result.charset
+    The first parse stops at the meta tag that declares a charset needing
+    a retry (``on_charset``, see the module docstring), so a retried page
+    is parsed once and a bit, not twice."""
+    text_src, used, pattern_detected = decode_page_bytes(raw)
+    retext = None
+
+    def on_charset(declared: str) -> bool:
+        nonlocal retext
+        retext = _redecoded(raw, declared, used, text_src)
+        return retext is not None
+
     # a byte-pattern detection is authoritative over a (stale) meta charset
-    if declared and not pattern_detected:
-        declared_codec = _codec_name(declared)
-        if declared_codec and declared_codec != _codec_name(used):
-            # single in-kernel retry, like the reference CLI (cli.ts:32-56)
-            try:
-                retext = raw.decode(declared_codec, errors="replace")
-            except LookupError:  # pragma: no cover
-                retext = None
-            if retext is not None and retext != text_src:
-                used = declared_codec
-                result = parse(retext, positions=False)
-                retried = True
-    return result, used, declared, retried
+    result = parse(text_src, positions=False,
+                   on_charset=None if pattern_detected else on_charset)
+    declared = result.charset
+    if not result.stopped:
+        return result, used, declared, False
+    # single in-kernel retry, like the reference CLI (cli.ts:32-56)
+    return (parse(retext, positions=False), _codec_name(declared), declared,
+            True)
 
 
 # input columns a page kernel copies onto every output row of the page
@@ -182,7 +205,7 @@ def _document_fields(raw: bytes, parsed, strip: str,
             used, declared, retried, result.errors, result.unclosed_tags,
             result.implicitly_closed_tags, ext.node_count,
             ext.text_node_count, result.characters, result.lines,
-            len(text), len(text.split()), len(raw),
+            len(text), _token_count(text), len(raw),
             result.to_string() == result.text if verify_roundtrip else None)
 
 
@@ -345,7 +368,7 @@ def make_analysis_kernel(strip: str = "density"):
         b = result.dom
         text = extract(b, strip).text
         noindex, nofollow, _ = _robots_from_dom(b)
-        return ((text, len(text), len(text.split()), result.errors,
+        return ((text, len(text), _token_count(text), result.errors,
                  noindex, nofollow, *_meta_from_dom(b),
                  len(b.query_selector_all(0, "a"))),)
 

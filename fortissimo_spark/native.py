@@ -1,9 +1,10 @@
 """Build and load the native core (``_native.c``) on first import.
 
-The core holds three entry points: ``scan``, the parse core behind
-``parser.parse``, ``census``, the element counts at the end of a parse,
-and ``density``, the walk behind ``extract(strip="density")``.  Python
-keeps the reference for each.
+The core holds four entry points: ``scan``, the parse core behind
+``parser.parse`` (tree repair included), ``census``, the element counts
+at the end of a parse, ``density``, the walk behind
+``extract(strip="density")``, and ``token_count``, the kernel's
+``len(text.split())``.  Python keeps the reference for each.
 
 The C source ships inside the package, so a ``--py-files`` zip carries it
 too: it is read through ``importlib.resources`` and compiled with the

@@ -44,12 +44,16 @@ in its five ``N_ATTR_*`` slots (``DocBuilder``'s attribute mutators make
 them lists on the first write), and the core takes repeated tag and
 attribute names from a small intern cache.  At the end, ``census`` in the
 core counts the unclosed and implicitly closed elements
-(``DocBuilder.count_unclosed_flat`` is its reference).  Tree repair is
-Python's alone: the core calls ``DocBuilder.pop`` for an end tag that is
-not on top of the stack and ``DocBuilder._examine_table`` when a table
-closes, and while no charset is known it hands each ``meta`` tag's
-attributes to the Python charset sniff.  Everything else (``<?``, CDATA, an xhtml doctype,
-EOF inside a tag or an end tag) goes to the general machine.  Xml mode
+(``DocBuilder.count_unclosed_flat`` is its reference).  The core repairs
+the tree itself: for an end tag that is not on top of the stack it runs
+``DocBuilder.pop``'s steps in C (``DocBuilder.pop`` stays the general
+machine's and the reference), and it calls back into Python only for
+``DocBuilder._examine_table`` when a table closes.  While no charset is
+known it hands each ``meta`` tag's attributes to the Python charset sniff,
+which answers whether to go on sniffing, or to stop the scan after that
+tag because ``on_charset`` asked the parse to stop (see ``parse``).
+Everything else (``<?``, CDATA, an xhtml doctype, EOF inside a tag or an
+end tag) goes to the general machine.  Xml mode
 never enters the core.  The general machine is the reference: for any
 input the native parse must build exactly what it builds.  ``parse()``
 reads ``_NATIVE_SCAN`` and ``_NATIVE_CENSUS`` from the module globals on
@@ -66,8 +70,8 @@ import re
 from . import dom as D
 from . import native as _native_build
 from .dom import (
-    ELEMENT, IMPLICITLY_CLOSED, OPEN_IMPLIES_CLOSE,
-    SELF_CLOSED, TEXT, UNCLOSED, VOID_CLOSED,
+    ELEMENT, FORMATTING_ELEMENTS, IMPLICITLY_CLOSED, MARKER_ELEMENTS,
+    OPEN_IMPLIES_CLOSE, SELF_CLOSED, TEXT, UNCLOSED, VOID_CLOSED,
     DocBuilder, N_BAD_TERM, N_CHILDREN, N_CLOSURE,
     N_INNER_WS, N_PARENT, N_SRC_END, N_TAG_LC, VOID_ELEMENTS, _Pos,
     count_eols,
@@ -105,12 +109,18 @@ _RAW_TEXT_TAGS = ("script", "style", "textarea")
 
 _native = _native_build.load()
 if _native is not None:
-    _native.setup(OPEN_IMPLIES_CLOSE, VOID_ELEMENTS, _RAW_TEXT_TAGS)
+    _native.setup(OPEN_IMPLIES_CLOSE, VOID_ELEMENTS, _RAW_TEXT_TAGS,
+                  FORMATTING_ELEMENTS, MARKER_ELEMENTS)
 # the native core's entry points (None: the general machine reads all,
 # and DocBuilder.count_unclosed_flat counts)
 _NATIVE_SCAN = _native.scan if _native is not None else None
 _NATIVE_CENSUS = _native.census if _native is not None else None
 NATIVE = _NATIVE_SCAN is not None
+
+# the charset sniff's answer to the native core after a meta tag (the
+# SNIFF_* values in _native.c): a charset is known, none is yet, or one is
+# and on_charset asked the parse to stop after this tag
+_SNIFF_DONE, _SNIFF_MORE, _SNIFF_STOP = 0, 1, 2
 
 # a char that is neither HTML whitespace nor astral (the wrap-up
 # trailing-text check: C-level search instead of a per-char Python loop)
@@ -187,7 +197,8 @@ class ParseResult:
 
 
 def parse(source: str, *, empty_end_tag: bool = True, eol="\n", tab_size: int = 8,
-          xml_mode: bool = False, positions: bool = True) -> ParseResult:
+          xml_mode: bool = False, positions: bool = True,
+          on_charset=None) -> ParseResult:
     """Parse ``source`` with the reference's std-mode semantics.
 
     Both ``positions`` modes build the same records.  With
@@ -195,6 +206,14 @@ def parse(source: str, *, empty_end_tag: bool = True, eol="\n", tab_size: int = 
     text, which works out a node's line and column (tab stops every
     ``tab_size`` columns) when they are read; with ``positions=False``
     they read 0.
+
+    ``on_charset`` mirrors the reference's ``encoding`` callback: it is
+    called once, with the charset, at the end of the first ``meta`` tag
+    whose attributes leave a non-empty charset (at the end of the tag, not
+    per attribute: one tag can set the charset and clear it again).  If it
+    returns true the parse stops after that tag, and the result has
+    ``stopped`` set and holds what was read up to there: its nodes, errors,
+    element counts and lines.
     """
     characters = len(source)
     pattern_encoding = check_encoding(source[:8])
@@ -239,6 +258,7 @@ def parse(source: str, *, empty_end_tag: bool = True, eol="\n", tab_size: int = 
     # read from the module globals on every call (see module docstring)
     native = _NATIVE_SCAN
     errors = 0
+    stopped = False
     charset: str | None = None
     checking_charset = False
     content_type = False
@@ -262,6 +282,12 @@ def parse(source: str, *, empty_end_tag: bool = True, eol="\n", tab_size: int = 
             else:
                 pending_charset = cs
 
+    def charset_stops() -> bool:
+        # the end of a meta tag that left a charset: the on_charset hook
+        nonlocal stopped
+        stopped = on_charset is not None and bool(on_charset(charset))
+        return stopped
+
     def meta_sniff(names, values):
         # the native core's call for a meta tag's valued attributes: the
         # two-step restarts at the tag, as at every start tag below
@@ -270,18 +296,20 @@ def parse(source: str, *, empty_end_tag: bool = True, eol="\n", tab_size: int = 
         pending_charset = None
         for name, value in zip(names, values):
             check_charset(name, value)
-        return not charset
+        if not charset:
+            return _SNIFF_MORE
+        return _SNIFF_STOP if charset_stops() else _SNIFF_DONE
 
     i = 0
-    while i < n:
+    while i < n and not stopped:
         if native is not None and not xml:
             # the native core reads every token it owns and stops at the
-            # first one it does not; the general machine below reads that
-            # one token
+            # first one it does not (or after the tag on_charset stopped
+            # at); the general machine below reads that one token
             i, e = native(t, i, nodes, stack, b, empty_end_tag,
                           None if charset else meta_sniff)
             errors += e
-            if i >= n:
+            if i >= n or stopped:
                 break
         # ---------------- OUTSIDE_MARKUP: gather text ----------------
         run_start = i
@@ -667,6 +695,10 @@ def parse(source: str, *, empty_end_tag: bool = True, eol="\n", tab_size: int = 
             tag_end_kind = "bad"
             break
 
+        # the tag is read: a meta tag that left a charset calls the hook,
+        # and a stop takes effect once the tag is closed or pushed
+        if checking_charset and charset:
+            charset_stops()
         if tag_end_kind == "eof":
             i = n
             break
@@ -737,6 +769,8 @@ def parse(source: str, *, empty_end_tag: bool = True, eol="\n", tab_size: int = 
 
     if trailing_markup_error:
         errors += 1
+    if not stopped:
+        i = n
 
     result.errors = errors
     result.charset = charset
@@ -744,5 +778,8 @@ def parse(source: str, *, empty_end_tag: bool = True, eol="\n", tab_size: int = 
     census = _NATIVE_CENSUS
     result.unclosed_tags, result.implicitly_closed_tags = (
         b.count_unclosed_flat() if census is None else census(nodes))
-    result.lines = 1 + count_eols(t)
+    result.stopped = stopped
+    # after EOL normalization eol_n is the text's only line break
+    result.lines = 1 + (t.count(eol_n, 0, i) if eol_n
+                        else count_eols(t[:i]))
     return result

@@ -121,6 +121,52 @@ def table_soups(n: int, seed: int = 5):
                + "</table>")
 
 
+# tree-repair shapes: end tags that close an element below the stack top
+# (the unwind) or close nothing (an unmatched close)
+POP_SHAPES = [
+    "<//>", "x<//>", "<//><//>y", "<p></p><//>", "<div><//></div><//>",
+    "<b><i>x</b>y</i>", "<b><i><u><s>x</b></s>", "<div><b><i>x</div>",
+    "<b><td></b>", "<b><td>x</td></b>", "<a><object><i></a></i>",
+    "<em><caption></em>", "<u><td></u>", "<b><marquee><nobr></b>",
+    "<div><table><td>x</div>", "<table><tr><td>x<div></table>",
+    "<table><tbody><tr>a<td>b</tbody><th>c</table>",
+    "<div><table><td><table><td>y</div>",
+    "<div><svg><g></div>", "<math><mi>x</math>", "<p><svg><math></p>",
+    "<svg><math><svg></svg></math></svg>", "<div><svg></div></svg>",
+    "<a></b>", "<p>x</span>", "</x>", "<b>x</i >", "<b></B>", "<B><i></b>",
+    "<div>" * 40 + "</span>" * 40, "<b><i>" * 30 + "</p>" * 30,
+    "<div>" * 30 + "<b>x</div>" * 30,
+]
+
+
+def pop_soups(n: int, seed: int = 11):
+    """``n`` seeded soups of misnested end tags: closes that unwind
+    several open elements, formatting closes blocked by a marker
+    (``<b><td></b>``), tables, math and svg closed by an unwind, ``<//>``
+    at the root and unmatched closes, some of them at EOF."""
+    rng = random.Random(seed)
+    tags = ("b", "i", "a", "font", "nobr", "strong", "u", "td", "th",
+            "caption", "object", "template", "div", "span", "p", "table",
+            "tr", "tbody", "li", "math", "svg", "g", "B", "Td")
+    for _ in range(n):
+        opened, parts = [], []
+        for _ in range(rng.randint(2, 24)):
+            r = rng.random()
+            if r < 0.45:
+                opened.append(rng.choice(tags))
+                parts.append(f"<{opened[-1]}>")
+            elif r < 0.8 and opened:
+                # most often below the top: an unwind
+                parts.append(f"</{rng.choice(opened)}>")
+            elif r < 0.85:
+                parts.append("<//>")
+            elif r < 0.93:
+                parts.append(f"</{rng.choice(tags)}>")
+            else:
+                parts.append(rng.choice(("x", " ", "\n")))
+        yield "".join(parts)
+
+
 def corpus_pages(root: str, n: int) -> list:
     """The first ``n`` ``{url, html}`` rows of the parity corpus under the
     checkout ``root`` (built by ``bench.ensure_corpus``); none when it was

@@ -1,8 +1,13 @@
 """DOM mutation + JSON debug sink parity (reference: src/dom.spec.ts:43-93)."""
 
+import copy
 import json
 
-from fortissimo_spark.dom import _ATTR_SLOTS, N_ATTR_NAMES
+import pytest
+
+from fortissimo_spark.dom import (
+    _ATTR_SLOTS, COMMENT, N_ATTR_NAMES, N_KIND, TEXT, UNMATCHED_CLOSE,
+)
 from fortissimo_spark.parser import parse
 
 from .conftest import SMALL_SAMPLE
@@ -46,6 +51,27 @@ def test_attribute_mutators_on_shared_empty_slots():
     assert not b.delete_attribute(first, "class")
     b.set_attribute(first, "title", "t")
     assert r.to_string() == '<p title="t">x</p><p id="b">y</p>'
+
+
+@pytest.mark.parametrize("kind,name", [(TEXT, "text"), (COMMENT, "comment"),
+                                       (UNMATCHED_CLOSE, "unmatched_close")])
+def test_attribute_mutators_refuse_non_elements(kind, name):
+    # a leaf has no attribute slots: each mutator names the node and its
+    # kind and leaves the record as it was
+    b = parse("<p>x</p><!-- c --></b>").dom
+    (node,) = [i for i, nd in enumerate(b.nodes) if nd[N_KIND] == kind]
+    before = copy.deepcopy(b.nodes)
+    calls = [lambda: b.set_attribute(node, "class", "a"),
+             lambda: b.set_attribute(node, "class", None),
+             lambda: b.add_attribute_to(node, "id", "b"),
+             lambda: b.add_attribute_to(node, "hidden"),
+             lambda: b.delete_attribute(node, 0),
+             lambda: b.delete_attribute(node, "class"),
+             lambda: b.clear_attributes(node)]
+    for call in calls:
+        with pytest.raises(TypeError, match=f"node {node} is a {name} node"):
+            call()
+    assert b.nodes == before
 
 
 def test_remove_nodes():

@@ -8,12 +8,18 @@ and ``DocBuilder.count_unclosed_flat`` counts), and the two parses must
 agree on every node field, the error count, the charset and the element
 counts, and with ``positions=True`` on every node's line, column, end line
 and end column.  Inputs: every parity fixture, every prefix of a few of
-them (EOF at every offset), 10^5 seeded generated tag soups, 2*10^4 table
-soups and pages for the core's intern cache (collisions, its length
-bound, Latin-1 and 2-byte names).  Then the build: the core must load wherever a
-compiler and the Python headers exist, ship in the ``--py-files`` zip, and
-its absence must leave ``parse()`` and density ``extract()`` working.
+them (EOF at every offset), 10^5 seeded generated tag soups with 2*10^4
+soups of misnested end tags (the core's tree repair: unwinds, marker
+blocks, tables and math/svg closed by an unwind, ``<//>`` at the root,
+unmatched closes), 2*10^4 table soups and pages for the core's intern
+cache (collisions, its length bound, Latin-1 and 2-byte names).  Then
+the build: the core must load wherever a compiler and the Python headers
+exist, ship in the ``--py-files`` zip, and its absence must leave
+``parse()`` and density ``extract()`` working.  The charset hook's early
+stop and the native token count are checked in
+``tests/test_decode_parse.py``.
 """
+import itertools
 import json
 import os
 import random
@@ -27,15 +33,16 @@ import pytest
 
 import fortissimo_spark.parser as P
 from fortissimo_spark.dom import (
-    _ATTR_SLOTS, ELEMENT, EXPLICITLY_CLOSED, N_ATTR_EQUALS, N_ATTR_NAMES,
-    N_ATTR_QUOTES, N_ATTR_SPACING, N_ATTR_VALUES, N_CLOSURE, N_CONTENT,
-    N_END_AT, N_END_TAG, N_INNER_WS, N_KIND, N_SRC_END, N_SRC_START, N_TAG,
-    N_TAG_LC, SELF_CLOSED, UNCLOSED, UNMATCHED_CLOSE, VOID_CLOSED,
+    _ATTR_SLOTS, ELEMENT, EXPLICITLY_CLOSED, IMPLICITLY_CLOSED, N_ATTR_EQUALS,
+    N_ATTR_NAMES, N_ATTR_QUOTES, N_ATTR_SPACING, N_ATTR_VALUES, N_CLOSURE,
+    N_CONTENT, N_END_AT, N_END_TAG, N_INNER_WS, N_KIND, N_SRC_END,
+    N_SRC_START, N_SYNTHETIC, N_TAG, N_TAG_LC, SELF_CLOSED, UNCLOSED,
+    UNMATCHED_CLOSE, VOID_CLOSED,
 )
 from fortissimo_spark.extract import extract
 from fortissimo_spark.kernel import process_document
 from fortissimo_spark.parser import parse
-from tests.parser_fixtures import FIXTURES, table_soups
+from tests.parser_fixtures import FIXTURES, POP_SHAPES, pop_soups, table_soups
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
@@ -152,16 +159,22 @@ def test_void_and_raw_text_paths():
 
 
 def test_token_count_contract():
-    from fortissimo_spark.kernel import process_document
+    # token_count is len(text.split()), counted in the native core when it
+    # loaded (tests/test_decode_parse.py fuzzes the two against each other)
+    from fortissimo_spark.kernel import _token_count, process_document
     d = process_document(b"<p>one two\tthree\nfour</p>")
     assert d["token_count"] == 4
     d = process_document(b"<p> </p>")
     assert d["token_count"] == 0
+    d = process_document("<p>a\u3000b c d\x1ce\x85f</p>".encode())
+    assert d["token_count"] == len(d["text"].split()) == 6
+    assert _token_count("a \u0085b  c") == 3
 
 
 # --- differential test: the native core vs the general machine -------------
 
 GENERATED_DOCS = 100_000
+POP_SOUPS = 20_000
 TABLE_SOUPS = 20_000
 SEED = 20_251_017
 
@@ -241,11 +254,14 @@ def _prefix_docs():
     return [doc[:j] for doc in rich for j in range(len(doc) + 1)]
 
 
-def _snapshot(text: str, empty_end_tag: bool, positions: bool):
-    r = parse(text, positions=positions, empty_end_tag=empty_end_tag)
+def _snapshot(text: str, empty_end_tag: bool, positions: bool,
+              on_charset=None):
+    r = parse(text, positions=positions, empty_end_tag=empty_end_tag,
+              on_charset=on_charset)
     b = r.dom
-    snap = (b.nodes, b.open_stack, r.errors, r.charset, r.unclosed_tags,
-            r.implicitly_closed_tags, r.lines, r.xml_mode)
+    snap = (b.nodes, b.open_stack, b.in_math_or_svg, r.errors, r.charset,
+            r.unclosed_tags, r.implicitly_closed_tags, r.lines, r.xml_mode,
+            r.stopped)
     if positions:
         snap += (list(zip(b.line, b.col, b.end_line, b.end_col)),)
     return snap
@@ -259,7 +275,8 @@ def _require_native():
     assert P.NATIVE
 
 
-def _divergences(monkeypatch, docs, empty_end_tag, positions):
+def _divergences(monkeypatch, docs, empty_end_tag, positions,
+                 on_charset=None):
     """Parse each doc through the native core, then with it disabled.
     Returns (divergent docs, the core's per-branch token counts: tokens it
     owned and tokens it handed to the general machine)."""
@@ -270,13 +287,14 @@ def _divergences(monkeypatch, docs, empty_end_tag, positions):
         chunk = [d for _, d in zip(range(5000), docs)]
         if not chunk:
             return bad, P._native.stats()
-        want = [_snapshot(d, empty_end_tag, positions) for d in chunk]
+        want = [_snapshot(d, empty_end_tag, positions, on_charset)
+                for d in chunk]
         counts = P._native.stats()
         with monkeypatch.context() as m:
             m.setattr(P, "_NATIVE_SCAN", None)
             m.setattr(P, "_NATIVE_CENSUS", None)
             for d, w in zip(chunk, want):
-                if _snapshot(d, empty_end_tag, positions) != w:
+                if _snapshot(d, empty_end_tag, positions, on_charset) != w:
                     bad.append(d)
         # the reference pass really ran without the core
         assert P._native.stats() == counts
@@ -308,15 +326,67 @@ def test_fast_paths_match_general_machine_on_fixtures(monkeypatch,
 def test_fast_paths_match_general_machine_on_generated(monkeypatch, tables,
                                                        ndocs, positions):
     _require_native()
-    docs = table_soups(ndocs) if tables else generated_docs(ndocs)
+    docs = (table_soups(ndocs) if tables else
+            itertools.chain(generated_docs(ndocs), pop_soups(POP_SOUPS)))
     bad, counts = _divergences(monkeypatch, docs, True, positions)
     assert not bad, f"{len(bad)} divergences, first: {bad[:5]!r}"
     if tables:
-        # unwinds and table repair go through DocBuilder.pop
-        assert counts["end_pop"] >= ndocs // 2, counts
+        # unwinds and table repair go through the core's tree repair
+        assert counts["end_unwind"] >= ndocs // 2, counts
     else:
-        # every branch counts at least one token per hundred documents
+        # every branch counts at least one token per hundred documents,
+        # and the tree repair's two outcomes 10^4 each
         assert min(counts.values()) >= ndocs // 100, counts
+        assert counts["end_unwind"] >= 10_000, counts
+        assert counts["end_unmatched"] >= 10_000, counts
+
+
+@pytest.mark.parametrize("positions", [False, True],
+                         ids=["no-positions", "positions"])
+def test_tree_repair_matches_general_machine(monkeypatch, positions):
+    # the pop-heavy shapes and every prefix of them, both empty_end_tag
+    # values: the core's repair() builds what DocBuilder.pop builds
+    _require_native()
+    docs = POP_SHAPES + [d[:j] for d in POP_SHAPES for j in range(len(d))]
+    for empty_end_tag in (False, True):
+        bad, counts = _divergences(monkeypatch, docs, empty_end_tag,
+                                   positions)
+        assert not bad, f"{len(bad)} divergences, first: {bad[:5]!r}"
+        assert counts["end_unwind"] and counts["end_unmatched"], counts
+
+
+def test_tree_repair_outcomes():
+    # a few outcomes pinned by hand, whichever machine parses
+    def closes(doc):
+        b = parse(doc).dom
+        return ([nd[N_CLOSURE] for nd in b.nodes[1:] if nd[N_KIND] == ELEMENT],
+                [nd[N_CONTENT] for nd in b.nodes
+                 if nd[N_KIND] == UNMATCHED_CLOSE], b.open_stack,
+                b.in_math_or_svg)
+
+    # a marker element blocks a formatting element's end tag
+    assert closes("<b><td></b>") == ([UNCLOSED, UNCLOSED], ["</b>"],
+                                     [0, 1, 2], 0)
+    # '<//>' with only the root open closes the root, which stays open
+    b = parse("<//>x").dom
+    assert (b.nodes[0][N_CLOSURE], b.nodes[0][N_END_TAG], b.open_stack) == (
+        EXPLICITLY_CLOSED, "<//>", [0])
+    # with an element open, '<//>' matches only the root: unmatched
+    assert closes("<p><//>")[1] == ["<//>"]
+    # the unwind closes what lies above the match implicitly
+    assert closes("<div><b><i>x</div>")[0] == [
+        EXPLICITLY_CLOSED, IMPLICITLY_CLOSED, IMPLICITLY_CLOSED]
+    # math and svg closed by an unwind leave the counter
+    assert closes("<div><svg><math><g></div><p>")[3] == 0
+    assert closes("<div><svg><math><g></g><p>")[3] == 2
+    # a table closed by an unwind is repaired: its cells get a row
+    r = parse("<div><table><td>x</div>")
+    assert r.to_string() == "<div><table><td>x</div>"
+    assert [nd[N_TAG] for nd in r.dom.nodes if nd[N_SYNTHETIC]] == ["/", "tr"]
+    # an unmatched close at EOF carries its span and position
+    (nd,) = [nd for nd in parse("<a></b>").dom.nodes
+             if nd[N_KIND] == UNMATCHED_CLOSE]
+    assert (nd[N_SRC_START], nd[N_SRC_END], nd[N_END_AT]) == (3, 7, 3)
 
 
 def _record_docs():
@@ -387,7 +457,7 @@ def test_native_census_matches_count_unclosed_flat():
 def test_unmatched_end_tags_carry_their_source_span(monkeypatch, machine):
     # every unmatched end tag reads back from the source: its span starts
     # at '</' and runs to its '>' or to EOF, and its position (N_END_AT)
-    # lies inside it; the ones DocBuilder.pop records sit at their '</'
+    # lies inside it; the ones tree repair records sit at their '</'
     if machine == "native":
         _require_native()
     else:

@@ -1,11 +1,13 @@
 """Tree building: the open-stack invariant and linear worst cases.
 
-``DocBuilder.pop`` runs no re-parent pass after it pops (the reference's
-dom.ts:733-738 re-parents the whole stack and recounts math/svg after
-every pop).  That is sound only while every stack entry's parent is the
-entry below it and ``in_math_or_svg`` equals the number of math/svg
-entries on the stack; the first test checks both after every ``pop`` call,
-through the native core and through the general machine.  The second pins
+Tree repair (``DocBuilder.pop`` and the native core's ``repair()``) runs
+no re-parent pass after it pops (the reference's dom.ts:733-738
+re-parents the whole stack and recounts math/svg after every pop).  That
+is sound only while every stack entry's parent is the entry below it and
+``in_math_or_svg`` equals the number of math/svg entries on the stack; the
+first test checks both after every ``DocBuilder.pop`` call of the general
+machine, and, for the native core, which repairs in C, at the end of
+every prefix that ends just after an end tag.  The second pins
 the two page shapes that took quadratic time while the parser still made
 that pass and the never-true ``<?xml`` check, the nested-list and
 implied-``</p>`` shapes, and two long lines parsed with positions and
@@ -15,6 +17,7 @@ at most 6x the time, through the native core and the general machine.
 """
 import gc
 import math
+import re
 import signal
 import time
 
@@ -37,12 +40,38 @@ def _check_stack(b):
         nodes[node][N_TAG_LC] in ("math", "svg") for node in stack)
 
 
+_END_TAG = re.compile(r"</[^<>]*>")
+
+
 @pytest.mark.parametrize("machine", ["native", "general"])
 def test_open_stack_invariant_after_every_pop(monkeypatch, machine):
-    if machine == "native" and not P.NATIVE:
-        pytest.skip("no native core on this host")
-    if machine == "general":
-        monkeypatch.setattr(P, "_NATIVE_SCAN", None)
+    docs = (list(FIXTURES) + list(generated_docs(10_000))
+            + list(table_soups(1_000)))
+    if machine == "native":
+        # the native core repairs the tree in C (repair() in _native.c)
+        # and calls no DocBuilder.pop: check the stack at the end of every
+        # prefix that ends just after an end tag, the state right after
+        # that end tag's repair
+        if not P.NATIVE:
+            pytest.skip("no native core on this host")
+
+        def repairs():
+            counts = P._native.stats()
+            return counts["end_unwind"] + counts["end_unmatched"]
+
+        checked = 0
+        for doc in docs:
+            prev = 0
+            for m in _END_TAG.finditer(doc):
+                before = repairs()
+                _check_stack(parse(doc[:m.end()], positions=False).dom)
+                n = repairs() - before
+                # the prefix's last end tag went through the core's repair
+                checked += n > prev
+                prev = n
+        assert checked >= 5_000, checked
+        return
+    monkeypatch.setattr(P, "_NATIVE_SCAN", None)
     pop = DocBuilder.pop
     calls = [0]
 
@@ -53,11 +82,8 @@ def test_open_stack_invariant_after_every_pop(monkeypatch, machine):
         return ok
 
     monkeypatch.setattr(DocBuilder, "pop", checked_pop)
-    docs = (list(FIXTURES) + list(generated_docs(10_000))
-            + list(table_soups(1_000)))
     for doc in docs:
         _check_stack(parse(doc, positions=False).dom)
-    # the native core calls pop only for a close that is not on top
     assert calls[0] >= 5_000, calls
 
 

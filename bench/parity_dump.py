@@ -130,7 +130,7 @@ def pos_snapshot(text: str) -> tuple:
     r = parse(text, positions=True)
     b = r.dom
     return (r.errors, r.lines, r.unclosed_tags, r.implicitly_closed_tags,
-            tuple((b.line[i], b.col[i], b.end_line[i], b.end_col[i])
+            tuple(b.line_col(i) + b.line_col(i, end=True)
                   for i in range(len(b.nodes))))
 
 

@@ -5,8 +5,7 @@ and ``src/elements.ts`` — re-expressed as index arrays (no object tree).
 
 Storage: one Python list per node (21 fixed slots, ``N_*`` indices), one
 append per node — the hot path allocates a single record instead of fanning
-out across parallel lists. Field-view properties (``b.kind[i]`` etc.) keep a
-columnar API for tests/format/stylize consumers.
+out across parallel lists.
 
 Positions: a record holds source offsets, not lines and columns.
 ``DocBuilder.line_col`` works them out when read, through the ``_Pos`` that
@@ -213,45 +212,6 @@ def cq(quote: str) -> str:
     return quote if len(quote) < 2 else ""
 
 
-class _FieldView:
-    """Columnar view over one slot of the node records."""
-
-    __slots__ = ("nodes", "f")
-
-    def __init__(self, nodes: list, f: int):
-        self.nodes = nodes
-        self.f = f
-
-    def __getitem__(self, i: int):
-        return self.nodes[i][self.f]
-
-    def __setitem__(self, i: int, value) -> None:
-        self.nodes[i][self.f] = value
-
-    def __len__(self) -> int:
-        return len(self.nodes)
-
-    def __iter__(self):
-        f = self.f
-        for node in self.nodes:
-            yield node[f]
-
-
-class _PosView:
-    """Columnar view over a resolved position: ``b.line_col(i, end)[part]``."""
-
-    __slots__ = ("b", "end", "part")
-
-    def __init__(self, b: "DocBuilder", end: bool, part: int):
-        self.b, self.end, self.part = b, end, part
-
-    def __getitem__(self, i: int) -> int:
-        return self.b.line_col(i, self.end)[self.part]
-
-    def __len__(self) -> int:
-        return len(self.b.nodes)
-
-
 class DocBuilder:
     """Per-document DOM; node ids index ``self.nodes``.
 
@@ -259,8 +219,7 @@ class DocBuilder:
     sentinel (dom.ts:536).
     """
 
-    __slots__ = ("nodes", "open_stack", "in_math_or_svg", "xml_mode",
-                 "pos", "_views")
+    __slots__ = ("nodes", "open_stack", "in_math_or_svg", "xml_mode", "pos")
 
     def __init__(self) -> None:
         self.nodes: list[list] = []
@@ -268,43 +227,9 @@ class DocBuilder:
         self.in_math_or_svg = 0
         self.xml_mode = False
         self.pos: _Pos | None = None  # set by parse(positions=True)
-        self._views: dict[int, _FieldView] = {}
 
         root = self.new_element("/", synthetic=True)
         self.open_stack.append(root)
-
-    # --- columnar views (API compatibility for tests/format/stylize) -------
-
-    def _view(self, f: int) -> _FieldView:
-        view = self._views.get(f)
-        if view is None:
-            view = self._views[f] = _FieldView(self.nodes, f)
-        return view
-
-    kind = property(lambda self: self._view(N_KIND))
-    tag = property(lambda self: self._view(N_TAG))
-    tag_lc = property(lambda self: self._view(N_TAG_LC))
-    parent = property(lambda self: self._view(N_PARENT))
-    children = property(lambda self: self._view(N_CHILDREN))
-    closure = property(lambda self: self._view(N_CLOSURE))
-    content = property(lambda self: self._view(N_CONTENT))
-    terminated = property(lambda self: self._view(N_TERMINATED))
-    poss_ent = property(lambda self: self._view(N_POSS_ENT))
-    line = property(lambda self: _PosView(self, False, 0))
-    col = property(lambda self: _PosView(self, False, 1))
-    end_tag = property(lambda self: self._view(N_END_TAG))
-    end_line = property(lambda self: _PosView(self, True, 0))
-    end_col = property(lambda self: _PosView(self, True, 1))
-    attr_names = property(lambda self: self._view(N_ATTR_NAMES))
-    attr_values = property(lambda self: self._view(N_ATTR_VALUES))
-    attr_spacing = property(lambda self: self._view(N_ATTR_SPACING))
-    attr_equals = property(lambda self: self._view(N_ATTR_EQUALS))
-    attr_quotes = property(lambda self: self._view(N_ATTR_QUOTES))
-    inner_ws = property(lambda self: self._view(N_INNER_WS))
-    bad_term = property(lambda self: self._view(N_BAD_TERM))
-    synthetic = property(lambda self: self._view(N_SYNTHETIC))
-    src_start = property(lambda self: self._view(N_SRC_START))
-    src_end = property(lambda self: self._view(N_SRC_END))
 
     def line_col(self, node: int, end: bool = False) -> tuple[int, int]:
         """(line, column) of ``node`` (an unmatched end tag's at its

@@ -51,7 +51,12 @@ from __future__ import annotations
 from typing import Iterator, NamedTuple
 
 from . import dom as D
-from .dom import DocBuilder, cq, oq
+from .dom import (
+    N_ATTR_EQUALS, N_ATTR_NAMES, N_ATTR_QUOTES, N_ATTR_SPACING, N_ATTR_VALUES,
+    N_BAD_TERM, N_CHILDREN, N_CLOSURE, N_CONTENT, N_END_TAG, N_INNER_WS, N_KIND,
+    N_POSS_ENT, N_SRC_END, N_SRC_START, N_SYNTHETIC, N_TAG, N_TERMINATED,
+    DocBuilder, cq, oq,
+)
 from .parser import ParseResult
 
 __all__ = ["Event", "parse_events", "iter_events", "to_generic",
@@ -96,12 +101,14 @@ def iter_events(b: DocBuilder, node: int = 0, *,
     occur inside a tag name — '/' is excluded from name runs).
     """
     # stack entries: (node, phase, depth); phase 0 = emit, -1 = end-tag
-    stack: list[tuple[int, int, int]] = [(c, 0, 0)
-                                         for c in reversed(b.children[node] or [])]
+    nodes = b.nodes
+    stack: list[tuple[int, int, int]] = [
+        (c, 0, 0) for c in reversed(nodes[node][N_CHILDREN] or [])]
     while stack:
-        nd, phase, depth = stack.pop()
+        n, phase, depth = stack.pop()
+        nd = nodes[n]
         if phase == -1:
-            end_tag = b.end_tag[nd]
+            end_tag = nd[N_END_TAG]
             # split '</tag<trailing>'; trailing keeps whatever follows the
             # name (inner whitespace + '>' — or nothing at EOF)
             body = end_tag[2:]
@@ -112,7 +119,7 @@ def iter_events(b: DocBuilder, node: int = 0, *,
             # char after the closing '>'); with the source available the
             # start is exact even when the reconstitution text is shorter
             # than the source run (ws-after-'</' lossy shape)
-            src_end = b.src_end[nd]
+            src_end = nd[N_SRC_END]
             if src_end >= 0 and source is not None:
                 # exact run first: when the stored end-tag text matches the
                 # source bytes, the span is src_end - len (a malformed
@@ -131,21 +138,21 @@ def iter_events(b: DocBuilder, node: int = 0, *,
                         s, src_end)
             continue
 
-        kind = b.kind[nd]
+        kind = nd[N_KIND]
         if kind == D.ELEMENT:
-            emit_self = not b.synthetic[nd]
+            emit_self = not nd[N_SYNTHETIC]
             if emit_self:
-                tag = b.tag[nd]
-                s = b.src_start[nd]
+                tag = nd[N_TAG]
+                s = nd[N_SRC_START]
                 # span = exactly the '<tag' run this event accounts for
                 yield Event("start-tag-start", depth, (tag,), "<" + tag,
                             s, s + 1 + len(tag) if s >= 0 else -1)
-                names = b.attr_names[nd]
+                names = nd[N_ATTR_NAMES]
                 if names:
-                    values = b.attr_values[nd]
-                    spacing = b.attr_spacing[nd]
-                    equals = b.attr_equals[nd]
-                    quotes = b.attr_quotes[nd]
+                    values = nd[N_ATTR_VALUES]
+                    spacing = nd[N_ATTR_SPACING]
+                    equals = nd[N_ATTR_EQUALS]
+                    quotes = nd[N_ATTR_QUOTES]
                     for i in range(len(names)):
                         q = quotes[i]
                         src = (spacing[i] + names[i] + equals[i]
@@ -153,28 +160,28 @@ def iter_events(b: DocBuilder, node: int = 0, *,
                         yield Event("attribute", depth,
                                     (spacing[i], names[i], equals[i],
                                      values[i], q), src, -1, -1)
-                inner_ws = b.inner_ws[nd] or ""
-                bad = b.bad_term[nd]
+                inner_ws = nd[N_INNER_WS] or ""
+                bad = nd[N_BAD_TERM]
                 if bad is not None:
                     end, terminated = bad, False
-                elif b.closure[nd] == D.SELF_CLOSED:
+                elif nd[N_CLOSURE] == D.SELF_CLOSED:
                     end, terminated = "/>", True
                 else:
                     end, terminated = ">", True
                 yield Event("start-tag-end", depth, (inner_ws, end, terminated),
                             inner_ws + end, -1, -1)
-                if b.closure[nd] == D.EXPLICITLY_CLOSED and b.end_tag[nd]:
-                    stack.append((nd, -1, depth))
+                if nd[N_CLOSURE] == D.EXPLICITLY_CLOSED and nd[N_END_TAG]:
+                    stack.append((n, -1, depth))
             child_depth = depth + 1 if emit_self else depth
-            for child in reversed(b.children[nd] or []):
+            for child in reversed(nd[N_CHILDREN] or []):
                 stack.append((child, 0, child_depth))
             continue
 
-        content = b.content[nd]
-        terminated = b.terminated[nd]
-        s, e = b.src_start[nd], b.src_end[nd]
+        content = nd[N_CONTENT]
+        terminated = nd[N_TERMINATED]
+        s, e = nd[N_SRC_START], nd[N_SRC_END]
         if kind == D.TEXT:
-            yield Event("text", depth, (content, b.poss_ent[nd]), content, s, e)
+            yield Event("text", depth, (content, nd[N_POSS_ENT]), content, s, e)
         elif kind == D.COMMENT:
             yield Event("comment", depth, (content, terminated),
                         "<!--" + content + ("-->" if terminated else ""), s, e)

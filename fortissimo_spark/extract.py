@@ -30,7 +30,10 @@ checks that every ``ExtractResult`` field stays the same.  ``none`` and
 from __future__ import annotations
 
 from .chars import trim, unescape_entities
-from .dom import CDATA, ELEMENT, TEXT, DocBuilder
+from .dom import (
+    CDATA, ELEMENT, N_CHILDREN, N_CONTENT, N_KIND, N_POSS_ENT, N_SRC_END,
+    N_SRC_START, N_TAG_LC, TEXT, DocBuilder,
+)
 from .parser import _native
 
 __all__ = ["DROP_TAGS", "INLINE_TAGS", "BOOST_TAGS", "ExtractResult",
@@ -81,8 +84,9 @@ class ExtractResult:
 
 
 def _decoded(b: DocBuilder, node: int) -> str:
-    c = b.content[node]
-    if b.kind[node] == TEXT and b.poss_ent[node] and "&" in c:
+    nd = b.nodes[node]
+    c = nd[N_CONTENT]
+    if nd[N_KIND] == TEXT and nd[N_POSS_ENT] and "&" in c:
         return unescape_entities(c)
     return c
 
@@ -96,7 +100,6 @@ def validate_spans(b: DocBuilder, source: str) -> tuple[int, bool]:
 
     Returns (n_spans_checked, all_ok).
     """
-    from .dom import N_CHILDREN, N_CONTENT, N_KIND, N_SRC_END, N_SRC_START
     nodes = b.nodes
     n_src = len(source)
     count = 0
@@ -129,7 +132,6 @@ def _text_content_skipping(b: DocBuilder, node: int, out: list, spans: list,
                            drop: frozenset) -> None:
     """textContent of ``node`` without the subtrees of ``drop`` elements,
     plus the source span of every emitted text/CDATA node."""
-    from .dom import N_CHILDREN, N_KIND, N_SRC_END, N_SRC_START, N_TAG_LC
     nodes = b.nodes
     stack = list(reversed(nodes[node][N_CHILDREN] or []))
     while stack:
@@ -169,10 +171,6 @@ def extract(b: DocBuilder, strip: str = "density",
         raise ValueError(f"unknown strip mode {strip!r}")
 
     # --- density mode: group text nodes into blocks by nearest block ancestor
-    from .dom import (
-        N_CHILDREN, N_CONTENT, N_KIND, N_POSS_ENT, N_SRC_END, N_SRC_START,
-        N_TAG_LC,
-    )
     nodes = b.nodes
     # blocks are [tag, parts, spans, link_chars] lists (cheaper than dicts)
     blocks: list[list] = []

@@ -22,7 +22,11 @@ from .chars import (
     compact_whitespace, escape_to_entities, reencode_entities, trim_left,
     trim_right,
 )
-from .dom import DocBuilder
+from .dom import (
+    N_ATTR_EQUALS, N_ATTR_NAMES, N_ATTR_QUOTES, N_ATTR_SPACING, N_ATTR_VALUES,
+    N_CHILDREN, N_CLOSURE, N_CONTENT, N_END_TAG, N_INNER_WS, N_KIND, N_PARENT,
+    N_POSS_ENT, N_SYNTHETIC, N_TAG, N_TAG_LC, DocBuilder,
+)
 
 __all__ = ["ValueQuoting", "ValueQuoteStyle", "FormatOptions", "format_html"]
 
@@ -140,11 +144,12 @@ def _tabify(s: str, opts: FormatOptions) -> str:
 
 
 def _is_comment_like(b: DocBuilder, node: int) -> bool:
-    return b.kind[node] in (D.COMMENT, D.DECLARATION, D.PROCESSING)
+    return b.nodes[node][N_KIND] in (D.COMMENT, D.DECLARATION, D.PROCESSING)
 
 
 def format_html(b: DocBuilder, options: FormatOptions | None = None) -> None:
     opts = options or FormatOptions()
+    nodes = b.nodes
 
     if opts.instantiate_synthetic_nodes:
         _instantiate_synthetic(b, 0)
@@ -155,23 +160,24 @@ def format_html(b: DocBuilder, options: FormatOptions | None = None) -> None:
         opts.last_text = NULL_TEXT
         _preprocess_whitespace(b, 0, opts)
 
-    children = b.children[0]
+    children = nodes[0][N_CHILDREN]
     if opts.indent > 0 and (opts.indent == 1 or opts.trim_document) and children:
-        if b.kind[children[0]] == D.TEXT:
-            b.content[children[0]] = trim_left(b.content[children[0]])
-        last = children[-1]
-        if b.kind[last] == D.TEXT:
-            b.content[last] = trim_right(b.content[last])
+        first = nodes[children[0]]
+        if first[N_KIND] == D.TEXT:
+            first[N_CONTENT] = trim_left(first[N_CONTENT])
+        last = nodes[children[-1]]
+        if last[N_KIND] == D.TEXT:
+            last[N_CONTENT] = trim_right(last[N_CONTENT])
 
     if opts.indent > 1 and opts.end_document_with_newline:
-        children = b.children[0]
-        if not children or b.kind[children[-1]] != D.TEXT:
+        children = nodes[0][N_CHILDREN]
+        if not children or nodes[children[-1]][N_KIND] != D.TEXT:
             txt = b.new_leaf(D.TEXT, opts.eol, poss_ent=False)
-            b.parent[txt] = 0
+            nodes[txt][N_PARENT] = 0
             children.append(txt)
         else:
-            last = children[-1]
-            b.content[last] = re.sub(r"\s*\Z", opts.eol, b.content[last], count=1)
+            last = nodes[children[-1]]
+            last[N_CONTENT] = re.sub(r"\s*\Z", opts.eol, last[N_CONTENT], count=1)
 
     opts.last_text = NULL_TEXT
     _format_node(b, 0, opts, 0)
@@ -182,12 +188,14 @@ def _instantiate_synthetic(b: DocBuilder, node: int) -> None:
 
 
 def _instantiate_synthetic_gen(b: DocBuilder, node: int):
-    for elem in b.children[node] or []:
-        if b.kind[elem] == D.ELEMENT:
-            if b.synthetic[elem]:
-                b.synthetic[elem] = False
-                b.closure[elem] = D.EXPLICITLY_CLOSED
-                b.end_tag[elem] = "</" + b.tag[elem] + ">"
+    nodes = b.nodes
+    for elem in nodes[node][N_CHILDREN] or []:
+        nd = nodes[elem]
+        if nd[N_KIND] == D.ELEMENT:
+            if nd[N_SYNTHETIC]:
+                nd[N_SYNTHETIC] = False
+                nd[N_CLOSURE] = D.EXPLICITLY_CLOSED
+                nd[N_END_TAG] = "</" + nd[N_TAG] + ">"
             yield _instantiate_synthetic_gen(b, elem)
 
 
@@ -196,22 +204,24 @@ def _remove_synthetic(b: DocBuilder, node: int) -> None:
 
 
 def _remove_synthetic_gen(b: DocBuilder, node: int):
-    children = b.children[node]
+    nodes = b.nodes
+    children = nodes[node][N_CHILDREN]
     if not children:
         return
     for i, elem in enumerate(children):
-        if b.kind[elem] == D.ELEMENT:
+        if nodes[elem][N_KIND] == D.ELEMENT:
             child = elem
-            while b.synthetic[child]:
-                child = b.children[child][0]
+            while nodes[child][N_SYNTHETIC]:
+                child = nodes[child][N_CHILDREN][0]
             children[i] = child
-            b.parent[child] = node
+            nodes[child][N_PARENT] = node
             yield _remove_synthetic_gen(b, child)
 
 
 def _only_contains_inline(b: DocBuilder, node: int, opts: FormatOptions) -> bool:
-    for child in b.children[node] or []:
-        if b.kind[child] == D.ELEMENT and opts.block_ctx.get(child):
+    nodes = b.nodes
+    for child in nodes[node][N_CHILDREN] or []:
+        if nodes[child][N_KIND] == D.ELEMENT and opts.block_ctx.get(child):
             return False
     return True
 
@@ -220,23 +230,25 @@ def _apply_indentation(b: DocBuilder, text_node: int, indent: int,
                        add_newline: bool, opts: FormatOptions) -> None:
     if opts.indent > 1:
         indentation = _tabify(" " * (indent * opts.indent), opts)
-        content = b.content[text_node]
+        nd = b.nodes[text_node]
+        content = nd[N_CONTENT]
         m = re.match(r"(.*(?:\r\n|\n|\r))[ \t\f]*\Z", content, re.S)
         if m:
-            b.content[text_node] = m.group(1) + indentation
+            nd[N_CONTENT] = m.group(1) + indentation
         else:
-            b.content[text_node] = content + (opts.eol if add_newline else "") + indentation
+            nd[N_CONTENT] = content + (opts.eol if add_newline else "") + indentation
 
 
 def _format_attributes(b: DocBuilder, node: int, indent: int,
                        opts: FormatOptions) -> None:
-    names = b.attr_names[node]
+    nd = b.nodes[node]
+    names = nd[N_ATTR_NAMES]
     if not names:
         return
-    values = b.attr_values[node]
-    equals = b.attr_equals[node]
-    quotes = b.attr_quotes[node]
-    spacing = b.attr_spacing[node]
+    values = nd[N_ATTR_VALUES]
+    equals = nd[N_ATTR_EQUALS]
+    quotes = nd[N_ATTR_QUOTES]
+    spacing = nd[N_ATTR_SPACING]
     VQ, VQS = ValueQuoting, ValueQuoteStyle
 
     for i in range(len(names)):
@@ -265,7 +277,7 @@ def _format_attributes(b: DocBuilder, node: int, indent: int,
         sp = spacing[i]
         if opts.indent > 1 and opts.normalize_attribute_spacing:
             if re.search(r"[\r\n]", sp):
-                extra = (column_width(b.tag[node]) + 2 if opts.align_attributes
+                extra = (column_width(nd[N_TAG]) + 2 if opts.align_attributes
                          else opts.continuation_indent)
                 sp = re.sub(r"[^\r\n]", "", sp) + " " * (indent * opts.indent + extra)
             else:
@@ -282,11 +294,12 @@ def _format_node(b: DocBuilder, node: int, opts: FormatOptions, indent: int) -> 
 
 
 def _format_node_gen(b: DocBuilder, node: int, opts: FormatOptions, indent: int):
-    children = b.children[node]
+    nodes = b.nodes
+    children = nodes[node][N_CHILDREN]
     if not children:
         return
 
-    tag_lc = b.tag_lc[node]
+    tag_lc = nodes[node][N_TAG_LC]
     delta = 0 if tag_lc in opts.children_not_indented else 1
     keep_ws = tag_lc in opts.keep_whitespace_inside or tag_lc == "/"
     special_text = tag_lc in ("script", "style")
@@ -295,46 +308,47 @@ def _format_node_gen(b: DocBuilder, node: int, opts: FormatOptions, indent: int)
     i = 0
     while i < len(children):
         elem = children[i]
-        kind = b.kind[elem]
+        nd = nodes[elem]
+        kind = nd[N_KIND]
 
         if kind == D.ELEMENT:
             _format_attributes(b, elem, indent + delta, opts)
 
             if opts.indent > 0:
                 if opts.indent == 1:
-                    b.end_tag[elem] = re.sub(r"\s+>\Z", ">",
-                                             compact_whitespace(b.end_tag[elem] or ""))
-                if re.search(r"[\r\n][ \t\f]*>", b.end_tag[elem] or ""):
-                    m = re.match(r"(.*)[\r\n][ \t\f]*>", b.end_tag[elem], re.S)
-                    b.end_tag[elem] = (m.group(1) + opts.eol
-                                       + _tabify(" " * ((indent + delta) * opts.indent), opts)
-                                       + ">")
+                    nd[N_END_TAG] = re.sub(r"\s+>\Z", ">",
+                                           compact_whitespace(nd[N_END_TAG] or ""))
+                if re.search(r"[\r\n][ \t\f]*>", nd[N_END_TAG] or ""):
+                    m = re.match(r"(.*)[\r\n][ \t\f]*>", nd[N_END_TAG], re.S)
+                    nd[N_END_TAG] = (m.group(1) + opts.eol
+                                     + _tabify(" " * ((indent + delta) * opts.indent), opts)
+                                     + ">")
                     pre_indented = i
 
                 has_last = opts.last_text not in (NULL_TEXT, CLEAR_TEXT)
-                if has_last and b.tag_lc[elem] in opts.remove_new_line_before:
-                    b.content[opts.last_text] = re.sub(r"\s+\Z", "",
-                                                       b.content[opts.last_text])
-                elif ((b.tag_lc[elem] in opts.new_line_before
+                if has_last and nd[N_TAG_LC] in opts.remove_new_line_before:
+                    last = nodes[opts.last_text]
+                    last[N_CONTENT] = re.sub(r"\s+\Z", "", last[N_CONTENT])
+                elif ((nd[N_TAG_LC] in opts.new_line_before
                        or opts.block_ctx.get(elem)) and pre_indented != i - 1):
                     if not has_last:
                         txt = b.new_leaf(D.TEXT, "", poss_ent=False)
-                        b.parent[txt] = node
+                        nodes[txt][N_PARENT] = node
                         children.insert(i, txt)
                         opts.last_text = txt
                         i += 1
                     _apply_indentation(b, opts.last_text, indent + delta, True, opts)
 
             if opts.indent == 1:
-                b.inner_ws[elem] = ""
+                nd[N_INNER_WS] = ""
 
             save_last_text = opts.last_text
             opts.last_text = NULL_TEXT
             yield _format_node_gen(b, elem, opts, indent + delta)
 
-            if not b.children[elem]:
+            if not nd[N_CHILDREN]:
                 opts.last_text = (CLEAR_TEXT
-                                  if b.closure[elem] == D.EXPLICITLY_CLOSED
+                                  if nd[N_CLOSURE] == D.EXPLICITLY_CLOSED
                                   else NULL_TEXT)
             elif opts.last_text is NULL_TEXT:
                 opts.last_text = save_last_text
@@ -343,57 +357,60 @@ def _format_node_gen(b: DocBuilder, node: int, opts: FormatOptions, indent: int)
             opts.last_text = elem
             if (opts.escape_options.reencode != ReencodeOptions.DONT_CHANGE
                     and not keep_ws and tag_lc not in ("script", "style")):
-                if b.poss_ent[elem]:
-                    b.content[elem] = reencode_entities(b.content[elem],
-                                                        opts.escape_options)
+                if nd[N_POSS_ENT]:
+                    nd[N_CONTENT] = reencode_entities(nd[N_CONTENT],
+                                                      opts.escape_options)
                 else:
-                    b.content[elem] = escape_to_entities(b.content[elem],
-                                                         opts.escape_options)
+                    nd[N_CONTENT] = escape_to_entities(nd[N_CONTENT],
+                                                       opts.escape_options)
         else:
             has_last = opts.last_text not in (NULL_TEXT, CLEAR_TEXT)
             if (opts.indent > 0 and has_last
                     and (opts.indent == 1
-                         or re.search(r"[\r\n]", b.content[opts.last_text]))):
+                         or re.search(r"[\r\n]", nodes[opts.last_text][N_CONTENT]))):
                 _apply_indentation(b, opts.last_text, indent + delta, False, opts)
             opts.last_text = NULL_TEXT
 
         i += 1
 
+    closure = nodes[node][N_CLOSURE]
     if opts.indent > 1 and (special_text
                             or (not keep_ws and not _only_contains_inline(b, node, opts))):
         if opts.last_text in (NULL_TEXT, CLEAR_TEXT):
             txt = b.new_leaf(D.TEXT, "", poss_ent=False)
-            b.parent[txt] = node
+            nodes[txt][N_PARENT] = node
             children.append(txt)
             opts.last_text = txt
 
-        if b.closure[node] == D.EXPLICITLY_CLOSED and tag_lc not in opts.inline:
+        last = nodes[opts.last_text]
+        if closure == D.EXPLICITLY_CLOSED and tag_lc not in opts.inline:
             indentation = _tabify(" " * (indent * opts.indent), opts)
-            content = b.content[opts.last_text]
+            content = last[N_CONTENT]
             m = re.match(r"(.*(?:\r\n|\n|\r))[ \t\f]*\Z", content, re.S)
-            b.content[opts.last_text] = ((m.group(1) if m else content + opts.eol)
-                                         + indentation)
+            last[N_CONTENT] = ((m.group(1) if m else content + opts.eol)
+                               + indentation)
         else:
-            b.content[opts.last_text] = re.sub(r"(?:\r\n|\n|\r)[ \t\f]*\Z", "",
-                                               b.content[opts.last_text])
+            last[N_CONTENT] = re.sub(r"(?:\r\n|\n|\r)[ \t\f]*\Z", "",
+                                     last[N_CONTENT])
 
-    if b.closure[node] == D.EXPLICITLY_CLOSED:
+    if closure == D.EXPLICITLY_CLOSED:
         opts.last_text = CLEAR_TEXT
-    elif b.closure[node] != D.IMPLICITLY_CLOSED:
+    elif closure != D.IMPLICITLY_CLOSED:
         opts.last_text = NULL_TEXT
 
 
 def _followed_by_block(b: DocBuilder, parent: int, child_index: int,
                        opts: FormatOptions) -> bool:
-    children = b.children[parent]
+    nodes = b.nodes
+    children = nodes[parent][N_CHILDREN]
     while True:
         child_index += 1
         if child_index >= len(children):
             return False
         sibling = children[child_index]
-        kind = b.kind[sibling]
+        kind = nodes[sibling][N_KIND]
         if kind == D.ELEMENT:
-            return b.tag_lc[sibling] not in opts.inline
+            return nodes[sibling][N_TAG_LC] not in opts.inline
         if kind in (D.TEXT, D.CDATA):
             return False
 
@@ -405,13 +422,14 @@ def _preprocess_whitespace(b: DocBuilder, node: int, opts: FormatOptions,
 
 def _preprocess_whitespace_gen(b: DocBuilder, node: int, opts: FormatOptions,
                                block_start: bool = False, block_end: bool = False):
-    tag_lc = b.tag_lc[node]
+    nodes = b.nodes
+    tag_lc = nodes[node][N_TAG_LC]
     if tag_lc in opts.keep_whitespace_inside or tag_lc in ("script", "style"):
         opts.block_ctx[node] = True
         opts.last_text = NULL_TEXT
         return
 
-    children = b.children[node] or []
+    children = nodes[node][N_CHILDREN] or []
     is_block = tag_lc not in opts.inline
     opts.block_ctx[node] = is_block
 
@@ -422,14 +440,14 @@ def _preprocess_whitespace_gen(b: DocBuilder, node: int, opts: FormatOptions,
             if i == len(children) - 1:
                 block_end = True
 
-        kind = b.kind[child]
+        kind = nodes[child][N_KIND]
         if kind == D.ELEMENT:
             yield _preprocess_whitespace_gen(b, child, opts, block_start, block_end)
             block_start = bool(opts.block_ctx.get(child))
         elif kind == D.TEXT:
             after_comment = i > 0 and _is_comment_like(b, children[i - 1])
             before_comment = i + 1 < len(children) and _is_comment_like(b, children[i + 1])
-            content = b.content[child]
+            content = nodes[child][N_CONTENT]
 
             if after_comment or before_comment:
                 content = re.sub(r"[\n\r]+", opts.eol,
@@ -444,7 +462,7 @@ def _preprocess_whitespace_gen(b: DocBuilder, node: int, opts: FormatOptions,
 
                 has_last = opts.last_text not in (NULL_TEXT, CLEAR_TEXT)
                 if block_start or (content.startswith(" ") and has_last
-                                   and b.content[opts.last_text].endswith(" ")):
+                                   and nodes[opts.last_text][N_CONTENT].endswith(" ")):
                     content = trim_left(content, keep_newlines)
                     opts.block_ctx[child] = True
                     block_start = False
@@ -454,9 +472,10 @@ def _preprocess_whitespace_gen(b: DocBuilder, node: int, opts: FormatOptions,
 
             has_last = opts.last_text not in (NULL_TEXT, CLEAR_TEXT)
             if content.startswith(" ") and has_last:
-                b.content[opts.last_text] = trim_right(b.content[opts.last_text])
+                last = nodes[opts.last_text]
+                last[N_CONTENT] = trim_right(last[N_CONTENT])
 
-            b.content[child] = content
+            nodes[child][N_CONTENT] = content
             opts.last_text = child
         elif kind == D.CDATA:
             block_start = False

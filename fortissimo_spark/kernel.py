@@ -39,6 +39,7 @@ different kernels over one page agree.
 from __future__ import annotations
 
 import codecs
+import hashlib
 import json
 import re
 from functools import lru_cache
@@ -49,8 +50,11 @@ from pyspark.sql.types import (
 )
 
 from .batches import row_kernel
-from .dom import ELEMENT, N_ATTR_NAMES, N_ATTR_VALUES, N_KIND, N_PARENT, \
-    N_TAG_LC
+from .chars import unescape_entities
+from .dom import (
+    CDATA, ELEMENT, N_ATTR_NAMES, N_ATTR_VALUES, N_CLOSURE, N_CONTENT, N_KIND,
+    N_PARENT, N_POSS_ENT, N_SRC_END, N_SRC_START, N_SYNTHETIC, N_TAG_LC, TEXT,
+)
 from .extract import extract
 from .parser import _native, parse
 from .schema import EXTRACT_SCHEMA, NODES_SCHEMA
@@ -400,6 +404,9 @@ def page_metadata(pages) -> "DataFrame":
             .mapInPandas(make_page_meta_kernel(), _META_SCHEMA))
 
 
+_RE_SPAN = re.compile(r"[\t\n\f\r ]*\+?([0-9]+)")
+
+
 def _tables_from_dom(b) -> list[tuple]:
     """All table cells of one parsed DOM, in document order:
     (table_idx, caption, row_idx, col_idx, is_header, rowspan, colspan,
@@ -407,8 +414,11 @@ def _tables_from_dom(b) -> list[tuple]:
     nested tables don't double-count, and the DOM's table repair
     (synthetic tr for stray cells, dom.py:458) means even
     missing-markup tables come out row-shaped. Cell text is
-    whitespace-collapsed text_content; non-numeric or sub-1 spans
-    normalize to 1 (browser behavior)."""
+    whitespace-collapsed text_content; spans are read by the HTML rules
+    for parsing non-negative integers (leading ASCII whitespace, an
+    optional '+', then the leading ASCII digits: '3abc' is 3, '2.5' is
+    2), and a span without digits or below 1 normalizes to 1 (browser
+    behavior)."""
     nodes = b.nodes
 
     def nearest(node: int, tag: str) -> int:
@@ -421,9 +431,10 @@ def _tables_from_dom(b) -> list[tuple]:
         return -1
 
     def span(v) -> int:
+        m = _RE_SPAN.match(v or "")
         try:
-            n = int(str(v).strip())
-        except (TypeError, ValueError):
+            n = int(m.group(1)) if m else 1
+        except ValueError:  # more digits than int() converts
             return 1
         return n if n >= 1 else 1
 
@@ -489,8 +500,6 @@ def _sections_from_dom(b) -> list[tuple]:
     order, so one linear scan with a parent-chain class check per
     text/heading node gives document order without re-walking
     subtrees."""
-    from .chars import unescape_entities
-    from .dom import CDATA, N_CONTENT, N_POSS_ENT, TEXT as TEXT_NODE
     nodes = b.nodes
 
     def blocked(node: int, *, in_heading_ok: bool) -> bool:
@@ -517,11 +526,11 @@ def _sections_from_dom(b) -> list[tuple]:
                 "level": int(nd[N_TAG_LC][1]),
                 "heading": " ".join(b.text_content(i).split()),
                 "parts": []})
-        elif k == TEXT_NODE or k == CDATA:
+        elif k == TEXT or k == CDATA:
             if blocked(i, in_heading_ok=False):
                 continue
             c = nd[N_CONTENT]
-            if k == TEXT_NODE and nd[N_POSS_ENT] and "&" in c:
+            if k == TEXT and nd[N_POSS_ENT] and "&" in c:
                 c = unescape_entities(c)
             sections[-1]["parts"].append(c)
     out = []
@@ -565,9 +574,6 @@ def _template_signature(b) -> tuple[str, int]:
     in parse (document) order, comma-joined; synthetic repair nodes are
     excluded so a missing-markup variant of the same template still
     matches its well-formed siblings."""
-    import hashlib
-
-    from .dom import N_SYNTHETIC
     tags = []
     nodes = b.nodes
     for i in range(1, len(nodes)):
@@ -606,149 +612,105 @@ _MICRODATA_URL_TAGS = {"a": "href", "link": "href", "area": "href",
                        "source": "src", "iframe": "src", "embed": "src"}
 
 
+def _scoped_props(b, scope: str, prop_attr: str, ref: str, type_of,
+                  content_anywhere: bool) -> list[tuple]:
+    """(scope_idx, scope_type, prop, value, is_ref) rows of one parsed
+    DOM for a scope/property vocabulary (microdata, RDFa lite). Scopes
+    are the elements with a ``scope`` attribute, in document order,
+    typed by ``type_of(nodes, attrs, node)``; each ``prop_attr`` element
+    attaches to its NEAREST scope ancestor, and its value is, in order:
+    a reference ``ref`` + index when it opens a scope itself, the
+    ``content`` attribute (of any element with ``content_anywhere``,
+    else of meta), ``datetime`` for time, the url attribute for
+    a/link/img/..., else whitespace-collapsed textContent. A scope with
+    no props still emits one (prop NULL) row so type censuses see it;
+    props outside any scope are dropped."""
+    nodes = b.nodes
+    attrs: dict[int, dict[str, str]] = {}
+    items: list[int] = []
+    item_of: dict[int, int] = {}
+    for i in range(1, len(nodes)):
+        if nodes[i][N_KIND] == ELEMENT:
+            at = attrs[i] = _attrs_ci(b, i)
+            if scope in at:
+                item_of[i] = len(items)
+                items.append(i)
+    types = [type_of(nodes, attrs, node) for node in items]
+    rows: list[tuple] = []
+    has_prop = set()
+    for i, at in attrs.items():
+        prop = at.get(prop_attr)
+        if prop is None:
+            continue
+        nd = nodes[i]
+        p = nd[N_PARENT]
+        while p >= 0 and p not in item_of:
+            p = nodes[p][N_PARENT]
+        if p < 0:
+            continue
+        owner = item_of[p]
+        tag = nd[N_TAG_LC]
+        if i in item_of:
+            value, is_ref = f"{ref}{item_of[i]}", True
+        elif ("content" in at) if content_anywhere else tag == "meta":
+            value, is_ref = at.get("content", ""), False
+        elif tag == "time" and "datetime" in at:
+            value, is_ref = at["datetime"], False
+        elif tag in _MICRODATA_URL_TAGS:
+            value, is_ref = at.get(_MICRODATA_URL_TAGS[tag], ""), False
+        else:
+            value, is_ref = " ".join(b.text_content(i).split()), False
+        rows.append((owner, types[owner], prop.strip(), value, is_ref))
+        has_prop.add(owner)
+    for idx in range(len(items)):
+        if idx not in has_prop:
+            rows.append((idx, types[idx], None, None, False))
+    rows.sort(key=lambda r: (r[0], r[2] or "", r[3] or ""))
+    return rows
+
+
 def _microdata_from_dom(b) -> list[tuple]:
     """schema.org MICRODATA rows from one parsed DOM — the second
     structured-data channel next to JSON-LD (structured_data):
     (item_idx, item_type, prop, value, is_item_ref). Items are
-    elements with ``itemscope`` in document order; each ``itemprop``
-    element attaches to its NEAREST itemscope ancestor; per the HTML
-    microdata spec the value is the ``content`` attribute for meta,
-    the url attribute for a/link/img/..., ``datetime`` for time, a
-    nested item reference '#itemN' when the prop element itself opens
-    an itemscope, else whitespace-collapsed textContent. Items with no
-    props still emit one (prop NULL) row so type censuses see them;
-    itemprops outside any itemscope are dropped (spec: no item)."""
-    nodes = b.nodes
-    items: list[int] = []
-    item_of: dict[int, int] = {}
-    rows: list[tuple] = []
-    for i in range(1, len(nodes)):
-        nd = nodes[i]
-        if nd[N_KIND] != ELEMENT:
-            continue
-        at = _attrs_ci(b, i)
-        if "itemscope" in at:
-            item_of[i] = len(items)
-            items.append(i)
-    has_prop = set()
-    for i in range(1, len(nodes)):
-        nd = nodes[i]
-        if nd[N_KIND] != ELEMENT:
-            continue
-        at = _attrs_ci(b, i)
-        prop = at.get("itemprop")
-        if prop is None:
-            continue
-        p = nd[N_PARENT]
-        owner = None
-        while p >= 0:
-            if p in item_of:
-                owner = item_of[p]
-                break
-            p = nodes[p][N_PARENT]
-        if owner is None:
-            continue
-        tag = nd[N_TAG_LC]
-        if i in item_of:
-            value, ref = f"#item{item_of[i]}", True
-        elif tag == "meta":
-            value, ref = at.get("content", ""), False
-        elif tag == "time" and "datetime" in at:
-            value, ref = at["datetime"], False
-        elif tag in _MICRODATA_URL_TAGS:
-            value, ref = at.get(_MICRODATA_URL_TAGS[tag], ""), False
-        else:
-            value, ref = " ".join(b.text_content(i).split()), False
-        otype = _attrs_ci(b, items[owner]).get("itemtype")
-        rows.append((owner, otype, prop.strip(), value, ref))
-        has_prop.add(owner)
-    for idx, node in enumerate(items):
-        if idx not in has_prop:
-            rows.append((idx, _attrs_ci(b, node).get("itemtype"),
-                         None, None, False))
-    rows.sort(key=lambda r: (r[0], r[2] or "", r[3] or ""))
-    return rows
+    elements with ``itemscope``, typed by ``itemtype``; ``itemprop``
+    elements are their props, a nested item is referenced as '#itemN',
+    and per the HTML microdata spec ``content`` is the value only for
+    meta (see _scoped_props)."""
+    return _scoped_props(b, "itemscope", "itemprop", "#item",
+                         lambda nodes, attrs, node: attrs[node].get("itemtype"),
+                         False)
+
+
+def _rdfa_type(nodes, attrs, node: int):
+    """``node``'s typeof, a bare term resolved against the nearest
+    ``vocab`` ancestor-or-self (vocab || typeof); a prefixed or absolute
+    typeof is kept verbatim; None when empty."""
+    t = attrs[node].get("typeof", "").strip()
+    if not t:
+        return None
+    if ":" in t or t.startswith("http"):
+        return t
+    p = node
+    while p > 0:  # the root holds no attributes
+        v = attrs[p].get("vocab")
+        if v is not None:
+            return v.strip() + t
+        p = nodes[p][N_PARENT]
+    return t
 
 
 def _rdfa_from_dom(b) -> list[tuple]:
     """RDFa-LITE rows from one parsed DOM — the third structured-data
     channel (JSON-LD, microdata, RDFa): (res_idx, res_type, prop,
-    value, is_res_ref). Resources are elements with ``typeof`` in
-    document order, their type resolved against the nearest ``vocab``
-    ancestor-or-self (vocab || typeof for terms without a colon/scheme;
-    prefixed or absolute typeof kept verbatim); each ``property``
-    element attaches to its nearest typeof ancestor with the microdata
-    value rules (content attr > url attr > datetime > collapsed
-    textContent), nested resources referenced as '#resN'. Propless
-    resources emit a census row; properties outside any resource drop
+    value, is_res_ref). Resources are elements with ``typeof``, typed
+    by _rdfa_type; ``property`` elements are their props with the
+    microdata value rules, except that a ``content`` attribute wins on
+    any element; nested resources are referenced as '#resN' (see
+    _scoped_props). Properties outside any resource drop
     (document-level properties are out of the lite profile's common
     crawl use)."""
-    nodes = b.nodes
-    items: list[int] = []
-    item_of: dict[int, int] = {}
-    for i in range(1, len(nodes)):
-        nd = nodes[i]
-        if nd[N_KIND] == ELEMENT and "typeof" in _attrs_ci(b, i):
-            item_of[i] = len(items)
-            items.append(i)
-
-    def vocab_for(node: int) -> str:
-        p = node
-        while p >= 0:
-            nd = nodes[p]
-            if nd[N_KIND] == ELEMENT:
-                v = _attrs_ci(b, p).get("vocab")
-                if v is not None:
-                    return v.strip()
-            p = nd[N_PARENT]
-        return ""
-
-    def type_of(node: int):
-        t = _attrs_ci(b, node).get("typeof", "").strip()
-        if not t:
-            return None
-        if ":" in t or t.startswith("http"):
-            return t
-        return vocab_for(node) + t
-
-    rows: list[tuple] = []
-    has_prop = set()
-    for i in range(1, len(nodes)):
-        nd = nodes[i]
-        if nd[N_KIND] != ELEMENT:
-            continue
-        at = _attrs_ci(b, i)
-        prop = at.get("property")
-        if prop is None:
-            continue
-        p = nd[N_PARENT]
-        owner = None
-        while p >= 0:
-            if p in item_of:
-                owner = item_of[p]
-                break
-            p = nodes[p][N_PARENT]
-        if owner is None:
-            continue
-        tag = nd[N_TAG_LC]
-        if i in item_of:
-            value, ref = f"#res{item_of[i]}", True
-        elif "content" in at:
-            value, ref = at["content"], False
-        elif tag == "time" and "datetime" in at:
-            value, ref = at["datetime"], False
-        elif tag in _MICRODATA_URL_TAGS:
-            value, ref = at.get(_MICRODATA_URL_TAGS[tag], ""), False
-        else:
-            value, ref = " ".join(b.text_content(i).split()), False
-        rows.append((owner, type_of(items[owner]), prop.strip(),
-                     value, ref))
-        has_prop.add(owner)
-    for idx, node in enumerate(items):
-        if idx not in has_prop:
-            rows.append((idx, type_of(node), None, None, False))
-    rows.sort(key=lambda r: (r[0], r[2] or "", r[3] or ""))
-    return rows
+    return _scoped_props(b, "typeof", "property", "#res", _rdfa_type, True)
 
 
 def extract_rdfa(pages) -> "DataFrame":
@@ -801,17 +763,19 @@ def make_nodes_kernel():
 
     def rows(raw, parsed):
         b = parsed[0].dom
+        nodes = b.nodes
         depth_of = {0: -1}
         for node in b.doc_order():
-            p = b.parent[node]
+            nd = nodes[node]
+            p = nd[N_PARENT]
             d = depth_of.get(p, 0) + 1
             depth_of[node] = d
-            names = b.attr_names[node]
-            c = b.content[node]
-            yield (node, b.kind[node], b.tag_lc[node], p if p != 0 else -1,
-                   b.closure[node], b.synthetic[node], d,
+            names = nd[N_ATTR_NAMES]
+            c = nd[N_CONTENT]
+            yield (node, nd[N_KIND], nd[N_TAG_LC], p if p != 0 else -1,
+                   nd[N_CLOSURE], nd[N_SYNTHETIC], d,
                    len(names) if names else 0, len(c) if c else 0,
-                   b.src_start[node], b.src_end[node])
+                   nd[N_SRC_START], nd[N_SRC_END])
 
     return _page_kernel(NODES_SCHEMA, rows)
 

@@ -22,7 +22,11 @@ from .chars import (
     is_all_pcen_char, is_known_named_entity, is_valid_entity_codepoint,
     minimal_escape, replace_isolated_surrogates, separate_entities, _js_parse_int,
 )
-from .dom import DocBuilder, cq, oq
+from .dom import (
+    N_ATTR_EQUALS, N_ATTR_NAMES, N_ATTR_QUOTES, N_ATTR_SPACING, N_ATTR_VALUES,
+    N_BAD_TERM, N_CHILDREN, N_CLOSURE, N_CONTENT, N_END_TAG, N_INNER_WS, N_KIND,
+    N_PARENT, N_SYNTHETIC, N_TAG, N_TAG_LC, DocBuilder, cq, oq,
+)
 
 __all__ = ["StyleOptions", "stylize_html"]
 
@@ -103,13 +107,14 @@ def _stylize(b: DocBuilder, node: int, opts: StyleOptions) -> str:
 def _stylize_gen(b: DocBuilder, node: int, opts: StyleOptions):
     pf = opts.style_prefix
     ws = opts.show_whitespace
-    kind = b.kind[node]
+    nd = b.nodes[node]
+    kind = nd[N_KIND]
 
     if kind == D.COMMENT:
         return _markup(b._leaf_str(node), pf, "comment", ws, False)
     if kind == D.CDATA:
         return (_markup("<![CDATA[", pf, "markup", False, False)
-                + _markup(b.content[node], pf, None, ws, False)
+                + _markup(nd[N_CONTENT], pf, None, ws, False)
                 + _markup("]]>", pf, "markup", False, False))
     if kind == D.DOCTYPE:
         def repl(m):
@@ -123,49 +128,49 @@ def _stylize_gen(b: DocBuilder, node: int, opts: StyleOptions):
     if kind in (D.DECLARATION, D.PROCESSING):
         return _markup(b._leaf_str(node), pf, "markup", ws, False)
     if kind == D.TEXT:
-        parent = b.parent[node]
-        mark_entities = parent < 0 or b.tag_lc[parent] not in _NO_ENTITIES
-        return _markup(b.content[node], pf, None, ws, mark_entities)
+        parent = nd[N_PARENT]
+        mark_entities = parent < 0 or b.nodes[parent][N_TAG_LC] not in _NO_ENTITIES
+        return _markup(nd[N_CONTENT], pf, None, ws, mark_entities)
     if kind == D.UNMATCHED_CLOSE:
-        return _markup(b.content[node], pf, "error", ws, False)
+        return _markup(nd[N_CONTENT], pf, "error", ws, False)
 
     # element
     result: list[str] = []
-    bad = b.bad_term[node]
+    bad = nd[N_BAD_TERM]
     tag_class = "tag"
 
-    if not b.synthetic[node]:
-        if not is_all_pcen_char(b.tag[node]):
+    if not nd[N_SYNTHETIC]:
+        if not is_all_pcen_char(nd[N_TAG]):
             tag_class = "warning"
         result.append(_markup("<", pf, "error" if bad is not None else "markup", False, False))
-        result.append(_markup(b.tag[node], pf, "error" if bad else tag_class, False, False))
+        result.append(_markup(nd[N_TAG], pf, "error" if bad else tag_class, False, False))
 
-        names = b.attr_names[node] or []
+        names = nd[N_ATTR_NAMES] or []
         for index, attrib in enumerate(names):
-            result.append(_markup(b.attr_spacing[node][index], pf, None, ws, False))
+            result.append(_markup(nd[N_ATTR_SPACING][index], pf, None, ws, False))
             result.append(_markup(attrib, pf, "error" if attrib == "/" else "attrib", False, False))
-            result.append(_markup(b.attr_equals[node][index] or "", pf, None, ws, False))
-            quote = b.attr_quotes[node][index]
-            value = oq(quote) + b.attr_values[node][index] + cq(quote)
+            result.append(_markup(nd[N_ATTR_EQUALS][index] or "", pf, None, ws, False))
+            quote = nd[N_ATTR_QUOTES][index]
+            value = oq(quote) + nd[N_ATTR_VALUES][index] + cq(quote)
             if not quote and re.search(r'["\'=<>`]', value):
                 result.append(_markup(value, pf, "warning", False, False))
             else:
                 result.append(_markup(value, pf, "value", ws, True))
 
-        result.append(_markup(b.inner_ws[node], pf, None, ws, False))
+        result.append(_markup(nd[N_INNER_WS], pf, None, ws, False))
 
         if bad is not None:
             result.append(_markup(bad, pf, "error", False, False))
-        elif b.closure[node] == D.SELF_CLOSED:
+        elif nd[N_CLOSURE] == D.SELF_CLOSED:
             result.append(_markup("/>", pf, "markup", False, False))
         else:
             result.append(_markup(">", pf, "markup", False, False))
 
-    for child in b.children[node] or []:
+    for child in nd[N_CHILDREN] or []:
         result.append((yield _stylize_gen(b, child, opts)))
 
-    if not b.synthetic[node] and b.closure[node] == D.EXPLICITLY_CLOSED:
-        end_tag = b.end_tag[node]
+    if not nd[N_SYNTHETIC] and nd[N_CLOSURE] == D.EXPLICITLY_CLOSED:
+        end_tag = nd[N_END_TAG]
         terminated = end_tag.endswith(">")
         result.append(_markup("</", pf, "markup" if terminated else "error", False, False))
         if terminated:

@@ -2,6 +2,10 @@
 
 import re
 
+from fortissimo_spark.dom import (
+    ELEMENT, N_ATTR_NAMES, N_ATTR_QUOTES, N_ATTR_VALUES, N_CHILDREN, N_KIND,
+    N_PARENT, N_SYNTHETIC, N_TAG_LC,
+)
 from fortissimo_spark.parser import parse
 
 
@@ -10,15 +14,15 @@ def test_searchable_dom(sample_html):
     svg = b.query_selector(0, "svg")
     ths = b.query_selector_all(0, "th")
 
-    assert b.tag_lc[svg] == "svg"
+    assert b.nodes[svg][N_TAG_LC] == "svg"
     assert b.get_attr(svg, "width") == "300"
 
     assert b.depth(ths[1]) == 3
     assert b.synthetic_depth(ths[1]) == 5
 
-    assert b.tag_lc[b.query_selector(0, "#list")] == "ul"
+    assert b.nodes[b.query_selector(0, "#list")][N_TAG_LC] == "ul"
     assert len(b.query_selector_all(0, "li")) == 6
-    assert b.tag_lc[b.query_selector(0, ".content")] == "div"
+    assert b.nodes[b.query_selector(0, ".content")][N_TAG_LC] == "div"
 
 
 def test_text_content_and_inner_html(sample_html):
@@ -42,13 +46,15 @@ def test_table_repair_synthetic(sample_html):
     b = parse(sample_html).dom
     table = b.query_selector(0, "table")
     # stray th got wrapped thead > tr, both synthetic
-    theads = [c for c in b.children[table] if b.kind[c] == 0 and b.tag_lc[c] == "thead"]
+    nodes = b.nodes
+    theads = [c for c in nodes[table][N_CHILDREN]
+              if nodes[c][N_KIND] == ELEMENT and nodes[c][N_TAG_LC] == "thead"]
     assert len(theads) == 1
-    assert b.synthetic[theads[0]]
-    tr = b.children[theads[0]][0]
-    assert b.synthetic[tr] and b.tag_lc[tr] == "tr"
-    th = b.children[tr][0]
-    assert b.tag_lc[th] == "th" and not b.synthetic[th]
+    assert nodes[theads[0]][N_SYNTHETIC]
+    tr = nodes[theads[0]][N_CHILDREN][0]
+    assert nodes[tr][N_SYNTHETIC] and nodes[tr][N_TAG_LC] == "tr"
+    th = nodes[tr][N_CHILDREN][0]
+    assert nodes[th][N_TAG_LC] == "th" and not nodes[th][N_SYNTHETIC]
     # synthetic nodes serialize to zero bytes
     assert b.serialize(theads[0]) == b.serialize(tr)
 
@@ -56,11 +62,11 @@ def test_table_repair_synthetic(sample_html):
 def test_duplicate_attributes_roundtrip(sample_html):
     b = parse(sample_html).dom
     # duplicate class attr preserved in order; lookup is last-write-wins
-    dups = [i for i in range(len(b.kind))
-            if b.attr_names[i] and b.attr_names[i].count("class") == 2]
+    dups = [i for i, nd in enumerate(b.nodes)
+            if nd[N_ATTR_NAMES] and nd[N_ATTR_NAMES].count("class") == 2]
     assert len(dups) == 1
     node = dups[0]
-    assert b.attr_values[node][0] == "backdrop"
+    assert b.nodes[node][N_ATTR_VALUES][0] == "backdrop"
     assert b.get_attr(node, "class") == 'duplicate-attribute-&quot;ignored'
 
 
@@ -69,18 +75,18 @@ def test_unterminated_quote_attr():
     r = parse(content)
     b = r.dom
     span = b.query_selector(0, "span")
-    assert b.attr_quotes[span][0] == '_"'
-    assert b.attr_values[span][0] == "bar"
+    assert b.nodes[span][N_ATTR_QUOTES][0] == '_"'
+    assert b.nodes[span][N_ATTR_VALUES][0] == "bar"
     assert r.to_string() == content
 
 
 def test_doc_order_and_parents(sample_html):
     b = parse(sample_html).dom
     order = b.doc_order()
-    assert len(order) == len(b.kind) - 1  # all nodes reachable, minus root
+    assert len(order) == len(b.nodes) - 1  # all nodes reachable, minus root
     position = {node: i for i, node in enumerate(order)}
     for node in order:
-        p = b.parent[node]
+        p = b.nodes[node][N_PARENT]
         if p != 0:
             assert position[p] < position[node]
 
@@ -111,7 +117,7 @@ def _reachable(b):
     while stack:
         node = stack.pop()
         seen.append(node)
-        stack += b.children[node] or []
+        stack += b.nodes[node][N_CHILDREN] or []
     return seen
 
 

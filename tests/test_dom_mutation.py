@@ -21,7 +21,7 @@ def test_attribute_manipulation():
     assert b.serialize(node) == '<a href="#foo"></a>'
     b.add_attribute_to(node, "disabled")
     assert b.serialize(node) == '<a href="#foo" disabled></a>'
-    assert len(b.attr_names[node]) == 2
+    assert len(b.nodes[node][N_ATTR_NAMES]) == 2
     b.set_attribute(node, "href", "#bar")
     assert b.serialize(node) == '<a href="#bar" disabled></a>'
     b.delete_attribute(node, 1)
@@ -97,7 +97,7 @@ def test_to_json(sample_html):
     assert '"tag": "body"' in s
     table = b.query_selector(0, "table")
     body_json = b.to_json(body)
-    assert body_json["line"] == b.line[body]
+    assert body_json["line"] == b.line_col(body)[0]
     assert body_json["depth"] == b.depth(body)
     table_json = b.to_json(table)
     assert table_json["closureState"] == 3

@@ -143,6 +143,7 @@ def test_utf32_decode_paths():
 
 
 def test_validate_spans():
+    from fortissimo_spark.dom import N_KIND, N_SRC_START, TEXT
     from fortissimo_spark.extract import validate_spans
     from fortissimo_spark.parser import parse
 
@@ -153,9 +154,9 @@ def test_validate_spans():
 
     # corrupt one span: the validator must notice
     b = r.dom
-    for i in range(len(b.kind)):
-        if b.kind[i] == 1 and b.src_start[i] >= 0:  # TEXT
-            b.src_start[i] = b.src_start[i] + 1
+    for nd in b.nodes:
+        if nd[N_KIND] == TEXT and nd[N_SRC_START] >= 0:
+            nd[N_SRC_START] += 1
             break
     n2, ok2 = validate_spans(b, r.text)
     assert not ok2

@@ -9,6 +9,7 @@ from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.types import LongType, StringType, StructField, StructType
 
 from fortissimo_spark import kernel
+from fortissimo_spark.parser import parse
 from tests.kernel_fixtures import (
     CHARSET_PAGE, MULTI_ROW_KERNELS, loop_kernels, page_kernels, run,
 )
@@ -94,3 +95,15 @@ def test_kernels_agree_on_declared_charset():
     assert tables["cell"].tolist() == [cp1252("naïve")]
     assert (flags[["noindex", "nofollow"]].values.tolist()
             == analysis[["noindex", "nofollow"]].values.tolist())
+
+
+@pytest.mark.parametrize("value,span", [
+    ("3abc", 3), ("2.5", 2), ("1_0", 1), ("\u0663", 1), ("+2", 2),
+    (" 4 ", 4), (" 4", 4), ("0", 1), ("-1", 1), ("x", 1),
+    pytest.param("1" * 5000, 1, id="more-digits-than-int-converts")])
+def test_table_spans_parse_as_html_non_negative_integers(value, span):
+    # ASCII whitespace, an optional '+', then the leading ASCII digits (the
+    # HTML rules a browser applies); no digits or a value below 1 reads 1
+    html = f'<table><tr><td rowspan="{value}" colspan="{value}">c</td></table>'
+    ((*_, rowspan, colspan, cell),) = kernel._tables_from_dom(parse(html).dom)
+    assert (rowspan, colspan, cell) == (span, span, "c")

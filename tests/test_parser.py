@@ -2,6 +2,7 @@
 
 import pytest
 
+from fortissimo_spark.dom import N_CHILDREN, N_CLOSURE, N_CONTENT, N_KIND
 from fortissimo_spark.parser import check_encoding, normalize_encoding_name, parse
 
 from .conftest import SMALL_SAMPLE, fixture_bytes
@@ -12,11 +13,11 @@ def test_roundtrip_sample(sample_html):
     assert r.to_string() == sample_html
     # fromJSON.children[1].content == 'DOCTYPE html'; doctype.type == 'html'
     b = r.dom
-    kids = b.children[0]
-    assert b.content[kids[1]] == "DOCTYPE html"
+    doctype = b.nodes[b.nodes[0][N_CHILDREN][1]]
+    assert doctype[N_CONTENT] == "DOCTYPE html"
     from fortissimo_spark.dom import DOCTYPE, DocBuilder
-    assert b.kind[kids[1]] == DOCTYPE
-    assert DocBuilder.doctype_info(b.content[kids[1]])[0] == "html"
+    assert doctype[N_KIND] == DOCTYPE
+    assert DocBuilder.doctype_info(doctype[N_CONTENT])[0] == "html"
 
 
 def test_roundtrip_damaged(sample_html):
@@ -30,8 +31,8 @@ def test_roundtrip_w3c_xhtml(sample_w3c):
     assert r.to_string() == sample_w3c
     from fortissimo_spark.dom import DOCTYPE, DocBuilder
     b = r.dom
-    dts = [i for i, k in enumerate(b.kind) if k == DOCTYPE]
-    dt_type, variety, version = DocBuilder.doctype_info(b.content[dts[0]])
+    dts = [nd for nd in b.nodes if nd[N_KIND] == DOCTYPE]
+    dt_type, variety, version = DocBuilder.doctype_info(dts[0][N_CONTENT])
     assert dt_type == "xhtml"
     assert version == "1.0"
     assert variety == "strict"
@@ -133,7 +134,7 @@ def test_tabbed_columns():
     for ident, expected in [("do", 1), ("re", 5), ("me", 5), ("fa", 5),
                             ("so", 5), ("la", 9), ("ti", 9)]:
         node = b.query_selector(0, "#" + ident)
-        assert b.col[node] == expected, ident
+        assert b.line_col(node)[1] == expected, ident
 
 
 def test_error_count_matches_sample(sample_html):
@@ -212,10 +213,10 @@ def test_script_entities_not_decoded(sample_html):
 def test_cdata_only_in_math_svg(sample_html):
     from fortissimo_spark.dom import CDATA, DECLARATION
     b = parse(sample_html).dom
-    kinds = [b.kind[i] for i in range(len(b.kind))]
+    kinds = [nd[N_KIND] for nd in b.nodes]
     assert kinds.count(CDATA) == 2  # annotation (math) + svg text
     # the first CDATA example outside math/svg is a generic declaration
-    decls = [b.content[i] for i, k in enumerate(b.kind) if k == DECLARATION]
+    decls = [nd[N_CONTENT] for nd in b.nodes if nd[N_KIND] == DECLARATION]
     assert any(c.startswith("[CDATA[First") for c in decls)
 
 
@@ -227,9 +228,9 @@ def test_declaration_with_space_not_comment():
     r = parse(content)
     assert r.to_string() == content
     b = r.dom
-    decls = [i for i, k in enumerate(b.kind) if k == DECLARATION]
+    decls = [nd for nd in b.nodes if nd[N_KIND] == DECLARATION]
     assert len(decls) == 1
-    assert b.content[decls[0]] == " -- not a comment "
+    assert decls[0][N_CONTENT] == " -- not a comment "
 
 
 def test_implicit_closures_and_unclosed_counts(sample_html):
@@ -248,10 +249,10 @@ def test_misnested_formatting_unwind():
     from fortissimo_spark.dom import EXPLICITLY_CLOSED, IMPLICITLY_CLOSED, UNMATCHED_CLOSE
     bb = b.query_selector(0, "b")
     p = b.query_selector(0, "p")
-    assert b.closure[bb] == EXPLICITLY_CLOSED
-    assert b.closure[p] == IMPLICITLY_CLOSED
+    assert b.nodes[bb][N_CLOSURE] == EXPLICITLY_CLOSED
+    assert b.nodes[p][N_CLOSURE] == IMPLICITLY_CLOSED
     # '</p>' after the unwind is unmatched
-    assert any(k == UNMATCHED_CLOSE for k in b.kind)
+    assert any(nd[N_KIND] == UNMATCHED_CLOSE for nd in b.nodes)
 
 
 def test_formatting_element_blocked_by_marker():
@@ -261,9 +262,9 @@ def test_formatting_element_blocked_by_marker():
     assert r.to_string() == content
     from fortissimo_spark.dom import UNMATCHED_CLOSE
     b = r.dom
-    unmatched = [i for i, k in enumerate(b.kind) if k == UNMATCHED_CLOSE]
+    unmatched = [nd for nd in b.nodes if nd[N_KIND] == UNMATCHED_CLOSE]
     assert len(unmatched) == 1
-    assert b.content[unmatched[0]] == "</b>"
+    assert unmatched[0][N_CONTENT] == "</b>"
 
 
 def test_u_is_not_formatting_element():
@@ -275,5 +276,5 @@ def test_u_is_not_formatting_element():
     b = r.dom
     u = b.query_selector(0, "u")
     from fortissimo_spark.dom import EXPLICITLY_CLOSED
-    assert b.closure[u] == EXPLICITLY_CLOSED
+    assert b.nodes[u][N_CLOSURE] == EXPLICITLY_CLOSED
 

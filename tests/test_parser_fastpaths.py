@@ -23,6 +23,7 @@ import itertools
 import json
 import os
 import random
+import re
 import shlex
 import shutil
 import subprocess
@@ -32,6 +33,7 @@ import sysconfig
 import pytest
 
 import fortissimo_spark.parser as P
+from fortissimo_spark import dom
 from fortissimo_spark.dom import (
     _ATTR_SLOTS, ELEMENT, EXPLICITLY_CLOSED, IMPLICITLY_CLOSED, N_ATTR_EQUALS,
     N_ATTR_NAMES, N_ATTR_QUOTES, N_ATTR_SPACING, N_ATTR_VALUES, N_CLOSURE,
@@ -263,7 +265,8 @@ def _snapshot(text: str, empty_end_tag: bool, positions: bool,
             r.unclosed_tags, r.implicitly_closed_tags, r.lines, r.xml_mode,
             r.stopped)
     if positions:
-        snap += (list(zip(b.line, b.col, b.end_line, b.end_col)),)
+        snap += ([b.line_col(i) + b.line_col(i, end=True)
+                  for i in range(len(b.nodes))],)
     return snap
 
 
@@ -492,7 +495,9 @@ def test_both_position_modes_build_equal_records():
         with_pos, without = parse(doc), parse(doc, positions=False)
         assert with_pos.dom.nodes == without.dom.nodes, doc
         assert with_pos.lines == without.lines, doc
-        assert not any(without.dom.line) and not any(without.dom.end_col)
+        b = without.dom
+        assert all(b.line_col(i) == b.line_col(i, end=True) == (0, 0)
+                   for i in range(len(b.nodes)))
 
 
 def test_positions_parse_goes_through_the_native_core():
@@ -502,7 +507,7 @@ def test_positions_parse_goes_through_the_native_core():
     counts = P._native.stats()
     assert counts["start"] == 2 and counts["end_top"] == 2, counts
     assert counts["text"] == 2 and counts["comment"] == 1, counts
-    assert (b.line[3], b.col[3], b.end_line[3], b.end_col[3]) == (2, 9, 2, 15)
+    assert b.line_col(3) + b.line_col(3, end=True) == (2, 9, 2, 15)
 
 
 # --- the build --------------------------------------------------------------
@@ -525,6 +530,42 @@ def test_native_core_compiles_without_warnings(tmp_path):
                         "-Wextra", "-Wno-unused-parameter", "-Werror"),
         capture_output=True, text=True)
     assert out.returncode == 0, out.stderr
+
+
+def _c_enums(src: str) -> list[dict[str, int]]:
+    """Every ``enum { ... }`` block of a C source as {name: value}, an
+    entry without ``=`` one above the entry before it."""
+    src = re.sub(r"/\*.*?\*/", "", src, flags=re.S)
+    enums = []
+    for body in re.findall(r"\benum\s*\{([^}]*)\}", src):
+        values, value = {}, -1
+        for entry in body.split(","):
+            name, _, given = entry.partition("=")
+            if name.strip():
+                value = int(given) if given.strip() else value + 1
+                values[name.strip()] = value
+        enums.append(values)
+    return enums
+
+
+def test_native_enums_match_dom():
+    # the core reads and writes records by its own copies of the slot,
+    # kind and closure numbers; a change to one side alone breaks parity
+    with open(os.path.join(ROOT, "fortissimo_spark", "_native.c")) as f:
+        enums = _c_enums(f.read())
+    (slots,) = [e for e in enums if "N_KIND" in e]
+    (kinds,) = [e for e in enums if "ELEMENT" in e]
+    (closures,) = [e for e in enums if "UNCLOSED" in e]
+    b = dom.DocBuilder()
+    leaf = b.nodes[b.new_leaf(dom.TEXT, "")]
+    assert slots.pop("N_SLOTS") == len(b.nodes[0]) == len(leaf)
+    assert slots == {n: v for n, v in vars(dom).items() if n.startswith("N_")}
+    kinds["DOCTYPE"] = kinds.pop("DOCTYPE_NODE")
+    assert kinds == {n.upper(): i for i, n in enumerate(dom.KIND_NAMES)
+                     if n != "processing"}
+    assert closures == {n.upper(): i for i, n in enumerate(dom.CLOSURE_NAMES)}
+    for names in (kinds, closures):
+        assert all(getattr(dom, n) == v for n, v in names.items())
 
 
 def test_native_core_loads_where_a_compiler_exists():

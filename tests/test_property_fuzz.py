@@ -17,7 +17,9 @@ from hypothesis import assume, given, settings
 _LOSSY_END_TAG = re.compile(
     r"</[ \t\n\f\r\U00010000-\U0010FFFF]+[^ \t\n\f\r>]|<//")
 
-from fortissimo_spark.dom import ELEMENT, TEXT, CDATA
+from fortissimo_spark.dom import (
+    CDATA, ELEMENT, N_CONTENT, N_KIND, N_PARENT, N_SRC_END, N_SRC_START, TEXT,
+)
 from fortissimo_spark.extract import extract
 from fortissimo_spark.parser import parse
 
@@ -72,17 +74,17 @@ def test_spans_are_sane(doc):
     r = parse(doc)
     b = r.dom
     n = len(r.text)
-    for i in range(len(b.kind)):
-        if b.kind[i] in (TEXT, CDATA) and b.src_start[i] >= 0:
-            assert 0 <= b.src_start[i] <= b.src_end[i] <= n
+    for nd in b.nodes:
+        if nd[N_KIND] in (TEXT, CDATA) and nd[N_SRC_START] >= 0:
+            assert 0 <= nd[N_SRC_START] <= nd[N_SRC_END] <= n
     # extraction never throws either
     for mode in ("none", "basic", "density"):
         ext = extract(b, mode)
         assert isinstance(ext.text, str)
     # text node spans slice back to their raw content
-    for i in range(len(b.kind)):
-        if b.kind[i] == TEXT and b.src_start[i] >= 0:
-            assert r.text[b.src_start[i]:b.src_end[i]] == b.content[i]
+    for nd in b.nodes:
+        if nd[N_KIND] == TEXT and nd[N_SRC_START] >= 0:
+            assert r.text[nd[N_SRC_START]:nd[N_SRC_END]] == nd[N_CONTENT]
 
 
 @settings(max_examples=100, deadline=None)
@@ -91,12 +93,12 @@ def test_doc_order_consistency(doc):
     b = parse(doc).dom
     order = b.doc_order()
     assert len(order) == len(set(order))
-    assert len(order) == len(b.kind) - 1
+    assert len(order) == len(b.nodes) - 1
     # every non-root node reachable, parents are elements
     for node in order:
-        p = b.parent[node]
+        p = b.nodes[node][N_PARENT]
         assert p >= 0
-        assert b.kind[p] == ELEMENT
+        assert b.nodes[p][N_KIND] == ELEMENT
 
 
 def test_marker_blocked_formatting_no_hang():

@@ -3,7 +3,7 @@
 import re
 
 from fortissimo_spark.chars import unescape_entities
-from fortissimo_spark.dom import ELEMENT, TEXT
+from fortissimo_spark.dom import ELEMENT, N_CHILDREN, N_CONTENT, N_KIND, N_TAG_LC, TEXT
 from fortissimo_spark.parser import parse
 from fortissimo_spark.stylizer import StyleOptions, stylize_html
 
@@ -12,18 +12,19 @@ def test_stylize_roundtrip(sample_html):
     b = parse(sample_html).dom
     stylized = stylize_html(b)
 
-    b2 = parse(stylized).dom
-    html = next(c for c in b2.children[0]
-                if b2.kind[c] == ELEMENT and b2.tag_lc[c] == "html")
-    body = next(c for c in b2.children[html]
-                if b2.kind[c] == ELEMENT and b2.tag_lc[c] == "body")
+    nodes = parse(stylized).dom.nodes
+    html = next(nodes[c] for c in nodes[0][N_CHILDREN]
+                if nodes[c][N_KIND] == ELEMENT and nodes[c][N_TAG_LC] == "html")
+    body = next(nodes[c] for c in html[N_CHILDREN]
+                if nodes[c][N_KIND] == ELEMENT and nodes[c][N_TAG_LC] == "body")
 
     sb = []
-    for elem in b2.children[body]:
-        if b2.kind[elem] == ELEMENT and b2.tag_lc[elem] == "span":
-            sb.append(unescape_entities(b2.content[b2.children[elem][0]]))
-        elif b2.kind[elem] == TEXT:
-            sb.append(unescape_entities(b2.content[elem]))
+    for elem in body[N_CHILDREN]:
+        nd = nodes[elem]
+        if nd[N_KIND] == ELEMENT and nd[N_TAG_LC] == "span":
+            sb.append(unescape_entities(nodes[nd[N_CHILDREN][0]][N_CONTENT]))
+        elif nd[N_KIND] == TEXT:
+            sb.append(unescape_entities(nd[N_CONTENT]))
 
     joined = "".join(sb)
     reconstituted = "".join(

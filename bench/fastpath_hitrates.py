@@ -1,10 +1,13 @@
 #!/usr/bin/env python3
 """Report how much of the parse the native core owns.
 
-The pages go through ``decode_parse`` exactly as the page kernels call it,
-with the core's per-branch token counters (``_native.stats()``) read
-around each page.  Prints every branch's count, then the share of tokens
-and of documents that the core hands to the Python general machine.
+The pages go through ``decode_parse`` and ``extract(strip="density")``
+exactly as the extract kernel calls them, with the core's per-branch token
+counters (``_native.stats()``) read around each page.  Prints every
+branch's count, then the share of tokens and of documents that the core
+hands to the Python general machine, and the share of nodes whose 21-slot
+record was built (``NodeStore.materialized``: the records that table
+repair and the hand-offs read; the core itself builds none).
 
 Usage: python bench/fastpath_hitrates.py [ndocs] [--workload NAME]
 
@@ -23,6 +26,7 @@ sys.path.insert(0, ROOT)
 import pyarrow.parquet as pq  # noqa: E402
 
 import fortissimo_spark.parser as P  # noqa: E402
+from fortissimo_spark.extract import extract  # noqa: E402
 from fortissimo_spark.kernel import decode_parse  # noqa: E402
 
 # the token-level branches: every token the core reads is counted in
@@ -54,10 +58,14 @@ raws = raws[:opts.ndocs]
 
 total = collections.Counter()
 docs_handed_off = 0
+records = nodes = 0
 for raw in raws:
     P._native.reset_stats()
-    decode_parse(bytes(raw or b""))
+    result = decode_parse(bytes(raw or b""))[0]
+    extract(result.dom, "density")
     counts = P._native.stats()
+    records += result.dom.nodes.materialized
+    nodes += len(result.dom.nodes)
     total.update(counts)
     docs_handed_off += any(v for k, v in counts.items()
                            if k.startswith("handoff_"))
@@ -71,3 +79,5 @@ print(f"tokens handed to the general machine: {handed} of {owned + handed}"
       f" ({100 * handed / max(owned + handed, 1):.2f}%)")
 print(f"docs with a hand-off: {docs_handed_off} of {len(raws)}"
       f" ({100 * docs_handed_off / max(len(raws), 1):.1f}%)")
+print(f"records built: {records} of {nodes} nodes"
+      f" ({100 * records / max(nodes, 1):.2f}%)")

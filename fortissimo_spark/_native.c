@@ -1,17 +1,32 @@
-/* Native core for fortissimo_spark: the parse scan and density extraction.
+/* Native core for fortissimo_spark: the parse scan, node storage and
+ * density extraction.
  *
  * scan() is the parse core for fortissimo_spark.parser (HTML mode, with
- * or without positions: records hold source offsets, and line and column
+ * or without positions: nodes hold source offsets, and line and column
  * are worked out from them in Python when read).  It reads the document
- * from a token boundary, consumes every token it owns and appends the
- * same 21-slot node records to DocBuilder.nodes (and the same indices to
- * open_stack) that the Python general machine would.  It returns at the
- * first token it does not own; parse() reads that one token with the
- * general machine and calls back in.  Tree repair runs here too: an end
- * tag that is not on top of the stack takes DocBuilder.pop's path in
- * repair() (the stack scan, the formatting/marker block, the unwind and
- * the unmatched-close leaf), and only a closing table calls back into
- * Python, to DocBuilder._examine_table.
+ * from a token boundary, consumes every token it owns and adds the same
+ * nodes to DocBuilder.nodes (and the same indices to open_stack) that the
+ * Python general machine would.  It returns at the first token it does not
+ * own; parse() reads that one token with the general machine and calls
+ * back in.  Tree repair runs here too: an end tag that is not on top of
+ * the stack takes DocBuilder.pop's path in repair() (the stack scan, the
+ * formatting/marker block, the unwind and the unmatched-close leaf), and
+ * only a closing table calls back into Python, to
+ * DocBuilder._examine_table.
+ *
+ * What the core stores.  DocBuilder.nodes is a NodeStore (see "node
+ * storage" below): the scan and repair() fill an array of node structs
+ * (kind, closure and flags, parent, first-child and next-sibling links,
+ * source offsets, end_at, the interned tag and end-tag strings, the
+ * attribute spans) and build no per-node list, int or content string.  A
+ * node's 21-slot record exists only once Python has read nodes[i] (or
+ * appended the record itself, as the general machine does): it is built
+ * from the struct on that first read, text sliced from the source, and
+ * from then on it is the authority for the node.  The core's readers and
+ * writers (the scan, repair(), census(), density()) all go through one set
+ * of accessors that read the record when there is one and the struct
+ * otherwise, so a store that Python never read is read from the structs
+ * alone.
  *
  * Owned: text runs (the literal-'<' pairwise quirk, empty_end_tag, the
  * trailing-text EOF error), '<!--' comments (the m % 3 == 2 dash rule),
@@ -24,7 +39,9 @@
  * at the end of that tag (the early stop of a charset retry).
  *
  * The Python general machine is the reference; tests/test_parser_fastpaths.py
- * checks that a parse through this core equals it, field for field.
+ * checks that a parse through this core equals it, field for field, and
+ * tests/test_node_store.py that a store read in part, or edited, still
+ * does.
  *
  * What a record holds is kept lean, as in the general machine: an element
  * without attributes holds the one empty tuple in its five N_ATTR_* slots
@@ -33,15 +50,16 @@
  * per-process intern cache (interned_span), so a repeated name costs no new
  * string.
  *
- * density() is extract(strip="density") over the finished node records,
- * census() counts the unclosed and implicitly closed elements at the end
- * of a parse, and token_count() is len(text.split()) (see the sections at
- * the end).  Python's extract() loop, DocBuilder.count_unclosed_flat and
- * str.split are their references; tests/test_extract_native.py and
+ * density() is extract(strip="density") over the nodes, census() counts
+ * the unclosed and implicitly closed elements at the end of a parse, and
+ * token_count() is len(text.split()) (see the sections at the end).
+ * Python's extract() loop, DocBuilder.count_unclosed_flat and str.split
+ * are their references; tests/test_extract_native.py and
  * tests/test_parser_fastpaths.py check that each pair agrees.
  */
 #define PY_SSIZE_T_CLEAN
 #include <Python.h>
+#include <stddef.h>
 #include <string.h>
 
 /* node record slots and values: must match fortissimo_spark.dom */
@@ -74,20 +92,29 @@ static unsigned long long counts[ST_COUNT];
 
 static PyObject *OPEN_IMPLIES_CLOSE, *VOID_ELEMENTS, *RAW_TEXT_TAGS;
 static PyObject *FORMATTING_ELEMENTS, *MARKER_ELEMENTS;
-static PyObject *INT[8], *INT_M1, *S_EMPTY, *S_DQ, *S_SQ, *S_EQ, *S_LT_SLASH;
+static PyObject *INT[8], *S_EMPTY, *S_DQ, *S_SQ, *S_EQ, *S_LT_SLASH;
 static PyObject *T_EMPTY;  /* () */
 static PyObject *S_EXAMINE_TABLE, *S_IN_MATH_OR_SVG, *S_LOWER;
 static PyObject *S_BLOCK_SEP;
 
+/* the text a scan reads and a store's offsets index */
 typedef struct {
-    PyObject *t, *nodes, *stack, *b;
+    PyObject *t;
     int kind;
     const void *data;
     Py_ssize_t n;
-    PyObject *sniff;  /* parse()'s meta charset sniff; NULL once known */
-    long errors;
-    int stop;         /* the sniff asked to stop after the current tag */
-} Scan;
+} Src;
+
+static int src_init(Src *s, PyObject *t)
+{
+    if (PyUnicode_READY(t) < 0)
+        return -1;
+    s->t = t;
+    s->kind = PyUnicode_KIND(t);
+    s->data = PyUnicode_DATA(t);
+    s->n = PyUnicode_GET_LENGTH(t);
+    return 0;
+}
 
 #define CH(s, p) PyUnicode_READ((s)->kind, (s)->data, (p))
 
@@ -105,28 +132,18 @@ static inline int is_markup_start(Py_UCS4 c)
         || c == '/' || c == '!' || c == '?';
 }
 
-static Py_ssize_t ws_end(const Scan *s, Py_ssize_t p)
+static Py_ssize_t ws_end(const Src *s, Py_ssize_t p)
 {
     while (p < s->n && is_tag_ws(CH(s, p)))
         p++;
     return p;
 }
 
-static Py_ssize_t find_char(const Scan *s, Py_UCS4 ch, Py_ssize_t from)
+static Py_ssize_t find_char(const Src *s, Py_UCS4 ch, Py_ssize_t from)
 {
     if (from >= s->n)
         return -1;
     return PyUnicode_FindChar(s->t, ch, from, s->n, 1);
-}
-
-static inline PyObject *node_at(const Scan *s, Py_ssize_t idx)
-{
-    return PyList_GET_ITEM(s->nodes, idx);
-}
-
-static inline PyObject *top(const Scan *s)
-{
-    return PyList_GET_ITEM(s->stack, PyList_GET_SIZE(s->stack) - 1);
 }
 
 static inline int set_slot(PyObject *nd, int slot, PyObject *v)
@@ -142,37 +159,14 @@ static int set_int(PyObject *nd, int slot, Py_ssize_t v)
     return o == NULL ? -1 : PyList_SetItem(nd, slot, o);
 }
 
-static int pop_stack(const Scan *s)
-{
-    Py_ssize_t len = PyList_GET_SIZE(s->stack);
-    return PyList_SetSlice(s->stack, len - 1, len, NULL);
-}
-
-static int bump_math_or_svg(const Scan *s, long delta)
-{
-    PyObject *v = PyObject_GetAttr(s->b, S_IN_MATH_OR_SVG);
-    if (v == NULL)
-        return -1;
-    long x = PyLong_AsLong(v);
-    Py_DECREF(v);
-    if (x == -1 && PyErr_Occurred())
-        return -1;
-    v = PyLong_FromLong(x + delta);
-    if (v == NULL)
-        return -1;
-    int r = PyObject_SetAttr(s->b, S_IN_MATH_OR_SVG, v);
-    Py_DECREF(v);
-    return r;
-}
-
 /* t[a:b] */
-static PyObject *span(const Scan *s, Py_ssize_t a, Py_ssize_t b)
+static PyObject *span(const Src *s, Py_ssize_t a, Py_ssize_t b)
 {
     return PyUnicode_Substring(s->t, a, b);
 }
 
 /* raw.lower() for raw == t[a:b]; the ASCII case without a Python call */
-static PyObject *lower_span(const Scan *s, Py_ssize_t a, Py_ssize_t b,
+static PyObject *lower_span(const Src *s, Py_ssize_t a, Py_ssize_t b,
                             PyObject *raw)
 {
     int upper = 0;
@@ -215,7 +209,7 @@ static Interned interned[INTERN_SLOTS];
 
 /* t[a:b] and, unless lower_out is NULL, *lower_out = t[a:b].lower() (new
  * references); NULL on error */
-static PyObject *interned_span(const Scan *s, Py_ssize_t a, Py_ssize_t b,
+static PyObject *interned_span(const Src *s, Py_ssize_t a, Py_ssize_t b,
                                PyObject **lower_out)
 {
     Py_ssize_t len = b - a;
@@ -263,85 +257,606 @@ static int is_tag(PyObject *tag_lc, const char *name)
     return PyUnicode_CompareWithASCIIString(tag_lc, name) == 0;
 }
 
-/* A new record holding a leaf's defaults under ``parent``; the caller
- * sets N_KIND, N_CONTENT, N_TERMINATED, N_POSS_ENT, N_SRC_* and, for an
- * element, its tag, list and whitespace slots. */
-static PyObject *new_record(PyObject *parent)
+/* room for ``need`` items of ``size`` bytes in ``*buf`` */
+static int reserve(void **buf, Py_ssize_t *cap, Py_ssize_t need, size_t size)
 {
+    if (need <= *cap)
+        return 0;
+    Py_ssize_t cap2 = *cap ? *cap : 64;
+    while (cap2 < need)
+        cap2 *= 2;
+    void *p = PyMem_Realloc(*buf, (size_t)cap2 * size);
+    if (p == NULL) {
+        PyErr_NoMemory();
+        return -1;
+    }
+    *buf = p;
+    *cap = cap2;
+    return 0;
+}
+
+/* --- node storage -----------------------------------------------------------
+ *
+ * NodeStore is DocBuilder.nodes whenever the core is loaded: a sequence
+ * whose item i is node i's 21-slot record.  The scan and repair() fill an
+ * array of node structs and build no record, list, int or content string
+ * per node; a struct holds the source offsets, and text is sliced from the
+ * source when read.  nodes[i] builds node i's record the first time Python
+ * reads it and keeps it (counted in ``materialized``); from then on that
+ * record is the authority for node i, and its struct is not read again.
+ * nodes.append(record) (the general machine, DocBuilder.new_element)
+ * stores a Python record as it is.  Every C reader and writer goes through
+ * node_ref(), which hands back the record whenever there is one.
+ */
+
+/* one attribute as spans of t: leading whitespace, name, the equals
+ * string (whitespace, '=', whitespace), value; quote is 0, '"' or '\'' */
+typedef struct {
+    Py_ssize_t w0, w1, n0, n1, e0, e1, v0, v1;
+    Py_UCS4 quote;
+    int valued;  /* a value was read after '=' (the charset sniff's input) */
+} Attr;
+
+typedef struct {
+    PyObject *rec;                /* the record, once built or appended */
+    PyObject *tag, *tag_lc;       /* an element's names (owned) */
+    PyObject *end_tag;            /* an element's end-tag text, or an
+                                     unmatched close's content (owned);
+                                     NULL reads "" */
+    Py_ssize_t parent, first, last, next;  /* tree links; -1: none */
+    Py_ssize_t src_start, src_end, end_at;
+    Py_ssize_t a, b;              /* src[a:b]: a leaf's content, an
+                                     element's inner whitespace */
+    Py_ssize_t attr0, n_attrs;    /* an element's attributes in attrs[] */
+    unsigned char kind, closure, terminated, poss_ent, bad_term;
+} Node;
+
+typedef struct {
+    PyObject_HEAD
+    Node *v;
+    Py_ssize_t n, cap;
+    Attr *attrs;
+    Py_ssize_t n_attrs, cap_attrs;
+    PyObject *src;                /* the text the offsets index */
+    Py_ssize_t materialized;      /* records built on demand */
+    PyObject *parent_int;         /* int(parent_of), the last N_PARENT built */
+    Py_ssize_t parent_of;
+    PyObject *weakrefs;
+} NodeStore;
+
+static PyTypeObject NodeStoreType;
+#define NodeStore_Check(o) PyObject_TypeCheck(o, &NodeStoreType)
+
+/* a new node at the end of the store; its index, -1 on error */
+static Py_ssize_t store_push(NodeStore *st)
+{
+    if (reserve((void **)&st->v, &st->cap, st->n + 1, sizeof(Node)) < 0)
+        return -1;
+    Node *x = &st->v[st->n];
+    memset(x, 0, sizeof *x);
+    x->parent = x->first = x->last = x->next = -1;
+    x->src_start = x->src_end = x->end_at = -1;
+    return st->n++;
+}
+
+/* node i and, in *rec, its record if it has one (checked to be a node
+ * record) or NULL; NULL on error */
+static Node *node_ref(NodeStore *st, Py_ssize_t i, PyObject **rec)
+{
+    if (i < 0 || i >= st->n) {
+        PyErr_Format(PyExc_IndexError, "node %zd out of range", i);
+        return NULL;
+    }
+    Node *x = &st->v[i];
+    PyObject *nd = x->rec;
+    if (nd != NULL && (!PyList_Check(nd) || PyList_GET_SIZE(nd) < N_SLOTS
+                       || !PyLong_Check(PyList_GET_ITEM(nd, N_KIND)))) {
+        PyErr_Format(PyExc_ValueError, "node %zd is not a node record", i);
+        return NULL;
+    }
+    *rec = nd;
+    return x;
+}
+
+/* node i's kind; -1 with an error set on error */
+static long kind_at(NodeStore *st, Py_ssize_t i)
+{
+    PyObject *nd;
+    Node *x = node_ref(st, i, &nd);
+    if (x == NULL)
+        return -1;
+    return nd != NULL ? PyLong_AsLong(PyList_GET_ITEM(nd, N_KIND)) : x->kind;
+}
+
+/* node i's lowercase tag (borrowed: read it before Python code runs);
+ * NULL on error */
+static PyObject *tag_lc_at(NodeStore *st, Py_ssize_t i)
+{
+    PyObject *nd;
+    Node *x = node_ref(st, i, &nd);
+    if (x == NULL)
+        return NULL;
+    if (nd == NULL)
+        return x->tag_lc != NULL ? x->tag_lc : S_EMPTY;
+    PyObject *tag = PyList_GET_ITEM(nd, N_TAG_LC);
+    if (!PyUnicode_Check(tag)) {
+        PyErr_Format(PyExc_TypeError, "node %zd: malformed element record",
+                     i);
+        return NULL;
+    }
+    return tag;
+}
+
+/* node i's closure state; -1 with an error set on error */
+static long closure_at(NodeStore *st, Py_ssize_t i)
+{
+    PyObject *nd;
+    Node *x = node_ref(st, i, &nd);
+    if (x == NULL)
+        return -1;
+    return nd != NULL ? PyLong_AsLong(PyList_GET_ITEM(nd, N_CLOSURE))
+                      : x->closure;
+}
+
+/* node i is synthetic (only a Python record can be); -1 on error */
+static int synthetic_at(NodeStore *st, Py_ssize_t i)
+{
+    PyObject *nd;
+    if (node_ref(st, i, &nd) == NULL)
+        return -1;
+    return nd == NULL ? 0 : PyObject_IsTrue(PyList_GET_ITEM(nd, N_SYNTHETIC));
+}
+
+static int set_closure(NodeStore *st, Py_ssize_t i, int closure)
+{
+    PyObject *nd;
+    Node *x = node_ref(st, i, &nd);
+    if (x == NULL)
+        return -1;
+    if (nd != NULL)
+        return set_slot(nd, N_CLOSURE, INT[closure]);
+    x->closure = (unsigned char)closure;
+    return 0;
+}
+
+/* the end-tag fields of element i, closed by the end tag ``end_text`` at
+ * ``at`` that ends at ``end_pos`` */
+static int close_element(NodeStore *st, Py_ssize_t i, PyObject *end_text,
+                         Py_ssize_t at, Py_ssize_t end_pos)
+{
+    PyObject *nd;
+    Node *x = node_ref(st, i, &nd);
+    if (x == NULL)
+        return -1;
+    if (nd != NULL) {
+        if (set_int(nd, N_END_AT, at) < 0 || set_int(nd, N_SRC_END, end_pos) < 0)
+            return -1;
+        set_slot(nd, N_CLOSURE, INT[EXPLICITLY_CLOSED]);
+        return set_slot(nd, N_END_TAG, end_text);
+    }
+    x->closure = EXPLICITLY_CLOSED;
+    Py_INCREF(end_text);
+    Py_XSETREF(x->end_tag, end_text);
+    x->end_at = at;
+    x->src_end = end_pos;
+    return 0;
+}
+
+/* node c becomes the last child of node p */
+static int append_child(NodeStore *st, Py_ssize_t p, Py_ssize_t c)
+{
+    PyObject *nd;
+    Node *x = node_ref(st, p, &nd);
+    if (x == NULL)
+        return -1;
+    if (nd != NULL) {
+        PyObject *children = PyList_GET_ITEM(nd, N_CHILDREN);
+        if (!PyList_Check(children)) {
+            PyErr_Format(PyExc_TypeError, "node %zd: malformed element record",
+                         p);
+            return -1;
+        }
+        PyObject *idx = PyLong_FromSsize_t(c);
+        int r = idx == NULL ? -1 : PyList_Append(children, idx);
+        Py_XDECREF(idx);
+        return r;
+    }
+    if (x->last < 0)
+        x->first = c;
+    else
+        st->v[x->last].next = c;
+    x->last = c;
+    return 0;
+}
+
+/* the list of node i's children from its links */
+static PyObject *linked_children(NodeStore *st, Py_ssize_t i)
+{
+    Py_ssize_t m = 0;
+    for (Py_ssize_t c = st->v[i].first; c >= 0; c = st->v[c].next)
+        m++;
+    PyObject *kids = PyList_New(m);
+    if (kids == NULL)
+        return NULL;
+    Py_ssize_t j = 0;
+    for (Py_ssize_t c = st->v[i].first; c >= 0; c = st->v[c].next) {
+        PyObject *idx = PyLong_FromSsize_t(c);
+        if (idx == NULL) {
+            Py_DECREF(kids);
+            return NULL;
+        }
+        PyList_SET_ITEM(kids, j++, idx);
+    }
+    return kids;
+}
+
+/* attribute field f (0 names, 1 values, 2 spacing, 3 equals, 4 quotes) of
+ * element x as a list */
+static PyObject *attr_list(NodeStore *st, const Src *s, const Node *x, int f)
+{
+    PyObject *lst = PyList_New(x->n_attrs);
+    if (lst == NULL)
+        return NULL;
+    for (Py_ssize_t j = 0; j < x->n_attrs; j++) {
+        const Attr *a = &st->attrs[x->attr0 + j];
+        PyObject *v;
+        switch (f) {
+        case 0: v = interned_span(s, a->n0, a->n1, NULL); break;
+        case 1: v = span(s, a->v0, a->v1); break;
+        case 2: v = span(s, a->w0, a->w1); break;
+        case 3: v = span(s, a->e0, a->e1); break;
+        default:
+            v = Py_NewRef(a->quote == '"' ? S_DQ
+                          : a->quote == '\'' ? S_SQ : S_EMPTY);
+        }
+        if (v == NULL) {
+            Py_DECREF(lst);
+            return NULL;
+        }
+        PyList_SET_ITEM(lst, j, v);
+    }
+    return lst;
+}
+
+/* int(parent): siblings read in a row share one int, as they share one in
+ * a record the general machine builds (new reference) */
+static PyObject *parent_int(NodeStore *st, Py_ssize_t parent)
+{
+    if (st->parent_int == NULL || st->parent_of != parent) {
+        PyObject *v = PyLong_FromSsize_t(parent);
+        if (v == NULL)
+            return NULL;
+        Py_XSETREF(st->parent_int, v);
+        st->parent_of = parent;
+    }
+    return Py_NewRef(st->parent_int);
+}
+
+/* node i's record, built from its struct on the first read and kept (new
+ * reference); NULL on error */
+static PyObject *materialize(NodeStore *st, Py_ssize_t i)
+{
+    Node *x = &st->v[i];
+    if (x->rec != NULL)
+        return Py_NewRef(x->rec);
+    /* read from a copy: an allocation below may run a finalizer that
+     * appends to the store and moves its array */
+    const Node c = *x;
+    Src s;
+    if (src_init(&s, st->src) < 0)
+        return NULL;
+    int element = c.kind == ELEMENT;
     PyObject *nd = PyList_New(N_SLOTS);
     if (nd == NULL)
         return NULL;
-    for (int f = 0; f < N_SLOTS; f++) {
-        PyObject *v;
-        switch (f) {
-        case N_TAG: case N_TAG_LC: case N_END_TAG: case N_INNER_WS:
-            v = S_EMPTY; break;
-        case N_CLOSURE:
-            v = INT[0]; break;
-        case N_END_AT:
-            v = INT_M1; break;
-        case N_PARENT:
-            v = parent; break;
-        case N_SYNTHETIC:
-            v = Py_False; break;
-        default:
-            v = Py_None;
-        }
-        Py_INCREF(v);
-        PyList_SET_ITEM(nd, f, v);
-    }
+#define PUT(f, v)                                                       \
+    do {                                                                \
+        PyObject *v_ = (v);                                             \
+        if (v_ == NULL)                                                 \
+            goto fail;                                                  \
+        PyList_SET_ITEM(nd, (f), v_);                                   \
+    } while (0)
+    PUT(N_KIND, Py_NewRef(INT[c.kind]));
+    PUT(N_TAG, Py_NewRef(element ? c.tag : S_EMPTY));
+    PUT(N_TAG_LC, Py_NewRef(element ? c.tag_lc : S_EMPTY));
+    PUT(N_PARENT, parent_int(st, c.parent));
+    PUT(N_CHILDREN, element ? linked_children(st, i) : Py_NewRef(Py_None));
+    PUT(N_CLOSURE, Py_NewRef(INT[c.closure]));
+    PUT(N_CONTENT, element ? Py_NewRef(Py_None)
+        : c.kind == UNMATCHED_CLOSE ? Py_NewRef(c.end_tag)
+        : span(&s, c.a, c.b));
+    PUT(N_TERMINATED, Py_NewRef(c.terminated ? Py_True : Py_False));
+    PUT(N_POSS_ENT, Py_NewRef(c.poss_ent ? Py_True : Py_False));
+    PUT(N_END_TAG, Py_NewRef(element && c.end_tag != NULL ? c.end_tag
+                                                        : S_EMPTY));
+    for (int f = 0; f < 5; f++)
+        PUT(N_ATTR_NAMES + f, !element ? Py_NewRef(Py_None)
+            : c.n_attrs == 0 ? Py_NewRef(T_EMPTY)  /* shared by all five */
+            : attr_list(st, &s, &c, f));
+    PUT(N_INNER_WS, element ? span(&s, c.a, c.b) : Py_NewRef(S_EMPTY));
+    PUT(N_BAD_TERM, Py_NewRef(c.bad_term ? S_EQ : Py_None));
+    PUT(N_SYNTHETIC, Py_NewRef(Py_False));
+    PUT(N_SRC_START, PyLong_FromSsize_t(c.src_start));
+    PUT(N_SRC_END, PyLong_FromSsize_t(c.src_end));
+    PUT(N_END_AT, PyLong_FromSsize_t(c.end_at));
+#undef PUT
+    x = &st->v[i];
+    x->rec = Py_NewRef(nd);
+    Py_CLEAR(x->tag);
+    Py_CLEAR(x->tag_lc);
+    Py_CLEAR(x->end_tag);
+    st->materialized++;
     return nd;
-}
-
-/* nodes.append(nd); nodes[parent].children.append(index) (steals nd) */
-static int append_node(const Scan *s, PyObject *nd, PyObject *parent,
-                       PyObject **index_out)
-{
-    PyObject *idx = PyLong_FromSsize_t(PyList_GET_SIZE(s->nodes));
-    if (idx == NULL || PyList_Append(s->nodes, nd) < 0)
-        goto fail;
-    Py_ssize_t p = PyLong_AsSsize_t(parent);
-    if (p == -1 && PyErr_Occurred())
-        goto fail;
-    if (PyList_Append(PyList_GET_ITEM(node_at(s, p), N_CHILDREN), idx) < 0)
-        goto fail;
-    Py_DECREF(nd);
-    if (index_out != NULL)
-        *index_out = idx;
-    else
-        Py_DECREF(idx);
-    return 0;
 fail:
-    Py_XDECREF(idx);
     Py_DECREF(nd);
-    return -1;
+    return NULL;
 }
 
-/* DocBuilder.add_leaf(kind, content, terminated, poss_ent, src_start,
- * src_end, end_at); steals ``content``, which may be NULL on error */
-static int add_leaf_obj(const Scan *s, int kind, PyObject *content,
-                        int terminated, int poss_ent, Py_ssize_t src_start,
-                        Py_ssize_t src_end, Py_ssize_t end_at)
+static PyObject *store_new(PyTypeObject *type, PyObject *args, PyObject *kw)
 {
-    if (content == NULL)
-        return -1;
-    PyObject *parent = top(s);
-    PyObject *nd = new_record(parent);
-    if (nd == NULL) {
-        Py_DECREF(content);
+    if (PyTuple_GET_SIZE(args) != 0 || (kw != NULL && PyDict_GET_SIZE(kw))) {
+        PyErr_SetString(PyExc_TypeError, "NodeStore() takes no arguments");
+        return NULL;
+    }
+    return type->tp_alloc(type, 0);
+}
+
+static int store_traverse(NodeStore *st, visitproc visit, void *arg)
+{
+    for (Py_ssize_t i = 0; i < st->n; i++)
+        Py_VISIT(st->v[i].rec);
+    return 0;
+}
+
+static int store_clear(NodeStore *st)
+{
+    for (Py_ssize_t i = 0; i < st->n; i++)
+        Py_CLEAR(st->v[i].rec);
+    return 0;
+}
+
+static void store_dealloc(NodeStore *st)
+{
+    PyObject_GC_UnTrack(st);
+    if (st->weakrefs != NULL)
+        PyObject_ClearWeakRefs((PyObject *)st);
+    for (Py_ssize_t i = 0; i < st->n; i++) {
+        Node *x = &st->v[i];
+        Py_XDECREF(x->rec);
+        Py_XDECREF(x->tag);
+        Py_XDECREF(x->tag_lc);
+        Py_XDECREF(x->end_tag);
+    }
+    PyMem_Free(st->v);
+    PyMem_Free(st->attrs);
+    Py_XDECREF(st->src);
+    Py_XDECREF(st->parent_int);
+    Py_TYPE(st)->tp_free((PyObject *)st);
+}
+
+static Py_ssize_t store_length(NodeStore *st)
+{
+    return st->n;
+}
+
+static PyObject *store_item(NodeStore *st, Py_ssize_t i)
+{
+    if (i < 0 || i >= st->n) {
+        PyErr_SetString(PyExc_IndexError, "node index out of range");
+        return NULL;
+    }
+    return materialize(st, i);
+}
+
+/* nodes[i] = record: the record becomes node i's authority */
+static int store_ass_item(NodeStore *st, Py_ssize_t i, PyObject *v)
+{
+    if (v == NULL) {
+        PyErr_SetString(PyExc_TypeError, "nodes cannot be deleted");
         return -1;
     }
-    if (PyList_SetItem(nd, N_CONTENT, content) < 0
-            || set_int(nd, N_SRC_START, src_start) < 0
-            || set_int(nd, N_SRC_END, src_end) < 0
-            || (end_at >= 0 && set_int(nd, N_END_AT, end_at) < 0)) {
-        Py_DECREF(nd);
+    if (i < 0 || i >= st->n) {
+        PyErr_SetString(PyExc_IndexError, "node assignment index out of range");
         return -1;
     }
-    set_slot(nd, N_KIND, INT[kind]);
-    set_slot(nd, N_TERMINATED, terminated ? Py_True : Py_False);
-    set_slot(nd, N_POSS_ENT, poss_ent ? Py_True : Py_False);
-    return append_node(s, nd, parent, NULL);
+    Node *x = &st->v[i];
+    Py_CLEAR(x->tag);
+    Py_CLEAR(x->tag_lc);
+    Py_CLEAR(x->end_tag);
+    Py_INCREF(v);
+    Py_XSETREF(x->rec, v);
+    return 0;
+}
+
+static PyObject *store_subscript(NodeStore *st, PyObject *key)
+{
+    if (PyLong_CheckExact(key)) {  /* the common case, without PyNumber_Index */
+        Py_ssize_t i = PyLong_AsSsize_t(key);
+        if (i != -1 || !PyErr_Occurred())
+            return store_item(st, i < 0 ? i + st->n : i);
+        PyErr_Clear();
+    }
+    if (PyIndex_Check(key)) {
+        Py_ssize_t i = PyNumber_AsSsize_t(key, PyExc_IndexError);
+        if (i == -1 && PyErr_Occurred())
+            return NULL;
+        return store_item(st, i < 0 ? i + st->n : i);
+    }
+    if (!PySlice_Check(key)) {
+        PyErr_Format(PyExc_TypeError,
+                     "node indices must be integers or slices, not %.200s",
+                     Py_TYPE(key)->tp_name);
+        return NULL;
+    }
+    Py_ssize_t start, stop, step;
+    if (PySlice_Unpack(key, &start, &stop, &step) < 0)
+        return NULL;
+    Py_ssize_t len = PySlice_AdjustIndices(st->n, &start, &stop, step);
+    PyObject *out = PyList_New(len);
+    if (out == NULL)
+        return NULL;
+    for (Py_ssize_t j = 0, i = start; j < len; j++, i += step) {
+        PyObject *nd = materialize(st, i);
+        if (nd == NULL) {
+            Py_DECREF(out);
+            return NULL;
+        }
+        PyList_SET_ITEM(out, j, nd);
+    }
+    return out;
+}
+
+static PyObject *store_append(NodeStore *st, PyObject *rec)
+{
+    Py_ssize_t i = store_push(st);
+    if (i < 0)
+        return NULL;
+    Py_INCREF(rec);
+    st->v[i].rec = rec;
+    Py_RETURN_NONE;
+}
+
+/* == and != against a list or another store: item by item */
+static PyObject *store_richcompare(PyObject *a, PyObject *b, int op)
+{
+    if ((op != Py_EQ && op != Py_NE) || !(PyList_Check(b) || NodeStore_Check(b)))
+        Py_RETURN_NOTIMPLEMENTED;
+    Py_ssize_t n = PySequence_Length(a);
+    int eq = n == PySequence_Length(b);
+    for (Py_ssize_t i = 0; eq && i < n; i++) {
+        PyObject *x = PySequence_GetItem(a, i), *y = PySequence_GetItem(b, i);
+        eq = x == NULL || y == NULL ? -1 : PyObject_RichCompareBool(x, y, Py_EQ);
+        Py_XDECREF(x);
+        Py_XDECREF(y);
+    }
+    if (eq < 0)
+        return NULL;
+    return PyBool_FromLong(op == Py_EQ ? eq : !eq);
+}
+
+/* copy and pickle rebuild a store from its records */
+static PyObject *store_reduce(NodeStore *st, PyObject *unused)
+{
+    PyObject *items = PySequence_List((PyObject *)st);
+    if (items == NULL)
+        return NULL;
+    PyObject *it = PyObject_GetIter(items);
+    Py_DECREF(items);
+    if (it == NULL)
+        return NULL;
+    return Py_BuildValue("(O()ON)", (PyObject *)Py_TYPE(st), Py_None, it);
+}
+
+static PyObject *store_materialized(NodeStore *st, void *closure)
+{
+    return PyLong_FromSsize_t(st->materialized);
+}
+
+static PySequenceMethods store_as_sequence = {
+    .sq_length = (lenfunc)store_length,
+    .sq_item = (ssizeargfunc)store_item,
+    .sq_ass_item = (ssizeobjargproc)store_ass_item,
+};
+
+static PyMappingMethods store_as_mapping = {
+    .mp_length = (lenfunc)store_length,
+    .mp_subscript = (binaryfunc)store_subscript,
+};
+
+static PyMethodDef store_methods[] = {
+    {"append", (PyCFunction)store_append, METH_O,
+     "append(record): store a Python record as node len(nodes)"},
+    {"__reduce__", (PyCFunction)store_reduce, METH_NOARGS, NULL},
+    {NULL, NULL, 0, NULL}
+};
+
+static PyGetSetDef store_getset[] = {
+    {"materialized", (getter)store_materialized, NULL,
+     "the number of records built from node structs on a read", NULL},
+    {NULL, NULL, NULL, NULL, NULL}
+};
+
+static PyTypeObject NodeStoreType = {
+    PyVarObject_HEAD_INIT(NULL, 0)
+    .tp_name = "fortissimo_spark._native.NodeStore",
+    .tp_basicsize = sizeof(NodeStore),
+    .tp_dealloc = (destructor)store_dealloc,
+    .tp_as_sequence = &store_as_sequence,
+    .tp_as_mapping = &store_as_mapping,
+    .tp_hash = PyObject_HashNotImplemented,
+    .tp_flags = Py_TPFLAGS_DEFAULT | Py_TPFLAGS_HAVE_GC,
+    .tp_doc = "DocBuilder.nodes: node structs filled by the native scan,"
+              " each read as its 21-slot record, built on the first read",
+    .tp_traverse = (traverseproc)store_traverse,
+    .tp_clear = (inquiry)store_clear,
+    .tp_richcompare = store_richcompare,
+    .tp_weaklistoffset = offsetof(NodeStore, weakrefs),
+    .tp_iter = PySeqIter_New,
+    .tp_methods = store_methods,
+    .tp_getset = store_getset,
+    .tp_new = store_new,
+    .tp_free = PyObject_GC_Del,
+};
+
+/* --- the scan ------------------------------------------------------------- */
+
+typedef struct {
+    Src src;
+    NodeStore *st;
+    PyObject *stack, *b;
+    PyObject *sniff;  /* parse()'s meta charset sniff; NULL once known */
+    long errors;
+    int stop;         /* the sniff asked to stop after the current tag */
+} Scan;
+
+/* the node index at stack[j]; -1 with an error set on error */
+static inline Py_ssize_t stack_at(const Scan *s, Py_ssize_t j)
+{
+    return PyLong_AsSsize_t(PyList_GET_ITEM(s->stack, j));
+}
+
+static inline Py_ssize_t top(const Scan *s)
+{
+    return stack_at(s, PyList_GET_SIZE(s->stack) - 1);
+}
+
+static int pop_stack(const Scan *s)
+{
+    Py_ssize_t len = PyList_GET_SIZE(s->stack);
+    return PyList_SetSlice(s->stack, len - 1, len, NULL);
+}
+
+static int bump_math_or_svg(const Scan *s, long delta)
+{
+    PyObject *v = PyObject_GetAttr(s->b, S_IN_MATH_OR_SVG);
+    if (v == NULL)
+        return -1;
+    long x = PyLong_AsLong(v);
+    Py_DECREF(v);
+    if (x == -1 && PyErr_Occurred())
+        return -1;
+    v = PyLong_FromLong(x + delta);
+    if (v == NULL)
+        return -1;
+    int r = PyObject_SetAttr(s->b, S_IN_MATH_OR_SVG, v);
+    Py_DECREF(v);
+    return r;
+}
+
+/* a new node struct under the stack top: its index, -1 on error */
+static Py_ssize_t add_node(const Scan *s, int kind)
+{
+    Py_ssize_t parent = top(s);
+    if (parent == -1 && PyErr_Occurred())
+        return -1;
+    Py_ssize_t idx = store_push(s->st);
+    if (idx < 0 || append_child(s->st, parent, idx) < 0)
+        return -1;
+    Node *x = &s->st->v[idx];
+    x->kind = (unsigned char)kind;
+    x->parent = parent;
+    x->terminated = 1;
+    return idx;
 }
 
 /* DocBuilder.add_leaf(kind, t[a:b], terminated, poss_ent, src_start,
@@ -350,8 +865,17 @@ static int add_leaf(const Scan *s, int kind, Py_ssize_t a, Py_ssize_t b,
                     int terminated, int poss_ent, Py_ssize_t src_start,
                     Py_ssize_t src_end)
 {
-    return add_leaf_obj(s, kind, span(s, a, b), terminated, poss_ent,
-                        src_start, src_end, -1);
+    Py_ssize_t idx = add_node(s, kind);
+    if (idx < 0)
+        return -1;
+    Node *x = &s->st->v[idx];
+    x->a = a;
+    x->b = b;
+    x->terminated = (unsigned char)terminated;
+    x->poss_ent = (unsigned char)poss_ent;
+    x->src_start = src_start;
+    x->src_end = src_end;
+    return 0;
 }
 
 /* a == b for two tag names; most come from the intern cache, so the
@@ -370,22 +894,23 @@ static int same_name(PyObject *a, PyObject *b)
     return PyObject_RichCompareBool(a, b, Py_EQ);
 }
 
-/* the tag name of the element at stack[j] */
+/* the tag name of the element at stack[j] (borrowed) */
 static inline PyObject *stack_tag(const Scan *s, Py_ssize_t j)
 {
-    PyObject *nd = node_at(s, PyLong_AsSsize_t(PyList_GET_ITEM(s->stack, j)));
-    return PyList_GET_ITEM(nd, N_TAG_LC);
+    Py_ssize_t idx = stack_at(s, j);
+    return idx == -1 && PyErr_Occurred() ? NULL : tag_lc_at(s->st, idx);
 }
 
-/* the end-tag slots of an element it closes */
-static int close_element(PyObject *nd, PyObject *end_text, Py_ssize_t at,
-                         Py_ssize_t end_pos)
+/* _examine_table(node) on the builder */
+static int examine_table(const Scan *s, Py_ssize_t node)
 {
-    if (set_int(nd, N_END_AT, at) < 0 || set_int(nd, N_SRC_END, end_pos) < 0)
+    PyObject *idx = PyLong_FromSsize_t(node);
+    if (idx == NULL)
         return -1;
-    set_slot(nd, N_CLOSURE, INT[EXPLICITLY_CLOSED]);
-    set_slot(nd, N_END_TAG, end_text);
-    return 0;
+    PyObject *v = PyObject_CallMethodOneArg(s->b, S_EXAMINE_TABLE, idx);
+    Py_DECREF(idx);
+    Py_XDECREF(v);
+    return v == NULL ? -1 : 0;
 }
 
 /* The general machine's end-tag step when the stack top closes: the
@@ -394,25 +919,16 @@ static int close_element(PyObject *nd, PyObject *end_text, Py_ssize_t at,
 static int close_top(const Scan *s, PyObject *tag_lc, PyObject *end_text,
                      Py_ssize_t at, Py_ssize_t end_pos)
 {
-    PyObject *cur = top(s);
-    Py_INCREF(cur);
-    PyObject *nd = node_at(s, PyLong_AsSsize_t(cur));
-    int r = -1;
-    if (pop_stack(s) < 0 || close_element(nd, end_text, at, end_pos) < 0)
-        goto done;
-    if (is_tag(tag_lc, "table")) {
-        PyObject *v = PyObject_CallMethodOneArg(s->b, S_EXAMINE_TABLE, cur);
-        if (v == NULL)
-            goto done;
-        Py_DECREF(v);
-    }
+    Py_ssize_t cur = top(s);
+    if ((cur == -1 && PyErr_Occurred()) || pop_stack(s) < 0
+            || close_element(s->st, cur, end_text, at, end_pos) < 0)
+        return -1;
+    if (is_tag(tag_lc, "table") && examine_table(s, cur) < 0)
+        return -1;
     if ((is_tag(tag_lc, "math") || is_tag(tag_lc, "svg"))
             && bump_math_or_svg(s, -1) < 0)
-        goto done;
-    r = 0;
-done:
-    Py_DECREF(cur);
-    return r;
+        return -1;
+    return 0;
 }
 
 /* DocBuilder.pop for an end tag whose element is not the stack top, the
@@ -427,13 +943,14 @@ static int repair(const Scan *s, PyObject *tag_lc, PyObject *end_text,
 {
     Py_ssize_t len = PyList_GET_SIZE(s->stack), match = -1;
     if (len == 1) {
-        PyObject *nd = node_at(s, PyLong_AsSsize_t(top(s)));
-        int eq = same_name(PyList_GET_ITEM(nd, N_TAG_LC), tag_lc);
+        Py_ssize_t root = top(s);
+        PyObject *root_tag = stack_tag(s, 0);
+        int eq = root_tag == NULL ? -1 : same_name(root_tag, tag_lc);
         if (eq < 0)
             return -1;
         if (eq) {
             /* popped and pushed back: the stack is the root alone */
-            if (close_element(nd, end_text, at, end_pos) < 0)
+            if (close_element(s->st, root, end_text, at, end_pos) < 0)
                 return -1;
             set_slot(s->stack, 0, INT[0]);
             return 1;
@@ -442,7 +959,8 @@ static int repair(const Scan *s, PyObject *tag_lc, PyObject *end_text,
     /* the top is known not to match, and a match on the root alone (index
      * 0) counts as unmatched */
     for (Py_ssize_t j = len - 2; j > 0; j--) {
-        int eq = same_name(stack_tag(s, j), tag_lc);
+        PyObject *tag = stack_tag(s, j);
+        int eq = tag == NULL ? -1 : same_name(tag, tag_lc);
         if (eq < 0)
             return -1;
         if (eq) {
@@ -455,7 +973,8 @@ static int repair(const Scan *s, PyObject *tag_lc, PyObject *end_text,
         if (fmt < 0)
             return -1;
         for (Py_ssize_t j = match + 1; fmt && j < len; j++) {
-            int marker = PySet_Contains(MARKER_ELEMENTS, stack_tag(s, j));
+            PyObject *tag = stack_tag(s, j);
+            int marker = tag == NULL ? -1 : PySet_Contains(MARKER_ELEMENTS, tag);
             if (marker < 0)
                 return -1;
             if (marker) {
@@ -467,46 +986,40 @@ static int repair(const Scan *s, PyObject *tag_lc, PyObject *end_text,
     int popped = 0;
     long math_or_svg = 0;
     while (match > 0 && PyList_GET_SIZE(s->stack) > match) {
-        PyObject *cur = top(s);
-        Py_INCREF(cur);
-        PyObject *nd = node_at(s, PyLong_AsSsize_t(cur));
-        Py_INCREF(nd);
-        PyObject *nd_tag = PyList_GET_ITEM(nd, N_TAG_LC);
-        int r = -1, closed = PyObject_IsTrue(PyList_GET_ITEM(nd, N_CLOSURE));
-        if (closed < 0)
-            goto step_done;
+        Py_ssize_t cur = top(s);
+        long closed = cur == -1 && PyErr_Occurred() ? -1 : closure_at(s->st, cur);
+        if (closed == -1 && PyErr_Occurred())
+            return -1;
         if (!closed) {
             if (PyList_GET_SIZE(s->stack) - 1 == match) {
                 popped = 1;
-                if (close_element(nd, end_text, at, end_pos) < 0)
-                    goto step_done;
-            } else {
-                set_slot(nd, N_CLOSURE, INT[IMPLICITLY_CLOSED]);
+                if (close_element(s->st, cur, end_text, at, end_pos) < 0)
+                    return -1;
+            } else if (set_closure(s->st, cur, IMPLICITLY_CLOSED) < 0) {
+                return -1;
             }
-            if (is_tag(nd_tag, "table")) {
-                PyObject *v = PyObject_CallMethodOneArg(s->b, S_EXAMINE_TABLE,
-                                                        cur);
-                if (v == NULL)
-                    goto step_done;
-                Py_DECREF(v);
-            }
+            PyObject *tag = tag_lc_at(s->st, cur);
+            if (tag == NULL || (is_tag(tag, "table") && examine_table(s, cur) < 0))
+                return -1;
         }
-        nd_tag = PyList_GET_ITEM(nd, N_TAG_LC);
-        math_or_svg += is_tag(nd_tag, "math") || is_tag(nd_tag, "svg");
-        r = pop_stack(s);
-step_done:
-        Py_DECREF(nd);
-        Py_DECREF(cur);
-        if (r < 0)
+        PyObject *tag = tag_lc_at(s->st, cur);
+        if (tag == NULL)
+            return -1;
+        math_or_svg += is_tag(tag, "math") || is_tag(tag, "svg");
+        if (pop_stack(s) < 0)
             return -1;
     }
     if (math_or_svg && bump_math_or_svg(s, -math_or_svg) < 0)
         return -1;
     if (!popped) {
-        Py_INCREF(end_text);
-        if (add_leaf_obj(s, UNMATCHED_CLOSE, end_text, 1, 0, at, end_pos,
-                         at) < 0)
+        Py_ssize_t idx = add_node(s, UNMATCHED_CLOSE);
+        if (idx < 0)
             return -1;
+        Node *x = &s->st->v[idx];
+        Py_INCREF(end_text);
+        x->end_tag = end_text;
+        x->src_start = x->end_at = at;
+        x->src_end = end_pos;
     }
     return popped;
 }
@@ -515,31 +1028,32 @@ step_done:
  * error. */
 static Py_ssize_t end_tag(Scan *s, Py_ssize_t k)
 {
-    Py_ssize_t n = s->n;
-    Py_ssize_t iw = ws_end(s, k + 2);
-    if (iw >= n || CH(s, iw) == '>')
+    const Src *src = &s->src;
+    Py_ssize_t n = src->n;
+    Py_ssize_t iw = ws_end(src, k + 2);
+    if (iw >= n || CH(src, iw) == '>')
         return 0;
     Py_ssize_t tag_end = iw + 1;
     while (tag_end < n) {
-        Py_UCS4 c = CH(s, tag_end);
+        Py_UCS4 c = CH(src, tag_end);
         if (is_ws(c) || c == '/' || c == '>')
             break;
         tag_end++;
     }
-    Py_ssize_t i2 = ws_end(s, tag_end);
-    if (i2 >= n || CH(s, i2) != '>')
+    Py_ssize_t i2 = ws_end(src, tag_end);
+    if (i2 >= n || CH(src, i2) != '>')
         return 0;
 
-    PyObject *tag_lc, *tag = interned_span(s, iw, tag_end, &tag_lc);
+    PyObject *tag_lc, *tag = interned_span(src, iw, tag_end, &tag_lc);
     if (tag == NULL)
         return -1;
     Py_DECREF(tag);
     /* endTagText excludes whitespace after '</' */
     PyObject *text;
     if (iw == k + 2) {
-        text = interned_span(s, k, i2 + 1, NULL);
+        text = interned_span(src, k, i2 + 1, NULL);
     } else {
-        PyObject *rest = span(s, iw, i2 + 1);
+        PyObject *rest = span(src, iw, i2 + 1);
         text = rest ? PyUnicode_Concat(S_LT_SLASH, rest) : NULL;
         Py_XDECREF(rest);
     }
@@ -548,8 +1062,8 @@ static Py_ssize_t end_tag(Scan *s, Py_ssize_t k)
         goto done;
     int match = PyList_GET_SIZE(s->stack) > 1;
     if (match) {
-        match = same_name(stack_tag(s, PyList_GET_SIZE(s->stack) - 1),
-                          tag_lc);
+        PyObject *top_tag = stack_tag(s, PyList_GET_SIZE(s->stack) - 1);
+        match = top_tag == NULL ? -1 : same_name(top_tag, tag_lc);
         if (match < 0)
             goto done;
     }
@@ -574,14 +1088,6 @@ done:
     Py_XDECREF(text);
     return r;
 }
-
-/* one attribute as spans of t: leading whitespace, name, the equals
- * string (whitespace, '=', whitespace), value; quote is 0, '"' or '\'' */
-typedef struct {
-    Py_ssize_t w0, w1, n0, n1, e0, e1, v0, v1;
-    Py_UCS4 quote;
-    int valued;  /* a value was read after '=' (the charset sniff's input) */
-} Attr;
 
 typedef struct {
     Attr *a;
@@ -613,60 +1119,26 @@ static int push_attr(Attrs *as, Py_ssize_t w0, Py_ssize_t w1, Py_ssize_t n0,
     return 0;
 }
 
-/* the five attribute lists of an element record; an element without
- * attributes shares the empty tuple in all five */
-static int fill_attrs(const Scan *s, PyObject *nd, const Attrs *as)
-{
-    if (as->len == 0) {
-        for (int f = 0; f < 5; f++)
-            set_slot(nd, N_ATTR_NAMES + f, T_EMPTY);
-        return 0;
-    }
-    for (int f = 0; f < 5; f++) {
-        PyObject *lst = PyList_New(as->len);
-        if (lst == NULL)
-            return -1;
-        PyList_SetItem(nd, N_ATTR_NAMES + f, lst);
-        for (Py_ssize_t j = 0; j < as->len; j++) {
-            const Attr *x = &as->a[j];
-            PyObject *v;
-            switch (f) {
-            case 0: v = interned_span(s, x->n0, x->n1, NULL); break;
-            case 1: v = span(s, x->v0, x->v1); break;
-            case 2: v = span(s, x->w0, x->w1); break;
-            case 3: v = span(s, x->e0, x->e1); break;
-            default:
-                v = x->quote == '"' ? S_DQ
-                    : x->quote == '\'' ? S_SQ : S_EMPTY;
-                Py_INCREF(v);
-            }
-            if (v == NULL)
-                return -1;
-            PyList_SET_ITEM(lst, j, v);
-        }
-    }
-    return 0;
-}
-
 /* the raw-text scan after an open script/style/textarea at stack top:
  * the first '</tag' [ws]* '>' with a naive stage matcher (a partial match
  * resumes after the mismatching char) */
 static Py_ssize_t raw_text(Scan *s, Py_ssize_t i, PyObject *tag_lc)
 {
-    Py_ssize_t n = s->n;
+    const Src *src = &s->src;
+    Py_ssize_t n = src->n;
     Py_ssize_t tlen = PyUnicode_GET_LENGTH(tag_lc);
     Py_ssize_t elen = tlen + 2;
     Py_ssize_t scan = i, match_start = -1, gt = -1;
     int poss_ent = is_tag(tag_lc, "textarea");
     for (;;) {
-        Py_ssize_t kk = find_char(s, '<', scan);
+        Py_ssize_t kk = find_char(src, '<', scan);
         if (kk < 0)
             break;
         Py_ssize_t m = 0;
         while (m < elen && kk + m < n) {
             Py_UCS4 want = m == 0 ? '<' : m == 1 ? '/'
                 : PyUnicode_READ_CHAR(tag_lc, m - 2);
-            Py_UCS4 c = CH(s, kk + m);
+            Py_UCS4 c = CH(src, kk + m);
             /* c.lower() == want: ASCII folding, plus KELVIN SIGN -> 'k' */
             if (c >= 'A' && c <= 'Z')
                 c += 32;
@@ -683,9 +1155,9 @@ static Py_ssize_t raw_text(Scan *s, Py_ssize_t i, PyObject *tag_lc)
             continue;
         }
         Py_ssize_t p = kk + elen;
-        while (p < n && is_ws(CH(s, p)))
+        while (p < n && is_ws(CH(src, p)))
             p++;
-        if (p < n && CH(s, p) == '>') {
+        if (p < n && CH(src, p) == '>') {
             match_start = kk;
             gt = p;
             break;
@@ -705,7 +1177,7 @@ static Py_ssize_t raw_text(Scan *s, Py_ssize_t i, PyObject *tag_lc)
             && add_leaf(s, TEXT, i, match_start, 1, poss_ent, i,
                         match_start) < 0)
         return -1;
-    PyObject *text = interned_span(s, match_start, gt + 1, NULL);
+    PyObject *text = interned_span(src, match_start, gt + 1, NULL);
     if (text == NULL)
         return -1;
     int r = close_top(s, tag_lc, text, match_start, gt + 1);
@@ -732,8 +1204,8 @@ static int sniff(Scan *s, const Attrs *as)
         const Attr *x = &as->a[j];
         if (!x->valued)
             continue;
-        PyObject *name = span(s, x->n0, x->n1);
-        PyObject *value = span(s, x->v0, x->v1);
+        PyObject *name = span(&s->src, x->n0, x->n1);
+        PyObject *value = span(&s->src, x->v0, x->v1);
         int bad = name == NULL || value == NULL
             || PyList_Append(names, name) < 0
             || PyList_Append(values, value) < 0;
@@ -765,16 +1237,17 @@ done:
  * math/svg) are handed off. */
 static Py_ssize_t declaration(Scan *s, Py_ssize_t k)
 {
-    Py_ssize_t n = s->n, a = k + 2, b, i;
+    const Src *src = &s->src;
+    Py_ssize_t n = src->n, a = k + 2, b, i;
     int terminated = 1;
-    if (a < n && CH(s, a) == '[')
+    if (a < n && CH(src, a) == '[')
         return 0;
-    Py_ssize_t iw = ws_end(s, a);
-    if (iw == a && iw < n && CH(s, iw) == '>') {
+    Py_ssize_t iw = ws_end(src, a);
+    if (iw == a && iw < n && CH(src, iw) == '>') {
         b = a;
         i = iw + 1;
     } else {
-        Py_ssize_t e = iw < n ? find_char(s, '>', iw + 1) : -1;
+        Py_ssize_t e = iw < n ? find_char(src, '>', iw + 1) : -1;
         if (e == -2)
             return -1;
         if (e < 0) {
@@ -789,16 +1262,16 @@ static Py_ssize_t declaration(Scan *s, Py_ssize_t k)
     static const char DOCTYPE[] = "doctype", XHTML[] = "xhtml";
     int doctype = b - a >= 7;
     for (int j = 0; doctype && j < 7; j++)
-        doctype = (CH(s, a + j) | 0x20) == (Py_UCS4)DOCTYPE[j];
+        doctype = (CH(src, a + j) | 0x20) == (Py_UCS4)DOCTYPE[j];
     if (doctype && b - a > 7) {
-        Py_UCS4 c = CH(s, a + 7);
+        Py_UCS4 c = CH(src, a + 7);
         doctype = !((c >= 'a' && c <= 'z') || (c >= 'A' && c <= 'Z')
                     || (c >= '0' && c <= '9') || c == '_');
     }
     if (doctype) {
         for (Py_ssize_t p = a; p + 5 <= b; p++) {
             int j = 0;
-            while (j < 5 && (CH(s, p + j) | 0x20) == (Py_UCS4)XHTML[j])
+            while (j < 5 && (CH(src, p + j) | 0x20) == (Py_UCS4)XHTML[j])
                 j++;
             if (j == 5)
                 return 0;
@@ -818,19 +1291,21 @@ enum { END_GT, END_SELF, END_BAD };
  * error. */
 static Py_ssize_t start_tag(Scan *s, Py_ssize_t k)
 {
-    Py_ssize_t n = s->n;
+    const Src *src = &s->src;
+    NodeStore *st = s->st;
+    Py_ssize_t n = src->n;
     Py_ssize_t i = k + 2;
     while (i < n) {
-        Py_UCS4 c = CH(s, i);
+        Py_UCS4 c = CH(src, i);
         if (is_ws(c) || c == '/' || c == '>')
             break;
         i++;
     }
-    PyObject *tag_lc, *tag = interned_span(s, k + 1, i, &tag_lc);
+    PyObject *tag_lc, *tag = interned_span(src, k + 1, i, &tag_lc);
     if (tag == NULL)
         return -1;
     Py_ssize_t r = 0;
-    PyObject *nd = NULL, *idx = NULL;
+    PyObject *idx = NULL;
     Attrs as;
     as.a = as.local;
     as.len = 0;
@@ -844,7 +1319,7 @@ static Py_ssize_t start_tag(Scan *s, Py_ssize_t k)
     for (;;) {
         if (pend0 < 0) {
             w0 = i;
-            i = ws_end(s, i);
+            i = ws_end(src, i);
             w1 = i;
         } else {
             w0 = pend0;
@@ -853,9 +1328,9 @@ static Py_ssize_t start_tag(Scan *s, Py_ssize_t k)
         }
         if (i >= n)
             goto eof;
-        Py_UCS4 c = CH(s, i);
+        Py_UCS4 c = CH(src, i);
         if (c == '/') {
-            if (i + 1 < n && CH(s, i + 1) == '>') {
+            if (i + 1 < n && CH(src, i + 1) == '>') {
                 i += 2;
                 end_kind = END_SELF;
                 break;
@@ -873,7 +1348,7 @@ static Py_ssize_t start_tag(Scan *s, Py_ssize_t k)
         }
         Py_ssize_t n0 = i;
         while (i < n) {
-            c = CH(s, i);
+            c = CH(src, i);
             if (is_ws(c) || c == '>' || c == '/' || c == '=')
                 break;
             i++;
@@ -885,10 +1360,10 @@ static Py_ssize_t start_tag(Scan *s, Py_ssize_t k)
             break;
         }
         Py_ssize_t n1 = i;
-        i = ws_end(s, i);
+        i = ws_end(src, i);
         if (i >= n)
             goto eof;
-        if (CH(s, i) != '=') {
+        if (CH(src, i) != '=') {
             if (push_attr(&as, w0, w1, n0, n1, n1, n1, n1, n1, 0, 0) < 0)
                 goto error;
             pend0 = n1;
@@ -896,10 +1371,10 @@ static Py_ssize_t start_tag(Scan *s, Py_ssize_t k)
             continue;
         }
         Py_ssize_t e0 = n1, eq_end = i + 1;
-        i = ws_end(s, eq_end);
+        i = ws_end(src, eq_end);
         if (i >= n)
             goto eof;
-        Py_UCS4 c3 = CH(s, i);
+        Py_UCS4 c3 = CH(src, i);
         if (c3 == '>') {
             if (push_attr(&as, w0, w1, n0, n1, e0, eq_end, i, i, 0, 0) < 0)
                 goto error;
@@ -908,7 +1383,7 @@ static Py_ssize_t start_tag(Scan *s, Py_ssize_t k)
             continue;
         }
         if (c3 == '"' || c3 == '\'') {
-            Py_ssize_t e = find_char(s, c3, i + 1);
+            Py_ssize_t e = find_char(src, c3, i + 1);
             if (e == -2)
                 goto error;
             if (e < 0)
@@ -919,13 +1394,13 @@ static Py_ssize_t start_tag(Scan *s, Py_ssize_t k)
         } else {
             Py_ssize_t v0 = i;
             while (i < n) {
-                c = CH(s, i);
+                c = CH(src, i);
                 if (is_ws(c) || c == '>')
                     break;
                 i++;
             }
             /* a trailing '/' is not part of the value */
-            if (CH(s, i - 1) == '/')
+            if (CH(src, i - 1) == '/')
                 i--;
             if (push_attr(&as, w0, w1, n0, n1, e0, v0, v0, i, 0, 1) < 0)
                 goto error;
@@ -937,55 +1412,51 @@ static Py_ssize_t start_tag(Scan *s, Py_ssize_t k)
     if (closers == NULL && PyErr_Occurred())
         goto error;
     while (closers != NULL) {
-        PyObject *cur = node_at(s, PyLong_AsSsize_t(top(s)));
-        int hit = PySet_Contains(closers, PyList_GET_ITEM(cur, N_TAG_LC));
+        Py_ssize_t cur = top(s);
+        PyObject *cur_tag = cur == -1 && PyErr_Occurred()
+            ? NULL : tag_lc_at(st, cur);
+        int hit = cur_tag == NULL ? -1 : PySet_Contains(closers, cur_tag);
         if (hit < 0)
             goto error;
         if (!hit)
             break;
-        set_slot(cur, N_CLOSURE, INT[IMPLICITLY_CLOSED]);
-        if (pop_stack(s) < 0)
+        if (set_closure(st, cur, IMPLICITLY_CLOSED) < 0 || pop_stack(s) < 0)
             goto error;
     }
-    PyObject *parent = top(s);
-    nd = new_record(parent);
-    if (nd == NULL || fill_attrs(s, nd, &as) < 0)
-        goto error;
-    PyObject *children = PyList_New(0);
-    if (children == NULL || PyList_SetItem(nd, N_CHILDREN, children) < 0
-            || set_int(nd, N_SRC_START, k) < 0)
-        goto error;
-    set_slot(nd, N_KIND, INT[ELEMENT]);
-    set_slot(nd, N_TAG, tag);
-    set_slot(nd, N_TAG_LC, tag_lc);
-    set_slot(nd, N_TERMINATED, Py_True);
-    set_slot(nd, N_POSS_ENT, Py_False);
-    PyObject *inner = span(s, w0, w1);
-    if (inner == NULL)
-        goto error;
-    PyList_SetItem(nd, N_INNER_WS, inner);
-    if (end_kind == END_BAD)
-        set_slot(nd, N_BAD_TERM, S_EQ);
     int is_void = end_kind == END_SELF;
     if (end_kind == END_GT) {
         is_void = PySet_Contains(VOID_ELEMENTS, tag_lc);
         if (is_void < 0)
             goto error;
     }
+    Py_ssize_t attr0 = st->n_attrs;
+    if (reserve((void **)&st->attrs, &st->cap_attrs, attr0 + as.len,
+                sizeof(Attr)) < 0)
+        goto error;
+    Py_ssize_t node = add_node(s, ELEMENT);
+    if (node < 0)
+        goto error;
+    if (as.len) {
+        memcpy(st->attrs + attr0, as.a, as.len * sizeof(Attr));
+        st->n_attrs += as.len;
+    }
+    Node *x = &st->v[node];
+    Py_INCREF(tag);
+    x->tag = tag;
+    Py_INCREF(tag_lc);
+    x->tag_lc = tag_lc;
+    x->attr0 = attr0;
+    x->n_attrs = as.len;
+    x->a = w0;
+    x->b = w1;
+    x->bad_term = end_kind == END_BAD;
+    x->src_start = k;
     if (is_void) {
         /* pushed and popped at once: the stack and the math/svg counter
          * end where they began, and an empty table has nothing to repair */
-        if (set_int(nd, N_SRC_END, i) < 0)
-            goto error;
-        set_slot(nd, N_CLOSURE,
-                 INT[end_kind == END_SELF ? SELF_CLOSED : VOID_CLOSED]);
-    } else {
-        set_slot(nd, N_SRC_END, INT_M1);
+        x->src_end = i;
+        x->closure = end_kind == END_SELF ? SELF_CLOSED : VOID_CLOSED;
     }
-    PyObject *nd_ref = nd;
-    nd = NULL;
-    if (append_node(s, nd_ref, parent, &idx) < 0)
-        goto error;
     if (s->sniff != NULL && is_tag(tag_lc, "meta") && sniff(s, &as) < 0)
         goto error;
     if (is_void) {
@@ -993,7 +1464,8 @@ static Py_ssize_t start_tag(Scan *s, Py_ssize_t k)
         r = i;
         goto done;
     }
-    if (PyList_Append(s->stack, idx) < 0)
+    if ((idx = PyLong_FromSsize_t(node)) == NULL
+            || PyList_Append(s->stack, idx) < 0)
         goto error;
     if ((is_tag(tag_lc, "math") || is_tag(tag_lc, "svg"))
             && bump_math_or_svg(s, 1) < 0)
@@ -1020,7 +1492,6 @@ done:
     if (as.a != as.local)
         PyMem_Free(as.a);
     Py_DECREF(tag);
-    Py_XDECREF(nd);
     Py_XDECREF(idx);
     Py_DECREF(tag_lc);
     return r;
@@ -1030,15 +1501,16 @@ done:
  * length m with m % 3 == 2 */
 static Py_ssize_t comment(Scan *s, Py_ssize_t k)
 {
+    const Src *src = &s->src;
     Py_ssize_t start = k + 4, scan = start, e = -1;
     for (;;) {
-        Py_ssize_t g = find_char(s, '>', scan);
+        Py_ssize_t g = find_char(src, '>', scan);
         if (g == -2)
             return -1;
         if (g < 0)
             break;
         Py_ssize_t d = g - 1;
-        while (d >= start && CH(s, d) == '-')
+        while (d >= start && CH(src, d) == '-')
             d--;
         Py_ssize_t m = g - 1 - d;
         if (m >= 2 && m % 3 == 2) {
@@ -1050,8 +1522,8 @@ static Py_ssize_t comment(Scan *s, Py_ssize_t k)
     counts[ST_COMMENT]++;
     if (e < 0) {
         s->errors++;
-        return add_leaf(s, COMMENT, start, s->n, 0, 0, k, s->n) < 0
-            ? -1 : s->n;
+        return add_leaf(s, COMMENT, start, src->n, 0, 0, k, src->n) < 0
+            ? -1 : src->n;
     }
     return add_leaf(s, COMMENT, start, e - 2, 1, 0, k, e + 1) < 0
         ? -1 : e + 1;
@@ -1062,10 +1534,11 @@ static Py_ssize_t comment(Scan *s, Py_ssize_t k)
 static Py_ssize_t text_run(Scan *s, Py_ssize_t i, int empty_end_tag,
                            Py_UCS4 *c2_out)
 {
-    Py_ssize_t n = s->n, j = i, k;
+    const Src *src = &s->src;
+    Py_ssize_t n = src->n, j = i, k;
     Py_UCS4 c2 = 0;
     for (;;) {
-        k = find_char(s, '<', j);
+        k = find_char(src, '<', j);
         if (k == -2)
             return -1;
         if (k < 0) {
@@ -1073,11 +1546,11 @@ static Py_ssize_t text_run(Scan *s, Py_ssize_t i, int empty_end_tag,
             break;
         }
         int has2 = k + 1 < n;
-        c2 = has2 ? CH(s, k + 1) : 0;
+        c2 = has2 ? CH(src, k + 1) : 0;
         if (has2 && is_markup_start(c2)) {
             if (c2 == '/' && !empty_end_tag) {
                 int has3 = k + 2 < n;
-                Py_UCS4 c3 = has3 ? CH(s, k + 2) : 0;
+                Py_UCS4 c3 = has3 ? CH(src, k + 2) : 0;
                 if (has3 && c3 != '/' && is_markup_start(c3))
                     break;
                 j = has3 ? k + 3 : k + 2;
@@ -1097,7 +1570,7 @@ static Py_ssize_t text_run(Scan *s, Py_ssize_t i, int empty_end_tag,
         /* text that is not all whitespace leaves the reference in
          * AT_MARKUP_START at EOF: one wrap-up error */
         for (Py_ssize_t p = i; p < n; p++) {
-            Py_UCS4 c = CH(s, p);
+            Py_UCS4 c = CH(src, p);
             if (!is_ws(c) && c <= 0xFFFF) {
                 s->errors++;
                 break;
@@ -1115,35 +1588,42 @@ static PyObject *scan(PyObject *self, PyObject *const *args, Py_ssize_t nargs)
         return NULL;
     }
     Scan s;
-    s.t = args[0];
+    PyObject *t = args[0];
     Py_ssize_t i = PyLong_AsSsize_t(args[1]);
-    s.nodes = args[2];
     s.stack = args[3];
     s.b = args[4];
     int empty_end_tag = PyObject_IsTrue(args[5]);
     s.sniff = args[6] == Py_None ? NULL : args[6];
     if ((i == -1 || empty_end_tag < 0) && PyErr_Occurred())
         return NULL;
-    if (!PyUnicode_Check(s.t) || !PyList_Check(s.nodes)
+    if (!PyUnicode_Check(t) || !NodeStore_Check(args[2])
             || !PyList_Check(s.stack)) {
-        PyErr_SetString(PyExc_TypeError, "scan(str, int, list, list, ...)");
+        PyErr_SetString(PyExc_TypeError,
+                        "scan(str, int, NodeStore, list, ...)");
         return NULL;
     }
-    if (PyUnicode_READY(s.t) < 0)
+    s.st = (NodeStore *)args[2];
+    /* the store's offsets index one text: the first scan's */
+    if (s.st->src == NULL) {
+        Py_INCREF(t);
+        s.st->src = t;
+    } else if (s.st->src != t) {
+        PyErr_SetString(PyExc_ValueError,
+                        "scan(): the store indexes another text");
         return NULL;
-    s.kind = PyUnicode_KIND(s.t);
-    s.data = PyUnicode_DATA(s.t);
-    s.n = PyUnicode_GET_LENGTH(s.t);
+    }
+    if (src_init(&s.src, t) < 0)
+        return NULL;
     s.errors = 0;
     s.stop = 0;
 
-    while (i < s.n && !s.stop) {
+    while (i < s.src.n && !s.stop) {
         Py_UCS4 c2;
         Py_ssize_t k = text_run(&s, i, empty_end_tag, &c2);
         if (k < 0)
             return NULL;
-        if (k >= s.n) {
-            i = s.n;
+        if (k >= s.src.n) {
+            i = s.src.n;
             break;
         }
         Py_ssize_t next;
@@ -1152,7 +1632,8 @@ static PyObject *scan(PyObject *self, PyObject *const *args, Py_ssize_t nargs)
             if (next == 0)
                 counts[ST_OFF_END]++;
         } else if (c2 == '!') {
-            if (k + 3 < s.n && CH(&s, k + 2) == '-' && CH(&s, k + 3) == '-') {
+            if (k + 3 < s.src.n && CH(&s.src, k + 2) == '-'
+                    && CH(&s.src, k + 3) == '-') {
                 next = comment(&s, k);
             } else {
                 next = declaration(&s, k);
@@ -1182,8 +1663,11 @@ static PyObject *scan(PyObject *self, PyObject *const *args, Py_ssize_t nargs)
  * walk, blocks and scores as the Python loop in extract.py, which stays the
  * reference (tests/test_extract_native.py compares the two field for
  * field).  The walk is iterative over a heap stack; a text node's block is
- * found through an array indexed by its owner.  Entity decoding calls back
- * into chars.unescape_entities, so there is one decoder.
+ * found through an array indexed by its owner.  It reads every node
+ * through node_ref(): a node without a record is read from its struct and
+ * its text from the source buffer, so a store that Python never read
+ * builds no record.  Entity decoding calls back into
+ * chars.unescape_entities, so there is one decoder.
  */
 
 typedef struct {
@@ -1192,8 +1676,9 @@ typedef struct {
 } Frame;
 
 typedef struct {
-    PyObject *text;          /* the decoded piece (owned) */
-    PyObject *start, *end;   /* its source span (owned); NULL without one */
+    PyObject *str;           /* the piece is str[a:b] (owned) */
+    Py_ssize_t a, b;
+    Py_ssize_t start, end;   /* its source span; start < 0: none */
     Py_ssize_t block;
 } Piece;
 
@@ -1212,65 +1697,24 @@ typedef struct {
     Py_ssize_t *order;       /* piece indices grouped by block */
 } Density;
 
-/* room for ``need`` items of ``size`` bytes in ``*buf`` */
-static int reserve(void **buf, Py_ssize_t *cap, Py_ssize_t need, size_t size)
-{
-    if (need <= *cap)
-        return 0;
-    Py_ssize_t cap2 = *cap ? *cap : 64;
-    while (cap2 < need)
-        cap2 *= 2;
-    void *p = PyMem_Realloc(*buf, (size_t)cap2 * size);
-    if (p == NULL) {
-        PyErr_NoMemory();
-        return -1;
-    }
-    *buf = p;
-    *cap = cap2;
-    return 0;
-}
-
-/* nodes[idx], checked to be a node record */
-static PyObject *record(PyObject *nodes, Py_ssize_t idx)
-{
-    if (idx < 0 || idx >= PyList_GET_SIZE(nodes)) {
-        PyErr_Format(PyExc_IndexError, "node %zd out of range", idx);
-        return NULL;
-    }
-    PyObject *nd = PyList_GET_ITEM(nodes, idx);
-    if (!PyList_Check(nd) || PyList_GET_SIZE(nd) < N_SLOTS
-            || !PyLong_Check(PyList_GET_ITEM(nd, N_KIND))) {
-        PyErr_Format(PyExc_ValueError, "node %zd is not a node record", idx);
-        return NULL;
-    }
-    return nd;
-}
-
-static long kind_of(PyObject *nd)
-{
-    return PyLong_AsLong(PyList_GET_ITEM(nd, N_KIND));
-}
-
 /* chars.trim's whitespace: the end of the leading run and the start of the
- * trailing run of s[from:] */
-static Py_ssize_t trim_start(PyObject *s, Py_ssize_t from)
+ * trailing run of s[from:to] */
+static Py_ssize_t trim_start(PyObject *s, Py_ssize_t from, Py_ssize_t to)
 {
     int kind = PyUnicode_KIND(s);
     const void *data = PyUnicode_DATA(s);
-    Py_ssize_t n = PyUnicode_GET_LENGTH(s);
-    while (from < n && is_ws(PyUnicode_READ(kind, data, from)))
+    while (from < to && is_ws(PyUnicode_READ(kind, data, from)))
         from++;
     return from;
 }
 
-static Py_ssize_t trim_end(PyObject *s, Py_ssize_t from)
+static Py_ssize_t trim_end(PyObject *s, Py_ssize_t from, Py_ssize_t to)
 {
     int kind = PyUnicode_KIND(s);
     const void *data = PyUnicode_DATA(s);
-    Py_ssize_t e = PyUnicode_GET_LENGTH(s);
-    while (e > from && is_ws(PyUnicode_READ(kind, data, e - 1)))
-        e--;
-    return e;
+    while (to > from && is_ws(PyUnicode_READ(kind, data, to - 1)))
+        to--;
+    return to;
 }
 
 /* a threshold as a double: exact for any float and for ints below 2**53,
@@ -1299,59 +1743,76 @@ static int threshold(PyObject *v, double *out)
     return 0;
 }
 
-/* the text or CDATA node ``nd``, reached as ``f``, joins its owner's open
- * block or opens a new one */
-static int add_piece(Density *d, PyObject *nodes, PyObject *nd, long kind,
-                     Frame f, PyObject *unescape)
+/* the text or CDATA node reached as ``f`` joins its owner's open block or
+ * opens a new one */
+static int add_piece(Density *d, NodeStore *st, long kind, Frame f,
+                     PyObject *unescape)
 {
-    PyObject *text = PyList_GET_ITEM(nd, N_CONTENT);
-    PyObject *start = PyList_GET_ITEM(nd, N_SRC_START);
-    PyObject *end = PyList_GET_ITEM(nd, N_SRC_END);
-    if (!PyUnicode_Check(text) || !PyLong_Check(start)) {
-        PyErr_Format(PyExc_TypeError, "node %zd: malformed text record",
-                     f.node);
+    PyObject *nd;
+    Node *x = node_ref(st, f.node, &nd);
+    if (x == NULL)
         return -1;
-    }
-    if (PyUnicode_READY(text) < 0)
-        return -1;
-    Py_ssize_t s0 = PyLong_AsSsize_t(start);
-    if (s0 == -1 && PyErr_Occurred())
-        return -1;
-    if (s0 >= 0) {
-        Py_INCREF(start);
-        Py_INCREF(end);
+    Piece p = {NULL, 0, 0, -1, -1, 0};
+    int poss_ent;
+    if (nd == NULL) {
+        p.str = st->src;
+        p.a = x->a;
+        p.b = x->b;
+        p.start = x->src_start;
+        p.end = x->src_end;
+        poss_ent = x->poss_ent;
     } else {
-        start = end = NULL;
+        PyObject *text = PyList_GET_ITEM(nd, N_CONTENT);
+        PyObject *start = PyList_GET_ITEM(nd, N_SRC_START);
+        if (!PyUnicode_Check(text) || !PyLong_Check(start)) {
+            PyErr_Format(PyExc_TypeError, "node %zd: malformed text record",
+                         f.node);
+            return -1;
+        }
+        if (PyUnicode_READY(text) < 0)
+            return -1;
+        p.str = text;
+        p.b = PyUnicode_GET_LENGTH(text);
+        p.start = PyLong_AsSsize_t(start);
+        if (p.start == -1 && PyErr_Occurred())
+            return -1;
+        if (p.start >= 0) {
+            p.end = PyLong_AsSsize_t(PyList_GET_ITEM(nd, N_SRC_END));
+            if (p.end == -1 && PyErr_Occurred())
+                return -1;
+        }
+        poss_ent = PyObject_IsTrue(PyList_GET_ITEM(nd, N_POSS_ENT));
+        if (poss_ent < 0)
+            return -1;
     }
-    Py_INCREF(text);
-    if (kind == TEXT) {
-        int poss_ent = PyObject_IsTrue(PyList_GET_ITEM(nd, N_POSS_ENT));
-        Py_ssize_t amp = poss_ent > 0 ? PyUnicode_FindChar(
-            text, '&', 0, PyUnicode_GET_LENGTH(text), 1) : -1;
-        if (poss_ent < 0 || amp == -2)
+    Py_INCREF(p.str);
+    if (kind == TEXT && poss_ent) {
+        Py_ssize_t amp = PyUnicode_FindChar(p.str, '&', p.a, p.b, 1);
+        if (amp == -2)
             goto fail;
         if (amp >= 0) {
-            /* the call may run any Python code: nd is not read past it */
-            Py_SETREF(text, PyObject_CallOneArg(unescape, text));
-            if (text == NULL || !PyUnicode_Check(text)
-                    || PyUnicode_READY(text) < 0) {
-                if (text != NULL && !PyErr_Occurred())
+            /* the call may run any Python code: no node is read past it */
+            PyObject *raw = PyUnicode_Substring(p.str, p.a, p.b);
+            Py_SETREF(p.str, raw == NULL ? NULL
+                                         : PyObject_CallOneArg(unescape, raw));
+            Py_XDECREF(raw);
+            if (p.str == NULL || !PyUnicode_Check(p.str)
+                    || PyUnicode_READY(p.str) < 0) {
+                if (p.str != NULL && !PyErr_Occurred())
                     PyErr_SetString(PyExc_TypeError,
                                     "unescape_entities returned a non-str");
                 goto fail;
             }
+            p.a = 0;
+            p.b = PyUnicode_GET_LENGTH(p.str);
         }
     }
 
     Py_ssize_t *open = &d->block_of[f.owner + 1];
     if (*open < 0) {
         PyObject *owner_tag = S_EMPTY;
-        if (f.owner >= 0) {
-            PyObject *owner = record(nodes, f.owner);
-            if (owner == NULL)
-                goto fail;
-            owner_tag = PyList_GET_ITEM(owner, N_TAG_LC);
-        }
+        if (f.owner >= 0 && (owner_tag = tag_lc_at(st, f.owner)) == NULL)
+            goto fail;
         if (reserve((void **)&d->blocks, &d->cap_blocks, d->n_blocks + 1,
                     sizeof(Block)) < 0)
             goto fail;
@@ -1367,21 +1828,62 @@ static int add_piece(Density *d, PyObject *nodes, PyObject *nd, long kind,
     Block *b = &d->blocks[*open];
     b->count++;
     if (f.link) {
-        Py_ssize_t a = trim_start(text, 0);
-        b->link_chars += trim_end(text, a) - a;
+        Py_ssize_t a = trim_start(p.str, p.a, p.b);
+        b->link_chars += trim_end(p.str, a, p.b) - a;
     }
-    d->pieces[d->n_pieces++] = (Piece){text, start, end, *open};
+    p.block = *open;
+    d->pieces[d->n_pieces++] = p;
     return 0;
 
 fail:
-    Py_XDECREF(start);
-    Py_XDECREF(end);
-    Py_XDECREF(text);
+    Py_XDECREF(p.str);
     return -1;
 }
 
+/* push node i's children onto the stack as ``child`` frames, the first
+ * child on top */
+static int push_children(Density *d, NodeStore *st, Py_ssize_t i,
+                         PyObject *nd, Frame child)
+{
+    if (nd != NULL) {
+        PyObject *children = PyList_GET_ITEM(nd, N_CHILDREN);
+        if (children == Py_None)
+            return 0;
+        Py_ssize_t m = PyList_GET_SIZE(children);
+        if (reserve((void **)&d->stack, &d->cap_stack, d->n_stack + m,
+                    sizeof(Frame)) < 0)
+            return -1;
+        for (Py_ssize_t j = m - 1; j >= 0; j--) {
+            PyObject *c = PyList_GET_ITEM(children, j);
+            child.node = PyLong_Check(c) ? PyLong_AsSsize_t(c) : -1;
+            if (child.node < 0 || child.node >= d->n_nodes) {
+                if (!PyErr_Occurred())
+                    PyErr_Format(PyExc_IndexError,
+                                 "node %zd: child %zd is not a node", i, j);
+                return -1;
+            }
+            d->stack[d->n_stack++] = child;
+        }
+        return 0;
+    }
+    Py_ssize_t base = d->n_stack;
+    for (Py_ssize_t c = st->v[i].first; c >= 0; c = st->v[c].next) {
+        if (reserve((void **)&d->stack, &d->cap_stack, d->n_stack + 1,
+                    sizeof(Frame)) < 0)
+            return -1;
+        child.node = c;
+        d->stack[d->n_stack++] = child;
+    }
+    for (Py_ssize_t lo = base, hi = d->n_stack - 1; lo < hi; lo++, hi--) {
+        Frame tmp = d->stack[lo];
+        d->stack[lo] = d->stack[hi];
+        d->stack[hi] = tmp;
+    }
+    return 0;
+}
+
 /* walk the tree from the root, filling d's pieces and blocks */
-static int walk(Density *d, PyObject *nodes, PyObject *drop, PyObject *inl,
+static int walk(Density *d, NodeStore *st, PyObject *drop, PyObject *inl,
                 PyObject *unescape)
 {
     if (reserve((void **)&d->stack, &d->cap_stack, 1, sizeof(Frame)) < 0)
@@ -1389,26 +1891,29 @@ static int walk(Density *d, PyObject *nodes, PyObject *drop, PyObject *inl,
     d->stack[d->n_stack++] = (Frame){0, -1, 0};
     while (d->n_stack) {
         Frame f = d->stack[--d->n_stack];
-        PyObject *nd = record(nodes, f.node);
-        if (nd == NULL)
-            return -1;
-        long kind = kind_of(nd);
+        long kind = kind_at(st, f.node);
         if (kind == -1 && PyErr_Occurred())
             return -1;
         if (kind == TEXT || kind == CDATA) {
-            if (add_piece(d, nodes, nd, kind, f, unescape) < 0)
+            if (add_piece(d, st, kind, f, unescape) < 0)
                 return -1;
             continue;
         }
         if (kind != ELEMENT)
             continue;
-        PyObject *tag = PyList_GET_ITEM(nd, N_TAG_LC);
-        PyObject *children = PyList_GET_ITEM(nd, N_CHILDREN);
-        if (!PyUnicode_Check(tag)
-                || (children != Py_None && !PyList_Check(children))) {
-            PyErr_Format(PyExc_TypeError, "node %zd: malformed element record",
-                         f.node);
+        PyObject *nd;
+        if (node_ref(st, f.node, &nd) == NULL)
             return -1;
+        PyObject *tag = tag_lc_at(st, f.node);
+        if (tag == NULL)
+            return -1;
+        if (nd != NULL) {
+            PyObject *children = PyList_GET_ITEM(nd, N_CHILDREN);
+            if (children != Py_None && !PyList_Check(children)) {
+                PyErr_Format(PyExc_TypeError,
+                             "node %zd: malformed element record", f.node);
+                return -1;
+            }
         }
         Frame child = {0, f.node, f.link};
         if (f.node != 0) {
@@ -1427,33 +1932,18 @@ static int walk(Density *d, PyObject *nodes, PyObject *drop, PyObject *inl,
         /* a block element ends the enclosing block's open text run */
         if (child.owner == f.node)
             d->block_of[f.owner + 1] = -1;
-        if (children == Py_None)
-            continue;
-        Py_ssize_t m = PyList_GET_SIZE(children);
-        if (reserve((void **)&d->stack, &d->cap_stack, d->n_stack + m,
-                    sizeof(Frame)) < 0)
+        if (push_children(d, st, f.node, nd, child) < 0)
             return -1;
-        for (Py_ssize_t j = m - 1; j >= 0; j--) {
-            PyObject *c = PyList_GET_ITEM(children, j);
-            child.node = PyLong_Check(c) ? PyLong_AsSsize_t(c) : -1;
-            if (child.node < 0 || child.node >= d->n_nodes) {
-                if (!PyErr_Occurred())
-                    PyErr_Format(PyExc_IndexError,
-                                 "node %zd: child %zd is not a node", f.node,
-                                 j);
-                return -1;
-            }
-            d->stack[d->n_stack++] = child;
-        }
     }
     return 0;
 }
 
 /* score each block in creation order; append the kept blocks' trimmed text
- * (separators included) to ``parts`` and their spans to ``spans`` */
+ * (separators included) to ``parts`` and their spans to ``starts`` and
+ * ``ends`` */
 static int score(Density *d, PyObject *boost, double min_chars,
-                 double max_link, PyObject *parts, PyObject *spans,
-                 long *kept, long *total)
+                 double max_link, PyObject *parts, PyObject *starts,
+                 PyObject *ends, long *kept, long *total)
 {
     Py_ssize_t first = 0;
     for (Py_ssize_t k = 0; k < d->n_blocks; k++) {
@@ -1477,9 +1967,9 @@ static int score(Density *d, PyObject *boost, double min_chars,
         /* the trimmed block runs from piece lp at lo to piece tp at to */
         Py_ssize_t lp = -1, lo = 0, tp = 0, to = 0;
         for (Py_ssize_t j = 0; j < b->count; j++) {
-            PyObject *t = d->pieces[idx[j]].text;
-            lo = trim_start(t, 0);
-            if (lo < PyUnicode_GET_LENGTH(t)) {
+            const Piece *p = &d->pieces[idx[j]];
+            lo = trim_start(p->str, p->a, p->b);
+            if (lo < p->b) {
                 lp = j;
                 break;
             }
@@ -1487,14 +1977,17 @@ static int score(Density *d, PyObject *boost, double min_chars,
         if (lp < 0)
             continue;
         for (tp = b->count - 1; tp >= lp; tp--) {
-            Py_ssize_t from = tp == lp ? lo : 0;
-            to = trim_end(d->pieces[idx[tp]].text, from);
+            const Piece *p = &d->pieces[idx[tp]];
+            Py_ssize_t from = tp == lp ? lo : p->a;
+            to = trim_end(p->str, from, p->b);
             if (to > from)
                 break;
         }
         Py_ssize_t chars = to - lo;
-        for (Py_ssize_t j = lp; j < tp; j++)
-            chars += PyUnicode_GET_LENGTH(d->pieces[idx[j]].text);
+        if (tp > lp)  /* lo is in piece lp, to in piece tp */
+            chars = d->pieces[idx[lp]].b - lo + to - d->pieces[idx[tp]].a;
+        for (Py_ssize_t j = lp + 1; j < tp; j++)
+            chars += d->pieces[idx[j]].b - d->pieces[idx[j]].a;
         ++*total;
         if ((double)b->link_chars / (double)chars > max_link)
             continue;
@@ -1508,9 +2001,9 @@ static int score(Density *d, PyObject *boost, double min_chars,
         if (++*kept > 1 && PyList_Append(parts, S_BLOCK_SEP) < 0)
             return -1;
         for (Py_ssize_t j = lp; j <= tp; j++) {
-            PyObject *t = d->pieces[idx[j]].text;
+            const Piece *p = &d->pieces[idx[j]];
             PyObject *piece = PyUnicode_Substring(
-                t, j == lp ? lo : 0, j == tp ? to : PyUnicode_GET_LENGTH(t));
+                p->str, j == lp ? lo : p->a, j == tp ? to : p->b);
             if (piece == NULL || PyList_Append(parts, piece) < 0) {
                 Py_XDECREF(piece);
                 return -1;
@@ -1518,53 +2011,79 @@ static int score(Density *d, PyObject *boost, double min_chars,
             Py_DECREF(piece);
         }
         for (Py_ssize_t j = 0; j < b->count; j++) {
-            Piece *p = &d->pieces[idx[j]];
-            if (p->start == NULL)
+            const Piece *p = &d->pieces[idx[j]];
+            if (p->start < 0)
                 continue;
-            PyObject *sp = PyTuple_Pack(2, p->start, p->end);
-            if (sp == NULL || PyList_Append(spans, sp) < 0) {
-                Py_XDECREF(sp);
+            PyObject *s = PyLong_FromSsize_t(p->start);
+            PyObject *e = PyLong_FromSsize_t(p->end);
+            int bad = s == NULL || e == NULL || PyList_Append(starts, s) < 0
+                || PyList_Append(ends, e) < 0;
+            Py_XDECREF(s);
+            Py_XDECREF(e);
+            if (bad)
                 return -1;
-            }
-            Py_DECREF(sp);
         }
     }
     return 0;
 }
 
+/* a store for ``nodes``: the store itself, or a new one holding the
+ * records of a list (new reference); NULL on error */
+static NodeStore *as_store(PyObject *nodes, const char *usage)
+{
+    if (NodeStore_Check(nodes)) {
+        Py_INCREF(nodes);
+        return (NodeStore *)nodes;
+    }
+    if (!PyList_Check(nodes)) {
+        PyErr_SetString(PyExc_TypeError, usage);
+        return NULL;
+    }
+    NodeStore *st = (NodeStore *)PyObject_CallNoArgs(
+        (PyObject *)&NodeStoreType);
+    for (Py_ssize_t i = 0; st != NULL && i < PyList_GET_SIZE(nodes); i++) {
+        if (store_push(st) < 0)
+            Py_CLEAR(st);
+        else
+            st->v[i].rec = Py_NewRef(PyList_GET_ITEM(nodes, i));
+    }
+    return st;
+}
+
 static PyObject *density(PyObject *self, PyObject *const *args,
                          Py_ssize_t nargs)
 {
+    static const char usage[] =
+        "density(nodes, set, set, set, min_block_chars, max_link_density,"
+        " unescape)";
     if (nargs != 7) {
         PyErr_SetString(PyExc_TypeError, "density() takes 7 arguments");
         return NULL;
     }
-    PyObject *nodes = args[0], *unescape = args[6];
+    PyObject *unescape = args[6];
     double min_chars, max_link;
-    if (!PyList_Check(nodes) || !PyAnySet_Check(args[1])
-            || !PyAnySet_Check(args[2]) || !PyAnySet_Check(args[3])) {
-        PyErr_SetString(PyExc_TypeError,
-                        "density(list, set, set, set, min_block_chars, "
-                        "max_link_density, unescape)");
+    if (!PyAnySet_Check(args[1]) || !PyAnySet_Check(args[2])
+            || !PyAnySet_Check(args[3])) {
+        PyErr_SetString(PyExc_TypeError, usage);
         return NULL;
     }
     if (threshold(args[4], &min_chars) < 0
             || threshold(args[5], &max_link) < 0)
         return NULL;
-
-    Py_ssize_t n = PyList_GET_SIZE(nodes);
-    long text_nodes = 0;
-    for (Py_ssize_t i = 0; i < n; i++) {
-        PyObject *nd = record(nodes, i);
-        long kind = nd == NULL ? -1 : kind_of(nd);
-        if (kind == -1 && PyErr_Occurred())
-            return NULL;
-        text_nodes += kind == TEXT || kind == CDATA;
-    }
+    NodeStore *st = as_store(args[0], usage);
+    if (st == NULL)
+        return NULL;
 
     Density d = {0};
-    PyObject *parts = NULL, *spans = NULL, *result = NULL;
-    long kept = 0, total = 0;
+    PyObject *parts = NULL, *starts = NULL, *ends = NULL, *result = NULL;
+    long kept = 0, total = 0, text_nodes = 0;
+    Py_ssize_t n = st->n;
+    for (Py_ssize_t i = 0; i < n; i++) {
+        long kind = kind_at(st, i);
+        if (kind == -1 && PyErr_Occurred())
+            goto done;
+        text_nodes += kind == TEXT || kind == CDATA;
+    }
     d.n_nodes = n;
     d.block_of = PyMem_New(Py_ssize_t, n + 1);
     if (d.block_of == NULL) {
@@ -1573,25 +2092,23 @@ static PyObject *density(PyObject *self, PyObject *const *args,
     }
     for (Py_ssize_t i = 0; i <= n; i++)
         d.block_of[i] = -1;
-    if (walk(&d, nodes, args[1], args[2], unescape) < 0)
+    if (walk(&d, st, args[1], args[2], unescape) < 0)
         goto done;
     parts = PyList_New(0);
-    spans = PyList_New(0);
-    if (parts == NULL || spans == NULL
-            || score(&d, args[3], min_chars, max_link, parts, spans, &kept,
-                     &total) < 0)
+    starts = PyList_New(0);
+    ends = PyList_New(0);
+    if (parts == NULL || starts == NULL || ends == NULL
+            || score(&d, args[3], min_chars, max_link, parts, starts, ends,
+                     &kept, &total) < 0)
         goto done;
     PyObject *text = PyUnicode_Join(S_EMPTY, parts);
     if (text != NULL)
-        result = Py_BuildValue("(NOllnl)", text, spans, kept, total, n - 1,
-                               text_nodes);
+        result = Py_BuildValue("(NOOllnl)", text, starts, ends, kept, total,
+                               n - 1, text_nodes);
 
 done:
-    for (Py_ssize_t p = 0; p < d.n_pieces; p++) {
-        Py_DECREF(d.pieces[p].text);
-        Py_XDECREF(d.pieces[p].start);
-        Py_XDECREF(d.pieces[p].end);
-    }
+    for (Py_ssize_t p = 0; p < d.n_pieces; p++)
+        Py_DECREF(d.pieces[p].str);
     for (Py_ssize_t k = 0; k < d.n_blocks; k++)
         Py_DECREF(d.blocks[k].owner_tag);
     PyMem_Free(d.stack);
@@ -1600,45 +2117,47 @@ done:
     PyMem_Free(d.block_of);
     PyMem_Free(d.order);
     Py_XDECREF(parts);
-    Py_XDECREF(spans);
+    Py_XDECREF(starts);
+    Py_XDECREF(ends);
+    Py_DECREF(st);
     return result;
 }
 
 /* --- the parse-end census ---------------------------------------------------
  *
- * census() is DocBuilder.count_unclosed_flat in one loop over the records:
+ * census() is DocBuilder.count_unclosed_flat in one loop over the nodes:
  * (unclosed, implicitly closed) non-synthetic elements.  The Python method
  * stays the reference (tests/test_parser_fastpaths.py compares the two).
  */
 
 static PyObject *census(PyObject *self, PyObject *nodes)
 {
-    if (!PyList_Check(nodes)) {
-        PyErr_SetString(PyExc_TypeError, "census(list)");
+    NodeStore *st = as_store(nodes, "census(nodes)");
+    if (st == NULL)
         return NULL;
-    }
     Py_ssize_t unclosed = 0, implicitly = 0;
-    for (Py_ssize_t i = 0; i < PyList_GET_SIZE(nodes); i++) {
-        PyObject *nd = record(nodes, i);
-        if (nd == NULL)
-            return NULL;
-        long kind = kind_of(nd);
+    PyObject *result = NULL;
+    for (Py_ssize_t i = 0; i < st->n; i++) {
+        long kind = kind_at(st, i), closure;
         if (kind == -1 && PyErr_Occurred())
-            return NULL;
+            goto done;
         if (kind != ELEMENT)
             continue;
-        int synthetic = PyObject_IsTrue(PyList_GET_ITEM(nd, N_SYNTHETIC));
+        int synthetic = synthetic_at(st, i);
         if (synthetic < 0)
-            return NULL;
+            goto done;
         if (synthetic)
             continue;
-        long closure = PyLong_AsLong(PyList_GET_ITEM(nd, N_CLOSURE));
+        closure = closure_at(st, i);
         if (closure == -1 && PyErr_Occurred())
-            return NULL;
+            goto done;
         unclosed += closure == UNCLOSED;
         implicitly += closure == IMPLICITLY_CLOSED;
     }
-    return Py_BuildValue("nn", unclosed, implicitly);
+    result = Py_BuildValue("nn", unclosed, implicitly);
+done:
+    Py_DECREF(st);
+    return result;
 }
 
 /* --- the token count --------------------------------------------------------
@@ -1722,12 +2241,12 @@ static PyObject *reset_stats(PyObject *self, PyObject *unused)
 
 static PyMethodDef methods[] = {
     {"scan", (PyCFunction)(void (*)(void))scan, METH_FASTCALL,
-     "scan(t, i, nodes, open_stack, builder, empty_end_tag, sniff)"
+     "scan(t, i, node_store, open_stack, builder, empty_end_tag, sniff)"
      " -> (offset of the first token not owned, errors counted)"},
     {"density", (PyCFunction)(void (*)(void))density, METH_FASTCALL,
      "density(nodes, DROP_TAGS, INLINE_TAGS, BOOST_TAGS, min_block_chars,"
-     " max_link_density, unescape_entities) -> (text, spans, kept_blocks,"
-     " total_blocks, node_count, text_node_count)"},
+     " max_link_density, unescape_entities) -> (text, span_starts,"
+     " span_ends, kept_blocks, total_blocks, node_count, text_node_count)"},
     {"census", census, METH_O,
      "census(nodes) -> (unclosed, implicitly closed) non-synthetic elements"},
     {"token_count", token_count, METH_O,
@@ -1742,8 +2261,8 @@ static PyMethodDef methods[] = {
 
 static struct PyModuleDef module = {
     PyModuleDef_HEAD_INIT, "_native",
-    "Native parse core, density extraction, the parse-end census and the"
-    " token count.", -1,
+    "Native parse core and node storage, density extraction, the parse-end"
+    " census and the token count.", -1,
     methods,
     NULL, NULL, NULL, NULL
 };
@@ -1757,7 +2276,6 @@ PyMODINIT_FUNC PyInit__native(void)
 {
     for (int j = 0; j < 8; j++)  /* node kinds and closure states */
         INT[j] = PyLong_FromLong(j);
-    INT_M1 = PyLong_FromLong(-1);
     S_EMPTY = PyUnicode_New(0, 0);
     S_DQ = intern("\"");
     S_SQ = intern("'");
@@ -1768,11 +2286,13 @@ PyMODINIT_FUNC PyInit__native(void)
     S_LOWER = intern("lower");
     S_BLOCK_SEP = intern("\n\n");
     T_EMPTY = PyTuple_New(0);
-    if (PyErr_Occurred())
+    if (PyErr_Occurred() || PyType_Ready(&NodeStoreType) < 0)
         return NULL;
     PyObject *m = PyModule_Create(&module);
     if (m == NULL || PyModule_AddIntMacro(m, INTERN_SLOTS) < 0
-            || PyModule_AddIntMacro(m, INTERN_MAX_LEN) < 0) {
+            || PyModule_AddIntMacro(m, INTERN_MAX_LEN) < 0
+            || PyModule_AddObjectRef(m, "NodeStore",
+                                     (PyObject *)&NodeStoreType) < 0) {
         Py_XDECREF(m);
         return NULL;
     }

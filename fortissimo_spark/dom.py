@@ -3,9 +3,11 @@
 Behavioral parity target: ``/root/reference/projects/fortissimo-html/src/dom.ts``
 and ``src/elements.ts`` — re-expressed as index arrays (no object tree).
 
-Storage: one Python list per node (21 fixed slots, ``N_*`` indices), one
-append per node — the hot path allocates a single record instead of fanning
-out across parallel lists.
+Storage: a node is read as one Python list, its record (21 fixed slots,
+``N_*`` indices).  Where the native core loads, ``DocBuilder.nodes`` is its
+``NodeStore``, which holds the nodes the core parsed as C structs and
+builds a node's record the first time Python reads it; elsewhere it is a
+list of records (see ``DocBuilder``).
 
 Positions: a record holds source offsets, not lines and columns.
 ``DocBuilder.line_col`` works them out when read, through the ``_Pos`` that
@@ -38,7 +40,13 @@ from __future__ import annotations
 import re
 from bisect import bisect_left, bisect_right
 
+from . import native as _native_build
 from .chars import unescape_entities
+
+# the container DocBuilder.nodes starts as: the native core's NodeStore
+# when it loads, else a list
+_native = _native_build.load()
+_NodeStore = _native.NodeStore if _native is not None else list
 
 # --- node kinds --------------------------------------------------------------
 ELEMENT = 0
@@ -217,12 +225,24 @@ class DocBuilder:
 
     Node 0 is the synthetic root (tag ``/``), matching the reference's root
     sentinel (dom.ts:536).
+
+    ``nodes`` reads like a list of records: ``nodes[i][N_KIND]``, ``len``,
+    iteration, slices and ``append(record)``.  Where the native core loads
+    it is a ``_native.NodeStore``: the core's scan fills node structs and
+    builds no record, ``nodes[i]`` builds node i's record on the first read
+    and returns that same list from then on, and that record is the node's
+    authority (an edit to it is what the core and every reader see).
+    ``nodes.append`` stores a Python record as it is, as the general
+    machine and ``new_element`` do.  ``nodes.materialized`` counts the
+    records built on a read: the extract kernel reads every node from C
+    and builds none on a page without tables or hand-offs.  Without the
+    core, ``nodes`` is a plain list of records.
     """
 
     __slots__ = ("nodes", "open_stack", "in_math_or_svg", "xml_mode", "pos")
 
     def __init__(self) -> None:
-        self.nodes: list[list] = []
+        self.nodes: list[list] = _NodeStore()
         self.open_stack: list[int] = []
         self.in_math_or_svg = 0
         self.xml_mode = False

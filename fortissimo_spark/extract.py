@@ -13,13 +13,16 @@ boilerplate-strip heuristics"):
   split, formatter.ts:87-89) scored by trimmed length and link density
   (jusText/Boilerpipe-family heuristic, deterministic and configurable).
 
-Every mode also returns source spans: (start, end) char offsets into the
-parsed text for each emitted text/CDATA node, so downstream consumers can
-trace extracted content back into the raw page bytes.
+Every mode also returns source spans: the start and end char offsets into
+the parsed text of each emitted text/CDATA node, as two parallel lists
+(``starts``, ``ends``), so downstream consumers can trace extracted content
+back into the raw page bytes.
 
 ``density`` runs in the native core (``density()`` in ``_native.c``) when
-it built: the same walk, blocks and scores over the same node records,
-with entity decoding called back into ``chars.unescape_entities``.  The
+it built: the same walk, blocks and scores over the same nodes, read
+from the node structs of a store that Python has not read (no record is
+built) and from the records otherwise, with entity decoding called back
+into ``chars.unescape_entities``.  The
 Python loop below is the reference and the path on hosts without a
 compiler; ``extract()`` reads ``_NATIVE_DENSITY`` from the module globals
 on every call, so ``tests/test_extract_native.py`` sets it to None and
@@ -70,13 +73,14 @@ _NATIVE_DENSITY = _native.density if _native is not None else None
 
 
 class ExtractResult:
-    __slots__ = ("text", "spans", "kept_blocks", "total_blocks", "node_count",
-                 "text_node_count")
+    __slots__ = ("text", "starts", "ends", "kept_blocks", "total_blocks",
+                 "node_count", "text_node_count")
 
-    def __init__(self, text, spans, kept_blocks, total_blocks, node_count,
-                 text_node_count):
+    def __init__(self, text, starts, ends, kept_blocks, total_blocks,
+                 node_count, text_node_count):
         self.text = text
-        self.spans = spans
+        self.starts = starts
+        self.ends = ends
         self.kept_blocks = kept_blocks
         self.total_blocks = total_blocks
         self.node_count = node_count
@@ -128,8 +132,8 @@ def validate_spans(b: DocBuilder, source: str) -> tuple[int, bool]:
     return count, True
 
 
-def _text_content_skipping(b: DocBuilder, node: int, out: list, spans: list,
-                           drop: frozenset) -> None:
+def _text_content_skipping(b: DocBuilder, node: int, out: list, starts: list,
+                           ends: list, drop: frozenset) -> None:
     """textContent of ``node`` without the subtrees of ``drop`` elements,
     plus the source span of every emitted text/CDATA node."""
     nodes = b.nodes
@@ -141,7 +145,8 @@ def _text_content_skipping(b: DocBuilder, node: int, out: list, spans: list,
         if k == TEXT or k == CDATA:
             out.append(_decoded(b, child))
             if nd[N_SRC_START] >= 0:
-                spans.append((nd[N_SRC_START], nd[N_SRC_END]))
+                starts.append(nd[N_SRC_START])
+                ends.append(nd[N_SRC_END])
         elif k == ELEMENT and nd[N_TAG_LC] not in drop and nd[N_CHILDREN]:
             stack.extend(reversed(nd[N_CHILDREN]))
 
@@ -162,17 +167,20 @@ def extract(b: DocBuilder, strip: str = "density",
 
     if strip == "none" or strip == "basic":
         out: list = []
-        spans: list = []
-        _text_content_skipping(b, 0, out, spans,
+        starts: list = []
+        ends: list = []
+        _text_content_skipping(b, 0, out, starts, ends,
                                DROP_TAGS if strip == "basic" else frozenset())
-        return ExtractResult("".join(out), spans, 0, 0, node_count, text_node_count)
+        return ExtractResult("".join(out), starts, ends, 0, 0, node_count,
+                             text_node_count)
 
     if strip != "density":
         raise ValueError(f"unknown strip mode {strip!r}")
 
     # --- density mode: group text nodes into blocks by nearest block ancestor
     nodes = b.nodes
-    # blocks are [tag, parts, spans, link_chars] lists (cheaper than dicts)
+    # blocks are [tag, parts, starts, ends, link_chars] lists (cheaper than
+    # dicts)
     blocks: list[list] = []
     # iterative DFS carrying (node, block_key, in_link); a new block starts
     # whenever we enter a non-inline element
@@ -193,14 +201,15 @@ def extract(b: DocBuilder, strip: str = "density",
             blk = get_block(block_owner)
             if blk is None:
                 owner_tag = nodes[block_owner][N_TAG_LC] if block_owner >= 0 else ""
-                blk = [owner_tag, [], [], 0]
+                blk = [owner_tag, [], [], [], 0]
                 current_block_of[block_owner] = blk
                 blocks.append(blk)
             blk[1].append(piece)
             if nd[N_SRC_START] >= 0:
-                blk[2].append((nd[N_SRC_START], nd[N_SRC_END]))
+                blk[2].append(nd[N_SRC_START])
+                blk[3].append(nd[N_SRC_END])
             if in_link:
-                blk[3] += len(trim(piece))
+                blk[4] += len(trim(piece))
             continue
         if k != ELEMENT:
             continue
@@ -222,10 +231,11 @@ def extract(b: DocBuilder, strip: str = "density",
                 stack.append((child, child_owner, child_link))
 
     kept_parts: list[str] = []
-    kept_spans: list = []
+    kept_starts: list = []
+    kept_ends: list = []
     kept = 0
     total = 0
-    for owner_tag, parts, spans, link_chars in blocks:
+    for owner_tag, parts, starts, ends, link_chars in blocks:
         visible = trim("".join(parts))
         if not visible:
             continue
@@ -237,7 +247,9 @@ def extract(b: DocBuilder, strip: str = "density",
         if chars >= min_block_chars or owner_tag in BOOST_TAGS:
             kept += 1
             kept_parts.append(visible)
-            kept_spans.extend(spans)
+            kept_starts += starts
+            kept_ends += ends
 
     text = "\n\n".join(kept_parts)
-    return ExtractResult(text, kept_spans, kept, total, node_count, text_node_count)
+    return ExtractResult(text, kept_starts, kept_ends, kept, total, node_count,
+                         text_node_count)

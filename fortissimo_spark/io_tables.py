@@ -105,12 +105,6 @@ def write_pages_iceberg(pages: DataFrame, table_ident: str) -> None:
      .createOrReplace())
 
 
-def overwrite_committed_partitions(df: DataFrame, table_ident: str) -> None:
-    """Atomic per-partition commit (the resume unit) on an Iceberg table —
-    the one-line swap for the parquet dynamic-partition-overwrite path."""
-    df.writeTo(table_ident).overwritePartitions()
-
-
 def write_pages_production(pages: DataFrame, spark: SparkSession,
                            destination: str) -> str:
     """Write the corpus with the production layout, auto-selecting the
@@ -122,10 +116,6 @@ def write_pages_production(pages: DataFrame, spark: SparkSession,
         return "iceberg"
     write_pages_table(pages, destination)
     return "parquet"
-
-
-def read_pages_table(spark: SparkSession, path: str) -> DataFrame:
-    return spark.read.parquet(path)
 
 
 N_URL_BUCKETS = 32

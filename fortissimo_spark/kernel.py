@@ -205,7 +205,7 @@ def _document_fields(raw: bytes, parsed, strip: str,
     result, used, declared, retried = parsed
     ext = extract(result.dom, strip)
     text = ext.text
-    return (text, [s for s, _ in ext.spans], [e for _, e in ext.spans],
+    return (text, ext.starts, ext.ends,
             used, declared, retried, result.errors, result.unclosed_tags,
             result.implicitly_closed_tags, ext.node_count,
             ext.text_node_count, result.characters, result.lines,
@@ -405,6 +405,8 @@ def page_metadata(pages) -> "DataFrame":
 
 
 _RE_SPAN = re.compile(r"[\t\n\f\r ]*\+?([0-9]+)")
+# the HTML standard's clamps for a cell's spans
+_MAX_COLSPAN, _MAX_ROWSPAN = 1_000, 65_534
 
 
 def _tables_from_dom(b) -> list[tuple]:
@@ -417,8 +419,9 @@ def _tables_from_dom(b) -> list[tuple]:
     whitespace-collapsed text_content; spans are read by the HTML rules
     for parsing non-negative integers (leading ASCII whitespace, an
     optional '+', then the leading ASCII digits: '3abc' is 3, '2.5' is
-    2), and a span without digits or below 1 normalizes to 1 (browser
-    behavior)."""
+    2), a span without digits or below 1 normalizes to 1, and a span
+    above the HTML limit reads the limit: 1,000 for colspan and 65,534
+    for rowspan, however many digits it has (browser behavior)."""
     nodes = b.nodes
 
     def nearest(node: int, tag: str) -> int:
@@ -430,13 +433,14 @@ def _tables_from_dom(b) -> list[tuple]:
             p = nd[N_PARENT]
         return -1
 
-    def span(v) -> int:
-        m = _RE_SPAN.match(v or "")
-        try:
-            n = int(m.group(1)) if m else 1
-        except ValueError:  # more digits than int() converts
+    def span(v, limit: int) -> int:
+        m = _RE_SPAN.match(v) if v else None
+        if m is None:
             return 1
-        return n if n >= 1 else 1
+        digits = m.group(1).lstrip("0")
+        if len(digits) > 9:  # above either limit, and int() may refuse it
+            return limit
+        return min(max(int(digits or 0), 1), limit)
 
     out: list[tuple] = []
     for t_i, t in enumerate(b.query_selector_all(0, "table")):
@@ -456,8 +460,8 @@ def _tables_from_dom(b) -> list[tuple]:
                 at = _attrs_ci(b, c)
                 out.append((t_i, caption, r_i, c_i,
                             nodes[c][N_TAG_LC] == "th",
-                            span(at.get("rowspan")),
-                            span(at.get("colspan")),
+                            span(at.get("rowspan"), _MAX_ROWSPAN),
+                            span(at.get("colspan"), _MAX_COLSPAN),
                             " ".join(b.text_content(c).split())))
     return out
 

@@ -1,10 +1,14 @@
 """Build and load the native core (``_native.c``) on first import.
 
-The core holds four entry points: ``scan``, the parse core behind
+The core holds five entry points: ``NodeStore``, the type of
+``DocBuilder.nodes`` (node structs that the scan fills, each read as its
+21-slot record, built on the first read), ``scan``, the parse core behind
 ``parser.parse`` (tree repair included), ``census``, the element counts
 at the end of a parse, ``density``, the walk behind
 ``extract(strip="density")``, and ``token_count``, the kernel's
-``len(text.split())``.  Python keeps the reference for each.
+``len(text.split())``.  Python keeps the reference for each: a plain list
+of records, the general machine, ``DocBuilder.count_unclosed_flat``, the
+Python density loop and ``str.split``.
 
 The C source ships inside the package, so a ``--py-files`` zip carries it
 too: it is read through ``importlib.resources`` and compiled with the
@@ -14,13 +18,15 @@ it once: the build runs under a file lock and lands by atomic rename, so
 concurrent workers wait for it instead of compiling again.
 
 Without a working compiler (or Python headers) or a writable home
-directory ``load()`` returns None: the parser keeps to its Python general
-machine and ``extract()`` to its Python density loop.
+directory ``load()`` returns None: ``DocBuilder.nodes`` is a list, the
+parser keeps to its Python general machine and ``extract()`` to its
+Python density loop.
 """
 
 from __future__ import annotations
 
 import fcntl
+import functools
 import hashlib
 import importlib.resources
 import os
@@ -65,9 +71,11 @@ def _build(src: bytes, out: str) -> None:
         os.replace(so_path, out)
 
 
+@functools.cache
 def load():
     """The compiled ``_native`` module, building it if the cache lacks it;
-    None when it cannot be built."""
+    None when it cannot be built.  A process loads it once: the parser and
+    ``dom.DocBuilder`` share the one module."""
     try:
         src = importlib.resources.files(__package__).joinpath(
             "_native.c").read_bytes()

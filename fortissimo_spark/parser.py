@@ -35,10 +35,12 @@ the native core, ``_native.c``, with or without positions: a record holds
 source offsets only, and line and column are worked out from them when
 read (``dom._Pos``).  The core reads every token it owns (text runs,
 ``<!--`` comments, end tags closed by ``>``, start tags with any number of
-attributes, void elements, implied closes and the raw-text scan), appends
-the same 21-slot node records to ``DocBuilder.nodes`` and returns the
-offset of the first token it does not own.  The general state machine
-below reads that one token and calls back in.  Both build the same lean
+attributes, void elements, implied closes and the raw-text scan), adds
+the same nodes to ``DocBuilder.nodes`` (a ``_native.NodeStore``: node
+structs whose 21-slot records are built when Python reads them) and
+returns the offset of the first token it does not own.  The general state
+machine below reads that one token, appending its records as Python
+lists, and calls back in.  Both give the same lean
 records: an element without attributes holds the one empty tuple ``()``
 in its five ``N_ATTR_*`` slots (``DocBuilder``'s attribute mutators make
 them lists on the first write), and the core takes repeated tag and

@@ -45,9 +45,9 @@ def test_strip_density_blocks():
         "First paragraph with & entity and enough length to count fine."
         "\n\nSecond paragraph, also long enough to be clearly kept by scoring.")
     assert ext.kept_blocks == 2
-    assert len(ext.spans) >= 2
+    assert len(ext.starts) == len(ext.ends) >= 2
     # spans index into the parsed text
-    s, e = ext.spans[0]
+    s, e = ext.starts[0], ext.ends[0]
     assert "First paragraph" in r.text[s:e]
 
 
@@ -125,7 +125,7 @@ def test_spans_cover_extracted_text_sources():
     html = html_for_doc(1, text, "en")
     r = parse(html)
     ext = extract(r.dom, "density")
-    joined = "".join(r.text[s:e] for s, e in ext.spans)
+    joined = "".join(r.text[s:e] for s, e in zip(ext.starts, ext.ends))
     assert "alpha beta gamma" in joined
 
 

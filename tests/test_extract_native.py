@@ -39,8 +39,8 @@ SEED = 20_261_019
 
 
 def _fields(ext):
-    return (ext.text, ext.spans, ext.kept_blocks, ext.total_blocks,
-            ext.node_count, ext.text_node_count)
+    return (ext.text, ext.starts, ext.ends, ext.kept_blocks,
+            ext.total_blocks, ext.node_count, ext.text_node_count)
 
 
 def _require_native():
@@ -226,7 +226,7 @@ def test_deep_nesting_walks_without_recursion(monkeypatch, doc):
     got = _fields(E.extract(b, "density"))
     monkeypatch.setattr(E, "_NATIVE_DENSITY", None)
     assert got == _fields(E.extract(b, "density"))
-    assert got[3] == 1 and got[4] == 100_001
+    assert got[4] == 1 and got[5] == 100_001
 
 
 # --- dispatch and malformed records -----------------------------------------
@@ -238,10 +238,10 @@ def test_extract_reads_the_native_global_on_every_call(monkeypatch):
 
     def native(*args):
         calls.append(args)
-        return ("t", [], 1, 1, 2, 3)
+        return ("t", [], [], 1, 1, 2, 3)
 
     monkeypatch.setattr(E, "_NATIVE_DENSITY", native)
-    assert _fields(E.extract(b, "density")) == ("t", [], 1, 1, 2, 3)
+    assert _fields(E.extract(b, "density")) == ("t", [], [], 1, 1, 2, 3)
     # the lists, thresholds and decoder come from extract.py and chars.py
     assert calls[0][1:] == (E.DROP_TAGS, E.INLINE_TAGS, E.BOOST_TAGS,
                             25, 1.0 / 3.0, E.unescape_entities)
@@ -264,7 +264,7 @@ def test_malformed_records_raise():
         b.nodes[node][slot] = value
         return b.nodes
 
-    assert _native_density(nodes())[:4] == ("x", [(8, 9)], 1, 2)
+    assert _native_density(nodes())[:5] == ("x", [8], [9], 1, 2)
     for bad, exc in [((1, N_CHILDREN, [99]), IndexError),
                      ((1, N_CHILDREN, [-1]), IndexError),
                      ((1, N_CHILDREN, ["2"]), IndexError),

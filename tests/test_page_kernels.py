@@ -100,10 +100,28 @@ def test_kernels_agree_on_declared_charset():
 @pytest.mark.parametrize("value,span", [
     ("3abc", 3), ("2.5", 2), ("1_0", 1), ("\u0663", 1), ("+2", 2),
     (" 4 ", 4), (" 4", 4), ("0", 1), ("-1", 1), ("x", 1),
-    pytest.param("1" * 5000, 1, id="more-digits-than-int-converts")])
+    ("999", 999), ("1000", 1000), ("1001", 1001), ("65534", 65534),
+    ("65535", 65535),
+    pytest.param("0" * 5000 + "7", 7, id="leading-zeros-beyond-int-converts"),
+    pytest.param("1" * 5000, 10 ** 5000, id="more-digits-than-int-converts")])
 def test_table_spans_parse_as_html_non_negative_integers(value, span):
     # ASCII whitespace, an optional '+', then the leading ASCII digits (the
-    # HTML rules a browser applies); no digits or a value below 1 reads 1
+    # HTML rules a browser applies); no digits or a value below 1 reads 1,
+    # and a span above the HTML limit (colspan 1,000, rowspan 65,534) reads
+    # the limit, whatever its length
     html = f'<table><tr><td rowspan="{value}" colspan="{value}">c</td></table>'
     ((*_, rowspan, colspan, cell),) = kernel._tables_from_dom(parse(html).dom)
-    assert (rowspan, colspan, cell) == (span, span, "c")
+    assert (rowspan, colspan, cell) == (min(span, 65_534), min(span, 1_000),
+                                        "c")
+
+
+def test_oversized_table_span_passes_the_arrow_cast():
+    # a span above int32 used to fail the Arrow conversion, and with it the
+    # task: the clamp keeps every span inside the IntegerType columns
+    page = b"<table><tr><td colspan=99999999999>x</td></tr></table>"
+    schema = kernel._TABLES_SCHEMA
+    out = _one(kernel.make_tables_kernel(), [page], ["url", "html"])
+    table = pa.Table.from_pandas(out, schema=to_arrow_schema(schema),
+                                 preserve_index=False, safe=True)
+    assert table.select(["rowspan", "colspan", "cell"]).to_pylist() == [
+        {"rowspan": 1, "colspan": 1_000, "cell": "x"}]

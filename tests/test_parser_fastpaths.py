@@ -613,7 +613,7 @@ _EXTRACT_PROBE = """
 import fortissimo_spark.extract as E
 ext = E.extract(r.dom, "density")
 res += [E._NATIVE_DENSITY is None,
-        [ext.text, ext.spans, ext.kept_blocks, ext.total_blocks,
+        [ext.text, ext.starts, ext.ends, ext.kept_blocks, ext.total_blocks,
          ext.node_count, ext.text_node_count]]
 """
 
@@ -634,9 +634,8 @@ def test_no_compiler_falls_back_to_the_general_machine(tmp_path,
     # result as the core in this process
     want = extract(r.dom, "density")
     assert no_native_density is True
-    assert ext == [want.text, [list(s) for s in want.spans],
-                   want.kept_blocks, want.total_blocks, want.node_count,
-                   want.text_node_count]
+    assert ext == [want.text, want.starts, want.ends, want.kept_blocks,
+                   want.total_blocks, want.node_count, want.text_node_count]
     assert want.kept_blocks >= 2
 
 

@@ -145,10 +145,10 @@ def _q_extract_spans_ok(spark, sf_dir):
     "source-span offsets per document"): each TEXT span must slice the
     decoded source to exactly its node's contribution; in-bounds and
     start-monotone. Checked in-kernel, aggregated."""
-    import pandas as pd
     from pyspark.sql.types import (
         BooleanType, LongType, StringType, StructField, StructType,
     )
+    from fortissimo_spark.batches import row_kernel
     from fortissimo_spark.extract import validate_spans
     from fortissimo_spark.kernel import decode_page_bytes
     from fortissimo_spark.parser import parse as _parse
@@ -159,22 +159,14 @@ def _q_extract_spans_ok(spark, sf_dir):
         StructField("spans_ok", BooleanType()),
     ])
 
-    def kernel(batches):
-        for b in batches:
-            if len(b) == 0:
-                continue
-            rows = {"url": [], "n_spans": [], "spans_ok": []}
-            for url, raw in zip(b["url"].tolist(), b["html"].tolist()):
-                text_src, _, _ = decode_page_bytes(bytes(raw or b""))
-                r = _parse(text_src, positions=False)
-                n, ok = validate_spans(r.dom, r.text)
-                rows["url"].append(url)
-                rows["n_spans"].append(n)
-                rows["spans_ok"].append(ok)
-            yield pd.DataFrame(rows)
+    def spans_ok(raw):
+        text_src, _, _ = decode_page_bytes(bytes(raw or b""))
+        r = _parse(text_src, positions=False)
+        return [validate_spans(r.dom, r.text)]
 
     pages = dedup_latest_crawl(build_pages(spark, sf_dir))
-    stats = pages.select("url", "html").mapInPandas(kernel, schema)
+    stats = pages.select("url", "html").mapInPandas(
+        row_kernel(schema, spans_ok, ("html",), carry=("url",)), schema)
     return stats.agg(
         F.count("*").alias("n_docs"),
         F.sum(F.when(F.col("spans_ok"), 1).otherwise(0)).alias("n_spans_ok"))
@@ -1930,11 +1922,13 @@ def _q_warc_write_roundtrip(spark, sf_dir):
     its text in an html payload (multibyte suffix on doc_id % 9 == 4 —
     byte-vs-char Content-Length trap), serializes to a full
     WARC/1.0 + HTTP record with JVM expressions only, then parses back
-    through the REAL warc reader (parse_warc_pages: record framing,
-    HTTP split, 2xx/html filter) and must reproduce (url, html)
+    through the REAL warc reader's row kernel (read_warcs' _warc_pages
+    on the row-kernel loop; parse_warc_pages: record framing, HTTP
+    split, 2xx/html filter) and must reproduce (url, html)
     byte-identically. DuckDB recomputes the expected rows directly."""
-    from fortissimo_spark.warc import (parse_warc_pages,
-                                       warc_response_record_col)
+    from fortissimo_spark.batches import row_kernel
+    from fortissimo_spark.schema import PAGES_SCHEMA
+    from fortissimo_spark.warc import _warc_pages, warc_response_record_col
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     d = F.col("doc_id")
     url = F.concat(F.lit("https://host"), (d % 16).cast("string"),
@@ -1948,22 +1942,9 @@ def _q_warc_write_roundtrip(spark, sf_dir):
         warc_response_record_col(url, F.lit("2024-03-01T00:00:00Z"),
                                  html).alias("payload"))
 
-    import pandas as pd  # noqa: F811
-
-    def kernel(batches):
-        for pdf in batches:
-            rows = {"url": [], "html_text": []}
-            for payload in pdf["payload"]:
-                for p in parse_warc_pages(bytes(payload)):
-                    rows["url"].append(p["url"])
-                    rows["html_text"].append(
-                        bytes(p["html"]).decode("utf-8"))
-            yield pd.DataFrame(rows, columns=("url", "html_text"))
-
-    from pyspark.sql.types import StringType, StructField, StructType
-    schema = StructType([StructField("url", StringType()),
-                         StructField("html_text", StringType())])
-    return recs.mapInPandas(kernel, schema)
+    pages = recs.mapInPandas(
+        row_kernel(PAGES_SCHEMA, _warc_pages, ("payload",)), PAGES_SCHEMA)
+    return pages.select("url", F.decode("html", "UTF-8").alias("html_text"))
 
 
 _WARC_WRITE_ORACLE = """
@@ -2812,9 +2793,11 @@ def _q_wet_roundtrip(spark, sf_dir):
     JVM expressions only (wet_record_col — Content-Length is the UTF-8
     byte count; ± a planted multibyte suffix on doc_id % 9 == 4 so a
     char-count bug would misparse), then the record PARSES BACK through
-    the real WET reader kernel and must reproduce (url, text)
+    the real WET reader kernel (read_wets' _wet_pages on the row-kernel
+    loop) and must reproduce (url, text)
     byte-identically. DuckDB recomputes the expected rows directly."""
-    from fortissimo_spark.warc import parse_wet_pages
+    from fortissimo_spark.batches import row_kernel
+    from fortissimo_spark.warc import WET_SCHEMA, _wet_pages, wet_record_col
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     d = F.col("doc_id")
     url = F.concat(F.lit("https://host"), (d % 16).cast("string"),
@@ -2822,26 +2805,13 @@ def _q_wet_roundtrip(spark, sf_dir):
                    F.lpad(d.cast("string"), 10, "0"))
     text = F.when(d % 9 == 4, F.concat(F.col("text"), F.lit(" — café ✓")))\
         .otherwise(F.col("text"))
-    from fortissimo_spark.warc import wet_record_col
     recs = docs.select(
         wet_record_col(url, F.lit("2024-03-01T00:00:00Z"), text)
         .alias("payload"))
 
-    import pandas as pd  # noqa: F811
-
-    def kernel(batches):
-        for pdf in batches:
-            rows = {"url": [], "text": []}
-            for payload in pdf["payload"]:
-                for p in parse_wet_pages(bytes(payload)):
-                    rows["url"].append(p["url"])
-                    rows["text"].append(p["text"])
-            yield pd.DataFrame(rows, columns=("url", "text"))
-
-    from pyspark.sql.types import StringType, StructField, StructType
-    schema = StructType([StructField("url", StringType()),
-                         StructField("text", StringType())])
-    return recs.mapInPandas(kernel, schema)
+    pages = recs.mapInPandas(
+        row_kernel(WET_SCHEMA, _wet_pages, ("payload",)), WET_SCHEMA)
+    return pages.select("url", "text")
 
 
 _WET_ROUNDTRIP_ORACLE = """

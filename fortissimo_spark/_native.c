@@ -15,18 +15,18 @@
  * DocBuilder._examine_table.
  *
  * What the core stores.  DocBuilder.nodes is a NodeStore (see "node
- * storage" below): the scan and repair() fill an array of node structs
- * (kind, closure and flags, parent, first-child and next-sibling links,
- * source offsets, end_at, the interned tag and end-tag strings, the
- * attribute spans) and build no per-node list, int or content string.  A
- * node's 21-slot record exists only once Python has read nodes[i] (or
- * appended the record itself, as the general machine does): it is built
- * from the struct on that first read, text sliced from the source, and
- * from then on it is the authority for the node.  The core's readers and
- * writers (the scan, repair(), census(), density()) all go through one set
- * of accessors that read the record when there is one and the struct
- * otherwise, so a store that Python never read is read from the structs
- * alone.
+ * storage" below), a sequence and nothing more: the scan and repair() fill
+ * an array of node structs (kind, closure and flags, parent, first-child
+ * and next-sibling links, source offsets, end_at, the interned tag and
+ * end-tag strings, the attribute spans) and build no per-node list, int or
+ * content string.  A node's 21-slot record exists only once Python has
+ * read nodes[i] (or appended the record itself, as the general machine
+ * does): it is built from the struct on that first read, text sliced from
+ * the source, and from then on it is the authority for the node.  The
+ * core's readers and writers (the scan, repair(), census(), density()) all
+ * go through one set of accessors that read the record when there is one
+ * and the struct otherwise, so a store that Python never read is read from
+ * the structs alone.  census() and density() take only a NodeStore.
  *
  * Owned: text runs (the literal-'<' pairwise quirk, empty_end_tag, the
  * trailing-text EOF error), '<!--' comments (the m % 3 == 2 dash rule),
@@ -287,6 +287,11 @@ static int reserve(void **buf, Py_ssize_t *cap, Py_ssize_t need, size_t size)
  * nodes.append(record) (the general machine, DocBuilder.new_element)
  * stores a Python record as it is.  Every C reader and writer goes through
  * node_ref(), which hands back the record whenever there is one.
+ *
+ * The store is that and nothing more: nodes[i] (negative i too, adjusted
+ * by PySequence_GetItem), len(), iteration, append() and weak references.
+ * It takes no slice, item assignment, deletion or comparison; a caller
+ * that wants a list reads list(nodes).
  */
 
 /* one attribute as spans of t: leading whitespace, name, the equals
@@ -648,64 +653,6 @@ static PyObject *store_item(NodeStore *st, Py_ssize_t i)
     return materialize(st, i);
 }
 
-/* nodes[i] = record: the record becomes node i's authority */
-static int store_ass_item(NodeStore *st, Py_ssize_t i, PyObject *v)
-{
-    if (v == NULL) {
-        PyErr_SetString(PyExc_TypeError, "nodes cannot be deleted");
-        return -1;
-    }
-    if (i < 0 || i >= st->n) {
-        PyErr_SetString(PyExc_IndexError, "node assignment index out of range");
-        return -1;
-    }
-    Node *x = &st->v[i];
-    Py_CLEAR(x->tag);
-    Py_CLEAR(x->tag_lc);
-    Py_CLEAR(x->end_tag);
-    Py_INCREF(v);
-    Py_XSETREF(x->rec, v);
-    return 0;
-}
-
-static PyObject *store_subscript(NodeStore *st, PyObject *key)
-{
-    if (PyLong_CheckExact(key)) {  /* the common case, without PyNumber_Index */
-        Py_ssize_t i = PyLong_AsSsize_t(key);
-        if (i != -1 || !PyErr_Occurred())
-            return store_item(st, i < 0 ? i + st->n : i);
-        PyErr_Clear();
-    }
-    if (PyIndex_Check(key)) {
-        Py_ssize_t i = PyNumber_AsSsize_t(key, PyExc_IndexError);
-        if (i == -1 && PyErr_Occurred())
-            return NULL;
-        return store_item(st, i < 0 ? i + st->n : i);
-    }
-    if (!PySlice_Check(key)) {
-        PyErr_Format(PyExc_TypeError,
-                     "node indices must be integers or slices, not %.200s",
-                     Py_TYPE(key)->tp_name);
-        return NULL;
-    }
-    Py_ssize_t start, stop, step;
-    if (PySlice_Unpack(key, &start, &stop, &step) < 0)
-        return NULL;
-    Py_ssize_t len = PySlice_AdjustIndices(st->n, &start, &stop, step);
-    PyObject *out = PyList_New(len);
-    if (out == NULL)
-        return NULL;
-    for (Py_ssize_t j = 0, i = start; j < len; j++, i += step) {
-        PyObject *nd = materialize(st, i);
-        if (nd == NULL) {
-            Py_DECREF(out);
-            return NULL;
-        }
-        PyList_SET_ITEM(out, j, nd);
-    }
-    return out;
-}
-
 static PyObject *store_append(NodeStore *st, PyObject *rec)
 {
     Py_ssize_t i = store_push(st);
@@ -716,37 +663,6 @@ static PyObject *store_append(NodeStore *st, PyObject *rec)
     Py_RETURN_NONE;
 }
 
-/* == and != against a list or another store: item by item */
-static PyObject *store_richcompare(PyObject *a, PyObject *b, int op)
-{
-    if ((op != Py_EQ && op != Py_NE) || !(PyList_Check(b) || NodeStore_Check(b)))
-        Py_RETURN_NOTIMPLEMENTED;
-    Py_ssize_t n = PySequence_Length(a);
-    int eq = n == PySequence_Length(b);
-    for (Py_ssize_t i = 0; eq && i < n; i++) {
-        PyObject *x = PySequence_GetItem(a, i), *y = PySequence_GetItem(b, i);
-        eq = x == NULL || y == NULL ? -1 : PyObject_RichCompareBool(x, y, Py_EQ);
-        Py_XDECREF(x);
-        Py_XDECREF(y);
-    }
-    if (eq < 0)
-        return NULL;
-    return PyBool_FromLong(op == Py_EQ ? eq : !eq);
-}
-
-/* copy and pickle rebuild a store from its records */
-static PyObject *store_reduce(NodeStore *st, PyObject *unused)
-{
-    PyObject *items = PySequence_List((PyObject *)st);
-    if (items == NULL)
-        return NULL;
-    PyObject *it = PyObject_GetIter(items);
-    Py_DECREF(items);
-    if (it == NULL)
-        return NULL;
-    return Py_BuildValue("(O()ON)", (PyObject *)Py_TYPE(st), Py_None, it);
-}
-
 static PyObject *store_materialized(NodeStore *st, void *closure)
 {
     return PyLong_FromSsize_t(st->materialized);
@@ -755,18 +671,11 @@ static PyObject *store_materialized(NodeStore *st, void *closure)
 static PySequenceMethods store_as_sequence = {
     .sq_length = (lenfunc)store_length,
     .sq_item = (ssizeargfunc)store_item,
-    .sq_ass_item = (ssizeobjargproc)store_ass_item,
-};
-
-static PyMappingMethods store_as_mapping = {
-    .mp_length = (lenfunc)store_length,
-    .mp_subscript = (binaryfunc)store_subscript,
 };
 
 static PyMethodDef store_methods[] = {
     {"append", (PyCFunction)store_append, METH_O,
      "append(record): store a Python record as node len(nodes)"},
-    {"__reduce__", (PyCFunction)store_reduce, METH_NOARGS, NULL},
     {NULL, NULL, 0, NULL}
 };
 
@@ -782,14 +691,12 @@ static PyTypeObject NodeStoreType = {
     .tp_basicsize = sizeof(NodeStore),
     .tp_dealloc = (destructor)store_dealloc,
     .tp_as_sequence = &store_as_sequence,
-    .tp_as_mapping = &store_as_mapping,
     .tp_hash = PyObject_HashNotImplemented,
     .tp_flags = Py_TPFLAGS_DEFAULT | Py_TPFLAGS_HAVE_GC,
     .tp_doc = "DocBuilder.nodes: node structs filled by the native scan,"
               " each read as its 21-slot record, built on the first read",
     .tp_traverse = (traverseproc)store_traverse,
     .tp_clear = (inquiry)store_clear,
-    .tp_richcompare = store_richcompare,
     .tp_weaklistoffset = offsetof(NodeStore, weakrefs),
     .tp_iter = PySeqIter_New,
     .tp_methods = store_methods,
@@ -1667,7 +1574,8 @@ static PyObject *scan(PyObject *self, PyObject *const *args, Py_ssize_t nargs)
  * through node_ref(): a node without a record is read from its struct and
  * its text from the source buffer, so a store that Python never read
  * builds no record.  Entity decoding calls back into
- * chars.unescape_entities, so there is one decoder.
+ * chars.unescape_entities, so there is one decoder.  The two thresholds
+ * are extract.py's module constants, read here as doubles.
  */
 
 typedef struct {
@@ -1715,32 +1623,6 @@ static Py_ssize_t trim_end(PyObject *s, Py_ssize_t from, Py_ssize_t to)
     while (to > from && is_ws(PyUnicode_READ(kind, data, to - 1)))
         to--;
     return to;
-}
-
-/* a threshold as a double: exact for any float and for ints below 2**53,
- * and on the same side of every block's length or link share beyond */
-static int threshold(PyObject *v, double *out)
-{
-    if (PyFloat_Check(v)) {
-        *out = PyFloat_AS_DOUBLE(v);
-        return 0;
-    }
-    if (!PyLong_Check(v)) {
-        PyErr_SetString(PyExc_TypeError,
-                        "density thresholds must be int or float");
-        return -1;
-    }
-    *out = PyLong_AsDouble(v);
-    if (*out == -1.0 && PyErr_Occurred()) {
-        if (!PyErr_ExceptionMatches(PyExc_OverflowError))
-            return -1;
-        PyErr_Clear();
-        int neg = PyObject_RichCompareBool(v, INT[0], Py_LT);
-        if (neg < 0)
-            return -1;
-        *out = neg ? -Py_HUGE_VAL : Py_HUGE_VAL;
-    }
-    return 0;
 }
 
 /* the text or CDATA node reached as ``f`` joins its owner's open block or
@@ -2027,51 +1909,23 @@ static int score(Density *d, PyObject *boost, double min_chars,
     return 0;
 }
 
-/* a store for ``nodes``: the store itself, or a new one holding the
- * records of a list (new reference); NULL on error */
-static NodeStore *as_store(PyObject *nodes, const char *usage)
-{
-    if (NodeStore_Check(nodes)) {
-        Py_INCREF(nodes);
-        return (NodeStore *)nodes;
-    }
-    if (!PyList_Check(nodes)) {
-        PyErr_SetString(PyExc_TypeError, usage);
-        return NULL;
-    }
-    NodeStore *st = (NodeStore *)PyObject_CallNoArgs(
-        (PyObject *)&NodeStoreType);
-    for (Py_ssize_t i = 0; st != NULL && i < PyList_GET_SIZE(nodes); i++) {
-        if (store_push(st) < 0)
-            Py_CLEAR(st);
-        else
-            st->v[i].rec = Py_NewRef(PyList_GET_ITEM(nodes, i));
-    }
-    return st;
-}
-
 static PyObject *density(PyObject *self, PyObject *const *args,
                          Py_ssize_t nargs)
 {
-    static const char usage[] =
-        "density(nodes, set, set, set, min_block_chars, max_link_density,"
-        " unescape)";
-    if (nargs != 7) {
-        PyErr_SetString(PyExc_TypeError, "density() takes 7 arguments");
+    if (nargs != 7 || !NodeStore_Check(args[0]) || !PyAnySet_Check(args[1])
+            || !PyAnySet_Check(args[2]) || !PyAnySet_Check(args[3])) {
+        PyErr_SetString(PyExc_TypeError,
+                        "density(NodeStore, set, set, set, min_block_chars,"
+                        " max_link_density, unescape)");
         return NULL;
     }
+    NodeStore *st = (NodeStore *)args[0];
     PyObject *unescape = args[6];
-    double min_chars, max_link;
-    if (!PyAnySet_Check(args[1]) || !PyAnySet_Check(args[2])
-            || !PyAnySet_Check(args[3])) {
-        PyErr_SetString(PyExc_TypeError, usage);
+    double min_chars = PyFloat_AsDouble(args[4]);
+    if (min_chars == -1.0 && PyErr_Occurred())
         return NULL;
-    }
-    if (threshold(args[4], &min_chars) < 0
-            || threshold(args[5], &max_link) < 0)
-        return NULL;
-    NodeStore *st = as_store(args[0], usage);
-    if (st == NULL)
+    double max_link = PyFloat_AsDouble(args[5]);
+    if (max_link == -1.0 && PyErr_Occurred())
         return NULL;
 
     Density d = {0};
@@ -2119,7 +1973,6 @@ done:
     Py_XDECREF(parts);
     Py_XDECREF(starts);
     Py_XDECREF(ends);
-    Py_DECREF(st);
     return result;
 }
 
@@ -2132,32 +1985,30 @@ done:
 
 static PyObject *census(PyObject *self, PyObject *nodes)
 {
-    NodeStore *st = as_store(nodes, "census(nodes)");
-    if (st == NULL)
+    if (!NodeStore_Check(nodes)) {
+        PyErr_SetString(PyExc_TypeError, "census(NodeStore)");
         return NULL;
+    }
+    NodeStore *st = (NodeStore *)nodes;
     Py_ssize_t unclosed = 0, implicitly = 0;
-    PyObject *result = NULL;
     for (Py_ssize_t i = 0; i < st->n; i++) {
         long kind = kind_at(st, i), closure;
         if (kind == -1 && PyErr_Occurred())
-            goto done;
+            return NULL;
         if (kind != ELEMENT)
             continue;
         int synthetic = synthetic_at(st, i);
         if (synthetic < 0)
-            goto done;
+            return NULL;
         if (synthetic)
             continue;
         closure = closure_at(st, i);
         if (closure == -1 && PyErr_Occurred())
-            goto done;
+            return NULL;
         unclosed += closure == UNCLOSED;
         implicitly += closure == IMPLICITLY_CLOSED;
     }
-    result = Py_BuildValue("nn", unclosed, implicitly);
-done:
-    Py_DECREF(st);
-    return result;
+    return Py_BuildValue("nn", unclosed, implicitly);
 }
 
 /* --- the token count --------------------------------------------------------
@@ -2244,11 +2095,12 @@ static PyMethodDef methods[] = {
      "scan(t, i, node_store, open_stack, builder, empty_end_tag, sniff)"
      " -> (offset of the first token not owned, errors counted)"},
     {"density", (PyCFunction)(void (*)(void))density, METH_FASTCALL,
-     "density(nodes, DROP_TAGS, INLINE_TAGS, BOOST_TAGS, min_block_chars,"
+     "density(node_store, DROP_TAGS, INLINE_TAGS, BOOST_TAGS, min_block_chars,"
      " max_link_density, unescape_entities) -> (text, span_starts,"
      " span_ends, kept_blocks, total_blocks, node_count, text_node_count)"},
     {"census", census, METH_O,
-     "census(nodes) -> (unclosed, implicitly closed) non-synthetic elements"},
+     "census(node_store) -> (unclosed, implicitly closed) non-synthetic"
+     " elements"},
     {"token_count", token_count, METH_O,
      "token_count(t) -> len(t.split())"},
     {"setup", setup, METH_VARARGS,

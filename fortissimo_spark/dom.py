@@ -5,9 +5,9 @@ and ``src/elements.ts`` — re-expressed as index arrays (no object tree).
 
 Storage: a node is read as one Python list, its record (21 fixed slots,
 ``N_*`` indices).  Where the native core loads, ``DocBuilder.nodes`` is its
-``NodeStore``, which holds the nodes the core parsed as C structs and
-builds a node's record the first time Python reads it; elsewhere it is a
-list of records (see ``DocBuilder``).
+``NodeStore``, a sequence that holds the nodes the core parsed as C structs
+and builds a node's record the first time Python reads it; elsewhere it is
+a list of records (see ``DocBuilder``).
 
 Positions: a record holds source offsets, not lines and columns.
 ``DocBuilder.line_col`` works them out when read, through the ``_Pos`` that
@@ -226,8 +226,10 @@ class DocBuilder:
     Node 0 is the synthetic root (tag ``/``), matching the reference's root
     sentinel (dom.ts:536).
 
-    ``nodes`` reads like a list of records: ``nodes[i][N_KIND]``, ``len``,
-    iteration, slices and ``append(record)``.  Where the native core loads
+    ``nodes`` is a sequence of records: ``nodes[i][N_KIND]`` (negative
+    ``i`` too), ``len``, iteration and ``append(record)``, and nothing
+    more; a caller that slices, compares or copies it reads
+    ``list(nodes)``.  Where the native core loads
     it is a ``_native.NodeStore``: the core's scan fills node structs and
     builds no record, ``nodes[i]`` builds node i's record on the first read
     and returns that same list from then on, and that record is the node's

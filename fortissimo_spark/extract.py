@@ -11,7 +11,10 @@ boilerplate-strip heuristics"):
 * ``density`` — tag-class strip + text-block segmentation (nearest block
   ancestor, inline set mirrored from the reference formatter's block/inline
   split, formatter.ts:87-89) scored by trimmed length and link density
-  (jusText/Boilerpipe-family heuristic, deterministic and configurable).
+  (jusText/Boilerpipe-family heuristic, deterministic).  A block is kept
+  when its link share is at most ``_MAX_LINK_DENSITY`` (1/3) and it has at
+  least ``_MIN_BLOCK_CHARS`` (25) characters or a BOOST_TAGS owner (two
+  module constants).
 
 Every mode also returns source spans: the start and end char offsets into
 the parsed text of each emitted text/CDATA node, as two parallel lists
@@ -151,14 +154,12 @@ def _text_content_skipping(b: DocBuilder, node: int, out: list, starts: list,
             stack.extend(reversed(nd[N_CHILDREN]))
 
 
-def extract(b: DocBuilder, strip: str = "density",
-            min_block_chars: int = _MIN_BLOCK_CHARS,
-            max_link_density: float = _MAX_LINK_DENSITY) -> ExtractResult:
+def extract(b: DocBuilder, strip: str = "density") -> ExtractResult:
     native = _NATIVE_DENSITY
     if strip == "density" and native is not None:
         return ExtractResult(*native(
-            b.nodes, DROP_TAGS, INLINE_TAGS, BOOST_TAGS, min_block_chars,
-            max_link_density, unescape_entities))
+            b.nodes, DROP_TAGS, INLINE_TAGS, BOOST_TAGS, _MIN_BLOCK_CHARS,
+            _MAX_LINK_DENSITY, unescape_entities))
     node_count = len(b.nodes) - 1
     # C-level count: one list comp + two list.count passes beats a Python
     # genexpr over the node lists (N_KIND == 0)
@@ -242,9 +243,9 @@ def extract(b: DocBuilder, strip: str = "density",
         total += 1
         chars = len(visible)
         link_density = link_chars / chars if chars else 1.0
-        if link_density > max_link_density:
+        if link_density > _MAX_LINK_DENSITY:
             continue
-        if chars >= min_block_chars or owner_tag in BOOST_TAGS:
+        if chars >= _MIN_BLOCK_CHARS or owner_tag in BOOST_TAGS:
             kept += 1
             kept_parts.append(visible)
             kept_starts += starts

@@ -52,8 +52,9 @@ from pyspark.sql.types import (
 from .batches import row_kernel
 from .chars import unescape_entities
 from .dom import (
-    CDATA, ELEMENT, N_ATTR_NAMES, N_ATTR_VALUES, N_CLOSURE, N_CONTENT, N_KIND,
-    N_PARENT, N_POSS_ENT, N_SRC_END, N_SRC_START, N_SYNTHETIC, N_TAG_LC, TEXT,
+    CDATA, ELEMENT, N_ATTR_NAMES, N_ATTR_VALUES, N_CHILDREN, N_CLOSURE,
+    N_CONTENT, N_KIND, N_PARENT, N_POSS_ENT, N_SRC_END, N_SRC_START,
+    N_SYNTHETIC, N_TAG_LC, TEXT,
 )
 from .extract import extract
 from .parser import _native, parse
@@ -412,26 +413,15 @@ _MAX_COLSPAN, _MAX_ROWSPAN = 1_000, 65_534
 def _tables_from_dom(b) -> list[tuple]:
     """All table cells of one parsed DOM, in document order:
     (table_idx, caption, row_idx, col_idx, is_header, rowspan, colspan,
-    cell). Rows/cells attach to their NEAREST enclosing table/tr, so
-    nested tables don't double-count, and the DOM's table repair
-    (synthetic tr for stray cells, dom.py:458) means even
-    missing-markup tables come out row-shaped. Cell text is
-    whitespace-collapsed text_content; spans are read by the HTML rules
-    for parsing non-negative integers (leading ASCII whitespace, an
-    optional '+', then the leading ASCII digits: '3abc' is 3, '2.5' is
-    2), a span without digits or below 1 normalizes to 1, and a span
-    above the HTML limit reads the limit: 1,000 for colspan and 65,534
-    for rowspan, however many digits it has (browser behavior)."""
+    cell). Rows/cells attach to their NEAREST enclosing table/tr (the
+    first caption wins), so nested tables don't double-count, and the
+    DOM's table repair (synthetic tr for stray cells, dom.py:458) means
+    even missing-markup tables come out row-shaped. Cell text is
+    whitespace-collapsed text_content. Spans follow the HTML rules for
+    non-negative integers ('3abc' is 3, '2.5' is 2); no digits or below 1
+    reads 1, and above the HTML limit (colspan 1,000, rowspan 65,534)
+    reads the limit, however many digits (browser behavior)."""
     nodes = b.nodes
-
-    def nearest(node: int, tag: str) -> int:
-        p = nodes[node][N_PARENT]
-        while p >= 0:
-            nd = nodes[p]
-            if nd[N_KIND] == ELEMENT and nd[N_TAG_LC] == tag:
-                return p
-            p = nd[N_PARENT]
-        return -1
 
     def span(v, limit: int) -> int:
         m = _RE_SPAN.match(v) if v else None
@@ -442,21 +432,32 @@ def _tables_from_dom(b) -> list[tuple]:
             return limit
         return min(max(int(digits or 0), 1), limit)
 
+    # a pre-order walk carrying the innermost table and tr (its cell list);
+    # tables[0] takes the rows and captions outside any table, and is dropped
+    tables: list[list] = [[None, []]]  # [caption, rows]; a row is its cells
+    stack = [(0, 0, [])]
+    while stack:
+        node, t, r = stack.pop()
+        nd = nodes[node]
+        children = nd[N_CHILDREN]
+        if children is None:  # a leaf
+            continue
+        tag = nd[N_TAG_LC]
+        if tag == "table":
+            t = len(tables)
+            tables.append([None, []])
+        elif tag == "caption" and tables[t][0] is None:
+            tables[t][0] = " ".join(b.text_content(node).split())
+        elif tag == "tr":
+            r = []
+            tables[t][1].append(r)
+        elif tag == "td" or tag == "th":
+            r.append(node)
+        stack += [(c, t, r) for c in reversed(children)]
     out: list[tuple] = []
-    for t_i, t in enumerate(b.query_selector_all(0, "table")):
-        caption = None
-        for c in b.query_selector_all(t, "caption"):
-            if nearest(c, "table") == t:
-                caption = " ".join(b.text_content(c).split())
-                break
-        rows = [r for r in b.query_selector_all(t, "tr")
-                if nearest(r, "table") == t]
-        for r_i, r in enumerate(rows):
-            cells = sorted(
-                c for tag in ("td", "th")
-                for c in b.query_selector_all(r, tag)
-                if nearest(c, "tr") == r)
-            for c_i, c in enumerate(cells):
+    for t_i, (caption, rows) in enumerate(tables[1:]):
+        for r_i, cells in enumerate(rows):
+            for c_i, c in enumerate(sorted(cells)):
                 at = _attrs_ci(b, c)
                 out.append((t_i, caption, r_i, c_i,
                             nodes[c][N_TAG_LC] == "th",

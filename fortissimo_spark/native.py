@@ -1,14 +1,16 @@
 """Build and load the native core (``_native.c``) on first import.
 
 The core holds five entry points: ``NodeStore``, the type of
-``DocBuilder.nodes`` (node structs that the scan fills, each read as its
-21-slot record, built on the first read), ``scan``, the parse core behind
-``parser.parse`` (tree repair included), ``census``, the element counts
-at the end of a parse, ``density``, the walk behind
-``extract(strip="density")``, and ``token_count``, the kernel's
-``len(text.split())``.  Python keeps the reference for each: a plain list
-of records, the general machine, ``DocBuilder.count_unclosed_flat``, the
-Python density loop and ``str.split``.
+``DocBuilder.nodes`` (a sequence of node structs that the scan fills, each
+read as its 21-slot record, built on the first read: indexing, ``len``,
+iteration and ``append``, and no slices, assignment or comparison),
+``scan``, the parse core behind ``parser.parse`` (tree repair included),
+``census``, the element counts of a ``NodeStore`` at the end of a parse,
+``density``, the walk behind ``extract(strip="density")`` over a
+``NodeStore``, and ``token_count``, the kernel's ``len(text.split())``.
+Python keeps the reference for each: a plain list of records, the general
+machine, ``DocBuilder.count_unclosed_flat``, the Python density loop and
+``str.split``.
 
 The C source ships inside the package, so a ``--py-files`` zip carries it
 too: it is read through ``importlib.resources`` and compiled with the

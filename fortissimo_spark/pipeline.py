@@ -161,11 +161,12 @@ class ExtractionJob:
         # table / resume anti-join (both key on the same host_bucket).
         extracted = with_layout_columns(extracted)
 
-        # dynamic partition overwrite = atomic per-partition commit
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
+        # dynamic partition overwrite = atomic per-partition commit, set on
+        # this write alone: the caller's session keeps its own mode
         (extracted
          .repartition("crawl_date", "host_bucket")
          .write.mode("overwrite")
+         .option("partitionOverwriteMode", "dynamic")
          .partitionBy("crawl_date", "host_bucket")
          .parquet(self.text_path))
 

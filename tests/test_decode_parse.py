@@ -53,7 +53,7 @@ def _full_parse_then_retry(raw: bytes):
 def _fields(parsed):
     r, used, declared, retried = parsed
     b = r.dom
-    return (b.nodes, b.open_stack, b.in_math_or_svg, r.errors, r.charset,
+    return (list(b.nodes), b.open_stack, b.in_math_or_svg, r.errors, r.charset,
             r.unclosed_tags, r.implicitly_closed_tags, r.lines, r.xml_mode,
             r.stopped, r.text, r.characters, r.pattern_encoding, used,
             declared, retried)
@@ -185,7 +185,7 @@ def test_on_charset_stops_after_the_tag(monkeypatch):
     for native in (P._NATIVE_SCAN, None):
         monkeypatch.setattr(P, "_NATIVE_SCAN", native)
         r = parse(doc, on_charset=lambda cs: True)
-        results.append((r.dom.nodes, r.dom.open_stack, r.errors, r.lines,
+        results.append((list(r.dom.nodes), r.dom.open_stack, r.errors, r.lines,
                         r.charset, r.unclosed_tags))
         assert r.stopped and r.charset == "koi8-r"
         # what was read: up to the meta tag, not the text after it

@@ -60,7 +60,7 @@ def test_attribute_mutators_refuse_non_elements(kind, name):
     # kind and leaves the record as it was
     b = parse("<p>x</p><!-- c --></b>").dom
     (node,) = [i for i, nd in enumerate(b.nodes) if nd[N_KIND] == kind]
-    before = copy.deepcopy(b.nodes)
+    before = copy.deepcopy(list(b.nodes))
     calls = [lambda: b.set_attribute(node, "class", "a"),
              lambda: b.set_attribute(node, "class", None),
              lambda: b.add_attribute_to(node, "id", "b"),
@@ -71,7 +71,7 @@ def test_attribute_mutators_refuse_non_elements(kind, name):
     for call in calls:
         with pytest.raises(TypeError, match=f"node {node} is a {name} node"):
             call()
-    assert b.nodes == before
+    assert list(b.nodes) == before
 
 
 def test_remove_nodes():

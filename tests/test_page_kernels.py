@@ -115,6 +115,24 @@ def test_table_spans_parse_as_html_non_negative_integers(value, span):
                                         "c")
 
 
+@pytest.mark.parametrize("html,rows", [
+    ("<caption>lost</caption><tr><td>lost</td></tr>"
+     "<table><caption>one</caption><caption>two</caption>"
+     "<tr><th>h</th><td>a<table><tr><td>in</td></tr></table>b</td></tr>"
+     "<tr><td>c</td></tr></table>",
+     [(0, "one", 0, 0, True, "h"), (0, "one", 0, 1, False, "ainb"),
+      (0, "one", 1, 0, False, "c"), (1, None, 0, 0, False, "in")]),
+    ("<table><tr><td>x<div><table><td>y</td></table></div><td>z</table>",
+     [(0, None, 0, 0, False, "xy"), (0, None, 0, 1, False, "z"),
+      (1, None, 0, 0, False, "y")])])
+def test_table_cells_attach_to_the_nearest_table_and_row(html, rows):
+    # tables numbered in document order, the first caption wins, a nested
+    # table's cells count only there, and a caption or row outside any
+    # table is dropped
+    got = kernel._tables_from_dom(parse(html).dom)
+    assert [r[:5] + r[7:] for r in got] == rows
+
+
 def test_oversized_table_span_passes_the_arrow_cast():
     # a span above int32 used to fail the Arrow conversion, and with it the
     # task: the clamp keeps every span inside the IntegerType columns

@@ -261,7 +261,7 @@ def _snapshot(text: str, empty_end_tag: bool, positions: bool,
     r = parse(text, positions=positions, empty_end_tag=empty_end_tag,
               on_charset=on_charset)
     b = r.dom
-    snap = (b.nodes, b.open_stack, b.in_math_or_svg, r.errors, r.charset,
+    snap = (list(b.nodes), b.open_stack, b.in_math_or_svg, r.errors, r.charset,
             r.unclosed_tags, r.implicitly_closed_tags, r.lines, r.xml_mode,
             r.stopped)
     if positions:
@@ -362,7 +362,8 @@ def test_tree_repair_outcomes():
     # a few outcomes pinned by hand, whichever machine parses
     def closes(doc):
         b = parse(doc).dom
-        return ([nd[N_CLOSURE] for nd in b.nodes[1:] if nd[N_KIND] == ELEMENT],
+        return ([nd[N_CLOSURE] for nd in list(b.nodes)[1:]
+                 if nd[N_KIND] == ELEMENT],
                 [nd[N_CONTENT] for nd in b.nodes
                  if nd[N_KIND] == UNMATCHED_CLOSE], b.open_stack,
                 b.in_math_or_svg)
@@ -452,7 +453,7 @@ def test_native_census_matches_count_unclosed_flat():
         assert P._native.census(b.nodes) == b.count_unclosed_flat(), doc
     with pytest.raises(TypeError):
         P._native.census(())
-    with pytest.raises(ValueError):
+    with pytest.raises(TypeError):
         P._native.census([[0]])
 
 
@@ -493,7 +494,7 @@ def test_both_position_modes_build_equal_records():
     # read, never what is stored
     for doc in FIXTURES + list(generated_docs(2000)) + list(table_soups(500)):
         with_pos, without = parse(doc), parse(doc, positions=False)
-        assert with_pos.dom.nodes == without.dom.nodes, doc
+        assert list(with_pos.dom.nodes) == list(without.dom.nodes), doc
         assert with_pos.lines == without.lines, doc
         b = without.dom
         assert all(b.line_col(i) == b.line_col(i, end=True) == (0, 0)

@@ -105,6 +105,25 @@ def test_pipeline_run_and_resume(spark, pages, tmp_path_factory):
     assert stats2["rows"] == stats["rows"]
 
 
+def test_pipeline_run_keeps_the_session_overwrite_mode(spark, pages,
+                                                       tmp_path_factory):
+    """The job's dynamic partition overwrite is an option of its own write:
+    a later partitioned overwrite in the same session still replaces every
+    partition."""
+    key = "spark.sql.sources.partitionOverwriteMode"
+    before = spark.conf.get(key)
+    base = tmp_path_factory.mktemp("overwrite_mode")
+    ExtractionJob(spark, str(base / "job")).run(pages.limit(40))
+    assert spark.conf.get(key) == before
+    table = str(base / "table")
+    spark.createDataFrame([(1, "a"), (2, "b")], "k int, v string") \
+        .write.partitionBy("k").parquet(table)
+    spark.createDataFrame([(1, "c")], "k int, v string") \
+        .write.mode("overwrite").partitionBy("k").parquet(table)
+    assert [tuple(r) for r in spark.read.parquet(table).collect()] == [
+        ("c", 1)]
+
+
 def test_production_writer_fallback(spark, pages, tmp_path_factory):
     """Engine auto-selection: no Iceberg jars in this sandbox, so the
     production writer must route to the parquet fallback with the same

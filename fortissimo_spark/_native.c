@@ -1,5 +1,5 @@
-/* Native core for fortissimo_spark: the parse scan, node storage and
- * density extraction.
+/* Native core for fortissimo_spark: the parse scan, node storage, tree
+ * and table repair, density extraction and the one-call extract page.
  *
  * scan() is the parse core for fortissimo_spark.parser (HTML mode, with
  * or without positions: nodes hold source offsets, and line and column
@@ -11,22 +11,24 @@
  * back in.  Tree repair runs here too: an end tag that is not on top of
  * the stack takes DocBuilder.pop's path in repair() (the stack scan, the
  * formatting/marker block, the unwind and the unmatched-close leaf), and
- * only a closing table calls back into Python, to
- * DocBuilder._examine_table.
+ * a closing table takes DocBuilder._examine_table's in examine_table()
+ * (the synthetic tr, thead and tbody wrappers), so the scan calls no
+ * Python for the tree.
  *
  * What the core stores.  DocBuilder.nodes is a NodeStore (see "node
- * storage" below), a sequence and nothing more: the scan and repair() fill
- * an array of node structs (kind, closure and flags, parent, first-child
- * and next-sibling links, source offsets, end_at, the interned tag and
- * end-tag strings, the attribute spans) and build no per-node list, int or
- * content string.  A node's 21-slot record exists only once Python has
- * read nodes[i] (or appended the record itself, as the general machine
- * does): it is built from the struct on that first read, text sliced from
- * the source, and from then on it is the authority for the node.  The
- * core's readers and writers (the scan, repair(), census(), density()) all
- * go through one set of accessors that read the record when there is one
- * and the struct otherwise, so a store that Python never read is read from
- * the structs alone.  census() and density() take only a NodeStore.
+ * storage" below), a sequence and nothing more: the scan, repair() and
+ * examine_table() fill an array of node structs (kind, closure and flags,
+ * parent, first-child and next-sibling links, source offsets, end_at, the
+ * interned tag and end-tag strings, the attribute spans) and build no
+ * per-node list, int or content string.  A node's 21-slot record exists
+ * only once Python has read nodes[i] (or appended the record itself, as
+ * the general machine does): it is built from the struct on that first
+ * read, text sliced from the source, and from then on it is the authority
+ * for the node.  The core's readers and writers (the scan, repair(),
+ * examine_table(), census(), density()) all go through one set of
+ * accessors that read the record when there is one and the struct
+ * otherwise, so a store that Python never read is read from the structs
+ * alone.  census() and density() take only a NodeStore.
  *
  * Owned: text runs (the literal-'<' pairwise quirk, empty_end_tag, the
  * trailing-text EOF error), '<!--' comments (the m % 3 == 2 dash rule),
@@ -34,14 +36,22 @@
  * with any number of attributes, void elements, OPEN_IMPLIES_CLOSE, the
  * math/svg counter and the script/style/textarea raw-text scan.
  * Handed off: other '<!' markup, '<?', end tags cut by EOF or a syntax
- * error, start tags cut by EOF.  While no charset is known, each meta
- * tag's attributes go to parse()'s charset sniff, which may stop the scan
- * at the end of that tag (the early stop of a charset retry).
+ * error, start tags cut by EOF.  While no charset is known, the core
+ * sniffs each meta tag: it reads charset= attributes itself and hands a
+ * tag with an http-equiv or content attribute to the Python sniff
+ * (parser._meta_charset).  The first meta tag that leaves a charset ends
+ * the sniff; parse()'s on_charset hook may stop the scan at the end of
+ * that tag (the early stop of a charset retry).
+ *
+ * page() is the extract kernel's row for a page in one call: it runs the
+ * scan on a store of its own, census(), density(), the line count and the
+ * token count, and returns the kernel's parse and extract fields, or None
+ * for a page it cannot settle alone (see "the extract page" below).
  *
  * The Python general machine is the reference; tests/test_parser_fastpaths.py
- * checks that a parse through this core equals it, field for field, and
+ * checks that a parse through this core equals it, field for field,
  * tests/test_node_store.py that a store read in part, or edited, still
- * does.
+ * does, and tests/test_extract_page.py that page() equals the Python path.
  *
  * What a record holds is kept lean, as in the general machine: an element
  * without attributes holds the one empty tuple in its five N_ATTR_* slots
@@ -90,12 +100,24 @@ static const char *const STAT_NAMES[ST_COUNT] = {
 };
 static unsigned long long counts[ST_COUNT];
 
+/* what page() did with each page, the meta tags handed to the Python
+ * sniff and the records built on a read, read by page_stats() */
+enum {
+    PG_SETTLED, PG_HANDOFF, PG_CR, PG_CHARSET, PG_PYTHON_SNIFF, PG_RECORDS,
+    PG_COUNT
+};
+static const char *const PAGE_STAT_NAMES[PG_COUNT] = {
+    "settled", "handoff", "cr", "charset", "python_sniff", "records",
+};
+static unsigned long long page_counts[PG_COUNT];
+
 static PyObject *OPEN_IMPLIES_CLOSE, *VOID_ELEMENTS, *RAW_TEXT_TAGS;
 static PyObject *FORMATTING_ELEMENTS, *MARKER_ELEMENTS;
+static PyObject *META_CHARSET;  /* parser._meta_charset */
 static PyObject *INT[8], *S_EMPTY, *S_DQ, *S_SQ, *S_EQ, *S_LT_SLASH;
 static PyObject *T_EMPTY;  /* () */
-static PyObject *S_EXAMINE_TABLE, *S_IN_MATH_OR_SVG, *S_LOWER;
-static PyObject *S_BLOCK_SEP;
+static PyObject *S_IN_MATH_OR_SVG, *S_LOWER;
+static PyObject *S_BLOCK_SEP, *S_ROOT, *S_TR, *S_THEAD, *S_TBODY;
 
 /* the text a scan reads and a store's offsets index */
 typedef struct {
@@ -202,15 +224,63 @@ static PyObject *lower_span(const Src *s, Py_ssize_t a, Py_ssize_t b,
 #define INTERN_SLOTS 1024  /* a power of two */
 #define INTERN_MAX_LEN 32
 
+/* what the scan asks of a lowercase tag name, looked up once per name */
+enum {
+    TF_VOID = 1,       /* in VOID_ELEMENTS */
+    TF_RAW = 2,        /* in RAW_TEXT_TAGS */
+    TF_MATH_SVG = 4,   /* math or svg */
+    TF_TABLE = 8,
+    TF_META = 16,
+};
+
+typedef struct {
+    PyObject *closers;  /* OPEN_IMPLIES_CLOSE[name] or NULL (owned) */
+    unsigned flags;     /* TF_* */
+} TagInfo;
+
+static int is_tag(PyObject *tag_lc, const char *name);
+
+/* the TagInfo of a lowercase tag name */
+static int tag_info(PyObject *lc, TagInfo *info)
+{
+    PyObject *closers = PyDict_GetItemWithError(OPEN_IMPLIES_CLOSE, lc);
+    if (closers == NULL && PyErr_Occurred())
+        return -1;
+    int is_void = PySet_Contains(VOID_ELEMENTS, lc);
+    int raw = is_void < 0 ? -1 : PySequence_Contains(RAW_TEXT_TAGS, lc);
+    if (raw < 0)
+        return -1;
+    info->closers = Py_XNewRef(closers);
+    info->flags = (is_void ? TF_VOID : 0) | (raw ? TF_RAW : 0)
+        | (is_tag(lc, "math") || is_tag(lc, "svg") ? TF_MATH_SVG : 0)
+        | (is_tag(lc, "table") ? TF_TABLE : 0)
+        | (is_tag(lc, "meta") ? TF_META : 0);
+    return 0;
+}
+
 typedef struct {
     PyObject *raw, *lower;  /* lower: NULL until first asked for */
+    TagInfo info;           /* lower's, once has_info */
+    int has_info;
 } Interned;
 static Interned interned[INTERN_SLOTS];
 
+/* empty the cache: setup() changed what a TagInfo holds */
+static void intern_clear(void)
+{
+    for (int j = 0; j < INTERN_SLOTS; j++) {
+        Py_CLEAR(interned[j].raw);
+        Py_CLEAR(interned[j].lower);
+        Py_CLEAR(interned[j].info.closers);
+        interned[j].has_info = 0;
+    }
+}
+
 /* t[a:b] and, unless lower_out is NULL, *lower_out = t[a:b].lower() (new
- * references); NULL on error */
+ * references) and, unless info is NULL, *info = its TagInfo (closers
+ * borrowed: read it before Python code runs); NULL on error */
 static PyObject *interned_span(const Src *s, Py_ssize_t a, Py_ssize_t b,
-                               PyObject **lower_out)
+                               PyObject **lower_out, TagInfo *info)
 {
     Py_ssize_t len = b - a;
     PyObject *raw, *lower = NULL;
@@ -221,6 +291,16 @@ static PyObject *interned_span(const Src *s, Py_ssize_t a, Py_ssize_t b,
         if (lower_out != NULL && (lower = lower_span(s, a, b, raw)) == NULL) {
             Py_DECREF(raw);
             return NULL;
+        }
+        if (info != NULL) {
+            /* an uncached name: its closers are held by OPEN_IMPLIES_CLOSE */
+            int r = tag_info(lower, info);
+            Py_XDECREF(info->closers);
+            if (r < 0) {
+                Py_DECREF(raw);
+                Py_DECREF(lower);
+                return NULL;
+            }
         }
     } else {
         const Py_UCS1 *p = (const Py_UCS1 *)s->data + a;
@@ -235,11 +315,20 @@ static PyObject *interned_span(const Src *s, Py_ssize_t a, Py_ssize_t b,
                 return NULL;
             Py_XSETREF(e->raw, raw);
             Py_CLEAR(e->lower);
+            Py_CLEAR(e->info.closers);
+            e->has_info = 0;
         }
         if (lower_out != NULL) {
             if (e->lower == NULL
                     && (e->lower = lower_span(s, a, b, e->raw)) == NULL)
                 return NULL;
+            if (info != NULL && !e->has_info) {
+                if (tag_info(e->lower, &e->info) < 0)
+                    return NULL;
+                e->has_info = 1;
+            }
+            if (info != NULL)
+                *info = e->info;
             lower = e->lower;
             Py_INCREF(lower);
         }
@@ -278,9 +367,10 @@ static int reserve(void **buf, Py_ssize_t *cap, Py_ssize_t need, size_t size)
 /* --- node storage -----------------------------------------------------------
  *
  * NodeStore is DocBuilder.nodes whenever the core is loaded: a sequence
- * whose item i is node i's 21-slot record.  The scan and repair() fill an
- * array of node structs and build no record, list, int or content string
- * per node; a struct holds the source offsets, and text is sliced from the
+ * whose item i is node i's 21-slot record.  The scan, repair() and
+ * examine_table() fill an array of node structs (the root and table
+ * repair's wrappers flagged synthetic) and build no record, list, int or
+ * content string per node; a struct holds the source offsets, and text is sliced from the
  * source when read.  nodes[i] builds node i's record the first time Python
  * reads it and keeps it (counted in ``materialized``); from then on that
  * record is the authority for node i, and its struct is not read again.
@@ -314,6 +404,7 @@ typedef struct {
                                      element's inner whitespace */
     Py_ssize_t attr0, n_attrs;    /* an element's attributes in attrs[] */
     unsigned char kind, closure, terminated, poss_ent, bad_term;
+    unsigned char synthetic;      /* the root, or a table repair wrapper */
 } Node;
 
 typedef struct {
@@ -403,13 +494,15 @@ static long closure_at(NodeStore *st, Py_ssize_t i)
                       : x->closure;
 }
 
-/* node i is synthetic (only a Python record can be); -1 on error */
+/* node i is synthetic; -1 on error */
 static int synthetic_at(NodeStore *st, Py_ssize_t i)
 {
     PyObject *nd;
-    if (node_ref(st, i, &nd) == NULL)
+    Node *x = node_ref(st, i, &nd);
+    if (x == NULL)
         return -1;
-    return nd == NULL ? 0 : PyObject_IsTrue(PyList_GET_ITEM(nd, N_SYNTHETIC));
+    return nd == NULL ? x->synthetic
+                      : PyObject_IsTrue(PyList_GET_ITEM(nd, N_SYNTHETIC));
 }
 
 static int set_closure(NodeStore *st, Py_ssize_t i, int closure)
@@ -506,7 +599,7 @@ static PyObject *attr_list(NodeStore *st, const Src *s, const Node *x, int f)
         const Attr *a = &st->attrs[x->attr0 + j];
         PyObject *v;
         switch (f) {
-        case 0: v = interned_span(s, a->n0, a->n1, NULL); break;
+        case 0: v = interned_span(s, a->n0, a->n1, NULL, NULL); break;
         case 1: v = span(s, a->v0, a->v1); break;
         case 2: v = span(s, a->w0, a->w1); break;
         case 3: v = span(s, a->e0, a->e1); break;
@@ -580,7 +673,7 @@ static PyObject *materialize(NodeStore *st, Py_ssize_t i)
             : attr_list(st, &s, &c, f));
     PUT(N_INNER_WS, element ? span(&s, c.a, c.b) : Py_NewRef(S_EMPTY));
     PUT(N_BAD_TERM, Py_NewRef(c.bad_term ? S_EQ : Py_None));
-    PUT(N_SYNTHETIC, Py_NewRef(Py_False));
+    PUT(N_SYNTHETIC, Py_NewRef(c.synthetic ? Py_True : Py_False));
     PUT(N_SRC_START, PyLong_FromSsize_t(c.src_start));
     PUT(N_SRC_END, PyLong_FromSsize_t(c.src_end));
     PUT(N_END_AT, PyLong_FromSsize_t(c.end_at));
@@ -591,6 +684,7 @@ static PyObject *materialize(NodeStore *st, Py_ssize_t i)
     Py_CLEAR(x->tag_lc);
     Py_CLEAR(x->end_tag);
     st->materialized++;
+    page_counts[PG_RECORDS]++;
     return nd;
 fail:
     Py_DECREF(nd);
@@ -705,48 +799,438 @@ static PyTypeObject NodeStoreType = {
     .tp_free = PyObject_GC_Del,
 };
 
+/* --- table repair -----------------------------------------------------------
+ *
+ * examine_table() is DocBuilder._examine_table (dom.ts:588-658) in C,
+ * called when a table closes: insert_rows() (_insert_rows_where_needed)
+ * wraps the td/th cells directly under the table, and under each of its
+ * thead/tbody/tfoot sections, that no open tr holds in a synthetic tr;
+ * then, if the table has a section, each tr directly under it goes into
+ * the open section or into a new synthetic thead (a row with a th below
+ * it) or tbody.  The wrappers are appended in the order the Python
+ * methods append them, so node indices agree.  Every node is read and
+ * written through node_ref(): a table whose records Python has read is
+ * repaired through its records (a record's children list is rewritten in
+ * place, as DocBuilder does), and the wrappers are structs.  The Python
+ * methods stay the reference and the general machine's;
+ * tests/test_node_store.py compares the two directly, and the parse
+ * differentials through the scan.
+ */
+
+typedef struct {
+    Py_ssize_t *v;
+    Py_ssize_t n, cap;
+} Idx;
+
+static int idx_push(Idx *b, Py_ssize_t x)
+{
+    if (reserve((void **)&b->v, &b->cap, b->n + 1, sizeof(Py_ssize_t)) < 0)
+        return -1;
+    b->v[b->n++] = x;
+    return 0;
+}
+
+/* b += a; a emptied */
+static int idx_move(Idx *b, Idx *a)
+{
+    for (Py_ssize_t j = 0; j < a->n; j++)
+        if (idx_push(b, a->v[j]) < 0)
+            return -1;
+    a->n = 0;
+    return 0;
+}
+
+/* node i's children list from its record: NULL (no error) for None, or
+ * NULL with an error set if it is not a list */
+static PyObject *record_children(PyObject *nd, Py_ssize_t i)
+{
+    PyObject *children = PyList_GET_ITEM(nd, N_CHILDREN);
+    if (children == Py_None)
+        return NULL;
+    if (!PyList_Check(children)) {
+        PyErr_Format(PyExc_TypeError, "node %zd: malformed element record",
+                     i);
+        return NULL;
+    }
+    return children;
+}
+
+/* node i's children, in order, appended to out */
+static int push_children_of(NodeStore *st, Py_ssize_t i, Idx *out)
+{
+    PyObject *nd;
+    Node *x = node_ref(st, i, &nd);
+    if (x == NULL)
+        return -1;
+    if (nd == NULL) {
+        for (Py_ssize_t c = x->first; c >= 0; c = st->v[c].next)
+            if (idx_push(out, c) < 0)
+                return -1;
+        return 0;
+    }
+    PyObject *children = record_children(nd, i);
+    if (children == NULL)
+        return PyErr_Occurred() ? -1 : 0;
+    for (Py_ssize_t j = 0; j < PyList_GET_SIZE(children); j++) {
+        PyObject *c = PyList_GET_ITEM(children, j);
+        Py_ssize_t v = PyLong_Check(c) ? PyLong_AsSsize_t(c) : -1;
+        if (v < 0 || v >= st->n) {
+            if (!PyErr_Occurred())
+                PyErr_Format(PyExc_IndexError,
+                             "node %zd: child %zd is not a node", i, j);
+            return -1;
+        }
+        if (idx_push(out, v) < 0)
+            return -1;
+    }
+    return 0;
+}
+
+/* node i's children become kids, in order */
+static int set_children(NodeStore *st, Py_ssize_t i, const Idx *kids)
+{
+    PyObject *nd;
+    Node *x = node_ref(st, i, &nd);
+    if (x == NULL)
+        return -1;
+    if (nd == NULL) {
+        x->first = x->last = -1;
+        for (Py_ssize_t j = 0; j < kids->n; j++) {
+            Py_ssize_t c = kids->v[j];
+            st->v[c].next = -1;
+            if (x->last < 0)
+                x->first = c;
+            else
+                st->v[x->last].next = c;
+            x->last = c;
+        }
+        return 0;
+    }
+    PyObject *children = record_children(nd, i);
+    if (children == NULL) {
+        if (!PyErr_Occurred())
+            PyErr_Format(PyExc_TypeError,
+                         "node %zd: malformed element record", i);
+        return -1;
+    }
+    PyObject *lst = PyList_New(kids->n);
+    if (lst == NULL)
+        return -1;
+    for (Py_ssize_t j = 0; j < kids->n; j++) {
+        PyObject *c = PyLong_FromSsize_t(kids->v[j]);
+        if (c == NULL) {
+            Py_DECREF(lst);
+            return -1;
+        }
+        PyList_SET_ITEM(lst, j, c);
+    }
+    int r = PyList_SetSlice(children, 0, PyList_GET_SIZE(children), lst);
+    Py_DECREF(lst);
+    return r;
+}
+
+static int set_parent(NodeStore *st, Py_ssize_t i, Py_ssize_t parent)
+{
+    PyObject *nd;
+    Node *x = node_ref(st, i, &nd);
+    if (x == NULL)
+        return -1;
+    if (nd != NULL)
+        return set_int(nd, N_PARENT, parent);
+    x->parent = parent;
+    return 0;
+}
+
+/* DocBuilder.new_element(tag, synthetic=True) with its parent set: the
+ * new node's index, -1 on error */
+static Py_ssize_t new_wrapper(NodeStore *st, PyObject *tag, Py_ssize_t parent)
+{
+    Py_ssize_t i = store_push(st);
+    if (i < 0)
+        return -1;
+    Node *x = &st->v[i];
+    x->kind = ELEMENT;
+    x->tag = Py_NewRef(tag);
+    x->tag_lc = Py_NewRef(tag);
+    x->parent = parent;
+    x->terminated = 1;
+    x->synthetic = 1;
+    return i;
+}
+
+/* DocBuilder._adopt: between and then elem become the last children of
+ * box; between is emptied */
+static int adopt(NodeStore *st, Py_ssize_t box, Idx *between, Py_ssize_t elem)
+{
+    if (idx_push(between, elem) < 0)
+        return -1;
+    for (Py_ssize_t j = 0; j < between->n; j++) {
+        Py_ssize_t c = between->v[j];
+        if (set_parent(st, c, box) < 0)
+            return -1;
+        st->v[c].next = -1;
+        if (append_child(st, box, c) < 0)
+            return -1;
+    }
+    between->n = 0;
+    return 0;
+}
+
+/* an element below node i (or i itself) is a th: DocBuilder.query_selector
+ * (i, "th") is not None; -1 on error */
+static int has_th(NodeStore *st, Py_ssize_t i, Idx *stack)
+{
+    stack->n = 0;
+    if (idx_push(stack, i) < 0)
+        return -1;
+    while (stack->n) {
+        Py_ssize_t cur = stack->v[--stack->n];
+        long kind = kind_at(st, cur);
+        if (kind == -1 && PyErr_Occurred())
+            return -1;
+        if (kind != ELEMENT)
+            continue;
+        PyObject *tag = tag_lc_at(st, cur);
+        if (tag == NULL)
+            return -1;
+        if (is_tag(tag, "th"))
+            return 1;
+        /* which th is found first does not matter, only whether there is
+         * one */
+        if (push_children_of(st, cur, stack) < 0)
+            return -1;
+    }
+    return 0;
+}
+
+/* the scratch lists of one examine_table() call */
+typedef struct {
+    Idx kids, cells, kept, between, stack;
+} Repair;
+
+/* DocBuilder._insert_rows_where_needed(node): the td/th cells directly
+ * under node that no open tr holds go into a synthetic tr */
+static int insert_rows(NodeStore *st, Py_ssize_t node, Repair *r)
+{
+    Idx *kids = &r->cells, *kept = &r->kept, *between = &r->between;
+    kids->n = kept->n = between->n = 0;
+    if (push_children_of(st, node, kids) < 0)
+        return -1;
+    Py_ssize_t row = -1;
+    int changed = 0;
+    for (Py_ssize_t j = 0; j < kids->n; j++) {
+        Py_ssize_t elem = kids->v[j];
+        long kind = kind_at(st, elem);
+        if (kind == -1 && PyErr_Occurred())
+            return -1;
+        if (kind != ELEMENT) {
+            if (idx_push(row < 0 ? kept : between, elem) < 0)
+                return -1;
+            continue;
+        }
+        PyObject *tag = tag_lc_at(st, elem);
+        if (tag == NULL)
+            return -1;
+        if (is_tag(tag, "td") || is_tag(tag, "th")) {
+            if (row < 0 && ((row = new_wrapper(st, S_TR, node)) < 0
+                            || idx_push(kept, row) < 0))
+                return -1;
+            if (adopt(st, row, between, elem) < 0)
+                return -1;
+            changed = 1;
+            continue;
+        }
+        int tr = is_tag(tag, "tr");
+        if (idx_move(kept, between) < 0 || idx_push(kept, elem) < 0)
+            return -1;
+        long closure = tr ? closure_at(st, elem) : 0;
+        if (closure == -1 && PyErr_Occurred())
+            return -1;
+        row = tr && closure != EXPLICITLY_CLOSED ? elem : -1;
+    }
+    /* without a cell moved, kept + between is the children list as it was */
+    if (!changed)
+        return 0;
+    return idx_move(kept, between) < 0 ? -1 : set_children(st, node, kept);
+}
+
+static int is_section(PyObject *tag)
+{
+    return is_tag(tag, "thead") || is_tag(tag, "tbody") || is_tag(tag, "tfoot");
+}
+
+static int examine_rows(NodeStore *st, Py_ssize_t table, Repair *r)
+{
+    Idx *kids = &r->kids, *kept = &r->kept, *between = &r->between;
+    kids->n = 0;
+    if (push_children_of(st, table, kids) < 0)
+        return -1;
+    if (kids->n == 0)
+        return 0;
+    if (insert_rows(st, table, r) < 0)
+        return -1;
+    kids->n = 0;
+    if (push_children_of(st, table, kids) < 0)
+        return -1;
+    int sections = 0;
+    for (Py_ssize_t j = 0; j < kids->n; j++) {
+        long kind = kind_at(st, kids->v[j]);
+        if (kind == -1 && PyErr_Occurred())
+            return -1;
+        if (kind != ELEMENT)
+            continue;
+        PyObject *tag = tag_lc_at(st, kids->v[j]);
+        if (tag == NULL)
+            return -1;
+        if (is_section(tag)) {
+            sections = 1;
+            if (insert_rows(st, kids->v[j], r) < 0)
+                return -1;
+        }
+    }
+    if (!sections)
+        return 0;
+
+    kept->n = between->n = 0;
+    Py_ssize_t section = -1;
+    int changed = 0;
+    for (Py_ssize_t j = 0; j < kids->n; j++) {
+        Py_ssize_t elem = kids->v[j];
+        long kind = kind_at(st, elem);
+        if (kind == -1 && PyErr_Occurred())
+            return -1;
+        if (kind != ELEMENT) {
+            if (idx_push(section < 0 ? kept : between, elem) < 0)
+                return -1;
+            continue;
+        }
+        PyObject *tag = tag_lc_at(st, elem);
+        if (tag == NULL)
+            return -1;
+        if (is_tag(tag, "tr")) {
+            int th = has_th(st, elem, &r->stack);
+            if (th < 0)
+                return -1;
+            int fresh = section < 0;
+            if (!fresh && th) {
+                PyObject *section_tag = tag_lc_at(st, section);
+                if (section_tag == NULL)
+                    return -1;
+                fresh = !is_tag(section_tag, "thead");
+            }
+            if (fresh && (idx_move(kept, between) < 0
+                          || (section = new_wrapper(st, th ? S_THEAD : S_TBODY,
+                                                    table)) < 0
+                          || idx_push(kept, section) < 0))
+                return -1;
+            if (adopt(st, section, between, elem) < 0)
+                return -1;
+            changed = 1;
+            continue;
+        }
+        int open_section = is_section(tag);
+        if (idx_move(kept, between) < 0 || idx_push(kept, elem) < 0)
+            return -1;
+        long closure = open_section ? closure_at(st, elem) : 0;
+        if (closure == -1 && PyErr_Occurred())
+            return -1;
+        section = open_section && closure != EXPLICITLY_CLOSED ? elem : -1;
+    }
+    if (!changed)
+        return 0;
+    return idx_move(kept, between) < 0 ? -1 : set_children(st, table, kept);
+}
+
+/* DocBuilder._examine_table(table) */
+static int examine_table(NodeStore *st, Py_ssize_t table)
+{
+    Repair r;
+    memset(&r, 0, sizeof r);
+    int rc = examine_rows(st, table, &r);
+    PyMem_Free(r.kids.v);
+    PyMem_Free(r.cells.v);
+    PyMem_Free(r.kept.v);
+    PyMem_Free(r.between.v);
+    PyMem_Free(r.stack.v);
+    return rc;
+}
 /* --- the scan ------------------------------------------------------------- */
 
 typedef struct {
     Src src;
     NodeStore *st;
-    PyObject *stack, *b;
-    PyObject *sniff;  /* parse()'s meta charset sniff; NULL once known */
+    Py_ssize_t *stack;     /* the open stack (DocBuilder.open_stack) */
+    Py_ssize_t depth, cap;
+    PyObject *charset;     /* the meta charset so far: None, "" or a name
+                              (owned); the core sniffs while it is empty */
+    PyObject *on_charset;  /* scan(): parse()'s hook, or NULL */
+    PyObject *codecs;      /* page(): declared charset -> codec name */
+    PyObject *codec;       /* page(): the text's codec; NULL when a
+                              declared charset is only reported */
     long errors;
-    int stop;         /* the sniff asked to stop after the current tag */
+    long math_or_svg;      /* DocBuilder.in_math_or_svg */
+    int stop;              /* stop after the current tag */
+    int unsettled;         /* page(): the declared charset may need the
+                              Python retry */
 } Scan;
-
-/* the node index at stack[j]; -1 with an error set on error */
-static inline Py_ssize_t stack_at(const Scan *s, Py_ssize_t j)
-{
-    return PyLong_AsSsize_t(PyList_GET_ITEM(s->stack, j));
-}
 
 static inline Py_ssize_t top(const Scan *s)
 {
-    return stack_at(s, PyList_GET_SIZE(s->stack) - 1);
+    return s->stack[s->depth - 1];
 }
 
-static int pop_stack(const Scan *s)
+static int push_stack(Scan *s, Py_ssize_t node)
 {
-    Py_ssize_t len = PyList_GET_SIZE(s->stack);
-    return PyList_SetSlice(s->stack, len - 1, len, NULL);
+    if (reserve((void **)&s->stack, &s->cap, s->depth + 1,
+                sizeof(Py_ssize_t)) < 0)
+        return -1;
+    s->stack[s->depth++] = node;
+    return 0;
 }
 
-static int bump_math_or_svg(const Scan *s, long delta)
+/* s->stack = the ints of list */
+static int stack_from(Scan *s, PyObject *list)
 {
-    PyObject *v = PyObject_GetAttr(s->b, S_IN_MATH_OR_SVG);
-    if (v == NULL)
+    Py_ssize_t len = PyList_GET_SIZE(list);
+    if (len == 0) {
+        PyErr_SetString(PyExc_ValueError, "scan(): the open stack is empty");
         return -1;
-    long x = PyLong_AsLong(v);
-    Py_DECREF(v);
-    if (x == -1 && PyErr_Occurred())
+    }
+    for (Py_ssize_t j = 0; j < len; j++) {
+        Py_ssize_t v = PyLong_AsSsize_t(PyList_GET_ITEM(list, j));
+        if ((v == -1 && PyErr_Occurred()) || push_stack(s, v) < 0)
+            return -1;
+    }
+    return 0;
+}
+
+/* list[:] = s->stack, rewriting only the entries after the common prefix */
+static int stack_to(const Scan *s, PyObject *list)
+{
+    Py_ssize_t len = PyList_GET_SIZE(list), p = 0;
+    while (p < len && p < s->depth) {
+        Py_ssize_t v = PyLong_AsSsize_t(PyList_GET_ITEM(list, p));
+        if (v == -1 && PyErr_Occurred())
+            return -1;
+        if (v != s->stack[p])
+            break;
+        p++;
+    }
+    if (p == len && p == s->depth)
+        return 0;
+    PyObject *tail = PyList_New(s->depth - p);
+    if (tail == NULL)
         return -1;
-    v = PyLong_FromLong(x + delta);
-    if (v == NULL)
-        return -1;
-    int r = PyObject_SetAttr(s->b, S_IN_MATH_OR_SVG, v);
-    Py_DECREF(v);
+    for (Py_ssize_t j = p; j < s->depth; j++) {
+        PyObject *v = PyLong_FromSsize_t(s->stack[j]);
+        if (v == NULL) {
+            Py_DECREF(tail);
+            return -1;
+        }
+        PyList_SET_ITEM(tail, j - p, v);
+    }
+    int r = PyList_SetSlice(list, p, len, tail);
+    Py_DECREF(tail);
     return r;
 }
 
@@ -754,8 +1238,6 @@ static int bump_math_or_svg(const Scan *s, long delta)
 static Py_ssize_t add_node(const Scan *s, int kind)
 {
     Py_ssize_t parent = top(s);
-    if (parent == -1 && PyErr_Occurred())
-        return -1;
     Py_ssize_t idx = store_push(s->st);
     if (idx < 0 || append_child(s->st, parent, idx) < 0)
         return -1;
@@ -804,37 +1286,21 @@ static int same_name(PyObject *a, PyObject *b)
 /* the tag name of the element at stack[j] (borrowed) */
 static inline PyObject *stack_tag(const Scan *s, Py_ssize_t j)
 {
-    Py_ssize_t idx = stack_at(s, j);
-    return idx == -1 && PyErr_Occurred() ? NULL : tag_lc_at(s->st, idx);
-}
-
-/* _examine_table(node) on the builder */
-static int examine_table(const Scan *s, Py_ssize_t node)
-{
-    PyObject *idx = PyLong_FromSsize_t(node);
-    if (idx == NULL)
-        return -1;
-    PyObject *v = PyObject_CallMethodOneArg(s->b, S_EXAMINE_TABLE, idx);
-    Py_DECREF(idx);
-    Py_XDECREF(v);
-    return v == NULL ? -1 : 0;
+    return tag_lc_at(s->st, s->stack[j]);
 }
 
 /* The general machine's end-tag step when the stack top closes: the
  * inline part of DocBuilder.pop for a matching top, the end tag at ``at``
  * ending at ``end_pos``. */
-static int close_top(const Scan *s, PyObject *tag_lc, PyObject *end_text,
+static int close_top(Scan *s, unsigned flags, PyObject *end_text,
                      Py_ssize_t at, Py_ssize_t end_pos)
 {
-    Py_ssize_t cur = top(s);
-    if ((cur == -1 && PyErr_Occurred()) || pop_stack(s) < 0
-            || close_element(s->st, cur, end_text, at, end_pos) < 0)
+    Py_ssize_t cur = s->stack[--s->depth];
+    if (close_element(s->st, cur, end_text, at, end_pos) < 0)
         return -1;
-    if (is_tag(tag_lc, "table") && examine_table(s, cur) < 0)
+    if ((flags & TF_TABLE) && examine_table(s->st, cur) < 0)
         return -1;
-    if ((is_tag(tag_lc, "math") || is_tag(tag_lc, "svg"))
-            && bump_math_or_svg(s, -1) < 0)
-        return -1;
+    s->math_or_svg -= (flags & TF_MATH_SVG) != 0;
     return 0;
 }
 
@@ -845,10 +1311,10 @@ static int close_top(const Scan *s, PyObject *tag_lc, PyObject *end_text,
  * for an end tag that closed nothing, an UNMATCHED_CLOSE leaf.  '<//>' with
  * only the root open closes the root, which stays open.  Returns 1 if the
  * end tag closed an element, 0 if it was unmatched, -1 on error. */
-static int repair(const Scan *s, PyObject *tag_lc, PyObject *end_text,
+static int repair(Scan *s, PyObject *tag_lc, PyObject *end_text,
                   Py_ssize_t at, Py_ssize_t end_pos)
 {
-    Py_ssize_t len = PyList_GET_SIZE(s->stack), match = -1;
+    Py_ssize_t len = s->depth, match = -1;
     if (len == 1) {
         Py_ssize_t root = top(s);
         PyObject *root_tag = stack_tag(s, 0);
@@ -859,7 +1325,7 @@ static int repair(const Scan *s, PyObject *tag_lc, PyObject *end_text,
             /* popped and pushed back: the stack is the root alone */
             if (close_element(s->st, root, end_text, at, end_pos) < 0)
                 return -1;
-            set_slot(s->stack, 0, INT[0]);
+            s->stack[0] = 0;
             return 1;
         }
     }
@@ -891,14 +1357,13 @@ static int repair(const Scan *s, PyObject *tag_lc, PyObject *end_text,
         }
     }
     int popped = 0;
-    long math_or_svg = 0;
-    while (match > 0 && PyList_GET_SIZE(s->stack) > match) {
+    while (match > 0 && s->depth > match) {
         Py_ssize_t cur = top(s);
-        long closed = cur == -1 && PyErr_Occurred() ? -1 : closure_at(s->st, cur);
+        long closed = closure_at(s->st, cur);
         if (closed == -1 && PyErr_Occurred())
             return -1;
         if (!closed) {
-            if (PyList_GET_SIZE(s->stack) - 1 == match) {
+            if (s->depth - 1 == match) {
                 popped = 1;
                 if (close_element(s->st, cur, end_text, at, end_pos) < 0)
                     return -1;
@@ -906,18 +1371,16 @@ static int repair(const Scan *s, PyObject *tag_lc, PyObject *end_text,
                 return -1;
             }
             PyObject *tag = tag_lc_at(s->st, cur);
-            if (tag == NULL || (is_tag(tag, "table") && examine_table(s, cur) < 0))
+            if (tag == NULL
+                    || (is_tag(tag, "table") && examine_table(s->st, cur) < 0))
                 return -1;
         }
         PyObject *tag = tag_lc_at(s->st, cur);
         if (tag == NULL)
             return -1;
-        math_or_svg += is_tag(tag, "math") || is_tag(tag, "svg");
-        if (pop_stack(s) < 0)
-            return -1;
+        s->math_or_svg -= is_tag(tag, "math") || is_tag(tag, "svg");
+        s->depth--;
     }
-    if (math_or_svg && bump_math_or_svg(s, -math_or_svg) < 0)
-        return -1;
     if (!popped) {
         Py_ssize_t idx = add_node(s, UNMATCHED_CLOSE);
         if (idx < 0)
@@ -951,14 +1414,15 @@ static Py_ssize_t end_tag(Scan *s, Py_ssize_t k)
     if (i2 >= n || CH(src, i2) != '>')
         return 0;
 
-    PyObject *tag_lc, *tag = interned_span(src, iw, tag_end, &tag_lc);
+    TagInfo info;
+    PyObject *tag_lc, *tag = interned_span(src, iw, tag_end, &tag_lc, &info);
     if (tag == NULL)
         return -1;
     Py_DECREF(tag);
     /* endTagText excludes whitespace after '</' */
     PyObject *text;
     if (iw == k + 2) {
-        text = interned_span(src, k, i2 + 1, NULL);
+        text = interned_span(src, k, i2 + 1, NULL, NULL);
     } else {
         PyObject *rest = span(src, iw, i2 + 1);
         text = rest ? PyUnicode_Concat(S_LT_SLASH, rest) : NULL;
@@ -967,15 +1431,15 @@ static Py_ssize_t end_tag(Scan *s, Py_ssize_t k)
     Py_ssize_t r = -1;
     if (text == NULL)
         goto done;
-    int match = PyList_GET_SIZE(s->stack) > 1;
+    int match = s->depth > 1;
     if (match) {
-        PyObject *top_tag = stack_tag(s, PyList_GET_SIZE(s->stack) - 1);
+        PyObject *top_tag = stack_tag(s, s->depth - 1);
         match = top_tag == NULL ? -1 : same_name(top_tag, tag_lc);
         if (match < 0)
             goto done;
     }
     if (match) {
-        if (close_top(s, tag_lc, text, k, i2 + 1) < 0)
+        if (close_top(s, info.flags, text, k, i2 + 1) < 0)
             goto done;
         counts[ST_END_TOP]++;
     } else {
@@ -1029,7 +1493,8 @@ static int push_attr(Attrs *as, Py_ssize_t w0, Py_ssize_t w1, Py_ssize_t n0,
 /* the raw-text scan after an open script/style/textarea at stack top:
  * the first '</tag' [ws]* '>' with a naive stage matcher (a partial match
  * resumes after the mismatching char) */
-static Py_ssize_t raw_text(Scan *s, Py_ssize_t i, PyObject *tag_lc)
+static Py_ssize_t raw_text(Scan *s, Py_ssize_t i, PyObject *tag_lc,
+                           unsigned flags)
 {
     const Src *src = &s->src;
     Py_ssize_t n = src->n;
@@ -1084,10 +1549,10 @@ static Py_ssize_t raw_text(Scan *s, Py_ssize_t i, PyObject *tag_lc)
             && add_leaf(s, TEXT, i, match_start, 1, poss_ent, i,
                         match_start) < 0)
         return -1;
-    PyObject *text = interned_span(src, match_start, gt + 1, NULL);
+    PyObject *text = interned_span(src, match_start, gt + 1, NULL, NULL);
     if (text == NULL)
         return -1;
-    int r = close_top(s, tag_lc, text, match_start, gt + 1);
+    int r = close_top(s, flags, text, match_start, gt + 1);
     Py_DECREF(text);
     if (r < 0)
         return -1;
@@ -1095,48 +1560,126 @@ static Py_ssize_t raw_text(Scan *s, Py_ssize_t i, PyObject *tag_lc)
     return gt + 1;
 }
 
-/* what parse()'s charset sniff answers: a charset is known, none is yet
- * (a later meta tag still needs the sniff), or one is and the scan stops
- * after this tag */
-enum { SNIFF_DONE, SNIFF_MORE, SNIFF_STOP };
+/* The meta charset sniff (html-parser.ts:729-758).  While the charset
+ * so far is None or "", each meta tag's valued attributes are read in
+ * order.  A tag with an http-equiv or content attribute goes to
+ * parser._meta_charset, which runs the content-type two-step; otherwise
+ * each charset= attribute sets the charset to its value, stripped as
+ * str.strip() strips.  A tag that leaves a non-empty charset ends the
+ * sniff and calls charset_known(). */
 
-/* hand a meta tag's valued attributes to parse()'s charset sniff */
+/* t[a:b] is ``name`` (lowercase ASCII) once lowercased: no non-ASCII
+ * character lowercases to a letter of charset, content or http-equiv */
+static int attr_is(const Src *s, Py_ssize_t a, Py_ssize_t b, const char *name)
+{
+    Py_ssize_t len = (Py_ssize_t)strlen(name);
+    if (b - a != len)
+        return 0;
+    for (Py_ssize_t j = 0; j < len; j++) {
+        Py_UCS4 c = CH(s, a + j);
+        if (c >= 'A' && c <= 'Z')
+            c += 32;
+        if (c != (Py_UCS4)name[j])
+            return 0;
+    }
+    return 1;
+}
+
+static int sniffing(const Scan *s)
+{
+    return s->charset == Py_None || PyUnicode_GET_LENGTH(s->charset) == 0;
+}
+
+/* a meta tag left the charset s->charset (non-empty).  scan(): the scan
+ * stops after this tag if parse()'s on_charset hook returns true.  page():
+ * with a codec, a charset that codecs does not map to None or to that
+ * codec may need the Python retry, so the page is left unsettled and the
+ * scan stops here */
+static int charset_known(Scan *s)
+{
+    if (s->codecs != NULL) {
+        if (s->codec == NULL)
+            return 0;
+        PyObject *c = PyDict_GetItemWithError(s->codecs, s->charset);
+        if (c == NULL && PyErr_Occurred())
+            return -1;
+        int same = c == Py_None;
+        if (c != NULL && !same && PyUnicode_Check(c)
+                && (same = PyUnicode_Compare(c, s->codec) == 0) == 0
+                && PyErr_Occurred())
+            return -1;
+        s->unsettled = s->stop = !same;
+        return 0;
+    }
+    if (s->on_charset == NULL)
+        return 0;
+    PyObject *r = PyObject_CallOneArg(s->on_charset, s->charset);
+    if (r == NULL)
+        return -1;
+    s->stop = PyObject_IsTrue(r);
+    Py_DECREF(r);
+    return s->stop < 0 ? -1 : 0;
+}
+
+/* str.strip() of t[a:b] */
+static PyObject *stripped(const Src *s, Py_ssize_t a, Py_ssize_t b)
+{
+    while (a < b && Py_UNICODE_ISSPACE(CH(s, a)))
+        a++;
+    while (b > a && Py_UNICODE_ISSPACE(CH(s, b - 1)))
+        b--;
+    return span(s, a, b);
+}
+
+/* the sniff of one meta tag */
 static int sniff(Scan *s, const Attrs *as)
 {
-    PyObject *names = PyList_New(0), *values = PyList_New(0), *more = NULL;
-    int r = -1;
-    if (names == NULL || values == NULL)
-        goto done;
-    for (Py_ssize_t j = 0; j < as->len; j++) {
+    const Src *src = &s->src;
+    int python = 0;
+    for (Py_ssize_t j = 0; j < as->len && !python; j++) {
         const Attr *x = &as->a[j];
-        if (!x->valued)
-            continue;
-        PyObject *name = span(&s->src, x->n0, x->n1);
-        PyObject *value = span(&s->src, x->v0, x->v1);
-        int bad = name == NULL || value == NULL
-            || PyList_Append(names, name) < 0
-            || PyList_Append(values, value) < 0;
-        Py_XDECREF(name);
-        Py_XDECREF(value);
-        if (bad)
-            goto done;
+        python = x->valued && (attr_is(src, x->n0, x->n1, "http-equiv")
+                               || attr_is(src, x->n0, x->n1, "content"));
     }
-    more = PyObject_CallFunctionObjArgs(s->sniff, names, values, NULL);
-    if (more == NULL)
-        goto done;
-    long v = PyLong_AsLong(more);
-    if (v == -1 && PyErr_Occurred())
-        goto done;
-    if (v != SNIFF_MORE)
-        s->sniff = NULL;
-    s->stop = v == SNIFF_STOP;
-    r = 0;
+    PyObject *charset = Py_NewRef(s->charset);
+    if (python) {
+        PyObject *names = PyList_New(0), *values = PyList_New(0);
+        int bad = names == NULL || values == NULL;
+        for (Py_ssize_t j = 0; j < as->len && !bad; j++) {
+            const Attr *x = &as->a[j];
+            if (!x->valued)
+                continue;
+            PyObject *name = span(src, x->n0, x->n1);
+            PyObject *value = span(src, x->v0, x->v1);
+            bad = name == NULL || value == NULL
+                || PyList_Append(names, name) < 0
+                || PyList_Append(values, value) < 0;
+            Py_XDECREF(name);
+            Py_XDECREF(value);
+        }
+        Py_SETREF(charset, bad ? NULL : PyObject_CallFunctionObjArgs(
+            META_CHARSET, names, values, charset, NULL));
+        Py_XDECREF(names);
+        Py_XDECREF(values);
+        if (charset != NULL && charset != Py_None
+                && !PyUnicode_Check(charset)) {
+            PyErr_SetString(PyExc_TypeError,
+                            "the meta charset sniff returned a non-str");
+            Py_CLEAR(charset);
+        }
+        page_counts[PG_PYTHON_SNIFF]++;
+    } else {
+        for (Py_ssize_t j = 0; j < as->len && charset != NULL; j++) {
+            const Attr *x = &as->a[j];
+            if (x->valued && attr_is(src, x->n0, x->n1, "charset"))
+                Py_SETREF(charset, stripped(src, x->v0, x->v1));
+        }
+    }
+    if (charset == NULL)
+        return -1;
+    Py_SETREF(s->charset, charset);
     counts[ST_META]++;
-done:
-    Py_XDECREF(names);
-    Py_XDECREF(values);
-    Py_XDECREF(more);
-    return r;
+    return sniffing(s) ? 0 : charset_known(s);
 }
 
 /* '<!' markup other than a comment at k: a declaration or a doctype.  An
@@ -1208,11 +1751,11 @@ static Py_ssize_t start_tag(Scan *s, Py_ssize_t k)
             break;
         i++;
     }
-    PyObject *tag_lc, *tag = interned_span(src, k + 1, i, &tag_lc);
+    TagInfo info;
+    PyObject *tag_lc, *tag = interned_span(src, k + 1, i, &tag_lc, &info);
     if (tag == NULL)
         return -1;
     Py_ssize_t r = 0;
-    PyObject *idx = NULL;
     Attrs as;
     as.a = as.local;
     as.len = 0;
@@ -1315,27 +1858,21 @@ static Py_ssize_t start_tag(Scan *s, Py_ssize_t k)
     }
 
     /* build the element */
-    PyObject *closers = PyDict_GetItemWithError(OPEN_IMPLIES_CLOSE, tag_lc);
-    if (closers == NULL && PyErr_Occurred())
-        goto error;
-    while (closers != NULL) {
+    PyObject *closers = info.closers;
+    while (closers != NULL && s->depth > 1) {
         Py_ssize_t cur = top(s);
-        PyObject *cur_tag = cur == -1 && PyErr_Occurred()
-            ? NULL : tag_lc_at(st, cur);
+        PyObject *cur_tag = tag_lc_at(st, cur);
         int hit = cur_tag == NULL ? -1 : PySet_Contains(closers, cur_tag);
         if (hit < 0)
             goto error;
         if (!hit)
             break;
-        if (set_closure(st, cur, IMPLICITLY_CLOSED) < 0 || pop_stack(s) < 0)
+        if (set_closure(st, cur, IMPLICITLY_CLOSED) < 0)
             goto error;
+        s->depth--;
     }
-    int is_void = end_kind == END_SELF;
-    if (end_kind == END_GT) {
-        is_void = PySet_Contains(VOID_ELEMENTS, tag_lc);
-        if (is_void < 0)
-            goto error;
-    }
+    int is_void = end_kind == END_SELF
+        || (end_kind == END_GT && (info.flags & TF_VOID));
     Py_ssize_t attr0 = st->n_attrs;
     if (reserve((void **)&st->attrs, &st->cap_attrs, attr0 + as.len,
                 sizeof(Attr)) < 0)
@@ -1364,19 +1901,16 @@ static Py_ssize_t start_tag(Scan *s, Py_ssize_t k)
         x->src_end = i;
         x->closure = end_kind == END_SELF ? SELF_CLOSED : VOID_CLOSED;
     }
-    if (s->sniff != NULL && is_tag(tag_lc, "meta") && sniff(s, &as) < 0)
+    if (sniffing(s) && (info.flags & TF_META) && sniff(s, &as) < 0)
         goto error;
     if (is_void) {
         counts[ST_VOID]++;
         r = i;
         goto done;
     }
-    if ((idx = PyLong_FromSsize_t(node)) == NULL
-            || PyList_Append(s->stack, idx) < 0)
+    if (push_stack(s, node) < 0)
         goto error;
-    if ((is_tag(tag_lc, "math") || is_tag(tag_lc, "svg"))
-            && bump_math_or_svg(s, 1) < 0)
-        goto error;
+    s->math_or_svg += (info.flags & TF_MATH_SVG) != 0;
     if (end_kind == END_BAD) {
         s->errors++;
         counts[ST_BAD_TERM]++;
@@ -1384,10 +1918,7 @@ static Py_ssize_t start_tag(Scan *s, Py_ssize_t k)
         goto done;
     }
     counts[ST_START]++;
-    int raw = PySequence_Contains(RAW_TEXT_TAGS, tag_lc);
-    if (raw < 0)
-        goto error;
-    r = raw ? raw_text(s, i, tag_lc) : i;
+    r = info.flags & TF_RAW ? raw_text(s, i, tag_lc, info.flags) : i;
     goto done;
 eof:
     counts[ST_OFF_START_EOF]++;
@@ -1399,7 +1930,6 @@ done:
     if (as.a != as.local)
         PyMem_Free(as.a);
     Py_DECREF(tag);
-    Py_XDECREF(idx);
     Py_DECREF(tag_lc);
     return r;
 }
@@ -1488,28 +2018,71 @@ static Py_ssize_t text_run(Scan *s, Py_ssize_t i, int empty_end_tag,
     return k;
 }
 
+/* read tokens from i until the first one the core does not own, the end
+ * of the text or a stop after a tag; returns that offset, -1 on error */
+static Py_ssize_t run(Scan *s, Py_ssize_t i, int empty_end_tag)
+{
+    if (META_CHARSET == NULL) {
+        PyErr_SetString(PyExc_RuntimeError, "_native.setup() was not called");
+        return -1;
+    }
+    while (i < s->src.n && !s->stop) {
+        Py_UCS4 c2;
+        Py_ssize_t k = text_run(s, i, empty_end_tag, &c2);
+        if (k < 0)
+            return -1;
+        if (k >= s->src.n)
+            return s->src.n;
+        Py_ssize_t next;
+        if (c2 == '/') {
+            next = end_tag(s, k);
+            if (next == 0)
+                counts[ST_OFF_END]++;
+        } else if (c2 == '!') {
+            if (k + 3 < s->src.n && CH(&s->src, k + 2) == '-'
+                    && CH(&s->src, k + 3) == '-') {
+                next = comment(s, k);
+            } else {
+                next = declaration(s, k);
+                if (next == 0)
+                    counts[ST_OFF_DECL]++;
+            }
+        } else if (c2 == '?') {
+            counts[ST_OFF_PI]++;
+            next = 0;
+        } else {
+            next = start_tag(s, k);
+        }
+        if (next <= 0)
+            return next < 0 ? -1 : k;
+        i = next;
+    }
+    return i;
+}
+
 static PyObject *scan(PyObject *self, PyObject *const *args, Py_ssize_t nargs)
 {
-    if (nargs != 7) {
-        PyErr_SetString(PyExc_TypeError, "scan() takes 7 arguments");
+    if (nargs != 8) {
+        PyErr_SetString(PyExc_TypeError, "scan() takes 8 arguments");
         return NULL;
     }
     Scan s;
-    PyObject *t = args[0];
+    memset(&s, 0, sizeof s);
+    PyObject *t = args[0], *stack = args[3], *b = args[4];
     Py_ssize_t i = PyLong_AsSsize_t(args[1]);
-    s.stack = args[3];
-    s.b = args[4];
     int empty_end_tag = PyObject_IsTrue(args[5]);
-    s.sniff = args[6] == Py_None ? NULL : args[6];
     if ((i == -1 || empty_end_tag < 0) && PyErr_Occurred())
         return NULL;
     if (!PyUnicode_Check(t) || !NodeStore_Check(args[2])
-            || !PyList_Check(s.stack)) {
+            || !PyList_Check(stack)
+            || (args[6] != Py_None && !PyUnicode_Check(args[6]))) {
         PyErr_SetString(PyExc_TypeError,
-                        "scan(str, int, NodeStore, list, ...)");
+                        "scan(str, int, NodeStore, list, builder, bool,"
+                        " str | None, on_charset)");
         return NULL;
     }
     s.st = (NodeStore *)args[2];
+    s.on_charset = args[7] == Py_None ? NULL : args[7];
     /* the store's offsets index one text: the first scan's */
     if (s.st->src == NULL) {
         Py_INCREF(t);
@@ -1521,47 +2094,39 @@ static PyObject *scan(PyObject *self, PyObject *const *args, Py_ssize_t nargs)
     }
     if (src_init(&s.src, t) < 0)
         return NULL;
-    s.errors = 0;
-    s.stop = 0;
-
-    while (i < s.src.n && !s.stop) {
-        Py_UCS4 c2;
-        Py_ssize_t k = text_run(&s, i, empty_end_tag, &c2);
-        if (k < 0)
-            return NULL;
-        if (k >= s.src.n) {
-            i = s.src.n;
-            break;
-        }
-        Py_ssize_t next;
-        if (c2 == '/') {
-            next = end_tag(&s, k);
-            if (next == 0)
-                counts[ST_OFF_END]++;
-        } else if (c2 == '!') {
-            if (k + 3 < s.src.n && CH(&s.src, k + 2) == '-'
-                    && CH(&s.src, k + 3) == '-') {
-                next = comment(&s, k);
-            } else {
-                next = declaration(&s, k);
-                if (next == 0)
-                    counts[ST_OFF_DECL]++;
-            }
-        } else if (c2 == '?') {
-            counts[ST_OFF_PI]++;
-            next = 0;
-        } else {
-            next = start_tag(&s, k);
-        }
-        if (next < 0)
-            return NULL;
-        if (next == 0) {
-            i = k;
-            break;
-        }
-        i = next;
+    PyObject *v = PyObject_GetAttr(b, S_IN_MATH_OR_SVG);
+    if (v == NULL)
+        return NULL;
+    long math_or_svg = PyLong_AsLong(v);
+    Py_DECREF(v);
+    if (math_or_svg == -1 && PyErr_Occurred())
+        return NULL;
+    s.math_or_svg = math_or_svg;
+    if (stack_from(&s, stack) < 0) {
+        PyMem_Free(s.stack);
+        return NULL;
     }
-    return Py_BuildValue("nl", i, s.errors);
+    s.charset = Py_NewRef(args[6]);
+
+    /* the open stack and the math/svg counter live in C while the scan
+     * runs (no Python code that runs meanwhile reads them) and are
+     * written back at its end */
+    i = run(&s, i, empty_end_tag);
+    if (i >= 0 && stack_to(&s, stack) < 0)
+        i = -1;
+    PyMem_Free(s.stack);
+    if (i >= 0 && s.math_or_svg != math_or_svg) {
+        v = PyLong_FromLong(s.math_or_svg);
+        if (v == NULL || PyObject_SetAttr(b, S_IN_MATH_OR_SVG, v) < 0)
+            i = -1;
+        Py_XDECREF(v);
+    }
+    if (i < 0) {
+        Py_DECREF(s.charset);
+        return NULL;
+    }
+    return Py_BuildValue("nlNO", i, s.errors, s.charset,
+                         s.stop ? Py_True : Py_False);
 }
 
 /* --- density extraction ---------------------------------------------------
@@ -1909,22 +2474,22 @@ static int score(Density *d, PyObject *boost, double min_chars,
     return 0;
 }
 
-static PyObject *density(PyObject *self, PyObject *const *args,
-                         Py_ssize_t nargs)
+/* density(st, *args) for the six arguments after the store: the
+ * 7-tuple, NULL on error */
+static PyObject *density_of(NodeStore *st, PyObject *const *args)
 {
-    if (nargs != 7 || !NodeStore_Check(args[0]) || !PyAnySet_Check(args[1])
-            || !PyAnySet_Check(args[2]) || !PyAnySet_Check(args[3])) {
+    if (!PyAnySet_Check(args[0]) || !PyAnySet_Check(args[1])
+            || !PyAnySet_Check(args[2])) {
         PyErr_SetString(PyExc_TypeError,
                         "density(NodeStore, set, set, set, min_block_chars,"
                         " max_link_density, unescape)");
         return NULL;
     }
-    NodeStore *st = (NodeStore *)args[0];
-    PyObject *unescape = args[6];
-    double min_chars = PyFloat_AsDouble(args[4]);
+    PyObject *unescape = args[5];
+    double min_chars = PyFloat_AsDouble(args[3]);
     if (min_chars == -1.0 && PyErr_Occurred())
         return NULL;
-    double max_link = PyFloat_AsDouble(args[5]);
+    double max_link = PyFloat_AsDouble(args[4]);
     if (max_link == -1.0 && PyErr_Occurred())
         return NULL;
 
@@ -1946,13 +2511,13 @@ static PyObject *density(PyObject *self, PyObject *const *args,
     }
     for (Py_ssize_t i = 0; i <= n; i++)
         d.block_of[i] = -1;
-    if (walk(&d, st, args[1], args[2], unescape) < 0)
+    if (walk(&d, st, args[0], args[1], unescape) < 0)
         goto done;
     parts = PyList_New(0);
     starts = PyList_New(0);
     ends = PyList_New(0);
     if (parts == NULL || starts == NULL || ends == NULL
-            || score(&d, args[3], min_chars, max_link, parts, starts, ends,
+            || score(&d, args[2], min_chars, max_link, parts, starts, ends,
                      &kept, &total) < 0)
         goto done;
     PyObject *text = PyUnicode_Join(S_EMPTY, parts);
@@ -1976,6 +2541,18 @@ done:
     return result;
 }
 
+static PyObject *density(PyObject *self, PyObject *const *args,
+                         Py_ssize_t nargs)
+{
+    if (nargs != 7 || !NodeStore_Check(args[0])) {
+        PyErr_SetString(PyExc_TypeError,
+                        "density(NodeStore, set, set, set, min_block_chars,"
+                        " max_link_density, unescape)");
+        return NULL;
+    }
+    return density_of((NodeStore *)args[0], args + 1);
+}
+
 /* --- the parse-end census ---------------------------------------------------
  *
  * census() is DocBuilder.count_unclosed_flat in one loop over the nodes:
@@ -1983,31 +2560,39 @@ done:
  * stays the reference (tests/test_parser_fastpaths.py compares the two).
  */
 
+static int census_of(NodeStore *st, Py_ssize_t *unclosed,
+                     Py_ssize_t *implicitly)
+{
+    *unclosed = *implicitly = 0;
+    for (Py_ssize_t i = 0; i < st->n; i++) {
+        long kind = kind_at(st, i), closure;
+        if (kind == -1 && PyErr_Occurred())
+            return -1;
+        if (kind != ELEMENT)
+            continue;
+        int synthetic = synthetic_at(st, i);
+        if (synthetic < 0)
+            return -1;
+        if (synthetic)
+            continue;
+        closure = closure_at(st, i);
+        if (closure == -1 && PyErr_Occurred())
+            return -1;
+        *unclosed += closure == UNCLOSED;
+        *implicitly += closure == IMPLICITLY_CLOSED;
+    }
+    return 0;
+}
+
 static PyObject *census(PyObject *self, PyObject *nodes)
 {
     if (!NodeStore_Check(nodes)) {
         PyErr_SetString(PyExc_TypeError, "census(NodeStore)");
         return NULL;
     }
-    NodeStore *st = (NodeStore *)nodes;
-    Py_ssize_t unclosed = 0, implicitly = 0;
-    for (Py_ssize_t i = 0; i < st->n; i++) {
-        long kind = kind_at(st, i), closure;
-        if (kind == -1 && PyErr_Occurred())
-            return NULL;
-        if (kind != ELEMENT)
-            continue;
-        int synthetic = synthetic_at(st, i);
-        if (synthetic < 0)
-            return NULL;
-        if (synthetic)
-            continue;
-        closure = closure_at(st, i);
-        if (closure == -1 && PyErr_Occurred())
-            return NULL;
-        unclosed += closure == UNCLOSED;
-        implicitly += closure == IMPLICITLY_CLOSED;
-    }
+    Py_ssize_t unclosed, implicitly;
+    if (census_of((NodeStore *)nodes, &unclosed, &implicitly) < 0)
+        return NULL;
     return Py_BuildValue("nn", unclosed, implicitly);
 }
 
@@ -2027,14 +2612,9 @@ static PyObject *census(PyObject *self, PyObject *nodes)
         }                                                               \
     } while (0)
 
-static PyObject *token_count(PyObject *self, PyObject *t)
+/* the token count of a ready str */
+static Py_ssize_t tokens_of(PyObject *t)
 {
-    if (!PyUnicode_Check(t)) {
-        PyErr_SetString(PyExc_TypeError, "token_count(str)");
-        return NULL;
-    }
-    if (PyUnicode_READY(t) < 0)
-        return NULL;
     const void *data = PyUnicode_DATA(t);
     Py_ssize_t n = PyUnicode_GET_LENGTH(t), runs = 0;
     int in_word = 0;
@@ -2043,17 +2623,140 @@ static PyObject *token_count(PyObject *self, PyObject *t)
     case PyUnicode_2BYTE_KIND: COUNT_RUNS(Py_UCS2); break;
     default: COUNT_RUNS(Py_UCS4);
     }
-    return PyLong_FromSsize_t(runs);
+    return runs;
+}
+
+static PyObject *token_count(PyObject *self, PyObject *t)
+{
+    if (!PyUnicode_Check(t)) {
+        PyErr_SetString(PyExc_TypeError, "token_count(str)");
+        return NULL;
+    }
+    if (PyUnicode_READY(t) < 0)
+        return NULL;
+    return PyLong_FromSsize_t(tokens_of(t));
+}
+
+/* --- the extract page ---------------------------------------------------------
+ *
+ * page(text, codec, codecs, DROP_TAGS, INLINE_TAGS, BOOST_TAGS,
+ * min_block_chars, max_link_density, unescape_entities) is the extract
+ * kernel's row for one decoded page in one call: parse(text,
+ * positions=False) with the retry hook of kernel.decode_parse, then
+ * extract(strip="density").  It scans the text into a store of its own,
+ * with a struct root, and runs census(), density(), the line count and the
+ * token count of the extracted text.  It returns (text, span_starts,
+ * span_ends, declared_charset, errors, unclosed, implicitly_closed,
+ * node_count, text_node_count, lines, token_count), or None, and counts
+ * why in page_stats(), for a page it cannot settle alone:
+ * - "cr": the text holds a '\r' (parse() would normalize its line breaks);
+ * - "handoff": the scan stopped at a token it hands to the general machine;
+ * - "charset": a meta tag declared a charset that codecs (kernel.py's
+ *   declared-charset table, which the Python retry hook fills) does not
+ *   map to None (no codec) or to ``codec``, the codec the text was decoded
+ *   with; the scan stops at that tag.  With codec None (a BOM or
+ *   null-byte pattern chose the codec) a declared charset is only
+ *   reported, as decode_parse does.
+ * The kernel runs the Python path for such a page.  Entity decoding in
+ * density() calls unescape_entities, as it does for a parse.
+ */
+
+#define COUNT_NL(TYPE)                                                  \
+    do {                                                                \
+        const TYPE *d = (const TYPE *)s->data;                          \
+        for (Py_ssize_t p = 0; p < s->n; p++)                           \
+            m += d[p] == '\n';                                          \
+    } while (0)
+
+/* the '\n' characters of the text */
+static Py_ssize_t newlines(const Src *s)
+{
+    Py_ssize_t m = 0;
+    switch (s->kind) {
+    case PyUnicode_1BYTE_KIND: COUNT_NL(Py_UCS1); break;
+    case PyUnicode_2BYTE_KIND: COUNT_NL(Py_UCS2); break;
+    default: COUNT_NL(Py_UCS4);
+    }
+    return m;
+}
+
+static PyObject *page(PyObject *self, PyObject *const *args, Py_ssize_t nargs)
+{
+    if (nargs != 9 || !PyUnicode_Check(args[0])
+            || (args[1] != Py_None && !PyUnicode_Check(args[1]))
+            || !PyDict_Check(args[2])) {
+        PyErr_SetString(PyExc_TypeError,
+                        "page(str, str | None, dict, DROP_TAGS, INLINE_TAGS,"
+                        " BOOST_TAGS, min_block_chars, max_link_density,"
+                        " unescape)");
+        return NULL;
+    }
+    PyObject *t = args[0];
+    if (PyUnicode_READY(t) < 0)
+        return NULL;
+    Py_ssize_t n = PyUnicode_GET_LENGTH(t);
+    Py_ssize_t cr = PyUnicode_FindChar(t, '\r', 0, n, 1);
+    if (cr == -2)
+        return NULL;
+    if (cr >= 0) {
+        page_counts[PG_CR]++;
+        Py_RETURN_NONE;
+    }
+
+    Scan s;
+    memset(&s, 0, sizeof s);
+    PyObject *result = NULL, *ext = NULL;
+    s.st = (NodeStore *)NodeStoreType.tp_alloc(&NodeStoreType, 0);
+    if (s.st == NULL)
+        goto done;
+    s.st->src = Py_NewRef(t);
+    if (new_wrapper(s.st, S_ROOT, -1) < 0 || push_stack(&s, 0) < 0
+            || src_init(&s.src, t) < 0)
+        goto done;
+    s.codecs = args[2];
+    s.codec = args[1] == Py_None ? NULL : args[1];
+    s.charset = Py_NewRef(Py_None);
+
+    Py_ssize_t i = run(&s, 0, 1);
+    if (i < 0)
+        goto done;
+    if (s.unsettled || i < n) {
+        page_counts[s.unsettled ? PG_CHARSET : PG_HANDOFF]++;
+        result = Py_NewRef(Py_None);
+        goto done;
+    }
+    Py_ssize_t unclosed, implicitly;
+    if (census_of(s.st, &unclosed, &implicitly) < 0
+            || (ext = density_of(s.st, args + 3)) == NULL)
+        goto done;
+    Py_ssize_t lines = newlines(&s.src) + 1;
+    /* density()'s (text, starts, ends, kept, total, nodes, text nodes) */
+    PyObject *text = PyTuple_GET_ITEM(ext, 0);
+    result = Py_BuildValue("(OOOOlnnOOnn)", text, PyTuple_GET_ITEM(ext, 1),
+                           PyTuple_GET_ITEM(ext, 2), s.charset, s.errors,
+                           unclosed, implicitly, PyTuple_GET_ITEM(ext, 5),
+                           PyTuple_GET_ITEM(ext, 6), lines,
+                           tokens_of(text));
+    if (result != NULL)
+        page_counts[PG_SETTLED]++;
+done:
+    Py_XDECREF(ext);
+    Py_XDECREF(s.charset);
+    PyMem_Free(s.stack);
+    Py_XDECREF(s.st);
+    return result;
 }
 
 static PyObject *setup(PyObject *self, PyObject *args)
 {
-    PyObject *oic, *voids, *raw, *fmt, *markers;
-    if (!PyArg_ParseTuple(args, "O!O!O!O!O!", &PyDict_Type, &oic,
+    PyObject *oic, *voids, *raw, *fmt, *markers, *meta_charset;
+    if (!PyArg_ParseTuple(args, "O!O!O!O!O!O", &PyDict_Type, &oic,
                           &PyFrozenSet_Type, &voids, &PyTuple_Type, &raw,
                           &PyFrozenSet_Type, &fmt, &PyFrozenSet_Type,
-                          &markers))
+                          &markers, &meta_charset))
         return NULL;
+    Py_INCREF(meta_charset);
+    Py_XSETREF(META_CHARSET, meta_charset);
     Py_INCREF(fmt);
     Py_XSETREF(FORMATTING_ELEMENTS, fmt);
     Py_INCREF(markers);
@@ -2064,6 +2767,7 @@ static PyObject *setup(PyObject *self, PyObject *args)
     Py_XSETREF(VOID_ELEMENTS, voids);
     Py_INCREF(raw);
     Py_XSETREF(RAW_TEXT_TAGS, raw);
+    intern_clear();
     Py_RETURN_NONE;
 }
 
@@ -2084,16 +2788,59 @@ static PyObject *stats(PyObject *self, PyObject *unused)
     return d;
 }
 
+static PyObject *page_stats(PyObject *self, PyObject *unused)
+{
+    PyObject *d = PyDict_New();
+    if (d == NULL)
+        return NULL;
+    for (int j = 0; j < PG_COUNT; j++) {
+        PyObject *v = PyLong_FromUnsignedLongLong(page_counts[j]);
+        if (v == NULL || PyDict_SetItemString(d, PAGE_STAT_NAMES[j], v) < 0) {
+            Py_XDECREF(v);
+            Py_DECREF(d);
+            return NULL;
+        }
+        Py_DECREF(v);
+    }
+    return d;
+}
+
 static PyObject *reset_stats(PyObject *self, PyObject *unused)
 {
     memset(counts, 0, sizeof counts);
+    memset(page_counts, 0, sizeof page_counts);
+    Py_RETURN_NONE;
+}
+
+static PyObject *examine_table_py(PyObject *self, PyObject *const *args,
+                                  Py_ssize_t nargs)
+{
+    Py_ssize_t table = nargs == 2 ? PyLong_AsSsize_t(args[1]) : -1;
+    if (table == -1 && PyErr_Occurred())
+        return NULL;
+    if (nargs != 2 || !NodeStore_Check(args[0])) {
+        PyErr_SetString(PyExc_TypeError, "examine_table(NodeStore, int)");
+        return NULL;
+    }
+    if (examine_table((NodeStore *)args[0], table) < 0)
+        return NULL;
     Py_RETURN_NONE;
 }
 
 static PyMethodDef methods[] = {
     {"scan", (PyCFunction)(void (*)(void))scan, METH_FASTCALL,
-     "scan(t, i, node_store, open_stack, builder, empty_end_tag, sniff)"
-     " -> (offset of the first token not owned, errors counted)"},
+     "scan(t, i, node_store, open_stack, builder, empty_end_tag, charset,"
+     " on_charset) -> (offset of the first token not owned, errors counted,"
+     " charset, stopped)"},
+    {"page", (PyCFunction)(void (*)(void))page, METH_FASTCALL,
+     "page(text, codec, codecs, DROP_TAGS, INLINE_TAGS, BOOST_TAGS,"
+     " min_block_chars, max_link_density, unescape_entities) -> (text,"
+     " span_starts, span_ends, declared_charset, errors, unclosed,"
+     " implicitly_closed, node_count, text_node_count, lines, token_count)"
+     " or None"},
+    {"examine_table", (PyCFunction)(void (*)(void))examine_table_py,
+     METH_FASTCALL, "examine_table(node_store, table): the core's"
+     " DocBuilder._examine_table"},
     {"density", (PyCFunction)(void (*)(void))density, METH_FASTCALL,
      "density(node_store, DROP_TAGS, INLINE_TAGS, BOOST_TAGS, min_block_chars,"
      " max_link_density, unescape_entities) -> (text, span_starts,"
@@ -2105,16 +2852,20 @@ static PyMethodDef methods[] = {
      "token_count(t) -> len(t.split())"},
     {"setup", setup, METH_VARARGS,
      "setup(OPEN_IMPLIES_CLOSE, VOID_ELEMENTS, RAW_TEXT_TAGS,"
-     " FORMATTING_ELEMENTS, MARKER_ELEMENTS)"},
+     " FORMATTING_ELEMENTS, MARKER_ELEMENTS, meta_charset)"},
     {"stats", stats, METH_NOARGS, "per-branch token counts since reset"},
-    {"reset_stats", reset_stats, METH_NOARGS, "zero the token counts"},
+    {"page_stats", page_stats, METH_NOARGS,
+     "page() outcomes, meta tags sniffed in Python and records built,"
+     " since reset"},
+    {"reset_stats", reset_stats, METH_NOARGS, "zero both sets of counts"},
     {NULL, NULL, 0, NULL}
 };
 
 static struct PyModuleDef module = {
     PyModuleDef_HEAD_INIT, "_native",
-    "Native parse core and node storage, density extraction, the parse-end"
-    " census and the token count.", -1,
+    "Native parse core and node storage, table repair, density extraction,"
+    " the parse-end census, the token count and the one-call extract page.",
+    -1,
     methods,
     NULL, NULL, NULL, NULL
 };
@@ -2133,10 +2884,13 @@ PyMODINIT_FUNC PyInit__native(void)
     S_SQ = intern("'");
     S_EQ = intern("=");
     S_LT_SLASH = intern("</");
-    S_EXAMINE_TABLE = intern("_examine_table");
     S_IN_MATH_OR_SVG = intern("in_math_or_svg");
     S_LOWER = intern("lower");
     S_BLOCK_SEP = intern("\n\n");
+    S_ROOT = intern("/");
+    S_TR = intern("tr");
+    S_THEAD = intern("thead");
+    S_TBODY = intern("tbody");
     T_EMPTY = PyTuple_New(0);
     if (PyErr_Occurred() || PyType_Ready(&NodeStoreType) < 0)
         return NULL;

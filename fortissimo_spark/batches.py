@@ -35,6 +35,18 @@ finding nothing.  The
 collector is paused for at most one Arrow batch, so a cycle made
 elsewhere waits at most one batch longer to be collected.
 
+A reused Python worker freezes its heap once: at the end of the first
+task whose batches run out on the loop, ``_freeze_worker_heap`` runs
+``gc.collect()`` and then ``gc.freeze()``, which moves every object the
+worker holds (its imports: ``pyspark.worker``, pandas, pyarrow, this
+package; about 73k tracked objects) into the permanent generation.
+PySpark's daemon runs ``gc.collect()`` after every task of a reused
+worker, and over that heap each collection took 11-21 ms on a 4-vCPU
+host; after the freeze it takes ~0 ms.  The freeze happens only when a Spark task
+context is set, so a driver, a test or an in-process benchmark that
+calls a kernel keeps its GC as it was.  Frozen objects are still freed
+by refcounting; only a cycle among them outlives the worker's tasks.
+
 Zip finders: when a kernel's batch iterator is exhausted or closed,
 ``_drop_zip_finders`` deletes every ``zipimport.zipimporter`` from
 ``sys.path_importer_cache``.  PySpark's worker calls
@@ -106,6 +118,23 @@ def _drop_zip_finders() -> None:
         del cache[path]
 
 
+_heap_frozen = False
+
+
+def _freeze_worker_heap() -> None:
+    """``gc.collect()`` then ``gc.freeze()``, once per process, inside a
+    Spark task (see the module docstring).  The task context is read from
+    ``pyspark.taskcontext`` if a worker loaded it; this module does not
+    import pyspark."""
+    global _heap_frozen
+    context = sys.modules.get("pyspark.taskcontext")
+    if _heap_frozen or context is None or context.TaskContext.get() is None:
+        return
+    _heap_frozen = True
+    gc.collect()
+    gc.freeze()
+
+
 def row_kernel(schema, rows, inputs, carry=()):
     """The row-kernel loop (see the module docstring): ``rows(*values)``
     per input row of ``inputs`` columns, ``carry`` columns copied from
@@ -139,6 +168,7 @@ def row_kernel(schema, rows, inputs, carry=()):
                 yield pd.DataFrame(cols, dtype=None if src else object)
         finally:
             _drop_zip_finders()
+            _freeze_worker_heap()
 
     kernel.__name__ = rows.__name__
     return gc_paused(kernel)

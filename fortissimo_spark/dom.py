@@ -236,9 +236,9 @@ class DocBuilder:
     authority (an edit to it is what the core and every reader see).
     ``nodes.append`` stores a Python record as it is, as the general
     machine and ``new_element`` do.  ``nodes.materialized`` counts the
-    records built on a read: the extract kernel reads every node from C
-    and builds none on a page without tables or hand-offs.  Without the
-    core, ``nodes`` is a plain list of records.
+    records built on a read: ``decode_parse`` + density extraction read
+    every node from C and build none on a page without hand-offs.
+    Without the core, ``nodes`` is a plain list of records.
     """
 
     __slots__ = ("nodes", "open_stack", "in_math_or_svg", "xml_mode", "pos")
@@ -334,8 +334,8 @@ class DocBuilder:
         ends at ``end_pos`` (the parser and the native core close void and
         self-closing tags themselves).  This is the general machine's tree
         repair and the reference for the native core's, which runs the
-        same steps in C (``repair`` in ``_native.c``) and calls back only
-        into ``_examine_table``.
+        same steps in C (``repair`` in ``_native.c``), table repair
+        included (``examine_table``).
 
         Returns False when the closing tag was unmatched (parse error).
         """
@@ -410,6 +410,9 @@ class DocBuilder:
         return self.xml_mode or self.in_math_or_svg > 0
 
     # --- table repair (dom.ts:588-658) -------------------------------------
+    # the general machine's and the reference for the native core's
+    # examine_table(), which runs the same steps in C when the scan closes
+    # a table
 
     def _examine_table(self, table: int) -> None:
         nodes = self.nodes

@@ -17,6 +17,21 @@ below), and carries the key column and any ``warc_ts``/``lang`` from the
 input page onto each of its output rows.  A kernel is its row function
 plus its schema.
 
+The extract kernel takes one native call per clean page: its row
+(``_extract_page``) decodes the page and hands the text to the core's
+``page()``, which scans it, repairs its tables, counts its elements,
+extracts it by density and counts its lines and tokens in C, building no
+``DocBuilder``, ``ParseResult``, ``ExtractResult`` or record.  The core
+leaves a page to the Python path (``decode_parse`` + ``extract``, which
+``process_document`` always takes) when it meets a token it hands off, a
+carriage return (the parse's line-break normalization) or a declared
+charset that may need the retry below.  The retry hook records each
+declared charset's codec in ``_DECLARED_CODECS``, which ``page()`` reads:
+a declared charset with no codec, or with the codec the text was decoded
+with, needs no retry, and one not yet in the table takes the Python path
+once.  ``tests/test_extract_page.py`` holds the one call to
+``process_document`` field for field.
+
 Encoding policy (mirrors the reference CLI's retry loop, cli.ts:32-56, done
 in-kernel in a single pass):
 
@@ -56,7 +71,10 @@ from .dom import (
     N_CONTENT, N_KIND, N_PARENT, N_POSS_ENT, N_SRC_END, N_SRC_START,
     N_SYNTHETIC, N_TAG_LC, TEXT,
 )
-from .extract import extract
+from .extract import (
+    _MAX_LINK_DENSITY, _MIN_BLOCK_CHARS, BOOST_TAGS, DROP_TAGS, INLINE_TAGS,
+    extract,
+)
 from .parser import _native, parse
 from .schema import EXTRACT_SCHEMA, NODES_SCHEMA
 
@@ -72,6 +90,10 @@ _RE_META_CHARSET = re.compile(
 # core's token_count counts the same runs without building the list.
 _token_count = (_native.token_count if _native is not None
                 else lambda text: len(text.split()))
+
+# the extract kernel's one-call row (None: every page takes decode_parse
+# and extract)
+_NATIVE_PAGE = _native.page if _native is not None else None
 
 
 @lru_cache(maxsize=512)
@@ -131,10 +153,25 @@ def decode_page_bytes(raw: bytes) -> tuple[str, str, bool]:
         return raw.decode("utf-8", errors="replace"), "utf-8", False
 
 
+# declared meta charset -> its codec name (None: no codec), as the retry
+# hook resolved it; the native page() reads it to settle a declared
+# charset without calling Python.  Bounded: a charset missing from it
+# sends its page down the Python path, which is correct, only slower.
+_DECLARED_CODECS: dict = {}
+_MAX_DECLARED = 1024
+
+
+def _declared_codec(declared: str) -> str | None:
+    codec = _codec_name(declared)
+    if len(_DECLARED_CODECS) < _MAX_DECLARED:
+        _DECLARED_CODECS[declared] = codec
+    return codec
+
+
 def _redecoded(raw: bytes, declared: str, used: str, text: str) -> str | None:
     """``raw`` decoded with the ``declared`` charset if that is a codec
     other than ``used`` and gives a text other than ``text``; else None."""
-    declared_codec = _codec_name(declared)
+    declared_codec = _declared_codec(declared)
     if not declared_codec or declared_codec == _codec_name(used):
         return None
     try:
@@ -151,7 +188,12 @@ def decode_parse(raw: bytes):
     The first parse stops at the meta tag that declares a charset needing
     a retry (``on_charset``, see the module docstring), so a retried page
     is parsed once and a bit, not twice."""
-    text_src, used, pattern_detected = decode_page_bytes(raw)
+    return _parse_decoded(raw, *decode_page_bytes(raw))
+
+
+def _parse_decoded(raw: bytes, text_src: str, used: str,
+                   pattern_detected: bool):
+    """``decode_parse`` of ``raw`` after ``decode_page_bytes``."""
     retext = None
 
     def on_charset(declared: str) -> bool:
@@ -184,6 +226,12 @@ def _page_kernel(schema: StructType, rows, key: str = "url",
         raw = bytes(raw) if raw is not None else b""
         return rows(raw, decode_parse(raw))
 
+    return _row_kernel(schema, page, key, payload)
+
+
+def _row_kernel(schema: StructType, page, key: str, payload: str):
+    """``row_kernel`` over the ``payload`` column, carrying ``key`` and
+    the ``_CARRIED`` columns."""
     return row_kernel(schema, page, (payload,),
                       [n for n in schema.fieldNames()
                        if n == key or n in _CARRIED])
@@ -224,10 +272,43 @@ def process_document(raw: bytes, strip: str = "density", *,
     return doc
 
 
+def _extract_page(raw: bytes, strip: str, verify_roundtrip: bool) -> tuple:
+    """The extract kernel's row for one page: ``process_document``'s
+    _DOC_FIELDS values, in EXTRACT_SCHEMA order.
+
+    With ``strip="density"`` and no round-trip check the decoded page goes
+    to the native core's ``page()`` (read from ``_NATIVE_PAGE`` on every
+    call), which parses and extracts it in one call and builds no
+    ``DocBuilder``, result object or record.  A page it does not settle (a
+    token the core hands off, a carriage return, a declared charset that
+    may need the retry) and every other mode take ``decode_parse`` and
+    ``extract``, as ``process_document`` does."""
+    text, used, pattern_detected = decode_page_bytes(raw)
+    native = (_NATIVE_PAGE if strip == "density" and not verify_roundtrip
+              else None)
+    got = None if native is None else native(
+        text, None if pattern_detected else _codec_name(used),
+        _DECLARED_CODECS, DROP_TAGS, INLINE_TAGS, BOOST_TAGS,
+        _MIN_BLOCK_CHARS, _MAX_LINK_DENSITY, unescape_entities)
+    if got is None:
+        return _document_fields(
+            raw, _parse_decoded(raw, text, used, pattern_detected), strip,
+            verify_roundtrip)
+    (out, starts, ends, declared, errors, unclosed, implicitly, nodes,
+     text_nodes, lines, tokens) = got
+    return (out, starts, ends, used, declared, False, errors, unclosed,
+            implicitly, nodes, text_nodes, len(text), lines, len(out),
+            tokens, len(raw), None)
+
+
 def make_extract_kernel(strip: str = "density", verify_roundtrip: bool = False):
-    """Build a mapInPandas kernel: pages batches -> EXTRACT_SCHEMA batches."""
-    return _page_kernel(EXTRACT_SCHEMA, lambda raw, parsed: (
-        _document_fields(raw, parsed, strip, verify_roundtrip),))
+    """Build a mapInPandas kernel: pages batches -> EXTRACT_SCHEMA batches
+    (one ``_extract_page`` row per page)."""
+    def page(raw):
+        return (_extract_page(bytes(raw) if raw is not None else b"", strip,
+                              verify_roundtrip),)
+
+    return _row_kernel(EXTRACT_SCHEMA, page, "url", "html")
 
 
 def make_format_kernel(format_options: dict | None = None):

@@ -1,16 +1,20 @@
 """Build and load the native core (``_native.c``) on first import.
 
-The core holds five entry points: ``NodeStore``, the type of
+The core holds seven entry points: ``NodeStore``, the type of
 ``DocBuilder.nodes`` (a sequence of node structs that the scan fills, each
 read as its 21-slot record, built on the first read: indexing, ``len``,
 iteration and ``append``, and no slices, assignment or comparison),
-``scan``, the parse core behind ``parser.parse`` (tree repair included),
-``census``, the element counts of a ``NodeStore`` at the end of a parse,
-``density``, the walk behind ``extract(strip="density")`` over a
-``NodeStore``, and ``token_count``, the kernel's ``len(text.split())``.
-Python keeps the reference for each: a plain list of records, the general
-machine, ``DocBuilder.count_unclosed_flat``, the Python density loop and
-``str.split``.
+``scan``, the parse core behind ``parser.parse`` (tree and table repair
+and the ``charset=`` sniff included), ``examine_table``, its table repair
+on its own, ``census``, the element counts of a ``NodeStore`` at the end
+of a parse, ``density``, the walk behind ``extract(strip="density")`` over
+a ``NodeStore``, ``token_count``, the kernel's ``len(text.split())``, and
+``page``, the extract kernel's row for a decoded page in one call (scan,
+census, density, line and token count on a store of its own; None for a
+page it leaves to the Python path).  Python keeps the reference for each:
+a plain list of records, the general machine,
+``DocBuilder._examine_table``, ``DocBuilder.count_unclosed_flat``, the
+Python density loop, ``str.split`` and ``decode_parse`` + ``extract``.
 
 The C source ships inside the package, so a ``--py-files`` zip carries it
 too: it is read through ``importlib.resources`` and compiled with the
@@ -21,8 +25,8 @@ concurrent workers wait for it instead of compiling again.
 
 Without a working compiler (or Python headers) or a writable home
 directory ``load()`` returns None: ``DocBuilder.nodes`` is a list, the
-parser keeps to its Python general machine and ``extract()`` to its
-Python density loop.
+parser keeps to its Python general machine, ``extract()`` to its Python
+density loop and the extract kernel to ``decode_parse`` + ``extract``.
 """
 
 from __future__ import annotations

@@ -48,12 +48,14 @@ attribute names from a small intern cache.  At the end, ``census`` in the
 core counts the unclosed and implicitly closed elements
 (``DocBuilder.count_unclosed_flat`` is its reference).  The core repairs
 the tree itself: for an end tag that is not on top of the stack it runs
-``DocBuilder.pop``'s steps in C (``DocBuilder.pop`` stays the general
-machine's and the reference), and it calls back into Python only for
-``DocBuilder._examine_table`` when a table closes.  While no charset is
-known it hands each ``meta`` tag's attributes to the Python charset sniff,
-which answers whether to go on sniffing, or to stop the scan after that
-tag because ``on_charset`` asked the parse to stop (see ``parse``).
+``DocBuilder.pop``'s steps in C, and for a closing table
+``DocBuilder._examine_table``'s (both stay the general machine's and the
+reference), so it calls no Python for the tree.  While no charset is
+known it sniffs each ``meta`` tag: it reads ``charset=`` attributes
+itself and hands a tag with an ``http-equiv`` or ``content`` attribute
+to ``_meta_charset``.  The first meta tag that leaves a charset ends the
+sniff and calls ``on_charset``, which may stop the scan after that tag
+(see ``parse``); the core returns the charset and whether it stopped.
 Everything else (``<?``, CDATA, an xhtml doctype, EOF inside a tag or an
 end tag) goes to the general machine.  Xml mode
 never enters the core.  The general machine is the reference: for any
@@ -109,20 +111,42 @@ _RE_CHARSET_IN_CONTENT = re.compile(r"\bcharset[ \n\r\t\f]*=[ \n\r\t\f]*([\w-]+)
 
 _RAW_TEXT_TAGS = ("script", "style", "textarea")
 
+
+def _meta_charset(names, values, charset):
+    """The charset a meta tag leaves, from its valued attributes in order
+    and the ``charset`` before it: the meta-charset sniff
+    (html-parser.ts:729-758), whose content-type two-step restarts at
+    every tag.  The native core calls it for a meta tag with an
+    ``http-equiv`` or ``content`` attribute and reads ``charset=`` alone
+    itself."""
+    content_type = False
+    pending = None
+    for name, value in zip(names, values):
+        al = name.lower()
+        if al == "charset":
+            charset = value.strip()
+        elif al == "http-equiv" and value.lower() == "content-type":
+            content_type = True
+            charset = pending
+        elif al == "content":
+            cm = _RE_CHARSET_IN_CONTENT.search(value)
+            cs = cm.group(1) if cm else None
+            if content_type:
+                charset = cs
+            else:
+                pending = cs
+    return charset
+
+
 _native = _native_build.load()
 if _native is not None:
     _native.setup(OPEN_IMPLIES_CLOSE, VOID_ELEMENTS, _RAW_TEXT_TAGS,
-                  FORMATTING_ELEMENTS, MARKER_ELEMENTS)
+                  FORMATTING_ELEMENTS, MARKER_ELEMENTS, _meta_charset)
 # the native core's entry points (None: the general machine reads all,
 # and DocBuilder.count_unclosed_flat counts)
 _NATIVE_SCAN = _native.scan if _native is not None else None
 _NATIVE_CENSUS = _native.census if _native is not None else None
 NATIVE = _NATIVE_SCAN is not None
-
-# the charset sniff's answer to the native core after a meta tag (the
-# SNIFF_* values in _native.c): a charset is known, none is yet, or one is
-# and on_charset asked the parse to stop after this tag
-_SNIFF_DONE, _SNIFF_MORE, _SNIFF_STOP = 0, 1, 2
 
 # a char that is neither HTML whitespace nor astral (the wrap-up
 # trailing-text check: C-level search instead of a per-char Python loop)
@@ -262,27 +286,7 @@ def parse(source: str, *, empty_end_tag: bool = True, eol="\n", tab_size: int = 
     errors = 0
     stopped = False
     charset: str | None = None
-    checking_charset = False
-    content_type = False
-    pending_charset: str | None = None
     trailing_markup_error = False  # EOF with pending markup / trailing text
-
-    def check_charset(name: str, value: str) -> None:
-        # meta-charset sniff (html-parser.ts:729-758)
-        nonlocal charset, content_type, pending_charset
-        al = name.lower()
-        if al == "charset":
-            charset = value.strip()
-        elif al == "http-equiv" and value.lower() == "content-type":
-            content_type = True
-            charset = pending_charset
-        elif al == "content":
-            cm = _RE_CHARSET_IN_CONTENT.search(value)
-            cs = cm.group(1) if cm else None
-            if content_type:
-                charset = cs
-            else:
-                pending_charset = cs
 
     def charset_stops() -> bool:
         # the end of a meta tag that left a charset: the on_charset hook
@@ -290,26 +294,14 @@ def parse(source: str, *, empty_end_tag: bool = True, eol="\n", tab_size: int = 
         stopped = on_charset is not None and bool(on_charset(charset))
         return stopped
 
-    def meta_sniff(names, values):
-        # the native core's call for a meta tag's valued attributes: the
-        # two-step restarts at the tag, as at every start tag below
-        nonlocal content_type, pending_charset
-        content_type = False
-        pending_charset = None
-        for name, value in zip(names, values):
-            check_charset(name, value)
-        if not charset:
-            return _SNIFF_MORE
-        return _SNIFF_STOP if charset_stops() else _SNIFF_DONE
-
     i = 0
     while i < n and not stopped:
         if native is not None and not xml:
             # the native core reads every token it owns and stops at the
             # first one it does not (or after the tag on_charset stopped
             # at); the general machine below reads that one token
-            i, e = native(t, i, nodes, stack, b, empty_end_tag,
-                          None if charset else meta_sniff)
+            i, e, charset, stopped = native(t, i, nodes, stack, b,
+                                            empty_end_tag, charset, on_charset)
             errors += e
             if i >= n or stopped:
                 break
@@ -562,10 +554,9 @@ def parse(source: str, *, empty_end_tag: bool = True, eol="\n", tab_size: int = 
         if tag_lc == "math" or tag_lc == "svg":
             b.in_math_or_svg += 1
 
-        # every start tag resets the meta-charset two-step, attr-less too
-        checking_charset = (not charset) and tag_lc == "meta"
-        content_type = False
-        pending_charset = None
+        # a meta tag while no charset is known: its valued attributes go
+        # to the sniff at the end of the tag (a two-step per tag)
+        sniffed = ([], []) if not charset and tag_lc == "meta" else None
         tag_end_kind = None  # '>', '/>', 'eof', 'bad'
 
         attr_re = _RE_ATTR_STRICT if xml else _RE_ATTR_LOOSE
@@ -666,8 +657,9 @@ def parse(source: str, *, empty_end_tag: bool = True, eol="\n", tab_size: int = 
                         add_attribute(name, value, w, pre_eq + "=" + w3, "_" + c3)
                         # stepTwo still runs for the unterminated value
                         # (html-parser.ts:419,721-758)
-                        if checking_charset:
-                            check_charset(name, value)
+                        if sniffed:
+                            sniffed[0].append(name)
+                            sniffed[1].append(value)
                         i = n
                         errors += 1
                         nd[N_BAD_TERM] = ""
@@ -685,8 +677,9 @@ def parse(source: str, *, empty_end_tag: bool = True, eol="\n", tab_size: int = 
                         i -= 1
                     quote = ""
                 add_attribute(name, value, w, pre_eq + "=" + w3, quote)
-                if checking_charset:
-                    check_charset(name, value)
+                if sniffed:
+                    sniffed[0].append(name)
+                    sniffed[1].append(value)
                 continue
             # not an attribute-name char: only '=' (HTML) or strict-mode
             # specials reach here -> bad terminator, back to text
@@ -699,8 +692,10 @@ def parse(source: str, *, empty_end_tag: bool = True, eol="\n", tab_size: int = 
 
         # the tag is read: a meta tag that left a charset calls the hook,
         # and a stop takes effect once the tag is closed or pushed
-        if checking_charset and charset:
-            charset_stops()
+        if sniffed:
+            charset = _meta_charset(*sniffed, charset)
+            if charset:
+                charset_stops()
         if tag_end_kind == "eof":
             i = n
             break

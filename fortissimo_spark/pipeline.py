@@ -89,10 +89,9 @@ def salted_repartition(pages: DataFrame, num_partitions: int,
 def extract_df(pages: DataFrame, strip: str = "density", *,
                verify_roundtrip: bool = False) -> DataFrame:
     """pages -> EXTRACT_SCHEMA rows (the core operator, Arrow-batched)."""
-    cols = [f.name for f in EXTRACT_SCHEMA.fields]
     return (pages.select("url", "warc_ts", "html", "lang")
-            .mapInPandas(make_extract_kernel(strip, verify_roundtrip), EXTRACT_SCHEMA)
-            .select(*cols))
+            .mapInPandas(make_extract_kernel(strip, verify_roundtrip),
+                         EXTRACT_SCHEMA))
 
 
 class ExtractionJob:

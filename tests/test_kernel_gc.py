@@ -141,3 +141,12 @@ def test_kernel_restores_gc_state_on_error(caller_enabled):
         with pytest.raises(TypeError):
             list(make_extract_kernel("density")(iter([batch])))
         assert gc.isenabled() is caller_enabled
+
+
+def test_in_process_kernel_keeps_the_freeze_count():
+    # no Spark task context: a driver, a test or an in-process benchmark
+    # calling a kernel keeps its GC as it was (batches._freeze_worker_heap)
+    frozen = gc.get_freeze_count()
+    (out,) = make_extract_kernel()(iter([_batch(ADVERSARIAL)]))
+    assert len(out) == len(ADVERSARIAL)
+    assert gc.get_freeze_count() == frozen

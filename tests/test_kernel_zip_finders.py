@@ -1,8 +1,10 @@
 """The row-kernel loop drops every zip finder from
 ``sys.path_importer_cache`` when a task's batches run out, so PySpark's
 per-task ``importlib.invalidate_caches()`` re-reads no archive (see the
-batches module docstring), and imports from those archives still work."""
+batches module docstring), and imports from those archives still work.
+In a Spark task it also freezes the reused worker's heap once."""
 
+import functools
 import json
 import os
 import subprocess
@@ -75,7 +77,7 @@ def test_folded_kernel_drops_zip_finders(tmp_path):
 
 
 _SPARK_PROBE = """
-import json, os, sys, zipimport
+import gc, json, os, sys, zipimport
 import pandas as pd
 from pyspark.sql import SparkSession
 from fortissimo_spark.pipeline import extract_df
@@ -85,13 +87,15 @@ def zip_finders(batches):
             for f in sys.path_importer_cache.values())
     for _ in batches:
         pass
-    yield pd.DataFrame({"pid": [os.getpid()], "finders": [n]})
+    yield pd.DataFrame({"pid": [os.getpid()], "finders": [n],
+                        "frozen": [gc.get_freeze_count()]})
 
 spark = (SparkSession.builder.master("local[1]")
          .config("spark.ui.enabled", "false")
          .config("spark.python.worker.reuse", "true").getOrCreate())
 spark.sparkContext.setLogLevel("ERROR")
-probe = spark.range(1).mapInPandas(zip_finders, "pid long, finders long")
+probe = spark.range(1).mapInPandas(zip_finders,
+                                   "pid long, finders long, frozen long")
 before = probe.collect()[0]
 pages = spark.createDataFrame(
     [("http://example.com/%d" % i, None, b"<p>page %d</p>" % i, "en")
@@ -101,19 +105,34 @@ texts = sorted(r.text for r in extract_df(pages).collect())
 after = probe.collect()[0]
 spark.stop()
 print(json.dumps([before.pid, before.finders, after.pid, after.finders,
-                  texts]))
+                  texts, before.frozen, after.frozen]))
 """
 
 
-def test_next_task_starts_without_zip_finders():
+@functools.lru_cache(maxsize=None)
+def _spark_probe():
+    """One local[1] session (one reused worker): a probe task, an
+    extract_df job, the probe again."""
     out = subprocess.run([sys.executable, "-c", _SPARK_PROBE], cwd=ROOT,
                          capture_output=True, text=True, timeout=600)
     assert out.returncode == 0, out.stderr[-4000:]
-    pid0, before, pid1, after, texts = json.loads(
-        out.stdout.splitlines()[-1])
+    return json.loads(out.stdout.splitlines()[-1])
+
+
+def test_next_task_starts_without_zip_finders():
+    pid0, before, pid1, after, texts, _, _ = _spark_probe()
     if before == 0:
         pytest.skip("no zip archive on the Python worker's path")
     # local[1] with worker reuse: every task ran in one worker process
     assert pid0 == pid1
     assert texts == sorted("page %d" % i for i in range(12))
     assert after == 0
+
+
+def test_reused_worker_freezes_its_heap_after_a_task():
+    # the probe runs off the row-kernel loop, so the worker's first task
+    # freezes nothing; the extract job's first task freezes its heap
+    pid0, _, pid1, _, _, frozen_before, frozen_after = _spark_probe()
+    assert pid0 == pid1
+    assert frozen_before == 0 and frozen_after > 10_000, (frozen_before,
+                                                          frozen_after)

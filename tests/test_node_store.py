@@ -12,6 +12,7 @@ freed with its page, and that the extract kernel builds no record on
 clean pages.
 """
 
+import collections
 import gc
 import random
 import weakref
@@ -173,14 +174,14 @@ def test_partly_read_parse_matches_snapshot(monkeypatch):
         want = [_snapshot(d, True, False) for d in docs]
     core_scan = P._NATIVE_SCAN
 
-    def scan(t, i, nodes, stack, b, empty_end_tag, sniff):
+    def scan(t, i, nodes, *rest):
         # on every call into the core after the first: read every record
         # so far, so that the core goes on writing through the records of
         # the open stack and reading those of closed nodes
         if i:
             read.append(len(nodes))
             list(nodes)
-        return core_scan(t, i, nodes, stack, b, empty_end_tag, sniff)
+        return core_scan(t, i, nodes, *rest)
 
     monkeypatch.setattr(P, "_NATIVE_SCAN", scan)
     got = [_snapshot(d, True, False) for d in docs]
@@ -272,36 +273,83 @@ def test_dropped_pages_free_their_store():
 
 
 def test_extract_kernel_builds_no_record_on_clean_pages(monkeypatch):
-    # pages without tables or tokens the core hands off: the extract
-    # kernel reads every node from C, so reading nodes[i] on its hot path
-    # fails here instead of slowing the kernel unseen
+    # pages without tokens the core hands off, tables included: the
+    # extract kernel settles every one in the core's one call (page()),
+    # which repairs tables in C and reads every node from its struct, so
+    # a record built on its hot path fails here instead of slowing the
+    # kernel unseen
     _require_native()
     rng = random.Random(SEED)
     words = ("alpha", "beta", "caf\xe9", "a&amp;b", "x" * 30, "日本")
     htmls = []
     for doc_id in range(2_000):
         text = " ".join(rng.choice(words) for _ in range(rng.randint(1, 60)))
-        html = page_for_doc(doc_id, text, rng.choice(("en", "de", None)))[
-            "html"]
-        if "<table" not in K.decode_parse(html)[0].text:
-            htmls.append(html)
-    assert len(htmls) > 1_500
-    stores = []
-    extract = K.extract
+        htmls.append(page_for_doc(doc_id, text, rng.choice(("en", "de", None)))[
+            "html"])
+    tables = sum("<table" in K.decode_parse(h)[0].text for h in htmls)
+    assert tables > 100
 
-    def spy(b, strip):
-        stores.append(b.nodes)
-        return extract(b, strip)
+    def python_path(*args):
+        raise AssertionError("a clean page left the one call")
 
-    monkeypatch.setattr(K, "extract", spy)
+    monkeypatch.setattr(K, "_parse_decoded", python_path)
+    monkeypatch.setattr(K, "extract", python_path)
     P._native.reset_stats()
     batch = pd.DataFrame({
         "url": [f"http://example.com/{i}" for i in range(len(htmls))],
         "warc_ts": pd.to_datetime(["2024-01-01"] * len(htmls)),
         "html": htmls, "lang": ["en"] * len(htmls)})
     (out,) = K.make_extract_kernel("density")(iter([batch]))
-    stats = P._native.stats()
-    assert len(out) == len(stores) == len(htmls)
-    assert not any(v for k, v in stats.items() if k.startswith("handoff"))
-    assert sum(len(s) for s in stores) > 100 * len(htmls)
-    assert [s.materialized for s in stores] == [0] * len(htmls)
+    stats = P._native.page_stats()
+    assert len(out) == len(htmls)
+    assert stats["settled"] == len(htmls) and stats["records"] == 0, stats
+    assert not any(v for k, v in P._native.stats().items()
+                   if k.startswith("handoff"))
+
+
+def _unexamined_tables():
+    """Docs whose outer table is still open at EOF (so the scan has not
+    examined it), tables nested in cells, sections and rows left open or
+    closed, and text between rows."""
+    docs = [d[:-len("</table>")] for d in table_soups(3_000, seed=SEED)]
+    docs += [d for d in POP_SHAPES if "table" in d.lower()]
+    docs += ["<table><tr><td>a<table><td>b<th>c</table><td>d",
+             "<table> <td>a</td> x <th>b<tr><td>c</tr><td>d <tbody><td>e",
+             "<table><thead><td>h</thead><tr><th>x<tr><td>y<tfoot><td>f",
+             "<table><tbody><tr><td>a</tbody> <tr><th>b</th><tr><td>c",
+             "<table><caption>c</caption><!--x--><tr><td>a<tbody></tbody>"
+             "<tr><td>b"]
+    return docs
+
+
+@pytest.mark.parametrize("positions", [False, True],
+                         ids=["no-positions", "positions"])
+def test_native_examine_table_matches_python(positions):
+    # the core's examine_table() against DocBuilder._examine_table on
+    # two parses of the same doc, every table examined (twice: a repaired
+    # table is examined again unchanged), with a seeded subset of the
+    # core's side read first so it repairs through records and structs
+    _require_native()
+    rng = random.Random(SEED + 3)
+    wrappers = collections.Counter()
+    for doc in _unexamined_tables():
+        ref = parse(doc, positions=positions).dom
+        got = parse(doc, positions=positions).dom
+        n = len(got.nodes)
+        for i in rng.sample(range(n), rng.randint(0, n)):
+            got.nodes[i]
+        tables = [i for i, nd in enumerate(ref.nodes)
+                  if nd[N_KIND] == ELEMENT and nd[N_TAG_LC] == "table"]
+        for t in tables + tables[::-1]:
+            ref._examine_table(t)
+            P._native.examine_table(got.nodes, t)
+        wrappers.update(nd[N_TAG_LC] for nd in list(ref.nodes)[n:])
+        assert list(got.nodes) == list(ref.nodes), doc
+        assert _reads(got) == _reads(ref), doc
+        if positions:
+            assert ([got.line_col(i) + got.line_col(i, end=True)
+                     for i in range(len(got.nodes))]
+                    == [ref.line_col(i) + ref.line_col(i, end=True)
+                        for i in range(len(ref.nodes))]), doc
+    # every synthetic wrapper the repair makes
+    assert min(wrappers[t] for t in ("tr", "tbody", "thead")) >= 300, wrappers

@@ -11,9 +11,10 @@ share of nodes whose 21-slot record was built (``NodeStore.materialized``:
 the records that the hand-offs read; the core itself builds none).  The
 second runs the extract kernel's row (``kernel._extract_page``) per page
 and prints the share of pages that the core's one call (``_native.page``)
-settles, the count of each fallback reason (``handoff``, ``cr``,
-``charset``, and ``no core`` when the core did not build) and the records
-built on that path.
+settles, the count of each fallback reason (``handoff``, and ``no core``
+when the core did not build), the share of pages that took the charset
+retry's second call (on the re-decoded text) and the records built on
+that path.
 
 Usage: python bench/fastpath_hitrates.py [ndocs] [--workload NAME]...
 
@@ -40,7 +41,7 @@ from fortissimo_spark.extract import extract  # noqa: E402
 # and void)
 OWNED = ("text", "comment", "declaration", "end_top", "end_unwind",
          "end_unmatched", "start", "void", "bad_term")
-FALLBACKS = ("handoff", "cr", "charset")
+FALLBACKS = ("handoff",)
 
 
 def _pages(workload, ndocs):
@@ -83,14 +84,29 @@ def _parse_pass(raws):
 
 
 def _kernel_pass(raws):
+    page, calls = K._NATIVE_PAGE, [0]
+
+    def counting_page(*args):
+        calls[0] += 1
+        return page(*args)
+
+    K._NATIVE_PAGE = counting_page
     P._native.reset_stats()
-    for raw in raws:
-        K._extract_page(raw, "density", False)
-    pages = P._native.page_stats()
+    retried = 0
+    try:
+        for raw in raws:
+            calls[0] = 0
+            K._extract_page(raw, "density", False)
+            retried += calls[0] == 2
+    finally:
+        K._NATIVE_PAGE = page
+    pages = P._native.stats()
     settled = pages["settled"]
     print(f"one call settles {settled} of {len(raws)} pages"
           f" ({100 * settled / max(len(raws), 1):.2f}%); fallbacks: "
           + ", ".join(f"{k} {pages[k]}" for k in FALLBACKS) + ", no core 0")
+    print(f"pages that took the charset retry's second call: {retried} of"
+          f" {len(raws)} ({100 * retried / max(len(raws), 1):.2f}%)")
     print(f"records built by the kernel row: {pages['records']}")
 
 

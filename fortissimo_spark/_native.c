@@ -44,9 +44,10 @@
  * that tag (the early stop of a charset retry).
  *
  * page() is the extract kernel's row for a page in one call: it runs the
- * scan on a store of its own, census(), density(), the line count and the
- * token count, and returns the kernel's parse and extract fields, or None
- * for a page it cannot settle alone (see "the extract page" below).
+ * scan on a store of its own, with the same on_charset hook as a parse,
+ * census(), density(), the line count and the token count, and returns
+ * the kernel's parse and extract fields, or None when the scan stops at a
+ * hand-off or at the hook's stop (see "the extract page" below).
  *
  * The Python general machine is the reference; tests/test_parser_fastpaths.py
  * checks that a parse through this core equals it, field for field,
@@ -84,12 +85,15 @@ enum { ELEMENT = 0, TEXT = 1, COMMENT = 2, DECLARATION = 3, DOCTYPE_NODE = 4,
 enum { UNCLOSED = 0, SELF_CLOSED = 1, VOID_CLOSED = 2, EXPLICITLY_CLOSED = 3,
        IMPLICITLY_CLOSED = 4 };
 
-/* per-branch token counters, read by stats() */
+/* the counters read by stats(): one per token branch, then the pages
+ * page() settled and those it stopped at a hand-off, the meta tags handed
+ * to the Python sniff and the records built on a read */
 enum {
     ST_TEXT, ST_COMMENT, ST_DECL, ST_END_TOP, ST_END_UNWIND,
     ST_END_UNMATCHED, ST_START,
     ST_VOID, ST_BAD_TERM, ST_META, ST_RAW_TEXT, ST_RAW_TEXT_EOF,
     ST_OFF_DECL, ST_OFF_PI, ST_OFF_END, ST_OFF_START_EOF,
+    ST_SETTLED, ST_HANDOFF, ST_PYTHON_SNIFF, ST_RECORDS,
     ST_COUNT
 };
 static const char *const STAT_NAMES[ST_COUNT] = {
@@ -97,19 +101,9 @@ static const char *const STAT_NAMES[ST_COUNT] = {
     "end_unmatched", "start",
     "void", "bad_term", "meta_sniff", "raw_text", "raw_text_eof",
     "handoff_decl", "handoff_pi", "handoff_end", "handoff_start_eof",
+    "settled", "handoff", "python_sniff", "records",
 };
 static unsigned long long counts[ST_COUNT];
-
-/* what page() did with each page, the meta tags handed to the Python
- * sniff and the records built on a read, read by page_stats() */
-enum {
-    PG_SETTLED, PG_HANDOFF, PG_CR, PG_CHARSET, PG_PYTHON_SNIFF, PG_RECORDS,
-    PG_COUNT
-};
-static const char *const PAGE_STAT_NAMES[PG_COUNT] = {
-    "settled", "handoff", "cr", "charset", "python_sniff", "records",
-};
-static unsigned long long page_counts[PG_COUNT];
 
 static PyObject *OPEN_IMPLIES_CLOSE, *VOID_ELEMENTS, *RAW_TEXT_TAGS;
 static PyObject *FORMATTING_ELEMENTS, *MARKER_ELEMENTS;
@@ -684,7 +678,7 @@ static PyObject *materialize(NodeStore *st, Py_ssize_t i)
     Py_CLEAR(x->tag_lc);
     Py_CLEAR(x->end_tag);
     st->materialized++;
-    page_counts[PG_RECORDS]++;
+    counts[ST_RECORDS]++;
     return nd;
 fail:
     Py_DECREF(nd);
@@ -1163,15 +1157,10 @@ typedef struct {
     Py_ssize_t depth, cap;
     PyObject *charset;     /* the meta charset so far: None, "" or a name
                               (owned); the core sniffs while it is empty */
-    PyObject *on_charset;  /* scan(): parse()'s hook, or NULL */
-    PyObject *codecs;      /* page(): declared charset -> codec name */
-    PyObject *codec;       /* page(): the text's codec; NULL when a
-                              declared charset is only reported */
+    PyObject *on_charset;  /* parse()'s hook, or NULL */
     long errors;
     long math_or_svg;      /* DocBuilder.in_math_or_svg */
     int stop;              /* stop after the current tag */
-    int unsettled;         /* page(): the declared charset may need the
-                              Python retry */
 } Scan;
 
 static inline Py_ssize_t top(const Scan *s)
@@ -1590,27 +1579,10 @@ static int sniffing(const Scan *s)
     return s->charset == Py_None || PyUnicode_GET_LENGTH(s->charset) == 0;
 }
 
-/* a meta tag left the charset s->charset (non-empty).  scan(): the scan
- * stops after this tag if parse()'s on_charset hook returns true.  page():
- * with a codec, a charset that codecs does not map to None or to that
- * codec may need the Python retry, so the page is left unsettled and the
- * scan stops here */
+/* a meta tag left the charset s->charset (non-empty): the scan stops
+ * after this tag if parse()'s on_charset hook returns true */
 static int charset_known(Scan *s)
 {
-    if (s->codecs != NULL) {
-        if (s->codec == NULL)
-            return 0;
-        PyObject *c = PyDict_GetItemWithError(s->codecs, s->charset);
-        if (c == NULL && PyErr_Occurred())
-            return -1;
-        int same = c == Py_None;
-        if (c != NULL && !same && PyUnicode_Check(c)
-                && (same = PyUnicode_Compare(c, s->codec) == 0) == 0
-                && PyErr_Occurred())
-            return -1;
-        s->unsettled = s->stop = !same;
-        return 0;
-    }
     if (s->on_charset == NULL)
         return 0;
     PyObject *r = PyObject_CallOneArg(s->on_charset, s->charset);
@@ -1667,7 +1639,7 @@ static int sniff(Scan *s, const Attrs *as)
                             "the meta charset sniff returned a non-str");
             Py_CLEAR(charset);
         }
-        page_counts[PG_PYTHON_SNIFF]++;
+        counts[ST_PYTHON_SNIFF]++;
     } else {
         for (Py_ssize_t j = 0; j < as->len && charset != NULL; j++) {
             const Attr *x = &as->a[j];
@@ -2639,26 +2611,22 @@ static PyObject *token_count(PyObject *self, PyObject *t)
 
 /* --- the extract page ---------------------------------------------------------
  *
- * page(text, codec, codecs, DROP_TAGS, INLINE_TAGS, BOOST_TAGS,
+ * page(text, on_charset, DROP_TAGS, INLINE_TAGS, BOOST_TAGS,
  * min_block_chars, max_link_density, unescape_entities) is the extract
  * kernel's row for one decoded page in one call: parse(text,
- * positions=False) with the retry hook of kernel.decode_parse, then
- * extract(strip="density").  It scans the text into a store of its own,
- * with a struct root, and runs census(), density(), the line count and the
- * token count of the extracted text.  It returns (text, span_starts,
- * span_ends, declared_charset, errors, unclosed, implicitly_closed,
- * node_count, text_node_count, lines, token_count), or None, and counts
- * why in page_stats(), for a page it cannot settle alone:
- * - "cr": the text holds a '\r' (parse() would normalize its line breaks);
- * - "handoff": the scan stopped at a token it hands to the general machine;
- * - "charset": a meta tag declared a charset that codecs (kernel.py's
- *   declared-charset table, which the Python retry hook fills) does not
- *   map to None (no codec) or to ``codec``, the codec the text was decoded
- *   with; the scan stops at that tag.  With codec None (a BOM or
- *   null-byte pattern chose the codec) a declared charset is only
- *   reported, as decode_parse does.
- * The kernel runs the Python path for such a page.  Entity decoding in
- * density() calls unescape_entities, as it does for a parse.
+ * positions=False, on_charset=on_charset), then extract(strip="density").
+ * The text comes line-normalized, as parse() normalizes it.  page() scans
+ * it into a store of its own, with a struct root, and runs census(),
+ * density(), the line count and the token count of the extracted text.
+ * It returns (text, span_starts, span_ends, declared_charset, errors,
+ * unclosed, implicitly_closed, node_count, text_node_count, lines,
+ * token_count), or None when the scan stops early:
+ * - at a token it hands to the general machine ("handoff" in stats());
+ * - after the meta tag at which the on_charset hook answered true, the
+ *   charset retry's stop (a None hook only reports the charset).
+ * The kernel runs the Python path for a hand-off and calls page() once
+ * more on the re-decoded text for a retry.  Entity decoding in density()
+ * calls unescape_entities, as it does for a parse.
  */
 
 #define COUNT_NL(TYPE)                                                  \
@@ -2682,27 +2650,14 @@ static Py_ssize_t newlines(const Src *s)
 
 static PyObject *page(PyObject *self, PyObject *const *args, Py_ssize_t nargs)
 {
-    if (nargs != 9 || !PyUnicode_Check(args[0])
-            || (args[1] != Py_None && !PyUnicode_Check(args[1]))
-            || !PyDict_Check(args[2])) {
+    if (nargs != 8 || !PyUnicode_Check(args[0])) {
         PyErr_SetString(PyExc_TypeError,
-                        "page(str, str | None, dict, DROP_TAGS, INLINE_TAGS,"
+                        "page(str, on_charset, DROP_TAGS, INLINE_TAGS,"
                         " BOOST_TAGS, min_block_chars, max_link_density,"
                         " unescape)");
         return NULL;
     }
     PyObject *t = args[0];
-    if (PyUnicode_READY(t) < 0)
-        return NULL;
-    Py_ssize_t n = PyUnicode_GET_LENGTH(t);
-    Py_ssize_t cr = PyUnicode_FindChar(t, '\r', 0, n, 1);
-    if (cr == -2)
-        return NULL;
-    if (cr >= 0) {
-        page_counts[PG_CR]++;
-        Py_RETURN_NONE;
-    }
-
     Scan s;
     memset(&s, 0, sizeof s);
     PyObject *result = NULL, *ext = NULL;
@@ -2713,21 +2668,21 @@ static PyObject *page(PyObject *self, PyObject *const *args, Py_ssize_t nargs)
     if (new_wrapper(s.st, S_ROOT, -1) < 0 || push_stack(&s, 0) < 0
             || src_init(&s.src, t) < 0)
         goto done;
-    s.codecs = args[2];
-    s.codec = args[1] == Py_None ? NULL : args[1];
+    s.on_charset = args[1] == Py_None ? NULL : args[1];
     s.charset = Py_NewRef(Py_None);
 
     Py_ssize_t i = run(&s, 0, 1);
     if (i < 0)
         goto done;
-    if (s.unsettled || i < n) {
-        page_counts[s.unsettled ? PG_CHARSET : PG_HANDOFF]++;
+    if (s.stop || i < s.src.n) {
+        if (!s.stop)
+            counts[ST_HANDOFF]++;
         result = Py_NewRef(Py_None);
         goto done;
     }
     Py_ssize_t unclosed, implicitly;
     if (census_of(s.st, &unclosed, &implicitly) < 0
-            || (ext = density_of(s.st, args + 3)) == NULL)
+            || (ext = density_of(s.st, args + 2)) == NULL)
         goto done;
     Py_ssize_t lines = newlines(&s.src) + 1;
     /* density()'s (text, starts, ends, kept, total, nodes, text nodes) */
@@ -2738,7 +2693,7 @@ static PyObject *page(PyObject *self, PyObject *const *args, Py_ssize_t nargs)
                            PyTuple_GET_ITEM(ext, 6), lines,
                            tokens_of(text));
     if (result != NULL)
-        page_counts[PG_SETTLED]++;
+        counts[ST_SETTLED]++;
 done:
     Py_XDECREF(ext);
     Py_XDECREF(s.charset);
@@ -2788,27 +2743,9 @@ static PyObject *stats(PyObject *self, PyObject *unused)
     return d;
 }
 
-static PyObject *page_stats(PyObject *self, PyObject *unused)
-{
-    PyObject *d = PyDict_New();
-    if (d == NULL)
-        return NULL;
-    for (int j = 0; j < PG_COUNT; j++) {
-        PyObject *v = PyLong_FromUnsignedLongLong(page_counts[j]);
-        if (v == NULL || PyDict_SetItemString(d, PAGE_STAT_NAMES[j], v) < 0) {
-            Py_XDECREF(v);
-            Py_DECREF(d);
-            return NULL;
-        }
-        Py_DECREF(v);
-    }
-    return d;
-}
-
 static PyObject *reset_stats(PyObject *self, PyObject *unused)
 {
     memset(counts, 0, sizeof counts);
-    memset(page_counts, 0, sizeof page_counts);
     Py_RETURN_NONE;
 }
 
@@ -2833,7 +2770,7 @@ static PyMethodDef methods[] = {
      " on_charset) -> (offset of the first token not owned, errors counted,"
      " charset, stopped)"},
     {"page", (PyCFunction)(void (*)(void))page, METH_FASTCALL,
-     "page(text, codec, codecs, DROP_TAGS, INLINE_TAGS, BOOST_TAGS,"
+     "page(text, on_charset, DROP_TAGS, INLINE_TAGS, BOOST_TAGS,"
      " min_block_chars, max_link_density, unescape_entities) -> (text,"
      " span_starts, span_ends, declared_charset, errors, unclosed,"
      " implicitly_closed, node_count, text_node_count, lines, token_count)"
@@ -2853,11 +2790,10 @@ static PyMethodDef methods[] = {
     {"setup", setup, METH_VARARGS,
      "setup(OPEN_IMPLIES_CLOSE, VOID_ELEMENTS, RAW_TEXT_TAGS,"
      " FORMATTING_ELEMENTS, MARKER_ELEMENTS, meta_charset)"},
-    {"stats", stats, METH_NOARGS, "per-branch token counts since reset"},
-    {"page_stats", page_stats, METH_NOARGS,
-     "page() outcomes, meta tags sniffed in Python and records built,"
-     " since reset"},
-    {"reset_stats", reset_stats, METH_NOARGS, "zero both sets of counts"},
+    {"stats", stats, METH_NOARGS,
+     "per-branch token counts, page() outcomes, meta tags sniffed in"
+     " Python and records built, since reset"},
+    {"reset_stats", reset_stats, METH_NOARGS, "zero the counts"},
     {NULL, NULL, 0, NULL}
 };
 

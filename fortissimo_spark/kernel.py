@@ -17,20 +17,19 @@ below), and carries the key column and any ``warc_ts``/``lang`` from the
 input page onto each of its output rows.  A kernel is its row function
 plus its schema.
 
-The extract kernel takes one native call per clean page: its row
-(``_extract_page``) decodes the page and hands the text to the core's
-``page()``, which scans it, repairs its tables, counts its elements,
-extracts it by density and counts its lines and tokens in C, building no
-``DocBuilder``, ``ParseResult``, ``ExtractResult`` or record.  The core
-leaves a page to the Python path (``decode_parse`` + ``extract``, which
-``process_document`` always takes) when it meets a token it hands off, a
-carriage return (the parse's line-break normalization) or a declared
-charset that may need the retry below.  The retry hook records each
-declared charset's codec in ``_DECLARED_CODECS``, which ``page()`` reads:
-a declared charset with no codec, or with the codec the text was decoded
-with, needs no retry, and one not yet in the table takes the Python path
-once.  ``tests/test_extract_page.py`` holds the one call to
-``process_document`` field for field.
+The extract kernel takes one native call per page: its row
+(``_extract_page``) decodes the page, normalizes its line breaks as the
+parse does and hands the text to the core's ``page()``, which scans it,
+repairs its tables, counts its elements, extracts it by density and
+counts its lines and tokens in C, building no ``DocBuilder``,
+``ParseResult``, ``ExtractResult`` or record.  ``page()`` takes the same
+charset retry hook as ``parse()`` (``_charset_retry``): when the hook
+stops the scan, the row calls ``page()`` once more on the re-decoded text,
+as ``decode_parse`` parses it again.  The only page left to the Python
+path (``decode_parse`` + ``extract``, which ``process_document`` always
+takes) is one with a token the core hands off.
+``tests/test_extract_page.py`` holds the one call to ``process_document``
+field for field.
 
 Encoding policy (mirrors the reference CLI's retry loop, cli.ts:32-56, done
 in-kernel in a single pass):
@@ -75,7 +74,7 @@ from .extract import (
     _MAX_LINK_DENSITY, _MIN_BLOCK_CHARS, BOOST_TAGS, DROP_TAGS, INLINE_TAGS,
     extract,
 )
-from .parser import _native, parse
+from .parser import _native, _normalize_eols, parse
 from .schema import EXTRACT_SCHEMA, NODES_SCHEMA
 
 __all__ = ["decode_page_bytes", "process_document", "make_extract_kernel",
@@ -104,8 +103,16 @@ def _codec_name(name: str) -> str | None:
         return None
 
 
+# the bytes a BOM or null-byte pattern can start with
+_PATTERN_FIRST_BYTES = frozenset(b"\x00\xef\xfe\xff")
+
+
 def detect_bom_encoding(raw: bytes) -> str | None:
     """Byte-level equivalent of checkEncoding (html-parser.ts:306-324)."""
+    # every pattern below starts with one of _PATTERN_FIRST_BYTES or has
+    # a 0x00 second byte
+    if len(raw) > 1 and raw[0] not in _PATTERN_FIRST_BYTES and raw[1]:
+        return None
     if raw[:3] == b"\xef\xbb\xbf":
         return "utf-8-sig"
     if raw[:4] == b"\x00\x00\xfe\xff":
@@ -153,32 +160,29 @@ def decode_page_bytes(raw: bytes) -> tuple[str, str, bool]:
         return raw.decode("utf-8", errors="replace"), "utf-8", False
 
 
-# declared meta charset -> its codec name (None: no codec), as the retry
-# hook resolved it; the native page() reads it to settle a declared
-# charset without calling Python.  Bounded: a charset missing from it
-# sends its page down the Python path, which is correct, only slower.
-_DECLARED_CODECS: dict = {}
-_MAX_DECLARED = 1024
+def _charset_retry(raw: bytes, text: str, used: str):
+    """The charset retry of ``raw``, decoded as ``text`` with ``used``:
+    returns ``(on_charset, retry)``, the hook that ``parse()`` and
+    ``page()`` take, and a list it fills with ``[declared, retext]`` when
+    the declared charset is a codec other than ``used`` that decodes
+    ``raw`` to another text (the hook then answers true and the scan
+    stops after the declaring tag)."""
+    retry = []
 
+    def on_charset(declared: str) -> bool:
+        codec = _codec_name(declared)
+        if not codec or codec == _codec_name(used):
+            return False
+        try:
+            retext = raw.decode(codec, errors="replace")
+        except LookupError:  # a codec that is not a text encoding (base64)
+            return False
+        if retext == text:
+            return False
+        retry[:] = declared, retext
+        return True
 
-def _declared_codec(declared: str) -> str | None:
-    codec = _codec_name(declared)
-    if len(_DECLARED_CODECS) < _MAX_DECLARED:
-        _DECLARED_CODECS[declared] = codec
-    return codec
-
-
-def _redecoded(raw: bytes, declared: str, used: str, text: str) -> str | None:
-    """``raw`` decoded with the ``declared`` charset if that is a codec
-    other than ``used`` and gives a text other than ``text``; else None."""
-    declared_codec = _declared_codec(declared)
-    if not declared_codec or declared_codec == _codec_name(used):
-        return None
-    try:
-        retext = raw.decode(declared_codec, errors="replace")
-    except LookupError:  # pragma: no cover
-        return None
-    return retext if retext != text else None
+    return on_charset, retry
 
 
 def decode_parse(raw: bytes):
@@ -188,26 +192,15 @@ def decode_parse(raw: bytes):
     The first parse stops at the meta tag that declares a charset needing
     a retry (``on_charset``, see the module docstring), so a retried page
     is parsed once and a bit, not twice."""
-    return _parse_decoded(raw, *decode_page_bytes(raw))
-
-
-def _parse_decoded(raw: bytes, text_src: str, used: str,
-                   pattern_detected: bool):
-    """``decode_parse`` of ``raw`` after ``decode_page_bytes``."""
-    retext = None
-
-    def on_charset(declared: str) -> bool:
-        nonlocal retext
-        retext = _redecoded(raw, declared, used, text_src)
-        return retext is not None
-
+    text, used, pattern_detected = decode_page_bytes(raw)
+    on_charset, retry = _charset_retry(raw, text, used)
     # a byte-pattern detection is authoritative over a (stale) meta charset
-    result = parse(text_src, positions=False,
+    result = parse(text, positions=False,
                    on_charset=None if pattern_detected else on_charset)
-    declared = result.charset
     if not result.stopped:
-        return result, used, declared, False
+        return result, used, result.charset, False
     # single in-kernel retry, like the reference CLI (cli.ts:32-56)
+    declared, retext = retry
     return (parse(retext, positions=False), _codec_name(declared), declared,
             True)
 
@@ -279,26 +272,35 @@ def _extract_page(raw: bytes, strip: str, verify_roundtrip: bool) -> tuple:
     With ``strip="density"`` and no round-trip check the decoded page goes
     to the native core's ``page()`` (read from ``_NATIVE_PAGE`` on every
     call), which parses and extracts it in one call and builds no
-    ``DocBuilder``, result object or record.  A page it does not settle (a
-    token the core hands off, a carriage return, a declared charset that
-    may need the retry) and every other mode take ``decode_parse`` and
-    ``extract``, as ``process_document`` does."""
-    text, used, pattern_detected = decode_page_bytes(raw)
+    ``DocBuilder``, result object or record; a page whose charset hook
+    stopped the scan takes a second call on the re-decoded text.  A page
+    with a token the core hands off and every other mode take
+    ``decode_parse`` and ``extract``, as ``process_document`` does."""
     native = (_NATIVE_PAGE if strip == "density" and not verify_roundtrip
               else None)
-    got = None if native is None else native(
-        text, None if pattern_detected else _codec_name(used),
-        _DECLARED_CODECS, DROP_TAGS, INLINE_TAGS, BOOST_TAGS,
-        _MIN_BLOCK_CHARS, _MAX_LINK_DENSITY, unescape_entities)
-    if got is None:
-        return _document_fields(
-            raw, _parse_decoded(raw, text, used, pattern_detected), strip,
-            verify_roundtrip)
-    (out, starts, ends, declared, errors, unclosed, implicitly, nodes,
-     text_nodes, lines, tokens) = got
-    return (out, starts, ends, used, declared, False, errors, unclosed,
-            implicitly, nodes, text_nodes, len(text), lines, len(out),
-            tokens, len(raw), None)
+    if native is not None:
+        text, used, pattern_detected = decode_page_bytes(raw)
+        on_charset, retry = _charset_retry(raw, text, used)
+        got = native(_normalize_eols(text),
+                     None if pattern_detected else on_charset, DROP_TAGS,
+                     INLINE_TAGS, BOOST_TAGS, _MIN_BLOCK_CHARS,
+                     _MAX_LINK_DENSITY, unescape_entities)
+        retried = bool(retry)
+        if retried:
+            # decode_parse's second parse
+            declared, text = retry
+            used = _codec_name(declared)
+            got = native(_normalize_eols(text), None, DROP_TAGS, INLINE_TAGS,
+                         BOOST_TAGS, _MIN_BLOCK_CHARS, _MAX_LINK_DENSITY,
+                         unescape_entities)
+        if got is not None:
+            (out, starts, ends, charset, errors, unclosed, implicitly, nodes,
+             text_nodes, lines, tokens) = got
+            return (out, starts, ends, used,
+                    declared if retried else charset, retried, errors,
+                    unclosed, implicitly, nodes, text_nodes, len(text), lines,
+                    len(out), tokens, len(raw), None)
+    return _document_fields(raw, decode_parse(raw), strip, verify_roundtrip)
 
 
 def make_extract_kernel(strip: str = "density", verify_roundtrip: bool = False):

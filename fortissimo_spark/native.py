@@ -10,8 +10,9 @@ on its own, ``census``, the element counts of a ``NodeStore`` at the end
 of a parse, ``density``, the walk behind ``extract(strip="density")`` over
 a ``NodeStore``, ``token_count``, the kernel's ``len(text.split())``, and
 ``page``, the extract kernel's row for a decoded page in one call (scan,
-census, density, line and token count on a store of its own; None for a
-page it leaves to the Python path).  Python keeps the reference for each:
+with parse()'s charset hook, census, density, line and token count on a
+store of its own; None when the scan stops at a hand-off or at the hook's
+stop).  Python keeps the reference for each:
 a plain list of records, the general machine,
 ``DocBuilder._examine_table``, ``DocBuilder.count_unclosed_flat``, the
 Python density loop, ``str.split`` and ``decode_parse`` + ``extract``.

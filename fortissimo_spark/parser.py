@@ -198,6 +198,14 @@ def _normalize_eol_option(eol) -> str | None:
     return None
 
 
+def _normalize_eols(source: str, eol_n: str | None = "\n") -> str:
+    """``source`` with every line break (``\\r\\n``, ``\\r`` or ``\\n``) made
+    ``eol_n``, a normalized ``eol`` option; None leaves it as is."""
+    if eol_n and (eol_n != "\n" or "\r" in source):
+        return D._RE_EOL.sub(eol_n, source)
+    return source
+
+
 class ParseResult:
     """Mirror of the reference's ParseResults (html-parser.ts:18-31)."""
 
@@ -245,10 +253,7 @@ def parse(source: str, *, empty_end_tag: bool = True, eol="\n", tab_size: int = 
     pattern_encoding = check_encoding(source[:8])
 
     eol_n = _normalize_eol_option(eol)
-    if eol_n and (eol_n != "\n" or "\r" in source):
-        t = D._RE_EOL.sub(eol_n, source)
-    else:
-        t = source
+    t = _normalize_eols(source, eol_n)
     n = len(t)
 
     b = DocBuilder()

@@ -1,4 +1,5 @@
 """Extraction modes + kernel (no Spark needed)."""
+import itertools
 
 from fortissimo_spark.extract import extract
 from fortissimo_spark.kernel import (
@@ -93,6 +94,67 @@ def test_bom_detection():
     assert detect_bom_encoding(b"h\x00i\x00") == "utf-16-le"
     assert detect_bom_encoding(b"\xff\xfe\x00\x00h\x00\x00\x00") == "utf-32-le"
     assert detect_bom_encoding(b"plain ascii here") is None
+
+
+def _detect_bom_encoding_without_the_first_bytes_test(raw: bytes):
+    """detect_bom_encoding before its early return on the first two
+    bytes."""
+    if raw[:3] == b"\xef\xbb\xbf":
+        return "utf-8-sig"
+    if raw[:4] == b"\x00\x00\xfe\xff":
+        return "utf-32-be"
+    if raw[:4] == b"\xff\xfe\x00\x00":
+        return "utf-32-le"
+    if len(raw) >= 8:
+        if raw[0] == 0 and raw[1] == 0 and raw[2] == 0 and raw[3] != 0 and \
+                raw[4] == 0 and raw[5] == 0 and raw[6] == 0 and raw[7] != 0:
+            return "utf-32-be"
+        if raw[0] != 0 and raw[1] == 0 and raw[2] == 0 and raw[3] == 0 and \
+                raw[4] != 0 and raw[5] == 0 and raw[6] == 0 and raw[7] == 0:
+            return "utf-32-le"
+    if raw[:2] == b"\xfe\xff":
+        return "utf-16-be"
+    if raw[:2] == b"\xff\xfe":
+        return "utf-16-le"
+    if len(raw) >= 4:
+        if raw[0] == 0 and raw[1] != 0 and raw[2] == 0 and raw[3] != 0:
+            return "utf-16-be"
+        if raw[0] != 0 and raw[1] == 0 and raw[2] != 0 and raw[3] == 0:
+            return "utf-16-le"
+    return None
+
+
+def _zero_patterns(n: int, nonzero: bytes):
+    """Every n-byte run of 0x00 and a byte of ``nonzero``."""
+    return (bytes(p) for p in itertools.product(b"\x00" + nonzero, repeat=n))
+
+
+def test_bom_detection_equals_the_full_check():
+    # the function reads at most 8 bytes, so every 2-byte prefix followed
+    # by every zero/non-zero pattern of the other 6 covers each outcome of
+    # the early return; shorter inputs are every 0-2 byte input and, for
+    # 3-8 bytes, prefixes over the bytes the patterns name followed by
+    # every zero/non-zero pattern
+    old, new = _detect_bom_encoding_without_the_first_bytes_test, \
+        detect_bom_encoding
+    prefixes = [bytes((a, b)) for a in range(256) for b in range(256)]
+    tails = list(_zero_patterns(6, b"\xff"))
+    for prefix in prefixes:
+        for tail in tails:
+            raw = prefix + tail
+            assert new(raw) == old(raw), raw
+    short = [b""] + [bytes((a,)) for a in range(256)] + prefixes
+    named = b"\x00\x01\x41\xbb\xbf\xef\xfe\xff"
+    short += [bytes((a, b)) + tail for a in named for b in named
+              for c in named[1:] for n in range(1, 7)
+              for tail in _zero_patterns(n, bytes((c,)))]
+    found = set()
+    for raw in short:
+        got = new(raw)
+        assert got == old(raw), raw
+        found.add(got)
+    assert found == {None, "utf-8-sig", "utf-16-be", "utf-16-le",
+                     "utf-32-be", "utf-32-le"}
 
 
 def test_decode_retry_on_declared_charset():

@@ -1,15 +1,16 @@
 """The extract kernel's one-call row: ``_native.page()`` against the
 Python path.
 
-``kernel._extract_page`` hands a decoded page to the native core's
-``page()``, which parses and extracts it in one call, and takes
-``decode_parse`` + ``extract`` for a page the core does not settle (a
-hand-off, a carriage return, a declared charset that may need the retry).
+``kernel._extract_page`` hands a decoded, line-normalized page to the
+native core's ``page()``, which parses and extracts it in one call with
+the same charset retry hook as ``parse()``.  When the hook stops the
+scan, the row calls ``page()`` once more on the re-decoded text; a page
+with a token the core hands off takes ``decode_parse`` + ``extract``.
 perfbench's text check compares Spark output with in-process
 ``process_document``, which never takes the one call, so this file is the
-guard: every row must equal ``process_document``'s field for field, each
-fallback reason must be the one the page calls for, and every hand-off
-shape must fall back.
+guard: every row must equal ``process_document``'s field for field, a page
+must settle unless it hands off, a retried page must take two calls, and
+every hand-off shape must fall back.
 """
 import random
 
@@ -23,7 +24,7 @@ from tests.test_decode_parse import _pages as charset_pages
 from tests.test_parser_fastpaths import _require_native, generated_docs
 
 SEED = 20_261_020
-REASONS = ("settled", "handoff", "cr", "charset")
+REASONS = ("settled", "handoff")
 
 # one page per token shape the core hands to the general machine: '<?',
 # '<![' (CDATA in svg and a bare one), an xhtml doctype, end tags cut by
@@ -70,16 +71,43 @@ def _raws():
              b"<meta charset=' utf-8\t'><p>x</p>",
              "<meta charset='\u3000koi8-r\u2003'><p>x</p>".encode(),
              b"<meta charset=nonesuch><p>x</p>",
+             # a codec that is not a text encoding is no retry
+             b"<meta charset=base64><p>caf\xc3\xa9</p>",
+             b"<meta charset=rot13><p>caf\xe9</p>",
              b"<meta charset=windows-1252><p>plain ascii</p>"]
     raws += list(charset_pages())
     raws += list(_pages_for_docs(2_000, SEED))
     return raws
 
 
+def _recording_page(monkeypatch):
+    """Wraps the kernel's page() call: returns a list that gets, per
+    call, the list of the charsets its hook was called with (None for a
+    call without a hook)."""
+    page = P._native.page
+    calls = []
+
+    def recording(text, on_charset, *args):
+        if on_charset is None:
+            calls.append(None)
+            return page(text, None, *args)
+        hooked = []
+        calls.append(hooked)
+
+        def hook(charset):
+            hooked.append(charset)
+            return on_charset(charset)
+
+        return page(text, hook, *args)
+
+    monkeypatch.setattr(K, "_NATIVE_PAGE", recording)
+    return calls
+
+
 def _row_and_path(raw):
     P._native.reset_stats()
     row = K._extract_page(raw, "density", False)
-    stats = P._native.page_stats()
+    stats = P._native.stats()
     return row, [k for k in REASONS if stats[k]]
 
 
@@ -90,37 +118,40 @@ def _python_row(raw, verify_roundtrip=False):
 
 def test_one_call_rows_equal_process_document(monkeypatch):
     _require_native()
-    # the declared-charset table starts empty: the Python retry hook fills
-    # it as the fallback pages run
-    monkeypatch.setattr(K, "_DECLARED_CODECS", {})
-    paths = dict.fromkeys(REASONS, 0)
+    calls = _recording_page(monkeypatch)
+    seen = dict.fromkeys(("settled", "handoff", "retried", "cr"), 0)
     bad = []
     for raw in _raws():
+        calls.clear()
         row, path = _row_and_path(raw)
         assert len(path) == 1, (raw, path)
-        paths[path[0]] += 1
+        seen[path[0]] += 1
         if row != _python_row(raw):
             bad.append(raw)
             continue
-        text = K.decode_page_bytes(raw)[0]
-        # the reason is the one the page calls for
-        assert (path == ["cr"]) == ("\r" in text), raw
         P._native.reset_stats()
-        _, _, _, retried = K.decode_parse(raw)
+        _, _, declared, retried = K.decode_parse(raw)
         handed = any(v for k, v in P._native.stats().items()
-                     if k.startswith("handoff"))
+                     if k.startswith("handoff_"))
+        # the one call settles every page the core does not hand off
+        assert (path == ["handoff"]) == handed, (raw, path)
+        # a retried page takes two calls (one if the first hands off before
+        # the declaring tag), the second on the re-decoded text without a
+        # hook; the hook is called at most once per call
+        assert 1 <= len(calls) <= 1 + retried, raw
+        assert calls[0] is None or len(calls[0]) <= 1, raw
+        if len(calls) == 2:
+            assert calls == [[declared], None], raw
         if path == ["settled"]:
-            assert not (handed or retried), raw
-        elif handed and "\r" not in text:
-            assert path in (["handoff"], ["charset"]), (raw, path)
+            assert len(calls) == 1 + retried, raw
+            seen["retried"] += retried
+            seen["cr"] += "\r" in K.decode_page_bytes(raw)[0]
     assert not bad, f"{len(bad)} divergences, first: {bad[:3]!r}"
-    assert paths["settled"] > 15_000 and min(paths.values()) >= 60, paths
-    assert K._DECLARED_CODECS.get("utf-8") == "utf-8"
+    assert seen["settled"] > 15_000 and min(seen.values()) >= 60, seen
 
 
-def test_every_handoff_shape_takes_the_fallback(monkeypatch):
+def test_every_handoff_shape_takes_the_fallback():
     _require_native()
-    monkeypatch.setattr(K, "_DECLARED_CODECS", {"utf-8": "utf-8"})
     P._native.reset_stats()
     for doc in HANDOFF_SHAPES:
         P.parse(doc, positions=False)
@@ -143,7 +174,7 @@ def test_only_density_without_the_roundtrip_check_takes_the_one_call():
                           ("none", False)):
         P._native.reset_stats()
         row = K._extract_page(raw, strip, verify)
-        assert not any(P._native.page_stats()[k] for k in REASONS)
+        assert not any(P._native.stats()[k] for k in REASONS)
         doc = K.process_document(raw, strip, verify_roundtrip=verify)
         assert row == tuple(doc[f] for f in K._DOC_FIELDS)
 
@@ -161,22 +192,45 @@ def test_page_checks_its_arguments():
     _require_native()
     args = (K.DROP_TAGS, K.INLINE_TAGS, K.BOOST_TAGS, K._MIN_BLOCK_CHARS,
             K._MAX_LINK_DENSITY, K.unescape_entities)
-    with pytest.raises(TypeError):
-        P._native.page(b"<p>x", "utf-8", {}, *args)
-    with pytest.raises(TypeError):
-        P._native.page("<p>x", "utf-8", [], *args)
-    with pytest.raises(TypeError):
-        P._native.page("<p>x", "utf-8", {})
-    # an unknown declared charset leaves the page to the retry hook; a
-    # codec that maps to None or to the text's codec settles it
     page = P._native.page
-    assert page("<meta charset=x><p>y", "utf-8", {}, *args) is None
-    assert page("<meta charset=x><p>y", "utf-8", {"x": None}, *args)[3] == "x"
-    assert page("<meta charset=x><p>y", "utf-8", {"x": "utf-8"}, *args)
-    assert page("<meta charset=x><p>y", "utf-8", {"x": "cp1252"}, *args) \
-        is None
-    # a codec the bytes chose (None) only reports the declared charset
-    assert page("<meta charset=x><p>y", None, {}, *args)[3] == "x"
-    # the value is stripped as str.strip() strips, before the lookup
-    assert page("<meta charset=' x\u3000\t'><p>y", "utf-8", {"x": None},
-                *args)[3] == "x"
+    with pytest.raises(TypeError):
+        page(b"<p>x", None, *args)
+    with pytest.raises(TypeError):
+        page("<p>x", None, *args[:-1])
+    with pytest.raises(TypeError):
+        page("<p>x", None, {}, *args)
+    calls = []
+
+    def hook(charset):
+        calls.append(charset)
+        return False
+
+    # the hook is called once, at the end of the tag (one tag can set the
+    # charset and set it again), with the value stripped as str.strip()
+    # strips; later meta tags are not sniffed
+    doc = "<meta charset=x charset=' y\u3000\t'><p>z<meta charset=w>"
+    assert page(doc, hook, *args)[3] == "y"
+    assert calls == ["y"]
+    # set and cleared in one tag: no call, and the sniff goes on
+    calls.clear()
+    doc = "<meta charset=x charset=''><meta charset=' '><p>z<meta charset=w>"
+    assert page(doc, hook, *args)[3] == "w"
+    assert calls == ["w"]
+    # a true answer stops the scan after the tag: page() returns None,
+    # the declaring tag the last of the text too
+    for doc in ("<meta charset=x><p>y", "<p>y</p><meta charset=x>"):
+        assert page(doc, lambda charset: True, *args) is None
+        assert P.parse(doc, on_charset=lambda charset: True).stopped
+    # a None hook only reports the charset
+    assert page("<meta charset=x><p>y", None, *args)[3] == "x"
+    # the hook's error is the call's
+    with pytest.raises(ZeroDivisionError):
+        page("<meta charset=x><p>y", lambda charset: 1 / 0, *args)
+    # what page() settles equals parse() with the same hook, then extract
+    doc = "<meta charset=' y '><p>a &amp; b</p>\n<table><td>c</table>"
+    got = page(doc, hook, *args)
+    r = P.parse(doc, positions=False, on_charset=hook)
+    ext = K.extract(r.dom, "density")
+    assert got == (ext.text, ext.starts, ext.ends, r.charset, r.errors,
+                   r.unclosed_tags, r.implicitly_closed_tags, ext.node_count,
+                   ext.text_node_count, r.lines, len(ext.text.split()))

@@ -292,7 +292,7 @@ def test_extract_kernel_builds_no_record_on_clean_pages(monkeypatch):
     def python_path(*args):
         raise AssertionError("a clean page left the one call")
 
-    monkeypatch.setattr(K, "_parse_decoded", python_path)
+    monkeypatch.setattr(K, "decode_parse", python_path)
     monkeypatch.setattr(K, "extract", python_path)
     P._native.reset_stats()
     batch = pd.DataFrame({
@@ -300,11 +300,10 @@ def test_extract_kernel_builds_no_record_on_clean_pages(monkeypatch):
         "warc_ts": pd.to_datetime(["2024-01-01"] * len(htmls)),
         "html": htmls, "lang": ["en"] * len(htmls)})
     (out,) = K.make_extract_kernel("density")(iter([batch]))
-    stats = P._native.page_stats()
+    stats = P._native.stats()
     assert len(out) == len(htmls)
     assert stats["settled"] == len(htmls) and stats["records"] == 0, stats
-    assert not any(v for k, v in P._native.stats().items()
-                   if k.startswith("handoff"))
+    assert not any(v for k, v in stats.items() if k.startswith("handoff"))
 
 
 def _unexamined_tables():
